@@ -49,15 +49,16 @@ object Bench {
     val qv = (0 until 64).map(i => math.sin(i + 1.0))
     val steps: Seq[(String, () => Long)] = Seq(
       "cluster_portable" -> (() =>
-        Dedup.clusterDedupPortable(docs, "doc_id", "text", 0.5).count()),
+        Dedup.clusterDedup(docs, "doc_id", "text", 0.5, numHashes = 16,
+          bands = 4, portable = true).count()),
       "minhash_xxhash" -> (() =>
         Dedup.minhashDedup(docs, "doc_id", "text", 0.5, numHashes = 32, bands = 8).count()),
       "simhash_portable" -> (() =>
-        Dedup.simhashDedupPortable(docs, "doc_id", "text").count()),
+        Dedup.simhashDedup(docs, "doc_id", "text", portable = true).count()),
       "simhash_xxhash" -> (() =>
         Dedup.simhashDedup(docs, "doc_id", "text").count()),
       "ngram_jaccard" -> (() =>
-        Dedup.ngramJaccardLshPortable(docs, "doc_id", "text", 0.5).count()),
+        Dedup.ngramJaccardLsh(docs, "doc_id", "text", 0.5, portable = true).count()),
       "embedding_lsh" -> (() =>
         Dedup.embeddingNearDupLsh(emb, "vec_id", "embedding", 0.99,
           dim = 64, bandBits = 12, bands = 5).count()),
@@ -199,8 +200,9 @@ object Bench {
         Relational.heavyHitters(toks, "tok", support = 0.01).count()
       }),
       "cluster_keep_best" -> (() =>
-        Dedup.clusterDedupKeepBestPortable(docs, "doc_id", "text",
-          length(col("text")), 0.5).count()),
+        Dedup.clusterDedupFromPairsKeepBest(docs, "doc_id", length(col("text")),
+          Dedup.minhashPairs(docs, "doc_id", "text", 0.5, numHashes = 16,
+            bands = 4, portable = true)).count()),
       "paras_intra" -> (() => {
         import graft.operators.TextAnalysis
         TextAnalysis.dedupParagraphsIntra(docs, "doc_id", "text").count()

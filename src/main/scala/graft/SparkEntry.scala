@@ -57,6 +57,14 @@ object SparkEntry {
   private val MinhashDedupHashes = 32
   private val MinhashDedupBands = 8
 
+  /** the md5 MinHash-LSH near-dup pairs (threshold 0.5, 16 hashes, 4 bands)
+    * behind the q_cluster_keep_best / q_cluster_sizes / q_golden_record /
+    * q_split_leakage components — the candidate chain their oracles share
+    * with q_cluster_dedup's. */
+  private def portablePairs(docs: DataFrame): DataFrame =
+    Dedup.minhashPairs(docs, "doc_id", "text", 0.5, numHashes = 16, bands = 4,
+      portable = true)
+
   /** memoized deterministic IVF index build: the fit sample is the first
     * `fitSampleCap` rows in vec_id order (TakeOrdered, not an unordered
     * limit — bulletproof against parquet split/scheduling order), so the
@@ -1088,8 +1096,9 @@ object SparkEntry {
       // numHashes/bands from the corpus-size profile: legacy (16, 8) at
       // the test SFs (oracle SQL matches), rows-per-band grows past 8k docs
       val (nh, bd) = jaccardLshParams(docCountFor(s, dir))
-      Dedup.ngramJaccardLshPortable(rd(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.5, numHashes = nh, bands = bd, ngram = 3)
+      Dedup.ngramJaccardLsh(rd(s, dir, "documents"), "doc_id", "text",
+          threshold = 0.5, numHashes = nh, bands = bd, ngram = 3,
+          portable = true)
         .orderBy("id_a", "id_b")
     }),
     "q_cosine_topk" -> ((s, dir) => {
@@ -1220,13 +1229,15 @@ object SparkEntry {
       // oracle replicates store sigs + banding + cross-store candidates
       // + est-jaccard threshold + survivor anti-join exactly.
       val docs = rd(s, dir, "documents")
-      Dedup.writeMinhashStorePortable(
-        Dedup.minhashSigsPortable(docs.filter(col("source") === "src0"),
-          "doc_id", "text"),
-        "doc_id", "graft_incr_store", bands = 4, nBuckets = 4)
-      Dedup.minhashDedupAgainstPortable(
+      Dedup.writeMinhashStore(
+        Dedup.minhashSigs(docs.filter(col("source") === "src0"),
+          "doc_id", "text", numHashes = 16, portable = true),
+        "doc_id", "graft_incr_store", bands = 4, numHashes = 16,
+        nBuckets = 4, portable = true)
+      Dedup.minhashDedupAgainst(
           docs.filter(col("source") =!= "src0"), "doc_id", "text",
-          "graft_incr_store", threshold = 0.5)
+          "graft_incr_store", threshold = 0.5, numHashes = 16, bands = 4,
+          updateStore = false, portable = true)
         .select("doc_id").orderBy("doc_id")
     }),
     "q_dedup_incr_exact" -> ((s, dir) => {
@@ -1308,7 +1319,8 @@ object SparkEntry {
     "q_cluster_dedup" -> ((s, dir) => {
       // transitive connected-components dedup (md5-portable candidates) —
       // the DuckDB oracle replicates the components as a recursive CTE
-      Dedup.clusterDedupPortable(rd(s, dir, "documents"), "doc_id", "text", 0.5)
+      Dedup.clusterDedup(rd(s, dir, "documents"), "doc_id", "text", 0.5,
+          numHashes = 16, bands = 4, portable = true)
         .select("doc_id").orderBy("doc_id")
     }),
     "q_cluster_keep_best" -> ((s, dir) => {
@@ -1317,31 +1329,39 @@ object SparkEntry {
       // (n_chars, ties toward the smaller doc_id) instead of its minimum
       // id — the policy production dedup wants (clusters mix a complete
       // original with truncated copies; min-id keeps an arbitrary one)
-      Dedup.clusterDedupKeepBestPortable(rd(s, dir, "documents"), "doc_id",
-          "text", col("n_chars"), 0.5)
+      val docs = rd(s, dir, "documents")
+      Dedup.clusterDedupFromPairsKeepBest(docs, "doc_id", col("n_chars"),
+          portablePairs(docs))
         .select("doc_id").orderBy("doc_id")
     }),
-    "q_cluster_sizes" -> ((s, dir) =>
+    "q_cluster_sizes" -> ((s, dir) => {
       // the rollout diagnostic over the same components: how many clusters
       // of each size (singletons included) — a fat tail here means a
       // too-loose threshold is gluing the corpus together, visible BEFORE
       // a dedup pass drops the difference
-      Dedup.clusterSizeHistogramPortable(rd(s, dir, "documents"),
-        "doc_id", "text", 0.5)),
-    "q_golden_record" -> ((s, dir) =>
+      val docs = rd(s, dir, "documents")
+      Dedup.clusterSizeHistogramFromPairs(docs, "doc_id", portablePairs(docs))
+    }),
+    "q_golden_record" -> ((s, dir) => {
       // entity-resolution survivorship over the same components: one
       // canonical row per cluster, each field independently from the
       // longest member that has it (per-field max-struct aggregate, no
       // per-component sort); singletons pass through as themselves
-      Dedup.goldenRecordPortable(rd(s, dir, "documents"), "doc_id", "text",
-        col("n_chars"), Seq("lang", "source"), 0.5)),
-    "q_split_leakage" -> ((s, dir) =>
+      val docs = rd(s, dir, "documents")
+      Dedup.goldenRecord(docs, "doc_id", portablePairs(docs), col("n_chars"),
+        Seq("lang", "source"))
+    }),
+    "q_split_leakage" -> ((s, dir) => {
       // eval-integrity audit: near-dup pairs (same md5 candidate chain)
       // that CROSS the hash-interval train/val/test assignment — silent
       // eval contamination external decontamination never sees; split pair
       // normalized lexicographically, cost ∝ |pairs|
-      Dedup.splitLeakagePortable(rd(s, dir, "documents"), "doc_id", "text",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), 0.5)),
+      val docs = rd(s, dir, "documents")
+      Dedup.splitLeakageFromPairs(portablePairs(docs),
+        Sampling.assignSplit(docs.select(col("doc_id")), col("doc_id"),
+          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)),
+        "doc_id", "split")
+    }),
     "q_simhash_dedup" -> ((s, dir) => {
       lastSketchDir = Some(dir)
       Dedup.simhashDedup(rd(s, dir, "documents"), "doc_id", "text")
@@ -1349,7 +1369,8 @@ object SparkEntry {
     }),
     "q_simhash_oracle" -> ((s, dir) => {
       // md5-based 60-bit SimHash — full pipeline replicated in the oracle
-      Dedup.simhashDedupPortable(rd(s, dir, "documents"), "doc_id", "text")
+      Dedup.simhashDedup(rd(s, dir, "documents"), "doc_id", "text",
+          portable = true)
         .select("doc_id").orderBy("doc_id")
     }),
     "q_simhash_hamming" -> ((s, dir) => {
@@ -3229,7 +3250,7 @@ object SparkEntry {
   /** incremental-store dedup oracle: sigs/banding over ALL documents (per-doc
     * results are independent of the split), candidates restricted to
     * new-batch × stored (src0) rows — exactly the cross-store join of
-    * [[Dedup.minhashDedupAgainstPortable]]; survivors = new docs below the
+    * [[Dedup.minhashDedupAgainst]] with `portable = true`; survivors = new docs below the
     * est-jaccard threshold against EVERY stored doc. */
   private val DedupIncrementalOracle: String =
     s"""WITH ${minhashSigChainSql("documents")},
@@ -4219,7 +4240,8 @@ object SparkEntry {
   }
 
   /** LSH-blocked n-gram similarity pipeline in DuckDB SQL, generated with
-    * the SAME seed-42 affine parameters as Dedup.ngramJaccardLshPortable:
+    * the SAME seed-42 affine parameters as Dedup.ngramJaccardLsh with
+    * `portable = true`:
     * 3-gram md5 min-hash (16 hashes), 8 bands
     * × 2 rows, bucket-local candidate pairs, then the exact pair score
     * (`scoreExpr` over distinct shingle lists `a.t` / `b.t`, aliased

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** K-class twin of [[HashedQualityExpr]] (r22): fused hashed-BOW sums over
   * a token (string) array for SEVERAL weight vectors at once — per token
-  * ONE md5 bucket (exactly `tokenWeightMicros`'s: first 4 digest bytes,
+  * ONE md5 bucket (exactly [[HashedQualityExpr]]'s: first 4 digest bytes,
   * % 2^31, % nBuckets), then one add per class — returned as
   * `[n_tokens, sum_0, …, sum_{K-1}]`, one codegen'd expression node.
   *

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Fused hashed-BOW quality kernel over a token (string) array: per token
-  * the md5-bucketed model weight (exactly
-  * [[graft.operators.TextAnalysis.tokenWeightMicros]] — first 4 digest
+  * the md5-bucketed model weight (exactly the q_quality_model oracle's
+  * bucket, [[MinHashSigExpr.hash31Md5]] — first 4 digest
   * bytes, % 2^31, % nBuckets, weight lookup), summed per ROW, returned as
   * `[n_tokens, sum_micros]` — one codegen'd expression node.
   *
@@ -92,7 +92,7 @@ object HashedQualityExpr {
     while (i < n) {
       if (!xs.isNullAt(i)) {
         // pmod(conv(substring(md5(t),1,8),16,10), 2^31) % nBuckets —
-        // bit-identical to tokenWeightMicros (hash31Md5 IS that value)
+        // bit-identical to the oracle's SQL bucket (hash31Md5 IS that value)
         val bucket = (MinHashSigExpr.hash31Md5(xs.getUTF8String(i)) % nb).toInt
         sum += w(bucket)
       }

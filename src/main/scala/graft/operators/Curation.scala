@@ -23,27 +23,58 @@ object Curation {
              lang: String = "en", minQuality: Double = 0.6,
              nearDupThreshold: Double = 0.5,
              sampleFraction: Double = 0.5): DataFrame = {
-    // materialize the gate survivors ONCE: the language/quality predicates
-    // are higher-order-function trees (CodegenFallback, interpreted) and the
-    // downstream dedup stages reference their input several times (group +
-    // semi-join sides, signature cache build, final anti-join) — without
-    // this the gates re-run over the corpus per reference (measured 8.7 s
-    // vs 2 s at sf0.1). At 100 TB this is the standard "write the filtered
-    // corpus once" checkpoint between pipeline phases.
-    val gated = Fan.out(df.filter(
+    val exact = exactKeep(gate(df, textCol, lang, minQuality), idCol, textCol)
+    val near = Dedup.minhashDedupPortable(exact, idCol, textCol, nearDupThreshold)
+    Sampling.hashSample(near, col(idCol), sampleFraction)
+  }
+
+  /** the language + quality gates, materialized ONCE: the predicates are
+    * higher-order-function trees (CodegenFallback, interpreted) and the
+    * downstream dedup stages reference their input several times (group +
+    * semi-join sides, signature cache build, final anti-join) — without
+    * this the gates re-run over the corpus per reference (measured 8.7 s
+    * vs 2 s at sf0.1). At 100 TB this is the standard "write the filtered
+    * corpus once" checkpoint between pipeline phases. */
+  private def gate(df: DataFrame, textCol: String, lang: String,
+                   minQuality: Double): DataFrame =
+    Fan.out(df.filter(
       TextAnalysis.langId(col(textCol)) === lang &&
         TextAnalysis.qualityScore(col(textCol)) >= minQuality))
       .localCheckpoint()
-    // the exact-dedup survivors feed the near-dedup stage TWICE (signature
-    // build + final anti-join); checkpoint them once so the fingerprint
-    // groupBy + semi-join doesn't re-run per reference
-    val exact = Dedup.exactDedup(
-        gated.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
+
+  /** fingerprint (exact) dedup, checkpointed: the survivors feed the next
+    * stage TWICE (e.g. signature build + final anti-join), so the
+    * fingerprint groupBy + semi-join must not re-run per reference. */
+  private def exactKeep(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    Dedup.exactDedup(
+        df.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
         col("__fp"), idCol)
       .drop("__fp")
       .localCheckpoint()
-    val near = Dedup.minhashDedupPortable(exact, idCol, textCol, nearDupThreshold)
-    Sampling.hashSample(near, col(idCol), sampleFraction)
+
+  /** the stages [[curateFull]] and [[curateFullExcise]] share: gates →
+    * learned quality filter → decontamination → exact dedup → md5
+    * MinHash-LSH near-dedup. Returns the checkpointed near-dup survivors. */
+  private def nearSurvivors(df: DataFrame, idCol: String, textCol: String,
+                            bench: DataFrame, benchTextCol: String,
+                            modelWeightsMicros: Seq[Long], keepLogit: Double,
+                            lang: String, minQuality: Double,
+                            maxContamination: Double,
+                            nearDupThreshold: Double): DataFrame = {
+    // the learned-quality stage as a ROW-LOCAL codegen'd filter (r22): the
+    // hashedQualityScore + semi-join form shuffled the gated corpus through
+    // an explode + hash aggregate and joined it back — for a per-row
+    // decision. Same kernel, same keep set (NULL for token-less docs drops
+    // under filter exactly as absence dropped under the semi-join).
+    val modeled = gate(df, textCol, lang, minQuality).filter(
+      TextAnalysis.hashedQualityKeep(col(textCol), modelWeightsMicros,
+        keepLogit))
+    val cleaned = Dedup.decontaminate(modeled, idCol, textCol,
+        bench, benchTextCol, maxContamination)
+      .localCheckpoint()
+    Dedup.minhashDedupPortable(exactKeep(cleaned, idCol, textCol), idCol,
+        textCol, nearDupThreshold)
+      .localCheckpoint()
   }
 
   /** the FULL curation pass, composing every round-8 stage the short
@@ -70,29 +101,9 @@ object Curation {
                  nearDupThreshold: Double = 0.5,
                  minRun: Int = 8,
                  sampleFraction: Double = 0.5): DataFrame = {
-    val gated = Fan.out(df.filter(
-      TextAnalysis.langId(col(textCol)) === lang &&
-        TextAnalysis.qualityScore(col(textCol)) >= minQuality))
-      .localCheckpoint()
-    // the learned-quality stage as a ROW-LOCAL codegen'd filter (r22): the
-    // hashedQualityScore + semi-join form shuffled the gated corpus through
-    // an explode + hash aggregate and joined it back — for a per-row
-    // decision. Same kernel, same keep set (NULL for token-less docs drops
-    // under filter exactly as absence dropped under the semi-join).
-    val modeled = gated.filter(
-      TextAnalysis.hashedQualityKeep(col(textCol), modelWeightsMicros,
-        keepLogit))
-    val cleaned = Dedup.decontaminate(modeled, idCol, textCol,
-        bench, benchTextCol, maxContamination)
-      .localCheckpoint()
-    val exact = Dedup.exactDedup(
-        cleaned.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
-        col("__fp"), idCol)
-      .drop("__fp")
-      .localCheckpoint()
-    val near = Dedup.minhashDedupPortable(exact, idCol, textCol,
-        nearDupThreshold)
-      .localCheckpoint()
+    val near = nearSurvivors(df, idCol, textCol, bench, benchTextCol,
+      modelWeightsMicros, keepLogit, lang, minQuality, maxContamination,
+      nearDupThreshold)
     val span = Dedup.spanDedup(near, idCol, textCol, minRun)
     Sampling.hashSample(span, col(idCol), sampleFraction)
   }
@@ -115,29 +126,9 @@ object Curation {
                        nearDupThreshold: Double = 0.5,
                        minRun: Int = 8,
                        sampleFraction: Double = 0.5): DataFrame = {
-    val gated = Fan.out(df.filter(
-      TextAnalysis.langId(col(textCol)) === lang &&
-        TextAnalysis.qualityScore(col(textCol)) >= minQuality))
-      .localCheckpoint()
-    // the learned-quality stage as a ROW-LOCAL codegen'd filter (r22): the
-    // hashedQualityScore + semi-join form shuffled the gated corpus through
-    // an explode + hash aggregate and joined it back — for a per-row
-    // decision. Same kernel, same keep set (NULL for token-less docs drops
-    // under filter exactly as absence dropped under the semi-join).
-    val modeled = gated.filter(
-      TextAnalysis.hashedQualityKeep(col(textCol), modelWeightsMicros,
-        keepLogit))
-    val cleaned = Dedup.decontaminate(modeled, idCol, textCol,
-        bench, benchTextCol, maxContamination)
-      .localCheckpoint()
-    val exact = Dedup.exactDedup(
-        cleaned.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
-        col("__fp"), idCol)
-      .drop("__fp")
-      .localCheckpoint()
-    val near = Dedup.minhashDedupPortable(exact, idCol, textCol,
-        nearDupThreshold)
-      .localCheckpoint()
+    val near = nearSurvivors(df, idCol, textCol, bench, benchTextCol,
+      modelWeightsMicros, keepLogit, lang, minQuality, maxContamination,
+      nearDupThreshold)
     val excised = Dedup.spanExcise(near, idCol, textCol, minRun)
       .filter(length(col(textCol)) > 0)
     Sampling.hashSample(excised, col(idCol), sampleFraction)
@@ -161,15 +152,8 @@ object Curation {
                        media: DataFrame, mediaIdCol: String,
                        lang: String = "en", minQuality: Double = 0.6,
                        maxHamming: Int = 6): DataFrame = {
-    val gated = Fan.out(docs.filter(
-      TextAnalysis.langId(col(textCol)) === lang &&
-        TextAnalysis.qualityScore(col(textCol)) >= minQuality))
-      .localCheckpoint()
-    val textKept = Dedup.exactDedup(
-        gated.withColumn("__fp", TextAnalysis.fingerprint(col(textCol))),
-        col("__fp"), idCol)
-      .drop("__fp")
-      .localCheckpoint()
+    val textKept = exactKeep(gate(docs, textCol, lang, minQuality), idCol,
+      textCol)
     val gatedMedia = media.join(
       textKept.select(col(idCol).as(mediaIdCol)), Seq(mediaIdCol),
       "left_semi")

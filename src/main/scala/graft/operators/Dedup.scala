@@ -25,7 +25,9 @@ import graft.sources.Sources
   *    pairs.
   *
   * All hash functions are Spark-native (`xxhash64`) — deterministic across
-  * runs and executors.
+  * runs and executors. The MinHash/SimHash pipelines take
+  * `portable: Boolean` to run on an md5-derived hash base instead, whose
+  * every primitive DuckDB also has, so an exact SQL oracle replicates them.
   */
 object Dedup {
 
@@ -144,9 +146,15 @@ object Dedup {
     * numHashes. Bit-identical to [[minhashSigsAgg]] (same shingle strings,
     * same affine family, same seed-42 xxhash64; min over a multiset ≡ min
     * over its set) — asserted in OperatorsSpec. Measured at sf0.1:
-    * 0.4 s vs 1.6 s for the explode+aggregate form. */
+    * 0.4 s vs 1.6 s for the explode+aggregate form.
+    *
+    * `portable = true` runs the same kernel on the md5-derived hash base
+    * (first 4 digest bytes ≡ the oracle's `conv(substring(md5(s),1,8),16,10)`),
+    * so the projection stays row-local and codegen'd while remaining
+    * exactly DuckDB-replicable; the default is the xxhash64 production base. */
   def minhashSigs(df: DataFrame, idCol: String, textCol: String,
-                  numHashes: Int = 64, shingleSize: Int = 3): DataFrame = {
+                  numHashes: Int = 64, shingleSize: Int = 3,
+                  portable: Boolean = false): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
     val toks = TextAnalysis.tokens(TextAnalysis.normalized(col(textCol)))
     // fan before the fused kernel: the projection is the pipeline's single
@@ -154,7 +162,8 @@ object Dedup {
     // one task (r21 profile; every consumer is an id-keyed join/aggregate)
     Fan.out(df.select(col(idCol), col(textCol))).select(col(idCol),
       GraftSqlBridge.column(graft.functions.MinHashTokensSigExpr(
-        GraftSqlBridge.expression(toks), shingleSize, numHashes)).as("sig"))
+        GraftSqlBridge.expression(toks), shingleSize, numHashes,
+        md5Portable = portable)).as("sig"))
   }
 
   /** MinHash signatures via explode + ONE wide hash aggregate — the shape for
@@ -185,120 +194,6 @@ object Dedup {
       .as(Seq("band", "band_hash")))
   }
 
-  /** MinHash-LSH candidate pairs with estimated Jaccard (signature agreement
-    * fraction). The self-join is bucket-local: shuffle on (band, band_hash)
-    * only. */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 64, bands: Int = 16,
-                        shingleSize: Int = 3): DataFrame =
-    minhashCandidatesWithSigs(df, idCol, textCol, numHashes, bands, shingleSize)._1
-
-  /** as [[minhashCandidates]] but also returns the cached signature frame so
-    * the caller can `unpersist` it once the pairs are materialized (the cache
-    * is reused 3× inside the candidate plan; leaving it pinned for the session
-    * would leak executor storage in a long-running pipeline). */
-  def minhashCandidatesWithSigs(df: DataFrame, idCol: String, textCol: String,
-                                numHashes: Int = 64, bands: Int = 16,
-                                shingleSize: Int = 3): (DataFrame, DataFrame) = {
-    val sigs = minhashSigs(df, idCol, textCol, numHashes, shingleSize).cache()
-    val pairs = bandSelfJoinPairs(
-      lshBands(sigs, idCol, "sig", bands, numHashes), idCol, "band_hash")
-    val withEst = pairs
-      .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("est_jaccard", round(
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v)
-          .cast(DoubleType) / size(col("sig_a")), 6))
-      .select("id_a", "id_b", "est_jaccard")
-    (withEst, sigs)
-  }
-
-  /** MinHash-LSH dedup: drop every doc that is LSH-similar (est. Jaccard ≥
-    * threshold) to a lower-id doc. (Greedy min-id representative — the
-    * standard single-pass policy; full transitive clustering would need
-    * iterative connected components.) */
-  def minhashDedup(df: DataFrame, idCol: String, textCol: String,
-                   threshold: Double = 0.8, numHashes: Int = 64,
-                   bands: Int = 16): DataFrame =
-    minhashDedupWithHandle(df, idCol, textCol, threshold, numHashes, bands)._1
-
-  /** as [[minhashDedup]] but also returns the materialized dup-id frame.
-    * dupIds is `localCheckpoint`ed, not cached: it materializes eagerly (so
-    * the signature cache can be released immediately) and its blocks are
-    * freed by the ContextCleaner once the frame is unreferenced — no cached
-    * frame stays pinned for the session's lifetime. */
-  def minhashDedupWithHandle(df: DataFrame, idCol: String, textCol: String,
-                             threshold: Double = 0.8, numHashes: Int = 64,
-                             bands: Int = 16): (DataFrame, DataFrame) = {
-    val (cands, sigs) = minhashCandidatesWithSigs(df, idCol, textCol, numHashes, bands)
-    // dup ids are tiny (ids only); materialize them so the signature cache
-    // can be released instead of staying pinned for the session.
-    val dupIds = cands
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_b").as(idCol)).distinct()
-      .localCheckpoint()
-    sigs.unpersist(blocking = false)
-    // no broadcast hint: the dup-id set can be a large fraction of the corpus
-    // at scale — let AQE pick broadcast vs shuffle from the observed size.
-    (df.join(dupIds, Seq(idCol), "left_anti"), dupIds)
-  }
-
-  /** MinHash-LSH dedup with an md5-derived hash base — functionally the same
-    * pipeline as [[minhashDedup]] (shingle → affine min-hash → banding →
-    * bucket-local candidates → estimated-Jaccard threshold → drop higher id),
-    * but every primitive (md5, hex parse, modular arithmetic, banding via
-    * md5-of-concat) exists in DuckDB too, so the WHOLE pipeline is verified
-    * by an exact SQL oracle (the xxhash64 production variant can only get a
-    * rows-only check). Same (a,b) parameters (seed 42) are embedded in the
-    * generated oracle SQL. */
-  /** (idCol, __x) rows with an md5-derived 31-bit shingle hash — every
-    * primitive (md5, hex parse, mod) exists in DuckDB, so pipelines built on
-    * this are exactly replicable by a SQL oracle. */
-  private def shingleHashRowsPortable(df: DataFrame, idCol: String,
-                                      textCol: String, shingleSize: Int): DataFrame = df
-    .select(col(idCol),
-      TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))).as("__toks"))
-    .select(col(idCol),
-      explode(shinglesFromTokens(col("__toks"), shingleSize, distinct = false)).as("__sh"))
-    .select(col(idCol),
-      pmod(conv(substring(md5(to_binary(col("__sh"), lit("utf-8"))), 1, 8), 16, 10)
-        .cast(LongType), lit(1L << 31)).as("__x"))
-
-  /** md5-portable MinHash signatures, fused like [[minhashSigs]]: the same
-    * tokens→signature kernel on the md5-derived hash base (first 4 digest
-    * bytes ≡ the oracle's `conv(substring(md5(s),1,8),16,10)`), so the whole
-    * projection stays row-local and codegen'd while remaining exactly
-    * DuckDB-replicable. */
-  def minhashSigsPortable(df: DataFrame, idCol: String, textCol: String,
-                          numHashes: Int = 16, shingleSize: Int = 3): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val toks = TextAnalysis.tokens(TextAnalysis.normalized(col(textCol)))
-    Fan.out(df.select(col(idCol), col(textCol))).select(col(idCol),
-      GraftSqlBridge.column(graft.functions.MinHashTokensSigExpr(
-        GraftSqlBridge.expression(toks), shingleSize, numHashes,
-        md5Portable = true)).as("sig"))
-  }
-
-  /** md5-portable MinHash signatures via explode + one wide aggregate — the
-    * one-row-per-shingle table shape (see [[minhashSigsAgg]]). */
-  def minhashSigsPortableAgg(df: DataFrame, idCol: String, textCol: String,
-                             numHashes: Int = 16, shingleSize: Int = 3): DataFrame =
-    sigsFromShingleHash(shingleHashRowsPortable(df, idCol, textCol, shingleSize),
-      idCol, numHashes)
-
-  /** bucket-local candidate self-join over banded rows (idCol, band, key):
-    * distinct (id_a, id_b) pairs sharing a band key. Both sides are the same
-    * subplan shuffled on the same keys, so Spark's exchange reuse computes the
-    * banding once even when `banded` is uncached. */
-  private def bandSelfJoinPairs(banded: DataFrame, idCol: String,
-                                keyCol: String): DataFrame =
-    banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col(s"l.$keyCol") === col(s"r.$keyCol") &&
-          col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b")).distinct()
-
   /** md5-portable LSH banding: (idCol, band, band_key) rows with
     * md5-of-concat band keys so DuckDB can reproduce them. */
   private def portableBands(sigs: DataFrame, idCol: String,
@@ -311,41 +206,130 @@ object Dedup {
       .as(Seq("band", "band_key")))
   }
 
-  /** md5-portable LSH banding + bucket-local candidate self-join. */
-  private def portableBandPairs(sigs: DataFrame, idCol: String,
-                                numHashes: Int, bands: Int): DataFrame =
-    bandSelfJoinPairs(portableBands(sigs, idCol, numHashes, bands),
-      idCol, "band_key")
+  /** LSH banding of a (idCol, sig) frame on one hash base — the only code
+    * that knows the two band layouts. Returns the (idCol, band, key) rows
+    * and the key columns a band STORE persists and joins on (bucketed on
+    * the last): [[lshBands]] mixes the band index into the xxhash64 seed,
+    * so `band_hash` alone is the key; the md5 band key is a plain
+    * md5-of-concat a DuckDB oracle rebuilds, so `band` stays beside
+    * `band_key`. */
+  private def bandRows(sigs: DataFrame, idCol: String, numHashes: Int,
+                       bands: Int, portable: Boolean): (DataFrame, Seq[String]) =
+    if (portable) (portableBands(sigs, idCol, numHashes, bands), Seq("band", "band_key"))
+    else (lshBands(sigs, idCol, "sig", bands, numHashes), Seq("band_hash"))
 
-  /** md5-portable LSH candidate pairs (id_a, id_b, est_jaccard) + the cached
-    * signature frame (caller unpersists after materializing). */
-  def minhashCandidatesPortableWithSigs(df: DataFrame, idCol: String,
-                                        textCol: String, numHashes: Int = 16,
-                                        bands: Int = 4, shingleSize: Int = 3): (DataFrame, DataFrame) = {
-    val sigs = minhashSigsPortable(df, idCol, textCol, numHashes, shingleSize).cache()
-    val pairs = portableBandPairs(sigs, idCol, numHashes, bands)
-    val withEst = pairs
+  /** bucket-local candidate self-join over banded rows (idCol, band, key):
+    * distinct (id_a, id_b) pairs sharing a band key. Both sides are the same
+    * subplan shuffled on the same keys, so Spark's exchange reuse computes the
+    * banding once even when `banded` is uncached. */
+  private def bandSelfJoinPairs(banded: DataFrame, idCol: String,
+                                keyCol: String): DataFrame =
+    banded.as("l").join(banded.as("r"),
+        col("l.band") === col("r.band") && col(s"l.$keyCol") === col(s"r.$keyCol") &&
+          col(s"l.$idCol") < col(s"r.$idCol"))
+      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b")).distinct()
+
+  /** MinHash-LSH candidate pairs of a (idCol, sig) frame: [[bandRows]] +
+    * the bucket-local self-join on (band, key). */
+  private def bandPairs(sigs: DataFrame, idCol: String, numHashes: Int,
+                        bands: Int, portable: Boolean): DataFrame = {
+    val (banded, keys) = bandRows(sigs, idCol, numHashes, bands, portable)
+    bandSelfJoinPairs(banded, idCol, keys.last)
+  }
+
+  /** MinHash-LSH candidate pairs with estimated Jaccard (signature agreement
+    * fraction). The self-join is bucket-local: shuffle on the band keys
+    * only. */
+  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
+                        numHashes: Int = 64, bands: Int = 16,
+                        shingleSize: Int = 3): DataFrame =
+    minhashCandidatesWithSigs(df, idCol, textCol, numHashes, bands, shingleSize)._1
+
+  /** as [[minhashCandidates]] but also returns the cached signature frame so
+    * the caller can `unpersist` it once the pairs are materialized (the cache
+    * is reused 3× inside the candidate plan; leaving it pinned for the session
+    * would leak executor storage in a long-running pipeline). `portable`
+    * picks the hash base (see [[minhashSigs]]). */
+  def minhashCandidatesWithSigs(df: DataFrame, idCol: String, textCol: String,
+                                numHashes: Int = 64, bands: Int = 16,
+                                shingleSize: Int = 3,
+                                portable: Boolean = false): (DataFrame, DataFrame) = {
+    val sigs = minhashSigs(df, idCol, textCol, numHashes, shingleSize, portable).cache()
+    val agree = aggregate(zip_with(col("sig_a"), col("sig_b"),
+        (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, v) => acc + v).cast(DoubleType)
+    // each hash base keeps the estimate its oracle replicates: xxhash64
+    // rounds to 6 dp over the signature width, md5 divides by numHashes
+    val est = if (portable) agree / numHashes else round(agree / size(col("sig_a")), 6)
+    val withEst = bandPairs(sigs, idCol, numHashes, bands, portable)
       .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast(DoubleType) / numHashes)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
+      .withColumn("est_jaccard", est)
+      .select("id_a", "id_b", "est_jaccard")
     (withEst, sigs)
   }
 
-  def minhashDedupPortable(df: DataFrame, idCol: String, textCol: String,
-                           threshold: Double = 0.5, numHashes: Int = 16,
-                           bands: Int = 4, shingleSize: Int = 3): DataFrame = {
-    val (cands, sigs) = minhashCandidatesPortableWithSigs(
-      df, idCol, textCol, numHashes, bands, shingleSize)
-    // localCheckpoint, not cache: eager materialization without pinning a
-    // cached frame for the session (see minhashDedupWithHandle)
-    val dupIds = cands.filter(col("est_jaccard") >= threshold)
-      .select(col("id_b").as(idCol)).distinct().localCheckpoint()
+  /** MinHash-LSH dedup: drop every doc that is LSH-similar (est. Jaccard ≥
+    * threshold) to a lower-id doc. (Greedy min-id representative — the
+    * standard single-pass policy; full transitive clustering would need
+    * iterative connected components.) `portable = true` is the md5 hash
+    * base whose WHOLE pipeline (shingle → affine min-hash → banding →
+    * bucket-local candidates → estimated-Jaccard threshold → drop higher
+    * id) a DuckDB SQL oracle replicates exactly. */
+  def minhashDedup(df: DataFrame, idCol: String, textCol: String,
+                   threshold: Double = 0.8, numHashes: Int = 64,
+                   bands: Int = 16, portable: Boolean = false): DataFrame =
+    minhashDedupWithHandle(df, idCol, textCol, threshold, numHashes, bands,
+      portable)._1
+
+  /** as [[minhashDedup]] but also returns the materialized dup-id frame.
+    * dupIds is `localCheckpoint`ed, not cached: it materializes eagerly (so
+    * the signature cache can be released immediately) and its blocks are
+    * freed by the ContextCleaner once the frame is unreferenced — no cached
+    * frame stays pinned for the session's lifetime. */
+  def minhashDedupWithHandle(df: DataFrame, idCol: String, textCol: String,
+                             threshold: Double = 0.8, numHashes: Int = 64,
+                             bands: Int = 16,
+                             portable: Boolean = false): (DataFrame, DataFrame) = {
+    val (cands, sigs) = minhashCandidatesWithSigs(df, idCol, textCol,
+      numHashes, bands, portable = portable)
+    // dup ids are tiny (ids only); materialize them so the signature cache
+    // can be released instead of staying pinned for the session.
+    val dupIds = cands
+      .filter(col("est_jaccard") >= threshold)
+      .select(col("id_b").as(idCol)).distinct()
+      .localCheckpoint()
     sigs.unpersist(blocking = false)
-    df.join(dupIds, Seq(idCol), "left_anti")
+    // no broadcast hint: the dup-id set can be a large fraction of the corpus
+    // at scale — let AQE pick broadcast vs shuffle from the observed size.
+    (df.join(dupIds, Seq(idCol), "left_anti"), dupIds)
+  }
+
+  /** [[minhashDedup]]'s md5 preset — 16 hashes, 4 bands × 4 rows, 3-gram
+    * shingles — the exact pipeline the q_minhash_oracle and curation DuckDB
+    * oracles replicate (same seed-42 (a,b) parameters, embedded in the
+    * generated oracle SQL). */
+  def minhashDedupPortable(df: DataFrame, idCol: String, textCol: String,
+                           threshold: Double = 0.5): DataFrame =
+    minhashDedup(df, idCol, textCol, threshold, numHashes = 16, bands = 4,
+      portable = true)
+
+  /** MinHash-LSH near-dup pairs (id_a, id_b) with est. Jaccard ≥ threshold,
+    * materialized (`localCheckpoint`, so the signature cache is released
+    * before the caller's policy runs) — the candidate chain the
+    * corpus-level compositions share: feed it to [[clusterDedupFromPairs]],
+    * [[clusterDedupFromPairsKeepBest]], [[clusterSizeHistogramFromPairs]],
+    * [[goldenRecord]] or [[splitLeakageFromPairs]]. */
+  def minhashPairs(df: DataFrame, idCol: String, textCol: String,
+                   threshold: Double = 0.8, numHashes: Int = 64,
+                   bands: Int = 16, shingleSize: Int = 3,
+                   portable: Boolean = false): DataFrame = {
+    val (cands, sigs) = minhashCandidatesWithSigs(df, idCol, textCol,
+      numHashes, bands, shingleSize, portable)
+    val pairs = cands.filter(col("est_jaccard") >= threshold)
+      .select("id_a", "id_b").localCheckpoint()
+    sigs.unpersist(blocking = false)
+    pairs
   }
 
   // ---------------------------------------------------------------------
@@ -363,7 +347,7 @@ object Dedup {
   // batch — the small side — is shuffled, and appending survivors is an
   // additive bucket-file write, never a rewrite of history.
 
-  /** shared core of [[minhashDedupAgainst]] / [[minhashDedupAgainstPortable]]:
+  /** core of [[minhashDedupAgainst]] on either hash base:
     * bucket-local candidate join (new banded rows × STORE banded rows on the
     * band key) + signature-agreement verify against the store sigs table.
     * Returns the LAZY dup new-batch id frame — callers that consume it more
@@ -447,27 +431,37 @@ object Dedup {
     }
   }
 
-  /** create/replace the production (xxhash64) signature store from a
-    * signature frame (e.g. [[minhashSigs]] over the initial corpus). The
-    * bands table keeps only `band_hash` — [[lshBands]] already mixes the band
-    * index into the hash (xxhash64 seed = band), so one 8-byte column is both
-    * the join key and the bucket key. */
+  /** create/replace a MinHash signature store from a signature frame (e.g.
+    * [[minhashSigs]] over the initial corpus, on the hash base `portable`
+    * names). The bands table keeps [[bandRows]]' store key columns:
+    * `band_hash` alone on xxhash64, `band` + `band_key` on md5 (a DuckDB
+    * oracle can rebuild those store contents exactly). The build
+    * parameters, hash base included, are persisted for
+    * [[checkStoreParams]]. */
   def writeMinhashStore(sigs: DataFrame, idCol: String, store: String,
                         bands: Int, numHashes: Int = 64,
-                        nBuckets: Int = 8): Unit = {
+                        nBuckets: Int = 8, portable: Boolean = false): Unit = {
     // materialize the signature kernel ONCE — both table writes consume it
-    // (the un-checkpointed form re-ran the minhash kernel per write) — then
-    // overlap the two independent writes (guide §2.6; r22)
+    // (the un-checkpointed form re-ran the minhash kernel per write)
     val s = sigs.localCheckpoint()
-    Sources.writeConcurrently(
-      () => Sources.writeBucketed(s, s"${store}_sigs", idCol, nBuckets),
-      () => Sources.writeBucketed(
-        lshBands(s, idCol, "sig", bands, numHashes)
-          .select(col(idCol), col("band_hash")),
-        s"${store}_bands", "band_hash", nBuckets))
+    writeMinhashTables(s, idCol, store, numHashes, bands, portable, nBuckets,
+      SaveMode.Overwrite)
     s.unpersist(blocking = false)
     setStoreParams(sigs.sparkSession, s"${store}_sigs",
-      Map("numHashes" -> numHashes, "bands" -> bands))
+      Map("numHashes" -> numHashes, "bands" -> bands, "portable" -> portable))
+  }
+
+  /** write (or append) a MinHash store's two tables — signatures bucketed
+    * by id, [[bandRows]] bucketed on the band key — overlapping the two
+    * independent writes (guide §2.6; r22). */
+  private def writeMinhashTables(sigs: DataFrame, idCol: String, store: String,
+                                 numHashes: Int, bands: Int, portable: Boolean,
+                                 nBuckets: Int, mode: SaveMode): Unit = {
+    val (banded, keys) = bandRows(sigs, idCol, numHashes, bands, portable)
+    Sources.writeConcurrently(
+      () => Sources.writeBucketed(sigs, s"${store}_sigs", idCol, nBuckets, mode),
+      () => Sources.writeBucketed(banded.select((idCol +: keys).map(col): _*),
+        s"${store}_bands", keys.last, nBuckets, mode))
   }
 
   /** incremental MinHash-LSH dedup of `newBatch` against the persisted store
@@ -476,89 +470,34 @@ object Dedup {
     * append the survivors' signatures and band rows to the store so the next
     * batch dedups against them too. `newBatch` is assumed internally deduped
     * (compose [[minhashDedup]] first) and its ids disjoint from the store's.
-    * numHashes/bands must match the store's build parameters. */
+    * numHashes/bands/portable must match the store's build parameters; on
+    * the md5 base the WHOLE incremental flow (store sigs + banding +
+    * cross-store candidates + est-jaccard threshold + survivor anti-join)
+    * is verified by an exact SQL oracle. */
   def minhashDedupAgainst(newBatch: DataFrame, idCol: String, textCol: String,
                           store: String, threshold: Double = 0.8,
                           numHashes: Int = 64, bands: Int = 16,
                           updateStore: Boolean = true,
-                          nBuckets: Int = 8): DataFrame = {
+                          nBuckets: Int = 8,
+                          portable: Boolean = false): DataFrame = {
     val spark = newBatch.sparkSession
     checkStoreParams(spark, s"${store}_sigs",
-      Map("numHashes" -> numHashes, "bands" -> bands))
+      Map("numHashes" -> numHashes, "bands" -> bands, "portable" -> portable))
     // localCheckpoint: the new-batch signatures feed the candidate join, the
     // verify join, and the store append — compute the fused kernel once.
-    val newSigs = minhashSigs(newBatch, idCol, textCol, numHashes)
-      .localCheckpoint()
-    val dupIds0 = dedupAgainstCore(idCol, newSigs,
-      lshBands(newSigs, idCol, "sig", bands, numHashes),
+    val newSigs = minhashSigs(newBatch, idCol, textCol, numHashes,
+      portable = portable).localCheckpoint()
+    val (newBanded, keys) = bandRows(newSigs, idCol, numHashes, bands, portable)
+    val dupIds0 = dedupAgainstCore(idCol, newSigs, newBanded,
       spark.table(s"${store}_bands"), spark.table(s"${store}_sigs"),
-      Seq("band_hash"), threshold, numHashes)
+      keys, threshold, numHashes)
     // checkpoint only when consumed twice (anti-join + store append)
     val dupIds = if (updateStore) dupIds0.localCheckpoint() else dupIds0
-    if (updateStore) {
-      // both appends derive from the checkpointed newSigs/dupIds — overlap
-      // them (guide §2.6); per-table append idempotency is order-free
-      val survSigs = newSigs.join(dupIds, Seq(idCol), "left_anti")
-      Sources.writeConcurrently(
-        () => Sources.writeBucketed(survSigs, s"${store}_sigs", idCol,
-          nBuckets, SaveMode.Append),
-        () => Sources.writeBucketed(
-          lshBands(survSigs, idCol, "sig", bands, numHashes)
-            .select(col(idCol), col("band_hash")),
-          s"${store}_bands", "band_hash", nBuckets, SaveMode.Append))
-    }
-    newBatch.join(dupIds, Seq(idCol), "left_anti")
-  }
-
-  /** md5-portable twin of [[writeMinhashStore]]: band keys are the md5 band
-    * keys of [[portableBands]] (band index kept as its own column — the md5
-    * concat does not mix it in), so a DuckDB oracle can rebuild the exact
-    * store contents. */
-  def writeMinhashStorePortable(sigs: DataFrame, idCol: String, store: String,
-                                bands: Int, numHashes: Int = 16,
-                                nBuckets: Int = 8): Unit = {
-    // same one-kernel + overlapped-writes shape as [[writeMinhashStore]]
-    val s = sigs.localCheckpoint()
-    Sources.writeConcurrently(
-      () => Sources.writeBucketed(s, s"${store}_sigs", idCol, nBuckets),
-      () => Sources.writeBucketed(portableBands(s, idCol, numHashes, bands),
-        s"${store}_bands", "band_key", nBuckets))
-    s.unpersist(blocking = false)
-    setStoreParams(sigs.sparkSession, s"${store}_sigs",
-      Map("numHashes" -> numHashes, "bands" -> bands))
-  }
-
-  /** md5-portable twin of [[minhashDedupAgainst]] — same store-backed
-    * pipeline on the DuckDB-replicable hash base, so the WHOLE incremental
-    * flow (store sigs + banding + cross-store candidates + est-jaccard
-    * threshold + survivor anti-join) is verified by an exact SQL oracle. */
-  def minhashDedupAgainstPortable(newBatch: DataFrame, idCol: String,
-                                  textCol: String, store: String,
-                                  threshold: Double = 0.5,
-                                  numHashes: Int = 16, bands: Int = 4,
-                                  shingleSize: Int = 3,
-                                  updateStore: Boolean = false,
-                                  nBuckets: Int = 8): DataFrame = {
-    val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_sigs",
-      Map("numHashes" -> numHashes, "bands" -> bands))
-    val newSigs = minhashSigsPortable(newBatch, idCol, textCol, numHashes,
-      shingleSize).localCheckpoint()
-    val dupIds0 = dedupAgainstCore(idCol, newSigs,
-      portableBands(newSigs, idCol, numHashes, bands),
-      spark.table(s"${store}_bands"), spark.table(s"${store}_sigs"),
-      Seq("band", "band_key"), threshold, numHashes)
-    val dupIds = if (updateStore) dupIds0.localCheckpoint() else dupIds0
-    if (updateStore) {
-      // overlapped like [[minhashDedupAgainst]]'s append branch (§2.6)
-      val survSigs = newSigs.join(dupIds, Seq(idCol), "left_anti")
-      Sources.writeConcurrently(
-        () => Sources.writeBucketed(survSigs, s"${store}_sigs", idCol,
-          nBuckets, SaveMode.Append),
-        () => Sources.writeBucketed(
-          portableBands(survSigs, idCol, numHashes, bands),
-          s"${store}_bands", "band_key", nBuckets, SaveMode.Append))
-    }
+    // both appends derive from the checkpointed newSigs/dupIds; per-table
+    // append idempotency is order-free
+    if (updateStore)
+      writeMinhashTables(newSigs.join(dupIds, Seq(idCol), "left_anti"), idCol,
+        store, numHashes, bands, portable, nBuckets, SaveMode.Append)
     newBatch.join(dupIds, Seq(idCol), "left_anti")
   }
 
@@ -659,8 +598,7 @@ object Dedup {
   def writeSimhashStore(df: DataFrame, idCol: String, textCol: String,
                         store: String, portable: Boolean = false,
                         nBuckets: Int = 8): Unit = {
-    val sigs = if (portable) simhashSigsPortable(df, idCol, textCol)
-               else simhashSigs(df, idCol, textCol)
+    val sigs = simhashSigs(df, idCol, textCol, portable)
     Sources.writeBucketed(sigs.select(col("simhash").as("sig")).distinct(),
       s"${store}_sigs", "sig", nBuckets)
     setStoreParams(df.sparkSession, s"${store}_sigs",
@@ -1047,30 +985,14 @@ object Dedup {
     df.join(drop, Seq(idCol), "left_anti")
   }
 
-  /** MinHash-LSH candidates + transitive connected-components dedup
-    * (xxhash64 production path). */
+  /** [[minhashPairs]] + transitive connected-components dedup. On the md5
+    * base (`portable = true`) the DuckDB oracle replicates the whole
+    * pipeline, with the connected components as a recursive CTE. */
   def clusterDedup(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.8, numHashes: Int = 64,
-                   bands: Int = 16): DataFrame = {
-    val (cands, sigs) = minhashCandidatesWithSigs(df, idCol, textCol, numHashes, bands)
-    val pairs = cands.filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b").localCheckpoint()
-    sigs.unpersist(blocking = false)
-    clusterDedupFromPairs(df, idCol, pairs)
-  }
-
-  /** md5-portable variant of [[clusterDedup]] — the DuckDB oracle replicates
-    * the whole pipeline, with the connected components as a recursive CTE. */
-  def clusterDedupPortable(df: DataFrame, idCol: String, textCol: String,
-                           threshold: Double = 0.5, numHashes: Int = 16,
-                           bands: Int = 4, shingleSize: Int = 3): DataFrame = {
-    val (cands, sigs) = minhashCandidatesPortableWithSigs(
-      df, idCol, textCol, numHashes, bands, shingleSize)
-    val pairs = cands.filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b").localCheckpoint()
-    sigs.unpersist(blocking = false)
-    clusterDedupFromPairs(df, idCol, pairs)
-  }
+                   bands: Int = 16, portable: Boolean = false): DataFrame =
+    clusterDedupFromPairs(df, idCol, minhashPairs(df, idCol, textCol,
+      threshold, numHashes, bands, portable = portable))
 
   /** the (id, component-label) frame for a pair set, under the same hybrid
     * regime as [[clusterDedupFromPairs]]: driver union-find below the pair
@@ -1105,21 +1027,15 @@ object Dedup {
     * threshold is gluing the corpus together, and it must be visible
     * BEFORE a dedup pass drops (corpus − components) docs.
     *
-    * Scale shape: the same candidate chain + label propagation as
-    * [[clusterDedupPortable]], then two hash aggregates (label → size,
+    * Scale shape: label propagation over the pair set (e.g.
+    * [[minhashPairs]]), then two hash aggregates (label → size,
     * size → count) and one anti-join for the singleton count — every
     * aggregate map-side partial, output rows = distinct cluster sizes
     * (tens), never corpus-sized. */
-  def clusterSizeHistogramPortable(df: DataFrame, idCol: String, textCol: String,
-                                   threshold: Double = 0.5, numHashes: Int = 16,
-                                   bands: Int = 4, shingleSize: Int = 3): DataFrame = {
-    val (cands, sigs) = minhashCandidatesPortableWithSigs(
-      df, idCol, textCol, numHashes, bands, shingleSize)
-    val pairs = cands.filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b").localCheckpoint()
-    sigs.unpersist(blocking = false)
+  def clusterSizeHistogramFromPairs(df: DataFrame, idCol: String,
+                                    pairs: DataFrame): DataFrame = {
     val labels = componentLabels(pairs, DriverUnionFindMaxPairs,
-      "clusterSizeHistogramPortable")
+      "clusterSizeHistogramFromPairs")
     val sizes = labels.groupBy(col("label"))
       .agg(count(lit(1)).as("cluster_size"))
     val hist = sizes.groupBy(col("cluster_size"))
@@ -1132,22 +1048,6 @@ object Dedup {
       .select(lit(1L).as("cluster_size"), col("n_clusters"))
       .filter(col("n_clusters") > 0)
     hist.unionAll(singles).orderBy("cluster_size")
-  }
-
-  /** md5-portable MinHash-LSH candidates + keep-best components — the
-    * oracle-replicable twin of [[clusterDedupFromPairsKeepBest]] (same
-    * candidate chain as [[clusterDedupPortable]], different survivor
-    * policy). */
-  def clusterDedupKeepBestPortable(df: DataFrame, idCol: String, textCol: String,
-                                   score: Column, threshold: Double = 0.5,
-                                   numHashes: Int = 16, bands: Int = 4,
-                                   shingleSize: Int = 3): DataFrame = {
-    val (cands, sigs) = minhashCandidatesPortableWithSigs(
-      df, idCol, textCol, numHashes, bands, shingleSize)
-    val pairs = cands.filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b").localCheckpoint()
-    sigs.unpersist(blocking = false)
-    clusterDedupFromPairsKeepBest(df, idCol, score, pairs)
   }
 
   /** Entity-resolution SURVIVORSHIP ("golden record"): collapse each
@@ -1205,22 +1105,6 @@ object Dedup {
       .orderBy("cluster_id")
   }
 
-  /** md5-portable variant of [[goldenRecord]] — same candidate chain as
-    * [[clusterDedupPortable]], so the DuckDB oracle replicates components
-    * with the shared recursive CTE and survivorship with per-field
-    * row_number windows. */
-  def goldenRecordPortable(df: DataFrame, idCol: String, textCol: String,
-                           prefer: Column, fields: Seq[String],
-                           threshold: Double = 0.5, numHashes: Int = 16,
-                           bands: Int = 4, shingleSize: Int = 3): DataFrame = {
-    val (cands, sigs) = minhashCandidatesPortableWithSigs(
-      df, idCol, textCol, numHashes, bands, shingleSize)
-    val pairs = cands.filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b").localCheckpoint()
-    sigs.unpersist(blocking = false)
-    goldenRecord(df, idCol, pairs, prefer, fields)
-  }
-
   /** Cross-SPLIT leakage audit: near-dup pairs whose members landed in
     * DIFFERENT train/val/test splits — the eval-integrity check every
     * pipeline should run AFTER split assignment (hash-interval splits are
@@ -1250,24 +1134,6 @@ object Dedup {
       .orderBy("split_a", "split_b")
   }
 
-  /** md5-portable end-to-end leakage audit: the [[clusterDedupPortable]]
-    * candidate chain (est-jaccard ≥ threshold) crossed with
-    * [[Sampling.assignSplit]] — one call from corpus to report, DuckDB
-    * oracle replicates both legs. */
-  def splitLeakagePortable(df: DataFrame, idCol: String, textCol: String,
-                           splits: Seq[(String, Double)],
-                           threshold: Double = 0.5, numHashes: Int = 16,
-                           bands: Int = 4, shingleSize: Int = 3): DataFrame = {
-    val (cands, sigs) = minhashCandidatesPortableWithSigs(
-      df, idCol, textCol, numHashes, bands, shingleSize)
-    val pairs = cands.filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b").localCheckpoint()
-    sigs.unpersist(blocking = false)
-    val assign = Sampling.assignSplit(
-      df.select(col(idCol)), col(idCol), splits)
-    splitLeakageFromPairs(pairs, assign, idCol, "split")
-  }
-
   /** 64-bit SimHash over tokens: per-bit majority vote of token hashes,
     * computed as one fold over the token array into a 64-long vote vector —
     * single codegen'd projection, no shuffle. */
@@ -1282,13 +1148,6 @@ object Dedup {
     bits.reduce((a, b) => a.bitwiseOR(b))
   }
 
-  /** SimHash signatures as a DataFrame (idCol, simhash), computed ROW-LOCALLY
-    * by the fused tokens→signature kernel
-    * ([[graft.functions.SimHashTokensExpr]]): distinct-token dedup, xxhash64,
-    * and all 64 majority votes in one codegen'd pass — no explode, no
-    * shuffle. Bit-identical to [[simhash64]] and to [[simhashSigsAgg]]
-    * (asserted in OperatorsSpec). Measured at sf0.1: the aggregate form
-    * shipped 64 shuffle rows PER TOKEN through two hash aggregates. */
   /** the fused tokens→signature kernel as a COLUMN — a pure per-row
     * projection usable with `withColumn` (no join against a signature
     * frame; [[simhashDedupAgainst]] relies on this to avoid re-scanning
@@ -1301,9 +1160,20 @@ object Dedup {
       GraftSqlBridge.expression(toks), md5Portable = portable))
   }
 
-  def simhashSigs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  /** SimHash signatures as a DataFrame (idCol, simhash), computed ROW-LOCALLY
+    * by the fused tokens→signature kernel
+    * ([[graft.functions.SimHashTokensExpr]]): distinct-token dedup, xxhash64,
+    * and all 64 majority votes in one codegen'd pass — no explode, no
+    * shuffle. Bit-identical to [[simhash64]] and to [[simhashSigsAgg]]
+    * (asserted in OperatorsSpec). Measured at sf0.1: the aggregate form
+    * shipped 64 shuffle rows PER TOKEN through two hash aggregates.
+    * `portable = true` gives 60-bit signatures on the md5 hash base DuckDB
+    * can replicate (first 15 md5 hex chars = 60 bits keeps the value
+    * positive in a signed BIGINT for both engines). */
+  def simhashSigs(df: DataFrame, idCol: String, textCol: String,
+                  portable: Boolean = false): DataFrame =
     Fan.out(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), simhashCol(col(textCol)).as("simhash"))
+      .select(col(idCol), simhashCol(col(textCol), portable).as("simhash"))
 
   /** SimHash via explode + majority-vote hash aggregates — the shape for
     * inputs that arrive as one-row-per-token tables; for per-doc text input
@@ -1325,31 +1195,16 @@ object Dedup {
 
   /** SimHash near-dup groups at hamming distance 0: bucket by full
     * signature. For hamming distance > 0 (real Manku-style near-dup
-    * matching) use [[simhashHammingPairs]] / [[simhashDedupHamming]]. */
-  def simhashDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    * matching) use [[simhashHammingPairs]] / [[simhashDedupHamming]]. On
+    * the md5 base (`portable = true`) the whole pipeline gets an exact SQL
+    * oracle; the explode+vote aggregate formulation the kernel replaced
+    * survives as that oracle's CTE chain. */
+  def simhashDedup(df: DataFrame, idCol: String, textCol: String,
+                   portable: Boolean = false): DataFrame = {
     // unfanned sigs on purpose: hamming-0 dedup is one projection + a tiny
     // groupBy — the fan-out's per-task constant exceeds the kernel cost
     // here (measured +0.4 s at sf0.1), unlike the banded-hamming paths
-    val sig = df.select(col(idCol), simhashCol(col(textCol)).as("simhash"))
-    exactDedup(sig, col("simhash"), idCol).join(df, Seq(idCol))
-  }
-
-  /** 60-bit md5-portable SimHash signatures (idCol, simhash) — same fused
-    * row-local kernel as [[simhashSigs]] but on the hash base DuckDB can
-    * replicate (first 15 md5 hex chars = 60 bits keeps the value positive in
-    * a signed BIGINT for both engines). */
-  def simhashSigsPortable(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Fan.out(df.select(col(idCol), col(textCol)))
-      .select(col(idCol), simhashCol(col(textCol), portable = true).as("simhash"))
-
-  /** 60-bit SimHash dedup on md5-derived token hashes — as [[simhashDedup]]
-    * (hamming distance 0) on [[simhashSigsPortable]] signatures, so the
-    * whole pipeline gets an exact SQL oracle. The explode+vote aggregate
-    * formulation it replaced survives as the oracle's CTE chain. */
-  def simhashDedupPortable(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // unfanned for the same reason as [[simhashDedup]]
-    val sig = df.select(col(idCol),
-      simhashCol(col(textCol), portable = true).as("simhash"))
+    val sig = df.select(col(idCol), simhashCol(col(textCol), portable).as("simhash"))
     exactDedup(sig, col("simhash"), idCol).join(df, Seq(idCol))
   }
 
@@ -1417,12 +1272,9 @@ object Dedup {
     * base. */
   def simhashHammingPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3,
-                          portable: Boolean = false): DataFrame = {
-    val sigs = if (portable) simhashSigsPortable(df, idCol, textCol)
-               else simhashSigs(df, idCol, textCol)
-    simhashHammingPairsFromSigs(sigs, idCol, "simhash",
-      nBits = if (portable) 60 else 64, maxHamming = maxHamming)
-  }
+                          portable: Boolean = false): DataFrame =
+    simhashHammingPairsFromSigs(simhashSigs(df, idCol, textCol, portable),
+      idCol, "simhash", nBits = if (portable) 60 else 64, maxHamming = maxHamming)
 
   /** IMAGE near-dup dedup over 64-bit perceptual-hash signatures
     * ([[graft.operators.Multimodal.imageDHash]] dHashes) — the one dedup
@@ -2265,27 +2117,17 @@ object Dedup {
     * documents share an attribute. Signatures come from the fused kernel
     * over ONE materialized shingle projection shared with verification
     * (see [[shingleArrays]] for the measured job-count rationale).
-    * xxhash64 signatures (production path — rows-only oracle). */
+    * `portable = true` is the md5 MinHash base, whose WHOLE pipeline
+    * (n-gram min-hash, banding, bucket-local candidates, exact jaccard ≥
+    * threshold) a DuckDB SQL oracle replicates; the default is xxhash64. */
   def ngramJaccardLsh(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.5, numHashes: Int = 16,
-                      bands: Int = 8, ngram: Int = 3): DataFrame = {
+                      bands: Int = 8, ngram: Int = 3,
+                      portable: Boolean = false): DataFrame = {
     val sh = shingleArrays(df, idCol, textCol, ngram)
-    val sigs = sigsFromShingleArrays(sh, idCol, numHashes, portable = false)
-    val cands = bandSelfJoinPairs(
-      lshBands(sigs, idCol, "sig", bands, numHashes), idCol, "band_hash")
-    verifyJaccardOnShingleArrays(sh, idCol, cands, threshold)
-  }
-
-  /** as [[ngramJaccardLsh]] but on the md5-portable MinHash base, so the WHOLE
-    * pipeline (n-gram min-hash, banding, bucket-local candidates, exact
-    * jaccard ≥ threshold) is replicable by a DuckDB SQL oracle. */
-  def ngramJaccardLshPortable(df: DataFrame, idCol: String, textCol: String,
-                              threshold: Double = 0.5, numHashes: Int = 16,
-                              bands: Int = 8, ngram: Int = 3): DataFrame = {
-    val sh = shingleArrays(df, idCol, textCol, ngram)
-    val sigs = sigsFromShingleArrays(sh, idCol, numHashes, portable = true)
-    val cands = portableBandPairs(sigs, idCol, numHashes, bands)
-    verifyJaccardOnShingleArrays(sh, idCol, cands, threshold)
+    val sigs = sigsFromShingleArrays(sh, idCol, numHashes, portable)
+    verifyJaccardOnShingleArrays(sh, idCol,
+      bandPairs(sigs, idCol, numHashes, bands, portable), threshold)
   }
 
   /** exact containment ≥ threshold over supplied candidate pairs — the

@@ -51,8 +51,6 @@ object Similarity {
     aggregate(zip_with(a, b, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
       lit(0.0), (acc, v) => acc + v)
 
-  def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))
-
   /** brute-force top-k by cosine against one literal query vector.
     * Plan: scan → project(cosine) → TakeOrderedAndProject(k). */
   /** Greedy Maximal Marginal Relevance selection (Carbonell & Goldstein
@@ -1040,14 +1038,6 @@ object Similarity {
           .as("centroid_cos"))
       .orderBy(labelCol)
   }
-
-  /** IVF-style bucket stats: how balanced are the ANN buckets (diagnostic —
-    * at scale you want bucket sizes ≪ partition size). */
-  def bucketStats(df: DataFrame, vecCol: String, dim: Int, nBits: Int = 8,
-                  seed: Long = 42L): DataFrame =
-    df.select(lshSignature(col(vecCol), dim, nBits, seed).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("bucket"))
 
   // ──────────────────── product quantization (PQ) ANN ────────────────────
 

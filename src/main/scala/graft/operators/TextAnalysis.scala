@@ -28,21 +28,6 @@ object TextAnalysis {
   def subwordCount(text: Column): Column =
     size(regexp_extract_all(lower(text), lit("[a-z0-9]+|[^a-z0-9\\s]"), lit(0)))
 
-  /** n-character count, alphabetic ratio, punctuation ratio, mean word length
-    * — the standard cheap quality signals. */
-  def qualityFeatures(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val n = length(t).cast(DoubleType)
-    df.withColumn("n_chars_m", length(t))
-      .withColumn("n_tokens", tokenCount(t))
-      .withColumn("alpha_ratio",
-        round((n - length(regexp_replace(t, "[A-Za-z]", ""))) / n, 6))
-      .withColumn("punct_ratio",
-        round((n - length(regexp_replace(t, "[.,;:!?'\"()]", ""))) / n, 6))
-      .withColumn("mean_word_len",
-        round(length(regexp_replace(t, "\\s+", "")).cast(DoubleType) / tokenCount(t), 6))
-  }
-
   /** stopword ratio against a fixed small list (expressible in the oracle). */
   val Stopwords: Seq[String] = Seq(
     "the", "a", "an", "of", "to", "and", "in", "is", "it", "that")
@@ -103,9 +88,6 @@ object TextAnalysis {
     "es" -> Seq("el", "los", "las", "es"),
     "fr" -> Seq("le", "les", "est", "une"),
     "de" -> Seq("der", "die", "das", "ist"))
-
-  def markerHits(text: Column, markers: Seq[String]): Column =
-    tokenHits(text, markers)
 
   def langId(text: Column): Column = {
     // argmax as `greatest` over (score, -index, lang) structs — fully
@@ -895,49 +877,11 @@ object TextAnalysis {
       .withColumn("shard_id", floor(col("start_offset") / budget))
   }
 
-  /** MODEL-BASED quality scoring — the learned-filter pass of every large
-    * curation pipeline (GPT-3's LR quality classifier over CommonCrawl,
-    * fastText in CCNet/RedPajama): a linear model over a HASHED bag of
-    * words (the hashing trick — a fixed `weightsMicros.length`-dimensional
-    * model, no vocabulary join, out-of-vocabulary impossible), mean-pooled
-    * over the document's tokens.
-    *
-    * The trained weights ship as a LITERAL array inside the plan — an
-    * offline model is kilobytes, so it rides the task binary to every
-    * executor; scoring is tokenize → md5-bucket → element_at(weights), one
-    * codegen'd projection plus one partial-agg'd per-document sum (the same
-    * postings-aggregate shape as tfIdfTopTerms — at 100 TB the shuffle
-    * carries (doc, bucket-weight) longs, nothing wider).
-    *
-    * The emitted score is the LOGIT (mean bucket weight): monotone in the
-    * classifier probability, so thresholding it ≡ thresholding sigmoid(·),
-    * WITHOUT a cross-engine exp() rounding hazard. Weights are integer
-    * MICROS: the per-document sum is exact integer arithmetic
-    * (order-independent); the mean is rounded to integer micros at SCALE 0
-    * (scale-6 rounding of a fraction hits the cross-engine decimal-boundary
-    * hazard — observed at sf0.1 — while scale-0 never does, the
-    * labelCentroids rule) and only then divided by 1e6, an exact IEEE
-    * division both engines do identically — `keep` is decided on those
-    * identical bits. */
-  /** integer-micros model weight of ONE token: md5 31-bit bucket mod
-    * nBuckets, 1-based element_at into the weight-literal array. The single
-    * source of truth for the hashed model's per-token math — consumed by
-    * the batch aggregate below AND the streaming per-row HOF form
-    * ([[graft.streaming.Streams.curatedIngest]]), so the two scorers cannot
-    * silently diverge on future edits (StreamsSpec additionally asserts
-    * their outputs equal). */
-  private[graft] def tokenWeightMicros(t: Column, wLit: Column,
-                                       nBuckets: Int): Column = {
-    val bucket = pmod(
-      conv(substring(md5(to_binary(t, lit("utf-8"))), 1, 8), 16, 10)
-        .cast(LongType), lit(1L << 31)) % nBuckets
-    element_at(wLit, (bucket + lit(1)).cast(IntegerType))
-  }
-
   /** micros sum + token count → logit: round the mean to integer micros at
     * scale 0 (cross-engine boundary-safe), then one exact IEEE ÷1e6 —
-    * shared by both scorer forms for the same reason as
-    * [[tokenWeightMicros]]. */
+    * shared by [[hashedQualityScore]], [[hashedQualityKeep]] and
+    * [[hashedClassify]], so the scorers cannot silently diverge on the
+    * rounding. */
   private[graft] def logitFromMicros(sumMicros: Column,
                                      nTokens: Column): Column =
     round(sumMicros.cast(DoubleType) / nTokens).cast(LongType) / lit(1e6)
@@ -954,6 +898,29 @@ object TextAnalysis {
       weightsMicros.toArray))
   }
 
+  /** MODEL-BASED quality scoring — the learned-filter pass of every large
+    * curation pipeline (GPT-3's LR quality classifier over CommonCrawl,
+    * fastText in CCNet/RedPajama): a linear model over a HASHED bag of
+    * words (the hashing trick — a fixed `weightsMicros.length`-dimensional
+    * model, no vocabulary join, out-of-vocabulary impossible), mean-pooled
+    * over the document's tokens.
+    *
+    * The trained weights ship as a LITERAL array inside the plan — an
+    * offline model is kilobytes, so it rides the task binary to every
+    * executor; scoring is tokenize → md5-bucket → weight lookup → per-document
+    * sum, all inside ONE row-local codegen'd kernel
+    * ([[graft.functions.HashedQualityExpr]]) — no explode, no shuffle.
+    *
+    * The emitted score is the LOGIT (mean bucket weight): monotone in the
+    * classifier probability, so thresholding it ≡ thresholding sigmoid(·),
+    * WITHOUT a cross-engine exp() rounding hazard. Weights are integer
+    * MICROS: the per-document sum is exact integer arithmetic
+    * (order-independent); the mean is rounded to integer micros at SCALE 0
+    * (scale-6 rounding of a fraction hits the cross-engine decimal-boundary
+    * hazard — observed at sf0.1 — while scale-0 never does, the
+    * labelCentroids rule) and only then divided by 1e6, an exact IEEE
+    * division both engines do identically — `keep` is decided on those
+    * identical bits. */
   def hashedQualityScore(df: DataFrame, idCol: String, textCol: String,
                          weightsMicros: Seq[Long],
                          keepThreshold: Double = 0.0): DataFrame = {
@@ -990,14 +957,15 @@ object TextAnalysis {
     * label with a deterministic tiebreak (first class in declaration order
     * wins ties — plan literals, so the tie policy is part of the model).
     *
-    * Scale shape: ONE explode + one hash aggregate carrying K sums (the
-    * [[hashedQualityScore]] postings shape widened to K columns — the
-    * shuffle carries (doc, K longs), independent of vocab or corpus), then
-    * a pure argmax projection. K is the number of DOMAINS (tens), never
-    * data-sized.
+    * Scale shape: ONE row-local codegen'd kernel
+    * ([[graft.functions.HashedClassifyExpr]]) — per token one md5 bucket,
+    * then one add per class, giving (n_tokens, K sums) per row with no
+    * explode and no shuffle (the [[hashedQualityScore]] kernel widened to K
+    * classes) — then a pure argmax projection. K is the number of DOMAINS
+    * (tens), never data-sized.
     *
     * Precondition (shared with [[hashedQualityScore]]): a document with
-    * NULL or token-less text contributes no explode rows and is ABSENT
+    * NULL or token-less text gets a NULL kernel result and is ABSENT
     * from the output — there is no mean logit to compute for it. Route
     * such docs explicitly upstream (e.g. the curation length gate) rather
     * than joining this frame and silently losing them. */

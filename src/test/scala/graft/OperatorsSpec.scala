@@ -127,7 +127,7 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, "completely unrelated text about spark engines and parquet files")
     ).toDF("doc_id", "text")
     // ground truth from the signatures themselves
-    val sigs = Dedup.simhashSigsPortable(planted, "doc_id", "text")
+    val sigs = Dedup.simhashSigs(planted, "doc_id", "text", portable = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val d12 = java.lang.Long.bitCount(sigs(1L) ^ sigs(2L))
     assert(sigs(1L) != sigs(2L), "near-copy must NOT be an exact signature match")
@@ -159,7 +159,7 @@ class OperatorsSpec extends AnyFunSuite {
     // (same md5 lo half, same votes), with the hi long all-zero — this is
     // what keeps q_simhash_hamming_scaled on the legacy parameters at the
     // smallest SFs
-    val legacy = Dedup.simhashSigsPortable(docs, "doc_id", "text")
+    val legacy = Dedup.simhashSigs(docs, "doc_id", "text", portable = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val wide = Dedup.simhashSigsWide(docs, "doc_id", "text",
         nBits = 60, portable = true)
@@ -313,8 +313,8 @@ class OperatorsSpec extends AnyFunSuite {
     // reported jaccard is the EXACT shingle-set value, not the LSH estimate
     assert(pairs.find(p => (p._1, p._2) == (1L, 2L)).get._3 == 1.0)
     // md5-portable variant agrees on the sure pair
-    val portable = Dedup.ngramJaccardLshPortable(docs, "doc_id", "text",
-        threshold = 0.5)
+    val portable = Dedup.ngramJaccardLsh(docs, "doc_id", "text",
+        threshold = 0.5, portable = true)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(portable.contains((1L, 2L)))
     assert(!portable.exists(p => p._1 == 4L || p._2 == 4L))
@@ -1949,13 +1949,15 @@ class OperatorsSpec extends AnyFunSuite {
       (2L, "alpha beta gamma delta epsilon zeta"), // exact copy → pair with 1
       (3L, "totally different content with no shared shingles at all")
     ).toDF("doc_id", "text")
-    val hist = Dedup.clusterSizeHistogramPortable(d, "doc_id", "text", 0.5)
+    def md5Pairs(df: org.apache.spark.sql.DataFrame) = Dedup.minhashPairs(df,
+      "doc_id", "text", 0.5, numHashes = 16, bands = 4, portable = true)
+    val hist = Dedup.clusterSizeHistogramFromPairs(d, "doc_id", md5Pairs(d))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(hist == Seq((1L, 1L), (2L, 1L))) // one singleton, one 2-cluster
     // no pairs at all → a single size-1 row covering the whole corpus
     val solo = Seq((1L, "one two three four"), (2L, "five six seven eight"))
       .toDF("doc_id", "text")
-    val h2 = Dedup.clusterSizeHistogramPortable(solo, "doc_id", "text", 0.5)
+    val h2 = Dedup.clusterSizeHistogramFromPairs(solo, "doc_id", md5Pairs(solo))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(h2 == Seq((1L, 2L)))
   }
@@ -1984,19 +1986,29 @@ class OperatorsSpec extends AnyFunSuite {
     // probing with different parameters must throw, not silently
     // under-estimate jaccard and let true duplicates through
     val d = docs.select(col("doc_id"), col("text"))
-    Dedup.writeMinhashStorePortable(
-      Dedup.minhashSigsPortable(d, "doc_id", "text", numHashes = 16),
-      "doc_id", "graft_param_store", bands = 4, numHashes = 16, nBuckets = 2)
+    Dedup.writeMinhashStore(
+      Dedup.minhashSigs(d, "doc_id", "text", numHashes = 16, portable = true),
+      "doc_id", "graft_param_store", bands = 4, numHashes = 16, nBuckets = 2,
+      portable = true)
     val e = intercept[IllegalArgumentException] {
-      Dedup.minhashDedupAgainstPortable(d, "doc_id", "text",
-        "graft_param_store", threshold = 0.5, numHashes = 8, bands = 4)
+      Dedup.minhashDedupAgainst(d, "doc_id", "text", "graft_param_store",
+        threshold = 0.5, numHashes = 8, bands = 4, updateStore = false,
+        portable = true)
     }
     assert(e.getMessage.contains("numHashes"))
     val e2 = intercept[IllegalArgumentException] {
-      Dedup.minhashDedupAgainstPortable(d, "doc_id", "text",
-        "graft_param_store", threshold = 0.5, numHashes = 16, bands = 2)
+      Dedup.minhashDedupAgainst(d, "doc_id", "text", "graft_param_store",
+        threshold = 0.5, numHashes = 16, bands = 2, updateStore = false,
+        portable = true)
     }
     assert(e2.getMessage.contains("bands"))
+    // the hash base is a build parameter too: an xxhash64 probe of an md5
+    // store (whose bands table has no band_hash column) fails by name
+    val e2b = intercept[IllegalArgumentException] {
+      Dedup.minhashDedupAgainst(d, "doc_id", "text", "graft_param_store",
+        threshold = 0.5, numHashes = 16, bands = 4, updateStore = false)
+    }
+    assert(e2b.getMessage.contains("portable"))
     // the whole store family shares the hazard: simhash's hash base flag
     // (60-bit md5 sigs never equal 64-bit xxhash64 sigs — every probe would
     // silently "survive") …

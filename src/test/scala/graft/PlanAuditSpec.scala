@@ -363,6 +363,8 @@ class PlanAuditSpec extends AnyFunSuite {
         "span"    -> finalPlan(Dedup.spanOverlapPairs(docs, "doc_id", "text", minRun = 8)),
         "minhash" -> finalPlan(Dedup.minhashDedup(docs, "doc_id", "text", 0.5,
           numHashes = 32, bands = 8)),
+        "minhash_md5" -> finalPlan(Dedup.minhashDedup(docs, "doc_id", "text", 0.5,
+          numHashes = 16, bands = 4, portable = true)),
         "contain" -> finalPlan(Dedup.ngramContainmentPrefix(docs, "doc_id", "text", 0.7)),
         "simhash_wide" -> finalPlan(Dedup.simhashHammingPairsWide(
           docs, "doc_id", "text", nBits = 84, maxHamming = 3, portable = true)))

@@ -218,8 +218,9 @@ class Round4OpsSpec extends AnyFunSuite {
     // the q_containment-r7 banding config provably yields ZERO candidates
     // for the planted pair: the md5-portable signatures (seed-42 affine
     // params, deterministic) collide in no band
-    val (bandCands, sigs) = Dedup.minhashCandidatesPortableWithSigs(
-      docs, "doc_id", "text", numHashes = 16, bands = 8, shingleSize = 3)
+    val (bandCands, sigs) = Dedup.minhashCandidatesWithSigs(
+      docs, "doc_id", "text", numHashes = 16, bands = 8, shingleSize = 3,
+      portable = true)
     val banded = bandCands.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     sigs.unpersist(blocking = false)
@@ -582,8 +583,8 @@ class Round4OpsSpec extends AnyFunSuite {
     assert(pairs((1L, 2L)) == ((12L, 6L)), s"got ${pairs((1L, 2L))}")
     // the same pair's set-level jaccard is diluted far below any useful
     // near-dup threshold — the regime this operator exists for
-    val jac = Dedup.ngramJaccardLshPortable(docs, "doc_id", "text",
-      threshold = 0.5).count()
+    val jac = Dedup.ngramJaccardLsh(docs, "doc_id", "text",
+      threshold = 0.5, portable = true).count()
     assert(jac == 0, "jaccard near-dup should miss the span-sharing pair")
   }
 
@@ -727,7 +728,7 @@ class Round4OpsSpec extends AnyFunSuite {
       s"minhash survivor sets diverge by $mhDelta of $n docs " +
         s"(xxhash64 ${mh.size}, portable ${mhP.size})")
     val sh = ids(Dedup.simhashDedup(docs, "doc_id", "text"))
-    val shP = ids(Dedup.simhashDedupPortable(docs, "doc_id", "text"))
+    val shP = ids(Dedup.simhashDedup(docs, "doc_id", "text", portable = true))
     val shDelta = ((sh diff shP) ++ (shP diff sh)).size
     assert(shDelta <= 0.05 * n,
       s"simhash survivor sets diverge by $shDelta of $n docs " +
