@@ -333,20 +333,21 @@ object Bench {
     // a failed query must be LOUD, not a silent timing: its wall time stays
     // out of the total and out of "queries"; it lands in "errors" instead
     val ok = results.filter(_._3.isEmpty)
-    val qs = ok.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
+    // one quoting rule for every JSON string, keys included: characters
+    // that would need escaping become spaces
+    def str(x: String): String = "\"" + x.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
+    val qs = ok.map { case (k, v, _) => str(k) + ":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val errsJson =
       if (results.forall(_._3.isEmpty)) ""
-      else results.collect { case (k, _, Some(m)) =>
-        "\"" + k + "\":\"" + m.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
-      }.mkString(""","errors":{""", ",", "}")
+      else results.collect { case (k, _, Some(m)) => str(k) + ":" + str(m) }
+        .mkString(""","errors":{""", ",", "}")
     val total = ok.map(_._2).sum
     // any non-contract config rides in the JSON so the draw self-labels
     val extraJson =
       if (extraConf.isEmpty) ""
-      else extraConf.map { case (k, v) =>
-        "\"" + k + "\":\"" + v.replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""
-      }.mkString(""","extra_conf":{""", ",", "}")
+      else extraConf.map { case (k, v) => str(k) + ":" + str(v) }
+        .mkString(""","extra_conf":{""", ",", "}")
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$errsJson$extraJson,"sf":"$sfDir"}"""
     println(line)
     // ALWAYS also write the line to a dedicated file: the round-16 driver

@@ -164,12 +164,11 @@ object MinHashSigExpr {
   * collapsing the tokenize projection into it is safe, and the whole
   * doc→signature pipeline stays inside whole-stage codegen: 0.4 s.
   *
-  * Shingle semantics mirror [[graft.operators.Dedup.shinglesFromTokens]]
-  * exactly: windows start at 0..max(len−n, 0) (so a doc shorter than n
-  * yields ONE shorter shingle, and an empty token array yields the empty
-  * string — never a null signature here), tokens join with a single space,
-  * null tokens are skipped like concat_ws does. Bit-identical signatures to
-  * the explode+aggregate form (asserted in OperatorsSpec).
+  * Shingle semantics are [[TokenShingles]]' — exactly
+  * [[graft.operators.Dedup.shinglesFromTokens]]' (an empty token array
+  * yields the empty-string shingle, never a null signature here; a NULL
+  * array stays NULL). Bit-identical signatures to the explode+aggregate
+  * form (asserted in OperatorsSpec).
   */
 case class MinHashTokensSigExpr(child: Expression, ngram: Int, numHashes: Int,
                                 md5Portable: Boolean = false)
@@ -212,32 +211,14 @@ case class MinHashTokensSigExpr(child: Expression, ngram: Int, numHashes: Int,
 }
 
 object MinHashTokensSigExpr {
-  private val Space = UTF8String.fromString(" ")
-
-  /** shared by interpreted eval and generated code: one pass, one
-    * UTF8String allocation per shingle (the same strings concat_ws built),
-    * minima updated in place. */
+  /** shared by interpreted eval and generated code: one pass over
+    * [[TokenShingles]], minima updated in place. */
   def compute(toks: ArrayData, ngram: Int,
               a: Array[Long], b: Array[Long],
               md5Portable: Boolean): GenericArrayData = {
-    val len = toks.numElements()
     val numHashes = a.length
     val mins = Array.fill(numHashes)(Long.MaxValue)
-    val nShingles = math.max(len - ngram, 0) + 1
-    val parts = new Array[UTF8String](ngram)
-    var s = 0
-    while (s < nShingles) {
-      val end = math.min(s + ngram, len)
-      var m = 0
-      var j = s
-      while (j < end) {
-        // concat_ws semantics: null elements are skipped
-        if (!toks.isNullAt(j)) { parts(m) = toks.getUTF8String(j); m += 1 }
-        j += 1
-      }
-      val shingle =
-        if (m == ngram) UTF8String.concatWs(Space, parts: _*)
-        else UTF8String.concatWs(Space, java.util.Arrays.copyOf(parts, m): _*)
+    TokenShingles.foreach(toks, ngram) { shingle =>
       val x = if (md5Portable) MinHashSigExpr.hash31Md5(shingle)
         else MinHashSigExpr.hash31(shingle)
       var i = 0
@@ -246,8 +227,40 @@ object MinHashTokensSigExpr {
         if (v < mins(i)) mins(i) = v
         i += 1
       }
-      s += 1
     }
     new GenericArrayData(mins)
+  }
+}
+
+/** The word n-gram shingle loop of the token-array kernels
+  * ([[MinHashTokensSigExpr]], [[ShingleSetHitsExpr]]), with the exact
+  * semantics of [[graft.operators.Dedup.shinglesFromTokens]]
+  * (`distinct = false`): windows start at 0..max(len−n, 0), so a doc shorter
+  * than n yields ONE shorter shingle and an empty token array yields the
+  * empty string; tokens join with a single space and null tokens are skipped
+  * like concat_ws does. A NULL token array counts as empty — the HOF form's
+  * `slice` of a NULL array feeds concat_ws nothing and builds "" too. */
+object TokenShingles {
+  private val Space = UTF8String.fromString(" ")
+
+  /** calls `f` once per window, in order, with a fresh UTF8String (the same
+    * string concat_ws builds). */
+  def foreach(toks: ArrayData, ngram: Int)(f: UTF8String => Unit): Unit = {
+    val len = if (toks == null) 0 else toks.numElements()
+    val nShingles = math.max(len - ngram, 0) + 1
+    val parts = new Array[UTF8String](ngram)
+    var s = 0
+    while (s < nShingles) {
+      val end = math.min(s + ngram, len)
+      var m = 0
+      var j = s
+      while (j < end) {
+        if (!toks.isNullAt(j)) { parts(m) = toks.getUTF8String(j); m += 1 }
+        j += 1
+      }
+      f(if (m == ngram) UTF8String.concatWs(Space, parts: _*)
+        else UTF8String.concatWs(Space, java.util.Arrays.copyOf(parts, m): _*))
+      s += 1
+    }
   }
 }

@@ -28,13 +28,17 @@ object Curation {
     Sampling.hashSample(near, col(idCol), sampleFraction)
   }
 
-  /** the language + quality gates, materialized ONCE: the predicates are
-    * higher-order-function trees (CodegenFallback, interpreted) and the
-    * downstream dedup stages reference their input several times (group +
-    * semi-join sides, signature cache build, final anti-join) — without
-    * this the gates re-run over the corpus per reference (measured 8.7 s
-    * vs 2 s at sf0.1). At 100 TB this is the standard "write the filtered
-    * corpus once" checkpoint between pipeline phases. */
+  /** the language + quality gates over the fanned corpus, materialized
+    * ONCE, for two reasons. (1) Catalyst pushes deterministic filters below
+    * [[Fan.out]]'s repartition (see its scaladoc), so without this barrier
+    * every filter stacked on the gate — [[curateFull]]'s learned-quality
+    * model and decontamination filters — would sink to the unsplittable
+    * scan side and run on one task; the checkpoint keeps them on the fanned
+    * partitions. (2) [[exactKeep]] reads its input twice (the fingerprint
+    * group and the semi-join), and [[curate]] hands it the gate output
+    * directly — one materialized input instead of two gate passes. At
+    * 100 TB this is the standard "write the filtered corpus once"
+    * checkpoint between pipeline phases. */
   private def gate(df: DataFrame, textCol: String, lang: String,
                    minQuality: Double): DataFrame =
     Fan.out(df.filter(
@@ -86,12 +90,13 @@ object Curation {
     *
     * Stage order is cost-ordered, cheap filters first: the two codegen'd
     * gates and the model filter shrink the corpus before any shuffling
-    * stage; decontamination is one broadcast postings pass; the three dedup
-    * stages each consume the previous survivors. Checkpoints sit where a
-    * stage's output feeds multiple downstream references (gate survivors,
-    * decontaminated corpus, exact survivors, near survivors) — at 100 TB
-    * each is the standard write-the-filtered-corpus materialization between
-    * pipeline phases. */
+    * stage; decontamination is a row-local filter against the broadcast
+    * benchmark shingle set (no shuffle); the three dedup stages each
+    * consume the previous survivors. Checkpoints sit where a stage's output
+    * feeds multiple downstream references (gate survivors, decontaminated
+    * corpus, exact survivors, near survivors) — at 100 TB each is the
+    * standard write-the-filtered-corpus materialization between pipeline
+    * phases. */
   def curateFull(df: DataFrame, idCol: String, textCol: String,
                  bench: DataFrame, benchTextCol: String,
                  modelWeightsMicros: Seq[Long],

@@ -245,16 +245,20 @@ object Dedup {
                         shingleSize: Int = 3): DataFrame =
     minhashCandidatesWithSigs(df, idCol, textCol, numHashes, bands, shingleSize)._1
 
-  /** as [[minhashCandidates]] but also returns the cached signature frame so
-    * the caller can `unpersist` it once the pairs are materialized (the cache
-    * is reused 3× inside the candidate plan; leaving it pinned for the session
-    * would leak executor storage in a long-running pipeline). `portable`
-    * picks the hash base (see [[minhashSigs]]). */
+  /** as [[minhashCandidates]] but also returns the signature frame the
+    * candidates join, `localCheckpoint`ed ONCE: the pairs' banding and both
+    * estimate joins read it, and a checkpoint (unlike a cache) pins nothing
+    * for the session — its blocks are freed by the ContextCleaner once the
+    * frames are unreferenced, so no caller has to `unpersist`. Band rows
+    * carry ids only, never the signature (that would grow the band shuffle
+    * by `numHashes` longs per band row). `portable` picks the hash base (see
+    * [[minhashSigs]]). */
   def minhashCandidatesWithSigs(df: DataFrame, idCol: String, textCol: String,
                                 numHashes: Int = 64, bands: Int = 16,
                                 shingleSize: Int = 3,
                                 portable: Boolean = false): (DataFrame, DataFrame) = {
-    val sigs = minhashSigs(df, idCol, textCol, numHashes, shingleSize, portable).cache()
+    val sigs = minhashSigs(df, idCol, textCol, numHashes, shingleSize, portable)
+      .localCheckpoint()
     val agree = aggregate(zip_with(col("sig_a"), col("sig_b"),
         (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, v) => acc + v).cast(DoubleType)
@@ -275,34 +279,21 @@ object Dedup {
     * iterative connected components.) `portable = true` is the md5 hash
     * base whose WHOLE pipeline (shingle → affine min-hash → banding →
     * bucket-local candidates → estimated-Jaccard threshold → drop higher
-    * id) a DuckDB SQL oracle replicates exactly. */
+    * id) a DuckDB SQL oracle replicates exactly.
+    *
+    * The signatures are the one materialization (see
+    * [[minhashCandidatesWithSigs]]); the dup-id set stays lazy, because its
+    * only consumer is the anti-join below. */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.8, numHashes: Int = 64,
-                   bands: Int = 16, portable: Boolean = false): DataFrame =
-    minhashDedupWithHandle(df, idCol, textCol, threshold, numHashes, bands,
-      portable)._1
-
-  /** as [[minhashDedup]] but also returns the materialized dup-id frame.
-    * dupIds is `localCheckpoint`ed, not cached: it materializes eagerly (so
-    * the signature cache can be released immediately) and its blocks are
-    * freed by the ContextCleaner once the frame is unreferenced — no cached
-    * frame stays pinned for the session's lifetime. */
-  def minhashDedupWithHandle(df: DataFrame, idCol: String, textCol: String,
-                             threshold: Double = 0.8, numHashes: Int = 64,
-                             bands: Int = 16,
-                             portable: Boolean = false): (DataFrame, DataFrame) = {
-    val (cands, sigs) = minhashCandidatesWithSigs(df, idCol, textCol,
-      numHashes, bands, portable = portable)
-    // dup ids are tiny (ids only); materialize them so the signature cache
-    // can be released instead of staying pinned for the session.
-    val dupIds = cands
+                   bands: Int = 16, portable: Boolean = false): DataFrame = {
+    val dupIds = minhashCandidatesWithSigs(df, idCol, textCol, numHashes,
+        bands, portable = portable)._1
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_b").as(idCol)).distinct()
-      .localCheckpoint()
-    sigs.unpersist(blocking = false)
     // no broadcast hint: the dup-id set can be a large fraction of the corpus
     // at scale — let AQE pick broadcast vs shuffle from the observed size.
-    (df.join(dupIds, Seq(idCol), "left_anti"), dupIds)
+    df.join(dupIds, Seq(idCol), "left_anti")
   }
 
   /** [[minhashDedup]]'s md5 preset — 16 hashes, 4 bands × 4 rows, 3-gram
@@ -315,8 +306,8 @@ object Dedup {
       portable = true)
 
   /** MinHash-LSH near-dup pairs (id_a, id_b) with est. Jaccard ≥ threshold,
-    * materialized (`localCheckpoint`, so the signature cache is released
-    * before the caller's policy runs) — the candidate chain the
+    * materialized (`localCheckpoint`: the policies below read the pairs
+    * more than once) — the candidate chain the
     * corpus-level compositions share: feed it to [[clusterDedupFromPairs]],
     * [[clusterDedupFromPairsKeepBest]], [[clusterSizeHistogramFromPairs]],
     * [[goldenRecord]] or [[splitLeakageFromPairs]]. */
@@ -324,12 +315,10 @@ object Dedup {
                    threshold: Double = 0.8, numHashes: Int = 64,
                    bands: Int = 16, shingleSize: Int = 3,
                    portable: Boolean = false): DataFrame = {
-    val (cands, sigs) = minhashCandidatesWithSigs(df, idCol, textCol,
-      numHashes, bands, shingleSize, portable)
-    val pairs = cands.filter(col("est_jaccard") >= threshold)
+    minhashCandidatesWithSigs(df, idCol, textCol, numHashes, bands,
+        shingleSize, portable)._1
+      .filter(col("est_jaccard") >= threshold)
       .select("id_a", "id_b").localCheckpoint()
-    sigs.unpersist(blocking = false)
-    pairs
   }
 
   // ---------------------------------------------------------------------
@@ -2381,7 +2370,8 @@ object Dedup {
     * Returns (id_a, id_b, max_run, n_windows): longest shared token run and
     * the total count of matching k-windows across all diagonals. */
   /** matched k-window position pairs (id_a, id_b, __pa, __d) — the shared
-    * candidate stage of [[spanOverlapPairs]] and [[spanDedup]]. Windows are
+    * candidate stage of [[spanOverlapPairs]] and [[spanExcise]]
+    * ([[spanDedup]] needs no pairs, only the windows). Windows are
     * carried as xxhash64 LONGS (8 bytes vs ~50-byte k-token strings through
     * the shared-vocab aggregate and the self-join — the same shortcut as
     * [[ngramContainmentPrefix]]); a collision would fabricate a match
@@ -2394,22 +2384,8 @@ object Dedup {
     * key to two independent hashes.) */
   private def spanWindowMatches(df: DataFrame, idCol: String, textCol: String,
                                 k: Int, maxWindowDocFreq: Int): DataFrame = {
-    // checkpoint the PER-DOC hashed-window arrays (doc-sized rows, the
-    // containment `sh` pattern) — they feed the shared-vocab aggregate and
-    // BOTH self-join sides, so without this the tokenize+hash projection
-    // runs three times; the cheap posexplode re-runs per consumer instead.
-    // Fan.out before the tokenize: the projection is the query's single
-    // heaviest stage (r21 profile: 0.98 s single-task on the unsplittable
-    // fixture scan) and is partitioning-independent.
-    val sh = Fan.out(df.select(col(idCol), col(textCol)))
-      .select(col(idCol),
-        TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))).as("__toks"))
-      .filter(size(col("__toks")) >= k)
-      .select(col(idCol), transform(
-        shinglesFromTokens(col("__toks"), k, distinct = false),
-        s => xxhash64(s)).as("__ws"))
-      .localCheckpoint()
-    val ex = sh.select(col(idCol), posexplode(col("__ws")))
+    val ex = spanWindowHashes(df, idCol, textCol, k)
+      .select(col(idCol), posexplode(col("__ws")))
       .toDF(idCol, "__pos", "__s")
     // lower bound (lossless): a window occurring once cannot be shared.
     // upper bound (the boilerplate cap): document frequency > cap ⇒ the
@@ -2430,6 +2406,26 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("__pa"),
         (col("__pa") - col("__pb")).as("__d"))
   }
+
+  /** (idCol, __ws) per-doc arrays of xxhash64'd k-token windows in position
+    * order, checkpointed — docs shorter than k tokens have no window. The
+    * arrays are doc-sized rows (the containment `sh` pattern) that feed
+    * several consumers (the shared-window aggregate and the join or
+    * self-join sides), so without the checkpoint the tokenize+hash
+    * projection runs once per consumer; the cheap explode re-runs instead.
+    * Fan.out before the tokenize: the projection is the query's single
+    * heaviest stage (r21 profile: 0.98 s single-task on the unsplittable
+    * fixture scan) and is partitioning-independent. */
+  private def spanWindowHashes(df: DataFrame, idCol: String, textCol: String,
+                               k: Int): DataFrame =
+    Fan.out(df.select(col(idCol), col(textCol)))
+      .select(col(idCol),
+        TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))).as("__toks"))
+      .filter(size(col("__toks")) >= k)
+      .select(col(idCol), transform(
+        shinglesFromTokens(col("__toks"), k, distinct = false),
+        s => xxhash64(s)).as("__ws"))
+      .localCheckpoint()
 
   def spanOverlapPairs(df: DataFrame, idCol: String, textCol: String,
                        minRun: Int = 8,
@@ -2454,23 +2450,34 @@ object Dedup {
     * a LOWER-id'd document — the keep-first policy of [[exactDedup]] applied
     * to substring duplication. Survivor rows are returned unchanged.
     *
-    * Cheaper than [[spanOverlapPairs]] + filter: ONE shared k-window already
-    * implies a shared run ≥ k tokens, so the dedup decision needs only
-    * EXISTENCE of a match — the per-diagonal gaps-and-islands stage (a
-    * window + two aggregates, only needed to measure run LENGTH) is skipped
-    * entirely. The flagged set (higher id of each matched pair) anti-joins
-    * WITHOUT a forced broadcast: in a duplication-heavy crawl it can be a
-    * large fraction of the corpus, and AQE already broadcasts it when its
-    * measured size allows — forcing the hint would OOM the driver exactly
-    * when dedup matters most. */
+    * Only EXISTENCE of a match matters (ONE shared k-window already implies
+    * a shared run ≥ k tokens), and a doc has a lower-id'd partner on a
+    * window exactly when its id is above the window's MINIMUM id. So the
+    * decision needs no pairs at all: one aggregate per window gives
+    * (min id, distinct docs), windows with 2 ≤ docs ≤ `maxWindowDocFreq`
+    * (the [[spanOverlapPairs]] sharing rule and boilerplate cap) join back
+    * to their postings, and every posting above its window's minimum is
+    * flagged — Σf rows instead of the self-join's Σf² pairs, with exactly
+    * the flagged set of [[spanOverlapPairs]]' `id_b`s, repeated ids
+    * included (Round4OpsSpec). The flagged set anti-joins WITHOUT a forced
+    * broadcast: in a duplication-heavy crawl it can be a large fraction of
+    * the corpus, and AQE already broadcasts it when its measured size
+    * allows — forcing the hint would OOM the driver exactly when dedup
+    * matters most. */
   def spanDedup(df: DataFrame, idCol: String, textCol: String,
                 minRun: Int = 8,
                 maxWindowDocFreq: Int = 1000): DataFrame = {
     require(minRun >= 2, s"minRun must be >= 2, got $minRun")
     require(maxWindowDocFreq >= 2,
       s"maxWindowDocFreq must be >= 2, got $maxWindowDocFreq")
-    val flagged = spanWindowMatches(df, idCol, textCol, minRun, maxWindowDocFreq)
-      .select(col("id_b").as(idCol)).distinct()
+    val ex = spanWindowHashes(df, idCol, textCol, minRun)
+      .select(col(idCol), explode(col("__ws")).as("__s"))
+    val shared = ex.groupBy("__s")
+      .agg(min(col(idCol)).as("__min"), countDistinct(col(idCol)).as("__df"))
+      .filter(col("__df") >= 2 && col("__df") <= maxWindowDocFreq)
+    val flagged = ex.join(shared, "__s")
+      .filter(col(idCol) > col("__min"))
+      .select(col(idCol)).distinct()
     df.join(flagged, Seq(idCol), "left_anti")
   }
 
@@ -2637,16 +2644,45 @@ object Dedup {
   }
 
   /** remove corpus documents whose [[contaminationScores]] contamination is
-    * ≥ `maxContamination` — returns surviving corpus rows unchanged. The
-    * flagged-id set is tiny (contaminated docs), so the anti-join broadcasts. */
+    * ≥ `maxContamination` — returns surviving corpus rows unchanged.
+    *
+    * A ROW-LOCAL filter: the benchmark's distinct shingle set (the rows
+    * [[contaminationScores]] broadcasts) is collected once on the driver and
+    * shipped as a Spark broadcast, and the fused
+    * [[graft.functions.ShingleSetHitsExpr]] counts each row's distinct
+    * shingles and benchmark hits in one codegen'd pass over its token
+    * array — no explode, no join, no aggregate, no shuffle of the corpus
+    * (PlanAuditSpec pins the Exchange-free plan). The score itself stays in
+    * Spark's expressions, `round(n_hits / n_shingles, 6)`, so rounding is
+    * [[contaminationScores]]' own and a NULL comparison keeps the row.
+    *
+    * Per-row semantics: [[contaminationScores]] aggregates by `idCol`, so
+    * the two disagree only when `idCol` repeats (each row is decided on its
+    * own shingles, not on its id's pooled ones) or is NULL (a contaminated
+    * NULL-id row is dropped). With a unique non-null id the kept rows are
+    * exactly those scoring below `maxContamination` (Round4OpsSpec). */
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
                     bench: DataFrame, benchTextCol: String,
                     maxContamination: Double = 0.8, ngram: Int = 3): DataFrame = {
-    val flagged = contaminationScores(corpus, idCol, textCol, bench,
-        benchTextCol, ngram)
-      .filter(col("contamination") >= maxContamination)
-      .select(col(idCol))
-    corpus.join(broadcast(flagged), Seq(idCol), "left_anti")
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.unsafe.types.UTF8String
+    val benchSet = new java.util.HashSet[UTF8String]()
+    bench.select(shingles(col(benchTextCol), ngram)).collect()
+      .filterNot(_.isNullAt(0))
+      .foreach(_.getSeq[String](0).foreach(s => benchSet.add(UTF8String.fromString(s))))
+    val hits = GraftSqlBridge.column(graft.functions.ShingleSetHitsExpr(
+      GraftSqlBridge.expression(
+        TextAnalysis.tokens(TextAnalysis.normalized(col(textCol)))),
+      ngram, corpus.sparkSession.sparkContext.broadcast(benchSet)))
+    // the kernel's two fields feed one predicate; a Generate evaluates it
+    // once per row (a filter referencing it twice would run it twice —
+    // whole-stage codegen shares no subexpressions in filter predicates —
+    // and predicate pushdown would substitute a projected alias back in)
+    corpus.select(col("*"), inline(array(hits)).as(Seq("__n", "__hits")))
+      .filter(not(coalesce(
+        round(col("__hits").cast(DoubleType) / col("__n"), 6) >= maxContamination,
+        lit(false))))
+      .drop("__n", "__hits")
   }
 
   /** embedding-cosine near-dup pairs with banded-LSH blocking — the scale

@@ -322,6 +322,16 @@ class PlanAuditSpec extends AnyFunSuite {
       s"corpus postings shuffled for the benchmark join:\n$plan")
   }
 
+  test("decontaminate: row-local filter, the corpus is never shuffled") {
+    import graft.operators.Dedup
+    val corpus = spark.read.parquet(docsDir)
+    val bench = corpus.filter(col("doc_id") % 50 === 0)
+    val plan = finalPlan(Dedup.decontaminate(corpus, "doc_id", "text",
+      bench, "text", maxContamination = 0.5))
+    assert(!plan.contains("Exchange"), s"decontaminate shuffles:\n$plan")
+    assert(plan.contains("graft_shingle_set_hits"), plan)
+  }
+
   test("attributionJoin (batch form): equi-keyed join with range condition, no cartesian") {
     import graft.streaming.Streams
     val events = (1L to 400L).map { i =>
@@ -361,6 +371,7 @@ class PlanAuditSpec extends AnyFunSuite {
       val docs = replicate(factor)
       val plans = Seq(
         "span"    -> finalPlan(Dedup.spanOverlapPairs(docs, "doc_id", "text", minRun = 8)),
+        "span_dedup" -> finalPlan(Dedup.spanDedup(docs, "doc_id", "text", minRun = 8)),
         "minhash" -> finalPlan(Dedup.minhashDedup(docs, "doc_id", "text", 0.5,
           numHashes = 32, bands = 8)),
         "minhash_md5" -> finalPlan(Dedup.minhashDedup(docs, "doc_id", "text", 0.5,

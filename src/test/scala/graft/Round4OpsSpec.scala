@@ -218,12 +218,11 @@ class Round4OpsSpec extends AnyFunSuite {
     // the q_containment-r7 banding config provably yields ZERO candidates
     // for the planted pair: the md5-portable signatures (seed-42 affine
     // params, deterministic) collide in no band
-    val (bandCands, sigs) = Dedup.minhashCandidatesWithSigs(
+    val (bandCands, _) = Dedup.minhashCandidatesWithSigs(
       docs, "doc_id", "text", numHashes = 16, bands = 8, shingleSize = 3,
       portable = true)
     val banded = bandCands.select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    sigs.unpersist(blocking = false)
     assert(!banded.contains((1L, 2L)),
       "planted pair unexpectedly collided in a band — pick a smaller jaccard fixture")
     // the prefix-filter operator finds it end-to-end with containment 1.0
@@ -503,6 +502,42 @@ class Round4OpsSpec extends AnyFunSuite {
       plan.contains("broadcast"), s"benchmark set not broadcast:\n$plan")
   }
 
+  test("decontaminate keeps exactly the rows contaminationScores scores < max") {
+    val corpus = Seq[(Long, String)](
+      (1L, null),                                             // NULL text
+      (2L, "!!! ... ???"),                                    // punctuation only
+      (3L, "quick brown"),                                    // shorter than ngram
+      (4L, "the quick brown fox jumps over the lazy dog"),    // verbatim bench copy
+      (5L, "he said the quick brown fox jumps over it and left"),
+      (6L, "fox jumps over fox jumps over fox jumps over"),   // repeated shingles
+      (7L, "completely unrelated prose about spark query planning"),
+      (8L, "")
+    ).toDF("doc_id", "text")
+    val clean = Seq("the quick brown fox jumps over the lazy dog", "quick brown")
+    // a NULL or empty bench row contributes the "" shingle NULL and
+    // punctuation-only docs consist of
+    val benches = Seq(clean, clean :+ null, clean :+ "")
+      .map(_.map(Option(_)).toDF("btext"))
+    def kept(bench: org.apache.spark.sql.DataFrame, max: Double) =
+      Dedup.decontaminate(corpus, "doc_id", "text", bench, "btext",
+          maxContamination = max)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    for (bench <- benches) {
+      val scores = Dedup.contaminationScores(corpus, "doc_id", "text", bench, "btext")
+        .select("doc_id", "contamination").as[(Long, Double)].collect()
+      for (max <- Seq(0.0, 0.3, 0.5, 0.8, 1.0)) {
+        val expected = scores.filter(_._2 < max).map(_._1).sorted.toSeq
+        assert(kept(bench, max) == expected, s"max=$max bench=${bench.collect().toSeq}")
+      }
+    }
+    // the kernel's interpreted path agrees with its generated code
+    val key = "spark.sql.codegen.wholeStage"
+    val codegen = kept(benches(1), 0.5)
+    spark.conf.set(key, "false")
+    try assert(kept(benches(1), 0.5) == codegen)
+    finally spark.conf.unset(key)
+  }
+
   test("exactDecontaminate: verbatim ≥N-token run caught, N−1 near-miss passes") {
     import graft.operators.Dedup
     val bench = Seq((100L, "alpha beta gamma delta epsilon zeta eta theta"))
@@ -706,6 +741,29 @@ class Round4OpsSpec extends AnyFunSuite {
         maxWindowDocFreq = 10)
       .select("doc_id").as[Long].collect().toSet
     assert(kept == (1L to 60L).toSet - 2L)
+  }
+
+  test("spanDedup drops exactly the id_b side of spanOverlapPairs") {
+    // a 12-word vocabulary makes many 4-token windows shared; ids repeat
+    // (rows 30..39 reuse ids 0..9) and one 4-token boilerplate run sits in
+    // every third doc, so caps 2 and 3 sit below its doc frequency
+    val rnd = new scala.util.Random(5)
+    val boiler = "hdr one two three"
+    val docs = (0 until 40).map { i =>
+      val body = Seq.fill(3 + rnd.nextInt(12))(s"v${rnd.nextInt(12)}").mkString(" ")
+      ((i % 30).toLong, if (i % 3 == 0) s"$boiler $body" else body)
+    }.toDF("doc_id", "text")
+    for (cap <- Seq(2, 3, 1000)) {
+      val flagged = Dedup.spanOverlapPairs(docs, "doc_id", "text", minRun = 4,
+          maxWindowDocFreq = cap)
+        .select("id_b").as[Long].collect().toSet
+      val expected = docs.collect().map(_.getLong(0)).filterNot(flagged).sorted.toSeq
+      val kept = Dedup.spanDedup(docs, "doc_id", "text", minRun = 4,
+          maxWindowDocFreq = cap)
+        .select("doc_id").as[Long].collect().sorted.toSeq
+      assert(kept == expected, s"cap=$cap")
+      assert(flagged.nonEmpty && kept.nonEmpty, s"cap=$cap: degenerate fixture")
+    }
   }
 
   test("xxhash64 dedup survivors track their md5-portable oracle twins") {
