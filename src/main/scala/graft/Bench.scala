@@ -153,7 +153,7 @@ object Bench {
         Dedup.writeFingerprintStore(docs.limit(64), "text",
           "graft_warm_store", nBuckets = 2)
         val n = Dedup.exactDedupAgainst(docs.limit(64), "text",
-          "graft_warm_store", updateStore = false, nBuckets = 2).count()
+          "graft_warm_store", updateStore = false).count()
         spark.sql("DROP TABLE IF EXISTS graft_warm_store_fps")
         n
       }),
@@ -184,7 +184,7 @@ object Bench {
           "graft_warm_emb", dim = 64, bandBits = 12, bands = 5, nBuckets = 2)
         val n = Dedup.embeddingNearDupAgainst(emb.limit(64), "vec_id",
           "embedding", "graft_warm_emb", threshold = 0.99, dim = 64,
-          bandBits = 12, bands = 5, updateStore = false, nBuckets = 2).count()
+          bandBits = 12, bands = 5, updateStore = false).count()
         spark.sql("DROP TABLE IF EXISTS graft_warm_emb_bands")
         spark.sql("DROP TABLE IF EXISTS graft_warm_emb_vecs")
         n

@@ -1728,12 +1728,13 @@ object SparkEntry {
           Multimodal.encodeSyntheticPngGroups(rd(s, dir, "documents"),
             "doc_id"))
         .localCheckpoint()
-      Dedup.writeImageHashStore(
+      Dedup.writeWideHashStore(
         hashes.filter(pmod(col("media_id"), lit(8)) < 2),
-        "media_id", "graft_img_store", maxHamming = 6, nBuckets = 32)
-      Dedup.imageDedupAgainst(
+        "media_id", "graft_img_store", "image_dhash", maxHamming = 6,
+        nBuckets = 32)
+      Dedup.wideHashDedupAgainst(
           hashes.filter(pmod(col("media_id"), lit(8)) >= 2),
-          "media_id", "graft_img_store", maxHamming = 6,
+          "media_id", "graft_img_store", "image_dhash", maxHamming = 6,
           updateStore = false)
         .orderBy("media_id")
     }),
@@ -1748,12 +1749,13 @@ object SparkEntry {
           Multimodal.encodeSyntheticWavGroups(rd(s, dir, "documents"),
             "doc_id"))
         .localCheckpoint()
-      Dedup.writeAudioHashStore(
+      Dedup.writeWideHashStore(
         hashes.filter(pmod(col("media_id"), lit(8)) < 2),
-        "media_id", "graft_aud_store", maxHamming = 6, nBuckets = 32)
-      Dedup.audioDedupAgainst(
+        "media_id", "graft_aud_store", "audio_ehash", maxHamming = 6,
+        nBuckets = 32)
+      Dedup.wideHashDedupAgainst(
           hashes.filter(pmod(col("media_id"), lit(8)) >= 2),
-          "media_id", "graft_aud_store", maxHamming = 6,
+          "media_id", "graft_aud_store", "audio_ehash", maxHamming = 6,
           updateStore = false)
         .orderBy("media_id")
     }),
@@ -1985,7 +1987,7 @@ object SparkEntry {
         .unionAll(prev.select((col("doc_id") + 1000000L).as("doc_id"),
           col("text")))
       Dedup.exactDedupAgainst(fresh, "text", "graft_diff_store",
-          updateStore = false, nBuckets = 4)
+          updateStore = false)
         .select("doc_id").orderBy("doc_id")
     }),
     "q_source_cap" -> ((s, dir) => {
@@ -2697,7 +2699,7 @@ object SparkEntry {
       graft.sources.Sources.writeBucketed(snap, "graft_merge_base",
         "o_orderkey", 8)
       graft.sources.Sources.mergeIntoStore(s, "graft_merge_base",
-        upd.unionByName(ins).unionByName(del), "o_orderkey", nBuckets = 8)
+        upd.unionByName(ins).unionByName(del), "o_orderkey")
       s.table("graft_merge_base").orderBy("o_orderkey")
     }),
     "q_corr_matrix" -> ((s, dir) =>
@@ -3111,10 +3113,9 @@ object SparkEntry {
         graft.sources.Sources.scd2Init(snap, 0L), "graft_scd2_hist",
         "o_orderkey", 8)
       graft.sources.Sources.scd2MergeIntoStore(s, "graft_scd2_hist",
-        upd1.unionByName(ins1).unionByName(del1), "o_orderkey", batch = 1L,
-        nBuckets = 8)
+        upd1.unionByName(ins1).unionByName(del1), "o_orderkey", batch = 1L)
       graft.sources.Sources.scd2MergeIntoStore(s, "graft_scd2_hist",
-        ups2, "o_orderkey", batch = 2L, nBuckets = 8)
+        ups2, "o_orderkey", batch = 2L)
       s.table("graft_scd2_hist").orderBy("o_orderkey", "valid_from")
     }),
     "q_scd2_asof" -> ((s, dir) => {

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.Sources
+import graft.sources.{Sources, StoreTable}
 
 /** [EXT] Deduplication operators for a training-data pipeline: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -361,7 +361,7 @@ object Dedup {
         // would be pruned): a probe/store signature-length mismatch means
         // the caller's numHashes differs from the store build — zip_with
         // would null-pad and count every padded slot as disagreement,
-        // silently letting true duplicates survive. [[checkStoreParams]]
+        // silently letting true duplicates survive. [[StoreTable.checkProps]]
         // catches this at probe entry for stores carrying build properties;
         // this backstops pre-property stores and hand-built frames.
         when(size(col("sig")) === size(col("__ssig")),
@@ -378,79 +378,40 @@ object Dedup {
       .select(idCol).distinct()
   }
 
-  /** persist a store's build parameters as table properties so a probe with
-    * mismatched parameters fails loudly at [[checkStoreParams]] instead of
-    * silently missing true duplicates — every store family shares the
-    * hazard: minhash numHashes/bands (unequal-length sig arrays make every
-    * zip_with element comparison a disagreement), simhash portable flag
-    * (60-bit md5 signatures never equal 64-bit xxhash64 ones), embedding
-    * dim/bandBits/bands/seed (different planes → band keys never collide
-    * with the store's). */
-  private[operators] def setStoreParams(spark: SparkSession, table: String,
-                                        params: Map[String, Any]): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      params.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'graft.$k' = '$v'" }.mkString(", ") + ")")
-
-  /** validate probe parameters against the build parameters persisted by
-    * [[setStoreParams]]. Stores written before the properties existed are
-    * accepted (nothing to check against) — the in-plan signature-width guard
-    * in [[dedupAgainstCore]] still backstops the minhash case — EXCEPT for
-    * keys listed in `required`: those mark an on-disk FORMAT version (e.g.
-    * the PQ code stores' `enc=bias128` byte encoding), where a store
-    * predating the property is not merely uncheckable but physically
-    * incompatible — probing it would decode valid-looking-but-wrong values,
-    * the exact silent-corruption class the fingerprints exist to prevent.
-    * A missing required key fails loudly with rebuild advice. */
-  private[graft] def checkStoreParams(spark: SparkSession, table: String,
-                               params: Map[String, Any],
-                               required: Set[String] = Set.empty): Unit = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    params.foreach { case (k, v) =>
-      if (required(k)) require(props.contains(s"graft.$k"),
-        s"$table has no graft.$k property — it was written by a build whose " +
-          s"on-disk format predates $k=$v; decoding it under the current " +
-          "format would return silently wrong values. Rebuild the store " +
-          "with its write* entry point")
-      props.get(s"graft.$k").foreach(stored => require(stored == v.toString,
-        s"$table was built with $k=$stored but the probe passed $k=$v — " +
-          "mismatched parameters silently miss true duplicates (signatures " +
-          "or band keys can never match); probe with the store's parameters"))
-    }
-  }
-
   /** create/replace a MinHash signature store from a signature frame (e.g.
     * [[minhashSigs]] over the initial corpus, on the hash base `portable`
     * names). The bands table keeps [[bandRows]]' store key columns:
     * `band_hash` alone on xxhash64, `band` + `band_key` on md5 (a DuckDB
     * oracle can rebuild those store contents exactly). The build
     * parameters, hash base included, are persisted for
-    * [[checkStoreParams]]. */
+    * [[StoreTable.checkProps]]. */
   def writeMinhashStore(sigs: DataFrame, idCol: String, store: String,
                         bands: Int, numHashes: Int = 64,
                         nBuckets: Int = 8, portable: Boolean = false): Unit = {
     // materialize the signature kernel ONCE — both table writes consume it
     // (the un-checkpointed form re-ran the minhash kernel per write)
     val s = sigs.localCheckpoint()
-    writeMinhashTables(s, idCol, store, numHashes, bands, portable, nBuckets,
-      SaveMode.Overwrite)
+    writeMinhashTables(s, idCol, store, numHashes, bands, portable) {
+      (df, table, bucketCol) =>
+        Sources.writeBucketed(df, table, bucketCol, nBuckets)
+    }
     s.unpersist(blocking = false)
-    setStoreParams(sigs.sparkSession, s"${store}_sigs",
+    StoreTable.setProps(sigs.sparkSession, s"${store}_sigs",
       Map("numHashes" -> numHashes, "bands" -> bands, "portable" -> portable))
   }
 
   /** write (or append) a MinHash store's two tables — signatures bucketed
     * by id, [[bandRows]] bucketed on the band key — overlapping the two
-    * independent writes (guide §2.6; r22). */
+    * independent writes (guide §2.6; r22). `write` gets each table's rows,
+    * name and bucket column. */
   private def writeMinhashTables(sigs: DataFrame, idCol: String, store: String,
-                                 numHashes: Int, bands: Int, portable: Boolean,
-                                 nBuckets: Int, mode: SaveMode): Unit = {
+                                 numHashes: Int, bands: Int, portable: Boolean)
+                                (write: (DataFrame, String, String) => Unit): Unit = {
     val (banded, keys) = bandRows(sigs, idCol, numHashes, bands, portable)
     Sources.writeConcurrently(
-      () => Sources.writeBucketed(sigs, s"${store}_sigs", idCol, nBuckets, mode),
-      () => Sources.writeBucketed(banded.select((idCol +: keys).map(col): _*),
-        s"${store}_bands", keys.last, nBuckets, mode))
+      () => write(sigs, s"${store}_sigs", idCol),
+      () => write(banded.select((idCol +: keys).map(col): _*),
+        s"${store}_bands", keys.last))
   }
 
   /** incremental MinHash-LSH dedup of `newBatch` against the persisted store
@@ -467,10 +428,9 @@ object Dedup {
                           store: String, threshold: Double = 0.8,
                           numHashes: Int = 64, bands: Int = 16,
                           updateStore: Boolean = true,
-                          nBuckets: Int = 8,
                           portable: Boolean = false): DataFrame = {
     val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_sigs",
+    StoreTable.checkProps(spark, s"${store}_sigs",
       Map("numHashes" -> numHashes, "bands" -> bands, "portable" -> portable))
     // localCheckpoint: the new-batch signatures feed the candidate join, the
     // verify join, and the store append — compute the fused kernel once.
@@ -486,7 +446,8 @@ object Dedup {
     // append idempotency is order-free
     if (updateStore)
       writeMinhashTables(newSigs.join(dupIds, Seq(idCol), "left_anti"), idCol,
-        store, numHashes, bands, portable, nBuckets, SaveMode.Append)
+        store, numHashes, bands, portable)((df, table, _) =>
+        StoreTable.append(df, table))
     newBatch.join(dupIds, Seq(idCol), "left_anti")
   }
 
@@ -509,8 +470,7 @@ object Dedup {
     * ([[exactDedup]] on the fingerprint): two new docs sharing a
     * fingerprint both pass the store check. */
   def exactDedupAgainst(newBatch: DataFrame, textCol: String, store: String,
-                        updateStore: Boolean = true,
-                        nBuckets: Int = 8): DataFrame = {
+                        updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
     val surv0 = newBatch
       .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
@@ -522,8 +482,8 @@ object Dedup {
         // materialize once: the append below and the caller's read would
         // otherwise each recompute the anti-join
         val s = surv0.localCheckpoint()
-        Sources.writeBucketed(s.select(col("__fp").as("fp")).distinct(),
-          s"${store}_fps", "fp", nBuckets, SaveMode.Append)
+        StoreTable.append(s.select(col("__fp").as("fp")).distinct(),
+          s"${store}_fps")
         s
       }
     survivors.drop("__fp")
@@ -590,7 +550,7 @@ object Dedup {
     val sigs = simhashSigs(df, idCol, textCol, portable)
     Sources.writeBucketed(sigs.select(col("simhash").as("sig")).distinct(),
       s"${store}_sigs", "sig", nBuckets)
-    setStoreParams(df.sparkSession, s"${store}_sigs",
+    StoreTable.setProps(df.sparkSession, s"${store}_sigs",
       Map("portable" -> portable))
   }
 
@@ -602,10 +562,9 @@ object Dedup {
     * the store's build flag. */
   def simhashDedupAgainst(newBatch: DataFrame, idCol: String, textCol: String,
                           store: String, portable: Boolean = false,
-                          updateStore: Boolean = true,
-                          nBuckets: Int = 8): DataFrame = {
+                          updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_sigs", Map("portable" -> portable))
+    StoreTable.checkProps(spark, s"${store}_sigs", Map("portable" -> portable))
     // signature as a DERIVED COLUMN (the fused kernel is a per-row
     // projection): one scan of the batch, no self-join on id — the
     // exactDedupAgainst shape
@@ -617,8 +576,8 @@ object Dedup {
       if (!updateStore) surv0
       else {
         val s = surv0.localCheckpoint()
-        Sources.writeBucketed(s.select(col("__sig").as("sig")).distinct(),
-          s"${store}_sigs", "sig", nBuckets, SaveMode.Append)
+        StoreTable.append(s.select(col("__sig").as("sig")).distinct(),
+          s"${store}_sigs")
         s
       }
     survivors.drop("__sig")
@@ -667,7 +626,7 @@ object Dedup {
           Similarity.lshSignature(col(vecCol), dim, bandBits * bands, seed)
             .as("fullsig")),
         s"${store}_vecs", idCol, nBuckets))
-    setStoreParams(df.sparkSession, s"${store}_bands",
+    StoreTable.setProps(df.sparkSession, s"${store}_bands",
       Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
         "seed" -> seed, "enc" -> "bands_packed_v2"))
   }
@@ -685,10 +644,10 @@ object Dedup {
                               vecCol: String, store: String,
                               threshold: Double, dim: Int,
                               bandBits: Int = 16, bands: Int = 4,
-                              seed: Long = 42L, updateStore: Boolean = true,
-                              nBuckets: Int = 8): DataFrame = {
+                              seed: Long = 42L,
+                              updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    StoreTable.checkProps(spark, s"${store}_bands",
       Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
         "seed" -> seed, "enc" -> "bands_packed_v2"),
       required = Set("enc"))
@@ -715,7 +674,7 @@ object Dedup {
       // kernel over the batch
       val surv = newBatch.join(dupIds0, Seq(idCol), "left_anti")
         .localCheckpoint()
-      // upgrade contract: checkStoreParams accepts stores written before
+      // upgrade contract: StoreTable.checkProps accepts stores written before
       // the fullsig column existed (the read side falls back — see
       // Streams.scala). Appending a 3-column frame to such a 2-column
       // table would throw a schema mismatch, so match the EXISTING store
@@ -729,14 +688,13 @@ object Dedup {
         else vecsOut0.drop("fullsig")
       // both appends read the checkpointed survivors — overlap them (§2.6)
       Sources.writeConcurrently(
-        () => Sources.writeBucketed(
+        () => StoreTable.append(
           Similarity.lshBandSignatures(surv, idCol, vecCol, dim, bandBits,
               bands, seed)
             .select(col(idCol),
               packedEmbBandKey(col("band"), col("sig"), bandBits).as("__bs")),
-          s"${store}_bands", "__bs", nBuckets, SaveMode.Append),
-        () => Sources.writeBucketed(vecsOut, s"${store}_vecs", idCol,
-          nBuckets, SaveMode.Append))
+          s"${store}_bands"),
+        () => StoreTable.append(vecsOut, s"${store}_vecs"))
       surv
     } else newBatch.join(dupIds0, Seq(idCol), "left_anti")
   }
@@ -1524,24 +1482,9 @@ object Dedup {
           col("sim_lo"), col("sim_hi"))
         .distinct(),
       s"${store}_bands", "__bk", nBuckets)
-    setStoreParams(hashes.sparkSession, s"${store}_bands",
-      Map("kind" -> kind, "maxHamming" -> maxHamming,
-        "nBuckets" -> nBuckets, "enc" -> "dhash120_v2"))
+    StoreTable.setProps(hashes.sparkSession, s"${store}_bands",
+      Map("kind" -> kind, "maxHamming" -> maxHamming, "enc" -> "dhash120_v2"))
   }
-
-  /** the table's persisted bucket count — appends must match the bucket
-    * spec the table was BUILT with, so this refuses (with rebuild advice,
-    * the checkStoreParams doctrine) when the property is missing rather
-    * than guessing: an append bucketed differently from the table's actual
-    * spec can fail late or silently break the no-shuffle probe contract. */
-  private[operators] def storedNBuckets(spark: SparkSession, table: String): Int =
-    spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .collectFirst {
-        case r if r.getString(0) == "graft.nBuckets" => r.getString(1).toInt
-      }.getOrElse(sys.error(
-        s"$table has no graft.nBuckets property — it predates the bucket-" +
-          "spec contract, so an append cannot know the table's bucket " +
-          "count. Rebuild the store with its write* entry point"))
 
   /** append a batch of wide hashes' bands to [[writeWideHashStore]]'s bands
     * table — the store half of `updateStore = true`, exposed so streaming
@@ -1551,21 +1494,19 @@ object Dedup {
     * replay are harmless (they cannot change an anti-join). */
   def appendWideHashes(hashes: DataFrame, idCol: String, store: String,
                        kind: String, maxHamming: Int = 6): Unit = {
-    val spark = hashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    StoreTable.checkProps(hashes.sparkSession, s"${store}_bands",
       Map("kind" -> kind, "maxHamming" -> maxHamming,
         "enc" -> "dhash120_v2"),
       required = Set("enc"))
     val sigs = hashes.filter(col("dh_lo").isNotNull)
       .select(col(idCol), col("dh_lo").as("sim_lo"),
         col("dh_hi").as("sim_hi"))
-    Sources.writeBucketed(
+    StoreTable.append(
       wideBandedFrame(sigs, idCol, 120, maxHamming)
         .select(packedBandKey(col("band"), col("band_bits")).as("__bk"),
           col("sim_lo"), col("sim_hi"))
         .distinct(),
-      s"${store}_bands", "__bk",
-      storedNBuckets(spark, s"${store}_bands"), SaveMode.Append)
+      s"${store}_bands")
   }
 
   /** incremental wide-hash near-dup dedup against [[writeWideHashStore]]:
@@ -1584,11 +1525,10 @@ object Dedup {
                            maxHamming: Int = 6,
                            updateStore: Boolean = true): DataFrame = {
     val spark = newHashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    StoreTable.checkProps(spark, s"${store}_bands",
       Map("kind" -> kind, "maxHamming" -> maxHamming,
         "enc" -> "dhash120_v2"),
       required = Set("enc"))
-    val nBuckets = storedNBuckets(spark, s"${store}_bands")
     val sigs = newHashes.filter(col("dh_lo").isNotNull)
       .select(col(idCol), col("dh_lo").as("sim_lo"),
         col("dh_hi").as("sim_hi"))
@@ -1610,48 +1550,15 @@ object Dedup {
     val survivors = sigs.join(dupIds, Seq(idCol), "left_anti")
     if (updateStore) {
       val s = survivors.localCheckpoint()
-      Sources.writeBucketed(
+      StoreTable.append(
         wideBandedFrame(s, idCol, 120, maxHamming)
           .select(packedBandKey(col("band"), col("band_bits")).as("__bk"),
             col("sim_lo"), col("sim_hi"))
           .distinct(),
-        s"${store}_bands", "__bk", nBuckets, SaveMode.Append)
+        s"${store}_bands")
       s.select(col(idCol))
     } else survivors.select(col(idCol))
   }
-
-  /** the IMAGE member of the incremental wide-hash store family —
-    * [[writeWideHashStore]] over WIDE dHashes
-    * ([[graft.operators.Multimodal.imageDHashWide]] — the scale profile is
-    * the only sensible store basis). */
-  def writeImageHashStore(hashes: DataFrame, idCol: String, store: String,
-                          maxHamming: Int = 6, nBuckets: Int = 8): Unit =
-    writeWideHashStore(hashes, idCol, store, "image_dhash", maxHamming,
-      nBuckets)
-
-  /** incremental IMAGE near-dup dedup against [[writeImageHashStore]] —
-    * [[wideHashDedupAgainst]] at the image modality tag. */
-  def imageDedupAgainst(newHashes: DataFrame, idCol: String, store: String,
-                        maxHamming: Int = 6,
-                        updateStore: Boolean = true): DataFrame =
-    wideHashDedupAgainst(newHashes, idCol, store, "image_dhash", maxHamming,
-      updateStore)
-
-  /** the AUDIO member of the incremental wide-hash store family —
-    * [[writeWideHashStore]] over energy-envelope hashes
-    * ([[graft.operators.Multimodal.audioEnergyHashWide]]). */
-  def writeAudioHashStore(hashes: DataFrame, idCol: String, store: String,
-                          maxHamming: Int = 6, nBuckets: Int = 8): Unit =
-    writeWideHashStore(hashes, idCol, store, "audio_ehash", maxHamming,
-      nBuckets)
-
-  /** incremental AUDIO near-dup dedup against [[writeAudioHashStore]] —
-    * [[wideHashDedupAgainst]] at the audio modality tag. */
-  def audioDedupAgainst(newHashes: DataFrame, idCol: String, store: String,
-                        maxHamming: Int = 6,
-                        updateStore: Boolean = true): DataFrame =
-    wideHashDedupAgainst(newHashes, idCol, store, "audio_ehash", maxHamming,
-      updateStore)
 
   /** create/replace the incremental VIDEO frame-hash near-dup store: one
     * bucketed table `<store>_bands (__sid, __bk, sim_lo, sim_hi)` of
@@ -1673,10 +1580,10 @@ object Dedup {
     // BUILD parameter like maxHamming: probing a store built from
     // everyK > 1 hashes with differently-sampled frames misaligns frame_no
     // keys and silently dilutes the match vote — persist it so
-    // checkStoreParams refuses loudly on mismatch instead
-    setStoreParams(frameHashes.sparkSession, s"${store}_bands",
+    // StoreTable.checkProps refuses loudly on mismatch instead
+    StoreTable.setProps(frameHashes.sparkSession, s"${store}_bands",
       Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
-        "nBuckets" -> nBuckets, "everyK" -> everyK, "enc" -> "dhash120_v2"))
+        "everyK" -> everyK, "enc" -> "dhash120_v2"))
   }
 
   /** the video key packs the FRAME index in with the band: one bucketed
@@ -1716,15 +1623,12 @@ object Dedup {
   def appendVideoFrameHashes(frameHashes: DataFrame, idCol: String,
                              store: String, maxHamming: Int = 6,
                              everyK: Int = 1): Unit = {
-    val spark = frameHashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    StoreTable.checkProps(frameHashes.sparkSession, s"${store}_bands",
       Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
         "everyK" -> everyK, "enc" -> "dhash120_v2"),
       required = Set("enc"))
-    Sources.writeBucketed(
-      videoBandedRows(frameHashes, idCol, maxHamming),
-      s"${store}_bands", "__bk",
-      storedNBuckets(spark, s"${store}_bands"), SaveMode.Append)
+    StoreTable.append(videoBandedRows(frameHashes, idCol, maxHamming),
+      s"${store}_bands")
   }
 
   /** incremental VIDEO clip-level near-dup dedup against
@@ -1753,11 +1657,10 @@ object Dedup {
     require(minMatchedFrames >= 1,
       s"videoDedupAgainst: minMatchedFrames $minMatchedFrames")
     val spark = newFrameHashes.sparkSession
-    checkStoreParams(spark, s"${store}_bands",
+    StoreTable.checkProps(spark, s"${store}_bands",
       Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
         "everyK" -> everyK, "enc" -> "dhash120_v2"),
       required = Set("enc"))
-    val nBuckets = storedNBuckets(spark, s"${store}_bands")
     // the PROBE side gets the same frame_no < 2^20 injectivity guard the
     // build side enforces in videoBandedRows: an unguarded probe clip with
     // an aliased (frame, band) packed key would silently match wrong frame
@@ -1800,12 +1703,12 @@ object Dedup {
     val survivors = sigs.join(dupIds, Seq(idCol), "left_anti")
     if (updateStore) {
       val s = survivors.localCheckpoint()
-      Sources.writeBucketed(
+      StoreTable.append(
         videoBandedRows(
           s.select(col(idCol), col("frame_no"),
             col("sim_lo").as("dh_lo"), col("sim_hi").as("dh_hi")),
           idCol, maxHamming),
-        s"${store}_bands", "__bk", nBuckets, SaveMode.Append)
+        s"${store}_bands")
       s.select(col(idCol)).distinct()
     } else survivors.select(col(idCol)).distinct()
   }
@@ -2999,7 +2902,7 @@ object Dedup {
     * report. */
   def cdcDedupAgainst(newBatch: DataFrame, idCol: String, bytesCol: String,
                       store: String, updateStore: Boolean = true,
-                      nBuckets: Int = 8, minLen: Int = 32, maxLen: Int = 256,
+                      minLen: Int = 32, maxLen: Int = 256,
                       maskBits: Int = 5, batchId: Long = -1L): DataFrame = {
     val spark = newBatch.sparkSession
     val chunks = cdcChunks(newBatch, idCol, bytesCol, minLen, maxLen, maskBits)
@@ -3034,11 +2937,11 @@ object Dedup {
       val committed = batchId >= 0 &&
         storeTbl0.filter(col("__batch") === batchId).limit(1).count() > 0
       if (!committed)
-        Sources.writeBucketed(
+        StoreTable.append(
           marked.filter(col("__first"))
             .select(col("chunk_hash"), col("chunk_len"))
             .withColumn("__batch", lit(batchId)),
-          s"${store}_chunks", "chunk_hash", nBuckets, SaveMode.Append)
+          s"${store}_chunks")
     }
     report
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
 
+import graft.sources.StoreTable
+
 /** [EXT] Dataset-health operators (SURVEY §2.9 extension surface): one-pass
   * column profiling, join-key skew reporting, and robust (median/MAD)
   * outlier detection. The reference's summary layer
@@ -1056,7 +1058,7 @@ object Profiling {
     graft.sources.Sources.writeBucketed(
       cardinalitySketchRows(df, groupCol, valueExpr, lgK, batchTag = -1L),
       store, "__g", nBuckets)
-    Dedup.setStoreParams(df.sparkSession, store,
+    StoreTable.setProps(df.sparkSession, store,
       Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"))
   }
 
@@ -1069,17 +1071,14 @@ object Profiling {
                                 df: DataFrame, groupCol: String,
                                 valueExpr: Column, lgK: Int,
                                 batchTag: Long): Unit = {
-    Dedup.checkStoreParams(spark, store,
+    StoreTable.checkProps(spark, store,
       Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"),
       required = Set("enc"))
     val seen = spark.table(store).select("__batch").distinct()
       .collect().map(_.getLong(0)).toSet
-    if (shouldAppendTag(spark, store, batchTag, seen)) {
-      graft.sources.Sources.writeBucketed(
-        cardinalitySketchRows(df, groupCol, valueExpr, lgK, batchTag),
-        store, "__g", nBuckets = 8,
-        mode = org.apache.spark.sql.SaveMode.Append)
-    }
+    if (shouldAppendTag(spark, store, batchTag, seen))
+      StoreTable.append(
+        cardinalitySketchRows(df, groupCol, valueExpr, lgK, batchTag), store)
   }
 
   private def cardinalitySketchRows(df: DataFrame, groupCol: String,
@@ -1151,7 +1150,7 @@ object Profiling {
       .write.format("parquet")
       .mode(org.apache.spark.sql.SaveMode.Overwrite) // rebuild replaces, like every other store writer
       .saveAsTable(store)
-    Dedup.setStoreParams(df.sparkSession, store,
+    StoreTable.setProps(df.sparkSession, store,
       Map("kind" -> "frequency_cms", "eps" -> eps,
         "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"))
   }
@@ -1164,7 +1163,7 @@ object Profiling {
                             df: DataFrame, valueExpr: Column, eps: Double,
                             confidence: Double, seed: Int,
                             batchTag: Long): Unit = {
-    Dedup.checkStoreParams(spark, store,
+    StoreTable.checkProps(spark, store,
       Map("kind" -> "frequency_cms", "eps" -> eps,
         "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"),
       required = Set("enc"))
@@ -1182,11 +1181,8 @@ object Profiling {
     * applied even though its row no longer exists — the IN-DATA replay
     * guard the accreting appends consult alongside the live tag set. */
   private[operators] def compactedWatermark(spark: SparkSession, store: String): Long =
-    spark.sql(s"SHOW TBLPROPERTIES $store").collect()
-      .collectFirst {
-        case r if r.getString(0) == "graft.compacted_watermark" =>
-          r.getString(1).toLong
-      }.getOrElse(Long.MinValue)
+    StoreTable.props(spark, store).get("compacted_watermark")
+      .fold(Long.MinValue)(_.toLong)
 
   /** Compact an accreting cardinality store IN PLACE: merge every group's
     * batch rows into ONE row. HLL union is max-per-register — associative,
@@ -1195,9 +1191,9 @@ object Profiling {
     * the probe's read cost, from groups×batches sketch rows (365× the
     * groups-sized read after a year of daily batches) back to groups. The
     * missing maintenance verb every other store modality already had
-    * ([[graft.sources.Sources.compactBucketed]] precedent: staging write +
-    * drop→rename swap, crash-repaired by recoverStoreSwap, `graft.*`
-    * properties re-applied).
+    * ([[graft.sources.StoreTable.swapIn]]: staging write under the table's
+    * own bucket spec + drop→rename swap, crash-repaired by
+    * recoverStoreSwap, `graft.*` properties re-applied).
     *
     * Replay contract after compaction: the folded batches' tags survive as
     * the `graft.compacted_watermark` property (= their max) — the appends
@@ -1208,16 +1204,10 @@ object Profiling {
     * every other store maintainer). `n_batches` in the estimates probe
     * counts surviving MERGE UNITS (1 per group after compaction) — the
     * estimates and n_rows are the preserved quantities. */
-  def compactCardinalityStore(spark: SparkSession, store: String,
-                              nBuckets: Int = 8): Unit = {
-    graft.sources.Sources.recoverStoreSwap(spark, store)
-    Dedup.checkStoreParams(spark, store,
+  def compactCardinalityStore(spark: SparkSession, store: String): Unit = {
+    StoreTable.recoverStoreSwap(spark, store)
+    StoreTable.checkProps(spark, store,
       Map("kind" -> "cardinality_hll"), required = Set.empty)
-    val props = spark.sql(s"SHOW TBLPROPERTIES $store").collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft."))
-    val staging = s"${store}__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
     val merged = spark.table(store).groupBy("__g")
       .agg(hll_union_agg(col("__sketch")).as("__sketch"),
         sum("__n").cast(LongType).as("__n"),
@@ -1226,19 +1216,8 @@ object Profiling {
     val watermark = merged.agg(max("__batch")).collect().headOption
       .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
       .getOrElse(Long.MinValue)
-    // one file per bucket: repartition on the bucketed writer's own
-    // bucket-id assignment (the compactBucketed small-files doctrine)
-    graft.sources.Sources.writeBucketed(
-      merged.repartition(nBuckets, pmod(hash(col("__g")), lit(nBuckets))),
-      staging, "__g", nBuckets)
+    StoreTable.swapIn(store, merged, Map("compacted_watermark" -> watermark))
     merged.unpersist()
-    spark.sql(s"DROP TABLE $store")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $store")
-    val newProps = props.toMap +
-      ("graft.compacted_watermark" -> watermark.toString)
-    spark.sql(s"ALTER TABLE $store SET TBLPROPERTIES (" +
-      newProps.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
   }
 
   /** [[compactCardinalityStore]]'s CMS sibling: fold every batch row of an
@@ -1250,12 +1229,9 @@ object Profiling {
     * already does once); the swap/watermark/crash contract matches the
     * cardinality compactor. */
   def compactFrequencyStore(spark: SparkSession, store: String): Unit = {
-    graft.sources.Sources.recoverStoreSwap(spark, store)
-    Dedup.checkStoreParams(spark, store,
+    StoreTable.recoverStoreSwap(spark, store)
+    StoreTable.checkProps(spark, store,
       Map("kind" -> "frequency_cms"), required = Set.empty)
-    val props = spark.sql(s"SHOW TBLPROPERTIES $store").collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft."))
     val rows = spark.table(store).select("__sketch", "__n", "__batch")
       .collect()
     require(rows.nonEmpty, s"compactFrequencyStore: $store is empty")
@@ -1275,16 +1251,7 @@ object Profiling {
           org.apache.spark.sql.types.BinaryType),
         org.apache.spark.sql.types.StructField("__n", LongType),
         org.apache.spark.sql.types.StructField("__batch", LongType))))
-    val staging = s"${store}__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    one.write.format("parquet").saveAsTable(staging)
-    spark.sql(s"DROP TABLE $store")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $store")
-    val newProps = props.toMap +
-      ("graft.compacted_watermark" -> watermark.toString)
-    spark.sql(s"ALTER TABLE $store SET TBLPROPERTIES (" +
-      newProps.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
+    StoreTable.swapIn(store, one, Map("compacted_watermark" -> watermark))
   }
 
   private def frequencySketchRow(df: DataFrame, valueExpr: Column,

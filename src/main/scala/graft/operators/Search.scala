@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.StoreTable
+
 /** [EXT] Inverted-index keyword search over the corpus — the text-retrieval
   * sibling of the embedding ANN stores. At 100 TB a keyword lookup must not
   * scan the corpus: the index persists postings (term, doc_id, tf) BUCKETED
@@ -42,9 +44,9 @@ object Search {
 
   /** persist the inverted index for `df`: `store`_postings (term, doc_id,
     * tf, __batch) bucketed by term, and `store`_terms (term, df, __batch)
-    * — both managed bucketed tables with build metadata (kind + nBuckets,
-    * so appends can match the bucket spec without the caller re-supplying
-    * it). `__batch` tags each row with the append batch that wrote it
+    * — both managed bucketed tables; the postings table carries the build
+    * metadata (kind and the BM25 corpus stats), and appends read the bucket
+    * spec from the catalog ([[graft.sources.StoreTable.append]]). `__batch` tags each row with the append batch that wrote it
     * (−1 for the base build) — the idempotence handle replayed streaming
     * batches key on (see [[appendInvertedIndex]]); readers never select
     * it. */
@@ -66,9 +68,9 @@ object Search {
     // docs, total token count) — two exact longs in table properties, so a
     // probe never scans the corpus (or the full postings) to learn avgdl
     val stats = corpusStats(tokensOf(df, idCol, textCol))
-    Dedup.setStoreParams(df.sparkSession, s"${store}_postings",
-      Map("kind" -> "inverted_index", "nBuckets" -> nBuckets,
-        "docCount" -> stats._1, "totalDl" -> stats._2))
+    StoreTable.setProps(df.sparkSession, s"${store}_postings",
+      Map("kind" -> "inverted_index", "docCount" -> stats._1,
+        "totalDl" -> stats._2))
   }
 
   /** (docCount, total token count) over per-doc token arrays. */
@@ -84,7 +86,7 @@ object Search {
     * shape of the other incremental stores: per-batch bucketed APPENDS
     * (never a rewrite; one file per bucket per batch, collapsed by
     * `Sources.compactBucketed` in the maintenance window). The bucket spec
-    * comes from the store's own build metadata. Contract (same as every
+    * comes from the catalog. Contract (same as every
     * store append here): the batch's doc ids are NEW — re-appending a doc
     * double-counts its term frequencies. The terms table accretes
     * per-batch (term, df) rows; doc-freq readers SUM by term, which is
@@ -116,19 +118,15 @@ object Search {
   def appendInvertedIndex(df: DataFrame, idCol: String, textCol: String,
                           store: String, batchId: Long = -1L): Unit = {
     val spark = df.sparkSession
-    Dedup.checkStoreParams(spark, s"${store}_postings",
+    StoreTable.checkProps(spark, s"${store}_postings",
       Map("kind" -> "inverted_index"))
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${store}_postings").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val nBuckets = props.getOrElse("graft.nBuckets",
-      sys.error(s"$store: no graft.nBuckets property — not an appendable " +
-        "index (rebuilt with writeInvertedIndex to upgrade)")).toInt
+    val props = StoreTable.props(spark, s"${store}_postings")
     val posts = postingsOf(df, idCol, textCol)
     val appended =
-      appendBatchOnce(spark, posts, s"${store}_postings", nBuckets, batchId)
+      appendBatchOnce(spark, posts, s"${store}_postings", batchId)
     appendBatchOnce(spark,
       posts.groupBy("term").agg(count(lit(1)).as("df")),
-      s"${store}_terms", nBuckets, batchId)
+      s"${store}_terms", batchId)
     // roll the BM25 corpus stats forward only when the postings append ran
     // (a replayed batch must not double-count). The property write follows
     // the append commit, so a crash between them leaves stats stale by one
@@ -137,11 +135,11 @@ object Search {
     // later batch adds only its own stats); avgdl drifts by one batch's
     // tokens, which perturbs BM25 scores marginally and never correctness
     // of membership.
-    if (appended) props.get("graft.docCount").foreach { dc =>
+    if (appended) props.get("docCount").foreach { dc =>
       val stats = corpusStats(tokensOf(df, idCol, textCol))
-      Dedup.setStoreParams(spark, s"${store}_postings",
+      StoreTable.setProps(spark, s"${store}_postings",
         Map("docCount" -> (dc.toLong + stats._1),
-          "totalDl" -> (props("graft.totalDl").toLong + stats._2)))
+          "totalDl" -> (props("totalDl").toLong + stats._2)))
     }
   }
 
@@ -150,16 +148,14 @@ object Search {
     * table — the per-table half of [[appendInvertedIndex]]'s idempotence
     * contract. */
   private[graft] def appendBatchOnce(spark: SparkSession, rows: DataFrame,
-                                     table: String, nBuckets: Int,
-                                     batchId: Long): Boolean = {
+                                     table: String, batchId: Long): Boolean = {
     val hasTag = spark.table(table).columns.contains("__batch")
     val committed = hasTag && batchId >= 0 &&
       spark.table(table).filter(col("__batch") === batchId)
         .limit(1).count() > 0
     if (!committed) {
       val out = if (hasTag) rows.withColumn("__batch", lit(batchId)) else rows
-      graft.sources.Sources.writeBucketed(out, table, "term", nBuckets,
-        org.apache.spark.sql.SaveMode.Append)
+      StoreTable.append(out, table)
     }
     !committed
   }
@@ -185,8 +181,8 @@ object Search {
       .agg(sort_array(collect_list(col("pos"))).as("positions"))
     graft.sources.Sources.writeBucketed(posts, s"${store}_pos", "term",
       nBuckets)
-    Dedup.setStoreParams(df.sparkSession, s"${store}_pos",
-      Map("kind" -> "positional_index", "nBuckets" -> nBuckets))
+    StoreTable.setProps(df.sparkSession, s"${store}_pos",
+      Map("kind" -> "positional_index"))
   }
 
   /** exact-PHRASE search against a [[writePositionalIndex]] store: the
@@ -201,7 +197,7 @@ object Search {
   def searchPhrase(spark: SparkSession, store: String, phrase: Seq[String],
                    k: Int): DataFrame = {
     require(phrase.length >= 2, "searchPhrase: need at least a 2-term phrase")
-    Dedup.checkStoreParams(spark, s"${store}_pos",
+    StoreTable.checkProps(spark, s"${store}_pos",
       Map("kind" -> "positional_index"))
     val norm = phrase.map(_.toLowerCase)
     val pos = spark.table(s"${store}_pos")
@@ -230,7 +226,7 @@ object Search {
   def searchAll(spark: SparkSession, store: String, terms: Seq[String],
                 k: Int): DataFrame = {
     require(terms.nonEmpty, "searchAll: empty term list")
-    Dedup.checkStoreParams(spark, s"${store}_postings",
+    StoreTable.checkProps(spark, s"${store}_postings",
       Map("kind" -> "inverted_index"))
     val norm = terms.map(_.toLowerCase).distinct
     spark.table(s"${store}_postings")
@@ -256,7 +252,7 @@ object Search {
                      k: Int, docCount: Long): DataFrame = {
     require(terms.nonEmpty, "searchWeighted: empty term list")
     require(docCount > 0, s"searchWeighted: docCount must be > 0, got $docCount")
-    Dedup.checkStoreParams(spark, s"${store}_postings",
+    StoreTable.checkProps(spark, s"${store}_postings",
       Map("kind" -> "inverted_index"))
     val norm = terms.map(_.toLowerCase).distinct
     val weights = termDocFreq(spark, store)
@@ -296,11 +292,10 @@ object Search {
                         terms: Seq[String], k1: Double,
                         b: Double): DataFrame = {
     require(terms.nonEmpty, "searchBM25: empty term list")
-    Dedup.checkStoreParams(spark, s"${store}_postings",
+    StoreTable.checkProps(spark, s"${store}_postings",
       Map("kind" -> "inverted_index"))
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${store}_postings").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    def stat(name: String) = props.getOrElse(s"graft.$name",
+    val props = StoreTable.props(spark, s"${store}_postings")
+    def stat(name: String) = props.getOrElse(name,
       sys.error(s"$store: no graft.$name property — a pre-BM25 index; " +
         "rebuild with writeInvertedIndex to record corpus stats")).toLong
     val n = stat("docCount")
@@ -423,7 +418,7 @@ object Search {
   def searchAny(spark: SparkSession, store: String, terms: Seq[String],
                 k: Int): DataFrame = {
     require(terms.nonEmpty, "searchAny: empty term list")
-    Dedup.checkStoreParams(spark, s"${store}_postings",
+    StoreTable.checkProps(spark, s"${store}_postings",
       Map("kind" -> "inverted_index"))
     val norm = terms.map(_.toLowerCase).distinct
     spark.table(s"${store}_postings")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.StoreTable
+
 /** [EXT] Similarity search over an embedding column (`array<float>`).
   *
   * Two paths (north star in BASELINE.json):
@@ -319,7 +321,7 @@ object Similarity {
             x => x.cast(ByteType)).as("qvec"),
           col("__scale").as("scale")),
       s"${store}_q", idCol, nBuckets)
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_q",
+    StoreTable.setProps(df.sparkSession, s"${store}_q",
       Map("kind" -> "int8"))
   }
 
@@ -329,7 +331,7 @@ object Similarity {
   def int8TopKAgainstStore(spark: SparkSession, store: String, idCol: String,
                            query: Seq[Double], k: Int,
                            extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_q",
+    StoreTable.checkProps(spark, s"${store}_q",
       Map("kind" -> "int8"))
     val qArr = array(int8QueryInts(query).map(lit): _*)
     val qdot = aggregate(
@@ -876,7 +878,7 @@ object Similarity {
       .select(col(idCol), col(vecCol).as("vec"), col("__cluster"))
       .write.mode(SaveMode.Overwrite).format("parquet")
       .partitionBy("__cluster").saveAsTable(s"${store}_cells")
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_cells",
+    StoreTable.setProps(df.sparkSession, s"${store}_cells",
       Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
         "fingerprint" -> modelFingerprint(model)))
   }
@@ -893,7 +895,7 @@ object Similarity {
     * full rewrite is the offline maintenance event, not the append path. */
   def appendToIvfStore(newBatch: DataFrame, idCol: String, vecCol: String,
                        model: IvfModel, store: String): Unit = {
-    graft.operators.Dedup.checkStoreParams(newBatch.sparkSession,
+    StoreTable.checkProps(newBatch.sparkSession,
       s"${store}_cells",
       Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
         "fingerprint" -> modelFingerprint(model)))
@@ -912,7 +914,7 @@ object Similarity {
                           idCol: String, query: Seq[Double], topK: Int,
                           nprobe: Int = 4,
                           extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_cells",
+    StoreTable.checkProps(spark, s"${store}_cells",
       Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
         "fingerprint" -> modelFingerprint(model)))
     val probes = ivfProbes(model, query, nprobe)
@@ -943,7 +945,7 @@ object Similarity {
       df.select(col(idCol), col(vecCol).as("vec"),
         lshSignature(col(vecCol), dim, nBits, seed).as("sig")),
       s"${store}_sigs", "sig", nBuckets)
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_sigs",
+    StoreTable.setProps(df.sparkSession, s"${store}_sigs",
       Map("dim" -> dim, "nBits" -> nBits, "seed" -> seed))
   }
 
@@ -957,7 +959,7 @@ object Similarity {
                           nBits: Int = 16, seed: Long = 42L,
                           maxFlips: Int = 0,
                           extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_sigs",
+    StoreTable.checkProps(spark, s"${store}_sigs",
       Map("dim" -> dim, "nBits" -> nBits, "seed" -> seed))
     val qSig = signatureOf(query, dim, nBits, seed)
     val probes = probeSignatures(qSig, nBits, maxFlips)
@@ -1223,9 +1225,9 @@ object Similarity {
       df.select(col(idCol), pqCodes(col(vecCol), model).as("codes"))
         .withColumn("__batch", lit(-1L)),
       s"${store}_pq", idCol, nBuckets)
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_pq",
+    StoreTable.setProps(df.sparkSession, s"${store}_pq",
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
-        "enc" -> "bias128", "nBuckets" -> nBuckets))
+        "enc" -> "bias128"))
   }
 
   /** idempotent batched append to a [[writePqStore]] store: encode the
@@ -1242,22 +1244,17 @@ object Similarity {
                     model: PqModel, store: String,
                     batchId: Long = -1L): Boolean = {
     val spark = df.sparkSession
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_pq",
+    StoreTable.checkProps(spark, s"${store}_pq",
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
         "enc" -> "bias128"), required = Set("enc"))
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${store}_pq").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val nBuckets = props.getOrElse("graft.nBuckets",
-      sys.error(s"$store: no graft.nBuckets property — not an appendable " +
-        "PQ store (rebuild with writePqStore to upgrade)")).toInt
     val committed = batchId >= 0 &&
       spark.table(s"${store}_pq").filter(col("__batch") === batchId)
         .limit(1).count() > 0
     if (!committed)
-      graft.sources.Sources.writeBucketed(
+      StoreTable.append(
         df.select(col(idCol), pqCodes(col(vecCol), model).as("codes"))
           .withColumn("__batch", lit(batchId)),
-        s"${store}_pq", idCol, nBuckets, SaveMode.Append)
+        s"${store}_pq")
     !committed
   }
 
@@ -1268,7 +1265,7 @@ object Similarity {
   def pqAdcTopKAgainstStore(spark: SparkSession, store: String, idCol: String,
                             query: Seq[Double], model: PqModel, k: Int,
                             extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_pq",
+    StoreTable.checkProps(spark, s"${store}_pq",
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
         "enc" -> "bias128"), required = Set("enc"))
     val lut = pqLutNanos(model, query)
@@ -1335,7 +1332,7 @@ object Similarity {
         col("__cluster"))
       .write.mode(SaveMode.Overwrite).format("parquet")
       .partitionBy("__cluster").saveAsTable(s"${store}_pqcells")
-    graft.operators.Dedup.setStoreParams(df.sparkSession, s"${store}_pqcells",
+    StoreTable.setProps(df.sparkSession, s"${store}_pqcells",
       Map("kind" -> "ivfpq", "ivfFp" -> modelFingerprint(ivf),
         "pqFp" -> pqFingerprint(pq).toString, "enc" -> "bias128"))
   }
@@ -1353,7 +1350,7 @@ object Similarity {
                 pq: PqModel, idCol: String, query: Seq[Double], k: Int,
                 nprobe: Int = 4,
                 extraFilter: Column = lit(true)): DataFrame = {
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_pqcells",
+    StoreTable.checkProps(spark, s"${store}_pqcells",
       Map("kind" -> "ivfpq", "ivfFp" -> modelFingerprint(ivf),
         "pqFp" -> pqFingerprint(pq).toString, "enc" -> "bias128"),
       required = Set("enc"))

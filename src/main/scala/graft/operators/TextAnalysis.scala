@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.StoreTable
+
 /** [EXT] Text-analysis operators for a training-data pipeline (north star in
   * BASELINE.json): language ID, quality scoring, token counting, document
   * fingerprinting, token frequency. Everything is built from
@@ -517,9 +519,8 @@ object TextAnalysis {
           .withColumn("__batch", lit(-1L)),
         s"${store}_ctx", "t1", nBuckets))
     Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      Dedup.setStoreParams(spark, t,
-        Map("kind" -> "lm_bigram", "nBuckets" -> nBuckets,
-          "enc" -> "lm_v1")))
+      StoreTable.setProps(spark, t,
+        Map("kind" -> "lm_bigram", "enc" -> "lm_v1")))
   }
 
   /** append one ingest batch's pair/context counts (idempotent under
@@ -531,32 +532,28 @@ object TextAnalysis {
   def appendLmCounts(spark: org.apache.spark.sql.SparkSession, store: String,
                      df: DataFrame, textCol: String, batchTag: Long): Unit = {
     Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      Dedup.checkStoreParams(spark, t,
+      StoreTable.checkProps(spark, t,
         Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
         required = Set("enc")))
     val prs = lmPairRows(df, Seq.empty, textCol).localCheckpoint()
-    def appendTo(table: String, agg: DataFrame, bucketCol: String): Unit = {
+    def appendTo(table: String, agg: DataFrame): Unit = {
       val seen = spark.table(table).select("__batch").distinct()
         .collect().map(_.getLong(0)).toSet
       // the compacted-watermark guard (Profiling.shouldAppendTag — logs
       // the restarted-checkpoint trap): after compactLmStore folds the
       // batch rows away, a replayed tag's row no longer exists to dedupe
       // against, so the watermark is what keeps replay ≠ double-count
-      if (Profiling.shouldAppendTag(spark, table, batchTag, seen)) {
-        graft.sources.Sources.writeBucketed(
-          agg.withColumn("__batch", lit(batchTag)),
-          table, bucketCol, Dedup.storedNBuckets(spark, table),
-          org.apache.spark.sql.SaveMode.Append)
-      }
+      if (Profiling.shouldAppendTag(spark, table, batchTag, seen))
+        StoreTable.append(agg.withColumn("__batch", lit(batchTag)), table)
     }
     // each table's tag gate is independent — overlap the two appends
     // (§2.6); the crash contract is unchanged (each table skips the tag it
     // already holds, regardless of which append lands first)
     graft.sources.Sources.writeConcurrently(
       () => appendTo(s"${store}_pairs",
-        prs.groupBy("pair").agg(count(lit(1)).as("cnt")), "pair"),
+        prs.groupBy("pair").agg(count(lit(1)).as("cnt"))),
       () => appendTo(s"${store}_ctx",
-        prs.groupBy("t1").agg(count(lit(1)).as("cnt")), "t1"))
+        prs.groupBy("t1").agg(count(lit(1)).as("cnt"))))
   }
 
   /** Compact an accreting LM store IN PLACE: fold every key's batch rows
@@ -566,8 +563,8 @@ object TextAnalysis {
     * to keys. DISTRIBUTED, unlike the sketch compactors (whose rows are
     * kilobyte sketches): the pairs table is vocabulary-bounded but a
     * vocabulary at web scale is not driver-sized. Crash contract matches
-    * the sketch compactors: staged bucketed rewrite + swap
-    * ([[graft.sources.Sources.recoverStoreSwap]] heals a crash between
+    * the sketch compactors: [[graft.sources.StoreTable.swapIn]]
+    * ([[graft.sources.StoreTable.recoverStoreSwap]] heals a crash between
     * DROP and RENAME), and the folded-away max batch tag persists as
     * `graft.compacted_watermark` so a replayed tag at/below it is a no-op
     * in [[appendLmCounts]] rather than a double count. */
@@ -575,16 +572,10 @@ object TextAnalysis {
                      store: String): Unit = {
     Seq((s"${store}_pairs", "pair"), (s"${store}_ctx", "t1")).foreach {
       case (t, key) =>
-        graft.sources.Sources.recoverStoreSwap(spark, t)
-        Dedup.checkStoreParams(spark, t,
+        StoreTable.recoverStoreSwap(spark, t)
+        StoreTable.checkProps(spark, t,
           Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
           required = Set("enc"))
-        val props = spark.sql(s"SHOW TBLPROPERTIES $t").collect()
-          .map(r => r.getString(0) -> r.getString(1))
-          .filter(_._1.startsWith("graft."))
-        val nBuckets = Dedup.storedNBuckets(spark, t)
-        val staging = s"${t}__compacting"
-        spark.sql(s"DROP TABLE IF EXISTS $staging")
         val merged = spark.table(t).groupBy(col(key))
           .agg(sum("cnt").cast(LongType).as("cnt"),
             max("__batch").cast(LongType).as("__batch"))
@@ -592,18 +583,8 @@ object TextAnalysis {
         val watermark = merged.agg(max("__batch")).collect().headOption
           .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
           .getOrElse(Long.MinValue)
-        // one file per bucket (the compactBucketed small-files doctrine)
-        graft.sources.Sources.writeBucketed(
-          merged.repartition(nBuckets, pmod(hash(col(key)), lit(nBuckets))),
-          staging, key, nBuckets)
+        StoreTable.swapIn(t, merged, Map("compacted_watermark" -> watermark))
         merged.unpersist()
-        spark.sql(s"DROP TABLE $t")
-        spark.sql(s"ALTER TABLE $staging RENAME TO $t")
-        val newProps = props.toMap +
-          ("graft.compacted_watermark" -> watermark.toString)
-        spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES (" +
-          newProps.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
     }
   }
 
@@ -621,7 +602,7 @@ object TextAnalysis {
     require(maxPpl > 1.0, s"lmPerplexityAgainst: maxPpl must be > 1: $maxPpl")
     val spark = df.sparkSession
     Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      Dedup.checkStoreParams(spark, t,
+      StoreTable.checkProps(spark, t,
         Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
         required = Set("enc")))
     val prs = lmPairRows(df, Seq(col(idCol)), textCol).localCheckpoint()

@@ -124,22 +124,6 @@ object Sources {
     } finally pool.shutdown()
   }
 
-  /** compact a bucketed store table in place: every per-batch
-    * `SaveMode.Append` adds one file per bucket per writing task, so a
-    * long-running incremental store (`Dedup.writeMinhashStore` + thousands
-    * of `minhashDedupAgainst(updateStore = true)` batches) accretes
-    * thousands of small files per bucket — the classic small-files problem
-    * that degrades every subsequent scan's open/seek cost at 100 TB.
-    * Compaction rewrites the table through a staging table (same bucket
-    * spec — one shuffle on the bucket column, then one file per bucket per
-    * task) and swaps it in, preserving the `graft.*` build-parameter
-    * properties the dedup probes validate against. Result-equivalence and
-    * the file-count collapse are proven in BucketingSpec.
-    *
-    * The drop→rename swap is two catalog calls, not one atomic operation —
-    * a reader planning in that window errors and retries; run compaction in
-    * the same maintenance window as the batch appends (a catalog with
-    * atomic RENAME ... SWAP semantics removes even that). */
   /** compact a cell-PARTITIONED store table in place — the partitioned
     * sibling of [[compactBucketed]] for stores whose appends accrete one
     * file per partition per writing batch (e.g. the IVF index's
@@ -155,43 +139,28 @@ object Sources {
     * after the overwrite recreates the table. */
   def compactPartitioned(spark: SparkSession, table: String,
                          partitionCol: String): Unit = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft."))
+    val props = StoreTable.props(spark, table)
     val snapshot = spark.table(table)
       .repartition(col(partitionCol)).localCheckpoint()
     snapshot.write.mode(SaveMode.Overwrite).format("parquet")
       .partitionBy(partitionCol).saveAsTable(table)
     snapshot.unpersist()
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-        props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
+    StoreTable.setProps(spark, table, props)
   }
 
-  def compactBucketed(spark: SparkSession, table: String, bucketCol: String,
-                      nBuckets: Int): Unit = {
-    val staging = s"${table}__compacting"
-    recoverStoreSwap(spark, table) // an interrupted predecessor's swap
-    val props = spark.sql(s"SHOW TBLPROPERTIES $table").collect()
-      .map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.startsWith("graft."))
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    // repartition on the BUCKET ID (pmod(murmur3(col), n) — exactly the
-    // bucketed writer's assignment) so every bucket's rows land whole in
-    // one task and the rewrite emits one file per bucket; repartitioning on
-    // the raw column would scatter each bucket across tasks and emit one
-    // file per (task, bucket) pair — small files again
-    import org.apache.spark.sql.functions.{hash, lit, pmod}
-    writeBucketed(
-      spark.table(table)
-        .repartition(nBuckets, pmod(hash(col(bucketCol)), lit(nBuckets))),
-      staging, bucketCol, nBuckets)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-        props.map { case (k, v) => s"'$k' = '$v'" }.mkString(", ") + ")")
-  }
+  /** compact a bucketed store table in place: every per-batch
+    * `SaveMode.Append` adds one file per bucket per writing task, so a
+    * long-running incremental store (`Dedup.writeMinhashStore` + thousands
+    * of `minhashDedupAgainst(updateStore = true)` batches) accretes
+    * thousands of small files per bucket — the classic small-files problem
+    * that degrades every subsequent scan's open/seek cost at 100 TB.
+    * Compaction rewrites the table through [[StoreTable.swapIn]] (the
+    * table's own bucket spec — one shuffle on the bucket id, then one file
+    * per bucket) and preserves the `graft.*` build-parameter properties the
+    * dedup probes validate against. Result-equivalence and the file-count
+    * collapse are proven in BucketingSpec. */
+  def compactBucketed(spark: SparkSession, table: String): Unit =
+    StoreTable.swapIn(table, openStoreTable(spark, table))
 
   /** open a z-ordered parquet directory (written by
     * [[graft.operators.Layout.writeZOrdered]], maintained by
@@ -208,44 +177,6 @@ object Sources {
     spark.read.parquet(path)
   }
 
-  /** recovery for a crash between a store maintainer's DROP and RENAME
-    * ([[compactBucketed]], [[mergeIntoStore]], [[scd2MergeIntoStore]] all
-    * share the two-catalog-call swap): the base table is gone but the
-    * fully-written staging table survives — rename it back. The window is
-    * unambiguous: the DROP only ever runs AFTER the staging write
-    * committed, so "base missing + staging present" can only mean an
-    * interrupted swap, and "base present + staging present" can only mean
-    * a crash BEFORE the drop (the staging is then an uncommitted rewrite a
-    * future maintenance pass discards — recovery correctly leaves the base
-    * alone). Idempotent; returns true iff a restore happened. Called
-    * automatically at the start of every merge/compaction — call directly
-    * (or open via [[openStoreTable]]) on startup when readers may touch
-    * the table before the next maintenance window.
-    *
-    * Caveat shared with the maintainers themselves: `graft.*` build
-    * properties are re-applied by a separate catalog call after the
-    * rename, so a crash inside that last window restores the DATA but not
-    * the properties — the dedup/search stores' build-parameter validation
-    * then fails loudly on the next probe instead of silently serving a
-    * store whose parameters can no longer be verified. */
-  def recoverStoreSwap(spark: SparkSession, table: String): Boolean = {
-    if (spark.catalog.tableExists(table)) false
-    else {
-      val stagings = Seq(s"${table}__merging", s"${table}__compacting")
-        .filter(spark.catalog.tableExists)
-      stagings match {
-        case Seq() => false
-        case Seq(st) =>
-          spark.sql(s"ALTER TABLE $st RENAME TO $table")
-          true
-        case many => throw new IllegalStateException(
-          s"recoverStoreSwap: $table is missing and MULTIPLE staging " +
-            s"tables exist (${many.mkString(", ")}) — ambiguous crash " +
-            "state, manual repair required")
-      }
-    }
-  }
-
   /** open a bucketed store table THROUGH the swap crash-recovery check —
     * the managed-table sibling of [[openZOrdered]]: a crash between a
     * maintainer's DROP and RENAME leaves the table missing from the
@@ -254,7 +185,7 @@ object Sources {
     * were lost. Cost when no crash happened: one catalog existence
     * probe. */
   def openStoreTable(spark: SparkSession, table: String): DataFrame = {
-    recoverStoreSwap(spark, table)
+    StoreTable.recoverStoreSwap(spark, table)
     spark.table(table)
   }
 
@@ -427,23 +358,6 @@ object Sources {
     }
   }
 
-  /** Merge a changeset into a snapshot — the CDC/upsert primitive of an
-    * incrementally-maintained corpus store. `delta` carries the snapshot's
-    * columns plus `opCol` ∈ {"upsert", "delete"}: every delta key's base
-    * row is retired (one anti-join), then the upsert payloads are appended.
-    * An upsert therefore inserts-or-replaces; a delete just retires.
-    *
-    * Contract: `keyCol` is unique within `base` and within `delta` (a
-    * duplicate delta key would insert twice — resolve last-writer-wins
-    * upstream with a sequence column before calling; checking here would
-    * cost an extra full aggregation per merge).
-    *
-    * Scale shape: one anti-join on the key plus a union — no other
-    * shuffle. When base and delta are both bucketed stores on the key
-    * ([[writeBucketed]], same bucket count), the anti-join's exchanges
-    * elide on BOTH sides (proven in SourcesAndUdafSpec) and the merge
-    * reads each bucket pair once; a typical delta is also ≪ base, so the
-    * unbucketed case broadcasts the delta keys. */
   /** IN-PLAN op-domain guard (the containment massGuard precedent,
     * [[graft.operators.Dedup]]'s fail-fast raise_error projection): rides
     * the delta's key projection, so EVERY delta row — upsert, delete, or
@@ -463,6 +377,23 @@ object Sources {
       .filter(col("__op_ok")).select(keyCol)
   }
 
+  /** Merge a changeset into a snapshot — the CDC/upsert primitive of an
+    * incrementally-maintained corpus store. `delta` carries the snapshot's
+    * columns plus `opCol` ∈ {"upsert", "delete"}: every delta key's base
+    * row is retired (one anti-join), then the upsert payloads are appended.
+    * An upsert therefore inserts-or-replaces; a delete just retires.
+    *
+    * Contract: `keyCol` is unique within `base` and within `delta` (a
+    * duplicate delta key would insert twice — resolve last-writer-wins
+    * upstream with a sequence column before calling; checking here would
+    * cost an extra full aggregation per merge).
+    *
+    * Scale shape: one anti-join on the key plus a union — no other
+    * shuffle. When base and delta are both bucketed stores on the key
+    * ([[writeBucketed]], same bucket count), the anti-join's exchanges
+    * elide on BOTH sides (proven in SourcesAndUdafSpec) and the merge
+    * reads each bucket pair once; a typical delta is also ≪ base, so the
+    * unbucketed case broadcasts the delta keys. */
   def mergeSnapshot(base: DataFrame, delta: DataFrame, keyCol: String,
                     opCol: String = "op"): DataFrame =
     base.join(guardedKeys(delta, keyCol, opCol, "mergeSnapshot"),
@@ -470,28 +401,16 @@ object Sources {
       .unionByName(delta.filter(col(opCol) === "upsert").drop(opCol))
 
   /** Apply a changeset to a bucketed store table IN PLACE: read, merge
-    * ([[mergeSnapshot]] — co-bucketed anti-join, no base shuffle), write
-    * the result to a staging table with the same bucket spec, and swap via
-    * the [[compactBucketed]] drop→rename (same caveat: the two catalog
-    * calls are not one atomic operation — run in the maintenance window).
-    * The merged frame is materialized (`localCheckpoint`) before the drop
-    * so the staging write never reads the table being replaced. */
+    * ([[mergeSnapshot]] — co-bucketed anti-join, no base shuffle) and
+    * [[StoreTable.swapIn]] the result (the table's own bucket spec and
+    * `graft.*` properties carry over; the drop→rename caveat applies — run
+    * in the maintenance window). No checkpoint before the staging write:
+    * the write is the merge plan's ONLY consumer and it reads the OLD
+    * table, which stays intact until the swap. */
   def mergeIntoStore(spark: SparkSession, table: String, delta: DataFrame,
-                     keyCol: String, nBuckets: Int,
-                     opCol: String = "op"): Unit = {
-    val staging = s"${table}__merging"
-    recoverStoreSwap(spark, table) // an interrupted predecessor's swap
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    // no checkpoint before the staging write (r22): the write is the merge
-    // plan's ONLY consumer and it reads the OLD table, which stays intact
-    // until the swap below — the pre-r22 localCheckpoint materialized the
-    // merged history twice (once into block storage, once into the staging
-    // files) for no reader
-    writeBucketed(mergeSnapshot(spark.table(table), delta, keyCol, opCol),
-      staging, keyCol, nBuckets)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-  }
+                     keyCol: String, opCol: String = "op"): Unit =
+    StoreTable.swapIn(table,
+      mergeSnapshot(openStoreTable(spark, table), delta, keyCol, opCol))
 
   // ---- SCD2 history store (time travel over the CDC stream) -------------
   //
@@ -550,23 +469,14 @@ object Sources {
       .drop("valid_from", "valid_to")
 
   /** [[scd2Merge]] against a bucketed history table IN PLACE — the same
-    * staging-write + drop→rename swap (and maintenance-window caveat) as
-    * [[mergeIntoStore]]. Bucketing by the key keeps the close-join
-    * exchange-free on the history side and co-locates every key's version
-    * chain in one bucket for as-of reads. */
+    * [[StoreTable.swapIn]] (and maintenance-window caveat) as
+    * [[mergeIntoStore]]; the close-join reads the OLD table in place and
+    * flows straight into the staging write. Bucketing by the key keeps the
+    * close-join exchange-free on the history side and co-locates every
+    * key's version chain in one bucket for as-of reads. */
   def scd2MergeIntoStore(spark: SparkSession, table: String,
                          delta: DataFrame, keyCol: String, batch: Long,
-                         nBuckets: Int, opCol: String = "op"): Unit = {
-    val staging = s"${table}__merging"
-    recoverStoreSwap(spark, table) // an interrupted predecessor's swap
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    // same staging-write-is-the-only-consumer argument as [[mergeIntoStore]]
-    // (r22): the close-join reads the OLD bucketed table in place and the
-    // result flows straight into the staging write — no intermediate
-    // materialization
-    writeBucketed(scd2Merge(spark.table(table), delta, keyCol, batch, opCol),
-      staging, keyCol, nBuckets)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-  }
+                         opCol: String = "op"): Unit =
+    StoreTable.swapIn(table,
+      scd2Merge(openStoreTable(spark, table), delta, keyCol, batch, opCol))
 }

@@ -1,0 +1,174 @@
+package graft.sources
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
+
+/** The store-table core: the one module that reads or writes a store
+  * table's catalog state. Every incremental store (the dedup, search,
+  * similarity, LM and sketch stores, and the merge/compaction maintainers
+  * in [[Sources]]) keeps two things in the catalog:
+  *  - its physical layout — the bucket column and bucket count, fixed at
+  *    build time by [[Sources.writeBucketed]] and read back here from the
+  *    table's own `bucketSpec`, so an append, probe, merge or compaction
+  *    never takes a bucket count from its caller (a wrong one either
+  *    fails Spark's "Specified bucketing does not match" check or, on a
+  *    rewrite, silently re-buckets the store);
+  *  - its build parameters, as `graft.*` table properties ([[setProps]],
+  *    validated by [[checkProps]] on every probe and append).
+  *
+  * The staging swap ([[swapIn]]) is the only rewrite path, and
+  * [[recoverStoreSwap]] heals a crash inside it. Every store obeys append ≡
+  * rebuild, the mergeable-summary contract, so a store's layout and
+  * parameters are all its maintainers need to know. */
+object StoreTable {
+
+  private val Prefix = "graft."
+
+  /** staging suffixes of a swap in flight: both are healed by
+    * [[recoverStoreSwap]] (stores maintained by builds that staged merges
+    * under `__merging` still recover); [[swapIn]] stages under
+    * `__compacting`. */
+  private val Stagings = Seq("__merging", "__compacting")
+
+  private def metadata(spark: SparkSession, table: String): CatalogTable =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+
+  private def graftProps(meta: CatalogTable): Map[String, String] =
+    meta.properties.collect {
+      case (k, v) if k.startsWith(Prefix) => k.stripPrefix(Prefix) -> v
+    }
+
+  /** the table's build parameters: its `graft.*` properties, keyed without
+    * the prefix. */
+  def props(spark: SparkSession, table: String): Map[String, String] =
+    graftProps(metadata(spark, table))
+
+  /** persist build parameters as `graft.<key>` properties, so a probe or
+    * append with mismatched parameters fails loudly at [[checkProps]]
+    * instead of silently missing true duplicates. Every store family shares
+    * the hazard: minhash numHashes/bands (unequal-length sig arrays make
+    * every zip_with element comparison a disagreement), the simhash
+    * `portable` flag (60-bit md5 signatures never equal 64-bit xxhash64
+    * ones), embedding dim/bandBits/bands/seed (different planes → band keys
+    * never collide with the store's). */
+  def setProps(spark: SparkSession, table: String,
+               params: Map[String, Any]): Unit =
+    if (params.nonEmpty)
+      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
+        params.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"'$Prefix$k' = '$v'" }.mkString(", ") + ")")
+
+  /** validate probe parameters against the build parameters persisted by
+    * [[setProps]]. Stores written before the properties existed are
+    * accepted (nothing to check against) — the in-plan signature-width
+    * guard of the minhash probe still backstops that case — EXCEPT for
+    * keys listed in `required`: those mark an on-disk FORMAT version (e.g.
+    * the PQ code stores' `enc=bias128` byte encoding), where a store
+    * predating the property is not merely uncheckable but physically
+    * incompatible — probing it would decode valid-looking-but-wrong
+    * values, the exact silent-corruption class the fingerprints exist to
+    * prevent. A missing required key fails loudly with rebuild advice. */
+  def checkProps(spark: SparkSession, table: String,
+                 params: Map[String, Any],
+                 required: Set[String] = Set.empty): Unit = {
+    val stored = props(spark, table)
+    params.foreach { case (k, v) =>
+      if (required(k)) require(stored.contains(k),
+        s"$table has no graft.$k property — it was written by a build whose " +
+          s"on-disk format predates $k=$v; decoding it under the current " +
+          "format would return silently wrong values. Rebuild the store " +
+          "with its write* entry point")
+      stored.get(k).foreach(s => require(s == v.toString,
+        s"$table was built with $k=$s but the probe passed $k=$v — " +
+          "mismatched parameters silently miss true duplicates (signatures " +
+          "or band keys can never match); probe with the store's parameters"))
+    }
+  }
+
+  /** (bucket column, bucket count) as the catalog recorded them when the
+    * table was built. Fails by name on a table that is not bucketed on
+    * exactly one column — such a table is not a store table, and guessing
+    * a layout for it would break the no-shuffle probe contract. */
+  def bucketSpec(spark: SparkSession, table: String): (String, Int) =
+    metadata(spark, table).bucketSpec match {
+      case Some(b) if b.bucketColumnNames.length == 1 =>
+        (b.bucketColumnNames.head, b.numBuckets)
+      case other => throw new IllegalArgumentException(
+        s"$table is not a store table: its bucket spec is " +
+          other.fold("none")(b => s"${b.numBuckets} buckets on " +
+            b.bucketColumnNames.mkString("(", ", ", ")")) +
+          ", and a store table is bucketed on one column. Rebuild it with " +
+          "its write* entry point")
+    }
+
+  /** append `df` to a store table under the table's own bucket spec — new
+    * bucket files, never a rewrite of history. */
+  def append(df: DataFrame, table: String): Unit = {
+    val (bucketCol, nBuckets) = bucketSpec(df.sparkSession, table)
+    Sources.writeBucketed(df, table, bucketCol, nBuckets, SaveMode.Append)
+  }
+
+  /** replace `table`'s contents with `rewritten` in place: write a staging
+    * table with the same layout (bucketed on the table's own spec — one
+    * file per bucket, since [[Sources.writeBucketed]] repartitions on the
+    * bucket id — or plain parquet when the table is unbucketed), DROP the
+    * table, RENAME the staging table to it, and re-apply its `graft.*`
+    * properties plus `extraProps`. `rewritten` may read the table itself:
+    * the staging write is its only consumer and completes before the drop.
+    * Stale staging tables are uncommitted rewrites (the table exists, so
+    * no swap is pending) and are dropped first.
+    *
+    * The drop→rename swap is two catalog calls, not one atomic operation:
+    * a reader planning in that window errors and retries, so run it in
+    * the maintenance window of the store's appends (a catalog with atomic
+    * RENAME ... SWAP semantics removes even that). A crash between the two
+    * calls is healed by [[recoverStoreSwap]]. */
+  def swapIn(table: String, rewritten: DataFrame,
+             extraProps: Map[String, Any] = Map.empty): Unit = {
+    val spark = rewritten.sparkSession
+    recoverStoreSwap(spark, table)
+    val meta = metadata(spark, table)
+    val staging = s"${table}__compacting"
+    Stagings.foreach(s => spark.sql(s"DROP TABLE IF EXISTS $table$s"))
+    meta.bucketSpec match {
+      case Some(b) => Sources.writeBucketed(rewritten, staging,
+        b.bucketColumnNames.head, b.numBuckets)
+      case None => rewritten.write.format("parquet").saveAsTable(staging)
+    }
+    spark.sql(s"DROP TABLE $table")
+    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
+    setProps(spark, table, graftProps(meta) ++ extraProps)
+  }
+
+  /** recovery for a crash between [[swapIn]]'s DROP and RENAME: the table
+    * is gone but the fully-written staging table survives — rename it
+    * back. The window is unambiguous: the DROP only ever runs AFTER the
+    * staging write committed, so "table missing + staging present" can
+    * only mean an interrupted swap, and "table present + staging present"
+    * can only mean a crash BEFORE the drop (the staging is then an
+    * uncommitted rewrite the next swap discards — recovery correctly
+    * leaves the table alone). Idempotent; returns true iff a restore
+    * happened. [[swapIn]] calls it first — call it directly (or open via
+    * [[Sources.openStoreTable]]) on startup when readers may touch the
+    * table before the next maintenance window.
+    *
+    * Caveat: `graft.*` build properties are re-applied by a separate
+    * catalog call after the rename, so a crash inside that last window
+    * restores the DATA but not the properties — the stores' build-
+    * parameter validation then fails loudly on the next probe that
+    * requires a format property instead of silently serving a store whose
+    * parameters can no longer be verified. */
+  def recoverStoreSwap(spark: SparkSession, table: String): Boolean =
+    if (spark.catalog.tableExists(table)) false
+    else Stagings.map(s => s"$table$s").filter(spark.catalog.tableExists) match {
+      case Seq() => false
+      case Seq(st) =>
+        spark.sql(s"ALTER TABLE $st RENAME TO $table")
+        true
+      case many => throw new IllegalStateException(
+        s"recoverStoreSwap: $table is missing and MULTIPLE staging " +
+          s"tables exist (${many.mkString(", ")}) — ambiguous crash " +
+          "state, manual repair required")
+    }
+}

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
+import graft.sources.StoreTable
+
 /** [EXT] Structured Streaming surface over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props). The reference has no
   * streaming at all (SURVEY.md §2.9) — this is the Spark-native extension:
@@ -230,7 +232,7 @@ object Streams {
                                           seed: Long = 42L,
                                           delay: String = "10 minutes"): DataFrame = {
     val spark = vecs.sparkSession
-    graft.operators.Dedup.checkStoreParams(spark, s"${store}_bands",
+    StoreTable.checkProps(spark, s"${store}_bands",
       Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
         "seed" -> seed))
     val sig = (c: Column) =>
@@ -509,8 +511,7 @@ object Streams {
   def runStoreIngestOnce(spark: SparkSession, inDir: String, outDir: String,
                          checkpointDir: String, store: String,
                          textCol: String = "text", tsCol: String = "ts",
-                         delay: String = "10 minutes",
-                         nBuckets: Int = 4): Unit = {
+                         delay: String = "10 minutes"): Unit = {
     val schema = spark.read.parquet(inDir).schema
     // appends may have come from a previous run's foreachBatch session (or
     // another process entirely): refresh the cached file listing before the
@@ -532,11 +533,10 @@ object Streams {
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("__batch").parquet(outDir)
-            graft.sources.Sources.writeBucketed(
+            StoreTable.append(
               b.select(graft.operators.TextAnalysis.fingerprint(col(textCol)).as("fp"))
                 .distinct(),
-              s"${store}_fps", "fp", nBuckets,
-              org.apache.spark.sql.SaveMode.Append)
+              s"${store}_fps")
             fs.mkdirs(markers)
             fs.createNewFile(marker)
             // make the appended bucket files visible to every session's
@@ -623,7 +623,8 @@ object Streams {
   }
 
   /** one pass of streaming IMAGE ingest against the perceptual-hash store
-    * ([[graft.operators.Dedup.writeImageHashStore]]) — the image member of
+    * ([[graft.operators.Dedup.writeWideHashStore]] at kind `image_dhash`)
+    * — the image member of
     * the streaming store-twin family (engine + crash-safety contract:
     * [[runMediaIngestOnce]]). */
   def runImageIngestOnce(spark: SparkSession, inDir: String, outDir: String,
@@ -632,13 +633,14 @@ object Streams {
     runMediaIngestOnce(spark, inDir, outDir, checkpointDir, store,
       "img_commits", "media_id",
       b => graft.operators.Multimodal.imageDHashWide(b),
-      h => graft.operators.Dedup.imageDedupAgainst(
-        h, "media_id", store, maxHamming, updateStore = false),
+      h => graft.operators.Dedup.wideHashDedupAgainst(
+        h, "media_id", store, "image_dhash", maxHamming, updateStore = false),
       h => graft.operators.Dedup.appendWideHashes(
         h, "media_id", store, "image_dhash", maxHamming))
 
   /** one pass of streaming AUDIO ingest against the energy-envelope hash
-    * store ([[graft.operators.Dedup.writeAudioHashStore]]) — the audio
+    * store ([[graft.operators.Dedup.writeWideHashStore]] at kind
+    * `audio_ehash`) — the audio
     * member of the streaming store-twin family (engine + crash-safety
     * contract: [[runMediaIngestOnce]]). */
   def runAudioIngestOnce(spark: SparkSession, inDir: String, outDir: String,
@@ -647,8 +649,8 @@ object Streams {
     runMediaIngestOnce(spark, inDir, outDir, checkpointDir, store,
       "aud_commits", "media_id",
       b => graft.operators.Multimodal.audioEnergyHashWide(b),
-      h => graft.operators.Dedup.audioDedupAgainst(
-        h, "media_id", store, maxHamming, updateStore = false),
+      h => graft.operators.Dedup.wideHashDedupAgainst(
+        h, "media_id", store, "audio_ehash", maxHamming, updateStore = false),
       h => graft.operators.Dedup.appendWideHashes(
         h, "media_id", store, "audio_ehash", maxHamming))
 
@@ -781,7 +783,7 @@ object Streams {
     * trace, and re-merging nothing is a no-op). The commit markers remain
     * as the fast path and live under the checkpoint dir so they recover
     * or reset together with the batchId sequence; the interrupted-swap
-    * repair ([[graft.sources.Sources.recoverStoreSwap]]) runs inside
+    * repair ([[graft.sources.StoreTable.recoverStoreSwap]]) runs inside
     * scd2MergeIntoStore itself.
     *
     * Contract (same as the search index's batchId keying): the guard
@@ -793,10 +795,9 @@ object Streams {
     * error, as in any CDC system. */
   def runScd2IngestOnce(spark: SparkSession, inDir: String,
                         checkpointDir: String, table: String,
-                        keyCol: String, opCol: String = "op",
-                        nBuckets: Int = 4): Unit = {
+                        keyCol: String, opCol: String = "op"): Unit = {
     val schema = spark.read.parquet(inDir).schema
-    graft.sources.Sources.recoverStoreSwap(spark, table)
+    StoreTable.recoverStoreSwap(spark, table)
     spark.catalog.refreshTable(table)
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "scd2_commits")
     val q = spark.readStream.schema(schema).parquet(inDir)
@@ -812,7 +813,7 @@ object Streams {
             .take(1).nonEmpty
           if (!applied)
             graft.sources.Sources.scd2MergeIntoStore(
-              s, table, batch.toDF(), keyCol, b, nBuckets, opCol)
+              s, table, batch.toDF(), keyCol, b, opCol)
           fs.mkdirs(markers)
           fs.createNewFile(marker)
           s.catalog.refreshTable(table)
@@ -881,8 +882,7 @@ object Streams {
                        checkpointDir: String, store: String,
                        reportDir: String,
                        idCol: String = "doc_id",
-                       bytesCol: String = "blob",
-                       nBuckets: Int = 8): Unit = {
+                       bytesCol: String = "blob"): Unit = {
     val schema = spark.read.parquet(inDir).schema
     spark.catalog.refreshTable(s"${store}_chunks")
     val markers = new org.apache.hadoop.fs.Path(checkpointDir, "cdc_commits")
@@ -894,8 +894,7 @@ object Streams {
         val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
         if (!fs.exists(marker)) {
           graft.operators.Dedup.cdcDedupAgainst(batch.toDF(), idCol, bytesCol,
-              store, updateStore = true, nBuckets = nBuckets,
-              batchId = batchId)
+              store, updateStore = true, batchId = batchId)
             .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
           fs.mkdirs(markers)
           fs.createNewFile(marker)

@@ -62,7 +62,7 @@ class BucketingSpec extends AnyFunSuite {
         "doc_id", "graft_incr_test", bands = 8, numHashes = 32, nBuckets = 4)
       val survivors = Dedup.minhashDedupAgainst(newBatch, "doc_id", "text",
           "graft_incr_test", threshold = 0.8, numHashes = 32, bands = 8,
-          updateStore = true, nBuckets = 4)
+          updateStore = true)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(survivors == (41L to 50L))
       // the survivors' signatures were APPENDED: a third batch duplicating a
@@ -71,7 +71,7 @@ class BucketingSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       val kept3 = Dedup.minhashDedupAgainst(third, "doc_id", "text",
           "graft_incr_test", threshold = 0.8, numHashes = 32, bands = 8,
-          updateStore = false, nBuckets = 4)
+          updateStore = false)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept3 == Seq(61L))
       // store tables grew by exactly the 10 batch-2 survivors
@@ -90,7 +90,7 @@ class BucketingSpec extends AnyFunSuite {
       Dedup.writeFingerprintStore(existing, "text", "graft_fp_test",
         nBuckets = 2)
       val kept = Dedup.exactDedupAgainst(newBatch, "text", "graft_fp_test",
-          updateStore = true, nBuckets = 2)
+          updateStore = true)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(kept == Seq(3L, 5L))
       // a third batch duplicating batch-2 survivor 3 drops against the
@@ -98,7 +98,7 @@ class BucketingSpec extends AnyFunSuite {
       val third = Seq((6L, "ETA theta iota?"), (7L, "nu xi omicron"))
         .toDF("doc_id", "text")
       val kept3 = Dedup.exactDedupAgainst(third, "text", "graft_fp_test",
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept3 == Seq(7L))
       // 2 seed + 2 appended survivor fingerprints
@@ -117,7 +117,7 @@ class BucketingSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
         val surv = Dedup.exactDedupAgainst(newBatch, "text", "graft_fp_test",
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         surv.collect()
         val plan = surv.queryExecution.executedPlan.toString
           .split("== Initial Plan ==").head
@@ -140,21 +140,21 @@ class BucketingSpec extends AnyFunSuite {
       Dedup.writeSimhashStore(existing, "doc_id", "text", "graft_sh_test",
         nBuckets = 2)
       val kept = Dedup.simhashDedupAgainst(newBatch, "doc_id", "text",
-          "graft_sh_test", updateStore = true, nBuckets = 2)
+          "graft_sh_test", updateStore = true)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept == Seq(4L)) // the reordering is caught
       // the EXACT fingerprint store would have kept the reordered doc —
       // that is the gap this store member exists to close
       Dedup.writeFingerprintStore(existing, "text", "graft_sh_fp", nBuckets = 2)
       val fpKept = Dedup.exactDedupAgainst(newBatch, "text", "graft_sh_fp",
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("doc_id").as[Long].collect().sorted.toSeq
       assert(fpKept == Seq(3L, 4L))
       // survivor signature appended: a copy of doc 4 now drops
       val third = Seq((5L, "iota theta"), (6L, "kappa lambda"))
         .toDF("doc_id", "text")
       val kept3 = Dedup.simhashDedupAgainst(third, "doc_id", "text",
-          "graft_sh_test", updateStore = false, nBuckets = 2)
+          "graft_sh_test", updateStore = false)
         .select("doc_id").as[Long].collect().toSeq
       assert(kept3 == Seq(6L))
     } finally {
@@ -175,14 +175,14 @@ class BucketingSpec extends AnyFunSuite {
         "graft_emb_test", dim = 8, bandBits = 4, bands = 2, nBuckets = 2)
       val kept = Dedup.embeddingNearDupAgainst(newBatch, "vec_id", "embedding",
           "graft_emb_test", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = true, nBuckets = 2)
+          updateStore = true)
         .select("vec_id").as[Long].collect().toSeq
       assert(kept == Seq(7L))
       // survivor 7's vector+bands were appended: its copy now drops
       val third = Seq((9L, unit(2)), (11L, unit(3))).toDF("vec_id", "embedding")
       val kept3 = Dedup.embeddingNearDupAgainst(third, "vec_id", "embedding",
           "graft_emb_test", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("vec_id").as[Long].collect().toSeq
       assert(kept3 == Seq(11L))
       assert(spark.table("graft_emb_test_vecs").count() == 3L)
@@ -212,7 +212,7 @@ class BucketingSpec extends AnyFunSuite {
       val newBatch = Seq((5L, unit(0)), (7L, unit(2))).toDF("vec_id", "embedding")
       val kept = Dedup.embeddingNearDupAgainst(newBatch, "vec_id", "embedding",
           "graft_emb_old", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = true, nBuckets = 2) // append must NOT throw
+          updateStore = true) // append must NOT throw
         .select("vec_id").as[Long].collect().toSeq
       assert(kept == Seq(7L))
       // store grew by the survivor, still 2 columns (existing schema wins)
@@ -223,7 +223,7 @@ class BucketingSpec extends AnyFunSuite {
       val third = Seq((9L, unit(2))).toDF("vec_id", "embedding")
       val kept3 = Dedup.embeddingNearDupAgainst(third, "vec_id", "embedding",
           "graft_emb_old", threshold = 0.9, dim = 8, bandBits = 4, bands = 2,
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .select("vec_id").as[Long].collect().toSeq
       assert(kept3 == Seq())
     } finally {
@@ -260,7 +260,7 @@ class BucketingSpec extends AnyFunSuite {
         .as[(Long, String)].collect()
         .collect { case (i, f) if !fpEx.contains(f) => i }.toSet
       assert(ids(Dedup.exactDedupAgainst(nwDf, "text", "graft_prop_fp",
-        updateStore = false, nBuckets = 2)) == wantExact)
+        updateStore = false)) == wantExact)
       assert(ids(Dedup.exactDedupAgainstBloom(nwDf, "text", "graft_prop_fp",
         expectedItems = 64L, numBits = 1L << 12)) == wantExact)
       assert(wantExact.size < newRows.size) // the plants actually dropped
@@ -273,7 +273,7 @@ class BucketingSpec extends AnyFunSuite {
         .as[(Long, Long)].collect()
         .collect { case (i, s) if !shEx.contains(s) => i }.toSet
       assert(ids(Dedup.simhashDedupAgainst(nwDf, "doc_id", "text",
-        "graft_prop_sh", updateStore = false, nBuckets = 2)) == wantSh)
+        "graft_prop_sh", updateStore = false)) == wantSh)
       assert(wantSh.subsetOf(wantExact)) // simhash reach ⊇ exact reach
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_prop_fp_fps")
@@ -324,8 +324,8 @@ class BucketingSpec extends AnyFunSuite {
       val hashes = Multimodal.audioEnergyHashWide(
         Multimodal.encodeSyntheticWavGroups((0L to 199L).toDF("doc_id"),
           "doc_id"))
-      Dedup.writeAudioHashStore(hashes, "media_id", "graft_shuf_au",
-        maxHamming = 6, nBuckets = 4)
+      Dedup.writeWideHashStore(hashes, "media_id", "graft_shuf_au",
+        "audio_ehash", maxHamming = 6, nBuckets = 4)
       val probeSigs = Multimodal.audioEnergyHashWide(
           Multimodal.encodeSyntheticWavGroups((300L to 359L).toDF("doc_id"),
             "doc_id"))
@@ -428,7 +428,7 @@ class BucketingSpec extends AnyFunSuite {
       }
       val filesBefore = fileCount
       assert(filesBefore > 2, s"append pattern should accrete files, got $filesBefore")
-      Sources.compactBucketed(spark, "graft_compact_fps", "fp", 2)
+      Sources.compactBucketed(spark, "graft_compact_fps")
       // identical contents, one file per bucket, properties preserved
       val after = spark.table("graft_compact_fps").collect().map(_.getString(0)).sorted
       assert(after.toSeq == before.toSeq)
@@ -471,7 +471,7 @@ class BucketingSpec extends AnyFunSuite {
       spark.sql(s"SHOW TBLPROPERTIES $t").collect()
         .map(r => r.getString(0) -> r.getString(1))
         .filter(_._1.startsWith("graft.")).toMap }
-    tables.foreach { case (t, c) => Sources.compactBucketed(spark, t, c, nBuckets) }
+    tables.foreach { case (t, _) => Sources.compactBucketed(spark, t) }
     tables.zipWithIndex.foreach { case ((t, _), i) =>
       assert(tableSnapshot(t) == before(i), s"$t: contents changed")
       assert(tableFileCount(t) == nBuckets,
@@ -494,7 +494,7 @@ class BucketingSpec extends AnyFunSuite {
         Seq(("graft_cmp_mh_sigs", "doc_id"), ("graft_cmp_mh_bands", "band_hash")), 2) {
         b => Dedup.minhashDedupAgainst(docs(100L * b, 100L * b + 9, s"b$b"),
           "doc_id", "text", "graft_cmp_mh", threshold = 0.8,
-          numHashes = 32, bands = 8, updateStore = true, nBuckets = 2).count()
+          numHashes = 32, bands = 8, updateStore = true).count()
       } {
         // probe path unchanged: copies of a seed doc AND of an appended
         // batch doc drop; a fresh doc passes
@@ -502,7 +502,7 @@ class BucketingSpec extends AnyFunSuite {
           (9003L, mkText(77, "z"))).toDF("doc_id", "text")
         val kept = Dedup.minhashDedupAgainst(probe, "doc_id", "text",
             "graft_cmp_mh", threshold = 0.8, numHashes = 32, bands = 8,
-            updateStore = false, nBuckets = 2)
+            updateStore = false)
           .select("doc_id").as[Long].collect().toSeq
         assert(kept == Seq(9003L), s"probe after compaction kept $kept")
       }
@@ -517,13 +517,12 @@ class BucketingSpec extends AnyFunSuite {
         "graft_cmp_sh", nBuckets = 2)
       compactionParity(Seq(("graft_cmp_sh_sigs", "sig")), 2) {
         b => Dedup.simhashDedupAgainst(docs(100L * b, 100L * b + 9, s"b$b"),
-          "doc_id", "text", "graft_cmp_sh", updateStore = true,
-          nBuckets = 2).count()
+          "doc_id", "text", "graft_cmp_sh", updateStore = true).count()
       } {
         val probe = Seq((9001L, mkText(3, "e")), (9002L, mkText(105, "b1")),
           (9003L, mkText(77, "z"))).toDF("doc_id", "text")
         val kept = Dedup.simhashDedupAgainst(probe, "doc_id", "text",
-            "graft_cmp_sh", updateStore = false, nBuckets = 2)
+            "graft_cmp_sh", updateStore = false)
           .select("doc_id").as[Long].collect().toSeq
         assert(kept == Seq(9003L), s"probe after compaction kept $kept")
       }
@@ -549,7 +548,7 @@ class BucketingSpec extends AnyFunSuite {
         "graft_cmp_cdc", nBuckets = 2)
       compactionParity(Seq(("graft_cmp_cdc_chunks", "chunk_hash")), 2) {
         b => Dedup.cdcDedupAgainst(blobs(100L * b, 100L * b + 4), "doc_id",
-          "blob", "graft_cmp_cdc", updateStore = true, nBuckets = 2,
+          "blob", "graft_cmp_cdc", updateStore = true,
           batchId = b.toLong).count()
       } {
         // probe path unchanged after compaction: a stored seed blob and an
@@ -558,7 +557,7 @@ class BucketingSpec extends AnyFunSuite {
           (9002L, mkBytes(2000, 102L)), (9003L, mkBytes(2000, 777L)))
           .toDF("doc_id", "blob")
         val r = Dedup.cdcDedupAgainst(probe, "doc_id", "blob",
-            "graft_cmp_cdc", updateStore = false, nBuckets = 2)
+            "graft_cmp_cdc", updateStore = false)
           .collect().map(x => x.getLong(0) -> ((x.getLong(3), x.getLong(4))))
           .toMap
         assert(r(9001L)._1 == 0L && r(9002L)._1 == 0L,
@@ -585,8 +584,7 @@ class BucketingSpec extends AnyFunSuite {
         Seq(("graft_cmp_em_bands", "__bs"), ("graft_cmp_em_vecs", "vec_id")), 2) {
         b => Dedup.embeddingNearDupAgainst(emb(100L * b, 100L * b + 9),
           "vec_id", "embedding", "graft_cmp_em", threshold = 0.999,
-          dim = 8, bandBits = 4, bands = 4, updateStore = true,
-          nBuckets = 2).count()
+          dim = 8, bandBits = 4, bands = 4, updateStore = true).count()
       } {
         // cosine-1.0 re-keys of a seed vector and an appended vector drop;
         // a fresh vector passes
@@ -595,7 +593,7 @@ class BucketingSpec extends AnyFunSuite {
           .toDF("vec_id", "embedding")
         val kept = Dedup.embeddingNearDupAgainst(probe, "vec_id", "embedding",
             "graft_cmp_em", threshold = 0.999, dim = 8, bandBits = 4,
-            bands = 4, updateStore = false, nBuckets = 2)
+            bands = 4, updateStore = false)
           .select("vec_id").as[Long].collect().toSeq
         assert(kept == Seq(9003L), s"probe after compaction kept $kept")
       }
@@ -610,11 +608,11 @@ class BucketingSpec extends AnyFunSuite {
     def hashes(ids: Seq[Long]) = Multimodal.audioEnergyHashWide(
       Multimodal.encodeSyntheticWavGroups(ids.toDF("doc_id"), "doc_id"))
     try {
-      Dedup.writeAudioHashStore(hashes(0L to 39L), "media_id",
-        "graft_cmp_au", maxHamming = 6, nBuckets = 2)
+      Dedup.writeWideHashStore(hashes(0L to 39L), "media_id",
+        "graft_cmp_au", "audio_ehash", maxHamming = 6, nBuckets = 2)
       compactionParity(Seq(("graft_cmp_au_bands", "__bk")), 2) {
-        b => Dedup.audioDedupAgainst(hashes(100L * b to 100L * b + 9),
-          "media_id", "graft_cmp_au", maxHamming = 6,
+        b => Dedup.wideHashDedupAgainst(hashes(100L * b to 100L * b + 9),
+          "media_id", "graft_cmp_au", "audio_ehash", maxHamming = 6,
           updateStore = true).count()
       } {
         // group-mates of a seed clip and of an appended clip drop
@@ -632,8 +630,8 @@ class BucketingSpec extends AnyFunSuite {
             java.lang.Long.bitCount(a._3 ^ b._3)
         val expected = probe
           .filter(p => !stored.exists(s => ham(p, s) <= 6)).map(_._1).toSet
-        val kept = Dedup.audioDedupAgainst(hashes(probeIds), "media_id",
-            "graft_cmp_au", maxHamming = 6, updateStore = false)
+        val kept = Dedup.wideHashDedupAgainst(hashes(probeIds), "media_id",
+            "graft_cmp_au", "audio_ehash", maxHamming = 6, updateStore = false)
           .select("media_id").as[Long].collect().toSet
         assert(kept == expected, s"probe after compaction kept $kept != $expected")
         assert(expected == Set(777779L), s"fixture drift: $expected")
@@ -663,6 +661,243 @@ class BucketingSpec extends AnyFunSuite {
         assert(kept == Set(777779L), s"probe after compaction kept $kept")
       }
     } finally spark.sql("DROP TABLE IF EXISTS graft_cmp_vi_bands")
+  }
+
+  // ---- the store contract, table-driven: every store kind is built at a
+  // non-default bucket count, then probed, appended and compacted WITHOUT
+  // being told its layout (the catalog's bucket spec is the only source),
+  // and the result must equal a one-shot rebuild (append ≡ rebuild) ----
+
+  /** one store kind of the round trip: `build(store, both)` builds from
+    * batch 1 (or batches 1 + 2, the rebuild) at [[RtBuckets]] buckets;
+    * `append` adds batch 2 through the kind's own append path; `view` is
+    * the kind's observable state (table contents without batch tags, plus
+    * a probe's answer); `compact` defaults to [[Sources.compactBucketed]]
+    * on every table. */
+  private case class StoreKind(name: String, tables: Seq[String],
+                               build: (String, Boolean) => Unit,
+                               append: String => Unit,
+                               view: String => Seq[String],
+                               compact: Option[String => Unit] = None)
+
+  private val RtBuckets = 3
+
+  private def rows(table: String): Seq[String] = {
+    val t = spark.table(table).drop("__batch")
+    // binary cells (PQ codes) print as identity hashes: compare them as hex
+    t.select(t.schema.fields.map(f =>
+        if (f.dataType == org.apache.spark.sql.types.BinaryType)
+          org.apache.spark.sql.functions.hex(col(f.name)).as(f.name)
+        else col(f.name)).toIndexedSeq: _*)
+      .distinct().collect().map(_.toString).sorted.toSeq
+  }
+
+  private def storeKinds: Seq[StoreKind] = {
+    import graft.operators.{Multimodal, Profiling, Search, Similarity, TextAnalysis}
+    import org.apache.spark.sql.DataFrame
+    def docs(lo: Long, hi: Long, p: String) =
+      (lo to hi).map(i => (i, mkText(i.toInt, p))).toDF("doc_id", "text")
+    val d1 = docs(1, 30, "e")
+    val d2 = docs(101, 115, "n")
+    val dProbe = docs(1, 5, "e").union(docs(101, 105, "n"))
+      .union(docs(901, 905, "z"))
+      .select((col("doc_id") + 10000L).as("doc_id"), col("text"))
+    def ids(df: DataFrame, c: String): Seq[String] =
+      df.select(c).collect().map(_.get(0).toString).sorted.toSeq
+    def vec(i: Long): Seq[Float] = {
+      val r = new scala.util.Random(i)
+      Seq.fill(8)(r.nextGaussian().toFloat)
+    }
+    def emb(lo: Long, hi: Long) =
+      (lo to hi).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+    val e1 = emb(1, 30)
+    val e2 = emb(101, 115)
+    val eProbe = Seq(3L, 104L, 9001L).map(i => (i + 10000L, vec(i)))
+      .toDF("vec_id", "embedding")
+    def media(enc: (DataFrame, String) => DataFrame,
+              hash: DataFrame => DataFrame)(ids: Seq[Long]) =
+      hash(enc(ids.toDF("doc_id"), "doc_id")).localCheckpoint()
+    val image = media(Multimodal.encodeSyntheticPngGroups,
+      Multimodal.imageDHashWide) _
+    val audio = media(Multimodal.encodeSyntheticWavGroups,
+      Multimodal.audioEnergyHashWide) _
+    val video = media(Multimodal.encodeSyntheticAviGroups,
+      Multimodal.videoDHashWide(_)) _
+    val (m1, m2, mProbe) = (0L to 15L, 400L to 407L, Seq(2L, 402L, 777779L))
+    def wideHash(kind: String, h: Seq[Long] => DataFrame) = {
+      val (h1, h2, hp) = (h(m1), h(m2), h(mProbe))
+      StoreKind(s"wide-hash $kind", Seq("_bands"),
+        (st, both) => Dedup.writeWideHashStore(
+          if (both) h1.union(h2) else h1, "media_id", st, kind,
+          nBuckets = RtBuckets),
+        st => Dedup.wideHashDedupAgainst(h2, "media_id", st, kind).count(),
+        st => rows(s"${st}_bands") ++ ids(Dedup.wideHashDedupAgainst(hp,
+          "media_id", st, kind, updateStore = false), "media_id"))
+    }
+    def mkBytes(n: Int, seed: Long): Array[Byte] = {
+      var x = seed
+      Array.fill(n) { x = x * 6364136223846793005L + 1442695040888963407L
+        (x >>> 33).toByte }
+    }
+    def blobs(ids: Seq[Long]) = ids.map(i => (i, mkBytes(600, i)))
+      .toDF("doc_id", "blob")
+    val (c1, c2, cProbe) = (blobs(1L to 6L), blobs(101L to 104L),
+      blobs(Seq(3L, 102L, 9001L)))
+    val pqModel = Similarity.pqFit(e1.orderBy("vec_id"), "embedding",
+      m = 2, ksub = 4)
+    val cards1 = (1 to 90).map(i => (s"g${i % 3}", s"v${i % 23}")).toDF("g", "v")
+    val cards2 = (1 to 60).map(i => (s"g${i % 3}", s"w${i % 17}")).toDF("g", "v")
+    def minhash(portable: Boolean) = StoreKind(
+      s"minhash portable=$portable", Seq("_sigs", "_bands"),
+      (st, both) => Dedup.writeMinhashStore(
+        Dedup.minhashSigs(if (both) d1.union(d2) else d1, "doc_id", "text",
+          numHashes = 32, portable = portable),
+        "doc_id", st, bands = 8, numHashes = 32, nBuckets = RtBuckets,
+        portable = portable),
+      st => Dedup.minhashDedupAgainst(d2, "doc_id", "text", st,
+        numHashes = 32, bands = 8, portable = portable).count(),
+      st => rows(s"${st}_sigs") ++ rows(s"${st}_bands") ++
+        ids(Dedup.minhashDedupAgainst(dProbe, "doc_id", "text", st,
+          numHashes = 32, bands = 8, updateStore = false,
+          portable = portable), "doc_id"))
+    Seq(
+      StoreKind("fingerprint", Seq("_fps"),
+        (st, both) => Dedup.writeFingerprintStore(
+          if (both) d1.union(d2) else d1, "text", st, nBuckets = RtBuckets),
+        st => Dedup.exactDedupAgainst(d2, "text", st).count(),
+        st => rows(s"${st}_fps") ++ ids(Dedup.exactDedupAgainst(dProbe,
+          "text", st, updateStore = false), "doc_id")),
+      StoreKind("simhash", Seq("_sigs"),
+        (st, both) => Dedup.writeSimhashStore(if (both) d1.union(d2) else d1,
+          "doc_id", "text", st, nBuckets = RtBuckets),
+        st => Dedup.simhashDedupAgainst(d2, "doc_id", "text", st).count(),
+        st => rows(s"${st}_sigs") ++ ids(Dedup.simhashDedupAgainst(dProbe,
+          "doc_id", "text", st, updateStore = false), "doc_id")),
+      minhash(portable = false),
+      minhash(portable = true),
+      StoreKind("embedding", Seq("_bands", "_vecs"),
+        (st, both) => Dedup.writeEmbeddingStore(if (both) e1.union(e2) else e1,
+          "vec_id", "embedding", st, dim = 8, bandBits = 4, bands = 4,
+          nBuckets = RtBuckets),
+        st => Dedup.embeddingNearDupAgainst(e2, "vec_id", "embedding", st,
+          threshold = 0.999, dim = 8, bandBits = 4, bands = 4).count(),
+        st => rows(s"${st}_bands") ++ rows(s"${st}_vecs") ++
+          ids(Dedup.embeddingNearDupAgainst(eProbe, "vec_id", "embedding", st,
+            threshold = 0.999, dim = 8, bandBits = 4, bands = 4,
+            updateStore = false), "vec_id")),
+      wideHash("image_dhash", image),
+      wideHash("audio_ehash", audio),
+      {
+        val (v1, v2, vp) = (video(m1), video(m2), video(mProbe))
+        StoreKind("video", Seq("_bands"),
+          (st, both) => Dedup.writeVideoHashStore(
+            if (both) v1.union(v2) else v1, "media_id", st,
+            nBuckets = RtBuckets),
+          st => Dedup.videoDedupAgainst(v2, "media_id", st).count(),
+          st => rows(s"${st}_bands") ++ ids(Dedup.videoDedupAgainst(vp,
+            "media_id", st, updateStore = false), "media_id"))
+      },
+      StoreKind("CDC chunks", Seq("_chunks"),
+        (st, both) => Dedup.writeChunkStore(
+          Dedup.cdcChunks(if (both) c1.union(c2) else c1, "doc_id", "blob"),
+          st, nBuckets = RtBuckets),
+        st => Dedup.cdcDedupAgainst(c2, "doc_id", "blob", st,
+          batchId = 1L).count(),
+        st => rows(s"${st}_chunks") ++ Dedup.cdcDedupAgainst(cProbe,
+          "doc_id", "blob", st, updateStore = false)
+          .collect().map(_.toString).sorted.toSeq),
+      StoreKind("LM", Seq("_pairs", "_ctx"),
+        (st, both) => TextAnalysis.writeLmStore(
+          if (both) d1.union(d2) else d1, "text", st, nBuckets = RtBuckets),
+        st => TextAnalysis.appendLmCounts(spark, st, d2, "text", batchTag = 1L),
+        // a compacted store folds batches into one row per key
+        st => rows(s"${st}_pairs") ++ rows(s"${st}_ctx") ++
+          TextAnalysis.lmPerplexityAgainst(dProbe, "doc_id", "text", st)
+            .collect().map(_.toString).sorted.toSeq,
+        compact = Some(st => TextAnalysis.compactLmStore(spark, st))),
+      StoreKind("PQ", Seq("_pq"),
+        (st, both) => Similarity.writePqStore(if (both) e1.union(e2) else e1,
+          "vec_id", "embedding", pqModel, st, nBuckets = RtBuckets),
+        st => Similarity.appendPqStore(e2, "vec_id", "embedding", pqModel, st,
+          batchId = 1L),
+        st => rows(s"${st}_pq") ++ Similarity.pqAdcTopKAgainstStore(spark, st,
+          "vec_id", vec(7L).map(_.toDouble), pqModel, k = 50)
+          .collect().map(_.toString).toSeq),
+      StoreKind("inverted index", Seq("_postings", "_terms"),
+        (st, both) => Search.writeInvertedIndex(if (both) d1.union(d2) else d1,
+          "doc_id", "text", st, nBuckets = RtBuckets),
+        st => Search.appendInvertedIndex(d2, "doc_id", "text", st,
+          batchId = 1L),
+        st => rows(s"${st}_postings") ++
+          Search.termDocFreq(spark, st).collect().map(_.toString).sorted ++
+          Search.searchBM25(spark, st, Seq("e3t1", "n103t2", "z1t1"), 10)
+            .collect().map(_.toString).toSeq),
+      StoreKind("cardinality", Seq(""),
+        (st, both) => Profiling.writeCardinalityStore(
+          if (both) cards1.union(cards2) else cards1, "g", col("v"), st,
+          nBuckets = RtBuckets),
+        st => Profiling.appendCardinalitySketches(spark, st, cards2, "g",
+          col("v"), lgK = 12, batchTag = 1L),
+        st => Profiling.cardinalityEstimates(spark, st)
+          .select("group_key", "estimate", "n_rows")
+          .collect().map(_.toString).toSeq,
+        compact = Some(st => Profiling.compactCardinalityStore(spark, st))))
+  }
+
+  test("store contract round trip: every kind probes, appends and compacts under its own bucket spec") {
+    import graft.sources.StoreTable
+    storeKinds.foreach { k =>
+      val st = "graft_rt_" + k.name.replaceAll("[^a-z0-9]+", "_")
+      val re = s"${st}_re"
+      def drop(): Unit = Seq(st, re).foreach(s => k.tables.foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $s$t")))
+      drop()
+      try {
+        k.build(st, false)
+        val layout = k.tables.map(t => StoreTable.bucketSpec(spark, st + t))
+        assert(layout.forall(_._2 == RtBuckets), s"${k.name}: $layout")
+        k.view(st) // a probe reads the layout it was built with
+        k.append(st)
+        val props = k.tables.map(t => StoreTable.props(spark, st + t))
+        k.compact.getOrElse((s: String) =>
+          k.tables.foreach(t => Sources.compactBucketed(spark, s + t)))(st)
+        k.tables.zipWithIndex.foreach { case (t, i) =>
+          assert(StoreTable.bucketSpec(spark, st + t) == layout(i),
+            s"${k.name}$t: bucket spec changed")
+          assert(tableFileCount(st + t) <= RtBuckets,
+            s"${k.name}$t: ${tableFileCount(st + t)} files after compaction")
+          assert(props(i).toSet.subsetOf(StoreTable.props(spark, st + t).toSet),
+            s"${k.name}$t: graft.* properties lost")
+        }
+        k.build(re, true)
+        assert(k.view(st) == k.view(re), s"${k.name}: append ≢ rebuild")
+      } finally drop()
+    }
+  }
+
+  test("mergeIntoStore / scd2MergeIntoStore keep the table's bucket spec and graft.* properties") {
+    import graft.sources.StoreTable
+    val t = "graft_rt_merge"
+    val base = (1L to 12L).map(i => (i, s"v$i")).toDF("k", "v")
+    val delta = Seq((2L, "v2b", "upsert"), (3L, null, "delete"),
+      (40L, "v40", "upsert")).toDF("k", "v", "op")
+    def check(): Unit = {
+      assert(StoreTable.bucketSpec(spark, t) == ("k", RtBuckets))
+      assert(StoreTable.props(spark, t) == Map("kind" -> "rt", "enc" -> "rt_v1"))
+    }
+    try {
+      Sources.writeBucketed(base, t, "k", RtBuckets)
+      StoreTable.setProps(spark, t, Map("kind" -> "rt", "enc" -> "rt_v1"))
+      Sources.mergeIntoStore(spark, t, delta, "k")
+      check()
+      assert(spark.table(t).count() == 12L)
+      spark.sql(s"DROP TABLE $t")
+      Sources.writeBucketed(Sources.scd2Init(base, 0L), t, "k", RtBuckets)
+      StoreTable.setProps(spark, t, Map("kind" -> "rt", "enc" -> "rt_v1"))
+      Sources.scd2MergeIntoStore(spark, t, delta, "k", 1L)
+      check()
+      assert(Sources.scd2SnapshotAsOf(spark.table(t), 1L).count() == 12L)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
   test("videoDedupFromFrameHashesFrac: threshold scales with the SHORTER clip of each pair") {

@@ -1156,32 +1156,33 @@ class OperatorsSpec extends AnyFunSuite {
       java.lang.Long.bitCount(a._2 ^ b._2) + java.lang.Long.bitCount(a._3 ^ b._3)
     val store = "graft_img_store_spec"
     spark.sql(s"DROP TABLE IF EXISTS ${store}_bands")
-    Dedup.writeImageHashStore(hashes.filter(col("media_id") < 8), "media_id",
-      store, maxHamming = 6, nBuckets = 2)
+    Dedup.writeWideHashStore(hashes.filter(col("media_id") < 8), "media_id",
+      store, "image_dhash", maxHamming = 6, nBuckets = 2)
     val seed = all.filter(_._1 < 8)
     val probe = all.filter(_._1 >= 8)
     val expected = probe.filter(p => !seed.exists(s => ham(p, s) <= 6))
       .map(_._1).toSet
-    val got = Dedup.imageDedupAgainst(hashes.filter(col("media_id") >= 8),
-        "media_id", store, maxHamming = 6, updateStore = true)
+    val got = Dedup.wideHashDedupAgainst(hashes.filter(col("media_id") >= 8),
+        "media_id", store, "image_dhash", maxHamming = 6, updateStore = true)
       .collect().map(_.getLong(0)).toSet
     assert(got == expected, s"probe $got != brute force $expected")
     // survivors were APPENDED: replaying the same batch (fresh ids so the
     // anti-join can't hide a miss behind id equality — matching is by
     // hash, ids never join) now drops everything that survived
     import org.apache.spark.sql.functions.{col => c}
-    val replay = Dedup.imageDedupAgainst(
+    val replay = Dedup.wideHashDedupAgainst(
         hashes.filter(col("media_id") >= 8)
           .select((c("media_id") + 100L).as("media_id"), c("dh_lo"),
             c("dh_hi")),
-        "media_id", store, maxHamming = 6, updateStore = false)
+        "media_id", store, "image_dhash", maxHamming = 6, updateStore = false)
       .collect().map(_.getLong(0)).toSet
     // every replayed row is hamming 0 from its own appended hash (if it
     // survived) or still within 6 of the seed (if it didn't) → empty
     assert(replay.isEmpty, s"replay must drop everything: $replay")
     // mismatched build parameter refuses loudly
     val e = intercept[IllegalArgumentException] {
-      Dedup.imageDedupAgainst(hashes, "media_id", store, maxHamming = 3)
+      Dedup.wideHashDedupAgainst(hashes, "media_id", store, "image_dhash",
+        maxHamming = 3)
     }
     assert(e.getMessage.contains("maxHamming"), e.getMessage)
     spark.sql(s"DROP TABLE IF EXISTS ${store}_bands")
@@ -1867,7 +1868,7 @@ class OperatorsSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(dfIncr == dfFull)
       // maintenance-window compaction preserves results
-      Sources.compactBucketed(spark, "graft_search_incr_postings", "term", 2)
+      Sources.compactBucketed(spark, "graft_search_incr_postings")
       assert(res("graft_search_incr") == res("graft_search_full"))
     } finally Seq("graft_search_incr_postings", "graft_search_incr_terms",
       "graft_search_full_postings", "graft_search_full_terms")
@@ -1900,7 +1901,7 @@ class OperatorsSpec extends AnyFunSuite {
       val b3posts = Seq(("scan", 4L, 1L, 2L), ("solo", 4L, 1L, 2L))
         .toDF("term", "doc_id", "tf", "dl")
       Search.appendBatchOnce(spark, b3posts, "graft_search_idem_postings",
-        2, batchId = 9L)
+        batchId = 9L)
       val partial = state
       // torn-window READ semantics (postings visible, terms missing): a
       // term new in batch 9 has no terms row → its postings drop out of

@@ -234,12 +234,12 @@ class ProfilingSpec extends AnyFunSuite {
         Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), t, "k", 4)
       Sources.mergeIntoStore(spark, t,
         Seq((2L, 21L, "upsert"), (3L, 0L, "delete")).toDF("k", "v", "op"),
-        "k", nBuckets = 4)
+        "k")
       assert(spark.table(t).collect().map(r => r.getLong(0) -> r.getLong(1))
         .toMap == Map(1L -> 10L, 2L -> 21L))
       // the swapped-in table must still be a usable merge target
       Sources.mergeIntoStore(spark, t,
-        Seq((4L, 40L, "upsert")).toDF("k", "v", "op"), "k", nBuckets = 4)
+        Seq((4L, 40L, "upsert")).toDF("k", "v", "op"), "k")
       assert(spark.table(t).count() == 3)
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
@@ -738,6 +738,35 @@ class ProfilingSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(afterNew == oneShot3,
       "post-compaction append diverged from the 3-batch one-shot")
+  }
+
+  test("cardinality sketch store built at 4 buckets takes appends and compacts at 4 buckets") {
+    import graft.operators.Profiling
+    import graft.sources.StoreTable
+    import org.apache.spark.sql.functions.col
+    val b1 = (1 to 120).map(i => (s"g${i % 5}", s"v${i % 37}")).toDF("g", "v")
+    val b2 = (1 to 120).map(i => (s"g${i % 5}", s"w${i % 29}")).toDF("g", "v")
+    val b3 = (1 to 60).map(i => (s"g${i % 5}", s"x${i % 11}")).toDF("g", "v")
+    val store = "graft_card_nb4"
+    val oneShot = "graft_card_nb4_oneshot"
+    def est(t: String) = Profiling.cardinalityEstimates(spark, t).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    Seq(store, oneShot).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      Profiling.writeCardinalityStore(b1, "g", col("v"), store, lgK = 12,
+        nBuckets = 4)
+      Profiling.appendCardinalitySketches(spark, store, b2, "g", col("v"),
+        lgK = 12, batchTag = 1L)
+      Profiling.compactCardinalityStore(spark, store)
+      assert(StoreTable.bucketSpec(spark, store) == ("__g", 4))
+      Profiling.appendCardinalitySketches(spark, store, b3, "g", col("v"),
+        lgK = 12, batchTag = 2L)
+      Profiling.writeCardinalityStore(b1.union(b2).union(b3), "g", col("v"),
+        oneShot, lgK = 12, nBuckets = 4)
+      assert(est(store) == est(oneShot), "accreted + compacted != one-shot")
+      assert(StoreTable.bucketSpec(spark, store) == ("__g", 4))
+    } finally Seq(store, oneShot).foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("LM store: gate against own-corpus store == refit filter; append == rebuild; replayed tag no-op") {

@@ -374,7 +374,7 @@ class Round4OpsSpec extends AnyFunSuite {
         (10L, Array[Byte](42) ++ a), (11L, b), (12L, b))
         .toDF("doc_id", "blob")
       val r = Dedup.cdcDedupAgainst(batch, "doc_id", "blob", store,
-          updateStore = true, nBuckets = 2)
+          updateStore = true)
         .collect().map(x => x.getLong(0) ->
           (x.getLong(2), x.getLong(3), x.getLong(4))).toMap
       val (tot10, new10, dup10) = r(10L)
@@ -386,7 +386,7 @@ class Round4OpsSpec extends AnyFunSuite {
         s"in-batch second copy all dup (keep-first): ${r(12L)}")
       // after the append, re-probing the same batch holds every byte
       val again = Dedup.cdcDedupAgainst(batch, "doc_id", "blob", store,
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .collect().map(x => x.getLong(0) -> x.getLong(3)).toMap
       assert(again.values.forall(_ == 0L), s"re-probe saw new bytes: $again")
       // tagged batch: exactly-once under replay — the appendPqStore
@@ -396,7 +396,7 @@ class Round4OpsSpec extends AnyFunSuite {
       val c = mkBytes(2000, 3L)
       val tagged = Seq((20L, c)).toDF("doc_id", "blob")
       def runTagged() = Dedup.cdcDedupAgainst(tagged, "doc_id", "blob",
-          store, updateStore = true, nBuckets = 2, batchId = 7L)
+          store, updateStore = true, batchId = 7L)
         .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
           x.getLong(3), x.getLong(4))).toSeq.sorted
       val first = runTagged()
@@ -414,7 +414,7 @@ class Round4OpsSpec extends AnyFunSuite {
         s"chunk_len, CAST(99 AS BIGINT) FROM ${store}_chunks " +
         "WHERE __batch = 7")
       val r20 = Dedup.cdcDedupAgainst(tagged, "doc_id", "blob", store,
-          updateStore = false, nBuckets = 2)
+          updateStore = false)
         .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
       val nChunks20 = first.head._2
       assert(r20(20L) == nChunks20,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Analytics, TextAnalysis}
-import graft.sources.Sources
+import graft.sources.{Sources, StoreTable}
 
 class Scd2AndMixSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -69,7 +69,7 @@ class Scd2AndMixSpec extends AnyFunSuite {
     Sources.writeBucketed(hist0, "graft_test_scd2", "id", 2)
     val delta = Seq((2L, "b2", "upsert"), (5L, "e", "upsert"))
       .toDF("id", "v", "op")
-    Sources.scd2MergeIntoStore(spark, "graft_test_scd2", delta, "id", 1L, 2)
+    Sources.scd2MergeIntoStore(spark, "graft_test_scd2", delta, "id", 1L)
     val cur = Sources.scd2SnapshotAsOf(spark.table("graft_test_scd2"), 1L)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(cur == Set((1L, "a"), (2L, "b2"), (3L, "c"), (5L, "e")))
@@ -92,10 +92,10 @@ class Scd2AndMixSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(cur == Set((1L, "a"), (2L, "b2"), (3L, "c")))
     // idempotent: healthy store → no-op
-    assert(!Sources.recoverStoreSwap(spark, t))
+    assert(!StoreTable.recoverStoreSwap(spark, t))
     // and the next maintenance pass runs clean after a recovery
     Sources.scd2MergeIntoStore(spark, t,
-      Seq((5L, "e", "upsert")).toDF("id", "v", "op"), "id", 2L, 2)
+      Seq((5L, "e", "upsert")).toDF("id", "v", "op"), "id", 2L)
     val cur2 = Sources.scd2SnapshotAsOf(spark.table(t), 2L)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(cur2 == Set((1L, "a"), (2L, "b2"), (3L, "c"), (5L, "e")))
@@ -109,11 +109,11 @@ class Scd2AndMixSpec extends AnyFunSuite {
     // UNCOMMITTED rewrite: recovery must leave the base alone...
     Sources.writeBucketed(Seq((1L, "garbage")).toDF("id", "v"),
       s"${t}__merging", "id", 2)
-    assert(!Sources.recoverStoreSwap(spark, t))
+    assert(!StoreTable.recoverStoreSwap(spark, t))
     assert(Sources.openStoreTable(spark, t).count() == 2)
     // ...and the next merge discards it and applies cleanly
     Sources.mergeIntoStore(spark, t,
-      Seq((2L, "b2", "upsert")).toDF("id", "v", "op"), "id", 2)
+      Seq((2L, "b2", "upsert")).toDF("id", "v", "op"), "id")
     val cur = spark.table(t).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(cur == Set((1L, "a"), (2L, "b2")))

@@ -763,21 +763,21 @@ class StreamsSpec extends AnyFunSuite {
     drop((1L, "alpha doc kept", "2024-01-01 10:00:00"),
          (2L, "bravo new doc", "2024-01-01 10:00:01"),
          (3L, "bravo new doc", "2024-01-01 10:00:02"))
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     // drop 2 lands while the query is DOWN — equivalent to a crash between
     // micro-batches: a fresh doc a DAY later, which advances the watermark
     // far past bravo's dedup state (10:00 + 10 min ≪ day-2 09:50), so that
     // state is evicted at this batch's end
     drop((4L, "charlie fresh", "2024-01-02 10:00:00"))
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     // drop 3: bravo RE-ARRIVES after its in-watermark state is gone — only
     // the store append from run 1 (the loop closure under test) can drop
     // it now; delta is the batch's survivor
     drop((5L, "bravo new doc", "2024-01-02 12:00:00"),
          (6L, "delta latest", "2024-01-02 12:00:01"))
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     // idle restart: recovery must be a no-op (no batch re-delivery effects)
-    Streams.runStoreIngestOnce(spark, in, out, ckpt, store, nBuckets = 2)
+    Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
     val got = spark.read.parquet(out).select("text").as[String]
       .collect().sorted.toSeq
     assert(got == Seq("bravo new doc", "charlie fresh", "delta latest"),
@@ -788,6 +788,37 @@ class StreamsSpec extends AnyFunSuite {
     val fps = spark.table(s"${store}_fps").collect().map(_.getString(0)).toSeq
     assert(fps.length == 4 && fps.distinct.length == 4,
       s"store not physically clean: ${fps.length} rows, ${fps.distinct.length} distinct")
+  }
+
+  test("store-append ingest appends under the store's own bucket spec (both defaults)") {
+    import spark.implicits._
+    val mk = java.nio.file.Files.createTempDirectory(_: String).toString
+    val in = mk("graft_storeingest_nb_in")
+    val out = mk("graft_storeingest_nb_out") + "/sink"
+    val ckpt = mk("graft_storeingest_nb_ckpt")
+    val store = "graft_stream_fp_store_nb"
+    // built and ingested with each function's default bucket layout
+    graft.operators.Dedup.writeFingerprintStore(
+      Seq((100L, "alpha doc kept")).toDF("doc_id", "text"), "text", store)
+    def drop(rows: (Long, String, String)*): Unit =
+      rows.toSeq.map { case (id, text, t) => (id, text, ts(t)) }
+        .toDF("doc_id", "text", "ts")
+        .repartition(1).write.mode("append").parquet(in)
+    try {
+      drop((1L, "alpha doc kept", "2024-01-01 10:00:00"),
+           (2L, "bravo new doc", "2024-01-01 10:00:01"))
+      Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
+      drop((3L, "bravo new doc", "2024-01-02 10:00:00"),
+           (4L, "charlie fresh", "2024-01-02 10:00:01"))
+      Streams.runStoreIngestOnce(spark, in, out, ckpt, store)
+      val got = spark.read.parquet(out).select("text").as[String]
+        .collect().sorted.toSeq
+      assert(got == Seq("bravo new doc", "charlie fresh"), s"survivors: $got")
+      spark.catalog.refreshTable(s"${store}_fps")
+      assert(spark.table(s"${store}_fps").count() == 3L)
+      assert(graft.sources.StoreTable.bucketSpec(spark, s"${store}_fps") ==
+        ("fp", 8))
+    } finally spark.sql(s"DROP TABLE IF EXISTS ${store}_fps")
   }
 
   test("upstream watermark on a DIFFERENT column fails loudly; same column is reused") {
@@ -877,8 +908,7 @@ class StreamsSpec extends AnyFunSuite {
     Dedup.writeChunkStore(Dedup.cdcChunks(b0, "doc_id", "blob"),
       "graft_cdcing", nBuckets = 2)
     b1.write.mode("append").parquet(inDir)
-    Streams.runCdcIngestOnce(spark, inDir, ckpt, "graft_cdcing", reports,
-      nBuckets = 2)
+    Streams.runCdcIngestOnce(spark, inDir, ckpt, "graft_cdcing", reports)
     try {
       def storeHashes = spark.table("graft_cdcing_chunks")
         .select("chunk_hash").as[Long].collect().toSet
@@ -896,7 +926,7 @@ class StreamsSpec extends AnyFunSuite {
       // replay with a FRESH checkpoint: batchIds restart, markers blind —
       // the __batch in-data gate must keep store AND report unchanged
       Streams.runCdcIngestOnce(spark, inDir, s"$base/ckpt2", "graft_cdcing",
-        reports, nBuckets = 2)
+        reports)
       assert(storeHashes == afterStream, "replay changed the chunk store")
       assert(report == rep1, "replay changed the admission report")
       // final store state equals a from-scratch rebuild over both batches
@@ -988,9 +1018,9 @@ class StreamsSpec extends AnyFunSuite {
     // seed: groups 0 and 1 (ids 0-7); stream: ids 8-15 (groups 2, 3)
     val media = Multimodal.encodeSyntheticPngGroups(
       (0L until 16L).toDF("doc_id"), "doc_id").localCheckpoint()
-    Dedup.writeImageHashStore(
+    Dedup.writeWideHashStore(
       Multimodal.imageDHashWide(media.filter(col("media_id") < 8)),
-      "media_id", store, maxHamming = 6, nBuckets = 2)
+      "media_id", store, "image_dhash", maxHamming = 6, nBuckets = 2)
     media.filter(col("media_id") >= 8)
       .write.mode("append").parquet(inDir)
     Streams.runImageIngestOnce(spark, inDir, outDir, ckpt, store)
@@ -1028,9 +1058,9 @@ class StreamsSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS ${store}_bands")
     val media = Multimodal.encodeSyntheticWavGroups(
       (0L until 16L).toDF("doc_id"), "doc_id").localCheckpoint()
-    Dedup.writeAudioHashStore(
+    Dedup.writeWideHashStore(
       Multimodal.audioEnergyHashWide(media.filter(col("media_id") < 8)),
-      "media_id", store, maxHamming = 6, nBuckets = 2)
+      "media_id", store, "audio_ehash", maxHamming = 6, nBuckets = 2)
     media.filter(col("media_id") >= 8)
       .write.mode("append").parquet(inDir)
     Streams.runAudioIngestOnce(spark, inDir, outDir, ckpt, store)
