@@ -262,35 +262,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // managed-table warehouse (the q_dedup_incremental signature store)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    // config A/B surface for LOCAL tuning experiments only (r21):
-    // "k=v;k=v" pairs applied on top of the contract config above. NEVER
-    // set by the driver — the default bench config is unchanged; measured
-    // experiments and their outcomes live in OPTIMIZATION_r2*.md. The
-    // applied pairs are ECHOED into the emitted JSON (r22 ADVICE item): a
-    // committed BENCH_*.json from an altered-config run must be
-    // distinguishable from a contract-config draw, and a malformed pair
-    // fails with a named error instead of a destructuring MatchError.
-    val extraConf: Seq[(String, String)] =
-      sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(";").map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => (k, v)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_EXTRA_CONF: malformed pair '$kv' (expected key=value)")
-        }
-      })
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
+    val extraConf = ToolSession.extraConf
     // warm the session once (scheduler, parquet reader, codegen bootstrap,
     // and every heavy expression family — see warmup) so no timed query is
     // charged for one-time engine initialization

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan for selected queries
   * and greps it for the scale-critical properties (PushedFilters reaching the
   * parquet scan, pruned ReadSchema, WholeStageCodegen spans, broadcast vs
@@ -16,19 +14,7 @@ object Explain {
         // round-12b probe family: the audits that matter here are pruned
         // store scans (In(term,…) pushdown, no corpus re-tokenize/requantize)
         "q_search_index", "q_ann_int8_store", "q_zorder")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // temp managed-table warehouse, like Verify/Bench/ProbeCompare:
-      // store-backed queries otherwise leave tables under ./spark-warehouse
-      // and a SECOND Explain run dies on LOCATION_ALREADY_EXISTS
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
     names.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         println(s"\n========== $name ==========")

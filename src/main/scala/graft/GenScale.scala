@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -33,15 +32,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val (src, out, factor) = (args(0), args(1), args(2).toInt)
     require(factor >= 1 && factor <= 100, s"factor $factor out of range")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
     Files.createDirectories(Paths.get(out))
 
     val docs = spark.read.parquet(s"$src/documents.parquet")

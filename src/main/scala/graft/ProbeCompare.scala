@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-probe recall check: run two [[SparkEntry.queries]] entries on the
   * same sf dir and report row counts plus the multiset difference A∖B —
   * the tool behind BASELINE.md's "the capped profile drops N true pairs at
@@ -20,20 +18,7 @@ object ProbeCompare {
     Seq(qa, qb).foreach(q => require(SparkEntry.queries.contains(q),
       s"unknown query '$q' — pick from SparkEntry.queries " +
         s"(${SparkEntry.queries.keys.toSeq.sorted.take(5).mkString(", ")}, ...)"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // managed-table warehouse, same as Verify/Bench — without it a
-      // store-backed query (q_dedup_incremental etc.) would read/write
-      // ./spark-warehouse in cwd and could pick up stale state across runs
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
     val a = SparkEntry.queries(qa)(spark, dir)
     val b = SparkEntry.queries(qb)(spark, dir)
     val keys =

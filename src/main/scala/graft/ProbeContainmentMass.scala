@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -17,14 +16,7 @@ import org.apache.spark.sql.types.DecimalType
 object ProbeContainmentMass {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProbeContainmentMass <sfDir> [...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
     args.foreach { dir =>
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val nDocs = docs.count()

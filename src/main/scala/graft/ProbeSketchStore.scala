@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main for the accreting HLL/CMS sketch stores' COMPACTION
@@ -19,17 +18,7 @@ object ProbeSketchStore {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batches = args.lift(1).map(_.toInt).getOrElse(8)
     require(batches >= 2, s"need >= 2 batches, got $batches")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_sk_probe").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession.start()
     import graft.operators.Profiling
 
     val tok = spark.read.parquet(s"$sfDir/documents.parquet")

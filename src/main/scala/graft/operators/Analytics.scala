@@ -247,9 +247,9 @@ object Analytics {
     */
   def ksDrift(ref: DataFrame, cur: DataFrame, value: Column): DataFrame = {
     // NULL measures are excluded (a CDF has no place for them): unfiltered,
-    // a NULL value group would reach globalPrefixSum's driver-side bucket
-    // counts (getLong on NULL → NPE), and the engines disagree on NULL sort
-    // position anyway (Spark NULLS FIRST, DuckDB NULLS LAST)
+    // a NULL value group would fail globalPrefixSums' NULL-key check, and
+    // the engines disagree on NULL sort position anyway (Spark NULLS FIRST,
+    // DuckDB NULLS LAST)
     val tagged = ref.select(value.cast(LongType).as("v"),
         lit(1L).as("__r"), lit(0L).as("__c"))
       .unionByName(cur.select(value.cast(LongType).as("v"),

@@ -1487,11 +1487,12 @@ object Dedup {
   }
 
   /** append a batch of wide hashes' bands to [[writeWideHashStore]]'s bands
-    * table — the store half of `updateStore = true`, exposed so streaming
-    * ingest can order its writes crash-safely (survivor manifest FIRST,
-    * then this append — see [[graft.streaming.Streams.runImageIngestOnce]]).
-    * Validates build params; duplicate band rows from an at-least-once
-    * replay are harmless (they cannot change an anti-join). */
+    * table — the store half of `updateStore = true`, exposed so the media
+    * streaming passes can order their writes crash-safely (survivor
+    * manifest FIRST, then this append — the content-keyed replay contract
+    * on [[graft.streaming.Streams]]' ingest driver). Validates build
+    * params; duplicate band rows from an at-least-once replay are harmless
+    * (they cannot change an anti-join). */
   def appendWideHashes(hashes: DataFrame, idCol: String, store: String,
                        kind: String, maxHamming: Int = 6): Unit = {
     StoreTable.checkProps(hashes.sparkSession, s"${store}_bands",
@@ -2866,9 +2867,8 @@ object Dedup {
     * [[writeFingerprintStore]] conventions): `<store>_chunks`
     * (chunk_hash, chunk_len, __batch), bucketed on the hash so every later
     * probe joins bucket-local without reshuffling the store. `__batch` is
-    * the same in-data idempotence tag the other accreting stores carry
-    * (−1 for the initial build) — [[cdcDedupAgainst]] skips a replayed
-    * batch append exactly. */
+    * the [[graft.sources.StoreTable.appendOnce]] tag (−1 for the initial
+    * build) — [[cdcDedupAgainst]] skips a replayed batch append exactly. */
   def writeChunkStore(chunks: org.apache.spark.sql.Dataset[CdcChunk],
                       store: String, nBuckets: Int = 8): Unit =
     Sources.writeBucketed(
@@ -2890,16 +2890,15 @@ object Dedup {
     * chunk hash; the store side stays bucket-local.
     *
     * `batchId` ≥ 0 makes the call EXACTLY-ONCE under replay (streaming
-    * retry, crash-recovery re-delivery), the [[appendPqStore]] contract:
-    * the probe excludes the store's own `__batch == batchId` rows — so a
-    * replayed batch reports the SAME admission numbers it reported the
-    * first time, not all-dup — and the append is skipped if that batch tag
-    * is already present, so concurrent/replayed batches can never
-    * double-insert a chunk hash. The probe side additionally distincts the
-    * stored hashes (bucket-local — no shuffle on a bucketed store), so
-    * even a store that accreted duplicate hashes through untagged
-    * concurrent appends cannot multiply probed chunk rows and inflate the
-    * report. */
+    * retry, crash-recovery re-delivery): the probe excludes the store's own
+    * `__batch == batchId` rows — so a replayed batch reports the SAME
+    * admission numbers it reported the first time, not all-dup — and the
+    * append goes through [[graft.sources.StoreTable.appendOnce]], so a
+    * replayed batch never double-inserts a chunk hash. The probe side
+    * additionally distincts the stored hashes (bucket-local — no shuffle on
+    * a bucketed store), so even a store that accreted duplicate hashes
+    * through untagged concurrent appends cannot multiply probed chunk rows
+    * and inflate the report. */
   def cdcDedupAgainst(newBatch: DataFrame, idCol: String, bytesCol: String,
                       store: String, updateStore: Boolean = true,
                       minLen: Int = 32, maxLen: Int = 256,
@@ -2933,16 +2932,10 @@ object Dedup {
           .cast(LongType).as("new_bytes"),
         sum(when(col("__first"), lit(0L)).otherwise(col("chunk_len")))
           .cast(LongType).as("dup_bytes"))
-    if (updateStore) {
-      val committed = batchId >= 0 &&
-        storeTbl0.filter(col("__batch") === batchId).limit(1).count() > 0
-      if (!committed)
-        StoreTable.append(
-          marked.filter(col("__first"))
-            .select(col("chunk_hash"), col("chunk_len"))
-            .withColumn("__batch", lit(batchId)),
-          s"${store}_chunks")
-    }
+    if (updateStore)
+      StoreTable.appendOnce(
+        marked.filter(col("__first")).select(col("chunk_hash"), col("chunk_len")),
+        s"${store}_chunks", batchId)
     report
   }
 }

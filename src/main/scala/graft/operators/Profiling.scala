@@ -22,27 +22,6 @@ import graft.sources.StoreTable
   * reproduces results bit-for-bit.
   */
 object Profiling {
-  private val slog = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** shared by the accreting-sketch appends: decide whether `batchTag` is
-    * new, and LOG when it is skipped as at-or-below the compacted
-    * watermark — streaming batchIds restart at 0 on a fresh checkpoint, so
-    * after a compaction a legitimately restarted ingest carrying NEW data
-    * is indistinguishable from a replay here; the log line is the
-    * operator's only way to notice (the fix is a fresh store or tags from
-    * a store-side monotone counter, not checkpoint-relative batchIds). */
-  private[operators] def shouldAppendTag(spark: SparkSession, store: String,
-                              batchTag: Long, seen: Set[Long]): Boolean = {
-    val wm = compactedWatermark(spark, store)
-    if (batchTag <= wm) {
-      slog.warn(s"$store: skipping append with batchTag=$batchTag at or " +
-        s"below compacted watermark $wm — if this ingest RESTARTED from a " +
-        "fresh checkpoint (batchIds reset to 0) this is NEW data being " +
-        "dropped as a replay; restart against a fresh store or derive " +
-        "tags from a store-side monotone counter")
-      false
-    } else !seen.contains(batchTag)
-  }
 
   /** One-pass whole-table column profile: for every column, its null count
     * and distinct count, plus the table row count — the "is this dataset
@@ -1056,39 +1035,38 @@ object Profiling {
     // seed tag -1 (the writeInvertedIndex convention): streaming ingest
     // batchIds start at 0 and must never collide with the seed batch
     graft.sources.Sources.writeBucketed(
-      cardinalitySketchRows(df, groupCol, valueExpr, lgK, batchTag = -1L),
+      cardinalitySketchRows(df, groupCol, valueExpr, lgK)
+        .withColumn("__batch", lit(-1L)),
       store, "__g", nBuckets)
     StoreTable.setProps(df.sparkSession, store,
       Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"))
   }
 
-  /** append one ingest batch's sketches (idempotent under `batchTag`: a
-    * replayed tag is a no-op, the tagged-append doctrine of the other
-    * accreting stores). Build parameters are validated against the store's
-    * persisted properties — a sketch built at a different lgK would union
-    * fine but silently degrade the error contract, so it refuses. */
+  /** append one ingest batch's sketches exactly once under `batchTag`
+    * ([[graft.sources.StoreTable.appendOnce]]: a replayed or compacted tag
+    * is a no-op). The tag is required: the seed rows carry -1, so an
+    * ungated -1 append would double-count. Build parameters are validated
+    * against the store's persisted properties — a sketch built at a
+    * different lgK would union fine but silently degrade the error
+    * contract, so it refuses. */
   def appendCardinalitySketches(spark: SparkSession, store: String,
                                 df: DataFrame, groupCol: String,
                                 valueExpr: Column, lgK: Int,
                                 batchTag: Long): Unit = {
+    StoreTable.requireTag("appendCardinalitySketches", store, batchTag)
     StoreTable.checkProps(spark, store,
       Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"),
       required = Set("enc"))
-    val seen = spark.table(store).select("__batch").distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (shouldAppendTag(spark, store, batchTag, seen))
-      StoreTable.append(
-        cardinalitySketchRows(df, groupCol, valueExpr, lgK, batchTag), store)
+    StoreTable.appendOnce(
+      cardinalitySketchRows(df, groupCol, valueExpr, lgK), store, batchTag)
   }
 
   private def cardinalitySketchRows(df: DataFrame, groupCol: String,
-                                    valueExpr: Column, lgK: Int,
-                                    batchTag: Long): DataFrame =
+                                    valueExpr: Column, lgK: Int): DataFrame =
     df.select(col(groupCol).cast(StringType).as("__g"), valueExpr.as("__v"))
       .groupBy("__g")
       .agg(hll_sketch_agg(col("__v"), lgK).as("__sketch"),
         count(lit(1)).cast(LongType).as("__n"))
-      .withColumn("__batch", lit(batchTag))
 
   /** per-group estimates over the WHOLE accreted store: one sketch-union
     * aggregate over groups×batches rows — never the corpus. */
@@ -1146,7 +1124,8 @@ object Profiling {
     require(eps > 0 && eps < 1, s"writeFrequencyStore: eps $eps")
     require(confidence > 0 && confidence < 1,
       s"writeFrequencyStore: confidence $confidence")
-    frequencySketchRow(df, valueExpr, eps, confidence, seed, batchTag = -1L)
+    frequencySketchRow(df, valueExpr, eps, confidence, seed)
+      .withColumn("__batch", lit(-1L))
       .write.format("parquet")
       .mode(org.apache.spark.sql.SaveMode.Overwrite) // rebuild replaces, like every other store writer
       .saveAsTable(store)
@@ -1155,34 +1134,23 @@ object Profiling {
         "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"))
   }
 
-  /** append one ingest batch's sketch (idempotent under `batchTag`; build
-    * parameters validated — sketches at a different eps/depth/seed would
-    * refuse to merge downstream, but failing at append time names the
-    * store and the fix). */
+  /** append one ingest batch's sketch exactly once under the required
+    * `batchTag` ([[appendCardinalitySketches]]' contract; build parameters
+    * validated — sketches at a different eps/depth/seed would refuse to
+    * merge downstream, but failing at append time names the store and the
+    * fix). */
   def appendFrequencySketch(spark: SparkSession, store: String,
                             df: DataFrame, valueExpr: Column, eps: Double,
                             confidence: Double, seed: Int,
                             batchTag: Long): Unit = {
+    StoreTable.requireTag("appendFrequencySketch", store, batchTag)
     StoreTable.checkProps(spark, store,
       Map("kind" -> "frequency_cms", "eps" -> eps,
         "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"),
       required = Set("enc"))
-    val seen = spark.table(store).select("__batch").distinct()
-      .collect().map(_.getLong(0)).toSet
-    if (shouldAppendTag(spark, store, batchTag, seen)) {
-      frequencySketchRow(df, valueExpr, eps, confidence, seed, batchTag)
-        .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Append)
-        .saveAsTable(store)
-    }
+    StoreTable.appendOnce(
+      frequencySketchRow(df, valueExpr, eps, confidence, seed), store, batchTag)
   }
-
-  /** the highest batch tag folded away by a compaction (Long.MinValue when
-    * the store has never compacted): a replayed tag at or below it has been
-    * applied even though its row no longer exists — the IN-DATA replay
-    * guard the accreting appends consult alongside the live tag set. */
-  private[operators] def compactedWatermark(spark: SparkSession, store: String): Long =
-    StoreTable.props(spark, store).get("compacted_watermark")
-      .fold(Long.MinValue)(_.toLong)
 
   /** Compact an accreting cardinality store IN PLACE: merge every group's
     * batch rows into ONE row. HLL union is max-per-register — associative,
@@ -1196,9 +1164,10 @@ object Profiling {
     * recoverStoreSwap, `graft.*` properties re-applied).
     *
     * Replay contract after compaction: the folded batches' tags survive as
-    * the `graft.compacted_watermark` property (= their max) — the appends
-    * skip any tag ≤ watermark, so redelivery of a compacted batch is still
-    * an exact no-op. Requires batch tags nondecreasing across a compaction
+    * the `graft.compacted_watermark` property (= their max) —
+    * [[graft.sources.StoreTable.appendOnce]] skips any tag ≤ watermark, so
+    * redelivery of a compacted batch is still an exact no-op. Requires
+    * batch tags nondecreasing across a compaction
     * boundary, which the streaming twins' monotone batchIds guarantee (and
     * the maintenance-window doctrine: compact between ingest passes, like
     * every other store maintainer). `n_batches` in the estimates probe
@@ -1255,13 +1224,12 @@ object Profiling {
   }
 
   private def frequencySketchRow(df: DataFrame, valueExpr: Column,
-                                 eps: Double, confidence: Double, seed: Int,
-                                 batchTag: Long): DataFrame =
+                                 eps: Double, confidence: Double,
+                                 seed: Int): DataFrame =
     df.select(valueExpr.cast(StringType).as("__v"))
       .agg(count_min_sketch(col("__v"), lit(eps), lit(confidence),
         lit(seed)).as("__sketch"),
         count(lit(1)).cast(LongType).as("__n"))
-      .withColumn("__batch", lit(batchTag))
 
   /** merged sketch + total row count over the whole accreted store. The
     * collect here is batches-sized KILOBYTE rows (the LSH driver-side

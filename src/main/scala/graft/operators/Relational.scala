@@ -400,12 +400,12 @@ object Relational {
     *      bucket's offset. Parallelism = nBuckets; each task sorts one
     *      bucket, never the corpus.
     * The result is EXACTLY the single-window answer (proven against it in
-    * the spec). Contract: `orderCol` is a unique integral key (ties would
-    * make "exclusive prefix" ill-defined), `valueCol` is integral (the
-    * sums ride longs; ANSI overflow errors loudly). Uniform-width buckets
-    * assume roughly uniform key density — for pathologically clustered
-    * keys pass larger `nBuckets` (cost stays one broadcast row per
-    * bucket) or pre-map ids. */
+    * the spec). Contract: `orderCol` is a unique, non-NULL integral key
+    * (ties would make "exclusive prefix" ill-defined; NULL keys fail by
+    * name), `valueCol` is integral (the sums ride longs; ANSI overflow
+    * errors loudly). Uniform-width buckets assume roughly uniform key
+    * density — for pathologically clustered keys pass larger `nBuckets`
+    * (cost stays one broadcast row per bucket) or pre-map ids. */
   def globalPrefixSum(df: DataFrame, orderCol: String, valueCol: String,
                       prefixCol: String = "prefix",
                       nBuckets: Int = 256): DataFrame =
@@ -431,7 +431,11 @@ object Relational {
         "must pair up")
     val spark = df.sparkSession
     val bounds = df.agg(min(col(orderCol)).cast("long"),
-      max(col(orderCol)).cast("long")).head()
+      max(col(orderCol)).cast("long"),
+      count(when(col(orderCol).isNull, 1))).head()
+    require(bounds.getLong(2) == 0L, s"globalPrefixSums: ${bounds.getLong(2)} " +
+      s"NULL key(s) in order column '$orderCol' — an exclusive prefix at a " +
+      "NULL key is undefined; filter or coalesce the key first")
     if (bounds.isNullAt(0)) // empty input: schema-stable, zero rows
       return (prefixCols.foldLeft(df)((d, p) => d.withColumn(p, lit(0L))),
         valueCols.map(_ => 0L))

@@ -46,10 +46,10 @@ object Search {
     * tf, __batch) bucketed by term, and `store`_terms (term, df, __batch)
     * — both managed bucketed tables; the postings table carries the build
     * metadata (kind and the BM25 corpus stats), and appends read the bucket
-    * spec from the catalog ([[graft.sources.StoreTable.append]]). `__batch` tags each row with the append batch that wrote it
-    * (−1 for the base build) — the idempotence handle replayed streaming
-    * batches key on (see [[appendInvertedIndex]]); readers never select
-    * it. */
+    * spec from the catalog. `__batch` tags each row with the append batch
+    * that wrote it (−1 for the base build) — the handle of
+    * [[graft.sources.StoreTable.appendOnce]] (see [[appendInvertedIndex]]);
+    * readers never select it. */
   def writeInvertedIndex(df: DataFrame, idCol: String, textCol: String,
                          store: String, nBuckets: Int = 64): Unit = {
     // materialize the postings once (both table writes consume them — the
@@ -92,19 +92,11 @@ object Search {
     * per-batch (term, df) rows; doc-freq readers SUM by term, which is
     * exact because batches are disjoint doc sets.
     *
-    * `batchId ≥ 0` makes the append IDEMPOTENT per table: rows are tagged
-    * with the id and the append is skipped when the table already holds
-    * that batch — so an at-least-once redelivery (foreachBatch replay
-    * after a crash anywhere around the append) can never double-count
-    * tf/df. Each `saveAsTable(Append)` job commit is the atomicity unit,
-    * so a crash BETWEEN the postings and terms appends recovers exactly:
-    * the replay skips the completed table and appends only the missing
-    * one. The presence probe is one `limit(1)` scan whose `__batch`
-    * predicate prunes on per-file column stats (append batches write
-    * constant-valued files). Default −1 keeps plain batch appends
-    * un-probed (tagged −1; idempotence there is the caller's contract, as
-    * before). Pre-`__batch` stores (no tag column) append untagged and
-    * keep the legacy marker-only semantics.
+    * `batchId ≥ 0` makes the append exactly-once per table through
+    * [[graft.sources.StoreTable.appendOnce]] (its scaladoc states the crash
+    * contract): a redelivered batch can never double-count tf/df, and a
+    * crash BETWEEN the postings and terms appends recovers exactly. Default
+    * −1 appends un-probed; pre-`__batch` stores append untagged.
     *
     * Torn-window READ semantics (crash between the postings and terms
     * appends, before the replay): batch-N docs are already visible to the
@@ -122,10 +114,8 @@ object Search {
       Map("kind" -> "inverted_index"))
     val props = StoreTable.props(spark, s"${store}_postings")
     val posts = postingsOf(df, idCol, textCol)
-    val appended =
-      appendBatchOnce(spark, posts, s"${store}_postings", batchId)
-    appendBatchOnce(spark,
-      posts.groupBy("term").agg(count(lit(1)).as("df")),
+    val appended = StoreTable.appendOnce(posts, s"${store}_postings", batchId)
+    StoreTable.appendOnce(posts.groupBy("term").agg(count(lit(1)).as("df")),
       s"${store}_terms", batchId)
     // roll the BM25 corpus stats forward only when the postings append ran
     // (a replayed batch must not double-count). The property write follows
@@ -141,23 +131,6 @@ object Search {
         Map("docCount" -> (dc.toLong + stats._1),
           "totalDl" -> (props("totalDl").toLong + stats._2)))
     }
-  }
-
-  /** one gated bucketed append: tag with the batch id (when the table has
-    * the tag column) and skip if that batch already committed to THIS
-    * table — the per-table half of [[appendInvertedIndex]]'s idempotence
-    * contract. */
-  private[graft] def appendBatchOnce(spark: SparkSession, rows: DataFrame,
-                                     table: String, batchId: Long): Boolean = {
-    val hasTag = spark.table(table).columns.contains("__batch")
-    val committed = hasTag && batchId >= 0 &&
-      spark.table(table).filter(col("__batch") === batchId)
-        .limit(1).count() > 0
-    if (!committed) {
-      val out = if (hasTag) rows.withColumn("__batch", lit(batchId)) else rows
-      StoreTable.append(out, table)
-    }
-    !committed
   }
 
   /** per-term corpus doc frequency from the accreted terms table (SUM over

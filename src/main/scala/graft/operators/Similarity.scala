@@ -1231,31 +1231,23 @@ object Similarity {
   }
 
   /** idempotent batched append to a [[writePqStore]] store: encode the
-    * batch under the SAME fingerprint-checked model and append with a
-    * `__batch` tag; a replayed batchId (streaming retry, crash-recovery
-    * re-delivery) is skipped exactly — the
-    * [[graft.operators.Search.appendInvertedIndex]] in-data idempotence
-    * contract, carried to the ANN index. Returns whether the append ran.
-    * Batches must be id-disjoint from prior content (the ingest contract
-    * of every accreting store here); same-bucket appends accrete one file
-    * per writing task per batch — compact on the store's maintenance
-    * cadence ([[graft.sources.Sources.compactBucketed]]). */
+    * batch under the SAME fingerprint-checked model and append it through
+    * [[graft.sources.StoreTable.appendOnce]] — a replayed batchId
+    * (streaming retry, crash-recovery re-delivery) is skipped exactly.
+    * Returns whether the append ran. Batches must be id-disjoint from prior
+    * content (the ingest contract of every accreting store here);
+    * same-bucket appends accrete one file per bucket per batch — compact on
+    * the store's maintenance cadence
+    * ([[graft.sources.Sources.compactBucketed]]). */
   def appendPqStore(df: DataFrame, idCol: String, vecCol: String,
                     model: PqModel, store: String,
                     batchId: Long = -1L): Boolean = {
-    val spark = df.sparkSession
-    StoreTable.checkProps(spark, s"${store}_pq",
+    StoreTable.checkProps(df.sparkSession, s"${store}_pq",
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
         "enc" -> "bias128"), required = Set("enc"))
-    val committed = batchId >= 0 &&
-      spark.table(s"${store}_pq").filter(col("__batch") === batchId)
-        .limit(1).count() > 0
-    if (!committed)
-      StoreTable.append(
-        df.select(col(idCol), pqCodes(col(vecCol), model).as("codes"))
-          .withColumn("__batch", lit(batchId)),
-        s"${store}_pq")
-    !committed
+    StoreTable.appendOnce(
+      df.select(col(idCol), pqCodes(col(vecCol), model).as("codes")),
+      s"${store}_pq", batchId)
   }
 
   /** top-k against a [[writePqStore]] store — same result as [[pqAdcTopK]]

@@ -523,37 +523,26 @@ object TextAnalysis {
         Map("kind" -> "lm_bigram", "enc" -> "lm_v1")))
   }
 
-  /** append one ingest batch's pair/context counts (idempotent under
-    * `batchTag` PER TABLE — the appendInvertedIndex doctrine: a crash
-    * between the two appends recovers exactly, each table skips the tag it
-    * already holds). Estimates downstream sum across batches, so a
-    * replayed tag would double every count it touches — the tag gate is
-    * correctness, not hygiene. */
+  /** append one ingest batch's pair/context counts exactly once under the
+    * required `batchTag`, PER TABLE ([[graft.sources.StoreTable.appendOnce]]:
+    * a crash between the two appends recovers exactly, each table skips the
+    * tag it already holds or a compaction folded away). Estimates
+    * downstream sum across batches, so a replayed tag would double every
+    * count it touches — the tag gate is correctness, not hygiene. */
   def appendLmCounts(spark: org.apache.spark.sql.SparkSession, store: String,
                      df: DataFrame, textCol: String, batchTag: Long): Unit = {
+    StoreTable.requireTag("appendLmCounts", store, batchTag)
     Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
       StoreTable.checkProps(spark, t,
         Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
         required = Set("enc")))
     val prs = lmPairRows(df, Seq.empty, textCol).localCheckpoint()
-    def appendTo(table: String, agg: DataFrame): Unit = {
-      val seen = spark.table(table).select("__batch").distinct()
-        .collect().map(_.getLong(0)).toSet
-      // the compacted-watermark guard (Profiling.shouldAppendTag — logs
-      // the restarted-checkpoint trap): after compactLmStore folds the
-      // batch rows away, a replayed tag's row no longer exists to dedupe
-      // against, so the watermark is what keeps replay ≠ double-count
-      if (Profiling.shouldAppendTag(spark, table, batchTag, seen))
-        StoreTable.append(agg.withColumn("__batch", lit(batchTag)), table)
-    }
-    // each table's tag gate is independent — overlap the two appends
-    // (§2.6); the crash contract is unchanged (each table skips the tag it
-    // already holds, regardless of which append lands first)
+    // each table's tag gate is independent — overlap the two appends (§2.6)
     graft.sources.Sources.writeConcurrently(
-      () => appendTo(s"${store}_pairs",
-        prs.groupBy("pair").agg(count(lit(1)).as("cnt"))),
-      () => appendTo(s"${store}_ctx",
-        prs.groupBy("t1").agg(count(lit(1)).as("cnt"))))
+      () => StoreTable.appendOnce(prs.groupBy("pair").agg(count(lit(1)).as("cnt")),
+        s"${store}_pairs", batchTag),
+      () => StoreTable.appendOnce(prs.groupBy("t1").agg(count(lit(1)).as("cnt")),
+        s"${store}_ctx", batchTag))
   }
 
   /** Compact an accreting LM store IN PLACE: fold every key's batch rows
@@ -567,7 +556,7 @@ object TextAnalysis {
     * ([[graft.sources.StoreTable.recoverStoreSwap]] heals a crash between
     * DROP and RENAME), and the folded-away max batch tag persists as
     * `graft.compacted_watermark` so a replayed tag at/below it is a no-op
-    * in [[appendLmCounts]] rather than a double count. */
+    * in [[graft.sources.StoreTable.appendOnce]] rather than a double count. */
   def compactLmStore(spark: org.apache.spark.sql.SparkSession,
                      store: String): Unit = {
     Seq((s"${store}_pairs", "pair"), (s"${store}_ctx", "t1")).foreach {

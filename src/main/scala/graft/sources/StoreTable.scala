@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.functions.{col, lit}
 
 /** The store-table core: the one module that reads or writes a store
   * table's catalog state. Every incremental store (the dedup, search,
@@ -17,10 +18,13 @@ import org.apache.spark.sql.catalyst.catalog.CatalogTable
   *    validated by [[checkProps]] on every probe and append).
   *
   * The staging swap ([[swapIn]]) is the only rewrite path, and
-  * [[recoverStoreSwap]] heals a crash inside it. Every store obeys append ≡
-  * rebuild, the mergeable-summary contract, so a store's layout and
-  * parameters are all its maintainers need to know. */
+  * [[recoverStoreSwap]] heals a crash inside it; [[appendOnce]] is the only
+  * exactly-once append. Every store obeys append ≡ rebuild, the
+  * mergeable-summary contract, so a store's layout and parameters are all
+  * its maintainers need to know. */
 object StoreTable {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private val Prefix = "graft."
 
@@ -109,10 +113,81 @@ object StoreTable {
     Sources.writeBucketed(df, table, bucketCol, nBuckets, SaveMode.Append)
   }
 
-  /** replace `table`'s contents with `rewritten` in place: write a staging
-    * table with the same layout (bucketed on the table's own spec — one
+  /** write `df` to `target` with `meta`'s layout: bucketed on its spec (one
     * file per bucket, since [[Sources.writeBucketed]] repartitions on the
-    * bucket id — or plain parquet when the table is unbucketed), DROP the
+    * bucket id), or plain parquet when the catalog records no bucket spec. */
+  private def writeLike(meta: CatalogTable, df: DataFrame, target: String,
+                        mode: SaveMode): Unit =
+    meta.bucketSpec match {
+      case Some(b) => Sources.writeBucketed(df, target,
+        b.bucketColumnNames.head, b.numBuckets, mode)
+      case None => df.write.mode(mode).format("parquet").saveAsTable(target)
+    }
+
+  /** append `rows` to a store table at most once per `batchId` — the one
+    * exactly-once append of every accreting store (search index, PQ codes,
+    * CDC chunks, LM counts, cardinality and frequency sketches). Returns
+    * whether the append ran.
+    *
+    * The rows are tagged `__batch = batchId`, and the append is skipped when
+    *  - `batchId` is at or below the table's `graft.compacted_watermark`
+    *    (the batch was folded away by a compaction); or
+    *  - one `__batch === batchId` probe finds the batch already present.
+    *    The probe is a `limit(1)` scan whose predicate prunes on per-file
+    *    column stats, since every append writes constant-tag files.
+    * Otherwise it appends under the table's own layout, like [[swapIn]].
+    * `batchId < 0` appends ungated (tagged, never probed: idempotence is the
+    * caller's contract), and a table without a `__batch` column (an inverted
+    * index written before the tag existed) appends untagged.
+    *
+    * Crash contract. Each append job commit is the atomicity unit, so a
+    * replay after a crash anywhere around it appends exactly the tables that
+    * miss the batch: a multi-table store (index postings + terms, LM pairs +
+    * ctx) recovers exactly from a crash between its appends. The gate is in
+    * the data, so it holds where filesystem markers cannot: a crash between
+    * the append and the marker of [[graft.streaming.Streams]], or a
+    * checkpoint wiped while the input set is unchanged. It assumes a stable
+    * batchId → content mapping, which one checkpoint lineage guarantees.
+    * After a compaction a restarted checkpoint's new data at a tag ≤ the
+    * watermark is indistinguishable from a replay — the skip is logged as a
+    * warning, and the fix is a fresh store or tags from a store-side
+    * monotone counter. */
+  private[graft] def appendOnce(rows: DataFrame, table: String,
+                                batchId: Long): Boolean = {
+    val spark = rows.sparkSession
+    val meta = metadata(spark, table)
+    val tagged = meta.schema.fieldNames.contains("__batch")
+    // the highest tag a compaction folded away: applied, though its rows
+    // no longer exist
+    val wm = graftProps(meta).get("compacted_watermark")
+      .fold(Long.MinValue)(_.toLong)
+    val skip = tagged && batchId >= 0 && (
+      if (batchId <= wm) {
+        log.warn(s"$table: skipping append with batchId=$batchId at or " +
+          s"below compacted watermark $wm — if this ingest RESTARTED from a " +
+          "fresh checkpoint (batchIds reset to 0) this is NEW data being " +
+          "dropped as a replay; restart against a fresh store or derive " +
+          "tags from a store-side monotone counter")
+        true
+      } else spark.table(table).filter(col("__batch") === batchId)
+        .limit(1).count() > 0)
+    if (!skip)
+      writeLike(meta, if (tagged) rows.withColumn("__batch", lit(batchId))
+        else rows, table, SaveMode.Append)
+    !skip
+  }
+
+  /** the accreting stores (sketches, LM counts) need a real tag: their
+    * seed rows carry -1, so an ungated [[appendOnce]] would double-count
+    * them on replay. */
+  private[graft] def requireTag(op: String, table: String,
+                                batchId: Long): Unit =
+    require(batchId >= 0, s"$op($table): batchTag must be >= 0, got " +
+      s"$batchId — the store's seed rows carry -1, so an ungated append " +
+      "would double-count them on replay")
+
+  /** replace `table`'s contents with `rewritten` in place: write a staging
+    * table with the same layout ([[writeLike]]), DROP the
     * table, RENAME the staging table to it, and re-apply its `graft.*`
     * properties plus `extraProps`. `rewritten` may read the table itself:
     * the staging write is its only consumer and completes before the drop.
@@ -131,11 +206,7 @@ object StoreTable {
     val meta = metadata(spark, table)
     val staging = s"${table}__compacting"
     Stagings.foreach(s => spark.sql(s"DROP TABLE IF EXISTS $table$s"))
-    meta.bucketSpec match {
-      case Some(b) => Sources.writeBucketed(rewritten, staging,
-        b.bucketColumnNames.head, b.numBuckets)
-      case None => rewritten.write.format("parquet").saveAsTable(staging)
-    }
+    writeLike(meta, rewritten, staging, SaveMode.Overwrite)
     spark.sql(s"DROP TABLE $table")
     spark.sql(s"ALTER TABLE $staging RENAME TO $table")
     setProps(spark, table, graftProps(meta) ++ extraProps)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
@@ -487,65 +487,60 @@ object Streams {
     q.stop()
   }
 
-  /** one pass of store-backed streaming ingest with the survivor append
-    * CLOSED INTO THE LOOP: each micro-batch is deduped against the persisted
-    * fingerprint store ([[streamingDedupAgainstStore]] — stream-static
-    * anti-join + in-watermark dedup), survivors land in `outDir` AND their
-    * fingerprints append to the bucketed store, so the NEXT micro-batch
-    * (and the next restart) dedups against them too — the full production
-    * ingest shape, previously only proven on the batch side.
+  /** The one micro-batch driver of the store-backed streaming passes:
+    * stream the parquet files of `inDir` through `source`, and run `apply`
+    * once per micro-batch, then process everything available and stop (≈
+    * the query being killed between micro-batches). Calling again with the
+    * same checkpoint resumes from the recorded source offsets.
     *
-    * foreachBatch is at-least-once (a crash between the sink write and the
-    * checkpoint commit re-delivers the batch on restart), so both effects
-    * are idempotent per batchId:
-    *  - survivors overwrite their own `__batch=<id>` partition of `outDir`
-    *    (dynamic partition overwrite): a re-delivered batch REWRITES the
-    *    same partition instead of appending duplicates;
-    *  - the store append is gated by a per-batch commit marker stored
-    *    under the CHECKPOINT dir (markers and checkpoint recover or reset
-    *    together): a re-delivered, already-marked batch skips the append.
-    *    The window between append and marker is additionally harmless by
-    *    construction — duplicate fingerprint rows cannot change an
-    *    anti-join — the marker just keeps the store physically clean.
-    */
-  def runStoreIngestOnce(spark: SparkSession, inDir: String, outDir: String,
-                         checkpointDir: String, store: String,
-                         textCol: String = "text", tsCol: String = "ts",
-                         delay: String = "10 minutes"): Unit = {
+    * Crash contract. foreachBatch is at-least-once: a crash after `apply`
+    * but before the checkpoint commit redelivers the batch, under the same
+    * batchId, on restart. Two layers make each pass exactly-once:
+    *  - the commit marker `checkpointDir/markerDir/<batchId>`, written after
+    *    `apply`, is the fast path: a marked batch skips `apply` and is only
+    *    drained, so a stateful `source` still commits its state for the
+    *    batch (Spark fails a stateful batch whose state stores never
+    *    commit). Markers live under the checkpoint, so they recover or
+    *    reset together with the batchId sequence;
+    *  - the gate of each pass absorbs a crash between its store write and
+    *    the marker, and a wiped checkpoint over an unchanged input set:
+    *    - the tagged appends (search index, PQ, CDC, LM counts, sketches)
+    *      go through [[graft.sources.StoreTable.appendOnce]]'s in-data
+    *      `__batch` gate;
+    *    - the fingerprint and media stores are content-keyed: a replayed
+    *      batch self-matches its own appended store rows, so the probe drops
+    *      it whole, and its survivor manifest is written BEFORE the store
+    *      append (with append first, a crash before the manifest would lose
+    *      the survivors for good);
+    *    - the LM gate is read-only: the store is never written, and a
+    *      replay rewrites identical manifest content;
+    *    - SCD2 skips a batch whose version already appears in the history's
+    *      `valid_from` or `valid_to`.
+    * Manifests overwrite their own `__batch=<id>` partition
+    * ([[writeManifest]]). The gates assume a stable batchId → content
+    * mapping, which one checkpoint lineage guarantees. `tables` are
+    * refreshed before the stream binds and after every applied batch, so
+    * the next micro-batch and the caller see the appended files. */
+  private def ingestOnce(spark: SparkSession, inDir: String,
+                         checkpointDir: String, markerDir: String,
+                         tables: Seq[String],
+                         source: DataFrame => DataFrame = identity)
+                        (apply: (DataFrame, Long) => Unit): Unit = {
     val schema = spark.read.parquet(inDir).schema
-    // appends may have come from a previous run's foreachBatch session (or
-    // another process entirely): refresh the cached file listing before the
-    // stream-static join plan binds to it
-    spark.catalog.refreshTable(s"${store}_fps")
-    val deduped = streamingDedupAgainstStore(
-      spark.readStream.schema(schema).parquet(inDir),
-      textCol, tsCol, store, delay)
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, "store_commits")
-    val q = deduped.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    tables.foreach(spark.catalog.refreshTable)
+    val markers = new org.apache.hadoop.fs.Path(checkpointDir, markerDir)
+    val q = source(spark.readStream.schema(schema).parquet(inDir)).writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val s = batch.sparkSession
         val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
         val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          val b = batch.persist()
-          try {
-            b.withColumn("__batch", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("__batch").parquet(outDir)
-            StoreTable.append(
-              b.select(graft.operators.TextAnalysis.fingerprint(col(textCol)).as("fp"))
-                .distinct(),
-              s"${store}_fps")
-            fs.mkdirs(markers)
-            fs.createNewFile(marker)
-            // make the appended bucket files visible to every session's
-            // cached listing — the next micro-batch's static side and the
-            // caller's post-run reads both depend on it
-            s.catalog.refreshTable(s"${store}_fps")
-          } finally b.unpersist()
+        if (fs.exists(marker)) batch.write.format("noop").mode("overwrite").save()
+        else {
+          apply(batch.toDF(), batchId)
+          fs.mkdirs(markers)
+          fs.createNewFile(marker)
+          tables.foreach(s.catalog.refreshTable)
         }
-        () // the overloaded foreachBatch needs an unambiguous Unit body
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -553,7 +548,44 @@ object Streams {
     q.stop()
   }
 
-  /** the shared engine under the MEDIA streaming store-twins
+  /** overwrite batch `batchId`'s own `__batch=<id>` partition of `outDir`
+    * (dynamic partition overwrite): a redelivered batch rewrites its
+    * partition instead of appending duplicates, and an empty frame writes
+    * no partition, so it leaves the original in place. */
+  private def writeManifest(rows: DataFrame, batchId: Long,
+                            outDir: String): Unit =
+    rows.withColumn("__batch", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch").parquet(outDir)
+
+  /** one pass of store-backed streaming ingest with the survivor append
+    * CLOSED INTO THE LOOP: each micro-batch is deduped against the persisted
+    * fingerprint store ([[streamingDedupAgainstStore]] — stream-static
+    * anti-join + in-watermark dedup), survivors land in `outDir` AND their
+    * fingerprints append to the bucketed store, so the NEXT micro-batch
+    * (and the next restart) dedups against them too — the full production
+    * ingest shape, previously only proven on the batch side. Crash
+    * contract: [[ingestOnce]] (content-keyed). */
+  def runStoreIngestOnce(spark: SparkSession, inDir: String, outDir: String,
+                         checkpointDir: String, store: String,
+                         textCol: String = "text", tsCol: String = "ts",
+                         delay: String = "10 minutes"): Unit =
+    ingestOnce(spark, inDir, checkpointDir, "store_commits",
+      Seq(s"${store}_fps"),
+      streamingDedupAgainstStore(_, textCol, tsCol, store, delay)) {
+      (batch, batchId) =>
+        val b = batch.persist()
+        try {
+          writeManifest(b, batchId, outDir)
+          StoreTable.append(
+            b.select(graft.operators.TextAnalysis.fingerprint(col(textCol)).as("fp"))
+              .distinct(),
+            s"${store}_fps")
+        } finally b.unpersist()
+    }
+
+  /** the shared body of the MEDIA streaming store-twins
     * ([[runImageIngestOnce]] / [[runAudioIngestOnce]] /
     * [[runVideoIngestOnce]]): each micro-batch of media rows is hashed
     * (`hashFn` — real decode in the micro-batch's own executors), probed
@@ -561,105 +593,68 @@ object Streams {
     * updateStore = false), the surviving (genuinely new) ids land in
     * `outDir`, and only THEN do the survivors' banded hashes append to the
     * store — so the next micro-batch and the next restart dedup against
-    * them too.
+    * them too. The replay is content-keyed ([[ingestOnce]]).
     *
-    * At-least-once safety is CONTENT-keyed: a re-delivered batch's every
-    * hash is hamming-0 against its own previously appended store row, so
-    * the probe drops the whole replay and the dynamic-overwrite manifest
-    * write emits no partitions (an empty frame overwrites nothing — the
-    * original partition stays). The manifest-BEFORE-append order closes
-    * the TOTAL-loss crash window: with append first, a crash before the
-    * manifest write would make redelivery self-match and drop the batch
-    * with its manifest partition never written — the survivors
-    * permanently lost. A PARTIAL window remains, documented honestly: if
-    * the store append itself crashes after some of its task files became
-    * visible, redelivery self-matches those hashes and the
-    * dynamic-overwrite manifest rewrite replaces the batch partition with
-    * the reduced survivor set — ids whose hashes landed in the store
-    * vanish from the manifest. Skipping the rewrite when the partition
-    * already exists would close it but opens the restarted-checkpoint
-    * trap (a fresh checkpoint reuses batchId 0 with different data and
-    * the stale partition would mask it), so the residual is accepted:
-    * it requires a crash INSIDE one append job, and recovery is
-    * re-running the batch after deleting its partition + store batch
-    * rows in the maintenance window. Survivor ids are
-    * localCheckpoint-pinned so the append cannot re-run the probe
-    * against the store it is mutating. The commit markers remain as the
-    * fast path (a marked batch skips decode + probe entirely). */
-  private def runMediaIngestOnce(spark: SparkSession, inDir: String,
-                                 outDir: String, checkpointDir: String,
-                                 store: String, markerDirName: String,
-                                 idCol: String,
-                                 hashFn: DataFrame => DataFrame,
-                                 probe: DataFrame => DataFrame,
-                                 append: DataFrame => Unit): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    spark.catalog.refreshTable(s"${store}_bands")
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, markerDirName)
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
-        val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          val hashes = hashFn(batch.toDF()).localCheckpoint()
-          val survivorIds = probe(hashes).localCheckpoint()
-          survivorIds.withColumn("__batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch").parquet(outDir)
-          append(hashes.join(survivorIds, Seq(idCol), "left_semi"))
-          fs.mkdirs(markers)
-          fs.createNewFile(marker)
-          s.catalog.refreshTable(s"${store}_bands")
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    * A PARTIAL window remains: if the store append itself crashes after
+    * some of its task files became visible, redelivery self-matches those
+    * hashes and the dynamic-overwrite manifest rewrite replaces the batch
+    * partition with the reduced survivor set — ids whose hashes landed in
+    * the store vanish from the manifest. Skipping the rewrite when the
+    * partition already exists would close it but opens the
+    * restarted-checkpoint trap (a fresh checkpoint reuses batchId 0 with
+    * different data and the stale partition would mask it), so the
+    * residual is accepted: it requires a crash INSIDE one append job, and
+    * recovery is re-running the batch after deleting its partition + store
+    * batch rows in the maintenance window. Survivor ids are
+    * localCheckpoint-pinned so the append cannot re-run the probe against
+    * the store it is mutating. */
+  private def mediaBatch(outDir: String, idCol: String,
+                         hashFn: DataFrame => DataFrame,
+                         probe: DataFrame => DataFrame,
+                         append: DataFrame => Unit)
+                        (batch: DataFrame, batchId: Long): Unit = {
+    val hashes = hashFn(batch).localCheckpoint()
+    val survivorIds = probe(hashes).localCheckpoint()
+    writeManifest(survivorIds, batchId, outDir)
+    append(hashes.join(survivorIds, Seq(idCol), "left_semi"))
   }
 
   /** one pass of streaming IMAGE ingest against the perceptual-hash store
     * ([[graft.operators.Dedup.writeWideHashStore]] at kind `image_dhash`)
-    * — the image member of
-    * the streaming store-twin family (engine + crash-safety contract:
-    * [[runMediaIngestOnce]]). */
+    * — the image member of the streaming store-twin family
+    * ([[mediaBatch]]). */
   def runImageIngestOnce(spark: SparkSession, inDir: String, outDir: String,
                          checkpointDir: String, store: String,
                          maxHamming: Int = 6): Unit =
-    runMediaIngestOnce(spark, inDir, outDir, checkpointDir, store,
-      "img_commits", "media_id",
+    ingestOnce(spark, inDir, checkpointDir, "img_commits",
+      Seq(s"${store}_bands"))(mediaBatch(outDir, "media_id",
       b => graft.operators.Multimodal.imageDHashWide(b),
       h => graft.operators.Dedup.wideHashDedupAgainst(
         h, "media_id", store, "image_dhash", maxHamming, updateStore = false),
       h => graft.operators.Dedup.appendWideHashes(
-        h, "media_id", store, "image_dhash", maxHamming))
+        h, "media_id", store, "image_dhash", maxHamming)))
 
   /** one pass of streaming AUDIO ingest against the energy-envelope hash
     * store ([[graft.operators.Dedup.writeWideHashStore]] at kind
-    * `audio_ehash`) — the audio
-    * member of the streaming store-twin family (engine + crash-safety
-    * contract: [[runMediaIngestOnce]]). */
+    * `audio_ehash`) — the audio member of the streaming store-twin family
+    * ([[mediaBatch]]). */
   def runAudioIngestOnce(spark: SparkSession, inDir: String, outDir: String,
                          checkpointDir: String, store: String,
                          maxHamming: Int = 6): Unit =
-    runMediaIngestOnce(spark, inDir, outDir, checkpointDir, store,
-      "aud_commits", "media_id",
+    ingestOnce(spark, inDir, checkpointDir, "aud_commits",
+      Seq(s"${store}_bands"))(mediaBatch(outDir, "media_id",
       b => graft.operators.Multimodal.audioEnergyHashWide(b),
       h => graft.operators.Dedup.wideHashDedupAgainst(
         h, "media_id", store, "audio_ehash", maxHamming, updateStore = false),
       h => graft.operators.Dedup.appendWideHashes(
-        h, "media_id", store, "audio_ehash", maxHamming))
+        h, "media_id", store, "audio_ehash", maxHamming)))
 
   /** one pass of streaming VIDEO ingest against the per-frame hash store
     * ([[graft.operators.Dedup.writeVideoHashStore]]) — the video member of
-    * the streaming store-twin family (engine + crash-safety contract:
-    * [[runMediaIngestOnce]]; the probe's short-clip vote clamp in
-    * [[graft.operators.Dedup.videoDedupAgainst]] is what makes a replayed
-    * clip self-match regardless of its frame count). */
+    * the streaming store-twin family ([[mediaBatch]]; the probe's
+    * short-clip vote clamp in [[graft.operators.Dedup.videoDedupAgainst]]
+    * is what makes a replayed clip self-match regardless of its frame
+    * count). */
   def runVideoIngestOnce(spark: SparkSession, inDir: String, outDir: String,
                          checkpointDir: String, store: String,
                          maxHamming: Int = 6,
@@ -669,14 +664,14 @@ object Streams {
                          // at a different everyK refuses loudly instead of
                          // silently diluting the frame-aligned vote
                          everyK: Int = 1): Unit =
-    runMediaIngestOnce(spark, inDir, outDir, checkpointDir, store,
-      "vid_commits", "media_id",
+    ingestOnce(spark, inDir, checkpointDir, "vid_commits",
+      Seq(s"${store}_bands"))(mediaBatch(outDir, "media_id",
       b => graft.operators.Multimodal.videoDHashWide(b, everyK = everyK),
       h => graft.operators.Dedup.videoDedupAgainst(
         h, "media_id", store, maxHamming, minMatchedFrames,
         updateStore = false, everyK = everyK),
       h => graft.operators.Dedup.appendVideoFrameHashes(
-        h, "media_id", store, maxHamming, everyK = everyK))
+        h, "media_id", store, maxHamming, everyK = everyK)))
 
   /** one pass of STREAMING CURATION gated by the persisted corpus LM
     * ([[graft.operators.TextAnalysis.writeLmStore]]): each micro-batch is
@@ -684,84 +679,35 @@ object Streams {
     * ([[graft.operators.TextAnalysis.lmPerplexityAgainst]] — CCNet
     * semantics; a refit-per-micro-batch gate would move its threshold
     * with every batch's composition, which is exactly what a streaming
-    * pass cannot tolerate) and the kept rows land in `outDir`.
-    * Idempotence is trivial by READ-ONLY construction: the store is never
-    * written, the gate is a pure function of (batch, store), and the
-    * survivor manifest overwrites its own `__batch` partition — a
-    * re-delivered batch rewrites identical content. */
+    * pass cannot tolerate) and the kept rows land in `outDir`. The store
+    * is read-only, so a replay rewrites identical content ([[ingestOnce]]). */
   def runLmGateOnce(spark: SparkSession, inDir: String, outDir: String,
                     checkpointDir: String, store: String,
                     maxPpl: Double,
                     idCol: String = "doc_id",
-                    textCol: String = "text"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    Seq(s"${store}_pairs", s"${store}_ctx")
-      .foreach(t => spark.catalog.refreshTable(t))
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-        val kept = graft.operators.TextAnalysis.lmPerplexityAgainst(
-            b, idCol, textCol, store, maxPpl)
-          .filter(col("kept")).select(idCol)
-        b.join(kept, Seq(idCol), "left_semi")
-          .withColumn("__batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                    textCol: String = "text"): Unit =
+    ingestOnce(spark, inDir, checkpointDir, "lm_commits",
+      Seq(s"${store}_pairs", s"${store}_ctx")) { (b, batchId) =>
+      val kept = graft.operators.TextAnalysis.lmPerplexityAgainst(
+          b, idCol, textCol, store, maxPpl)
+        .filter(col("kept")).select(idCol)
+      writeManifest(b.join(kept, Seq(idCol), "left_semi"), batchId, outDir)
+    }
 
   /** one pass of streaming ingest into the SEARCH index: each micro-batch's
-    * postings append to the inverted index ([[graft.operators.Search
-    * .appendInvertedIndex]] — bucket spec from the store's own metadata).
-    * Idempotence is CORRECTNESS-critical here, not just hygiene: a
-    * re-delivered batch's duplicate fingerprint rows cannot change an
-    * anti-join, but duplicate POSTINGS would inflate every affected term's
-    * tf and doc-freq. foreachBatch is at-least-once, so the guarantee
-    * cannot rest on marker-write ordering alone (a crash between the
-    * append and the marker would replay into a double append) — the
-    * append itself is keyed by batchId: `appendInvertedIndex(batchId)`
-    * tags every row and skips any table that already holds the batch,
-    * recovering exactly even from a crash BETWEEN the postings and terms
-    * appends. The commit markers remain as a fast path (a marked batch
-    * skips the whole call, probe included); they live under the
-    * checkpoint dir so they recover or reset together with the batchId
-    * sequence. */
+    * postings append to the inverted index
+    * ([[graft.operators.Search.appendInvertedIndex]] at the batchId).
+    * Exactly-once is correctness-critical here, not hygiene: duplicate
+    * POSTINGS would inflate every affected term's tf and doc-freq
+    * ([[ingestOnce]]: in-data gate). */
   def runSearchIngestOnce(spark: SparkSession, inDir: String,
                           checkpointDir: String, store: String,
                           idCol: String = "doc_id",
-                          textCol: String = "text"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    spark.catalog.refreshTable(s"${store}_postings")
-    spark.catalog.refreshTable(s"${store}_terms")
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, "index_commits")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
-        val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          graft.operators.Search.appendInvertedIndex(
-            batch.toDF(), idCol, textCol, store, batchId)
-          fs.mkdirs(markers)
-          fs.createNewFile(marker)
-          s.catalog.refreshTable(s"${store}_postings")
-          s.catalog.refreshTable(s"${store}_terms")
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                          textCol: String = "text"): Unit =
+    ingestOnce(spark, inDir, checkpointDir, "index_commits",
+      Seq(s"${store}_postings", s"${store}_terms")) { (b, batchId) =>
+      graft.operators.Search.appendInvertedIndex(b, idCol, textCol, store, batchId)
+    }
 
   /** one pass of streaming CDC ingest into the SCD2 HISTORY store: each
     * micro-batch of change rows (payload columns + `opCol` ∈ {"upsert",
@@ -771,214 +717,103 @@ object Streams {
     * batch and batchIds continue monotonically across restarts (they come
     * from the checkpoint).
     *
-    * foreachBatch is at-least-once and here idempotency is CORRECTNESS-
-    * critical, not hygiene: re-merging an already-applied batch b would
-    * close every version it opened at valid_to = b (a degenerate empty
-    * interval) AND open duplicate versions. Like the search index's
-    * batchId keying, the guarantee is IN-DATA, not marker-ordering: a
-    * batch whose id already appears in the history's valid_from or
-    * valid_to columns has been applied — the probe and the merge read the
-    * same table, so recovery is exact even from a crash between the store
-    * swap and the marker write (an empty redelivered batch leaves no
-    * trace, and re-merging nothing is a no-op). The commit markers remain
-    * as the fast path and live under the checkpoint dir so they recover
-    * or reset together with the batchId sequence; the interrupted-swap
-    * repair ([[graft.sources.StoreTable.recoverStoreSwap]]) runs inside
-    * scd2MergeIntoStore itself.
-    *
-    * Contract (same as the search index's batchId keying): the guard
-    * assumes a stable batchId→content mapping, which one checkpoint
-    * lineage guarantees (redelivery replays the SAME files). Wiping the
-    * checkpoint is safe only while the input set is unchanged — the
-    * restarted batch 0 re-bundles the same content and skips; replaying
-    * DIFFERENT data under an already-applied version number is operator
-    * error, as in any CDC system. */
+    * Exactly-once is correctness-critical: re-merging an applied batch b
+    * would close every version it opened at valid_to = b (a degenerate
+    * empty interval) AND open duplicate versions. A batch whose version
+    * already appears in the history's valid_from or valid_to has been
+    * applied — the probe and the merge read the same table, so recovery is
+    * exact even from a crash between the store swap and the marker (an
+    * empty redelivered batch leaves no trace, and re-merging nothing is a
+    * no-op). Replaying DIFFERENT data under an applied version number is
+    * operator error, as in any CDC system ([[ingestOnce]]). The
+    * interrupted-swap repair ([[graft.sources.StoreTable.recoverStoreSwap]])
+    * runs before the stream binds and inside scd2MergeIntoStore. */
   def runScd2IngestOnce(spark: SparkSession, inDir: String,
                         checkpointDir: String, table: String,
                         keyCol: String, opCol: String = "op"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
     StoreTable.recoverStoreSwap(spark, table)
-    spark.catalog.refreshTable(table)
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, "scd2_commits")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    ingestOnce(spark, inDir, checkpointDir, "scd2_commits", Seq(table)) {
+      (batch, batchId) =>
         val s = batch.sparkSession
-        val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
-        val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          val b = batchId + 1L
-          val applied = graft.sources.Sources.openStoreTable(s, table)
-            .filter(col("valid_from") === b || col("valid_to") === b)
-            .take(1).nonEmpty
-          if (!applied)
-            graft.sources.Sources.scd2MergeIntoStore(
-              s, table, batch.toDF(), keyCol, b, opCol)
-          fs.mkdirs(markers)
-          fs.createNewFile(marker)
-          s.catalog.refreshTable(table)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        val b = batchId + 1L
+        val applied = graft.sources.Sources.openStoreTable(s, table)
+          .filter(col("valid_from") === b || col("valid_to") === b)
+          .take(1).nonEmpty
+        if (!applied)
+          graft.sources.Sources.scd2MergeIntoStore(s, table, batch, keyCol, b, opCol)
+    }
   }
 
   /** one pass of streaming ANN-index ingest: each micro-batch of vector
     * rows is PQ-ENCODED under the fingerprint-checked model and appended
     * to the [[graft.operators.Similarity.writePqStore]] code store via
-    * [[graft.operators.Similarity.appendPqStore]] — the search-index
-    * ingest architecture ([[runSearchIngestOnce]]) carried to the vector
-    * side: filesystem markers make replay cheap, but the guarantee is
-    * IN-DATA (the `__batch` tag gate), which survives a crash between
-    * append and marker. Probes against the store see each batch's vectors
-    * as soon as its append commits; the codebooks themselves are FROZEN at
-    * fit time (the standard production contract — re-fitting requires a
-    * store rebuild, which the fingerprint check enforces loudly). */
+    * [[graft.operators.Similarity.appendPqStore]] at the batchId
+    * ([[ingestOnce]]: in-data gate). Probes see each batch's vectors as
+    * soon as its append commits; the codebooks are FROZEN at fit time
+    * (re-fitting requires a store rebuild, which the fingerprint check
+    * enforces loudly). */
   def runPqIngestOnce(spark: SparkSession, inDir: String,
                       checkpointDir: String, store: String,
                       model: graft.operators.Similarity.PqModel,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    spark.catalog.refreshTable(s"${store}_pq")
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, "pq_commits")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
-        val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          graft.operators.Similarity.appendPqStore(
-            batch.toDF(), idCol, vecCol, model, store, batchId)
-          fs.mkdirs(markers)
-          fs.createNewFile(marker)
-          s.catalog.refreshTable(s"${store}_pq")
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                      vecCol: String = "embedding"): Unit =
+    ingestOnce(spark, inDir, checkpointDir, "pq_commits", Seq(s"${store}_pq")) {
+      (b, batchId) =>
+        graft.operators.Similarity.appendPqStore(b, idCol, vecCol, model, store, batchId)
+    }
 
   /** one pass of streaming BYTE-LEVEL ingest admission: each micro-batch
     * of blob rows runs the tagged [[graft.operators.Dedup.cdcDedupAgainst]]
     * (chunk, probe the accreted chunk store, append the store-new chunks)
-    * — the blob-lake ingest architecture, completing the streaming twin
-    * family across all six store modalities. Exactly-once is IN-DATA (the
-    * `__batch` tag: a replayed batchId probes the store as-of before its
-    * own append and skips the double-append), so a fresh-checkpoint replay
-    * converges to the same store state; filesystem markers only make the
-    * replay cheap. The per-batch admission reports are the streaming
-    * byproduct a 100 TB ingest alerts on ("this crawl is 95% dup bytes —
-    * stop paying for it"); they land under `reportDir/batch=<id>` so a
-    * replay overwrites, never duplicates, a batch's report. */
+    * at the batchId ([[ingestOnce]]: in-data gate; the probe excludes the
+    * batch's own rows, so a replay reports what the first run reported).
+    * The per-batch admission reports are the streaming byproduct a 100 TB
+    * ingest alerts on ("this crawl is 95% dup bytes — stop paying for
+    * it"); they land under `reportDir/batch=<id>` so a replay overwrites,
+    * never duplicates, a batch's report. */
   def runCdcIngestOnce(spark: SparkSession, inDir: String,
                        checkpointDir: String, store: String,
                        reportDir: String,
                        idCol: String = "doc_id",
-                       bytesCol: String = "blob"): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    spark.catalog.refreshTable(s"${store}_chunks")
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, "cdc_commits")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
-        val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          graft.operators.Dedup.cdcDedupAgainst(batch.toDF(), idCol, bytesCol,
-              store, updateStore = true, batchId = batchId)
-            .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
-          fs.mkdirs(markers)
-          fs.createNewFile(marker)
-          s.catalog.refreshTable(s"${store}_chunks")
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                       bytesCol: String = "blob"): Unit =
+    ingestOnce(spark, inDir, checkpointDir, "cdc_commits",
+      Seq(s"${store}_chunks")) { (b, batchId) =>
+      graft.operators.Dedup.cdcDedupAgainst(b, idCol, bytesCol,
+          store, updateStore = true, batchId = batchId)
+        .write.mode("overwrite").parquet(s"$reportDir/batch=$batchId")
+    }
 
   /** one pass of streaming frequency-sketch ingest — the CMS heavy-hitter
     * twin of [[runCardIngestOnce]]: each micro-batch appends ONE
     * count-min-sketch row to the
-    * [[graft.operators.Profiling.writeFrequencyStore]] store. Same
-    * exactly-once shape: the in-data `__batch` tag gate survives a
-    * fresh-checkpoint replay, the seed row is tagged -1, filesystem
-    * markers only make replay cheap. */
+    * [[graft.operators.Profiling.writeFrequencyStore]] store at the
+    * batchId ([[ingestOnce]]: in-data gate, compacted watermark included;
+    * the seed row is tagged -1). */
   def runFreqIngestOnce(spark: SparkSession, inDir: String,
                         checkpointDir: String, store: String,
                         valueCol: String, eps: Double, confidence: Double,
-                        seed: Int): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    spark.catalog.refreshTable(store)
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, "freq_commits")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
-        val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          graft.operators.Profiling.appendFrequencySketch(s, store,
-            batch.toDF(), col(valueCol), eps, confidence, seed, batchId)
-          fs.mkdirs(markers)
-          fs.createNewFile(marker)
-          s.catalog.refreshTable(store)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                        seed: Int): Unit =
+    ingestOnce(spark, inDir, checkpointDir, "freq_commits", Seq(store)) {
+      (b, batchId) =>
+        graft.operators.Profiling.appendFrequencySketch(b.sparkSession, store,
+          b, col(valueCol), eps, confidence, seed, batchId)
+    }
 
   /** one pass of streaming cardinality-sketch ingest: each micro-batch
     * appends its per-group HLL sketch rows to the
-    * [[graft.operators.Profiling.writeCardinalityStore]] store — the
-    * distinct-count tracker of a CONTINUOUS ingest, completing the
-    * streaming twin family's seventh store modality. Exactly-once is
-    * IN-DATA (appendCardinalitySketches' `__batch` tag gate skips a
-    * replayed batchId even under a fresh checkpoint, whose batchIds
-    * restart at 0 — the seed write tags itself -1 so a stream can never
-    * collide with it); filesystem markers only make replay cheap.
+    * [[graft.operators.Profiling.writeCardinalityStore]] store at the
+    * batchId — the distinct-count tracker of a CONTINUOUS ingest
+    * ([[ingestOnce]]: in-data gate, compacted watermark included; the seed
+    * write tags itself -1 so a stream can never collide with it).
     * Estimate probes ([[graft.operators.Profiling.cardinalityEstimates]])
     * see each batch's contribution as soon as its append commits. */
   def runCardIngestOnce(spark: SparkSession, inDir: String,
                         checkpointDir: String, store: String,
                         groupCol: String, valueCol: String,
-                        lgK: Int): Unit = {
-    val schema = spark.read.parquet(inDir).schema
-    spark.catalog.refreshTable(store)
-    val markers = new org.apache.hadoop.fs.Path(checkpointDir, "card_commits")
-    val q = spark.readStream.schema(schema).parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val fs = markers.getFileSystem(s.sessionState.newHadoopConf())
-        val marker = new org.apache.hadoop.fs.Path(markers, batchId.toString)
-        if (!fs.exists(marker)) {
-          graft.operators.Profiling.appendCardinalitySketches(s, store,
-            batch.toDF(), groupCol, col(valueCol), lgK, batchId)
-          fs.mkdirs(markers)
-          fs.createNewFile(marker)
-          s.catalog.refreshTable(store)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
+                        lgK: Int): Unit =
+    ingestOnce(spark, inDir, checkpointDir, "card_commits", Seq(store)) {
+      (b, batchId) =>
+        graft.operators.Profiling.appendCardinalitySketches(b.sparkSession,
+          store, b, groupCol, col(valueCol), lgK, batchId)
+    }
 }

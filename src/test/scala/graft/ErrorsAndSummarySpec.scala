@@ -128,6 +128,18 @@ class ErrorsAndSummarySpec extends AnyFunSuite {
     assert(e.getMessage.contains("q_typo"))
   }
 
+  test("SPARK_GRAFT_EXTRA_CONF: pairs parse once, a pair without '=' fails by name") {
+    assert(ToolSession.parseExtraConf(None).isEmpty)
+    assert(ToolSession.parseExtraConf(Some("a.b=1;c=x=y")) ==
+      Seq("a.b" -> "1", "c" -> "x=y"))
+    Seq("a.b=1;oops", "=1").foreach { spec =>
+      val e = intercept[IllegalArgumentException](
+        ToolSession.parseExtraConf(Some(spec)))
+      assert(e.getMessage.contains("SPARK_GRAFT_EXTRA_CONF") &&
+        e.getMessage.contains("malformed pair"), e.getMessage)
+    }
+  }
+
   test("frame summary switches raw↔summary at nrow 10 (cl-data-frame.lisp:463-476)") {
     val small = DF(spark, "x" -> Seq(1, 2, 3))
     assert(!Summary.frameSummary(small.toSpark).contains("%")) // raw rows

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Curation, TextAnalysis}
+import graft.operators.{Curation, Profiling, Search, Similarity, TextAnalysis}
 
 /** Spark-job budgets of the composed pipelines: at this scale a pass is
   * bound by per-job latency, so a change that adds a job to a pipeline must
@@ -70,5 +71,38 @@ class JobBudgetSpec extends AnyFunSuite {
     // 36 before the row-local decontamination filter, the min-id span
     // dedup and the single-checkpoint MinHash
     assert(jobs <= 21, s"curateFull ran $jobs Spark jobs, budget 21")
+  }
+
+  test("tagged store appends run within their job budgets, replays cheaper") {
+    val docs = (1 to 40).map(i => (s"g${i % 3}", s"v${i % 17}")).toDF("g", "v")
+    val text = (1 to 30).map(i => (i.toLong, s"the cat sat on mat $i and ran t${i % 4}"))
+      .toDF("doc_id", "text")
+    def vec(s: Int): Seq[Float] = Array.tabulate(8)(j => math.sin(s * 7 + j).toFloat).toSeq
+    val vecs = (1L to 20L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
+    val model = Similarity.pqFit(vecs.orderBy("vec_id"), "embedding", m = 2, ksub = 4)
+    val tables = Seq("jb_card", "jb_lm_pairs", "jb_lm_ctx", "jb_pq_pq",
+      "jb_idx_postings", "jb_idx_terms")
+    try {
+      Profiling.writeCardinalityStore(docs, "g", col("v"), "jb_card", lgK = 12, nBuckets = 4)
+      TextAnalysis.writeLmStore(text, "text", "jb_lm", nBuckets = 4)
+      Similarity.writePqStore(vecs, "vec_id", "embedding", model, "jb_pq", nBuckets = 4)
+      Search.writeInvertedIndex(text, "doc_id", "text", "jb_idx", nBuckets = 4)
+      // (append, replay) budgets: one presence probe (two jobs under AQE)
+      // per table, plus the append itself
+      val budgets = Seq[(String, Long => Unit, (Int, Int))](
+        ("sketch", t => Profiling.appendCardinalitySketches(spark, "jb_card", docs,
+          "g", col("v"), 12, t), (5, 2)),
+        ("LM", t => TextAnalysis.appendLmCounts(spark, "jb_lm", text, "text", t), (11, 5)),
+        ("PQ", t => Similarity.appendPqStore(vecs, "vec_id", "embedding", model,
+          "jb_pq", t), (4, 2)),
+        ("inverted index", t => Search.appendInvertedIndex(text, "doc_id", "text",
+          "jb_idx", t), (13, 4)))
+      budgets.foreach { case (name, append, (first, replay)) =>
+        val jobs = (jobsOf(append(1L)), jobsOf(append(1L)))
+        assert(jobs._1 <= first && jobs._2 <= replay,
+          s"$name append ran ${jobs._1} jobs (budget $first), replay ${jobs._2} " +
+            s"(budget $replay)")
+      }
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }

@@ -1648,6 +1648,21 @@ class OperatorsSpec extends AnyFunSuite {
       et == Seq(0L, 0L))
   }
 
+  test("globalPrefixSums: NULL order keys fail by name, some or all of them") {
+    import graft.operators.Relational
+    val some = Seq((Some(1L), 5L), (None, 7L), (Some(3L), 2L))
+      .toDF("id", "v").repartition(2)
+    val all = Seq((Option.empty[Long], 5L), (None, 7L)).toDF("id", "v")
+    Seq(some -> 1, all -> 2).foreach { case (df, nulls) =>
+      val e = intercept[IllegalArgumentException] {
+        val (out, _) = Relational.globalPrefixSums(df, "id", Seq("v"), Seq("p"))
+        out.collect()
+      }
+      assert(e.getMessage.contains(s"$nulls NULL key") &&
+        e.getMessage.contains("'id'"), e.getMessage)
+    }
+  }
+
   test("searchBM25: Okapi ranking with inline dl, nanos-exact scores") {
     import graft.operators.Search
     val d = Seq(
@@ -1900,7 +1915,7 @@ class OperatorsSpec extends AnyFunSuite {
       val b3 = Seq((4L, "scan solo")).toDF("doc_id", "text")
       val b3posts = Seq(("scan", 4L, 1L, 2L), ("solo", 4L, 1L, 2L))
         .toDF("term", "doc_id", "tf", "dl")
-      Search.appendBatchOnce(spark, b3posts, "graft_search_idem_postings",
+      graft.sources.StoreTable.appendOnce(b3posts, "graft_search_idem_postings",
         batchId = 9L)
       val partial = state
       // torn-window READ semantics (postings visible, terms missing): a

@@ -17,14 +17,22 @@ class StoreTableSpec extends AnyFunSuite {
     val core = new java.io.File(root, "graft/sources/StoreTable.scala").getCanonicalFile
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val forbidden = "(?i)TBLPROPERTIES|RENAME\\s+TO".r
-    val hits = for {
-      f <- files(root) if f.getName.endsWith(".scala") && f.getCanonicalFile != core
+    // also the exactly-once gate: a `__batch` presence probe belongs to
+    // StoreTable.appendOnce, and one foreachBatch driver runs every pass
+    val forbidden = "(?i)TBLPROPERTIES|RENAME\\s+TO|col\\(\"__batch\"\\)\\s*===".r
+    val lines = for {
+      f <- files(root) if f.getName.endsWith(".scala")
       (line, n) <- scala.io.Source.fromFile(f, "UTF-8").getLines().zipWithIndex
-      if forbidden.findFirstIn(line).nonEmpty
-    } yield s"${f.getPath}:${n + 1}: ${line.trim}"
-    assert(hits.isEmpty, "catalog state touched outside StoreTable:\n" +
+    } yield (f, s"${f.getPath}:${n + 1}: ${line.trim}", line)
+    val hits = lines.collect {
+      case (f, at, line) if f.getCanonicalFile != core &&
+        forbidden.findFirstIn(line).nonEmpty => at
+    }
+    assert(hits.isEmpty, "catalog state or batch gate outside StoreTable:\n" +
       hits.mkString("\n"))
+    val drivers = lines.collect { case (_, at, line) if line.contains(".foreachBatch {") => at }
+    assert(drivers.length == 1, "one foreachBatch driver expected:\n" +
+      drivers.mkString("\n"))
   }
 
   test("bucketSpec reads the catalog and fails by name on an unbucketed table") {

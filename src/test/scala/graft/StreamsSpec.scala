@@ -1283,4 +1283,177 @@ class StreamsSpec extends AnyFunSuite {
       spark.sql("DROP TABLE IF EXISTS graft_carding_rebuild")
     }
   }
+
+  /** one store-backed streaming pass under redelivery: `seed` builds the
+    * store, `drops` land one at a time in the input directory, and `run`
+    * processes everything available with the checkpoint `ckpt`. */
+  private case class Redelivered(name: String, markerDir: String,
+                                 tables: Seq[String], outputs: Seq[String],
+                                 seed: () => Unit,
+                                 drops: Seq[org.apache.spark.sql.DataFrame],
+                                 run: (String, String, String) => Unit)
+
+  test("every store-backed pass absorbs a redelivered last batch, with or without its marker") {
+    import graft.operators.{Dedup, Multimodal, Profiling, Search, Similarity, TextAnalysis}
+    import graft.sources.{Sources, StoreTable}
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_redeliver").toString
+    def out(p: String) = s"$base/$p/out"
+    def docs(rows: (Long, String, String)*) =
+      rows.map { case (id, text, t) => (id, text, ts(t)) }.toDF("doc_id", "text", "ts")
+    def bytes(n: Int, seed: Long): Array[Byte] = {
+      var x = seed
+      Array.fill(n) { x = x * 6364136223846793005L + 1442695040888963407L
+        (x >>> 33).toByte }
+    }
+    def vec(seed: Int): Seq[Float] =
+      Array.tabulate(8)(j => math.sin(seed * 7 + j).toFloat).toSeq
+    def lmDoc(i: Int, p: String) =
+      (i.toLong, s"the cat sat on the mat $p$i and the dog ran t${i % 5}")
+    lazy val png = Multimodal.encodeSyntheticPngGroups(
+      (0L until 16L).toDF("doc_id"), "doc_id").localCheckpoint()
+    lazy val wav = Multimodal.encodeSyntheticWavGroups(
+      (0L until 16L).toDF("doc_id"), "doc_id").localCheckpoint()
+    lazy val avi = Multimodal.encodeSyntheticAviGroups(
+      (0L until 16L).toDF("doc_id"), "doc_id").localCheckpoint()
+    def media(m: org.apache.spark.sql.DataFrame) =
+      Seq(m.filter(col("media_id").between(8, 11)),
+        m.filter(col("media_id") >= 12))
+    lazy val pqSeed = (1L to 20L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")
+    lazy val pqModel = Similarity.pqFit(pqSeed.orderBy("vec_id"), "embedding",
+      m = 2, ksub = 4)
+    val passes = Seq(
+      Redelivered("fingerprint store", "store_commits", Seq("graft_rd_fp_fps"),
+        Seq(out("fp")),
+        () => Dedup.writeFingerprintStore(docs((100L, "alpha doc kept",
+          "2024-01-01 10:00:00")), "text", "graft_rd_fp", nBuckets = 2),
+        // the second drop stays inside the first one's watermark, so the
+        // last batch is the one that carries it
+        Seq(docs((1L, "alpha doc kept", "2024-01-01 10:00:00"),
+            (2L, "bravo new doc", "2024-01-01 10:00:05")),
+          docs((3L, "charlie fresh", "2024-01-01 10:00:03"),
+            (4L, "bravo new doc", "2024-01-01 10:00:04"))),
+        (in, o, ck) => Streams.runStoreIngestOnce(spark, in, o, ck, "graft_rd_fp")),
+      Redelivered("image", "img_commits", Seq("graft_rd_img_bands"), Seq(out("img")),
+        () => Dedup.writeWideHashStore(
+          Multimodal.imageDHashWide(png.filter(col("media_id") < 8)),
+          "media_id", "graft_rd_img", "image_dhash", maxHamming = 6, nBuckets = 2),
+        media(png),
+        (in, o, ck) => Streams.runImageIngestOnce(spark, in, o, ck, "graft_rd_img")),
+      Redelivered("audio", "aud_commits", Seq("graft_rd_aud_bands"), Seq(out("aud")),
+        () => Dedup.writeWideHashStore(
+          Multimodal.audioEnergyHashWide(wav.filter(col("media_id") < 8)),
+          "media_id", "graft_rd_aud", "audio_ehash", maxHamming = 6, nBuckets = 2),
+        media(wav),
+        (in, o, ck) => Streams.runAudioIngestOnce(spark, in, o, ck, "graft_rd_aud")),
+      Redelivered("video", "vid_commits", Seq("graft_rd_vid_bands"), Seq(out("vid")),
+        () => Dedup.writeVideoHashStore(
+          Multimodal.videoDHashWide(avi.filter(col("media_id") < 8), everyK = 1),
+          "media_id", "graft_rd_vid", maxHamming = 6, nBuckets = 2),
+        media(avi),
+        (in, o, ck) => Streams.runVideoIngestOnce(spark, in, o, ck, "graft_rd_vid")),
+      Redelivered("LM gate", "lm_commits", Seq("graft_rd_lm_pairs", "graft_rd_lm_ctx"),
+        Seq(out("lm")),
+        () => TextAnalysis.writeLmStore((1 to 50).map(i => lmDoc(i, "r"))
+          .toDF("doc_id", "text"), "text", "graft_rd_lm", nBuckets = 2),
+        Seq(((100 to 104).map(i => lmDoc(i, "s")) :+ (200L, "zz yy xx ww vv"))
+            .toDF("doc_id", "text"),
+          ((105 to 109).map(i => lmDoc(i, "s")) :+ (201L, "uu tt ss rr qq"))
+            .toDF("doc_id", "text")),
+        (in, o, ck) => Streams.runLmGateOnce(spark, in, o, ck, "graft_rd_lm",
+          maxPpl = 30.0)),
+      Redelivered("search index", "index_commits",
+        Seq("graft_rd_idx_postings", "graft_rd_idx_terms"), Nil,
+        () => Search.writeInvertedIndex(Seq((1L, "scan join scan"),
+          (2L, "join alone")).toDF("doc_id", "text"), "doc_id", "text",
+          "graft_rd_idx", nBuckets = 2),
+        Seq(Seq((3L, "scan join join")).toDF("doc_id", "text"),
+          Seq((4L, "scan join"), (5L, "nothing relevant")).toDF("doc_id", "text")),
+        (in, _, ck) => Streams.runSearchIngestOnce(spark, in, ck, "graft_rd_idx")),
+      Redelivered("SCD2", "scd2_commits", Seq("graft_rd_scd2"), Nil,
+        () => Sources.writeBucketed(Sources.scd2Init(
+          Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L), "graft_rd_scd2", "id", 2),
+        Seq(Seq((2L, "b2", "upsert"), (3L, "c", "upsert")).toDF("id", "v", "op"),
+          Seq((1L, null.asInstanceOf[String], "delete"), (3L, "c2", "upsert"))
+            .toDF("id", "v", "op")),
+        (in, _, ck) => Streams.runScd2IngestOnce(spark, in, ck, "graft_rd_scd2", "id")),
+      Redelivered("PQ", "pq_commits", Seq("graft_rd_pq_pq"), Nil,
+        () => Similarity.writePqStore(pqSeed, "vec_id", "embedding", pqModel,
+          "graft_rd_pq", nBuckets = 2),
+        Seq((21L to 25L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding"),
+          (26L to 30L).map(i => (i, vec(i.toInt))).toDF("vec_id", "embedding")),
+        (in, _, ck) => Streams.runPqIngestOnce(spark, in, ck, "graft_rd_pq", pqModel)),
+      Redelivered("CDC", "cdc_commits", Seq("graft_rd_cdc_chunks"), Seq(out("cdc")),
+        () => Dedup.writeChunkStore(Dedup.cdcChunks((1L to 6L)
+          .map(i => (i, bytes(1500, i))).toDF("doc_id", "blob"), "doc_id", "blob"),
+          "graft_rd_cdc", nBuckets = 2),
+        Seq(Seq((100L, bytes(1500, 77L)), (101L, Array[Byte](9) ++ bytes(1500, 3L)))
+            .toDF("doc_id", "blob"),
+          Seq((102L, bytes(1500, 78L) ++ bytes(500, 77L)))
+            .toDF("doc_id", "blob")),
+        (in, o, ck) => Streams.runCdcIngestOnce(spark, in, ck, "graft_rd_cdc", o)),
+      Redelivered("frequency", "freq_commits", Seq("graft_rd_freq"), Nil,
+        () => Profiling.writeFrequencyStore((1 to 300).map(i => s"s${i % 29}")
+          .toDF("v"), col("v"), "graft_rd_freq", eps = 0.01),
+        Seq((1 to 200).map(i => s"t${i % 31}").toDF("v"),
+          (1 to 200).map(i => s"u${i % 17}").toDF("v")),
+        (in, _, ck) => Streams.runFreqIngestOnce(spark, in, ck, "graft_rd_freq",
+          "v", eps = 0.01, confidence = 0.99, seed = 42)),
+      Redelivered("cardinality", "card_commits", Seq("graft_rd_card"), Nil,
+        () => Profiling.writeCardinalityStore((1 to 200)
+          .map(i => (s"g${i % 2}", s"s${i % 30}")).toDF("g", "v"), "g", col("v"),
+          "graft_rd_card", lgK = 12),
+        Seq((1 to 200).map(i => (s"g${i % 2}", s"t${i % 25}")).toDF("g", "v"),
+          (1 to 200).map(i => (s"g${i % 3}", s"u${i % 20}")).toDF("g", "v")),
+        (in, _, ck) => Streams.runCardIngestOnce(spark, in, ck, "graft_rd_card",
+          "g", "v", lgK = 12)))
+    assert(passes.map(_.markerDir).distinct.length == 11)
+
+    def cell(v: Any): String = v match {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case null => "null"
+      case other => other.toString
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(cell).mkString("|")).toSeq.sorted
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def delete(p: String): Unit = {
+      val path = new org.apache.hadoop.fs.Path(p)
+      fs.delete(path, false)
+      fs.delete(new org.apache.hadoop.fs.Path(path.getParent, s".${path.getName}.crc"), false)
+    }
+    try passes.foreach { p =>
+      val dir = s"$base/${p.markerDir}"
+      val (in, ckpt) = (s"$dir/in", s"$dir/ckpt")
+      val o = p.outputs.headOption.getOrElse(s"$dir/unused")
+      p.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      p.seed()
+      p.drops.foreach { d =>
+        d.write.mode("append").parquet(in)
+        p.run(in, o, ckpt)
+      }
+      def snapshot: Seq[String] = {
+        p.tables.foreach(t => spark.catalog.refreshTable(t))
+        p.tables.flatMap(t => rows(spark.table(t)) ++
+          StoreTable.props(spark, t).toSeq.sorted.map(_.toString)) ++
+          p.outputs.flatMap(d => rows(spark.read.parquet(d)))
+      }
+      val before = snapshot
+      val last = fs.listStatus(new org.apache.hadoop.fs.Path(s"$ckpt/commits"))
+        .map(_.getPath.getName).filter(_.forall(_.isDigit)).map(_.toLong).max
+      // redelivery on the marker fast path: the checkpoint lost the last
+      // batch's commit, its marker survives
+      delete(s"$ckpt/commits/$last")
+      p.run(in, o, ckpt)
+      assert(snapshot == before, s"${p.name}: marker-path redelivery changed the store or output")
+      // a crash between the store write and the marker: only the in-data
+      // or content-keyed gate stands between the replay and a double write
+      delete(s"$ckpt/commits/$last")
+      delete(s"$ckpt/${p.markerDir}/$last")
+      p.run(in, o, ckpt)
+      assert(snapshot == before, s"${p.name}: gate-path redelivery changed the store or output")
+    } finally passes.flatMap(_.tables)
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
 }
