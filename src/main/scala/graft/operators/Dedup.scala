@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.{Sources, StoreTable}
+import graft.sources.StoreSpec
+import graft.sources.StoreSpec.Table
 
 /** [EXT] Deduplication operators for a training-data pipeline: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
@@ -215,8 +216,11 @@ object Dedup {
     * `band_key`. */
   private def bandRows(sigs: DataFrame, idCol: String, numHashes: Int,
                        bands: Int, portable: Boolean): (DataFrame, Seq[String]) =
-    if (portable) (portableBands(sigs, idCol, numHashes, bands), Seq("band", "band_key"))
-    else (lshBands(sigs, idCol, "sig", bands, numHashes), Seq("band_hash"))
+    (if (portable) portableBands(sigs, idCol, numHashes, bands)
+      else lshBands(sigs, idCol, "sig", bands, numHashes), bandKeys(portable))
+
+  private def bandKeys(portable: Boolean): Seq[String] =
+    if (portable) Seq("band", "band_key") else Seq("band_hash")
 
   /** bucket-local candidate self-join over banded rows (idCol, band, key):
     * distinct (id_a, id_b) pairs sharing a band key. Both sides are the same
@@ -339,10 +343,9 @@ object Dedup {
   /** core of [[minhashDedupAgainst]] on either hash base:
     * bucket-local candidate join (new banded rows × STORE banded rows on the
     * band key) + signature-agreement verify against the store sigs table.
-    * Returns the LAZY dup new-batch id frame — callers that consume it more
-    * than once (the updateStore branch: survivor anti-join AND the store
-    * append) localCheckpoint it themselves; the read-only path keeps it as
-    * one job. */
+    * Returns the LAZY dup new-batch id frame; the updateStore branch pins
+    * the survivors it derives ([[StoreSpec.keep]]), and the read-only path
+    * keeps it as one job. */
   private def dedupAgainstCore(idCol: String,
                                newSigs: DataFrame, newBanded: DataFrame,
                                storeBanded: DataFrame, storeSigs: DataFrame,
@@ -361,7 +364,7 @@ object Dedup {
         // would be pruned): a probe/store signature-length mismatch means
         // the caller's numHashes differs from the store build — zip_with
         // would null-pad and count every padded slot as disagreement,
-        // silently letting true duplicates survive. [[StoreTable.checkProps]]
+        // silently letting true duplicates survive. The store spec's check
         // catches this at probe entry for stores carrying build properties;
         // this backstops pre-property stores and hand-built frames.
         when(size(col("sig")) === size(col("__ssig")),
@@ -378,40 +381,31 @@ object Dedup {
       .select(idCol).distinct()
   }
 
+  /** the MinHash store: `_sigs` (the signature frame as given) bucketed by
+    * id, and [[bandRows]]' store key columns in `_bands`, bucketed on the
+    * last key. The batch is an (id, sig) frame. */
+  private def minhashStore(store: String, idCol: String, numHashes: Int,
+                           bands: Int, portable: Boolean): StoreSpec =
+    StoreSpec(store,
+      Map("numHashes" -> numHashes, "bands" -> bands, "portable" -> portable),
+      Seq(Table("_sigs", idCol, identity),
+        Table("_bands", bandKeys(portable).last, sigs =>
+          bandRows(sigs, idCol, numHashes, bands, portable)._1
+            .select((idCol +: bandKeys(portable)).map(col): _*))))
+
   /** create/replace a MinHash signature store from a signature frame (e.g.
     * [[minhashSigs]] over the initial corpus, on the hash base `portable`
     * names). The bands table keeps [[bandRows]]' store key columns:
     * `band_hash` alone on xxhash64, `band` + `band_key` on md5 (a DuckDB
-    * oracle can rebuild those store contents exactly). The build
-    * parameters, hash base included, are persisted for
-    * [[StoreTable.checkProps]]. */
+    * oracle can rebuild those store contents exactly). */
   def writeMinhashStore(sigs: DataFrame, idCol: String, store: String,
                         bands: Int, numHashes: Int = 64,
                         nBuckets: Int = 8, portable: Boolean = false): Unit = {
     // materialize the signature kernel ONCE — both table writes consume it
     // (the un-checkpointed form re-ran the minhash kernel per write)
     val s = sigs.localCheckpoint()
-    writeMinhashTables(s, idCol, store, numHashes, bands, portable) {
-      (df, table, bucketCol) =>
-        Sources.writeBucketed(df, table, bucketCol, nBuckets)
-    }
+    minhashStore(store, idCol, numHashes, bands, portable).create(s, nBuckets)
     s.unpersist(blocking = false)
-    StoreTable.setProps(sigs.sparkSession, s"${store}_sigs",
-      Map("numHashes" -> numHashes, "bands" -> bands, "portable" -> portable))
-  }
-
-  /** write (or append) a MinHash store's two tables — signatures bucketed
-    * by id, [[bandRows]] bucketed on the band key — overlapping the two
-    * independent writes (guide §2.6; r22). `write` gets each table's rows,
-    * name and bucket column. */
-  private def writeMinhashTables(sigs: DataFrame, idCol: String, store: String,
-                                 numHashes: Int, bands: Int, portable: Boolean)
-                                (write: (DataFrame, String, String) => Unit): Unit = {
-    val (banded, keys) = bandRows(sigs, idCol, numHashes, bands, portable)
-    Sources.writeConcurrently(
-      () => write(sigs, s"${store}_sigs", idCol),
-      () => write(banded.select((idCol +: keys).map(col): _*),
-        s"${store}_bands", keys.last))
   }
 
   /** incremental MinHash-LSH dedup of `newBatch` against the persisted store
@@ -420,8 +414,7 @@ object Dedup {
     * append the survivors' signatures and band rows to the store so the next
     * batch dedups against them too. `newBatch` is assumed internally deduped
     * (compose [[minhashDedup]] first) and its ids disjoint from the store's.
-    * numHashes/bands/portable must match the store's build parameters; on
-    * the md5 base the WHOLE incremental flow (store sigs + banding +
+    * On the md5 base the WHOLE incremental flow (store sigs + banding +
     * cross-store candidates + est-jaccard threshold + survivor anti-join)
     * is verified by an exact SQL oracle. */
   def minhashDedupAgainst(newBatch: DataFrame, idCol: String, textCol: String,
@@ -430,64 +423,79 @@ object Dedup {
                           updateStore: Boolean = true,
                           portable: Boolean = false): DataFrame = {
     val spark = newBatch.sparkSession
-    StoreTable.checkProps(spark, s"${store}_sigs",
-      Map("numHashes" -> numHashes, "bands" -> bands, "portable" -> portable))
+    val spec = minhashStore(store, idCol, numHashes, bands, portable)
+    spec.check(spark)
     // localCheckpoint: the new-batch signatures feed the candidate join, the
     // verify join, and the store append — compute the fused kernel once.
     val newSigs = minhashSigs(newBatch, idCol, textCol, numHashes,
       portable = portable).localCheckpoint()
     val (newBanded, keys) = bandRows(newSigs, idCol, numHashes, bands, portable)
-    val dupIds0 = dedupAgainstCore(idCol, newSigs, newBanded,
+    val dupIds = dedupAgainstCore(idCol, newSigs, newBanded,
       spark.table(s"${store}_bands"), spark.table(s"${store}_sigs"),
       keys, threshold, numHashes)
-    // checkpoint only when consumed twice (anti-join + store append)
-    val dupIds = if (updateStore) dupIds0.localCheckpoint() else dupIds0
-    // both appends derive from the checkpointed newSigs/dupIds; per-table
-    // append idempotency is order-free
-    if (updateStore)
-      writeMinhashTables(newSigs.join(dupIds, Seq(idCol), "left_anti"), idCol,
-        store, numHashes, bands, portable)((df, table, _) =>
-        StoreTable.append(df, table))
-    newBatch.join(dupIds, Seq(idCol), "left_anti")
+    // every doc has a signature, so the surviving signatures name the
+    // surviving docs
+    if (updateStore) newBatch.join(
+      spec.keep(newSigs.join(dupIds, Seq(idCol), "left_anti"), update = true)
+        .select(idCol), Seq(idCol), "left_semi")
+    else newBatch.join(dupIds, Seq(idCol), "left_anti")
   }
 
-  /** create/replace the EXACT-dedup store: one bucketed table
-    * `<store>_fps (fp)` of distinct normalized-content fingerprints
-    * ([[TextAnalysis.fingerprint]]) of the kept corpus — the lightweight
-    * sibling of [[writeMinhashStore]] for the exact-duplicate pass that
-    * precedes near-dup in every pipeline. */
-  def writeFingerprintStore(df: DataFrame, textCol: String, store: String,
-                            nBuckets: Int = 8): Unit =
-    Sources.writeBucketed(
-      df.select(TextAnalysis.fingerprint(col(textCol)).as("fp")).distinct(),
-      s"${store}_fps", "fp", nBuckets)
+  /** the key-set stores: one table of distinct keys bucketed on the key,
+    * which the batch carries as `__<key>` ([[keyed]]) */
+  private def keySetStore(store: String, suffix: String, key: String,
+                          params: Map[String, Any]): StoreSpec =
+    StoreSpec(store, params, Seq(Table(suffix, key,
+      _.select(col(s"__$key").as(key)).distinct())))
 
-  /** incremental EXACT dedup against the fingerprint store: drop every new
-    * doc whose normalized content is already stored (anti-join on the
-    * store's own bucket column — the store is never reshuffled), and, when
-    * `updateStore`, append the survivors' distinct fingerprints as new
-    * bucket files. The new batch is assumed internally deduped first
-    * ([[exactDedup]] on the fingerprint): two new docs sharing a
-    * fingerprint both pass the store check. */
-  def exactDedupAgainst(newBatch: DataFrame, textCol: String, store: String,
-                        updateStore: Boolean = true): DataFrame = {
+  /** the EXACT-dedup store `<store>_fps (fp)`: distinct normalized-content
+    * fingerprints ([[TextAnalysis.fingerprint]]) of the kept corpus */
+  private[graft] def fingerprintStore(store: String): StoreSpec =
+    keySetStore(store, "_fps", "fp", Map.empty)
+
+  /** the SIMHASH store `<store>_sigs (sig)`: the kept corpus's distinct
+    * signatures on the hash base `portable` names */
+  private[graft] def simhashStore(store: String, portable: Boolean): StoreSpec =
+    keySetStore(store, "_sigs", "sig", Map("portable" -> portable))
+
+  /** `df` with the key-set store's key column `__<key>` */
+  private[graft] def keyed(df: DataFrame, spec: StoreSpec,
+                           key: Column): DataFrame =
+    df.withColumn(s"__${spec.tables.head.key}", key)
+
+  /** drop every row of `newBatch` whose `key` the key-set store already
+    * holds — an anti-join on the store's own bucket column, so the store is
+    * never reshuffled — and, when `updateStore`, append the survivors'
+    * distinct keys as new bucket files. Two new rows sharing a key both
+    * pass: the batch is deduped first. */
+  private def keySetAgainst(newBatch: DataFrame, key: Column, spec: StoreSpec,
+                            updateStore: Boolean): DataFrame = {
     val spark = newBatch.sparkSession
-    val surv0 = newBatch
-      .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-      .join(spark.table(s"${store}_fps").withColumnRenamed("fp", "__fp"),
-        Seq("__fp"), "left_anti")
-    val survivors =
-      if (!updateStore) surv0
-      else {
-        // materialize once: the append below and the caller's read would
-        // otherwise each recompute the anti-join
-        val s = surv0.localCheckpoint()
-        StoreTable.append(s.select(col("__fp").as("fp")).distinct(),
-          s"${store}_fps")
-        s
-      }
-    survivors.drop("__fp")
+    spec.check(spark)
+    val k = spec.tables.head.key
+    spec.keep(keyed(newBatch, spec, key)
+        .join(spark.table(spec.table).withColumnRenamed(k, s"__$k"),
+          Seq(s"__$k"), "left_anti"), updateStore)
+      .drop(s"__$k")
   }
+
+  /** create/replace the EXACT-dedup store ([[fingerprintStore]]) — the
+    * lightweight sibling of [[writeMinhashStore]] for the exact-duplicate
+    * pass that precedes near-dup in every pipeline. */
+  def writeFingerprintStore(df: DataFrame, textCol: String, store: String,
+                            nBuckets: Int = 8): Unit = {
+    val spec = fingerprintStore(store)
+    spec.create(keyed(df, spec, TextAnalysis.fingerprint(col(textCol))),
+      nBuckets)
+  }
+
+  /** incremental EXACT dedup against the fingerprint store
+    * ([[keySetAgainst]]); the new batch is assumed internally deduped first
+    * ([[exactDedup]] on the fingerprint). */
+  def exactDedupAgainst(newBatch: DataFrame, textCol: String, store: String,
+                        updateStore: Boolean = true): DataFrame =
+    keySetAgainst(newBatch, TextAnalysis.fingerprint(col(textCol)),
+      fingerprintStore(store), updateStore)
 
   /** [[exactDedupAgainst]] with a BLOOM prefilter on store membership — the
     * 100 TB probe shape: the store's fingerprints are sketched ONCE into a
@@ -538,8 +546,7 @@ object Dedup {
     negatives.unionByName(positives).drop("__fp")
   }
 
-  /** create/replace the SIMHASH near-dup store: one bucketed table
-    * `<store>_sigs (sig)` of the kept corpus's distinct signatures — the
+  /** create/replace the SIMHASH near-dup store ([[simhashStore]]) — the
     * middle member of the store family: broader than the exact fingerprint
     * store (word REORDERINGS and anything else preserving the distinct
     * token set collapse to one signature) but cheaper than the banded
@@ -547,41 +554,20 @@ object Dedup {
   def writeSimhashStore(df: DataFrame, idCol: String, textCol: String,
                         store: String, portable: Boolean = false,
                         nBuckets: Int = 8): Unit = {
-    val sigs = simhashSigs(df, idCol, textCol, portable)
-    Sources.writeBucketed(sigs.select(col("simhash").as("sig")).distinct(),
-      s"${store}_sigs", "sig", nBuckets)
-    StoreTable.setProps(df.sparkSession, s"${store}_sigs",
-      Map("portable" -> portable))
+    val spec = simhashStore(store, portable)
+    spec.create(keyed(Fan.out(df.select(col(idCol), col(textCol))), spec,
+      simhashCol(col(textCol), portable)), nBuckets)
   }
 
-  /** incremental SimHash dedup against [[writeSimhashStore]]'s table: drop
-    * every new doc whose signature the kept corpus already holds (hamming-0
-    * near-copies — token-set-identical variants the exact fingerprint store
-    * misses), anti-joining on the store's own bucket column; survivors'
-    * distinct signatures append when `updateStore`. `portable` must match
-    * the store's build flag. */
+  /** incremental SimHash dedup against [[writeSimhashStore]]'s table
+    * ([[keySetAgainst]]): drops every new doc whose signature the kept
+    * corpus already holds (hamming-0 near-copies — token-set-identical
+    * variants the exact fingerprint store misses). */
   def simhashDedupAgainst(newBatch: DataFrame, idCol: String, textCol: String,
                           store: String, portable: Boolean = false,
-                          updateStore: Boolean = true): DataFrame = {
-    val spark = newBatch.sparkSession
-    StoreTable.checkProps(spark, s"${store}_sigs", Map("portable" -> portable))
-    // signature as a DERIVED COLUMN (the fused kernel is a per-row
-    // projection): one scan of the batch, no self-join on id — the
-    // exactDedupAgainst shape
-    val surv0 = newBatch
-      .withColumn("__sig", simhashCol(col(textCol), portable))
-      .join(spark.table(s"${store}_sigs").withColumnRenamed("sig", "__sig"),
-        Seq("__sig"), "left_anti")
-    val survivors =
-      if (!updateStore) surv0
-      else {
-        val s = surv0.localCheckpoint()
-        StoreTable.append(s.select(col("__sig").as("sig")).distinct(),
-          s"${store}_sigs")
-        s
-      }
-    survivors.drop("__sig")
-  }
+                          updateStore: Boolean = true): DataFrame =
+    keySetAgainst(newBatch, simhashCol(col(textCol), portable),
+      simhashStore(store, portable), updateStore)
 
   /** the embedding bands table's single JOIN KEY: (band, sig) packed into
     * one long — the same fix as [[packedBandKey]]: a two-column join on a
@@ -594,42 +580,45 @@ object Dedup {
     if (bandBits >= 63) sig
     else band.cast(LongType) * lit(1L << bandBits) + sig
 
-  /** create/replace the EMBEDDING near-dup store — the fourth store member,
-    * covering semantic/representation space: two bucketed tables,
-    * `<store>_bands (id, __bs)` (banded hyperplane signatures under the
-    * packed band key [[packedEmbBandKey]], bucketed by `__bs` — ONE
-    * equi-key, so the probe's candidate join reads the store's buckets
-    * without reshuffling them, plan-pinned in BucketingSpec) and
-    * `<store>_vecs (id, vec)` (bucketed by id — the exact-cosine verify
-    * side). Same banding math as [[embeddingNearDupLsh]];
-    * `bandBits`/`bands`/`seed` must match between store build and probe.
-    * Bands tables written before the packed key (layout (id, band, sig))
-    * refuse at probe time with rebuild advice — unlike the vecs-side
-    * fullsig upgrade, the key layout cannot be bridged at read time. */
+  /** the EMBEDDING store: `<store>_bands (id, __bs)` (banded hyperplane
+    * signatures under the packed band key [[packedEmbBandKey]], bucketed by
+    * `__bs` — ONE equi-key, so the probe's candidate join reads the store's
+    * buckets without reshuffling them, plan-pinned in BucketingSpec) and
+    * `<store>_vecs (id, vec, fullsig)` (bucketed by id — the exact-cosine
+    * verify side; the pooled full signature is persisted because the
+    * STREAMING twin equi-joins on it every micro-batch). */
+  private[graft] def embeddingStore(store: String, idCol: String,
+                                    vecCol: String, dim: Int, bandBits: Int,
+                                    bands: Int, seed: Long): StoreSpec =
+    StoreSpec(store,
+      Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
+        "seed" -> seed, "enc" -> "bands_packed_v2"),
+      Seq(Table("_bands", "__bs", embeddingBands(_, idCol, vecCol, dim,
+          bandBits, bands, seed)),
+        Table("_vecs", idCol, _.select(col(idCol), col(vecCol).as("vec"),
+          Similarity.lshSignature(col(vecCol), dim, bandBits * bands, seed)
+            .as("fullsig")))),
+      required = Set("enc"))
+
+  private def embeddingBands(df: DataFrame, idCol: String, vecCol: String,
+                             dim: Int, bandBits: Int, bands: Int,
+                             seed: Long): DataFrame =
+    Similarity.lshBandSignatures(df, idCol, vecCol, dim, bandBits, bands, seed)
+      .select(col(idCol),
+        packedEmbBandKey(col("band"), col("sig"), bandBits).as("__bs"))
+
+  /** create/replace the EMBEDDING near-dup store ([[embeddingStore]]) — the
+    * fourth store member, covering semantic/representation space. Same
+    * banding math as [[embeddingNearDupLsh]]. Bands tables written before
+    * the packed key (layout (id, band, sig)) refuse at probe time with
+    * rebuild advice — unlike the vecs-side fullsig upgrade, the key layout
+    * cannot be bridged at read time. */
   def writeEmbeddingStore(df: DataFrame, idCol: String, vecCol: String,
                           store: String, dim: Int, bandBits: Int = 16,
                           bands: Int = 4, seed: Long = 42L,
-                          nBuckets: Int = 8): Unit = {
-    // the two table writes are independent — overlap them (guide §2.6, r22)
-    Sources.writeConcurrently(
-      () => Sources.writeBucketed(
-        Similarity.lshBandSignatures(df, idCol, vecCol, dim, bandBits, bands, seed)
-          .select(col(idCol),
-            packedEmbBandKey(col("band"), col("sig"), bandBits).as("__bs")),
-        s"${store}_bands", "__bs", nBuckets),
-      // the pooled full signature is persisted alongside the vector: the
-      // STREAMING twin equi-joins on it every micro-batch, and recomputing
-      // bandBits×bands dot products over the whole store per trigger is
-      // exactly the per-batch cost a precomputed column exists to avoid
-      () => Sources.writeBucketed(
-        df.select(col(idCol), col(vecCol).as("vec"),
-          Similarity.lshSignature(col(vecCol), dim, bandBits * bands, seed)
-            .as("fullsig")),
-        s"${store}_vecs", idCol, nBuckets))
-    StoreTable.setProps(df.sparkSession, s"${store}_bands",
-      Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
-        "seed" -> seed, "enc" -> "bands_packed_v2"))
-  }
+                          nBuckets: Int = 8): Unit =
+    embeddingStore(store, idCol, vecCol, dim, bandBits, bands, seed)
+      .create(df, nBuckets)
 
   /** incremental EMBEDDING near-dup against [[writeEmbeddingStore]]: new
     * vectors are banded with the SAME planes, candidates come from the
@@ -647,56 +636,22 @@ object Dedup {
                               seed: Long = 42L,
                               updateStore: Boolean = true): DataFrame = {
     val spark = newBatch.sparkSession
-    StoreTable.checkProps(spark, s"${store}_bands",
-      Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
-        "seed" -> seed, "enc" -> "bands_packed_v2"),
-      required = Set("enc"))
-    val newBands = Similarity.lshBandSignatures(newBatch, idCol, vecCol, dim,
-        bandBits, bands, seed)
-      .select(col(idCol),
-        packedEmbBandKey(col("band"), col("sig"), bandBits).as("__bs"))
-    val cands = newBands
+    val spec = embeddingStore(store, idCol, vecCol, dim, bandBits, bands, seed)
+    spec.check(spark)
+    val cands = embeddingBands(newBatch, idCol, vecCol, dim, bandBits, bands,
+        seed)
       .join(spark.table(s"${store}_bands")
           .withColumnRenamed(idCol, "__sid"),
         Seq("__bs"))
       .select(col(idCol), col("__sid")).distinct()
-    val dupIds0 = cands
+    val dupIds = cands
       .join(newBatch.select(col(idCol), col(vecCol).as("__nv")), idCol)
       .join(spark.table(s"${store}_vecs")
           .select(col(idCol).as("__sid"), col("vec").as("__sv")),
         "__sid")
       .filter(Similarity.cosine(col("__nv"), col("__sv")) >= threshold)
       .select(idCol).distinct()
-    if (updateStore) {
-      // checkpoint the SURVIVORS (not the dup ids): the bands append, the
-      // vecs append, and the caller's read are three consumers — without
-      // this each would re-run the anti-join and the banded-signature
-      // kernel over the batch
-      val surv = newBatch.join(dupIds0, Seq(idCol), "left_anti")
-        .localCheckpoint()
-      // upgrade contract: StoreTable.checkProps accepts stores written before
-      // the fullsig column existed (the read side falls back — see
-      // Streams.scala). Appending a 3-column frame to such a 2-column
-      // table would throw a schema mismatch, so match the EXISTING store
-      // schema instead of assuming the current one.
-      val vecsCols = spark.table(s"${store}_vecs").columns
-      val vecsOut0 = surv.select(col(idCol), col(vecCol).as("vec"),
-        Similarity.lshSignature(col(vecCol), dim, bandBits * bands, seed)
-          .as("fullsig"))
-      val vecsOut =
-        if (vecsCols.contains("fullsig")) vecsOut0
-        else vecsOut0.drop("fullsig")
-      // both appends read the checkpointed survivors — overlap them (§2.6)
-      Sources.writeConcurrently(
-        () => StoreTable.append(
-          Similarity.lshBandSignatures(surv, idCol, vecCol, dim, bandBits,
-              bands, seed)
-            .select(col(idCol),
-              packedEmbBandKey(col("band"), col("sig"), bandBits).as("__bs")),
-          s"${store}_bands"),
-        () => StoreTable.append(vecsOut, s"${store}_vecs"))
-      surv
-    } else newBatch.join(dupIds0, Seq(idCol), "left_anti")
+    spec.keep(newBatch.join(dupIds, Seq(idCol), "left_anti"), updateStore)
   }
 
   /** connected components over a candidate pair graph by iterative min-label
@@ -1458,57 +1413,75 @@ object Dedup {
   private def packedBandKey(band: Column, bandBits: Column): Column =
     band.cast(LongType) * lit(1L << 30) + bandBits
 
-  /** create/replace an incremental WIDE-HASH near-dup store — the
-    * modality-agnostic deployment shape under the image/audio members of
-    * the store family: one bucketed table `<store>_bands (__bk, sim_lo,
-    * sim_hi)` of banded WIDE (120-bit two-long) perceptual hashes
-    * (any signature expressed as (idCol, dh_lo, dh_hi) — the same
-    * generalization as [[wideHashDedup]] over the batch path), keyed and
-    * bucketed on the PACKED band key ([[packedBandKey]]) so a probe's
-    * candidate join never reshuffles the store (plan-pinned).
-    * `maxHamming` is a BUILD parameter (it fixes the band layout) —
-    * persisted and validated at probe time like every other store's build
-    * parameters; `kind` tags the modality so an audio probe against an
-    * image store refuses instead of matching garbage. */
+  /** the WIDE-HASH store — the modality-agnostic deployment shape under the
+    * image/audio members of the store family: one bucketed table
+    * `<store>_bands (__bk, sim_lo, sim_hi)` of banded WIDE (120-bit
+    * two-long) perceptual hashes, keyed and bucketed on the PACKED band key
+    * ([[packedBandKey]]) so a probe's candidate join never reshuffles the
+    * store (plan-pinned). `maxHamming` fixes the band layout; `kind` tags
+    * the modality so an audio probe against an image store refuses instead
+    * of matching garbage. The batch is [[wideSigs]]' (id, sim_lo, sim_hi). */
+  private def wideHashStore(store: String, idCol: String, kind: String,
+                            maxHamming: Int): StoreSpec =
+    StoreSpec(store,
+      Map("kind" -> kind, "maxHamming" -> maxHamming, "enc" -> "dhash120_v2"),
+      Seq(Table("_bands", "__bk", wideKeyed(_, idCol, maxHamming, video = false)
+        .select("__bk", "sim_lo", "sim_hi").distinct())),
+      required = Set("enc"))
+
+  /** a wide store's batch banded under the store's packed key `__bk`
+    * ([[packedBandKey]], or [[videoPackedKey]] with each row's frame) */
+  private def wideKeyed(sigs: DataFrame, idCol: String, maxHamming: Int,
+                        video: Boolean): DataFrame = {
+    val carry = if (video) Seq("frame_no") else Nil
+    val key =
+      if (video) videoPackedKey(col("frame_no"), col("band"), col("band_bits"))
+      else packedBandKey(col("band"), col("band_bits"))
+    wideBandedFrame(sigs, idCol, 120, maxHamming, carry)
+      .select((idCol +: carry :+ "sim_lo" :+ "sim_hi").map(col) :+
+        key.as("__bk"): _*)
+  }
+
+  /** [[wideKeyed]] rows within `maxHamming` of a stored hash under the same
+    * key — a single-key equi-join on the store's own bucket column, so the
+    * store side reads its buckets in place and only the new batch
+    * exchanges (BucketingSpec pins the 1-exchange plan) */
+  private def wideMatches(keyed: DataFrame, store: String,
+                          maxHamming: Int): DataFrame =
+    keyed.join(keyed.sparkSession.table(s"${store}_bands")
+        .withColumnRenamed("sim_lo", "__s_lo")
+        .withColumnRenamed("sim_hi", "__s_hi"), Seq("__bk"))
+      .filter((bit_count(col("sim_lo").bitwiseXOR(col("__s_lo"))) +
+        bit_count(col("sim_hi").bitwiseXOR(col("__s_hi"))))
+        .cast(LongType) <= maxHamming)
+
+  /** any signature expressed as (idCol, dh_lo, dh_hi) — the same
+    * generalization as [[wideHashDedup]] over the batch path — as the wide
+    * store's (idCol, sim_lo, sim_hi) batch; NULL hashes (undecodable) are
+    * excluded from probing and from the store. */
+  private def wideSigs(hashes: DataFrame, idCol: String): DataFrame =
+    hashes.filter(col("dh_lo").isNotNull)
+      .select(col(idCol), col("dh_lo").as("sim_lo"), col("dh_hi").as("sim_hi"))
+
+  /** create/replace an incremental WIDE-HASH near-dup store
+    * ([[wideHashStore]]). */
   def writeWideHashStore(hashes: DataFrame, idCol: String, store: String,
                          kind: String, maxHamming: Int = 6,
-                         nBuckets: Int = 8): Unit = {
-    val sigs = hashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol), col("dh_lo").as("sim_lo"),
-        col("dh_hi").as("sim_hi"))
-    Sources.writeBucketed(
-      wideBandedFrame(sigs, idCol, 120, maxHamming)
-        .select(packedBandKey(col("band"), col("band_bits")).as("__bk"),
-          col("sim_lo"), col("sim_hi"))
-        .distinct(),
-      s"${store}_bands", "__bk", nBuckets)
-    StoreTable.setProps(hashes.sparkSession, s"${store}_bands",
-      Map("kind" -> kind, "maxHamming" -> maxHamming, "enc" -> "dhash120_v2"))
-  }
+                         nBuckets: Int = 8): Unit =
+    wideHashStore(store, idCol, kind, maxHamming)
+      .create(wideSigs(hashes, idCol), nBuckets)
 
   /** append a batch of wide hashes' bands to [[writeWideHashStore]]'s bands
     * table — the store half of `updateStore = true`, exposed so the media
     * streaming passes can order their writes crash-safely (survivor
     * manifest FIRST, then this append — the content-keyed replay contract
-    * on [[graft.streaming.Streams]]' ingest driver). Validates build
-    * params; duplicate band rows from an at-least-once replay are harmless
-    * (they cannot change an anti-join). */
+    * on [[graft.streaming.Streams]]' ingest driver). Duplicate band rows
+    * from an at-least-once replay are harmless (they cannot change an
+    * anti-join). */
   def appendWideHashes(hashes: DataFrame, idCol: String, store: String,
-                       kind: String, maxHamming: Int = 6): Unit = {
-    StoreTable.checkProps(hashes.sparkSession, s"${store}_bands",
-      Map("kind" -> kind, "maxHamming" -> maxHamming,
-        "enc" -> "dhash120_v2"),
-      required = Set("enc"))
-    val sigs = hashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol), col("dh_lo").as("sim_lo"),
-        col("dh_hi").as("sim_hi"))
-    StoreTable.append(
-      wideBandedFrame(sigs, idCol, 120, maxHamming)
-        .select(packedBandKey(col("band"), col("band_bits")).as("__bk"),
-          col("sim_lo"), col("sim_hi"))
-        .distinct(),
-      s"${store}_bands")
-  }
+                       kind: String, maxHamming: Int = 6): Unit =
+    wideHashStore(store, idCol, kind, maxHamming)
+      .appendOnce(wideSigs(hashes, idCol))
 
   /** incremental wide-hash near-dup dedup against [[writeWideHashStore]]:
     * the new batch's wide hashes are banded with the SAME layout,
@@ -1516,92 +1489,67 @@ object Dedup {
     * bucketed bands table (the store never reshuffles; only the new batch
     * does), verification is the two-long bit_count on the join output, and
     * every new id within `maxHamming` of ANY stored hash is dropped.
-    * Survivors' bands append as new bucket files when `updateStore` —
-    * append ≡ rebuild, the store-family contract. In-batch near-dups are
-    * the caller's batch-level pass ([[wideHashDedup]]) — the same division
-    * of labor as the simhash/minhash stores. NULL hashes (undecodable) are
-    * excluded from probing and from the survivor set. */
+    * Survivors' bands append as new bucket files when `updateStore`. In-batch
+    * near-dups are the caller's batch-level pass ([[wideHashDedup]]) — the
+    * same division of labor as the simhash/minhash stores. */
   def wideHashDedupAgainst(newHashes: DataFrame, idCol: String,
                            store: String, kind: String,
                            maxHamming: Int = 6,
                            updateStore: Boolean = true): DataFrame = {
     val spark = newHashes.sparkSession
-    StoreTable.checkProps(spark, s"${store}_bands",
-      Map("kind" -> kind, "maxHamming" -> maxHamming,
-        "enc" -> "dhash120_v2"),
-      required = Set("enc"))
-    val sigs = newHashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol), col("dh_lo").as("sim_lo"),
-        col("dh_hi").as("sim_hi"))
-      .localCheckpoint()
-    val stored = spark.table(s"${store}_bands")
-      .withColumnRenamed("sim_lo", "__s_lo")
-      .withColumnRenamed("sim_hi", "__s_hi")
-    // single-key equi-join on the store's own bucket column: the store
-    // side reads its buckets in place, only the new batch exchanges
-    // (BucketingSpec pins the 1-exchange plan)
-    val dupIds = wideBandedFrame(sigs, idCol, 120, maxHamming)
-      .select(col(idCol), col("sim_lo"), col("sim_hi"),
-        packedBandKey(col("band"), col("band_bits")).as("__bk"))
-      .join(stored, Seq("__bk"))
-      .filter((bit_count(col("sim_lo").bitwiseXOR(col("__s_lo"))) +
-        bit_count(col("sim_hi").bitwiseXOR(col("__s_hi"))))
-        .cast(LongType) <= maxHamming)
+    val spec = wideHashStore(store, idCol, kind, maxHamming)
+    spec.check(spark)
+    val sigs = wideSigs(newHashes, idCol).localCheckpoint()
+    val dupIds = wideMatches(wideKeyed(sigs, idCol, maxHamming, video = false),
+        store, maxHamming)
       .select(col(idCol)).distinct()
-    val survivors = sigs.join(dupIds, Seq(idCol), "left_anti")
-    if (updateStore) {
-      val s = survivors.localCheckpoint()
-      StoreTable.append(
-        wideBandedFrame(s, idCol, 120, maxHamming)
-          .select(packedBandKey(col("band"), col("band_bits")).as("__bk"),
-            col("sim_lo"), col("sim_hi"))
-          .distinct(),
-        s"${store}_bands")
-      s.select(col(idCol))
-    } else survivors.select(col(idCol))
+    spec.keep(sigs.join(dupIds, Seq(idCol), "left_anti"), updateStore)
+      .select(col(idCol))
   }
 
-  /** create/replace the incremental VIDEO frame-hash near-dup store: one
-    * bucketed table `<store>_bands (__sid, __bk, sim_lo, sim_hi)` of
-    * banded per-frame WIDE dHashes
+  /** the VIDEO frame-hash store: one bucketed table `<store>_bands (__sid,
+    * __bk, sim_lo, sim_hi)` of banded per-frame WIDE dHashes
     * ([[graft.operators.Multimodal.videoDHashWide]]). Unlike the scalar
     * wide-hash stores the stored CLIP id (`__sid`) is kept: the probe's
     * ≥ `minMatchedFrames` vote counts matched frames per (new clip, stored
     * clip) PAIR, which an anonymous hash bag cannot express. Keyed and
     * bucketed on the frame-packed band key ([[videoPackedKey]]), so a
-    * probe's candidate join never reshuffles the store (plan-pinned). */
-  def writeVideoHashStore(frameHashes: DataFrame, idCol: String,
-                          store: String, maxHamming: Int = 6,
-                          nBuckets: Int = 8, everyK: Int = 1): Unit = {
-    require(everyK >= 1, s"writeVideoHashStore: everyK $everyK")
-    Sources.writeBucketed(
-      videoBandedRows(frameHashes, idCol, maxHamming),
-      s"${store}_bands", "__bk", nBuckets)
-    // everyK (the frame-sampling rate the hashes were built with) is a
-    // BUILD parameter like maxHamming: probing a store built from
-    // everyK > 1 hashes with differently-sampled frames misaligns frame_no
-    // keys and silently dilutes the match vote — persist it so
-    // StoreTable.checkProps refuses loudly on mismatch instead
-    StoreTable.setProps(frameHashes.sparkSession, s"${store}_bands",
+    * probe's candidate join never reshuffles the store (plan-pinned).
+    * `everyK` (the frame-sampling rate the hashes were built with) is a
+    * build parameter like `maxHamming`: differently-sampled frames misalign
+    * frame_no keys and silently dilute the match vote. The batch is
+    * [[videoSigs]]' (id, frame_no, sim_lo, sim_hi). */
+  private def videoStore(store: String, idCol: String, maxHamming: Int,
+                         everyK: Int): StoreSpec = {
+    require(maxHamming <= 7,
+      s"video store: maxHamming $maxHamming > 7 breaks the packed band key")
+    require(everyK >= 1, s"video store: everyK $everyK")
+    StoreSpec(store,
       Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
-        "everyK" -> everyK, "enc" -> "dhash120_v2"))
+        "everyK" -> everyK, "enc" -> "dhash120_v2"),
+      Seq(Table("_bands", "__bk", wideKeyed(_, idCol, maxHamming, video = true)
+        .select(col(idCol).as("__sid"), col("__bk"), col("sim_lo"),
+          col("sim_hi"))
+        .distinct())),
+      required = Set("enc"))
   }
 
   /** the video key packs the FRAME index in with the band: one bucketed
     * equi-key keeps the probe shuffle-free on the store side, and
     * frame-alignment rides the key instead of a second join column.
     * band < 8 (maxHamming ≤ 7 — the defaults) and frame_no < 2^20 keep
-    * the packing injective inside a long (guarded below). */
+    * the packing injective inside a long (guarded in [[videoStore]] and
+    * [[videoSigs]]). */
   private def videoPackedKey(frameNo: Column, band: Column,
                              bandBits: Column): Column =
     (frameNo.cast(LongType) * lit(8L) + band.cast(LongType)) *
       lit(1L << 30) + bandBits
 
-  private def videoBandedRows(frameHashes: DataFrame, idCol: String,
-                              maxHamming: Int): DataFrame = {
-    require(maxHamming <= 7,
-      s"video store: maxHamming $maxHamming > 7 breaks the packed band key")
-    val sigs = frameHashes.filter(col("dh_lo").isNotNull)
+  /** per-frame hashes as the video store's batch, NULL-hash frames
+    * excluded. Build and probe share the frame_no < 2^20 guard: an aliased
+    * (frame, band) packed key would silently match wrong frame alignments. */
+  private def videoSigs(frameHashes: DataFrame, idCol: String): DataFrame =
+    frameHashes.filter(col("dh_lo").isNotNull)
       .select(col(idCol),
         when(col("frame_no") < (1L << 20), col("frame_no"))
           .otherwise(raise_error(concat(lit("video store: frame_no "),
@@ -1609,28 +1557,23 @@ object Dedup {
             lit(" >= 2^20 breaks the packed band key"))))
           .as("frame_no"),
         col("dh_lo").as("sim_lo"), col("dh_hi").as("sim_hi"))
-    wideBandedFrame(sigs, idCol, 120, maxHamming,
-        carryCols = Seq("frame_no"))
-      .select(col(idCol).as("__sid"),
-        videoPackedKey(col("frame_no"), col("band"), col("band_bits"))
-          .as("__bk"),
-        col("sim_lo"), col("sim_hi"))
-      .distinct()
-  }
+
+  /** create/replace the incremental VIDEO frame-hash near-dup store
+    * ([[videoStore]]). */
+  def writeVideoHashStore(frameHashes: DataFrame, idCol: String,
+                          store: String, maxHamming: Int = 6,
+                          nBuckets: Int = 8, everyK: Int = 1): Unit =
+    videoStore(store, idCol, maxHamming, everyK)
+      .create(videoSigs(frameHashes, idCol), nBuckets)
 
   /** append a batch of clips' banded frame hashes to
     * [[writeVideoHashStore]]'s bands table — the video form of
     * [[appendWideHashes]], exposed for crash-safe streaming write order. */
   def appendVideoFrameHashes(frameHashes: DataFrame, idCol: String,
                              store: String, maxHamming: Int = 6,
-                             everyK: Int = 1): Unit = {
-    StoreTable.checkProps(frameHashes.sparkSession, s"${store}_bands",
-      Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
-        "everyK" -> everyK, "enc" -> "dhash120_v2"),
-      required = Set("enc"))
-    StoreTable.append(videoBandedRows(frameHashes, idCol, maxHamming),
-      s"${store}_bands")
-  }
+                             everyK: Int = 1): Unit =
+    videoStore(store, idCol, maxHamming, everyK)
+      .appendOnce(videoSigs(frameHashes, idCol))
 
   /** incremental VIDEO clip-level near-dup dedup against
     * [[writeVideoHashStore]]: the new batch's per-frame wide dHashes are
@@ -1648,8 +1591,7 @@ object Dedup {
     * frames could never accumulate enough votes to recognize ITSELF, so
     * a replayed micro-batch would emit a different survivor set than the
     * original run (the streaming twin's idempotence contract). Survivors'
-    * banded frame rows append when `updateStore` — append ≡ rebuild.
-    * NULL-hash frames excluded throughout. */
+    * banded frame rows append when `updateStore`. */
   def videoDedupAgainst(newFrameHashes: DataFrame, idCol: String,
                         store: String, maxHamming: Int = 6,
                         minMatchedFrames: Int = 3,
@@ -1658,40 +1600,15 @@ object Dedup {
     require(minMatchedFrames >= 1,
       s"videoDedupAgainst: minMatchedFrames $minMatchedFrames")
     val spark = newFrameHashes.sparkSession
-    StoreTable.checkProps(spark, s"${store}_bands",
-      Map("kind" -> "video_dhash", "maxHamming" -> maxHamming,
-        "everyK" -> everyK, "enc" -> "dhash120_v2"),
-      required = Set("enc"))
-    // the PROBE side gets the same frame_no < 2^20 injectivity guard the
-    // build side enforces in videoBandedRows: an unguarded probe clip with
-    // an aliased (frame, band) packed key would silently match wrong frame
-    // alignments (possible over-drop) where the build side fails loudly
-    val sigs = newFrameHashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol),
-        when(col("frame_no") < (1L << 20), col("frame_no"))
-          .otherwise(raise_error(concat(lit("video store probe: frame_no "),
-            col("frame_no").cast(StringType),
-            lit(" >= 2^20 breaks the packed band key"))))
-          .as("frame_no"),
-        col("dh_lo").as("sim_lo"), col("dh_hi").as("sim_hi"))
-      .localCheckpoint()
-    val stored = spark.table(s"${store}_bands")
-      .withColumnRenamed("sim_lo", "__s_lo")
-      .withColumnRenamed("sim_hi", "__s_hi")
+    val spec = videoStore(store, idCol, maxHamming, everyK)
+    spec.check(spark)
+    val sigs = videoSigs(newFrameHashes, idCol).localCheckpoint()
     val newFrameCounts = sigs.select(col(idCol), col("frame_no")).distinct()
       .groupBy(col(idCol)).agg(count(lit(1)).as("__nf"))
     // frame-alignment rides the packed key, so this is the same
-    // single-bucket-key equi-join as the scalar store — the store side
-    // never reshuffles
-    val dupIds = wideBandedFrame(sigs, idCol, 120, maxHamming,
-        carryCols = Seq("frame_no"))
-      .select(col(idCol), col("frame_no"), col("sim_lo"), col("sim_hi"),
-        videoPackedKey(col("frame_no"), col("band"), col("band_bits"))
-          .as("__bk"))
-      .join(stored, Seq("__bk"))
-      .filter((bit_count(col("sim_lo").bitwiseXOR(col("__s_lo"))) +
-        bit_count(col("sim_hi").bitwiseXOR(col("__s_hi"))))
-        .cast(LongType) <= maxHamming)
+    // single-bucket-key equi-join as the scalar store
+    val dupIds = wideMatches(wideKeyed(sigs, idCol, maxHamming, video = true),
+        store, maxHamming)
       // a band match is evidence once per (new clip, stored clip, frame);
       // count DISTINCT matched frames per pair, then vote with the
       // short-clip clamp (see the docstring — replay idempotence)
@@ -1701,17 +1618,8 @@ object Dedup {
       .join(newFrameCounts, Seq(idCol))
       .filter(col("__mf") >= least(lit(minMatchedFrames.toLong), col("__nf")))
       .select(col(idCol)).distinct()
-    val survivors = sigs.join(dupIds, Seq(idCol), "left_anti")
-    if (updateStore) {
-      val s = survivors.localCheckpoint()
-      StoreTable.append(
-        videoBandedRows(
-          s.select(col(idCol), col("frame_no"),
-            col("sim_lo").as("dh_lo"), col("sim_hi").as("dh_hi")),
-          idCol, maxHamming),
-        s"${store}_bands")
-      s.select(col(idCol)).distinct()
-    } else survivors.select(col(idCol)).distinct()
+    spec.keep(sigs.join(dupIds, Seq(idCol), "left_anti"), updateStore)
+      .select(col(idCol)).distinct()
   }
 
   /** WIDE (two-long) SimHash signatures (idCol, sim_lo, sim_hi) — the
@@ -2871,11 +2779,17 @@ object Dedup {
     * build) — [[cdcDedupAgainst]] skips a replayed batch append exactly. */
   def writeChunkStore(chunks: org.apache.spark.sql.Dataset[CdcChunk],
                       store: String, nBuckets: Int = 8): Unit =
-    Sources.writeBucketed(
+    chunkStore(store).create(
       chunks.toDF().groupBy("chunk_hash")
         .agg(first(col("chunk_len")).as("chunk_len"))
-        .withColumn("__batch", lit(-1L)),
-      s"${store}_chunks", "chunk_hash", nBuckets)
+        .withColumn("__first", lit(true)),
+      nBuckets)
+
+  /** the chunk store's rows are a batch's `__first` (store-new) chunks */
+  private def chunkStore(store: String): StoreSpec =
+    StoreSpec(store, Map.empty, Seq(Table("_chunks", "chunk_hash",
+      _.filter(col("__first")).select(col("chunk_hash"), col("chunk_len")),
+      tagged = true)))
 
   /** incremental byte-level dedup of a new blob batch against the chunk
     * store: per blob, how many of its bytes the store ALREADY holds
@@ -2917,14 +2831,12 @@ object Dedup {
     // first in-batch occurrence of each not-stored hash (keep-first)
     val w = Window.partitionBy(col("chunk_hash"))
       .orderBy(col("doc_id"), col("chunk_no"))
-    val marked0 = probed.withColumn("__first",
-      row_number().over(w) === 1 && col("__stored").isNull)
-    // MATERIALIZE the store probe before any append: the report is lazy,
-    // and an un-pinned plan re-evaluated after the append below would see
-    // the batch's own chunks as already stored (every byte "dup" — the
-    // exactDedupAgainst checkpoint-before-append rule)
-    val marked = if (updateStore) marked0.localCheckpoint() else marked0
-    val report = marked.groupBy(col("doc_id"))
+    // the report reads the pinned probe: re-evaluated after the append, it
+    // would see the batch's own chunks as already stored (every byte "dup")
+    val marked = chunkStore(store).keep(probed.withColumn("__first",
+      row_number().over(w) === 1 && col("__stored").isNull),
+      updateStore, batchId)
+    marked.groupBy(col("doc_id"))
       .agg(
         count(lit(1)).cast(LongType).as("n_chunks"),
         sum(col("chunk_len")).cast(LongType).as("total_bytes"),
@@ -2932,10 +2844,5 @@ object Dedup {
           .cast(LongType).as("new_bytes"),
         sum(when(col("__first"), lit(0L)).otherwise(col("chunk_len")))
           .cast(LongType).as("dup_bytes"))
-    if (updateStore)
-      StoreTable.appendOnce(
-        marked.filter(col("__first")).select(col("chunk_hash"), col("chunk_len")),
-        s"${store}_chunks", batchId)
-    report
   }
 }

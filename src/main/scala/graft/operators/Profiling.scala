@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType, StringType}
 
-import graft.sources.StoreTable
+import graft.sources.{StoreSpec, StoreTable}
+import graft.sources.StoreSpec.Table
 
 /** [EXT] Dataset-health operators (SURVEY §2.9 extension surface): one-pass
   * column profiling, join-key skew reporting, and robust (median/MAD)
@@ -1032,33 +1033,31 @@ object Profiling {
                             valueExpr: Column, store: String,
                             lgK: Int = 12, nBuckets: Int = 8): Unit = {
     require(lgK >= 4 && lgK <= 21, s"writeCardinalityStore: lgK $lgK")
-    // seed tag -1 (the writeInvertedIndex convention): streaming ingest
-    // batchIds start at 0 and must never collide with the seed batch
-    graft.sources.Sources.writeBucketed(
-      cardinalitySketchRows(df, groupCol, valueExpr, lgK)
-        .withColumn("__batch", lit(-1L)),
-      store, "__g", nBuckets)
-    StoreTable.setProps(df.sparkSession, store,
-      Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"))
+    cardinalityStore(store, Some(lgK))
+      .create(cardinalitySketchRows(df, groupCol, valueExpr, lgK), nBuckets)
   }
 
-  /** append one ingest batch's sketches exactly once under `batchTag`
-    * ([[graft.sources.StoreTable.appendOnce]]: a replayed or compacted tag
-    * is a no-op). The tag is required: the seed rows carry -1, so an
-    * ungated -1 append would double-count. Build parameters are validated
-    * against the store's persisted properties — a sketch built at a
-    * different lgK would union fine but silently degrade the error
-    * contract, so it refuses. */
+  /** the cardinality store: one table named `store` of per-group sketch
+    * rows, bucketed by group. A compaction knows no lgK and checks the
+    * kind and format only. */
+  private def cardinalityStore(store: String,
+                               lgK: Option[Int] = None): StoreSpec =
+    StoreSpec(store,
+      Map("kind" -> "cardinality_hll", "enc" -> "ds_hll_v1") ++
+        lgK.map("lgK" -> _),
+      Seq(Table("", "__g", identity, tagged = true)), required = Set("enc"))
+
+  /** append one ingest batch's sketches exactly once under `batchTag`. The
+    * tag is required: the seed rows carry -1, so an ungated -1 append would
+    * double-count. A sketch built at a different lgK would union fine but
+    * silently degrade the error contract, so it refuses. */
   def appendCardinalitySketches(spark: SparkSession, store: String,
                                 df: DataFrame, groupCol: String,
                                 valueExpr: Column, lgK: Int,
                                 batchTag: Long): Unit = {
     StoreTable.requireTag("appendCardinalitySketches", store, batchTag)
-    StoreTable.checkProps(spark, store,
-      Map("kind" -> "cardinality_hll", "lgK" -> lgK, "enc" -> "ds_hll_v1"),
-      required = Set("enc"))
-    StoreTable.appendOnce(
-      cardinalitySketchRows(df, groupCol, valueExpr, lgK), store, batchTag)
+    cardinalityStore(store, Some(lgK)).appendOnce(
+      cardinalitySketchRows(df, groupCol, valueExpr, lgK), batchTag)
   }
 
   private def cardinalitySketchRows(df: DataFrame, groupCol: String,
@@ -1124,70 +1123,48 @@ object Profiling {
     require(eps > 0 && eps < 1, s"writeFrequencyStore: eps $eps")
     require(confidence > 0 && confidence < 1,
       s"writeFrequencyStore: confidence $confidence")
-    frequencySketchRow(df, valueExpr, eps, confidence, seed)
-      .withColumn("__batch", lit(-1L))
-      .write.format("parquet")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite) // rebuild replaces, like every other store writer
-      .saveAsTable(store)
-    StoreTable.setProps(df.sparkSession, store,
-      Map("kind" -> "frequency_cms", "eps" -> eps,
-        "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"))
+    frequencyStore(store, Some((eps, confidence, seed)))
+      .create(frequencySketchRow(df, valueExpr, eps, confidence, seed))
   }
 
+  /** the frequency store: one unbucketed table named `store` of per-batch
+    * sketch rows. A compaction knows no build parameters and checks the
+    * kind and format only. */
+  private def frequencyStore(store: String,
+                             build: Option[(Double, Double, Int)] = None): StoreSpec =
+    StoreSpec(store,
+      Map("kind" -> "frequency_cms", "enc" -> "cms_v1") ++
+        build.toSeq.flatMap { case (eps, confidence, seed) =>
+          Seq("eps" -> eps, "confidence" -> confidence, "seed" -> seed) },
+      Seq(Table("", "", identity, tagged = true)), required = Set("enc"))
+
   /** append one ingest batch's sketch exactly once under the required
-    * `batchTag` ([[appendCardinalitySketches]]' contract; build parameters
-    * validated — sketches at a different eps/depth/seed would refuse to
-    * merge downstream, but failing at append time names the store and the
-    * fix). */
+    * `batchTag` ([[appendCardinalitySketches]]' contract; sketches at a
+    * different eps/depth/seed would refuse to merge downstream, but failing
+    * at append time names the store and the fix). */
   def appendFrequencySketch(spark: SparkSession, store: String,
                             df: DataFrame, valueExpr: Column, eps: Double,
                             confidence: Double, seed: Int,
                             batchTag: Long): Unit = {
     StoreTable.requireTag("appendFrequencySketch", store, batchTag)
-    StoreTable.checkProps(spark, store,
-      Map("kind" -> "frequency_cms", "eps" -> eps,
-        "confidence" -> confidence, "seed" -> seed, "enc" -> "cms_v1"),
-      required = Set("enc"))
-    StoreTable.appendOnce(
-      frequencySketchRow(df, valueExpr, eps, confidence, seed), store, batchTag)
+    frequencyStore(store, Some((eps, confidence, seed))).appendOnce(
+      frequencySketchRow(df, valueExpr, eps, confidence, seed), batchTag)
   }
 
-  /** Compact an accreting cardinality store IN PLACE: merge every group's
-    * batch rows into ONE row. HLL union is max-per-register — associative,
+  /** Compact an accreting cardinality store IN PLACE
+    * ([[graft.sources.StoreSpec.compact]]): merge every group's batch rows
+    * into ONE row. HLL union is max-per-register — associative,
     * commutative, lossless — so every estimate the store can ever serve is
     * PROVABLY unchanged (parity-asserted in ProfilingSpec); what changes is
     * the probe's read cost, from groups×batches sketch rows (365× the
-    * groups-sized read after a year of daily batches) back to groups. The
-    * missing maintenance verb every other store modality already had
-    * ([[graft.sources.StoreTable.swapIn]]: staging write under the table's
-    * own bucket spec + drop→rename swap, crash-repaired by
-    * recoverStoreSwap, `graft.*` properties re-applied).
-    *
-    * Replay contract after compaction: the folded batches' tags survive as
-    * the `graft.compacted_watermark` property (= their max) —
-    * [[graft.sources.StoreTable.appendOnce]] skips any tag ≤ watermark, so
-    * redelivery of a compacted batch is still an exact no-op. Requires
-    * batch tags nondecreasing across a compaction
-    * boundary, which the streaming twins' monotone batchIds guarantee (and
-    * the maintenance-window doctrine: compact between ingest passes, like
-    * every other store maintainer). `n_batches` in the estimates probe
-    * counts surviving MERGE UNITS (1 per group after compaction) — the
-    * estimates and n_rows are the preserved quantities. */
-  def compactCardinalityStore(spark: SparkSession, store: String): Unit = {
-    StoreTable.recoverStoreSwap(spark, store)
-    StoreTable.checkProps(spark, store,
-      Map("kind" -> "cardinality_hll"), required = Set.empty)
-    val merged = spark.table(store).groupBy("__g")
-      .agg(hll_union_agg(col("__sketch")).as("__sketch"),
-        sum("__n").cast(LongType).as("__n"),
-        max("__batch").cast(LongType).as("__batch"))
-      .localCheckpoint()
-    val watermark = merged.agg(max("__batch")).collect().headOption
-      .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-      .getOrElse(Long.MinValue)
-    StoreTable.swapIn(store, merged, Map("compacted_watermark" -> watermark))
-    merged.unpersist()
-  }
+    * groups-sized read after a year of daily batches) back to groups.
+    * `n_batches` in the estimates probe counts surviving MERGE UNITS (1 per
+    * group after compaction) — the estimates and n_rows are the preserved
+    * quantities. */
+  def compactCardinalityStore(spark: SparkSession, store: String): Unit =
+    cardinalityStore(store).compact(spark,
+      hll_union_agg(col("__sketch")).as("__sketch"),
+      sum("__n").cast(LongType).as("__n"))
 
   /** [[compactCardinalityStore]]'s CMS sibling: fold every batch row of an
     * accreting frequency store into ONE row. CMS merge is cell-wise
@@ -1199,8 +1176,7 @@ object Profiling {
     * cardinality compactor. */
   def compactFrequencyStore(spark: SparkSession, store: String): Unit = {
     StoreTable.recoverStoreSwap(spark, store)
-    StoreTable.checkProps(spark, store,
-      Map("kind" -> "frequency_cms"), required = Set.empty)
+    frequencyStore(store).check(spark)
     val rows = spark.table(store).select("__sketch", "__n", "__batch")
       .collect()
     require(rows.nonEmpty, s"compactFrequencyStore: $store is empty")

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.StoreTable
+import graft.sources.StoreSpec
+import graft.sources.StoreSpec.Table
 
 /** [EXT] Inverted-index keyword search over the corpus — the text-retrieval
   * sibling of the embedding ANN stores. At 100 TB a keyword lookup must not
@@ -30,67 +31,58 @@ object Search {
       filter(TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))),
         t => length(t) > 0).as("__toks"))
 
-  /** postings carry the DOC LENGTH denormalized into every row (Lucene
-    * stores norms in a separate doc-keyed file; an impact-style index
-    * inlines them) — 8 bytes/posting buys BM25 probes that touch ONLY the
-    * query terms' buckets, with no corpus-sized doc-norms join. */
-  private def postingsOf(df: DataFrame, idCol: String,
-                         textCol: String): DataFrame =
-    tokensOf(df, idCol, textCol)
-      .select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
+  /** postings of a [[tokensOf]] frame. They carry the DOC LENGTH
+    * denormalized into every row (Lucene stores norms in a separate
+    * doc-keyed file; an impact-style index inlines them) — 8 bytes/posting
+    * buys BM25 probes that touch ONLY the query terms' buckets, with no
+    * corpus-sized doc-norms join. */
+  private def postingsOf(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), size(col("__toks")).cast("long").as("dl"),
         explode(col("__toks")).as("term"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
 
-  /** persist the inverted index for `df`: `store`_postings (term, doc_id,
-    * tf, __batch) bucketed by term, and `store`_terms (term, df, __batch)
-    * — both managed bucketed tables; the postings table carries the build
-    * metadata (kind and the BM25 corpus stats), and appends read the bucket
-    * spec from the catalog. `__batch` tags each row with the append batch
-    * that wrote it (−1 for the base build) — the handle of
-    * [[graft.sources.StoreTable.appendOnce]] (see [[appendInvertedIndex]]);
-    * readers never select it. */
+  /** the inverted index: `store`_postings (term, doc_id, tf, dl, __batch)
+    * and `store`_terms (term, df, __batch), both bucketed by term; the
+    * batch is a postings frame. The postings table carries the kind and
+    * the BM25 corpus stats. */
+  private def indexStore(store: String): StoreSpec =
+    StoreSpec(store, Map("kind" -> "inverted_index"),
+      Seq(Table("_postings", "term", identity, tagged = true),
+        Table("_terms", "term",
+          _.groupBy("term").agg(count(lit(1)).as("df")), tagged = true)))
+
+  /** persist the inverted index for `df` ([[indexStore]]); readers never
+    * select `__batch`. */
   def writeInvertedIndex(df: DataFrame, idCol: String, textCol: String,
                          store: String, nBuckets: Int = 64): Unit = {
-    // materialize the postings once (both table writes consume them — the
-    // unmaterialized form re-ran the tokenize+explode per write), then
-    // overlap the two independent writes (guide §2.6, r22)
-    val posts = postingsOf(df, idCol, textCol).localCheckpoint()
-    graft.sources.Sources.writeConcurrently(
-      () => graft.sources.Sources.writeBucketed(
-        posts.withColumn("__batch", lit(-1L)),
-        s"${store}_postings", "term", nBuckets),
-      () => graft.sources.Sources.writeBucketed(
-        posts.groupBy("term").agg(count(lit(1)).as("df"))
-          .withColumn("__batch", lit(-1L)),
-        s"${store}_terms", "term", nBuckets))
+    val toks = tokensOf(df, idCol, textCol)
+    // materialize the postings once: both table writes consume them
+    val posts = postingsOf(toks).localCheckpoint()
     // corpus stats for BM25 length normalization (docCount incl. token-less
     // docs, total token count) — two exact longs in table properties, so a
     // probe never scans the corpus (or the full postings) to learn avgdl
-    val stats = corpusStats(tokensOf(df, idCol, textCol))
-    StoreTable.setProps(df.sparkSession, s"${store}_postings",
-      Map("kind" -> "inverted_index", "docCount" -> stats._1,
-        "totalDl" -> stats._2))
+    val (docCount, totalDl) = corpusStats(toks)
+    indexStore(store).create(posts, nBuckets,
+      Map("docCount" -> docCount, "totalDl" -> totalDl))
   }
 
-  /** (docCount, total token count) over per-doc token arrays. */
-  private def corpusStats(toks: DataFrame): (Long, Long) = {
-    val r = toks
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(size(col("__toks"))), lit(0L)).as("td"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  /** (docCount, total token count) over per-doc token arrays, in ONE job:
+    * an RDD fold needs no exchange, where a global aggregate under AQE runs
+    * its shuffle stage as a second job. */
+  private def corpusStats(toks: DataFrame): (Long, Long) =
+    toks.select(coalesce(size(col("__toks")), lit(0)).cast("long")).rdd
+      .map(_.getLong(0))
+      .aggregate((0L, 0L))((acc, dl) => (acc._1 + 1, acc._2 + dl),
+        (a, b) => (a._1 + b._1, a._2 + b._2))
 
-  /** append a NEW batch's postings to an existing index — the ingest-loop
-    * shape of the other incremental stores: per-batch bucketed APPENDS
-    * (never a rewrite; one file per bucket per batch, collapsed by
-    * `Sources.compactBucketed` in the maintenance window). The bucket spec
-    * comes from the catalog. Contract (same as every
-    * store append here): the batch's doc ids are NEW — re-appending a doc
-    * double-counts its term frequencies. The terms table accretes
-    * per-batch (term, df) rows; doc-freq readers SUM by term, which is
-    * exact because batches are disjoint doc sets.
+  /** append a NEW batch's postings to an existing index — per-batch
+    * bucketed APPENDS (never a rewrite; one file per bucket per batch,
+    * collapsed by `Sources.compactBucketed` in the maintenance window).
+    * Contract (same as every store append here): the batch's doc ids are
+    * NEW — re-appending a doc double-counts its term frequencies. The terms
+    * table accretes per-batch (term, df) rows; doc-freq readers SUM by
+    * term, which is exact because batches are disjoint doc sets.
     *
     * `batchId ≥ 0` makes the append exactly-once per table through
     * [[graft.sources.StoreTable.appendOnce]] (its scaladoc states the crash
@@ -110,13 +102,11 @@ object Search {
   def appendInvertedIndex(df: DataFrame, idCol: String, textCol: String,
                           store: String, batchId: Long = -1L): Unit = {
     val spark = df.sparkSession
-    StoreTable.checkProps(spark, s"${store}_postings",
-      Map("kind" -> "inverted_index"))
-    val props = StoreTable.props(spark, s"${store}_postings")
-    val posts = postingsOf(df, idCol, textCol)
-    val appended = StoreTable.appendOnce(posts, s"${store}_postings", batchId)
-    StoreTable.appendOnce(posts.groupBy("term").agg(count(lit(1)).as("df")),
-      s"${store}_terms", batchId)
+    val spec = indexStore(store)
+    // one token frame feeds both tables' postings and the corpus stats.
+    // Pinning it costs more jobs than re-tokenizing (measured: a checkpoint
+    // adds one to the append and to a replay, a cache two to the append)
+    val toks = tokensOf(df, idCol, textCol)
     // roll the BM25 corpus stats forward only when the postings append ran
     // (a replayed batch must not double-count). The property write follows
     // the append commit, so a crash between them leaves stats stale by one
@@ -125,11 +115,13 @@ object Search {
     // later batch adds only its own stats); avgdl drifts by one batch's
     // tokens, which perturbs BM25 scores marginally and never correctness
     // of membership.
-    if (appended) props.get("docCount").foreach { dc =>
-      val stats = corpusStats(tokensOf(df, idCol, textCol))
-      StoreTable.setProps(spark, s"${store}_postings",
-        Map("docCount" -> (dc.toLong + stats._1),
-          "totalDl" -> (props("totalDl").toLong + stats._2)))
+    if (spec.appendOnce(postingsOf(toks), batchId)) {
+      val props = spec.props(spark)
+      props.get("docCount").foreach { dc =>
+        val (docCount, totalDl) = corpusStats(toks)
+        spec.setProps(spark, Map("docCount" -> (dc.toLong + docCount),
+          "totalDl" -> (props("totalDl").toLong + totalDl)))
+      }
     }
   }
 
@@ -152,11 +144,12 @@ object Search {
       .filter(length(col("term")) > 0)
       .groupBy("term", "doc_id")
       .agg(sort_array(collect_list(col("pos"))).as("positions"))
-    graft.sources.Sources.writeBucketed(posts, s"${store}_pos", "term",
-      nBuckets)
-    StoreTable.setProps(df.sparkSession, s"${store}_pos",
-      Map("kind" -> "positional_index"))
+    positionalStore(store).create(posts, nBuckets)
   }
+
+  private def positionalStore(store: String): StoreSpec =
+    StoreSpec(store, Map("kind" -> "positional_index"),
+      Seq(Table("_pos", "term", identity)))
 
   /** exact-PHRASE search against a [[writePositionalIndex]] store: the
     * phrase's terms must appear at consecutive positions. Candidate scan =
@@ -170,8 +163,7 @@ object Search {
   def searchPhrase(spark: SparkSession, store: String, phrase: Seq[String],
                    k: Int): DataFrame = {
     require(phrase.length >= 2, "searchPhrase: need at least a 2-term phrase")
-    StoreTable.checkProps(spark, s"${store}_pos",
-      Map("kind" -> "positional_index"))
+    positionalStore(store).check(spark)
     val norm = phrase.map(_.toLowerCase)
     val pos = spark.table(s"${store}_pos")
       .filter(col("term").isin(norm.distinct: _*))
@@ -199,8 +191,7 @@ object Search {
   def searchAll(spark: SparkSession, store: String, terms: Seq[String],
                 k: Int): DataFrame = {
     require(terms.nonEmpty, "searchAll: empty term list")
-    StoreTable.checkProps(spark, s"${store}_postings",
-      Map("kind" -> "inverted_index"))
+    indexStore(store).check(spark)
     val norm = terms.map(_.toLowerCase).distinct
     spark.table(s"${store}_postings")
       .filter(col("term").isin(norm: _*))
@@ -225,8 +216,7 @@ object Search {
                      k: Int, docCount: Long): DataFrame = {
     require(terms.nonEmpty, "searchWeighted: empty term list")
     require(docCount > 0, s"searchWeighted: docCount must be > 0, got $docCount")
-    StoreTable.checkProps(spark, s"${store}_postings",
-      Map("kind" -> "inverted_index"))
+    indexStore(store).check(spark)
     val norm = terms.map(_.toLowerCase).distinct
     val weights = termDocFreq(spark, store)
       .filter(col("term").isin(norm: _*))
@@ -265,9 +255,8 @@ object Search {
                         terms: Seq[String], k1: Double,
                         b: Double): DataFrame = {
     require(terms.nonEmpty, "searchBM25: empty term list")
-    StoreTable.checkProps(spark, s"${store}_postings",
-      Map("kind" -> "inverted_index"))
-    val props = StoreTable.props(spark, s"${store}_postings")
+    indexStore(store).check(spark)
+    val props = indexStore(store).props(spark)
     def stat(name: String) = props.getOrElse(name,
       sys.error(s"$store: no graft.$name property — a pre-BM25 index; " +
         "rebuild with writeInvertedIndex to record corpus stats")).toLong
@@ -391,8 +380,7 @@ object Search {
   def searchAny(spark: SparkSession, store: String, terms: Seq[String],
                 k: Int): DataFrame = {
     require(terms.nonEmpty, "searchAny: empty term list")
-    StoreTable.checkProps(spark, s"${store}_postings",
-      Map("kind" -> "inverted_index"))
+    indexStore(store).check(spark)
     val norm = terms.map(_.toLowerCase).distinct
     spark.table(s"${store}_postings")
       .filter(col("term").isin(norm: _*))

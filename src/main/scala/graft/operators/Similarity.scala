@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.StoreTable
+import graft.sources.StoreSpec
+import graft.sources.StoreSpec.Table
 
 /** [EXT] Similarity search over an embedding column (`array<float>`).
   *
@@ -310,20 +311,20 @@ object Similarity {
     * byte-stream-split/RLE on top), and probes never re-quantize. Managed
     * bucketed table with build metadata, like the LSH/IVF store twins. */
   def writeInt8Store(df: DataFrame, idCol: String, vecCol: String,
-                     store: String, nBuckets: Int = 64): Unit = {
+                     store: String, nBuckets: Int = 64): Unit =
     // same lambda-trap avoidance as int8TopK: scale as a column, never a
     // captured expression inside the quantize transform
-    graft.sources.Sources.writeBucketed(
+    int8Store(store, idCol).create(
       df.select(col(idCol), col(vecCol).as("__v"))
         .withColumn("__scale", int8Scale(col("__v")))
         .select(col(idCol),
           transform(int8Quantize(col("__v"), col("__scale")),
             x => x.cast(ByteType)).as("qvec"),
           col("__scale").as("scale")),
-      s"${store}_q", idCol, nBuckets)
-    StoreTable.setProps(df.sparkSession, s"${store}_q",
-      Map("kind" -> "int8"))
-  }
+      nBuckets)
+
+  private def int8Store(store: String, idCol: String): StoreSpec =
+    StoreSpec(store, Map("kind" -> "int8"), Seq(Table("_q", idCol, identity)))
 
   /** top-k against a [[writeInt8Store]] store — same result as [[int8TopK]]
     * on the raw vectors BY CONSTRUCTION (quantization is deterministic and
@@ -331,8 +332,7 @@ object Similarity {
   def int8TopKAgainstStore(spark: SparkSession, store: String, idCol: String,
                            query: Seq[Double], k: Int,
                            extraFilter: Column = lit(true)): DataFrame = {
-    StoreTable.checkProps(spark, s"${store}_q",
-      Map("kind" -> "int8"))
+    int8Store(store, idCol).check(spark)
     val qArr = array(int8QueryInts(query).map(lit): _*)
     val qdot = aggregate(
       zip_with(col("qvec"), qArr, (a, b) => a.cast(LongType) * b),
@@ -510,11 +510,8 @@ object Similarity {
       s"lshTopK: maxFlips=$maxFlips over nBits=$nBits probes ${probes.length} " +
         s"buckets — above the $MaxProbeLiterals plan-literal cap; lower " +
         "maxFlips, or grow nBits / switch to banded signatures for recall")
-    val bucketed = df.withColumn("__sig", lshSignature(col(vecCol), dim, nBits, seed))
-    val q = array(query.map(lit): _*)
-    bucketed.filter(col("__sig").isin(probes.map(Long.box): _*))
-      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("cos"))
-      .orderBy(desc("cos"), col(idCol)).limit(k)
+    bruteForceTopK(df.withColumn("__sig", lshSignature(col(vecCol), dim, nBits, seed))
+      .filter(col("__sig").isin(probes.map(Long.box): _*)), idCol, vecCol, query, k)
   }
 
   /** banded LSH signatures: one row per (id, band, sig), all bands sliced
@@ -846,10 +843,8 @@ object Similarity {
               idCol: String, vecCol: String, query: Seq[Double], topK: Int,
               nprobe: Int = 4): DataFrame = {
     val probes = ivfProbes(model, query, nprobe)
-    val q = array(query.map(lit): _*)
-    assigned.filter(col("__cluster").isin(probes.map(Int.box): _*))
-      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("cos"))
-      .orderBy(desc("cos"), col(idCol)).limit(topK)
+    bruteForceTopK(assigned.filter(col("__cluster").isin(probes.map(Int.box): _*)),
+      idCol, vecCol, query, topK)
   }
 
   /** deterministic whole-model fingerprint (micros-rounded centroid
@@ -857,7 +852,7 @@ object Similarity {
     * at probe time: probing a cell-partitioned store with a DIFFERENT
     * fitted model silently reads the WRONG cells (partition values come
     * from the build-time assignment), the worst kind of miss. */
-  private[operators] def modelFingerprint(model: IvfModel): Long =
+  private[graft] def modelFingerprint(model: IvfModel): Long =
     model.centers.foldLeft(0L) { (acc, c) =>
       c.foldLeft(31L * acc + c.length)((a, v) => 31L * a + math.round(v * 1e6))
     }
@@ -873,15 +868,21 @@ object Similarity {
     * each cell holds ~targetCellRows·rowBytes — compact with the store's
     * writer cadence if ingest appends many small files. */
   def writeIvfStore(df: DataFrame, idCol: String, vecCol: String,
-                    model: IvfModel, store: String): Unit = {
+                    model: IvfModel, store: String): Unit =
+    ivfStore(store, model).create(ivfRows(df, idCol, vecCol, model))
+
+  /** the IVF index `<store>_cells (id, vec, __cluster)`, partitioned by cell;
+    * the batch is [[ivfRows]]' */
+  private def ivfStore(store: String, model: IvfModel): StoreSpec =
+    StoreSpec(store,
+      Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
+        "fingerprint" -> modelFingerprint(model)),
+      Seq(Table("_cells", "__cluster", identity, partitioned = true)))
+
+  private def ivfRows(df: DataFrame, idCol: String, vecCol: String,
+                      model: IvfModel): DataFrame =
     ivfAssign(df, vecCol, model)
       .select(col(idCol), col(vecCol).as("vec"), col("__cluster"))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .partitionBy("__cluster").saveAsTable(s"${store}_cells")
-    StoreTable.setProps(df.sparkSession, s"${store}_cells",
-      Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
-        "fingerprint" -> modelFingerprint(model)))
-  }
 
   /** INCREMENTAL ingest into a [[writeIvfStore]] store: the new batch is
     * assigned with the SAME fitted model (fingerprint-checked — appending
@@ -894,16 +895,8 @@ object Similarity {
     * frozen between refits, the standard IVF ingest contract: refit +
     * full rewrite is the offline maintenance event, not the append path. */
   def appendToIvfStore(newBatch: DataFrame, idCol: String, vecCol: String,
-                       model: IvfModel, store: String): Unit = {
-    StoreTable.checkProps(newBatch.sparkSession,
-      s"${store}_cells",
-      Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
-        "fingerprint" -> modelFingerprint(model)))
-    ivfAssign(newBatch, vecCol, model)
-      .select(col(idCol), col(vecCol).as("vec"), col("__cluster"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .partitionBy("__cluster").saveAsTable(s"${store}_cells")
-  }
+                       model: IvfModel, store: String): Unit =
+    ivfStore(store, model).appendOnce(ivfRows(newBatch, idCol, vecCol, model))
 
   /** ANN top-k against a [[writeIvfStore]] store: centroids ranked
     * driver-side (k ≪ corpus), the probed cells read via PARTITION
@@ -914,16 +907,11 @@ object Similarity {
                           idCol: String, query: Seq[Double], topK: Int,
                           nprobe: Int = 4,
                           extraFilter: Column = lit(true)): DataFrame = {
-    StoreTable.checkProps(spark, s"${store}_cells",
-      Map("k" -> model.centers.length, "dim" -> model.centers.head.length,
-        "fingerprint" -> modelFingerprint(model)))
+    ivfStore(store, model).check(spark)
     val probes = ivfProbes(model, query, nprobe)
-    val q = array(query.map(lit): _*)
-    spark.table(s"${store}_cells")
+    bruteForceTopK(spark.table(s"${store}_cells")
       .filter(col("__cluster").isin(probes.map(Int.box): _*))
-      .filter(extraFilter)
-      .select(col(idCol), round(cosine(col("vec"), q), 6).as("cos"))
-      .orderBy(desc("cos"), col(idCol)).limit(topK)
+      .filter(extraFilter), idCol, "vec", query, topK)
   }
 
   /** persist PRECOMPUTED hyperplane signatures BUCKETED (and sorted) by
@@ -940,39 +928,36 @@ object Similarity {
     * offline-index contract as [[writeIvfStore]]. */
   def writeLshStore(df: DataFrame, idCol: String, vecCol: String,
                     store: String, dim: Int, nBits: Int = 16,
-                    seed: Long = 42L, nBuckets: Int = 64): Unit = {
-    graft.sources.Sources.writeBucketed(
+                    seed: Long = 42L, nBuckets: Int = 64): Unit =
+    lshStore(store, dim, nBits, seed).create(
       df.select(col(idCol), col(vecCol).as("vec"),
         lshSignature(col(vecCol), dim, nBits, seed).as("sig")),
-      s"${store}_sigs", "sig", nBuckets)
-    StoreTable.setProps(df.sparkSession, s"${store}_sigs",
-      Map("dim" -> dim, "nBits" -> nBits, "seed" -> seed))
-  }
+      nBuckets)
+
+  private def lshStore(store: String, dim: Int, nBits: Int,
+                       seed: Long): StoreSpec =
+    StoreSpec(store, Map("dim" -> dim, "nBits" -> nBits, "seed" -> seed),
+      Seq(Table("_sigs", "sig", identity)))
 
   /** multi-probe ANN against a [[writeLshStore]] store — same probe-set
     * semantics (and plan-literal cap) as [[lshTopK]], same results for the
     * same parameters (asserted in SkewAndIvfSpec), but the scan reads
-    * pre-signed bucketed files instead of re-signing the corpus. Build
-    * parameters are validated against the store's persisted properties. */
+    * pre-signed bucketed files instead of re-signing the corpus. */
   def lshTopKAgainstStore(spark: SparkSession, store: String, idCol: String,
                           query: Seq[Double], k: Int, dim: Int,
                           nBits: Int = 16, seed: Long = 42L,
                           maxFlips: Int = 0,
                           extraFilter: Column = lit(true)): DataFrame = {
-    StoreTable.checkProps(spark, s"${store}_sigs",
-      Map("dim" -> dim, "nBits" -> nBits, "seed" -> seed))
+    lshStore(store, dim, nBits, seed).check(spark)
     val qSig = signatureOf(query, dim, nBits, seed)
     val probes = probeSignatures(qSig, nBits, maxFlips)
     require(probes.length <= MaxProbeLiterals,
       s"lshTopKAgainstStore: maxFlips=$maxFlips over nBits=$nBits probes " +
         s"${probes.length} buckets — above the $MaxProbeLiterals " +
         "plan-literal cap; lower maxFlips or grow nBits")
-    val q = array(query.map(lit): _*)
-    spark.table(s"${store}_sigs")
+    bruteForceTopK(spark.table(s"${store}_sigs")
       .filter(col("sig").isin(probes.map(Long.box): _*))
-      .filter(extraFilter)
-      .select(col(idCol), round(cosine(col("vec"), q), 6).as("cos"))
-      .orderBy(desc("cos"), col(idCol)).limit(k)
+      .filter(extraFilter), idCol, "vec", query, k)
   }
 
   /** Per-label mean embedding (mean pooling) — centroids for class-level
@@ -1186,13 +1171,17 @@ object Similarity {
     * bounded by cell radii — pinned in SkewAndIvfSpec, recall measured by
     * q_pq_recall); determinism of the approximation is what's exact. */
   def pqAdcTopK(df: DataFrame, idCol: String, vecCol: String,
-                query: Seq[Double], model: PqModel, k: Int): DataFrame = {
-    val lut = pqLutNanos(model, query)
-    val qn = pqQueryNormNanos(model, query)
-    df.select(col(idCol), pqCodes(col(vecCol), model).as("__codes"))
-      .withColumn("__lut", array(lut.map(lit): _*))
-      .withColumn("__nanos",
-        adcNanos(col("__codes"), col("__lut"), model.m, model.ksub) + qn)
+                query: Seq[Double], model: PqModel, k: Int): DataFrame =
+    adcTopK(df.select(col(idCol), pqCodes(col(vecCol), model).as("codes")),
+      idCol, query, model, k)
+
+  /** the ADC top-k of (id, codes) rows: ranked on the exact-integer nanos
+    * with id ties, emitted as the rounded distance */
+  private def adcTopK(codes: DataFrame, idCol: String, query: Seq[Double],
+                      model: PqModel, k: Int): DataFrame =
+    codes.withColumn("__lut", array(pqLutNanos(model, query).map(lit): _*))
+      .withColumn("__nanos", adcNanos(col("codes"), col("__lut"), model.m,
+        model.ksub) + pqQueryNormNanos(model, query))
       .orderBy(col("__nanos"), col(idCol))
       .limit(k)
       .select(col(idCol),
@@ -1201,13 +1190,12 @@ object Similarity {
       // ranks on exact nanos, but the emitted frame must order identically
       // to an oracle that only sees the rounded column
       .orderBy(col("dist_sq"), col(idCol))
-  }
 
   /** deterministic PQ model fingerprint (micros-rounded codebook elements)
     * — persisted with the code store and checked at probe time: ADC
     * against codes from a DIFFERENT model is silently wrong, the
     * [[modelFingerprint]] failure class. */
-  private[operators] def pqFingerprint(model: PqModel): Long =
+  private[graft] def pqFingerprint(model: PqModel): Long =
     model.codebooks.foldLeft(0L) { (acc, book) =>
       book.foldLeft(31L * acc + book.length) { (a, c) =>
         c.foldLeft(31L * a + c.length)((x, v) => 31L * x + math.round(v * 1e6))
@@ -1220,15 +1208,20 @@ object Similarity {
     * Bucketed managed table with build metadata + model fingerprint, like
     * the int8/LSH/IVF store twins. */
   def writePqStore(df: DataFrame, idCol: String, vecCol: String,
-                   model: PqModel, store: String, nBuckets: Int = 64): Unit = {
-    graft.sources.Sources.writeBucketed(
-      df.select(col(idCol), pqCodes(col(vecCol), model).as("codes"))
-        .withColumn("__batch", lit(-1L)),
-      s"${store}_pq", idCol, nBuckets)
-    StoreTable.setProps(df.sparkSession, s"${store}_pq",
+                   model: PqModel, store: String, nBuckets: Int = 64): Unit =
+    pqStore(store, idCol, model)
+      .create(df.select(col(idCol), pqCodes(col(vecCol), model).as("codes")),
+        nBuckets)
+
+  /** the PQ code store `<store>_pq (id, codes, __batch)`, bucketed by id;
+    * the batch is (id, codes) */
+  private def pqStore(store: String, idCol: String,
+                      model: PqModel): StoreSpec =
+    StoreSpec(store,
       Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
-        "enc" -> "bias128"))
-  }
+        "enc" -> "bias128"),
+      Seq(Table("_pq", idCol, identity, tagged = true)),
+      required = Set("enc"))
 
   /** idempotent batched append to a [[writePqStore]] store: encode the
     * batch under the SAME fingerprint-checked model and append it through
@@ -1241,14 +1234,9 @@ object Similarity {
     * ([[graft.sources.Sources.compactBucketed]]). */
   def appendPqStore(df: DataFrame, idCol: String, vecCol: String,
                     model: PqModel, store: String,
-                    batchId: Long = -1L): Boolean = {
-    StoreTable.checkProps(df.sparkSession, s"${store}_pq",
-      Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
-        "enc" -> "bias128"), required = Set("enc"))
-    StoreTable.appendOnce(
-      df.select(col(idCol), pqCodes(col(vecCol), model).as("codes")),
-      s"${store}_pq", batchId)
-  }
+                    batchId: Long = -1L): Boolean =
+    pqStore(store, idCol, model).appendOnce(
+      df.select(col(idCol), pqCodes(col(vecCol), model).as("codes")), batchId)
 
   /** top-k against a [[writePqStore]] store — same result as [[pqAdcTopK]]
     * BY CONSTRUCTION (encoding is deterministic and happened at write
@@ -1257,24 +1245,9 @@ object Similarity {
   def pqAdcTopKAgainstStore(spark: SparkSession, store: String, idCol: String,
                             query: Seq[Double], model: PqModel, k: Int,
                             extraFilter: Column = lit(true)): DataFrame = {
-    StoreTable.checkProps(spark, s"${store}_pq",
-      Map("kind" -> "pq", "fp" -> pqFingerprint(model).toString,
-        "enc" -> "bias128"), required = Set("enc"))
-    val lut = pqLutNanos(model, query)
-    val qn = pqQueryNormNanos(model, query)
-    spark.table(s"${store}_pq")
-      .filter(extraFilter)
-      .withColumn("__lut", array(lut.map(lit): _*))
-      .withColumn("__nanos",
-        adcNanos(col("codes"), col("__lut"), model.m, model.ksub) + qn)
-      .orderBy(col("__nanos"), col(idCol))
-      .limit(k)
-      .select(col(idCol),
-        round(col("__nanos").cast(DoubleType) / 1e9, 6).as("dist_sq"))
-      // output order on the ROUNDED distance with id ties — top-k selection
-      // ranks on exact nanos, but the emitted frame must order identically
-      // to an oracle that only sees the rounded column
-      .orderBy(col("dist_sq"), col(idCol))
+    pqStore(store, idCol, model).check(spark)
+    adcTopK(spark.table(s"${store}_pq").filter(extraFilter), idCol, query,
+      model, k)
   }
 
   /** PQ-ADC with exact RE-RANKING — the production IVFADC+R architecture
@@ -1318,16 +1291,18 @@ object Similarity {
     * touches ~100TB · (8/4096) / 32 ≈ 6 GB. Both models are
     * fingerprinted; probing under either wrong model fails loudly. */
   def writeIvfPqStore(df: DataFrame, idCol: String, vecCol: String,
-                      ivf: IvfModel, pq: PqModel, store: String): Unit = {
-    ivfAssign(df, vecCol, ivf)
+                      ivf: IvfModel, pq: PqModel, store: String): Unit =
+    ivfPqStore(store, ivf, pq).create(ivfAssign(df, vecCol, ivf)
       .select(col(idCol), pqCodes(col(vecCol), pq).as("codes"),
-        col("__cluster"))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .partitionBy("__cluster").saveAsTable(s"${store}_pqcells")
-    StoreTable.setProps(df.sparkSession, s"${store}_pqcells",
+        col("__cluster")))
+
+  private def ivfPqStore(store: String, ivf: IvfModel,
+                         pq: PqModel): StoreSpec =
+    StoreSpec(store,
       Map("kind" -> "ivfpq", "ivfFp" -> modelFingerprint(ivf),
-        "pqFp" -> pqFingerprint(pq).toString, "enc" -> "bias128"))
-  }
+        "pqFp" -> pqFingerprint(pq).toString, "enc" -> "bias128"),
+      Seq(Table("_pqcells", "__cluster", identity, partitioned = true)),
+      required = Set("enc"))
 
   /** ADC top-k against a [[writeIvfPqStore]] store: rank the `nprobe`
     * nearest cells driver-side ([[ivfProbes]] — pure k-centroid math),
@@ -1342,24 +1317,11 @@ object Similarity {
                 pq: PqModel, idCol: String, query: Seq[Double], k: Int,
                 nprobe: Int = 4,
                 extraFilter: Column = lit(true)): DataFrame = {
-    StoreTable.checkProps(spark, s"${store}_pqcells",
-      Map("kind" -> "ivfpq", "ivfFp" -> modelFingerprint(ivf),
-        "pqFp" -> pqFingerprint(pq).toString, "enc" -> "bias128"),
-      required = Set("enc"))
+    ivfPqStore(store, ivf, pq).check(spark)
     val probes = ivfProbes(ivf, query, nprobe)
-    val lut = pqLutNanos(pq, query)
-    val qn = pqQueryNormNanos(pq, query)
-    spark.table(s"${store}_pqcells")
+    adcTopK(spark.table(s"${store}_pqcells")
       .filter(col("__cluster").isin(probes.map(Int.box): _*))
-      .filter(extraFilter)
-      .withColumn("__lut", array(lut.map(lit): _*))
-      .withColumn("__nanos",
-        adcNanos(col("codes"), col("__lut"), pq.m, pq.ksub) + qn)
-      .orderBy(col("__nanos"), col(idCol))
-      .limit(k)
-      .select(col(idCol),
-        round(col("__nanos").cast(DoubleType) / 1e9, 6).as("dist_sq"))
-      .orderBy(col("dist_sq"), col(idCol))
+      .filter(extraFilter), idCol, query, pq, k)
   }
 
   /** brute-force exact top-k by squared L2 (ranked by `|v|² − 2·v·q`, the

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.StoreTable
+import graft.sources.{StoreSpec, StoreTable}
+import graft.sources.StoreSpec.Table
 
 /** [EXT] Text-analysis operators for a training-data pipeline (north star in
   * BASELINE.json): language ID, quality scoring, token counting, document
@@ -504,78 +505,41 @@ object TextAnalysis {
     * integers, no sketch error). Bucketed on the probe join keys so a
     * gate's count joins never reshuffle the store. */
   def writeLmStore(df: DataFrame, textCol: String, store: String,
-                   nBuckets: Int = 8): Unit = {
-    val spark = df.sparkSession
-    val prs = lmPairRows(df, Seq.empty, textCol).localCheckpoint()
-    // both count tables aggregate the same checkpointed pair rows and are
-    // independent — overlap the writes (guide §2.6, r22)
-    graft.sources.Sources.writeConcurrently(
-      () => graft.sources.Sources.writeBucketed(
-        prs.groupBy("pair").agg(count(lit(1)).as("cnt"))
-          .withColumn("__batch", lit(-1L)),
-        s"${store}_pairs", "pair", nBuckets),
-      () => graft.sources.Sources.writeBucketed(
-        prs.groupBy("t1").agg(count(lit(1)).as("cnt"))
-          .withColumn("__batch", lit(-1L)),
-        s"${store}_ctx", "t1", nBuckets))
-    Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      StoreTable.setProps(spark, t,
-        Map("kind" -> "lm_bigram", "enc" -> "lm_v1")))
-  }
+                   nBuckets: Int = 8): Unit =
+    // both count tables aggregate the same checkpointed pair rows
+    lmStore(store).create(lmPairRows(df, Seq.empty, textCol).localCheckpoint(),
+      nBuckets)
+
+  /** the LM store: pair and context counts of a batch of [[lmPairRows]],
+    * bucketed on the gate's join keys, properties on both tables */
+  private def lmStore(store: String): StoreSpec =
+    StoreSpec(store, Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
+      Seq(Table("_pairs", "pair",
+          _.groupBy("pair").agg(count(lit(1)).as("cnt")), tagged = true),
+        Table("_ctx", "t1",
+          _.groupBy("t1").agg(count(lit(1)).as("cnt")), tagged = true)),
+      required = Set("enc"), propsOnEvery = true)
 
   /** append one ingest batch's pair/context counts exactly once under the
-    * required `batchTag`, PER TABLE ([[graft.sources.StoreTable.appendOnce]]:
-    * a crash between the two appends recovers exactly, each table skips the
-    * tag it already holds or a compaction folded away). Estimates
-    * downstream sum across batches, so a replayed tag would double every
-    * count it touches — the tag gate is correctness, not hygiene. */
+    * required `batchTag`, per table. Estimates downstream sum across
+    * batches, so a replayed tag would double every count it touches — the
+    * tag gate is correctness, not hygiene. */
   def appendLmCounts(spark: org.apache.spark.sql.SparkSession, store: String,
                      df: DataFrame, textCol: String, batchTag: Long): Unit = {
     StoreTable.requireTag("appendLmCounts", store, batchTag)
-    Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      StoreTable.checkProps(spark, t,
-        Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
-        required = Set("enc")))
-    val prs = lmPairRows(df, Seq.empty, textCol).localCheckpoint()
-    // each table's tag gate is independent — overlap the two appends (§2.6)
-    graft.sources.Sources.writeConcurrently(
-      () => StoreTable.appendOnce(prs.groupBy("pair").agg(count(lit(1)).as("cnt")),
-        s"${store}_pairs", batchTag),
-      () => StoreTable.appendOnce(prs.groupBy("t1").agg(count(lit(1)).as("cnt")),
-        s"${store}_ctx", batchTag))
+    lmStore(store).appendOnce(lmPairRows(df, Seq.empty, textCol).localCheckpoint(),
+      batchTag)
   }
 
-  /** Compact an accreting LM store IN PLACE: fold every key's batch rows
-    * into ONE row per pair / context. The fold is an exact integer SUM —
-    * every count [[lmPerplexityAgainst]] can ever read is provably
-    * unchanged — while the gate's count joins drop from keys×batches rows
-    * to keys. DISTRIBUTED, unlike the sketch compactors (whose rows are
-    * kilobyte sketches): the pairs table is vocabulary-bounded but a
-    * vocabulary at web scale is not driver-sized. Crash contract matches
-    * the sketch compactors: [[graft.sources.StoreTable.swapIn]]
-    * ([[graft.sources.StoreTable.recoverStoreSwap]] heals a crash between
-    * DROP and RENAME), and the folded-away max batch tag persists as
-    * `graft.compacted_watermark` so a replayed tag at/below it is a no-op
-    * in [[graft.sources.StoreTable.appendOnce]] rather than a double count. */
+  /** Compact an accreting LM store IN PLACE ([[StoreSpec.compact]]): fold
+    * every key's batch rows into ONE row per pair / context. The fold is an
+    * exact integer SUM — every count [[lmPerplexityAgainst]] can ever read
+    * is provably unchanged — while the gate's count joins drop from
+    * keys×batches rows to keys. Distributed: a vocabulary at web scale is
+    * not driver-sized. */
   def compactLmStore(spark: org.apache.spark.sql.SparkSession,
-                     store: String): Unit = {
-    Seq((s"${store}_pairs", "pair"), (s"${store}_ctx", "t1")).foreach {
-      case (t, key) =>
-        StoreTable.recoverStoreSwap(spark, t)
-        StoreTable.checkProps(spark, t,
-          Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
-          required = Set("enc"))
-        val merged = spark.table(t).groupBy(col(key))
-          .agg(sum("cnt").cast(LongType).as("cnt"),
-            max("__batch").cast(LongType).as("__batch"))
-          .localCheckpoint()
-        val watermark = merged.agg(max("__batch")).collect().headOption
-          .flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-          .getOrElse(Long.MinValue)
-        StoreTable.swapIn(t, merged, Map("compacted_watermark" -> watermark))
-        merged.unpersist()
-    }
-  }
+                     store: String): Unit =
+    lmStore(store).compact(spark, sum("cnt").cast(LongType).as("cnt"))
 
   /** the perplexity gate against the PERSISTED LM ([[writeLmStore]]) —
     * CCNet semantics: the threshold is absolute (the LM does not move with
@@ -590,10 +554,7 @@ object TextAnalysis {
                           maxPpl: Double = 500.0): DataFrame = {
     require(maxPpl > 1.0, s"lmPerplexityAgainst: maxPpl must be > 1: $maxPpl")
     val spark = df.sparkSession
-    Seq(s"${store}_pairs", s"${store}_ctx").foreach(t =>
-      StoreTable.checkProps(spark, t,
-        Map("kind" -> "lm_bigram", "enc" -> "lm_v1"),
-        required = Set("enc")))
+    lmStore(store).check(spark)
     val prs = lmPairRows(df, Seq(col(idCol)), textCol).localCheckpoint()
     val pairCnt = spark.table(s"${store}_pairs")
       .groupBy("pair").agg(sum("cnt").as("cnt_ab"))

@@ -128,25 +128,12 @@ object Sources {
     * sibling of [[compactBucketed]] for stores whose appends accrete one
     * file per partition per writing batch (e.g. the IVF index's
     * `appendToIvfStore` cadence). Repartitioning ON the partition column
-    * lands each partition's rows whole in one task, so the rewrite emits
-    * one file per partition. Unlike [[compactBucketed]], this one cannot
-    * use the staging-table swap: `ALTER TABLE RENAME` on a managed
-    * PARTITIONED table leaves the per-partition metadata pointing at the
-    * old location (scans come back empty) — so the snapshot is
-    * MATERIALIZED first (`localCheckpoint`, executor block storage; a
-    * maintenance-window cost proportional to the store) and written back
-    * over the same table, with the `graft.*` build properties re-applied
-    * after the overwrite recreates the table. */
+    * lands each partition's rows whole in one task, so the rewrite
+    * ([[StoreTable.rewritePartitioned]]) emits one file per partition. */
   def compactPartitioned(spark: SparkSession, table: String,
-                         partitionCol: String): Unit = {
-    val props = StoreTable.props(spark, table)
-    val snapshot = spark.table(table)
-      .repartition(col(partitionCol)).localCheckpoint()
-    snapshot.write.mode(SaveMode.Overwrite).format("parquet")
-      .partitionBy(partitionCol).saveAsTable(table)
-    snapshot.unpersist()
-    StoreTable.setProps(spark, table, props)
-  }
+                         partitionCol: String): Unit =
+    StoreTable.rewritePartitioned(table,
+      spark.table(table).repartition(col(partitionCol)))
 
   /** compact a bucketed store table in place: every per-batch
     * `SaveMode.Append` adds one file per bucket per writing task, so a

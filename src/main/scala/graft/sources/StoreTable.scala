@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions.{col, lit}
   *
   * The staging swap ([[swapIn]]) is the only rewrite path, and
   * [[recoverStoreSwap]] heals a crash inside it; [[appendOnce]] is the only
-  * exactly-once append. Every store obeys append ≡ rebuild, the
-  * mergeable-summary contract, so a store's layout and parameters are all
-  * its maintainers need to know. */
+  * append. What a store kind is, and the contract every kind keeps, is
+  * declared in [[StoreSpec]]. */
 object StoreTable {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -48,14 +47,7 @@ object StoreTable {
   def props(spark: SparkSession, table: String): Map[String, String] =
     graftProps(metadata(spark, table))
 
-  /** persist build parameters as `graft.<key>` properties, so a probe or
-    * append with mismatched parameters fails loudly at [[checkProps]]
-    * instead of silently missing true duplicates. Every store family shares
-    * the hazard: minhash numHashes/bands (unequal-length sig arrays make
-    * every zip_with element comparison a disagreement), the simhash
-    * `portable` flag (60-bit md5 signatures never equal 64-bit xxhash64
-    * ones), embedding dim/bandBits/bands/seed (different planes → band keys
-    * never collide with the store's). */
+  /** persist build parameters as `graft.<key>` properties. */
   def setProps(spark: SparkSession, table: String,
                params: Map[String, Any]): Unit =
     if (params.nonEmpty)
@@ -64,15 +56,9 @@ object StoreTable {
           .map { case (k, v) => s"'$Prefix$k' = '$v'" }.mkString(", ") + ")")
 
   /** validate probe parameters against the build parameters persisted by
-    * [[setProps]]. Stores written before the properties existed are
-    * accepted (nothing to check against) — the in-plan signature-width
-    * guard of the minhash probe still backstops that case — EXCEPT for
-    * keys listed in `required`: those mark an on-disk FORMAT version (e.g.
-    * the PQ code stores' `enc=bias128` byte encoding), where a store
-    * predating the property is not merely uncheckable but physically
-    * incompatible — probing it would decode valid-looking-but-wrong
-    * values, the exact silent-corruption class the fingerprints exist to
-    * prevent. A missing required key fails loudly with rebuild advice. */
+    * [[setProps]]: a mismatch fails by name, and so does a missing
+    * `required` format key; any other missing key is accepted
+    * ([[StoreSpec]] states the contract). */
   def checkProps(spark: SparkSession, table: String,
                  params: Map[String, Any],
                  required: Set[String] = Set.empty): Unit = {
@@ -106,28 +92,23 @@ object StoreTable {
           "its write* entry point")
     }
 
-  /** append `df` to a store table under the table's own bucket spec — new
-    * bucket files, never a rewrite of history. */
-  def append(df: DataFrame, table: String): Unit = {
-    val (bucketCol, nBuckets) = bucketSpec(df.sparkSession, table)
-    Sources.writeBucketed(df, table, bucketCol, nBuckets, SaveMode.Append)
-  }
-
   /** write `df` to `target` with `meta`'s layout: bucketed on its spec (one
     * file per bucket, since [[Sources.writeBucketed]] repartitions on the
-    * bucket id), or plain parquet when the catalog records no bucket spec. */
+    * bucket id), or plain parquet under its partition columns when the
+    * catalog records no bucket spec. */
   private def writeLike(meta: CatalogTable, df: DataFrame, target: String,
                         mode: SaveMode): Unit =
     meta.bucketSpec match {
       case Some(b) => Sources.writeBucketed(df, target,
         b.bucketColumnNames.head, b.numBuckets, mode)
-      case None => df.write.mode(mode).format("parquet").saveAsTable(target)
+      case None => df.write.mode(mode).format("parquet")
+        .partitionBy(meta.partitionColumnNames: _*).saveAsTable(target)
     }
 
   /** append `rows` to a store table at most once per `batchId` — the one
-    * exactly-once append of every accreting store (search index, PQ codes,
-    * CDC chunks, LM counts, cardinality and frequency sketches). Returns
-    * whether the append ran.
+    * append of every store, exactly-once for the accreting stores (search
+    * index, PQ codes, CDC chunks, LM counts, cardinality and frequency
+    * sketches), which tag their rows. Returns whether the append ran.
     *
     * The rows are tagged `__batch = batchId`, and the append is skipped when
     *  - `batchId` is at or below the table's `graft.compacted_watermark`
@@ -210,6 +191,24 @@ object StoreTable {
     spark.sql(s"DROP TABLE $table")
     spark.sql(s"ALTER TABLE $staging RENAME TO $table")
     setProps(spark, table, graftProps(meta) ++ extraProps)
+  }
+
+  /** rewrite a cell-PARTITIONED table in place with `rewritten` — the
+    * partitioned sibling of [[swapIn]], which it cannot use: `ALTER TABLE
+    * RENAME` on a managed PARTITIONED table leaves the per-partition
+    * metadata pointing at the old location (scans come back empty). So the
+    * rewrite is MATERIALIZED first (`localCheckpoint`, executor block
+    * storage; a maintenance-window cost proportional to the table) and
+    * written back over the same table, with the `graft.*` properties
+    * re-applied after the overwrite recreates it. */
+  private[sources] def rewritePartitioned(table: String,
+                                          rewritten: DataFrame): Unit = {
+    val spark = rewritten.sparkSession
+    val meta = metadata(spark, table)
+    val snapshot = rewritten.localCheckpoint()
+    writeLike(meta, snapshot, table, SaveMode.Overwrite)
+    snapshot.unpersist()
+    setProps(spark, table, graftProps(meta))
   }
 
   /** recovery for a crash between [[swapIn]]'s DROP and RENAME: the table

@@ -143,65 +143,59 @@ object Streams {
       .drop("__simhash")
   }
 
+  /** the streaming twin of a key-set store probe: a stream-static
+    * anti-join on the store's own bucket column drops every arriving doc
+    * whose `key` the kept corpus already holds, then in-watermark dedup
+    * collapses same-key repeats within the stream. The static side is the
+    * bucketed store table, re-planned per micro-batch: an append from THIS
+    * session (e.g. the batch compaction running in the same app)
+    * invalidates the session's file-index cache on write and is visible at
+    * the next trigger — the StreamsSpec test proves the mid-stream-append
+    * case. An append from a SEPARATE process does not invalidate this
+    * session's cache; call `spark.catalog.refreshTable` on the store table
+    * (e.g. from a foreachBatch hook) to pick it up without restarting the
+    * query. State = one watermark horizon of keys, never the store (the
+    * store side is stateless in a stream-static join). */
+  private def streamingKeySetAgainst(docs: DataFrame, key: Column,
+                                     spec: graft.sources.StoreSpec,
+                                     tsCol: String, delay: String): DataFrame = {
+    val spark = docs.sparkSession
+    spec.check(spark)
+    val k = spec.tables.head.key
+    graft.operators.Dedup.keyed(docs, spec, key)
+      .join(spark.table(spec.table).withColumnRenamed(k, s"__$k"),
+        Seq(s"__$k"), "left_anti")
+      .transform(ensureWatermark(_, tsCol, delay))
+      .dropDuplicatesWithinWatermark(s"__$k")
+      .drop(s"__$k")
+  }
+
   /** streaming ingest dedup against the PERSISTED fingerprint store
     * ([[graft.operators.Dedup.writeFingerprintStore]]) — the streaming twin
-    * of [[graft.operators.Dedup.exactDedupAgainst]]: a stream-static
-    * anti-join drops every arriving doc whose normalized content the kept
-    * corpus already holds, then in-watermark exact dedup removes repeats
-    * WITHIN the stream itself. The static side is the bucketed store table,
-    * re-planned per micro-batch: an append from THIS session (e.g. the
-    * batch compaction running in the same app) invalidates the session's
-    * file-index cache on write and is visible at the next trigger — the
-    * StreamsSpec test proves the mid-stream-append case. An append from a
-    * SEPARATE process does not invalidate this session's cache; call
-    * `spark.catalog.refreshTable("<store>_fps")` (e.g. from a
-    * foreachBatch hook) to pick it up without restarting the query. State =
-    * one watermark horizon of fingerprints, never the store (the store side
-    * is stateless in a stream-static join). */
+    * of [[graft.operators.Dedup.exactDedupAgainst]] through
+    * [[streamingKeySetAgainst]]. */
   def streamingDedupAgainstStore(docs: DataFrame, textCol: String,
                                  tsCol: String, store: String,
-                                 delay: String = "10 minutes"): DataFrame = {
-    val spark = docs.sparkSession
-    docs
-      .withColumn("__fp",
-        graft.operators.TextAnalysis.fingerprint(col(textCol)))
-      .join(spark.table(s"${store}_fps").withColumnRenamed("fp", "__fp"),
-        Seq("__fp"), "left_anti")
-      .transform(ensureWatermark(_, tsCol, delay))
-      .dropDuplicatesWithinWatermark("__fp")
-      .drop("__fp")
-  }
+                                 delay: String = "10 minutes"): DataFrame =
+    streamingKeySetAgainst(docs,
+      graft.operators.TextAnalysis.fingerprint(col(textCol)),
+      graft.operators.Dedup.fingerprintStore(store), tsCol, delay)
 
   /** streaming ingest NEAR-dup dedup against the PERSISTED simhash store
     * ([[graft.operators.Dedup.writeSimhashStore]]) — the streaming twin of
-    * [[graft.operators.Dedup.simhashDedupAgainst]], completing the
-    * store-family symmetry ([[streamingDedupAgainstStore]] is the exact-
-    * fingerprint twin): the fused SimHash kernel derives the signature as a
-    * pure projection, a stream-static anti-join on the store's own bucket
-    * column drops arriving docs whose TOKEN SET the kept corpus already
-    * holds (hamming-0 near-copies — reorderings and other set-preserving
-    * variants the fingerprint store misses), then in-watermark dedup
-    * collapses same-signature repeats within the stream. Same cache/state
-    * notes as the fingerprint twin; matching `portable` is enforced by the
-    * store's build properties on the batch side — the streaming plan uses
-    * the production (xxhash64) kernel, so point it at a store built with
-    * `portable = false`. */
+    * [[graft.operators.Dedup.simhashDedupAgainst]] through
+    * [[streamingKeySetAgainst]]: arriving docs whose TOKEN SET the kept
+    * corpus already holds (hamming-0 near-copies — reorderings and other
+    * set-preserving variants the fingerprint store misses) drop. The plan
+    * signs with the production (xxhash64) kernel, so the store must be
+    * built with `portable = false`: a portable store's md5 signatures never
+    * match, and it is refused by name. */
   def streamingSimhashDedupAgainstStore(docs: DataFrame, textCol: String,
                                         tsCol: String, store: String,
-                                        delay: String = "10 minutes"): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
-    val spark = docs.sparkSession
-    val toks = graft.operators.TextAnalysis.tokens(
-      graft.operators.TextAnalysis.normalized(col(textCol)))
-    docs
-      .withColumn("__sig", GraftSqlBridge.column(
-        graft.functions.SimHashTokensExpr(GraftSqlBridge.expression(toks))))
-      .join(spark.table(s"${store}_sigs").withColumnRenamed("sig", "__sig"),
-        Seq("__sig"), "left_anti")
-      .transform(ensureWatermark(_, tsCol, delay))
-      .dropDuplicatesWithinWatermark("__sig")
-      .drop("__sig")
-  }
+                                        delay: String = "10 minutes"): DataFrame =
+    streamingKeySetAgainst(docs,
+      graft.operators.Dedup.simhashCol(col(textCol)),
+      graft.operators.Dedup.simhashStore(store, portable = false), tsCol, delay)
 
   /** streaming ingest NEAR-dup dedup against the PERSISTED embedding store
     * ([[graft.operators.Dedup.writeEmbeddingStore]]) — the streaming twin of
@@ -222,9 +216,7 @@ object Streams {
     * bucket-local shuffle. A cosine-1.0 re-key (identical vector under a
     * new id) signs identically and drops here even after the in-stream
     * watermark state evicted it — the store is the long-term memory
-    * (StreamsSpec plant). In-watermark repeats collapse on the signature;
-    * build parameters are validated against the store's persisted
-    * properties, the batch probes' footgun guard. */
+    * (StreamsSpec plant). In-watermark repeats collapse on the signature. */
   def streamingEmbeddingDedupAgainstStore(vecs: DataFrame, vecCol: String,
                                           tsCol: String, store: String,
                                           threshold: Double, dim: Int,
@@ -232,9 +224,11 @@ object Streams {
                                           seed: Long = 42L,
                                           delay: String = "10 minutes"): DataFrame = {
     val spark = vecs.sparkSession
-    StoreTable.checkProps(spark, s"${store}_bands",
-      Map("dim" -> dim, "bandBits" -> bandBits, "bands" -> bands,
-        "seed" -> seed))
+    // this twin reads only `_vecs` (no id column), and a store written
+    // before the `enc` format key is accepted: its fallback below covers
+    // vecs written before `fullsig`
+    graft.operators.Dedup.embeddingStore(store, idCol = "", vecCol, dim,
+      bandBits, bands, seed).copy(required = Set.empty).check(spark)
     val sig = (c: Column) =>
       graft.operators.Similarity.lshSignature(c, dim, bandBits * bands, seed)
     // the store persists the pooled signature (writeEmbeddingStore) so the
@@ -578,10 +572,9 @@ object Streams {
         val b = batch.persist()
         try {
           writeManifest(b, batchId, outDir)
-          StoreTable.append(
-            b.select(graft.operators.TextAnalysis.fingerprint(col(textCol)).as("fp"))
-              .distinct(),
-            s"${store}_fps")
+          val spec = graft.operators.Dedup.fingerprintStore(store)
+          spec.appendOnce(graft.operators.Dedup.keyed(b, spec,
+            graft.operators.TextAnalysis.fingerprint(col(textCol))))
         } finally b.unpersist()
     }
 

@@ -673,12 +673,34 @@ class BucketingSpec extends AnyFunSuite {
     * `append` adds batch 2 through the kind's own append path; `view` is
     * the kind's observable state (table contents without batch tags, plus
     * a probe's answer); `compact` defaults to [[Sources.compactBucketed]]
-    * on every table. */
+    * on every table. `layout` pins each table's on-disk format after
+    * `build`: its exact `graft.*` properties and its columns. Each of
+    * `mismatch` runs a probe or an append of the built store with one
+    * build parameter changed (or against a store retagged as another
+    * kind, for kinds without caller parameters) and must refuse by name. */
   private case class StoreKind(name: String, tables: Seq[String],
                                build: (String, Boolean) => Unit,
                                append: String => Unit,
                                view: String => Seq[String],
+                               layout: Seq[(Map[String, String], Seq[String])],
+                               mismatch: Seq[String => Any] = Nil,
                                compact: Option[String => Unit] = None)
+
+  /** retag a built store table as another kind: every probe and append of
+    * the real kind must then refuse it by name */
+  private def retag(table: String): Unit =
+    graft.sources.StoreTable.setProps(spark, table, Map("kind" -> "other_kind"))
+
+  /** `run` must fail with an IllegalArgumentException that names a table of
+    * `store` */
+  private def assertRefuses(what: String, store: String)(run: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](run)
+    assert(e.getMessage.contains(store), s"$what: refusal does not name the store: ${e.getMessage}")
+  }
+
+  /** `table`'s exact graft.* properties and its columns */
+  private def layoutOf(table: String): (Map[String, String], Seq[String]) =
+    (graft.sources.StoreTable.props(spark, table), spark.table(table).columns.toSeq)
 
   private val RtBuckets = 3
 
@@ -732,7 +754,12 @@ class BucketingSpec extends AnyFunSuite {
           nBuckets = RtBuckets),
         st => Dedup.wideHashDedupAgainst(h2, "media_id", st, kind).count(),
         st => rows(s"${st}_bands") ++ ids(Dedup.wideHashDedupAgainst(hp,
-          "media_id", st, kind, updateStore = false), "media_id"))
+          "media_id", st, kind, updateStore = false), "media_id"),
+        Seq((Map("kind" -> kind, "maxHamming" -> "6", "enc" -> "dhash120_v2"),
+          Seq("__bk", "sim_lo", "sim_hi"))),
+        Seq(st => Dedup.wideHashDedupAgainst(hp, "media_id", st, "other_kind",
+            updateStore = false).count(),
+          st => Dedup.appendWideHashes(h2, "media_id", st, kind, maxHamming = 5)))
     }
     def mkBytes(n: Int, seed: Long): Array[Byte] = {
       var x = seed
@@ -744,6 +771,8 @@ class BucketingSpec extends AnyFunSuite {
     val (c1, c2, cProbe) = (blobs(1L to 6L), blobs(101L to 104L),
       blobs(Seq(3L, 102L, 9001L)))
     val pqModel = Similarity.pqFit(e1.orderBy("vec_id"), "embedding",
+      m = 2, ksub = 4)
+    val pqModel2 = Similarity.pqFit(e2.orderBy("vec_id"), "embedding",
       m = 2, ksub = 4)
     val cards1 = (1 to 90).map(i => (s"g${i % 3}", s"v${i % 23}")).toDF("g", "v")
     val cards2 = (1 to 60).map(i => (s"g${i % 3}", s"w${i % 17}")).toDF("g", "v")
@@ -759,20 +788,34 @@ class BucketingSpec extends AnyFunSuite {
       st => rows(s"${st}_sigs") ++ rows(s"${st}_bands") ++
         ids(Dedup.minhashDedupAgainst(dProbe, "doc_id", "text", st,
           numHashes = 32, bands = 8, updateStore = false,
-          portable = portable), "doc_id"))
+          portable = portable), "doc_id"),
+      Seq((Map("numHashes" -> "32", "bands" -> "8", "portable" -> portable.toString),
+          Seq("doc_id", "sig")),
+        (Map.empty[String, String],
+          if (portable) Seq("doc_id", "band", "band_key") else Seq("doc_id", "band_hash"))),
+      Seq(st => Dedup.minhashDedupAgainst(dProbe, "doc_id", "text", st,
+          numHashes = 32, bands = 4, updateStore = false, portable = portable).count(),
+        st => Dedup.minhashDedupAgainst(d2, "doc_id", "text", st,
+          numHashes = 32, bands = 8, portable = !portable).count()))
     Seq(
       StoreKind("fingerprint", Seq("_fps"),
         (st, both) => Dedup.writeFingerprintStore(
           if (both) d1.union(d2) else d1, "text", st, nBuckets = RtBuckets),
         st => Dedup.exactDedupAgainst(d2, "text", st).count(),
         st => rows(s"${st}_fps") ++ ids(Dedup.exactDedupAgainst(dProbe,
-          "text", st, updateStore = false), "doc_id")),
+          "text", st, updateStore = false), "doc_id"),
+        Seq((Map.empty[String, String], Seq("fp")))),
       StoreKind("simhash", Seq("_sigs"),
         (st, both) => Dedup.writeSimhashStore(if (both) d1.union(d2) else d1,
           "doc_id", "text", st, nBuckets = RtBuckets),
         st => Dedup.simhashDedupAgainst(d2, "doc_id", "text", st).count(),
         st => rows(s"${st}_sigs") ++ ids(Dedup.simhashDedupAgainst(dProbe,
-          "doc_id", "text", st, updateStore = false), "doc_id")),
+          "doc_id", "text", st, updateStore = false), "doc_id"),
+        Seq((Map("portable" -> "false"), Seq("sig"))),
+        Seq(st => Dedup.simhashDedupAgainst(dProbe, "doc_id", "text", st,
+            portable = true, updateStore = false).count(),
+          st => Dedup.simhashDedupAgainst(d2, "doc_id", "text", st,
+            portable = true).count())),
       minhash(portable = false),
       minhash(portable = true),
       StoreKind("embedding", Seq("_bands", "_vecs"),
@@ -784,7 +827,15 @@ class BucketingSpec extends AnyFunSuite {
         st => rows(s"${st}_bands") ++ rows(s"${st}_vecs") ++
           ids(Dedup.embeddingNearDupAgainst(eProbe, "vec_id", "embedding", st,
             threshold = 0.999, dim = 8, bandBits = 4, bands = 4,
-            updateStore = false), "vec_id")),
+            updateStore = false), "vec_id"),
+        Seq((Map("dim" -> "8", "bandBits" -> "4", "bands" -> "4", "seed" -> "42",
+            "enc" -> "bands_packed_v2"), Seq("vec_id", "__bs")),
+          (Map.empty[String, String], Seq("vec_id", "vec", "fullsig"))),
+        Seq(st => Dedup.embeddingNearDupAgainst(eProbe, "vec_id", "embedding", st,
+            threshold = 0.999, dim = 8, bandBits = 4, bands = 4, seed = 7L,
+            updateStore = false).count(),
+          st => Dedup.embeddingNearDupAgainst(e2, "vec_id", "embedding", st,
+            threshold = 0.999, dim = 8, bandBits = 4, bands = 2).count())),
       wideHash("image_dhash", image),
       wideHash("audio_ehash", audio),
       {
@@ -795,7 +846,12 @@ class BucketingSpec extends AnyFunSuite {
             nBuckets = RtBuckets),
           st => Dedup.videoDedupAgainst(v2, "media_id", st).count(),
           st => rows(s"${st}_bands") ++ ids(Dedup.videoDedupAgainst(vp,
-            "media_id", st, updateStore = false), "media_id"))
+            "media_id", st, updateStore = false), "media_id"),
+          Seq((Map("kind" -> "video_dhash", "maxHamming" -> "6", "everyK" -> "1",
+              "enc" -> "dhash120_v2"), Seq("__sid", "__bk", "sim_lo", "sim_hi"))),
+          Seq(st => Dedup.videoDedupAgainst(vp, "media_id", st, everyK = 2,
+              updateStore = false).count(),
+            st => Dedup.appendVideoFrameHashes(v2, "media_id", st, maxHamming = 5)))
       },
       StoreKind("CDC chunks", Seq("_chunks"),
         (st, both) => Dedup.writeChunkStore(
@@ -805,7 +861,8 @@ class BucketingSpec extends AnyFunSuite {
           batchId = 1L).count(),
         st => rows(s"${st}_chunks") ++ Dedup.cdcDedupAgainst(cProbe,
           "doc_id", "blob", st, updateStore = false)
-          .collect().map(_.toString).sorted.toSeq),
+          .collect().map(_.toString).sorted.toSeq,
+        Seq((Map.empty[String, String], Seq("chunk_hash", "chunk_len", "__batch")))),
       StoreKind("LM", Seq("_pairs", "_ctx"),
         (st, both) => TextAnalysis.writeLmStore(
           if (both) d1.union(d2) else d1, "text", st, nBuckets = RtBuckets),
@@ -814,6 +871,11 @@ class BucketingSpec extends AnyFunSuite {
         st => rows(s"${st}_pairs") ++ rows(s"${st}_ctx") ++
           TextAnalysis.lmPerplexityAgainst(dProbe, "doc_id", "text", st)
             .collect().map(_.toString).sorted.toSeq,
+        Seq((Map("kind" -> "lm_bigram", "enc" -> "lm_v1"), Seq("pair", "cnt", "__batch")),
+          (Map("kind" -> "lm_bigram", "enc" -> "lm_v1"), Seq("t1", "cnt", "__batch"))),
+        Seq(st => { retag(s"${st}_ctx")
+            TextAnalysis.lmPerplexityAgainst(dProbe, "doc_id", "text", st).count() },
+          st => TextAnalysis.appendLmCounts(spark, st, d2, "text", batchTag = 2L)),
         compact = Some(st => TextAnalysis.compactLmStore(spark, st))),
       StoreKind("PQ", Seq("_pq"),
         (st, both) => Similarity.writePqStore(if (both) e1.union(e2) else e1,
@@ -822,7 +884,13 @@ class BucketingSpec extends AnyFunSuite {
           batchId = 1L),
         st => rows(s"${st}_pq") ++ Similarity.pqAdcTopKAgainstStore(spark, st,
           "vec_id", vec(7L).map(_.toDouble), pqModel, k = 50)
-          .collect().map(_.toString).toSeq),
+          .collect().map(_.toString).toSeq,
+        Seq((Map("kind" -> "pq", "fp" -> Similarity.pqFingerprint(pqModel).toString,
+          "enc" -> "bias128"), Seq("vec_id", "codes", "__batch"))),
+        Seq(st => Similarity.pqAdcTopKAgainstStore(spark, st, "vec_id",
+            vec(7L).map(_.toDouble), pqModel2, k = 5).count(),
+          st => Similarity.appendPqStore(e2, "vec_id", "embedding", pqModel2, st,
+            batchId = 2L))),
       StoreKind("inverted index", Seq("_postings", "_terms"),
         (st, both) => Search.writeInvertedIndex(if (both) d1.union(d2) else d1,
           "doc_id", "text", st, nBuckets = RtBuckets),
@@ -831,7 +899,13 @@ class BucketingSpec extends AnyFunSuite {
         st => rows(s"${st}_postings") ++
           Search.termDocFreq(spark, st).collect().map(_.toString).sorted ++
           Search.searchBM25(spark, st, Seq("e3t1", "n103t2", "z1t1"), 10)
-            .collect().map(_.toString).toSeq),
+            .collect().map(_.toString).toSeq,
+        Seq((Map("kind" -> "inverted_index", "docCount" -> "30", "totalDl" -> "900"),
+            Seq("term", "doc_id", "tf", "dl", "__batch")),
+          (Map.empty[String, String], Seq("term", "df", "__batch"))),
+        Seq(st => { retag(s"${st}_postings")
+            Search.searchBM25(spark, st, Seq("e3t1"), 10).count() },
+          st => Search.appendInvertedIndex(d2, "doc_id", "text", st, batchId = 2L))),
       StoreKind("cardinality", Seq(""),
         (st, both) => Profiling.writeCardinalityStore(
           if (both) cards1.union(cards2) else cards1, "g", col("v"), st,
@@ -841,6 +915,10 @@ class BucketingSpec extends AnyFunSuite {
         st => Profiling.cardinalityEstimates(spark, st)
           .select("group_key", "estimate", "n_rows")
           .collect().map(_.toString).toSeq,
+        Seq((Map("kind" -> "cardinality_hll", "lgK" -> "12", "enc" -> "ds_hll_v1"),
+          Seq("__g", "__sketch", "__n", "__batch"))),
+        Seq(st => Profiling.appendCardinalitySketches(spark, st, cards2, "g",
+          col("v"), lgK = 10, batchTag = 2L)),
         compact = Some(st => Profiling.compactCardinalityStore(spark, st))))
   }
 
@@ -854,6 +932,9 @@ class BucketingSpec extends AnyFunSuite {
       drop()
       try {
         k.build(st, false)
+        k.tables.zip(k.layout).foreach { case (t, pin) =>
+          assert(layoutOf(st + t) == pin, s"${k.name}$t: on-disk format changed")
+        }
         val layout = k.tables.map(t => StoreTable.bucketSpec(spark, st + t))
         assert(layout.forall(_._2 == RtBuckets), s"${k.name}: $layout")
         k.view(st) // a probe reads the layout it was built with
@@ -871,8 +952,83 @@ class BucketingSpec extends AnyFunSuite {
         }
         k.build(re, true)
         assert(k.view(st) == k.view(re), s"${k.name}: append ≢ rebuild")
+        k.mismatch.zipWithIndex.foreach { case (m, i) =>
+          assertRefuses(s"${k.name} mismatch $i", st)(m(st))
+        }
       } finally drop()
     }
+  }
+
+  test("store kinds outside the round trip keep their on-disk format and refuse mismatched parameters by name") {
+    import graft.operators.{Profiling, Search, Similarity}
+    import Similarity.IvfModel
+    def vec(i: Long): Seq[Double] = {
+      val r = new scala.util.Random(i)
+      Seq.fill(4)(r.nextGaussian())
+    }
+    val e = (1L to 24L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+    val q = vec(3L)
+    val ivf = IvfModel(Array(Array(1.0, 0, 0, 0), Array(0, 1.0, 0, 0),
+      Array(0, 0, 1.0, 0)))
+    val ivf2 = IvfModel(ivf.centers.map(_.map(_ * 2)))
+    val pq = Similarity.pqFit(e.orderBy("vec_id"), "embedding", m = 2, ksub = 4)
+    val pq2 = Similarity.pqFit(e.filter(col("vec_id") > 12L).orderBy("vec_id"),
+      "embedding", m = 2, ksub = 4)
+    val text = (1 to 6).map(i => (i.toLong, mkText(i, "p"))).toDF("doc_id", "text")
+    // (table, build, exact graft.* properties, columns, refusals)
+    val kinds = Seq[(String, () => Unit, Map[String, String], Seq[String], Seq[() => Any])](
+      ("graft_ok_ivf_cells",
+        () => Similarity.writeIvfStore(e, "vec_id", "embedding", ivf, "graft_ok_ivf"),
+        Map("k" -> "3", "dim" -> "4",
+          "fingerprint" -> Similarity.modelFingerprint(ivf).toString),
+        Seq("vec_id", "vec", "__cluster"),
+        Seq(() => Similarity.ivfTopKAgainstStore(spark, "graft_ok_ivf", ivf2,
+            "vec_id", q, 3).count(),
+          () => Similarity.appendToIvfStore(e, "vec_id", "embedding", ivf2,
+            "graft_ok_ivf"))),
+      ("graft_ok_ivfpq_pqcells",
+        () => Similarity.writeIvfPqStore(e, "vec_id", "embedding", ivf, pq,
+          "graft_ok_ivfpq"),
+        Map("kind" -> "ivfpq", "ivfFp" -> Similarity.modelFingerprint(ivf).toString,
+          "pqFp" -> Similarity.pqFingerprint(pq).toString, "enc" -> "bias128"),
+        Seq("vec_id", "codes", "__cluster"),
+        Seq(() => Similarity.ivfPqTopK(spark, "graft_ok_ivfpq", ivf, pq2,
+          "vec_id", q, 3).count())),
+      ("graft_ok_lsh_sigs",
+        () => Similarity.writeLshStore(e, "vec_id", "embedding", "graft_ok_lsh",
+          dim = 4, nBits = 8, nBuckets = 2),
+        Map("dim" -> "4", "nBits" -> "8", "seed" -> "42"),
+        Seq("vec_id", "vec", "sig"),
+        Seq(() => Similarity.lshTopKAgainstStore(spark, "graft_ok_lsh", "vec_id",
+          q, 3, dim = 4, nBits = 8, seed = 7L).count())),
+      ("graft_ok_i8_q",
+        () => Similarity.writeInt8Store(e, "vec_id", "embedding", "graft_ok_i8",
+          nBuckets = 2),
+        Map("kind" -> "int8"),
+        Seq("vec_id", "qvec", "scale"),
+        Seq(() => { retag("graft_ok_i8_q")
+          Similarity.int8TopKAgainstStore(spark, "graft_ok_i8", "vec_id", q, 3)
+            .count() })),
+      ("graft_ok_pos_pos",
+        () => Search.writePositionalIndex(text, "doc_id", "text", "graft_ok_pos",
+          nBuckets = 2),
+        Map("kind" -> "positional_index"),
+        Seq("term", "doc_id", "positions"),
+        Seq(() => { retag("graft_ok_pos_pos")
+          Search.searchPhrase(spark, "graft_ok_pos", Seq("p1t1", "p1t2"), 3)
+            .count() })),
+      ("graft_ok_freq",
+        () => Profiling.writeFrequencyStore(text, col("text"), "graft_ok_freq"),
+        Map("kind" -> "frequency_cms", "eps" -> "0.001", "confidence" -> "0.99",
+          "seed" -> "42", "enc" -> "cms_v1"),
+        Seq("__sketch", "__n", "__batch"),
+        Seq(() => Profiling.appendFrequencySketch(spark, "graft_ok_freq", text,
+          col("text"), eps = 0.01, confidence = 0.99, seed = 42, batchTag = 1L))))
+    try kinds.foreach { case (t, build, props, cols, refusals) =>
+      build()
+      assert(layoutOf(t) == ((props, cols)), s"$t: on-disk format changed")
+      refusals.zipWithIndex.foreach { case (r, i) => assertRefuses(s"$t refusal $i", t)(r()) }
+    } finally kinds.foreach(k => spark.sql(s"DROP TABLE IF EXISTS ${k._1}"))
   }
 
   test("mergeIntoStore / scd2MergeIntoStore keep the table's bucket spec and graft.* properties") {

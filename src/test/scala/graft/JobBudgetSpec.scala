@@ -96,7 +96,7 @@ class JobBudgetSpec extends AnyFunSuite {
         ("PQ", t => Similarity.appendPqStore(vecs, "vec_id", "embedding", model,
           "jb_pq", t), (4, 2)),
         ("inverted index", t => Search.appendInvertedIndex(text, "doc_id", "text",
-          "jb_idx", t), (13, 4)))
+          "jb_idx", t), (12, 4)))
       budgets.foreach { case (name, append, (first, replay)) =>
         val jobs = (jobsOf(append(1L)), jobsOf(append(1L)))
         assert(jobs._1 <= first && jobs._2 <= replay,

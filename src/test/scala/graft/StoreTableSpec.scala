@@ -30,6 +30,15 @@ class StoreTableSpec extends AnyFunSuite {
     }
     assert(hits.isEmpty, "catalog state or batch gate outside StoreTable:\n" +
       hits.mkString("\n"))
+    // build parameters are set and validated through a kind's StoreSpec
+    val sources = new java.io.File(root, "graft/sources").getCanonicalPath
+    val propCalls = lines.collect {
+      case (f, at, line) if !f.getCanonicalPath.startsWith(sources) &&
+        (line.contains("StoreTable.setProps(") ||
+          line.contains("StoreTable.checkProps(")) => at
+    }
+    assert(propCalls.isEmpty, "StoreTable.setProps/checkProps outside graft/sources:\n" +
+      propCalls.mkString("\n"))
     val drivers = lines.collect { case (_, at, line) if line.contains(".foreachBatch {") => at }
     assert(drivers.length == 1, "one foreachBatch driver expected:\n" +
       drivers.mkString("\n"))

@@ -534,6 +534,36 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
+  test("streamingSimhashDedupAgainstStore refuses a portable store by name") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the streaming plan signs with the xxhash64 kernel; a store built on the
+    // md5 base never matches it, so a planted copy would silently pass
+    graft.operators.Dedup.writeSimhashStore(
+      Seq((100L, "alpha bravo charlie delta")).toDF("doc_id", "text"),
+      "doc_id", "text", "graft_stream_shp_store", portable = true,
+      nBuckets = 2)
+    val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    try {
+      val e = intercept[IllegalArgumentException] {
+        q = Streams.streamingSimhashDedupAgainstStore(
+            mem.toDF().toDF("doc_id", "text", "ts"), "text", "ts",
+            "graft_stream_shp_store")
+          .writeStream.outputMode("append").format("memory")
+          .queryName("shp_store_stream").start()
+        mem.addData((1L, "alpha bravo charlie delta", ts("2024-01-01 10:00:00")))
+        q.processAllAvailable()
+      }
+      assert(e.getMessage.contains("graft_stream_shp_store_sigs") &&
+        e.getMessage.contains("portable"), e.getMessage)
+    } finally {
+      if (q != null) q.stop()
+      spark.sql("DROP TABLE IF EXISTS shp_store_stream")
+      spark.sql("DROP TABLE IF EXISTS graft_stream_shp_store_sigs")
+    }
+  }
+
   test("streamingEmbeddingDedupAgainstStore: cosine-1.0 re-key drops against the store even after state eviction") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
