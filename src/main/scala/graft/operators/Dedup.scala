@@ -156,15 +156,22 @@ object Dedup {
   def minhashSigs(df: DataFrame, idCol: String, textCol: String,
                   numHashes: Int = 64, shingleSize: Int = 3,
                   portable: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
     val toks = TextAnalysis.tokens(TextAnalysis.normalized(col(textCol)))
     // fan before the fused kernel: the projection is the pipeline's single
     // heaviest per-row stage and otherwise rides the unsplittable scan's
     // one task (r21 profile; every consumer is an id-keyed join/aggregate)
     Fan.out(df.select(col(idCol), col(textCol))).select(col(idCol),
-      GraftSqlBridge.column(graft.functions.MinHashTokensSigExpr(
-        GraftSqlBridge.expression(toks), shingleSize, numHashes,
-        md5Portable = portable)).as("sig"))
+      tokensSig(toks, shingleSize, numHashes, portable).as("sig"))
+  }
+
+  /** the [[graft.functions.MinHashTokensSigExpr]] signature of a token
+    * array column */
+  private[operators] def tokensSig(toks: Column, shingleSize: Int,
+                                   numHashes: Int, portable: Boolean): Column = {
+    import org.apache.spark.sql.GraftSqlBridge
+    GraftSqlBridge.column(graft.functions.MinHashTokensSigExpr(
+      GraftSqlBridge.expression(toks), shingleSize, numHashes,
+      md5Portable = portable))
   }
 
   /** MinHash signatures via explode + ONE wide hash aggregate — the shape for
@@ -198,13 +205,14 @@ object Dedup {
   /** md5-portable LSH banding: (idCol, band, band_key) rows with
     * md5-of-concat band keys so DuckDB can reproduce them. */
   private def portableBands(sigs: DataFrame, idCol: String,
-                            numHashes: Int, bands: Int): DataFrame = {
+                            numHashes: Int, bands: Int,
+                            carry: Seq[String] = Nil): DataFrame = {
     val rows = numHashes / bands
-    sigs.select(col(idCol), posexplode(
+    sigs.select((col(idCol) +: carry.map(col)) :+ posexplode(
         transform(sequence(lit(0), lit(bands - 1)),
           b => md5(to_binary(concat_ws(",",
             transform(slice(col("sig"), b * rows + 1, lit(rows)), h => h.cast(StringType))), lit("utf-8")))))
-      .as(Seq("band", "band_key")))
+      .as(Seq("band", "band_key")): _*)
   }
 
   /** LSH banding of a (idCol, sig) frame on one hash base — the only code
@@ -263,18 +271,24 @@ object Dedup {
                                 portable: Boolean = false): (DataFrame, DataFrame) = {
     val sigs = minhashSigs(df, idCol, textCol, numHashes, shingleSize, portable)
       .localCheckpoint()
-    val agree = aggregate(zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, v) => acc + v).cast(DoubleType)
-    // each hash base keeps the estimate its oracle replicates: xxhash64
-    // rounds to 6 dp over the signature width, md5 divides by numHashes
-    val est = if (portable) agree / numHashes else round(agree / size(col("sig_a")), 6)
     val withEst = bandPairs(sigs, idCol, numHashes, bands, portable)
       .join(sigs.select(col(idCol).as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col(idCol).as("id_b"), col("sig").as("sig_b")), "id_b")
-      .withColumn("est_jaccard", est)
+      .withColumn("est_jaccard",
+        estJaccard(col("sig_a"), col("sig_b"), numHashes, portable))
       .select("id_a", "id_b", "est_jaccard")
     (withEst, sigs)
+  }
+
+  /** estimated Jaccard of two signatures: the fraction of agreeing
+    * positions. Each hash base keeps the estimate its oracle replicates:
+    * xxhash64 rounds to 6 dp over the signature width, md5 divides by
+    * numHashes. */
+  private def estJaccard(a: Column, b: Column, numHashes: Int,
+                         portable: Boolean): Column = {
+    val agree = aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, v) => acc + v).cast(DoubleType)
+    if (portable) agree / numHashes else round(agree / size(a), 6)
   }
 
   /** MinHash-LSH dedup: drop every doc that is LSH-similar (est. Jaccard ≥
@@ -306,8 +320,34 @@ object Dedup {
     * generated oracle SQL). */
   def minhashDedupPortable(df: DataFrame, idCol: String, textCol: String,
                            threshold: Double = 0.5): DataFrame =
-    minhashDedup(df, idCol, textCol, threshold, numHashes = 16, bands = 4,
-      portable = true)
+    minhashDedup(df, idCol, textCol, threshold, numHashes = PortableHashes,
+      bands = PortableBands, portable = true)
+
+  private[graft] val PortableHashes = 16
+  private val PortableBands = 4
+
+  /** [[minhashDedupPortable]]'s dropped ids over a (idCol, sig) frame of
+    * its signatures, in ONE band self-join: the band rows carry the
+    * signature, so the estimate is filtered inside the join — no distinct
+    * pairs and no signature joins. Returns the higher id of every
+    * candidate pair at or above `threshold`, once per matching band row;
+    * as a set it is exactly the set [[minhashDedup]] anti-joins. The join
+    * is a LEFT SEMI join of the higher-id side: Spark sizes a semi join as
+    * its left input, not as a pair product, so a consumer that anti-joins
+    * these ids plans a broadcast of them from the start instead of two
+    * shuffles that adaptive execution later turns into one. */
+  private[graft] def portableNearDupIds(sigs: DataFrame, idCol: String,
+                                        threshold: Double): DataFrame = {
+    val banded = portableBands(sigs, idCol, PortableHashes, PortableBands,
+      carry = Seq("sig"))
+    banded.as("r").join(banded.as("l"),
+        col("l.band") === col("r.band") &&
+          col("l.band_key") === col("r.band_key") &&
+          col(s"l.$idCol") < col(s"r.$idCol") &&
+          estJaccard(col("l.sig"), col("r.sig"), PortableHashes,
+            portable = true) >= threshold, "left_semi")
+      .select(col(s"r.$idCol").as(idCol))
+  }
 
   /** MinHash-LSH near-dup pairs (id_a, id_b) with est. Jaccard ≥ threshold,
     * materialized (`localCheckpoint`: the policies below read the pairs
@@ -2278,7 +2318,7 @@ object Dedup {
     * matters most. */
   def spanDedup(df: DataFrame, idCol: String, textCol: String,
                 minRun: Int = 8,
-                maxWindowDocFreq: Int = 1000): DataFrame = {
+                maxWindowDocFreq: Int = MaxWindowDocFreq): DataFrame = {
     require(minRun >= 2, s"minRun must be >= 2, got $minRun")
     require(maxWindowDocFreq >= 2,
       s"maxWindowDocFreq must be >= 2, got $maxWindowDocFreq")
@@ -2292,6 +2332,10 @@ object Dedup {
       .select(col(idCol)).distinct()
     df.join(flagged, Seq(idCol), "left_anti")
   }
+
+  /** [[spanDedup]]'s boilerplate cap: a window shared by more documents
+    * is template text, not duplication signal */
+  private[graft] val MaxWindowDocFreq = 1000
 
   /** substring span EXCISION — the Lee et al. 2021 ExactSubstr REMEDY that
     * [[spanDedup]]'s whole-doc drop only approximates: cut every shared
@@ -2476,26 +2520,49 @@ object Dedup {
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
                     bench: DataFrame, benchTextCol: String,
                     maxContamination: Double = 0.8, ngram: Int = 3): DataFrame = {
+    val hits = benchShingleHits(
+      TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))),
+      bench, benchTextCol, ngram)
+    evalOnce(corpus, hits.as("__k"))
+      .filter(belowContamination(col("__k.n_shingles"), col("__k.n_hits"),
+        maxContamination))
+      .drop("__k")
+  }
+
+  /** `df` plus one column per named kernel, each evaluated ONCE per row: a
+    * one-row `inline(array(struct(kernels)))` Generate. A filter that
+    * referenced a kernel's fields directly would run the kernel once per
+    * reference (whole-stage codegen shares no subexpressions in filter
+    * predicates), and predicate pushdown would substitute a projected
+    * alias back into the filter; a generator's output is an attribute
+    * neither can inline. */
+  private[operators] def evalOnce(df: DataFrame, kernels: Column*): DataFrame =
+    df.select(col("*"), inline(array(struct(kernels: _*))))
+
+  /** the [[graft.functions.ShingleSetHitsExpr]] kernel over a token-array
+    * column, against `bench`'s distinct shingle set: collected once on the
+    * driver (one job) and shipped as a Spark broadcast. */
+  private[operators] def benchShingleHits(toks: Column, bench: DataFrame,
+                                          benchTextCol: String,
+                                          ngram: Int): Column = {
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.unsafe.types.UTF8String
     val benchSet = new java.util.HashSet[UTF8String]()
     bench.select(shingles(col(benchTextCol), ngram)).collect()
       .filterNot(_.isNullAt(0))
       .foreach(_.getSeq[String](0).foreach(s => benchSet.add(UTF8String.fromString(s))))
-    val hits = GraftSqlBridge.column(graft.functions.ShingleSetHitsExpr(
-      GraftSqlBridge.expression(
-        TextAnalysis.tokens(TextAnalysis.normalized(col(textCol)))),
-      ngram, corpus.sparkSession.sparkContext.broadcast(benchSet)))
-    // the kernel's two fields feed one predicate; a Generate evaluates it
-    // once per row (a filter referencing it twice would run it twice —
-    // whole-stage codegen shares no subexpressions in filter predicates —
-    // and predicate pushdown would substitute a projected alias back in)
-    corpus.select(col("*"), inline(array(hits)).as(Seq("__n", "__hits")))
-      .filter(not(coalesce(
-        round(col("__hits").cast(DoubleType) / col("__n"), 6) >= maxContamination,
-        lit(false))))
-      .drop("__n", "__hits")
+    GraftSqlBridge.column(graft.functions.ShingleSetHitsExpr(
+      GraftSqlBridge.expression(toks), ngram,
+      bench.sparkSession.sparkContext.broadcast(benchSet)))
   }
+
+  /** [[decontaminate]]'s keep predicate on the kernel's two fields: the
+    * [[contaminationScores]] rounding, and a NULL comparison keeps the row */
+  private[operators] def belowContamination(nShingles: Column, nHits: Column,
+                                            maxContamination: Double): Column =
+    not(coalesce(
+      round(nHits.cast(DoubleType) / nShingles, 6) >= maxContamination,
+      lit(false)))
 
   /** embedding-cosine near-dup pairs with banded-LSH blocking — the scale
     * path when no natural blocking key exists. Candidates = pairs sharing a

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Input-skew remedy (spark_optimization_guide.md §2.5 "one huge
   * unsplittable file ... repartition immediately after the read", §2.6 idle
@@ -64,11 +64,14 @@ object Fan {
     }
   }
 
-  def out(df: DataFrame): DataFrame = {
+  /** with `keys`, the fan hash-partitions on them instead of dealing rows
+    * round-robin, so a consumer clustered on the keys (a window or an
+    * aggregate) plans no exchange of its own */
+  def out(df: DataFrame, keys: Column*): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (!df.isStreaming && target > 1 && isNarrow(df) &&
         df.rdd.getNumPartitions * 2 <= target)
-      df.repartition(target)
+      if (keys.isEmpty) df.repartition(target) else df.repartition(target, keys: _*)
     else df
   }
 }

@@ -52,25 +52,39 @@ object TextAnalysis {
     * require-pinned here and in the kernel: a whitespace-carrying marker
     * would have matched across token boundaries under the regex form and
     * can never equal a token, so it is a caller bug either way. */
-  private[operators] def tokenHits(text: Column, words: Seq[String]): Column = {
-    require(words.forall(w => w.nonEmpty && !w.exists(_.isWhitespace)),
-      s"tokenHits: words must be non-empty and whitespace-free, got $words")
+  private[operators] def tokenHits(text: Column, words: Seq[String]): Column =
+    tokenSetHits(text, Seq(words)).getItem(0)
+
+  /** one [[graft.functions.TokenSetHitsExpr]] over several word sets: the
+    * text is tokenized once and each set's count is one item of the array */
+  private[operators] def tokenSetHits(text: Column,
+                                      sets: Seq[Seq[String]]): Column = {
+    require(sets.forall(_.forall(w => w.nonEmpty && !w.exists(_.isWhitespace))),
+      s"tokenHits: words must be non-empty and whitespace-free, got $sets")
     import org.apache.spark.sql.GraftSqlBridge
     GraftSqlBridge.column(graft.functions.TokenSetHitsExpr(
       GraftSqlBridge.expression(lower(trim(text))),
-      Array(words.toArray))).getItem(0)
+      sets.map(_.toArray).toArray))
   }
 
   def stopwordRatio(text: Column): Column =
-    round(tokenHits(text, Stopwords).cast(DoubleType) / size(tokens(text)), 6)
+    stopwordRatioOf(text, tokenHits(text, Stopwords))
+
+  private def stopwordRatioOf(text: Column, stopHits: Column): Column =
+    round(stopHits.cast(DoubleType) / size(tokens(text)), 6)
 
   /** composite quality score in [0,1]: length band + stopword presence +
     * punctuation sanity. Deterministic, closed-form, oracle-expressible. */
-  def qualityScore(text: Column): Column = {
+  def qualityScore(text: Column): Column =
+    qualityOf(text, tokenHits(text, Stopwords))
+
+  /** [[qualityScore]] given the text's [[Stopwords]] hit count */
+  private[operators] def qualityOf(text: Column, stopHits: Column): Column = {
     val n = length(text).cast(DoubleType)
     val lenScore = when(n >= 100 && n <= 10000, 1.0)
       .when(n >= 20, 0.5).otherwise(0.0)
-    val stopScore = when(stopwordRatio(text) > 0.05, 1.0).otherwise(0.0)
+    val stopScore = when(stopwordRatioOf(text, stopHits) > 0.05, 1.0)
+      .otherwise(0.0)
     val punct = (n - length(regexp_replace(text, "[.,;:!?]", "")).cast(DoubleType)) / n
     val punctScore = when(punct <= 0.2, 1.0).otherwise(0.0)
     round((lenScore + stopScore + punctScore) / 3.0, 6)
@@ -92,7 +106,18 @@ object TextAnalysis {
     "fr" -> Seq("le", "les", "est", "une"),
     "de" -> Seq("der", "die", "das", "ist"))
 
-  def langId(text: Column): Column = {
+  def langId(text: Column): Column =
+    // all four marker sets in ONE TokenSetHitsExpr scan (r22): separate
+    // tokenHits calls would be four kernel instances with different sets,
+    // so the text would be tokenized four times. One multi-set kernel
+    // tokenizes once. Its four getItem references share one evaluation in a
+    // projection only: a filter predicate evaluates each reference
+    // separately (Curation's front scan evaluates it once in a Generate).
+    langOf(tokenSetHits(text, LangMarkers.map(_._2)))
+
+  /** [[langId]] given a [[tokenSetHits]] array whose first items are the
+    * [[LangMarkers]] sets' counts, in order */
+  private[operators] def langOf(hits: Column): Column = {
     // argmax as `greatest` over (score, -index, lang) structs — fully
     // whole-stage-codegen'd (the r20 aggregate-HOF fold was CodegenFallback
     // via filter/aggregate: the gate projection evaluated interpreted,
@@ -102,18 +127,7 @@ object TextAnalysis {
     // with ties broken by marker-list order (earlier language wins —
     // strictly-greater never displaced it in the fold); 'und' when every
     // score is 0, and for NULL text `s > 0` is NULL so the otherwise
-    // branch returns 'und' exactly like the fold's never-displaced init. */
-    // all four marker sets in ONE TokenSetHitsExpr scan (r22): separate
-    // tokenHits calls would be four kernel instances with different sets —
-    // subexpression elimination cannot merge them, so the text would be
-    // tokenized four times. One multi-set kernel tokenizes once; the four
-    // getItem references share the one instance (content-based equals).
-    val hits = {
-      import org.apache.spark.sql.GraftSqlBridge
-      GraftSqlBridge.column(graft.functions.TokenSetHitsExpr(
-        GraftSqlBridge.expression(lower(trim(text))),
-        LangMarkers.map(_._2.toArray).toArray))
-    }
+    // branch returns 'und' exactly like the fold's never-displaced init.
     val entries = LangMarkers.zipWithIndex.map { case ((langCode, _), i) =>
       struct(hits.getItem(i).as("s"), lit(-i).as("r"), lit(langCode).as("l"))
     }
@@ -128,7 +142,10 @@ object TextAnalysis {
 
   /** document fingerprint: md5 of the normalized text (content-defined key
     * for exact-after-normalization dedup; md5 exists in both engines). */
-  def fingerprint(text: Column): Column = md5(to_binary(normalized(text), lit("utf-8")))
+  def fingerprint(text: Column): Column = fingerprintOfNormalized(normalized(text))
+
+  private[operators] def fingerprintOfNormalized(norm: Column): Column =
+    md5(to_binary(norm, lit("utf-8")))
 
   /** rolling (polynomial) hash over normalized tokens — order-sensitive
     * fingerprint: h' = (h*31 + (xxhash64(token) mod 2^31)) mod (2^31-1), as a
@@ -527,7 +544,11 @@ object TextAnalysis {
   def appendLmCounts(spark: org.apache.spark.sql.SparkSession, store: String,
                      df: DataFrame, textCol: String, batchTag: Long): Unit = {
     StoreTable.requireTag("appendLmCounts", store, batchTag)
-    lmStore(store).appendOnce(lmPairRows(df, Seq.empty, textCol).localCheckpoint(),
+    // both tables count the same pair rows, pinned LAZILY: the tag gates run
+    // first, so a replayed batch tokenizes nothing, and the first table's
+    // write materializes the pin for the second
+    lmStore(store).appendOnce(
+      lmPairRows(df, Seq.empty, textCol).localCheckpoint(eager = false),
       batchTag)
   }
 
@@ -822,12 +843,20 @@ object TextAnalysis {
     * docs with no tokens (they must vanish from the score, the explode
     * form's absence semantics). */
   private def hashedQualityNS(textCol: Column,
-                              weightsMicros: Seq[Long]): Column = {
+                              weightsMicros: Seq[Long]): Column =
+    hashedQualityOfTokens(tokens(normalized(textCol)), weightsMicros)
+
+  /** the same kernel over an already-projected `tokens(normalized(text))` */
+  private[operators] def hashedQualityOfTokens(toks: Column,
+                                               weightsMicros: Seq[Long]): Column = {
     import org.apache.spark.sql.GraftSqlBridge
     GraftSqlBridge.column(graft.functions.HashedQualityExpr(
-      GraftSqlBridge.expression(tokens(normalized(textCol))),
-      weightsMicros.toArray))
+      GraftSqlBridge.expression(toks), weightsMicros.toArray))
   }
+
+  /** the keep decision from a (n_tokens, sum_micros) kernel result */
+  private[operators] def logitKeep(ns: Column, keepThreshold: Double): Column =
+    logitFromMicros(ns.getItem(1), ns.getItem(0)) >= keepThreshold
 
   /** MODEL-BASED quality scoring — the learned-filter pass of every large
     * curation pipeline (GPT-3's LR quality classifier over CommonCrawl,
@@ -876,8 +905,7 @@ object TextAnalysis {
     * NULL (→ filter-drop) for token-less docs, like the score's absence. */
   def hashedQualityKeep(textCol: Column, weightsMicros: Seq[Long],
                         keepThreshold: Double): Column = {
-    val ns = hashedQualityNS(textCol, weightsMicros)
-    logitFromMicros(ns.getItem(1), ns.getItem(0)) >= keepThreshold
+    logitKeep(hashedQualityNS(textCol, weightsMicros), keepThreshold)
   }
 
   /** multi-class hashed-BOW linear classifier — the DOMAIN-TAGGING stage

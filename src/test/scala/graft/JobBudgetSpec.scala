@@ -33,44 +33,26 @@ class JobBudgetSpec extends AnyFunSuite {
     n.get
   }
 
-  /** 240 English-looking docs with planted exact, near and shared-span
-    * duplicates and benchmark copies: the learned-quality filter,
-    * decontamination and the three dedup stages each drop docs
-    * (240 → 181 → 161 → 145 → 131 → 120 before the sample). */
-  private lazy val fixture = {
-    val rnd = new scala.util.Random(11)
-    val stop = Vector("the", "and", "of", "is", "a", "to", "in", "that")
-    def doc(words: Int) = (0 until words).map { i =>
-      val w = if (rnd.nextDouble() < 0.25) stop(rnd.nextInt(stop.length))
-        else s"w${rnd.nextInt(400)}x"
-      if (i % 9 == 8) w + "." else w
-    }.mkString(" ")
-    val bench = (0 until 8).map(_ => doc(40))
-    val boiler = doc(12)
-    val texts = (0 until 240).map { i =>
-      i % 12 match {
-        case 0 => "Note " + bench(i % bench.length)
-        case 1 => s"$boiler ${doc(40)}"
-        case _ => doc(40 + rnd.nextInt(30))
-      }
-    }.toArray
-    (2 until 240 by 12).foreach(i => texts(i + 1) = texts(i).toUpperCase)
-    (5 until 240 by 12).foreach(i => texts(i + 1) = texts(i).reverse.dropWhile(_ != ' ').reverse + "tail")
-    (texts.indices.map(_.toLong) zip texts).toDF("doc_id", "text") -> bench.toDF("text")
-  }
+  private lazy val fixture = CurationFixtures.budget(spark)
 
   test("curateFull runs within its job budget") {
     val (docs, bench) = fixture
     val model = TextAnalysis.syntheticQualityModel()
-    var kept = 0
-    val jobs = jobsOf {
-      kept = Curation.curateFull(docs, "doc_id", "text", bench, "text", model,
-        keepLogit = -0.15).select("doc_id").collect().length
-    }
-    assert(kept > 0 && kept < 240, s"degenerate fixture: $kept survivors")
     // 36 before the row-local decontamination filter, the min-id span
-    // dedup and the single-checkpoint MinHash
-    assert(jobs <= 21, s"curateFull ran $jobs Spark jobs, budget 21")
+    // dedup and the single-checkpoint MinHash; 21 (curateFull) and 37
+    // (curateFullExcise) before the one front scan and the fused decisions
+    val budgets = Seq[(String, () => Int, Int)](
+      ("curateFull", () => Curation.curateFull(docs, "doc_id", "text", bench,
+        "text", model, keepLogit = -0.15).select("doc_id").collect().length, 8),
+      ("curateFullExcise", () => Curation.curateFullExcise(docs, "doc_id",
+        "text", bench, "text", model, keepLogit = -0.15).select("doc_id")
+        .collect().length, 28))
+    budgets.foreach { case (name, run, budget) =>
+      var kept = 0
+      val jobs = jobsOf { kept = run() }
+      assert(kept > 0 && kept < 240, s"degenerate fixture: $kept $name survivors")
+      assert(jobs <= budget, s"$name ran $jobs Spark jobs, budget $budget")
+    }
   }
 
   test("tagged store appends run within their job budgets, replays cheaper") {
@@ -92,7 +74,7 @@ class JobBudgetSpec extends AnyFunSuite {
       val budgets = Seq[(String, Long => Unit, (Int, Int))](
         ("sketch", t => Profiling.appendCardinalitySketches(spark, "jb_card", docs,
           "g", col("v"), 12, t), (5, 2)),
-        ("LM", t => TextAnalysis.appendLmCounts(spark, "jb_lm", text, "text", t), (11, 5)),
+        ("LM", t => TextAnalysis.appendLmCounts(spark, "jb_lm", text, "text", t), (10, 4)),
         ("PQ", t => Similarity.appendPqStore(vecs, "vec_id", "embedding", model,
           "jb_pq", t), (4, 2)),
         ("inverted index", t => Search.appendInvertedIndex(text, "doc_id", "text",
