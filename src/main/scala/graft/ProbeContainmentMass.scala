@@ -22,7 +22,7 @@ object ProbeContainmentMass {
       val nDocs = docs.count()
       val lg = math.log(math.max(nDocs, 2L).toDouble) / math.log(2.0)
       // the two registered profiles: q_containment's lossless VALVE
-      // (8·log₂ past 10k docs, the SparkEntry.containmentFreqCap rule) and
+      // (8·log₂ past 10k docs, the graft.queries.Offline.containmentFreqCap rule) and
       // q_containment_capped's production cap (3·log₂, floor 32)
       val valve = if (nDocs <= 10000) Long.MaxValue
         else math.max(64L, (8.0 * lg).toLong)

@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, LongType}
+import org.apache.spark.sql.types.LongType
 
-import graft.operators.{Dedup, Layout, LinkGraph, Multimodal, Relational, Sampling, Similarity, TextAnalysis}
-import graft.streaming.Streams
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7.5 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.5.
   *
-  * Every implemented operator has one entry in [[queries]]; every entry that
-  * is SQL-expressible has a DuckDB oracle in [[oracleSql]] over the same
+  * Every implemented operator has one entry in [[queries]], declared with
+  * its DuckDB oracle as a [[graft.queries.QuerySpec]] in a per-family file
+  * under `graft/queries/`; [[oracleSql]] returns the oracles over the same
   * parquet tables. Determinism rules used throughout so the driver's
   * row/schema/hash compare is stable across engines:
   *  - every query ends in an explicit ORDER BY with a unique tiebreak;
@@ -24,539 +24,8 @@ import graft.streaming.Streams
   */
 object SparkEntry {
 
-  private def rd(s: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def rd(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
-
-  /** offline-built IVF models, one per sf dir (q_ivf_ann times probing, not
-    * index construction — the sampled fit runs once per JVM). */
-  private val ivfModels =
-    new scala.collection.concurrent.TrieMap[String, Similarity.IvfModel]
-
-  /** the sf dir the most recent IVF query ran against — [[oracleSql]] is
-    * evaluated AFTER the query loop (Verify runs one sf dir per process),
-    * so the generated q_ivf_* oracles embed THAT run's fitted centroids. */
-  @volatile private var lastIvfDir: Option[String] = None
-
-  /** the sf dir the most recent scaled fuzzy-join ran against — its
-    * generated oracle embeds the SAME docCount-derived prefix length the
-    * query resolved. */
-  @volatile private var lastFuzzyDir: Option[String] = None
-  @volatile private var lastJwDir: Option[String] = None
-
-  /** the sf dir the most recent xxhash64/HLL sketch query ran against —
-    * [[oracleSql]] then recomputes those pipelines Spark-independently
-    * ([[graft.verify.IndependentOracles]]) over that dir's corpus and embeds
-    * the expected survivors / estimate as literals. */
-  @volatile private var lastSketchDir: Option[String] = None
-
-  /** q_minhash_dedup parameters, shared between the query and
-    * [[sketchOracles]]'s independent recompute so the pipeline and its
-    * oracle can never drift apart silently (a one-sided edit surfaces as a
-    * loud CORRECTNESS failure either way, but sharing removes the footgun). */
-  private val MinhashDedupThreshold = 0.5
-  private val MinhashDedupHashes = 32
-  private val MinhashDedupBands = 8
-
-  /** the md5 MinHash-LSH near-dup pairs (threshold 0.5, 16 hashes, 4 bands)
-    * behind the q_cluster_keep_best / q_cluster_sizes / q_golden_record /
-    * q_split_leakage components — the candidate chain their oracles share
-    * with q_cluster_dedup's. */
-  private def portablePairs(docs: DataFrame): DataFrame =
-    Dedup.minhashPairs(docs, "doc_id", "text", 0.5, numHashes = 16, bands = 4,
-      portable = true)
-
-  /** memoized deterministic IVF index build: the fit sample is the first
-    * `fitSampleCap` rows in vec_id order (TakeOrdered, not an unordered
-    * limit — bulletproof against parquet split/scheduling order), so the
-    * fitted centroids are reproducible doubles that the generated DuckDB
-    * oracle can embed as exact literals. */
-  private def ivfModelFor(s: SparkSession, dir: String): Similarity.IvfModel = {
-    lastIvfDir = Some(dir)
-    ivfModels.getOrElseUpdate(dir, {
-      // k grows with the corpus (k ≈ rows/128, floor 16) so SemDeDup cell
-      // sizes — and the within-cell quadratic term — stay bounded as the
-      // data scales; at the driver's test SFs (≤2000 embeddings) this
-      // resolves to the legacy k=16, keeping the fitted-centroid oracles
-      // and baseline shares unchanged. The count is one column-pruned scan,
-      // part of the offline index build (untimed via warmOffline).
-      val emb = rd(s, dir, "embeddings")
-      Similarity.ivfFit(emb.orderBy("vec_id"), "embedding",
-        k = Similarity.autoK(emb.count()))
-    })
-  }
-
-  /** memoized per-dir IVF STORE build (the persisted cell-partitioned
-    * index — an offline step like the fit itself, warmed with it): table
-    * name derived from the dir so multi-sf sessions don't collide. */
-  private val ivfStores = new scala.collection.concurrent.TrieMap[String, String]
-  private def ivfStoreFor(s: SparkSession, dir: String): String =
-    ivfStores.getOrElseUpdate(dir, {
-      val name = s"graft_ivf_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      Similarity.writeIvfStore(rd(s, dir, "embeddings"), "vec_id", "embedding",
-        ivfModelFor(s, dir), name)
-      name
-    })
-
-  /** memoized per-dir LSH signature store (same offline-index contract). */
-  private val lshStores = new scala.collection.concurrent.TrieMap[String, String]
-  private def lshStoreFor(s: SparkSession, dir: String): String =
-    lshStores.getOrElseUpdate(dir, {
-      val name = s"graft_lsh_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      Similarity.writeLshStore(rd(s, dir, "embeddings"), "vec_id", "embedding",
-        name, dim = 64, nBits = 16)
-      name
-    })
-
-  /** memoized deterministic PQ codebook fit (offline index build, like the
-    * IVF fit — sample rows in vec_id order so the fitted codebooks are
-    * reproducible doubles the generated oracle embeds as exact literals). */
-  private val pqModels =
-    new scala.collection.concurrent.TrieMap[String, Similarity.PqModel]
-  @volatile private var lastPqDir: Option[String] = None
-  private def pqModelFor(s: SparkSession, dir: String): Similarity.PqModel = {
-    lastPqDir = Some(dir)
-    pqModels.getOrElseUpdate(dir,
-      Similarity.pqFit(rd(s, dir, "embeddings").orderBy("vec_id"),
-        "embedding"))
-  }
-
-  /** memoized per-dir PQ code store (the persisted m-bytes-per-vector
-    * index — an offline step like the fit itself). */
-  private val pqStores = new scala.collection.concurrent.TrieMap[String, String]
-  private def pqStoreFor(s: SparkSession, dir: String): String =
-    pqStores.getOrElseUpdate(dir, {
-      val name = s"graft_pq_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      Similarity.writePqStore(rd(s, dir, "embeddings"), "vec_id", "embedding",
-        pqModelFor(s, dir), name)
-      name
-    })
-
-  /** memoized per-dir IVF-PQ composite store (cell-partitioned code bytes
-    * — the FAISS IVFADC shape; offline build like its two parents). */
-  private val ivfPqStores =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private def ivfPqStoreFor(s: SparkSession, dir: String): String =
-    ivfPqStores.getOrElseUpdate(dir, {
-      val name = s"graft_ivfpq_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      Similarity.writeIvfPqStore(rd(s, dir, "embeddings"), "vec_id",
-        "embedding", ivfModelFor(s, dir), pqModelFor(s, dir), name)
-      name
-    })
-
-  private val int8Stores =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private def int8StoreFor(s: SparkSession, dir: String): String =
-    int8Stores.getOrElseUpdate(dir, {
-      val name = s"graft_int8_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      Similarity.writeInt8Store(rd(s, dir, "embeddings"), "vec_id", "embedding",
-        name)
-      name
-    })
-
-  private val searchStores =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private def searchStoreFor(s: SparkSession, dir: String): String =
-    searchStores.getOrElseUpdate(dir, {
-      val name = s"graft_search_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.operators.Search.writeInvertedIndex(rd(s, dir, "documents"),
-        "doc_id", "text", name)
-      name
-    })
-
-  /** accreting cardinality sketch store, one per sf dir: slice 0 of a
-    * doc_id-mod-3 split seeds it, slices 1-2 append (tagged, idempotent) —
-    * the 3-batch ingest history q_card_store's estimates probe never
-    * rescans. */
-  private val cardStores =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private def cardStoreFor(s: SparkSession, dir: String): String =
-    cardStores.getOrElseUpdate(dir, {
-      val name = s"graft_card_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val tok = rd(s, dir, "documents").select(col("source"), col("doc_id"),
-        explode(filter(split(lower(trim(col("text"))), "\\s+"),
-          t => length(t) > lit(0))).as("__tok"))
-      graft.operators.Profiling.writeCardinalityStore(
-        tok.filter(pmod(col("doc_id"), lit(3)) === 0),
-        "source", col("__tok"), name, lgK = 12)
-      Seq(1, 2).foreach { b =>
-        graft.operators.Profiling.appendCardinalitySketches(s, name,
-          tok.filter(pmod(col("doc_id"), lit(3)) === b),
-          "source", col("__tok"), lgK = 12, batchTag = b.toLong)
-      }
-      name
-    })
-
-  /** accreting CMS frequency store, one per sf dir: same 3-batch mod-slice
-    * ingest history as [[cardStoreFor]] — the heavy-hitter twin. */
-  private val freqStores =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private def freqStoreFor(s: SparkSession, dir: String): String =
-    freqStores.getOrElseUpdate(dir, {
-      val name = s"graft_freq_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      val tok = rd(s, dir, "documents").select(col("source"), col("doc_id"),
-        explode(filter(split(lower(trim(col("text"))), "\\s+"),
-          t => length(t) > lit(0))).as("__tok"))
-      graft.operators.Profiling.writeFrequencyStore(
-        tok.filter(pmod(col("doc_id"), lit(3)) === 0), col("__tok"), name,
-        eps = 0.001, confidence = 0.99, seed = 42)
-      Seq(1, 2).foreach { b =>
-        graft.operators.Profiling.appendFrequencySketch(s, name,
-          tok.filter(pmod(col("doc_id"), lit(3)) === b), col("__tok"),
-          eps = 0.001, confidence = 0.99, seed = 42, batchTag = b.toLong)
-      }
-      name
-    })
-
-  private val posStores =
-    new scala.collection.concurrent.TrieMap[String, String]
-  private def posStoreFor(s: SparkSession, dir: String): String =
-    posStores.getOrElseUpdate(dir, {
-      val name = s"graft_pos_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      graft.operators.Search.writePositionalIndex(rd(s, dir, "documents"),
-        "doc_id", "text", name)
-      name
-    })
-
-  /** offline-derived token-budget mixing rates, one per sf dir (the
-    * domains-sized aggregate runs once per JVM; [[oracleSql]] embeds the
-    * resulting basis-point thresholds as literals — the ivfModels pattern).
-    * Budget 10k tokens at target shares src0=0.25, src1=0.15, uniform rest:
-    * exercises the kept-whole cap, the weighted path, and downsampling. */
-  private val budgetRatesMemo =
-    new scala.collection.concurrent.TrieMap[String, Map[String, Double]]
-  @volatile private var lastBudgetDir: Option[String] = None
-  private def budgetRatesFor(s: SparkSession, dir: String): Map[String, Double] = {
-    lastBudgetDir = Some(dir)
-    budgetRatesMemo.getOrElseUpdate(dir,
-      Sampling.tokenBudgetRates(rd(s, dir, "documents"), "text", "source",
-        budgetTokens = 10000L,
-        weights = Map("src0" -> 0.25, "src1" -> 0.15)))
-  }
-
-  /** the raw corpus is punctuation-free (subword ≡ whitespace counts —
-    * verified, the variant would not discriminate), so the subword query
-    * plants a doc_id-varying punctuated suffix: " ... ok?! " × (doc_id % 4)
-    * counts 2 whitespace tokens but 6 subwords per repeat, skewing the
-    * per-source totals differently under each tokenizer. */
-  private def plantPunctuated(docs: DataFrame): DataFrame =
-    docs.withColumn("text",
-      concat(col("text"), repeat(lit(" ... ok?! "), pmod(col("doc_id"), lit(4))
-        .cast("int"))))
-
-  /** the same rates derived over BPE-ish SUBWORD counts (the production
-    * budget unit) via the tokenizer-as-a-parameter overload —
-    * [[TextAnalysis.subwordCount]] stands in for a real BPE tokenizer; on
-    * the planted corpus the subword rates diverge from whitespace rates,
-    * so the q_token_budget_subword oracle pins a genuinely different kept
-    * set. */
-  private val budgetSubwordRatesMemo =
-    new scala.collection.concurrent.TrieMap[String, Map[String, Double]]
-  private def budgetSubwordRatesFor(s: SparkSession, dir: String): Map[String, Double] = {
-    lastBudgetDir = Some(dir)
-    budgetSubwordRatesMemo.getOrElseUpdate(dir,
-      Sampling.tokenBudgetRates(plantPunctuated(rd(s, dir, "documents")),
-        TextAnalysis.subwordCount(col("text")), "source",
-        budgetTokens = 10000L,
-        weights = Map("src0" -> 0.25, "src1" -> 0.15)))
-  }
-
-  /** memoized REAL-BPE model (round 18 — the tokenizer the token-budget
-    * hook existed for): Sennrich merges learned offline from the corpus's
-    * capped word-frequency head (the ivfFit offline-index shape; fit cost
-    * is vocab-sized, never corpus-sized). The merges table is plain data —
-    * the oracle side re-runs an independently-coded GPT-2 encode loop over
-    * the SAME table (a production merges file), so the distributed
-    * kernel's counts are externally pinned per doc.
-    *
-    * The merge budget is deliberately SMALL relative to the fixture's
-    * vocabulary (the synthetic corpus has ~31 words; ~109 merges would
-    * fully fuse all of them, collapsing BPE counts onto whitespace counts
-    * and making the q_bpe_count / q_token_budget_bpe rows vacuous — 200
-    * merges MEASURED exactly that degeneracy). 24 merges leave the vocab
-    * partially merged: frequent short words fuse to one unit, longer/rarer
-    * words stay split 2-4 ways, so per-doc counts — and the budget rates
-    * derived from them — genuinely differ from both the whitespace and
-    * subword siblings. The kernel itself is merge-count-agnostic; a
-    * production fit would pass 32k-50k. */
-  private val bpeModels =
-    new scala.collection.concurrent.TrieMap[String, graft.operators.Bpe.BpeModel]
-  @volatile private var lastBpeDir: Option[String] = None
-  private def bpeModelFor(s: SparkSession, dir: String): graft.operators.Bpe.BpeModel = {
-    lastBpeDir = Some(dir)
-    bpeModels.getOrElseUpdate(dir,
-      graft.operators.Bpe.fit(rd(s, dir, "documents"), "text",
-        numMerges = 24, maxVocab = 20000))
-  }
-
-  /** token-budget rates over REAL BPE counts (the production budget unit):
-    * the same 10k-token budget and weights as [[budgetRatesFor]], with the
-    * per-doc counts from the distributed BPE kernel — BPE merges compress
-    * frequent words to fewer units than subwordCount's one-per-run, so the
-    * totals, rates, and kept set all differ from both siblings. */
-  private val budgetBpeRatesMemo =
-    new scala.collection.concurrent.TrieMap[String, Map[String, Double]]
-  private def budgetBpeRatesFor(s: SparkSession, dir: String): Map[String, Double] = {
-    lastBudgetDir = Some(dir)
-    budgetBpeRatesMemo.getOrElseUpdate(dir, {
-      val docs = rd(s, dir, "documents")
-      val counted = docs.select(col("doc_id"), col("source"))
-        .join(graft.operators.Bpe.tokenCountsDict(docs, "doc_id", "text",
-          bpeModelFor(s, dir)), Seq("doc_id"))
-      Sampling.tokenBudgetRates(counted, col("n_bpe"), "source",
-        budgetTokens = 10000L,
-        weights = Map("src0" -> 0.25, "src1" -> 0.15))
-    })
-  }
-
-  /** WATERFILL rates (budget as exact TARGET, not cap): budget = half the
-    * corpus tokens with src0 claiming 0.6 of it — src0's tokens (~5% of the
-    * corpus) fit inside that allocation, so it saturates (kept whole) and
-    * its unclaimed mass redistributes; src1 at 0.08 saturates only AFTER
-    * round-1 redistribution lifts its allocation past its totals — a
-    * two-round cascade, so the oracle pins the iterative waterfill loop,
-    * not just the plain-rates formula (plain rates here would be ~0.21 for
-    * unspecified domains; waterfill lands ~0.44). */
-  private val budgetWaterfillRatesMemo =
-    new scala.collection.concurrent.TrieMap[String, Map[String, Double]]
-  private def budgetWaterfillRatesFor(s: SparkSession, dir: String): Map[String, Double] = {
-    lastBudgetDir = Some(dir)
-    budgetWaterfillRatesMemo.getOrElseUpdate(dir, {
-      val docs = rd(s, dir, "documents")
-      val total = docs
-        .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long")))
-        .head().getLong(0)
-      Sampling.tokenBudgetRatesWaterfill(docs, "text", "source",
-        budgetTokens = math.max(1L, total / 2),
-        weights = Map("src0" -> 0.6, "src1" -> 0.08))
-    })
-  }
-
-  /** offline-derived α-temperature mixing rates (same lazy-literal
-    * mechanism as [[budgetRatesFor]]): the fixture's sources are uniform,
-    * so the query derives a SKEWED domain from doc_id (8:4:2:2 per 16 ids)
-    * to give the temperature flattening something to flatten; α = 0.5 at a
-    * 0.4-of-corpus budget downsamples the head hardest (head rate < mid <
-    * tail — the signature of q_i ∝ n_i^α). */
-  /** offline-derived Z-order dimension bounds over orders (one 4-value
-    * min/max scan per sf dir, memoized); [[oracleSql]] embeds (lo, hi,
-    * shift) as literals and re-derives the bit interleave in SQL — the
-    * budgetRates / ivfModels pattern. 8 bits/dim keeps the generated
-    * oracle's unrolled interleave short while still splitting both
-    * dimensions far below file granularity. */
-  private val zorderMemo =
-    new scala.collection.concurrent.TrieMap[String, (Layout.DimBounds, Layout.DimBounds)]
-  @volatile private var lastZorderDir: Option[String] = None
-  private[graft] val ZorderBits = 8
-  private def zorderDay: Column =
-    datediff(col("o_orderdate").cast(org.apache.spark.sql.types.DateType),
-      to_date(lit("1970-01-01")))
-  private def zorderBoundsFor(s: SparkSession, dir: String): (Layout.DimBounds, Layout.DimBounds) = {
-    lastZorderDir = Some(dir)
-    zorderMemo.getOrElseUpdate(dir,
-      Layout.bounds2(rd(s, dir, "orders"), col("o_custkey"), zorderDay, ZorderBits))
-  }
-
-  private val tempRatesMemo =
-    new scala.collection.concurrent.TrieMap[String, Map[String, Double]]
-  @volatile private var lastTempDir: Option[String] = None
-  private def skewedDomain: Column =
-    when(col("doc_id") % 16 < 8, "head")
-      .when(col("doc_id") % 16 < 12, "mid")
-      .when(col("doc_id") % 16 < 14, "tail1")
-      .otherwise("tail2")
-  private def tempRatesFor(s: SparkSession, dir: String): Map[String, Double] = {
-    lastTempDir = Some(dir)
-    tempRatesMemo.getOrElseUpdate(dir,
-      Sampling.temperatureRates(
-        rd(s, dir, "documents").withColumn("__dom", skewedDomain),
-        "__dom", alpha = 0.5, targetFraction = 0.4))
-  }
-
-  /** memoized documents row count per sf dir (one column-pruned count job,
-    * warmed with the other offline artifacts) — feeds the corpus-size-
-    * derived parameter profile below. */
-  private val docCounts = new scala.collection.concurrent.TrieMap[String, Long]
-  private def docCountFor(s: SparkSession, dir: String): Long =
-    docCounts.getOrElseUpdate(dir, rd(s, dir, "documents").count())
-
-  private def log2(n: Long): Double = math.log(math.max(n, 1).toDouble) / math.log(2.0)
-
-  /** CORPUS-SIZE-DERIVED parameter profile for the candidate-pair-bound
-    * dedup queries (round-10 verdict item 2): the knobs the operator
-    * scaladocs prescribe to grow with log₂(corpus), frozen until round 10
-    * at the sf0.1 fixture values. At the driver's test SFs (≤8192 docs)
-    * every knob resolves to the legacy constant — the static oracle SQL and
-    * the baseline shares are unchanged — and past that they engage (the 10×
-    * stress corpus is the first to see them).
-    *
-    * MinHash rows-per-band for the n-gram jaccard LSH: r grows by 1 per 8×
-    * corpus, steepening the band S-curve (midpoint (1/bands)^(1/r)) so the
-    * false-candidate mass — ∝ n² · P(collide at the background jaccard) —
-    * stays bounded while recall at the 0.5 threshold stays on the curve's
-    * upper shoulder. */
-  private[graft] def jaccardLshParams(n: Long): (Int, Int) = {
-    val bands = 8
-    val extra = math.max(0, math.ceil((log2(n) - 13.0) / 3.0).toInt)
-    ((2 + extra) * bands, bands)
-  }
-
-  /** containment candidate-generation freq cap: boilerplate shingles (doc
-    * freq past ~8·log₂(corpus)) leave candidate generation — their posting
-    * lists scale with the corpus, not with true duplication. Uncapped (the
-    * lossless ground-truth contract) at the correctness SFs. */
-  private[graft] def containmentFreqCap(n: Long): Long =
-    if (n <= 10000) Long.MaxValue else math.max(64L, (8.0 * log2(n)).toLong)
-
-  /** PRODUCTION containment cap profile (q_containment_capped): engaged at
-    * EVERY corpus size, and materially tighter than [[containmentFreqCap]]'s
-    * 8·log₂ valve — 3·log₂(corpus) with a floor of 32. The candidate join's
-    * fan-out on a shingle of document frequency f is O(f²), so the cost of
-    * the band f ∈ (3·log₂ n, 8·log₂ n] that [[containmentFreqCap]] admits
-    * grows ~7× faster than what this profile admits; on a replica-heavy
-    * corpus that band is exactly where template/boilerplate vocabulary
-    * lands. Lossy ONLY for pairs whose every rarest-prefix witness is
-    * boilerplate at this tighter bar. At the correctness SFs the floor
-    * keeps it a no-op (max observed shingle doc-freq: 7 at sf0.01, 25 at
-    * sf0.1 — both under 32), so the ground-truth oracle stays exact. */
-  private[graft] def containmentFreqCapScaled(n: Long): Long =
-    math.max(32L, (3.0 * log2(n)).toLong)
-
-  /** memoized embeddings row count per sf dir (same shape as [[docCountFor]]),
-    * feeding the corpus-scaled banding profile below. */
-  private val embCounts = new scala.collection.concurrent.TrieMap[String, Long]
-  @volatile private var lastEmbScaledDir: Option[String] = None
-  @volatile private var lastSimhashScaledDir: Option[String] = None
-  private def embCountFor(s: SparkSession, dir: String): Long =
-    embCounts.getOrElseUpdate(dir, rd(s, dir, "embeddings").count())
-
-  /** corpus-size-derived bandBits for the banded-hyperplane embedding
-    * near-dup ([[Dedup.embeddingNearDupLsh]]'s scaladoc rule made a
-    * PROFILE): per-band bucket count is 2^bandBits, so bandBits must grow
-    * with log₂(corpus) for the bucket-local join to stay ~linear —
-    * ceil(log₂ n)+3 keeps expected bucket occupancy under ~n/8·2^-log₂(n)
-    * ≈ ⅛ row as the corpus grows. Floor 12 pins the fixture corpora
-    * (500-2k embeddings) at the q_embedding_neardup static-oracle
-    * parameter; cap 15 holds the 4-band pooled signature at 60 bits, clear
-    * of the 64-bit pack and the DuckDB oracle's sign-bit ceiling (past
-    * ~4k× the fixture, raise `bands` to buy recall back instead). */
-  private[graft] def embeddingBandBits(n: Long): Int =
-    math.min(15, math.max(12, math.ceil(log2(n)).toInt + 3))
-
-  /** corpus-size-derived per-band width for the Manku banded simhash
-    * hamming search ([[Dedup.simhashHammingPairsWide]]): bucket selectivity
-    * is 2^width per band, so width grows with log₂(corpus) —
-    * ceil(log₂ n)+3 keeps expected band-bucket occupancy under ~⅛ doc.
-    * Floor 15 pins the fixture floor to the legacy 60-bit signature
-    * (4 × 15; [[graft.functions.SimHashWideExpr]] at 60 bits is
-    * bit-identical to the legacy portable kernel); cap 30 holds the
-    * 4-band signature at 120 bits — the two-long pack and the DuckDB
-    * BIGINT shift ceiling (past ~2^27 docs per partition-of-interest,
-    * widen `bands`/maxHamming instead). 500 docs (sf0.01) → 15 (legacy
-    * degenerate); 5000 (sf0.1) → 16, so the WIDE two-long path itself is
-    * oracle-pinned at the driver's SFs; 150k (30×) → 21. */
-  private[graft] def simhashBandBits(n: Long): Int =
-    math.min(30, math.max(15, math.ceil(log2(n)).toInt + 3))
-
-  /** corpus-scaled fuzzy-join BLOCK prefix length: +1.5 chars per corpus
-    * DOUBLING past the fixture scale. Fixed-prefix blocking is quadratic
-    * in data (block count constant ⇒ block size ∝ n ⇒ pairs ∝ n² —
-    * measured: q_fuzzy_join 1.9 s → 19.2 s → 256 s at 10×/30×); each
-    * added prefix char multiplies the distinct-block count by the text's
-    * effective branching factor, holding expected pair mass — and the
-    * candidates×verify term — bounded. The slope is calibrated to
-    * measured branching (~0.7 bits/char through the first word, where
-    * salted-replica suffixes split late): a gentler +0.5 chars/doubling
-    * left 260 M pairs at 100× (probe DNF-class, 598 s); this profile
-    * measures 105 k → 911 k → 229 k → 311 k pairs at sf0.1/10×/30×/100×.
-    * ≤ 8192 docs resolves to the legacy 4 (static oracle and baseline
-    * shares unchanged). The trade is recall at the BLOCK boundary: pairs
-    * differing inside the first L chars are out of scope by contract —
-    * exactly the [[graft.operators.TextAnalysis.fuzzyJoin]] blocking
-    * semantics, which is what keeps the scaled form oracle-checkable. */
-  private[graft] def fuzzyPrefixLen(n: Long): Int = {
-    val excess = log2(math.max(n, 1)) - 13.0 // log2(8192)
-    4 + math.max(0, math.ceil(1.5 * excess).toInt)
-  }
-
-  /** memoized exact per-column distinct counts of the profiled table —
-    * the offline AUDIT ARTIFACT q_profile_prod's contract flag compares
-    * the production one-pass HLL estimates against
-    * ([[graft.operators.Profiling.profileTableApproxAgainst]]). One exact
-    * profile pass per sf dir (the k× Expand), run once per JVM on the
-    * audit cadence — warmOffline pre-builds it so the benched query times
-    * ONLY the production HLL plan. */
-  private val profileExactStats =
-    new scala.collection.concurrent.TrieMap[String, Map[String, Long]]
-  private def profileExactDistinctFor(s: SparkSession,
-                                      dir: String): Map[String, Long] =
-    profileExactStats.getOrElseUpdate(dir, {
-      graft.operators.Profiling.profileTable(rd(s, dir, "lineitem"),
-          exact = true)
-        .select("column_name", "n_distinct").collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    })
-
-  /** pre-build every memoized OFFLINE artifact for `dir` — the IVF model
-    * (sampled Lloyd's fit), token-budget rates, and temperature rates — so
-    * a bench's timed queries measure probing/filtering, not index
-    * construction. Without this the FIRST ivf/budget query in iteration
-    * order paid the one-time build inside its timed window (measured: a
-    * reverse-order draw put 1.8 s of fit on q_ivf_recall instead of
-    * q_ivf_ann — order-dependent numbers, the round-3 lesson). Bench's
-    * warmup calls this; Verify doesn't need to (correctness is
-    * time-independent, and the memo makes it run-once either way). */
-  def warmOffline(s: SparkSession, dir: String): Unit = {
-    ivfModelFor(s, dir)
-    budgetRatesFor(s, dir)
-    budgetSubwordRatesFor(s, dir)
-    budgetWaterfillRatesFor(s, dir)
-    tempRatesFor(s, dir)
-    docCountFor(s, dir)
-    embCountFor(s, dir)
-    ivfStoreFor(s, dir)
-    lshStoreFor(s, dir)
-    int8StoreFor(s, dir)
-    pqStoreFor(s, dir)
-    ivfPqStoreFor(s, dir)
-    searchStoreFor(s, dir)
-    posStoreFor(s, dir)
-    cardStoreFor(s, dir)
-    freqStoreFor(s, dir)
-    zorderBoundsFor(s, dir)
-    profileExactDistinctFor(s, dir)
-    bpeModelFor(s, dir)
-    budgetBpeRatesFor(s, dir)
-  }
-
-  /** the synthetic web-page plant shared by q_boilerplate and
-    * q_curation_web (and replicated by [[boilerplateChainSql]]): nav header
-    * + content + ratio-straddling promo variant + copyright footer. */
-  private def plantWebPages(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-      concat_ws("\n",
-        concat(lit("nav "), col("source"), lit(" home")),
-        col("text"),
-        when(col("doc_id") % 40 < 20, "promo sale")
-          .otherwise("no promo today"),
-        concat(lit("copyright "), col("source"))).as("text"))
-
-  /** the synthetic LINKED web pages shared by the q_link_extract /
-    * q_host_graph / q_host_rank family (and replicated verbatim by their
-    * oracles): each doc's page links to a hub host keyed by doc_id mod 5,
-    * carries a RELATIVE href (no host — must be filtered by the edge
-    * builder), and links to portal.example (even ids) or its OWN host
-    * (odd ids — a self-loop the edge builder must drop). */
-  private def plantLinkedPages(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      concat(col("source"), lit(".example")).as("src_host"),
-      concat(
-        lit("<html><body><p>"), col("text"),
-        lit("</p><a href=\"https://hub"), pmod(col("doc_id"), lit(5)),
-        lit(".example/p/"), col("doc_id"),
-        lit("\">h</a> <a href=\"/relative/skip\">r</a><a href=\"https://"),
-        when(col("doc_id") % 2 === 0, lit("portal.example"))
-          .otherwise(concat(col("source"), lit(".example"))),
-        lit("/x\">p</a></body></html>")).as("html"))
 
   /** events.parquet's `ts` has shipped in two fixture generations:
     * TIMESTAMP(NANOS), which Spark's vectorized reader rejects — with
@@ -568,7 +37,7 @@ object SparkEntry {
     * the read schema so both generations work; the NTZ→LTZ cast is a no-op
     * under the UTC session timeZone and keeps every downstream query on the
     * same TimestampType the nanos path produced. */
-  private def rdEvents(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def rdEvents(s: SparkSession, dir: String): DataFrame = {
     val raw = rd(s, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -594,7438 +63,35 @@ object SparkEntry {
   }
 
   // exact cents of a double column: deterministic, order-independent sum
-  private def cents(c: org.apache.spark.sql.Column, scale: Long = 100L) =
+  private[graft] def cents(c: org.apache.spark.sql.Column, scale: Long = 100L) =
     round(c * scale).cast(LongType)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- parity surface (SURVEY §2.3-§2.6) ----
-    "q_mask_count" -> ((s, dir) => {
-      import s.implicits._
-      val d = DF.fromSpark(rd(s, dir, "lineitem"))
-      val n = d.countRows(col("l_quantity") * col("l_extendedprice") >= 50000)
-      Seq(n).toDF("cnt")
-    }),
-    "q_mask_slice" -> ((s, dir) => {
-      DF.fromSpark(rd(s, dir, "lineitem"))
-        .filter(col("l_quantity") >= 45)
-        .columns(Sel.Names(Seq("l_orderkey", "l_linenumber", "l_quantity")))
-        .toSpark.orderBy("l_orderkey", "l_linenumber")
-    }),
-    "q_slice_range" -> ((s, dir) => {
-      DF.fromSpark(rd(s, dir, "customer"), orderBy = Seq("c_custkey"))
-        .sliceFrame(Sel.Range(100, 110))
-        .toSpark.orderBy("c_custkey")
-    }),
-    "q_map_rows" -> ((s, dir) => {
-      DF.fromSpark(rd(s, dir, "lineitem"))
-        .mapDF(
-          "l_orderkey" -> col("l_orderkey"),
-          "l_linenumber" -> col("l_linenumber"),
-          "rev_cents" -> cents(col("l_extendedprice") * (lit(1) - col("l_discount"))))
-        .toSpark.orderBy("l_orderkey", "l_linenumber")
-    }),
-    "q_map_df" -> ((s, dir) => {
-      // the reference's map-df LAMBDA form (cl-data-frame.lisp:528-552),
-      // DISTRIBUTED: the Scala closure runs inside executor tasks over the
-      // multi-partition lineitem corpus via DF.mapDFRows (RDD map + eager
-      // localCheckpoint — fn exactly once per row), never a driver collect.
-      // resultTypes given explicitly (the reference's :element-type), so
-      // no type-inference sampling job runs.
-      DF.fromSpark(rd(s, dir, "lineitem"))
-        .mapDFRows(
-          Seq("l_orderkey", "l_linenumber", "l_quantity", "l_discount"),
-          Seq("l_orderkey", "l_linenumber", "qty_band", "disc_cents"),
-          Seq(LongType, org.apache.spark.sql.types.IntegerType,
-            LongType, LongType)) { in =>
-          val qty = in(2).asInstanceOf[Double]
-          val disc = in(3).asInstanceOf[Double]
-          Seq(in(0), in(1), (qty / 10.0).toLong, math.round(disc * 100.0))
-        }
-        .toSpark.orderBy("l_orderkey", "l_linenumber")
-    }),
-    "q_add_column" -> ((s, dir) => {
-      DF.fromSpark(rd(s, dir, "customer"))
-        .addColumn("bal_band", floor(col("c_acctbal") / 100).cast(LongType))
-        .toSpark.orderBy("c_custkey")
-    }),
-    "q_replace_column" -> ((s, dir) => {
-      DF.fromSpark(rd(s, dir, "customer"))
-        .replaceColumnFn("c_name", c => upper(c))
-        .toSpark.orderBy("c_custkey")
-    }),
-    "q_map_columns" -> ((s, dir) => {
-      DF.fromSpark(rd(s, dir, "customer"))
-        .columns(Sel.Names(Seq("c_custkey", "c_nationkey")))
-        .mapColumns(c => (c * 2).cast(LongType))
-        .toSpark.orderBy("c_custkey")
-    }),
-    "q_freq_table" -> ((s, dir) =>
-      Summary.frequencyTable(rd(s, dir, "lineitem"), "l_returnflag")),
-    "q_quantiles" -> ((s, dir) =>
-      Summary.quantileSummary(rd(s, dir, "lineitem"), "l_extendedprice")),
-    "q_drift_report" -> ((s, dir) => {
-      // corpus-version drift monitoring: the raw corpus vs a planted "new
-      // crawl" whose every third doc grew by 200 chars (a new source mix
-      // shifting the length distribution) — 16 shared integer buckets over
-      // [0, 4095], exact counts both sides (PSI/KL left to callers: ln is
-      // engine-ulp-unstable, the counts are not)
-      val cur = rd(s, dir, "documents")
-      val next = cur.select((col("n_chars") +
-        when(col("doc_id") % 3 === 0, 200L).otherwise(0L)).as("n_chars"))
-      Summary.histogramDrift(cur, next, "n_chars", 0L, 4095L, 16)
-    }),
-    "q_quantiles_approx" -> ((s, dir) =>
-      // the scale-default quantile path, oracle-pinned via its CONTRACT:
-      // the sketch values themselves are engine-specific, but their exact
-      // ranks (counted distributively against the raw column) must sit
-      // within the GK ±N/accuracy bound — deterministic output either way
-      Summary.approxQuantileBoundCheck(rd(s, dir, "lineitem"),
-        "l_extendedprice", accuracy = 10000)),
-    "q_bit_summary" -> ((s, dir) =>
-      Summary.bitSummaryTable(rd(s, dir, "lineitem"), col("l_discount") > 0.05)),
-    "q_distinct" -> ((s, dir) =>
-      rd(s, dir, "lineitem").select("l_returnflag", "l_linestatus")
-        .distinct().orderBy("l_returnflag", "l_linestatus")),
-    "q_count_distinct" -> ((s, dir) =>
-      rd(s, dir, "lineitem").agg(count_distinct(col("l_partkey")).as("n_parts"))),
-    "q_json_extract" -> ((s, dir) => {
-      // semi-structured scalar functions over the events.props JSON column
-      rd(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast(LongType).as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          count_distinct(col("k")).as("n_k"))
-        .orderBy("event_type")
-    }),
-
-    // ---- [EXT] relational (SURVEY §2.9) ----
-    "q_join_broadcast" -> ((s, dir) => {
-      val cust = rd(s, dir, "customer")
-      val nation = rd(s, dir, "nation").withColumnRenamed("n_nationkey", "c_nationkey")
-      Relational.broadcastJoin(cust, nation, Seq("c_nationkey"))
-        .groupBy("n_name")
-        .agg(count(lit(1)).as("n_cust"), sum(cents(col("c_acctbal"))).as("bal_cents"))
-        .orderBy("n_name")
-    }),
-    "q_join_agg" -> ((s, dir) => {
-      val li = rd(s, dir, "lineitem")
-      val ord = rd(s, dir, "orders").withColumnRenamed("o_orderkey", "l_orderkey")
-      Relational.innerJoin(li, ord, Seq("l_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000L)).as("rev_tenk"))
-        .orderBy("o_orderstatus")
-    }),
-    "q_join_left" -> ((s, dir) => {
-      val cust = rd(s, dir, "customer").select("c_custkey")
-      val ord = rd(s, dir, "orders")
-        .select(col("o_custkey").as("c_custkey"), col("o_orderkey"))
-      Relational.leftJoin(cust, ord, Seq("c_custkey"))
-        .groupBy("c_custkey").agg(count(col("o_orderkey")).as("n_orders"))
-        .orderBy("c_custkey")
-    }),
-    "q_join_semi" -> ((s, dir) => {
-      val cust = rd(s, dir, "customer")
-      val ord = rd(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
-      Relational.semiJoin(cust, ord, Seq("c_custkey"))
-        .select("c_custkey").orderBy("c_custkey")
-    }),
-    "q_join_anti" -> ((s, dir) => {
-      val cust = rd(s, dir, "customer")
-      val ord = rd(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
-      Relational.antiJoin(cust, ord, Seq("c_custkey"))
-        .select("c_custkey").orderBy("c_custkey")
-    }),
-    "q_group_agg" -> ((s, dir) => {
-      Relational.groupAgg(rd(s, dir, "lineitem"),
-          Seq("l_returnflag", "l_linestatus"),
-          Seq(sum("l_quantity").as("sum_qty"),
-            sum(cents(col("l_extendedprice"))).as("base_cents"),
-            (sum("l_quantity") / count(lit(1))).as("avg_qty"),
-            count(lit(1)).as("count_order")))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-    "q_rollup" -> ((s, dir) => {
-      Relational.rollupAgg(rd(s, dir, "lineitem"),
-          Seq("l_returnflag", "l_linestatus"), Seq(count(lit(1)).as("n")))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
-    }),
-    "q_grouping_sets" -> ((s, dir) => {
-      // explicit GROUPING SETS ((flag), (status), ()): per-flag totals,
-      // per-status totals, and the grand total in ONE pass (single Expand +
-      // hash aggregate) — the general form rollup/cube specialize
-      Relational.groupingSetsAgg(rd(s, dir, "lineitem"),
-          Seq(Seq("l_returnflag"), Seq("l_linestatus"), Seq.empty),
-          Seq("l_returnflag", "l_linestatus"), Seq(count(lit(1)).as("n")))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
-    }),
-    "q_cube" -> ((s, dir) => {
-      Relational.cubeAgg(rd(s, dir, "lineitem"),
-          Seq("l_returnflag", "l_linestatus"), Seq(count(lit(1)).as("n")))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
-    }),
-    "q_pivot" -> ((s, dir) => {
-      Relational.pivot(rd(s, dir, "lineitem"), "l_returnflag", "l_linestatus",
-          Seq("F", "O"), sum("l_quantity"))
-        .orderBy("l_returnflag")
-    }),
-    "q_topk" -> ((s, dir) => {
-      Relational.topK(
-          rd(s, dir, "lineitem").select("l_orderkey", "l_linenumber", "l_extendedprice"),
-          10, Seq(desc("l_extendedprice"), asc("l_orderkey"), asc("l_linenumber")))
-    }),
-    "q_top_per_group" -> ((s, dir) => {
-      Relational.topNPerGroup(rd(s, dir, "orders"), Seq("o_orderpriority"),
-          Seq(desc("o_totalprice"), asc("o_orderkey")), 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice")
-        .orderBy(asc("o_orderpriority"), desc("o_totalprice"), asc("o_orderkey"))
-    }),
-    "q_window_running" -> ((s, dir) => {
-      Relational.runningAgg(rd(s, dir, "orders"), Seq("o_custkey"),
-          Seq(col("o_orderdate"), col("o_orderkey")),
-          sum(cents(col("o_totalprice"))), "run_cents")
-        .select("o_custkey", "o_orderkey", "run_cents")
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-    "q_lag_lead" -> ((s, dir) => {
-      Relational.lagLead(rd(s, dir, "orders"), Seq("o_custkey"),
-          Seq(col("o_orderdate"), col("o_orderkey")), "o_totalprice")
-        .select("o_custkey", "o_orderkey", "o_totalprice_lag", "o_totalprice_lead")
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-    "q_moving_avg" -> ((s, dir) => {
-      // bounded ROWS frame (3 PRECEDING..CURRENT): 4-row moving average of
-      // event values per user. avg over integer cents is exact (≤4 values
-      // < 2^53 — every partial sum representable), so Spark and DuckDB
-      // agree bit-for-bit; round+cast makes the output integer cents.
-      Relational.movingAgg(rdEvents(s, dir), Seq("user_id"),
-          Seq(col("ts"), col("event_id")),
-          avg(cents(col("value"))), precedingRows = 3, "mavg")
-        .select(col("user_id"), col("event_id"),
-          unix_millis(col("ts")).as("ts_ms"),
-          round(col("mavg")).cast(LongType).as("mavg_cents"))
-        .orderBy("user_id", "ts_ms", "event_id")
-    }),
-    "q_range_frame" -> ((s, dir) => {
-      // RANGE frame over event-time millis: each event's trailing-hour
-      // value sum per user. Equal timestamps share a frame, so no tiebreak
-      // is needed for the windowed VALUE (only for the output order).
-      Relational.movingAggRange(
-          rdEvents(s, dir).withColumn("ts_ms", unix_millis(col("ts"))),
-          Seq("user_id"), col("ts_ms"),
-          sum(cents(col("value"))), precedingRange = 3600000L, "hr_cents")
-        .select("user_id", "event_id", "ts_ms", "hr_cents")
-        .orderBy("user_id", "ts_ms", "event_id")
-    }),
-    "q_union" -> ((s, dir) => {
-      Relational.unionDistinct(
-          rd(s, dir, "lineitem").select(col("l_partkey").as("k")),
-          rd(s, dir, "part").select(col("p_partkey").as("k")))
-        .orderBy("k")
-    }),
-    "q_intersect" -> ((s, dir) => {
-      Relational.intersect(
-          rd(s, dir, "customer").select(col("c_custkey").as("k")),
-          rd(s, dir, "orders").select(col("o_custkey").as("k")))
-        .orderBy("k")
-    }),
-    "q_except" -> ((s, dir) => {
-      Relational.except(
-          rd(s, dir, "customer").select(col("c_custkey").as("k")),
-          rd(s, dir, "orders").select(col("o_custkey").as("k")))
-        .orderBy("k")
-    }),
-    "q_asof_join" -> ((s, dir) => {
-      val ord = rd(s, dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-      val ev = rdEvents(s, dir)
-        .select(col("user_id").as("o_custkey"), col("ts"), col("value"))
-      Relational.asofJoin(ord, ev, Seq("o_custkey"), "o_orderdate", "ts", Seq("value"))
-        .select("o_orderkey", "o_custkey", "value")
-        .orderBy("o_orderkey")
-    }),
-
-    // ---- [EXT] dedup / text / similarity (north star) ----
-    "q_dedup_exact" -> ((s, dir) => {
-      Dedup.exactDedup(rd(s, dir, "documents"), col("text"), "doc_id")
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_dedup_fingerprint" -> ((s, dir) => {
-      val docs = rd(s, dir, "documents")
-        .withColumn("fp", TextAnalysis.fingerprint(col("text")))
-      Dedup.exactDedup(docs, col("fp"), "doc_id")
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_token_count" -> ((s, dir) => {
-      rd(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast(LongType).as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-    "q_subword_count" -> ((s, dir) => {
-      rd(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.subwordCount(col("text")).cast(LongType).as("n_subwords"))
-        .orderBy("doc_id")
-    }),
-    "q_date_filter" -> ((s, dir) => {
-      // timestamp predicate reaches the parquet scan (PushedFilters)
-      rd(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= to_timestamp(lit("1998-05-24 00:00:00")))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), sum("l_quantity").as("sum_qty"))
-        .orderBy("l_returnflag")
-    }),
-    "q_stopword_ratio" -> ((s, dir) => {
-      rd(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.stopwordRatio(col("text")).as("stop_ratio"))
-        .orderBy("doc_id")
-    }),
-    "q_quality_score" -> ((s, dir) => {
-      rd(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.qualityScore(col("text")).as("quality"))
-        .orderBy("doc_id")
-    }),
-    "q_lang_guess" -> ((s, dir) => {
-      rd(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-    }),
-    "q_top_tokens" -> ((s, dir) =>
-      TextAnalysis.topTokens(rd(s, dir, "documents"), "text", 20)),
-    "q_search_index" -> ((s, dir) =>
-      // conjunctive keyword search against the persisted inverted index:
-      // the scan reads only the two query terms' postings buckets (never
-      // the corpus), ranking in integer tf space — the text-retrieval
-      // sibling of the ANN store twins
-      graft.operators.Search.searchAll(s, searchStoreFor(s, dir),
-        Seq("scan", "join"), 20)),
-    "q_search_any" -> ((s, dir) =>
-      // disjunctive variant: one common + one rare term, so the
-      // matched-count rank tier is exercised (docs with both terms beat
-      // higher-tf docs with only one)
-      graft.operators.Search.searchAny(s, searchStoreFor(s, dir),
-        Seq("scan", "dup"), 20)),
-    "q_search_weighted" -> ((s, dir) =>
-      // integer-idf ranking: floor(N/df) weights — 'dup' (rare) dominates
-      // 'scan' (ubiquitous, weight ~1), so one 'dup' hit outranks any
-      // pile-up of 'scan' tf; exact integers keep the rank oracle-stable
-      // where ln-idf would flip marginal rows on cross-engine ulps
-      graft.operators.Search.searchWeighted(s, searchStoreFor(s, dir),
-        Seq("scan", "dup"), 20, docCountFor(s, dir))),
-    "q_bm25" -> ((s, dir) =>
-      // Okapi BM25 (k1=1.2, b=0.75, Lucene-style idf) over the same
-      // inverted-index store: postings carry dl inline and N/avgdl ride
-      // the store's build properties, so the probe reads ONLY the two
-      // query terms' buckets; per-contribution doubles are rounded to
-      // integer nanos before the per-doc sum (order-independent ranking)
-      graft.operators.Search.searchBM25(s, searchStoreFor(s, dir),
-        Seq("scan", "dup"), 20)),
-    "q_dedup_consecutive" -> ((s, dir) =>
-      // run-length event dedup: keep the first of each consecutive
-      // same-type run per user (telemetry chatter cleaning) — one lag on
-      // the per-user (ts, event_id) window
-      graft.operators.Analytics.dedupConsecutive(rdEvents(s, dir),
-          "user_id", "ts", "event_type", "event_id")
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .orderBy("event_id")),
-    "q_diff_columns" -> ((s, dir) => {
-      // column-level churn attribution over the q_dataset_diff versions,
-      // with three planted edit patterns (text %7, lang %5, n_chars %13):
-      // which columns drive the changed rows — one co-keyed join, one
-      // aggregate, stack reshape
-      val docs = rd(s, dir, "documents")
-      val cur = docs.filter(col("doc_id") % 11 =!= 5)
-      val prev = docs.filter(col("doc_id") % 10 =!= 3)
-        .withColumn("text",
-          when(col("doc_id") % 7 === 0, concat(lit("OLD "), col("text")))
-            .otherwise(col("text")))
-        .withColumn("lang",
-          when(col("doc_id") % 5 === 0, lit("xx")).otherwise(col("lang")))
-        .withColumn("n_chars",
-          when(col("doc_id") % 13 === 0, col("n_chars") + 1L)
-            .otherwise(col("n_chars")))
-      graft.sources.Sources.datasetDiffColumns(cur, prev, "doc_id",
-        Seq("lang", "n_chars", "text"))
-    }),
-    "q_calibrate" -> ((s, dir) => {
-      // cross-source score calibration: each doc's n_chars mapped to the
-      // CORPUS-WIDE type-1 quantile at its within-source percentile —
-      // fully integer (ceil as (rn·n_ref + n − 1) div n), cumulative ref
-      // counts from the bucketed global prefix sum, k→value lookup as an
-      // equi-join on the expanded rank table
-      val docs = rd(s, dir, "documents")
-      graft.operators.Profiling.quantileCalibrate(docs, "source", "doc_id",
-        col("n_chars"), docs, col("n_chars"))
-    }),
-    "q_gopher_rep" -> ((s, dir) =>
-      // the Gopher n-gram repetition rule set (top-2/3-gram char mass,
-      // duplicated-3/4-gram char mass): one tokenize pass, doc-keyed
-      // shuffles only
-      TextAnalysis.gopherRepetitionReport(rd(s, dir, "documents"),
-        "doc_id", "text")),
-    "q_hard_negatives" -> ((s, dir) =>
-      // retrieval-training hard negatives: the BM25 top-20 for the query
-      // EXCLUDING the labeled positives (the src0 docs) — the anti-join
-      // runs BEFORE the top-k cut so positives free slots for the
-      // next-best negatives; positives broadcast, probe stays
-      // postings-bucket-pruned
-      graft.operators.Search.searchBM25HardNegatives(s,
-        searchStoreFor(s, dir), Seq("scan", "dup"),
-        rd(s, dir, "documents").filter(col("source") === "src0"),
-        "doc_id", k = 20)),
-    "q_winsorized" -> ((s, dir) =>
-      // robust per-flag price stats: clamp at the group's [p01, p99]
-      // ORDER STATISTICS (type-1 — integer-exact at any p, no
-      // interpolation to disagree about), then exact integer sum + one
-      // rounded mean division
-      graft.operators.Profiling.winsorizedAgg(rd(s, dir, "lineitem"),
-        "l_returnflag", expr("cast(round(l_extendedprice * 100) as bigint)"),
-        pLo = 0.01, pHi = 0.99)),
-    "q_winsorized_approx" -> ((s, dir) =>
-      // the winsorized SCALE path's contract: per-group sketch cuts at
-      // p01/p99 must satisfy the per-group GK rank bound (exact ranks
-      // counted distributively, oracle pins lo_ok/hi_ok TRUE). The
-      // production twin (winsorizedAggApprox) replaces the exact form's
-      // per-group sort WINDOW with one partially-merged sketch aggregate
-      // — no full-group sort task to die first on a skewed 100 TB key
-      graft.operators.Profiling.winsorizedAggApproxChecked(
-        rd(s, dir, "lineitem"), "l_returnflag",
-        expr("cast(round(l_extendedprice * 100) as bigint)"),
-        pLo = 0.01, pHi = 0.99)),
-    "q_hybrid_search" -> ((s, dir) =>
-      // two-tower retrieval fusion: BM25 text leg + cosine vector leg
-      // (query = the corpus's own vector 0, broadcast in-plan), fused by
-      // Reciprocal Rank Fusion 1/(60+rank) — integer ranks from both
-      // already-oracle-pinned orderings, so the fused doubles are
-      // engine-identical without rounding
-      graft.operators.Search.hybridSearchRRF(s, searchStoreFor(s, dir),
-        Seq("scan", "dup"), rd(s, dir, "embeddings"), "vec_id", "embedding",
-        queryId = 0L, k = 20)),
-    "q_search_phrase" -> ((s, dir) =>
-      // exact-phrase probe against the POSITIONAL index: consecutive
-      // positions via an array-intersect fold over shifted posting lists —
-      // a capability the tf index cannot express (bag-of-words conjunction
-      // would also match 'column ... stream' reversals)
-      graft.operators.Search.searchPhrase(s, posStoreFor(s, dir),
-        Seq("stream", "column"), 20)),
-    "q_heavy_hitters" -> ((s, dir) => {
-      // EXACT heavy hitters (freq ≥ 0.5% of the corpus token stream)
-      // without a full-vocabulary groupBy: Misra-Gries candidate sketch +
-      // exact confirming count over candidates only — at 100 TB the shuffle
-      // carries candidate-token rows, never the whole Zipf tail
-      val toks = rd(s, dir, "documents")
-        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
-        .filter(length(col("token")) > 0)
-      Relational.heavyHitters(toks, "token", support = 0.005)
-        .orderBy("item")
-    }),
-    "q_zorder" -> ((s, dir) => {
-      // Z-order (Morton) clustering value over (o_custkey, order day) —
-      // pins the quantize + bit-interleave math the layout writer
-      // (Layout.writeZOrdered) clusters 100 TB scans by; the physical
-      // file-rectangle behavior itself is plan/layout-tested in
-      // LayoutSpec (not SQL-expressible). Bounds are memoized per sf dir
-      // and embedded in the generated oracle as literals.
-      val (dc, dd) = zorderBoundsFor(s, dir)
-      rd(s, dir, "orders").select(col("o_orderkey"),
-          Layout.quantize(col("o_custkey"), dc).as("qc"),
-          Layout.quantize(zorderDay, dd).as("qd"),
-          Layout.zValue(col("o_custkey"), zorderDay, dc, dd).as("zval"))
-        .orderBy("o_orderkey")
-    }),
-    "q_salted_join" -> ((s, dir) => {
-      // skew-salted join is RESULT-PRESERVING (salt splits a hot key across
-      // reducers; the dim side replicates per salt) so the oracle is the
-      // plain join — this verifies the salting rewrite end-to-end
-      val ord = rd(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      val cust = rd(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-      Relational.saltedJoin(ord, cust, "o_custkey", buckets = 8,
-          saltSource = col("o_orderkey"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n"),
-          (sum(round(col("o_totalprice") * 100).cast(LongType)) / 100.0).as("sum_price"))
-        .orderBy("c_mktsegment")
-    }),
-    "q_topk_agg" -> ((s, dir) => {
-      // bounded top-k AGGREGATE: map-side partial top-k ships <=k rows per
-      // group per partition, vs the window row_number form (q_top_per_group)
-      // that sorts and shuffles every row — the 100 TB shape for small k
-      val topk = udaf(graft.functions.Aggregators.TopK(5))
-      // fan the narrow projection before the UDAF partial pass (r22, the
-      // §2.5 single-row-group remedy at the r21 ≳1 s work bar): the
-      // ObjectHashAggregate partial ran as a 3-task scan-rooted stage with
-      // a 1.09 s straggler — per-row UDAF invocation is the cost, and a
-      // partial top-k is partitioning-independent (each task ships ≤ k
-      // rows per group regardless of how rows are spread)
-      graft.operators.Fan.out(rd(s, dir, "lineitem")
-        .select(col("l_returnflag"),
-          col("l_extendedprice").cast("double").as("price"),
-          (col("l_orderkey") * 100 + col("l_linenumber")).cast(LongType).as("lid")))
-        .groupBy("l_returnflag")
-        .agg(topk(col("price"), col("lid")).as("tk"))
-        .select(col("l_returnflag"), explode(col("tk")).as("e"))
-        .select(col("l_returnflag"), col("e._1").as("price"), col("e._2").as("lid"))
-        .orderBy(asc("l_returnflag"), desc("price"), asc("lid"))
-    }),
-    "q_hash_sample" -> ((s, dir) => {
-      // deterministic content-hash sampling, stratified by language:
-      // reproducible regardless of partitioning/cluster topology (df.sample's
-      // seeded RNG is not), and md5-replicable by the oracle
-      Sampling.stratifiedHashSample(rd(s, dir, "documents"), col("doc_id"),
-          col("lang"), Map("en" -> 0.5), default = 0.2)
-        .select("doc_id", "lang").orderBy("doc_id")
-    }),
-    "q_repetition" -> ((s, dir) => {
-      rd(s, dir, "documents").select(col("doc_id"),
-          TextAnalysis.repetitionRatio(col("text"), 2).as("rep_ratio"))
-        .orderBy("doc_id")
-    }),
-    "q_tfidf" -> ((s, dir) => {
-      TextAnalysis.tfIdfTopTerms(rd(s, dir, "documents"), "doc_id", "text", 5)
-        .orderBy(asc("doc_id"), desc("tfidf"), asc("term"))
-    }),
-    "q_ngram_jaccard" -> ((s, dir) => {
-      // scale-safe blocking: MinHash-LSH candidates (md5-portable, 3-gram
-      // shingles so the S-curve approximates the verified shingle-set
-      // jaccard) + exact-jaccard verification on candidates only. Attribute
-      // blocks (lang, length band) are O(block²) — a single (en, band-k)
-      // block is O(corpus) at 100 TB; LSH bucket size is set by band-key
-      // collisions. (Unigram jaccard is useless on this corpus: shared vocab
-      // puts 73% of ALL pairs above 0.5 — 3-gram shingles discriminate.)
-      // numHashes/bands from the corpus-size profile: legacy (16, 8) at
-      // the test SFs (oracle SQL matches), rows-per-band grows past 8k docs
-      val (nh, bd) = jaccardLshParams(docCountFor(s, dir))
-      Dedup.ngramJaccardLsh(rd(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.5, numHashes = nh, bands = bd, ngram = 3,
-          portable = true)
-        .orderBy("id_a", "id_b")
-    }),
-    "q_cosine_topk" -> ((s, dir) => {
-      val emb = rd(s, dir, "embeddings")
-      Similarity.topKPerQuery(emb, emb.filter(col("vec_id") <= 3),
-          "vec_id", "vec_id", "embedding", 5)
-        .orderBy(asc("query_id"), desc("cos"), asc("neighbor_id"))
-    }),
-    "q_ann_int8" -> ((s, dir) => {
-      // INT8-quantized brute-force ANN — the 100 TB storage/compute shape
-      // (4x smaller scans than float32, integer multiply-adds). Quantized
-      // values and the dot product are exact integers, so unlike float
-      // cosine accumulation the top-k is oracle-replicable without
-      // rounding tricks; selection ranks by qdot·scale, display order is
-      // vec_id (both engines re-derive the quantized query from the SAME
-      // stored floats of vec 1)
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.int8TopK(emb.filter(col("vec_id") =!= 1), "vec_id",
-          "embedding", q, 10)
-        .orderBy("vec_id")
-    }),
-    "q_mmr_select" -> ((s, dir) => {
-      // diversity-aware selection: greedy MMR (λ=0.7) of 10 vectors for
-      // query vec 1 — relevance-only top-k returns near-duplicates of the
-      // best hit, MMR trades relevance for coverage. k driver-bounded
-      // argmax rounds over one scored checkpoint; oracle = selection-order
-      // literals from the Spark-independent plain-Scala greedy
-      // (IndependentOracles.mmrOrder, the sketchOracles pattern)
-      lastMmrDir = Some(dir)
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.mmrSelect(emb.filter(col("vec_id") =!= 1), "vec_id",
-          "embedding", q, k = 10, lambda = 0.7)
-        .orderBy("pos")
-    }),
-    "q_mmr_batched" -> ((s, dir) => {
-      // the batched MMR path for k in the HUNDREDS: top-m per round
-      // against a MATERIALIZED running max-sim column (per-round plan size
-      // O(m) however many are already selected; ⌈k/m⌉ driver round-trips
-      // vs greedy's k). m=3 so the batched relaxation (picks 2..3 of a
-      // round don't see pick 1) is actually exercised — the oracle is the
-      // Spark-independent batched recompute, and batched(m=1) ≡ greedy is
-      // pinned separately in OperatorsSpec
-      lastMmrDir = Some(dir)
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.mmrSelectBatched(emb.filter(col("vec_id") =!= 1), "vec_id",
-          "embedding", q, k = 10, lambda = 0.7, m = 3)
-        .orderBy("pos")
-    }),
-    "q_mmr_pooled" -> ((s, dir) => {
-      // the PRODUCTION MMR composition BASELINE documents but round 19
-      // never registered: relevance top-200 shortlist FIRST, then batched
-      // MMR over the pool — per-round rescans become pool-sized (the
-      // corpus is touched once, by the shortlist pass), where q_mmr_batched
-      // rescans the whole corpus per round (10.5x at 100x data). Oracle =
-      // Spark-independent shortlist + batched recompute over the pool
-      lastMmrDir = Some(dir)
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.mmrSelectPooled(emb.filter(col("vec_id") =!= 1), "vec_id",
-          "embedding", q, k = 10, lambda = 0.7, m = 3, poolSize = 200)
-        .orderBy("pos")
-    }),
-    "q_ann_int8_store" -> ((s, dir) => {
-      // the STORE twin: identical results by construction (quantization is
-      // deterministic and happened at store-write time), but the timed
-      // scan reads pre-quantized int8 bytes + one scale per vector — the
-      // shape a 100 TB deployment stores, 4x fewer vector bytes than
-      // float32 before parquet encodings
-      val q = rd(s, dir, "embeddings").filter(col("vec_id") === 1)
-        .select("embedding").head().getSeq[Float](0).map(_.toDouble)
-      Similarity.int8TopKAgainstStore(s, int8StoreFor(s, dir), "vec_id",
-          q, 10, extraFilter = col("vec_id") =!= 1)
-        .orderBy("vec_id")
-    }),
-    "q_cosine_expr" -> ((s, dir) => {
-      // same query through the native codegen'd Catalyst expression
-      // (CosineSimilarityExpr) — results are bit-identical to the
-      // functions-based path, so it shares q_cosine_topk's oracle
-      GraftExtensions.register(s)
-      val emb = rd(s, dir, "embeddings")
-      val joined = emb.as("c").join(
-        broadcast(emb.filter(col("vec_id") <= 3)
-          .select(col("vec_id").as("query_id"), col("embedding").as("__qv"))),
-        col("c.vec_id") =!= col("query_id"))
-      val scored = joined.select(col("query_id"),
-        col("c.vec_id").as("neighbor_id"),
-        round(call_function("graft_cosine", col("c.embedding"), col("__qv")), 6).as("cos"))
-      Relational.topNPerGroup(scored, Seq("query_id"),
-          Seq(desc("cos"), asc("neighbor_id")), 5)
-        .orderBy(asc("query_id"), desc("cos"), asc("neighbor_id"))
-    }),
-    // xxhash64/HLL sketches are not DuckDB-derivable from the raw tables —
-    // their oracles are instead generated at Verify time by the
-    // Spark-INDEPENDENT pipeline recompute in
-    // [[graft.verify.IndependentOracles]] (public-spec xxHash64, plain-Scala
-    // minhash/simhash/HLL++), with expected survivor ids / the expected
-    // estimate embedded as literals — the fitted-centroid technique the
-    // q_ivf_*/q_semdedup oracles use:
-    "q_minhash_dedup" -> ((s, dir) => {
-      // 32 hashes / 8 bands: at threshold 0.5 the LSH S-curve is nearly
-      // identical to 64/16 (band width 4 either way) at half the signature
-      // and shuffle volume
-      lastSketchDir = Some(dir)
-      Dedup.minhashDedup(rd(s, dir, "documents"), "doc_id", "text",
-          MinhashDedupThreshold, numHashes = MinhashDedupHashes,
-          bands = MinhashDedupBands)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_minhash_oracle" -> ((s, dir) => {
-      // md5-based MinHash-LSH variant whose ENTIRE pipeline (shingling,
-      // affine min-hash, banding, candidate join, jaccard estimate,
-      // dedup policy) is replicated exactly in the DuckDB oracle
-      Dedup.minhashDedupPortable(rd(s, dir, "documents"), "doc_id", "text", 0.5)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_dedup_incremental" -> ((s, dir) => {
-      // incremental dedup against a PERSISTED signature store — the
-      // production deployment shape: source src0 is the already-kept
-      // corpus (seeds the bucketed store tables), every other source is
-      // the new crawl batch deduped against it. md5-portable so the
-      // oracle replicates store sigs + banding + cross-store candidates
-      // + est-jaccard threshold + survivor anti-join exactly.
-      val docs = rd(s, dir, "documents")
-      Dedup.writeMinhashStore(
-        Dedup.minhashSigs(docs.filter(col("source") === "src0"),
-          "doc_id", "text", numHashes = 16, portable = true),
-        "doc_id", "graft_incr_store", bands = 4, numHashes = 16,
-        nBuckets = 4, portable = true)
-      Dedup.minhashDedupAgainst(
-          docs.filter(col("source") =!= "src0"), "doc_id", "text",
-          "graft_incr_store", threshold = 0.5, numHashes = 16, bands = 4,
-          updateStore = false, portable = true)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_dedup_incr_exact" -> ((s, dir) => {
-      // the exact-fingerprint sibling of q_dedup_incremental: the store
-      // holds DISTINCT normalized-content fingerprints of the kept corpus
-      // (src0); new docs whose content is already stored are dropped via
-      // an anti-join on the store's bucket column. The raw corpus has ZERO
-      // exact cross-source duplicates, so the new batch additionally
-      // carries every src0 doc re-keyed (+1e6) — planted duplicates that
-      // MUST all drop (the q_redact plant-your-own-positives pattern)
-      val docs = rd(s, dir, "documents")
-      val existing = docs.filter(col("source") === "src0")
-      Dedup.writeFingerprintStore(existing, "text", "graft_fp_store",
-        nBuckets = 4)
-      val newBatch = docs.filter(col("source") =!= "src0")
-        .select(col("doc_id"), col("text"))
-        .unionAll(existing.select(
-          (col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      Dedup.exactDedupAgainst(newBatch, "text", "graft_fp_store",
-          updateStore = false)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_dedup_incr_bloom" -> ((s, dir) => {
-      // bloom-prefiltered twin of q_dedup_incr_exact (same plant, same
-      // oracle): the store is sketched once, only might-contain positives
-      // touch the bucketed table — no false negatives, so the result is
-      // identical and the SAME oracle verifies the whole probe path
-      val docs = rd(s, dir, "documents")
-      val existing = docs.filter(col("source") === "src0")
-      Dedup.writeFingerprintStore(existing, "text", "graft_fp_store",
-        nBuckets = 4)
-      val newBatch = docs.filter(col("source") =!= "src0")
-        .select(col("doc_id"), col("text"))
-        .unionAll(existing.select(
-          (col("doc_id") + 1000000L).as("doc_id"), col("text")))
-      Dedup.exactDedupAgainstBloom(newBatch, "text", "graft_fp_store",
-          expectedItems = 10000L, numBits = 1L << 17)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_dedup_incr_simhash" -> ((s, dir) => {
-      // the SIMHASH member of the store family: catches token-set-identical
-      // near-copies the exact fingerprint store misses. The plant makes
-      // that distinction REAL: every src0 doc re-keyed with its tokens
-      // REVERSED — same distinct token set (same simhash, dropped here)
-      // but a different normalized byte sequence (the fingerprint store
-      // would keep it)
-      val docs = rd(s, dir, "documents")
-      val existing = docs.filter(col("source") === "src0")
-      Dedup.writeSimhashStore(existing, "doc_id", "text", "graft_sh_store",
-        portable = true, nBuckets = 4)
-      val newBatch = docs.filter(col("source") =!= "src0")
-        .select(col("doc_id"), col("text"))
-        .unionAll(existing.select(
-          (col("doc_id") + 1000000L).as("doc_id"),
-          array_join(reverse(split(col("text"), " ")), " ").as("text")))
-      Dedup.simhashDedupAgainst(newBatch, "doc_id", "text", "graft_sh_store",
-          portable = true, updateStore = false)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_dedup_incr_embedding" -> ((s, dir) => {
-      // the EMBEDDING member of the store family (semantic space): even
-      // vec_ids seed the banded-hyperplane store, odd ids are the new
-      // batch — plus every stored vector re-keyed (+1e6) as a planted
-      // exact near-dup (cosine 1.0) that MUST drop through the banded
-      // candidate + exact-cosine verify path
-      val emb = rd(s, dir, "embeddings")
-      val existing = emb.filter(col("vec_id") % 2 === 0)
-      Dedup.writeEmbeddingStore(existing, "vec_id", "embedding",
-        "graft_emb_store", dim = 64, bandBits = 12, bands = 5, nBuckets = 4)
-      val newBatch = emb.filter(col("vec_id") % 2 === 1)
-        .select(col("vec_id"), col("embedding"))
-        .unionAll(existing.select((col("vec_id") + 1000000L).as("vec_id"),
-          col("embedding")))
-      Dedup.embeddingNearDupAgainst(newBatch, "vec_id", "embedding",
-          "graft_emb_store", threshold = 0.35, dim = 64, bandBits = 12,
-          bands = 5, updateStore = false)
-        .select("vec_id").orderBy("vec_id")
-    }),
-    "q_cluster_dedup" -> ((s, dir) => {
-      // transitive connected-components dedup (md5-portable candidates) —
-      // the DuckDB oracle replicates the components as a recursive CTE
-      Dedup.clusterDedup(rd(s, dir, "documents"), "doc_id", "text", 0.5,
-          numHashes = 16, bands = 4, portable = true)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_cluster_keep_best" -> ((s, dir) => {
-      // same candidate chain and components as q_cluster_dedup, different
-      // survivor policy: each near-dup component keeps its LONGEST member
-      // (n_chars, ties toward the smaller doc_id) instead of its minimum
-      // id — the policy production dedup wants (clusters mix a complete
-      // original with truncated copies; min-id keeps an arbitrary one)
-      val docs = rd(s, dir, "documents")
-      Dedup.clusterDedupFromPairsKeepBest(docs, "doc_id", col("n_chars"),
-          portablePairs(docs))
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_cluster_sizes" -> ((s, dir) => {
-      // the rollout diagnostic over the same components: how many clusters
-      // of each size (singletons included) — a fat tail here means a
-      // too-loose threshold is gluing the corpus together, visible BEFORE
-      // a dedup pass drops the difference
-      val docs = rd(s, dir, "documents")
-      Dedup.clusterSizeHistogramFromPairs(docs, "doc_id", portablePairs(docs))
-    }),
-    "q_golden_record" -> ((s, dir) => {
-      // entity-resolution survivorship over the same components: one
-      // canonical row per cluster, each field independently from the
-      // longest member that has it (per-field max-struct aggregate, no
-      // per-component sort); singletons pass through as themselves
-      val docs = rd(s, dir, "documents")
-      Dedup.goldenRecord(docs, "doc_id", portablePairs(docs), col("n_chars"),
-        Seq("lang", "source"))
-    }),
-    "q_split_leakage" -> ((s, dir) => {
-      // eval-integrity audit: near-dup pairs (same md5 candidate chain)
-      // that CROSS the hash-interval train/val/test assignment — silent
-      // eval contamination external decontamination never sees; split pair
-      // normalized lexicographically, cost ∝ |pairs|
-      val docs = rd(s, dir, "documents")
-      Dedup.splitLeakageFromPairs(portablePairs(docs),
-        Sampling.assignSplit(docs.select(col("doc_id")), col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)),
-        "doc_id", "split")
-    }),
-    "q_simhash_dedup" -> ((s, dir) => {
-      lastSketchDir = Some(dir)
-      Dedup.simhashDedup(rd(s, dir, "documents"), "doc_id", "text")
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_simhash_oracle" -> ((s, dir) => {
-      // md5-based 60-bit SimHash — full pipeline replicated in the oracle
-      Dedup.simhashDedup(rd(s, dir, "documents"), "doc_id", "text",
-          portable = true)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_simhash_hamming" -> ((s, dir) => {
-      // Manku-style banded hamming ≤ 3 near-dup search on the portable
-      // 60-bit signatures — upgrades simhash from exact-signature matching
-      // to a real near-dup operator; the oracle replicates banding,
-      // bucket-local candidates, and the bit_count verify
-      Dedup.simhashHammingPairs(rd(s, dir, "documents"), "doc_id", "text",
-          maxHamming = 3, portable = true)
-        .orderBy("id_a", "id_b")
-    }),
-    "q_simhash_hamming_scaled" -> ((s, dir) => {
-      // the PRODUCTION profile of q_simhash_hamming: signature width
-      // 4·simhashBandBits(corpus) — the legacy 60-bit degenerate at
-      // sf0.01's 500 docs, the WIDE two-long 64-bit path at sf0.1's 5000
-      // (so the straddling-band slicing is itself oracle-pinned), 84 bits
-      // at the 30× corpus where the fixed 15-bit bands measured 15.1×.
-      // Oracle SQL is generated with the SAME derived width.
-      lastSimhashScaledDir = Some(dir)
-      val w = simhashBandBits(docCountFor(s, dir))
-      Dedup.simhashHammingPairsWide(rd(s, dir, "documents"), "doc_id", "text",
-          nBits = 4 * w, maxHamming = 3, portable = true)
-        .orderBy("id_a", "id_b")
-    }),
-    "q_embedding_neardup_oracle" -> ((s, dir) => {
-      // blocked on (label, id-allocation shard) so the pair set is
-      // oracle-expressible with DuckDB's list arithmetic AND the blocking
-      // key's cardinality GROWS with the corpus: ids are allocated in 10M
-      // ranges per generation batch (TESTDATA/GenScale contract), so shard
-      // count scales with the data and block sizes stay bounded — the
-      // label alone is constant-cardinality, quadratic at scale (the
-      // round-10 12.6×-at-10× finding). maxBlockRows enforces the bound
-      // in-plan: an oversized block fails loudly, never burns quadratic.
-      Dedup.embeddingNearDupPairs(rd(s, dir, "embeddings"), "vec_id",
-          "embedding", 0.35,
-          Seq(col("label"), expr("vec_id div 10000000")),
-          maxBlockRows = 1000)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-        .orderBy("id_a", "id_b")
-    }),
-    "q_lsh_ann" -> ((s, dir) => {
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      // 16-bit buckets (65536 — grows the right way at 100×) + 3-flip
-      // multi-probe: probes 697/65536 ≈ 1.1% of signature space regardless
-      // of corpus size, vs the old 8-bit hamming-0 probe (1/256 of the
-      // corpus per bucket AND poor recall)
-      Similarity.lshTopK(emb.filter(col("vec_id") =!= 1), "vec_id", "embedding",
-        q, 10, dim = 64, nBits = 16, maxFlips = 3)
-    }),
-    "q_lsh_store_ann" -> ((s, dir) => {
-      // the PERSISTED-INDEX twin of q_lsh_ann: identical probe set and
-      // rerank (same static plane-literal oracle), but the scan reads the
-      // PRE-SIGNED signature store — no per-row dim·nBits re-signing per
-      // query, sig IN pushdown over sig-sorted bucketed files (bucket
-      // pruning engages at low maxFlips; row-group stats always)
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.lshTopKAgainstStore(s, lshStoreFor(s, dir), "vec_id", q,
-        10, dim = 64, nBits = 16, maxFlips = 3,
-        extraFilter = col("vec_id") =!= 1)
-    }),
-    "q_approx_distinct" -> ((s, dir) => {
-      // l_orderkey (14.7k/147k distinct at the verify SFs) keeps the p=9
-      // sketch in HLL++'s raw-estimate regime (≥ 5m = 2560) at BOTH SFs, so
-      // the Spark-independent estimator in [[graft.verify.IndependentOracles]]
-      // can pin the exact expected value without replicating the 200-point
-      // bias-interpolation tables (l_partkey's 2000 distinct at sf0.01 sits
-      // in the bias regime). Same operator, same sketch parameters.
-      lastSketchDir = Some(dir)
-      rd(s, dir, "lineitem")
-        .agg(approx_count_distinct(col("l_orderkey")).as("n_approx"))
-    }),
-    "q_lsh_recall" -> ((s, dir) => {
-      // recall@10 of the multi-probe LSH ANN vs exact brute force, as ONE
-      // oracle-checkable row: the DuckDB oracle replicates the hyperplane
-      // signatures bit-for-bit (the seed-42 plane weights are embedded in the
-      // generated SQL as exact double literals), computes the same probed
-      // set (hamming ≤ maxFlips), the same rounded-cosine rerank, and the
-      // exact top-10 — so the ANN quality metric itself is oracle-pinned,
-      // not just ScalaTest-asserted (round-3 verdict item #4).
-      // nBits is sized to log₂(corpus) per the lshTopK scaladoc — the
-      // q_lsh_ann production setting (16 bits) is for the 100× target, where
-      // these fixture corpora (500-2k rows) would leave the probed buckets
-      // nearly empty. The fixture also has NO planted neighbor structure
-      // (true top-10 sits at cosine ~0.4-0.5), which bounds achievable
-      // sub-linear recall — the metric is the honest measurement of that.
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      val corpus = emb.filter(col("vec_id") =!= 1)
-      val lsh = Similarity.lshTopK(corpus, "vec_id", "embedding", q, 10,
-        dim = 64, nBits = LshRecallBits, maxFlips = LshRecallFlips).select("vec_id")
-      val bf = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, 10)
-        .select("vec_id")
-      lsh.join(bf, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_matched"))
-        .select(col("n_matched"),
-          round(col("n_matched") / 10.0, 6).as("recall_at_10"))
-    }),
-    "q_lsh_recall_planted" -> ((s, dir) => {
-      // recall@10 AT THE PRODUCTION ANN PARAMETERS (nBits=16, maxFlips=3 —
-      // the q_lsh_ann setting): the fixture corpora have no natural
-      // neighbor structure (max cosine ~0.48), so q_lsh_recall's honest
-      // measurement can't validate the production configuration itself
-      // (round-4 verdict item #3). This query PLANTS 10 known near
-      // neighbors — the query vector plus seeded deterministic gaussian
-      // perturbations spanning cosine ~0.93-0.999 (the near-dup regime the
-      // config targets) — so exact brute-force top-10 is the planted set
-      // and recall@10 measures how much of it the 1.1%-of-signature-space
-      // multi-probe recovers. Fully oracle-pinned: the perturbation
-      // literals are exact doubles in the generated SQL, and both engines
-      // derive the planted vectors from the same data row with one IEEE
-      // addition per element.
-      import s.implicits._
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      val planted = PlantedPerturbations.map { case (id, w) =>
-        (id, q.zip(w).map { case (a, b) => a + b })
-      }
-      val corpus = emb.filter(col("vec_id") =!= 1)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .unionAll(planted.toDF("vec_id", "v"))
-      val lsh = Similarity.lshTopK(corpus, "vec_id", "v", q, 10,
-        dim = 64, nBits = 16, maxFlips = 3).select("vec_id")
-      val bf = Similarity.bruteForceTopK(corpus, "vec_id", "v", q, 10)
-        .select("vec_id")
-      lsh.join(bf, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_matched"))
-        .select(col("n_matched"),
-          round(col("n_matched") / 10.0, 6).as("recall_at_10"))
-    }),
-    "q_ivf_ann" -> ((s, dir) => {
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      // index build (sampled driver-local fit) is the offline step — memoized
-      // per sf dir so only the first call pays it; assignment stays a pure
-      // map and the probe is the only per-query work. FULL oracle: the
-      // fitted centroids are deterministic driver doubles embedded as exact
-      // literals in the generated SQL (same technique as q_lsh_recall's
-      // plane weights), so DuckDB replicates argmin assignment, the nprobe
-      // probe set, and the rounded-cosine rerank bit-for-bit.
-      val model = ivfModelFor(s, dir)
-      Similarity.ivfTopK(
-        Similarity.ivfAssign(emb, "embedding", model).filter(col("vec_id") =!= 1),
-        model, "vec_id", "embedding", q, topK = 10, nprobe = 4)
-    }),
-    "q_ivf_store_ann" -> ((s, dir) => {
-      // the PERSISTED-INDEX twin of q_ivf_ann: same model, probes, and
-      // rerank, but the probe reads the cell-PARTITIONED store, so the
-      // cluster membership test is partition PRUNING — the scan touches
-      // ~nprobe/k of the bytes instead of assigning every row per query,
-      // the 100 TB index shape. Same centroid-literal oracle as q_ivf_ann
-      // by construction (results identical; the plan is the difference,
-      // pinned in SkewAndIvfSpec).
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      val model = ivfModelFor(s, dir)
-      Similarity.ivfTopKAgainstStore(s, ivfStoreFor(s, dir), model, "vec_id",
-        q, topK = 10, nprobe = 4, extraFilter = col("vec_id") =!= 1)
-    }),
-    "q_ivf_recall" -> ((s, dir) => {
-      // recall@10 of the IVF probe path vs exact brute force, as ONE
-      // oracle-checkable row (the IVF analog of q_lsh_recall): centroid
-      // literals make the whole metric oracle-pinned, closing the last
-      // ANN-quality gap the round-4 verdict flagged (IVF was the only LLM
-      // component without an oracle).
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      val model = ivfModelFor(s, dir)
-      val corpus = emb.filter(col("vec_id") =!= 1)
-      val ivf = Similarity.ivfTopK(
-        Similarity.ivfAssign(emb, "embedding", model).filter(col("vec_id") =!= 1),
-        model, "vec_id", "embedding", q, topK = 10, nprobe = 4).select("vec_id")
-      val bf = Similarity.bruteForceTopK(corpus, "vec_id", "embedding", q, 10)
-        .select("vec_id")
-      ivf.join(bf, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_matched"))
-        .select(col("n_matched"),
-          round(col("n_matched") / 10.0, 6).as("recall_at_10"))
-    }),
-    "q_kmeans_refine" -> ((s, dir) => {
-      // ONE full-corpus Lloyd pass from the memoized sampled fit — the
-      // 100 TB centroid-quality pattern (fit on a bounded sample, refine
-      // distributed): assignment + per-dim means run as one codegen argmin
-      // projection + one hash aggregate, k×dim rows reach the driver. The
-      // integer-micros offset-floor mean makes the refined centroids
-      // engine-exact, so the generated oracle replays the whole iteration
-      // (assignment, sums, floor mean, empty-cluster carry) in DuckDB
-      val refined = Similarity.kmeansRefine(rd(s, dir, "embeddings"),
-        "embedding", ivfModelFor(s, dir), iters = 1)
-      import s.implicits._
-      refined.centers.zipWithIndex.flatMap { case (c, i) =>
-        c.zipWithIndex.map { case (w, j) => (i.toLong, j.toLong, w) }
-      }.toSeq.toDF("cluster", "pos", "coord").orderBy("cluster", "pos")
-    }),
-    "q_pq_ann" -> ((s, dir) => {
-      // PQ-ADC top-10 computed on the fly (encode + table-lookup in one
-      // scan — the full-scan reference twin; the store variant is the
-      // production shape). Codebook fit is the memoized offline step;
-      // ranking is an exact-integer nanos sum of m=8 LUT lookups per row,
-      // so the generated codebook-literal oracle replicates encode, LUT,
-      // and ranking bit-for-bit
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.pqAdcTopK(emb.filter(col("vec_id") =!= 1), "vec_id",
-        "embedding", q, pqModelFor(s, dir), k = 10)
-    }),
-    "q_pq_store_ann" -> ((s, dir) => {
-      // the PERSISTED-CODES twin: the scan reads m=8 bytes per vector
-      // (32× under float32) and never touches floats or re-encodes —
-      // identical result by construction (encoding happened at write
-      // time under the fingerprint-checked model); same oracle
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      val model = pqModelFor(s, dir)
-      Similarity.pqAdcTopKAgainstStore(s, pqStoreFor(s, dir), "vec_id", q,
-        model, k = 10, extraFilter = col("vec_id") =!= 1)
-    }),
-    "q_ivfpq_ann" -> ((s, dir) => {
-      // the COMPOSITE index probe (FAISS IVFADC): partition pruning reads
-      // only the nprobe probed cells' FILES, and each surviving row is
-      // m=8 code bytes — the two savings multiply (~nprobe/k of the
-      // corpus × 1/32 of the bytes). Cell ranking is driver-side centroid
-      // math; ADC is the exact-integer LUT sum; both models fingerprinted
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      val ivfM = ivfModelFor(s, dir)
-      val pqM = pqModelFor(s, dir)
-      Similarity.ivfPqTopK(s, ivfPqStoreFor(s, dir), ivfM, pqM, "vec_id",
-        q, k = 10, nprobe = 4, extraFilter = col("vec_id") =!= 1)
-    }),
-    "q_pq_rerank" -> ((s, dir) => {
-      // the production IVFADC+R shape: exact-integer ADC ranks the code
-      // scan, top-50 candidate ids fetch their float rows (broadcast id
-      // join), exact squared-L2 re-rank emits the top-10 — recall
-      // recovers to ~1.0 from pure ADC's 0.3 on these structure-free
-      // vectors at the cost of 50 float-row fetches per query
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      Similarity.pqAdcRerankTopK(emb.filter(col("vec_id") =!= 1), "vec_id",
-        "embedding", q, pqModelFor(s, dir), k = 10, rerank = 50)
-    }),
-    "q_pq_recall" -> ((s, dir) => {
-      // recall@10 of PQ-ADC vs exact squared-L2 brute force, one
-      // oracle-checkable row (the q_ivf_recall analog for the
-      // compressed-domain path) — quantization error is the metric here,
-      // determinism of the approximation is what the oracle pins
-      val emb = rd(s, dir, "embeddings")
-      val q = emb.filter(col("vec_id") === 1).select("embedding")
-        .head().getSeq[Float](0).map(_.toDouble)
-      val corpus = emb.filter(col("vec_id") =!= 1)
-      val pq = Similarity.pqAdcTopK(corpus, "vec_id", "embedding", q,
-        pqModelFor(s, dir), k = 10).select("vec_id")
-      val bf = Similarity.bruteL2TopK(corpus, "vec_id", "embedding", q, 10)
-      pq.join(bf, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_matched"))
-        .select(col("n_matched"),
-          round(col("n_matched") / 10.0, 6).as("recall_at_10"))
-    }),
-    "q_embedding_neardup" -> ((s, dir) => {
-      // banded-LSH blocking: 5 bands × 12-bit signatures (4096 buckets per
-      // band — bandBits grows with log₂(corpus), bands hold recall). The old
-      // single 4-bit table was 16 global buckets: a 1/16 reduction of an
-      // O(n²) join is still O(n²) at 100×. The synthetic embeddings contain
-      // no true near-dups (max pairwise cosine ≈ 0.51), so the threshold
-      // surfaces the genuinely most-similar bucket-local pairs.
-      val emb = rd(s, dir, "embeddings")
-      Dedup.embeddingNearDupLsh(emb, "vec_id", "embedding", 0.35,
-          dim = 64, bandBits = 12, bands = 5)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-        .orderBy("id_a", "id_b")
-    }),
-    "q_embedding_neardup_scaled" -> ((s, dir) => {
-      // the PRODUCTION profile of q_embedding_neardup: bandBits derived
-      // from the corpus size (the containmentFreqCap/jaccardLshParams
-      // pattern — 12 at the fixture SFs, growing with log₂(corpus)), bands
-      // at the 4-band production default; the oracle SQL is generated with
-      // the SAME derived bandBits, so the scaled path is oracle-pinned
-      // rather than scaladoc guidance
-      lastEmbScaledDir = Some(dir)
-      val bb = embeddingBandBits(embCountFor(s, dir))
-      Dedup.embeddingNearDupLsh(rd(s, dir, "embeddings"), "vec_id",
-          "embedding", 0.35, dim = 64, bandBits = bb, bands = 4)
-        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-        .orderBy("id_a", "id_b")
-    }),
-    "q_media_decode" -> ((s, dir) => {
-      // REAL codec end-to-end (round 17): synthesize one genuine grayscale
-      // PNG per document (real ImageIO encode), decode it back through the
-      // real javax.imageio kernel in batched mapPartitions, and emit pixel
-      // features. Pixel content is a closed-form function of doc_id
-      // (Multimodal.synthGray), so the SQL oracle verifies the decoded
-      // width/height/pixel-sum/mean EXACTLY — the decode path is no longer
-      // a deterministic fake, and it is still hash-pinned
-      Multimodal.decodeFeatures(
-          Multimodal.encodeSyntheticPng(rd(s, dir, "documents"), "doc_id"))
-        .toDF().orderBy("media_id")
-    }),
-    "q_image_dhash" -> ((s, dir) =>
-      // 64-bit perceptual dHash through the REAL codec path: genuine
-      // 18×16 PNGs (grouped multiplicative pixel law), ImageIO decode,
-      // integer NN 9×8 grid, gradient bits — the oracle replays the whole
-      // chain through the pixel law bit for bit
-      Multimodal.imageDHash(
-          Multimodal.encodeSyntheticPngGroups(rd(s, dir, "documents"),
-            "doc_id"))
-        .orderBy("media_id")),
-    "q_image_dedup" -> ((s, dir) =>
-      // image near-dup dedup — the missing image-side dedup modality:
-      // dHash signatures into the Manku banded hamming search (text
-      // SimHash machinery reused; never all-pairs), keep-min survivors.
-      // The fixture plants groups of four (one-pixel perturbations,
-      // hamming ≤ 4 intra-group vs ~32 across), so each group keeps its
-      // smallest id; the oracle replays hash + ALL-pairs hamming (its
-      // corpus is test-sized) — pigeonhole completeness makes banding ≡
-      // all-pairs at hamming ≤ 6
-      Dedup.imageDedupFromHashes(
-          Multimodal.imageDHash(
-            Multimodal.encodeSyntheticPngGroups(rd(s, dir, "documents"),
-              "doc_id")),
-          "media_id", "dhash", maxHamming = 6)
-        .orderBy("media_id")),
-    "q_image_dedup_wide" -> ((s, dir) =>
-      // the corpus-SCALED image dedup profile: 120-bit wide dHash (16×8
-      // grid) through the two-long Manku banding — same hamming ≤ 6
-      // budget, ~17-bit band buckets instead of the 64-bit profile's
-      // 9-bit ones (the signature-width law, measured at 100x). Same
-      // keep-min survivors, all-pairs-replayed by the oracle
-      Dedup.imageDedupFromHashesWide(
-          Multimodal.imageDHashWide(
-            Multimodal.encodeSyntheticPngGroups(rd(s, dir, "documents"),
-              "doc_id")),
-          "media_id", maxHamming = 6)
-        .orderBy("media_id")),
-    "q_image_store" -> ((s, dir) => {
-      // the IMAGE member of the incremental store family: banded wide
-      // dHashes persisted bucketed on band_bits, new batch probed without
-      // reshuffling the store. Split is id mod 8: even groups-of-4 seed
-      // their first two members (their probed members 2,3 land within
-      // hamming ≤ 4 of a stored group-mate and drop); odd groups are
-      // unseeded and survive whole — both outcomes exercised, replayed by
-      // the oracle as all-pairs probe-vs-seed hamming
-      val hashes = Multimodal.imageDHashWide(
-          Multimodal.encodeSyntheticPngGroups(rd(s, dir, "documents"),
-            "doc_id"))
-        .localCheckpoint()
-      Dedup.writeWideHashStore(
-        hashes.filter(pmod(col("media_id"), lit(8)) < 2),
-        "media_id", "graft_img_store", "image_dhash", maxHamming = 6,
-        nBuckets = 32)
-      Dedup.wideHashDedupAgainst(
-          hashes.filter(pmod(col("media_id"), lit(8)) >= 2),
-          "media_id", "graft_img_store", "image_dhash", maxHamming = 6,
-          updateStore = false)
-        .orderBy("media_id")
-    }),
-    "q_audio_store" -> ((s, dir) => {
-      // the AUDIO member of the incremental store family — the q_image_store
-      // seed/probe split (id mod 8: even groups-of-4 seed members 0,1;
-      // their probed members 2,3 self-group-match and drop; odd groups are
-      // unseeded and survive whole) over energy-envelope hashes through the
-      // SAME generic wide-hash store engine; oracle = all-pairs
-      // probe-vs-seed hamming over the audio chain
-      val hashes = Multimodal.audioEnergyHashWide(
-          Multimodal.encodeSyntheticWavGroups(rd(s, dir, "documents"),
-            "doc_id"))
-        .localCheckpoint()
-      Dedup.writeWideHashStore(
-        hashes.filter(pmod(col("media_id"), lit(8)) < 2),
-        "media_id", "graft_aud_store", "audio_ehash", maxHamming = 6,
-        nBuckets = 32)
-      Dedup.wideHashDedupAgainst(
-          hashes.filter(pmod(col("media_id"), lit(8)) >= 2),
-          "media_id", "graft_aud_store", "audio_ehash", maxHamming = 6,
-          updateStore = false)
-        .orderBy("media_id")
-    }),
-    "q_video_store" -> ((s, dir) => {
-      // the VIDEO member of the incremental store family: banded PER-FRAME
-      // wide dHashes persisted with their clip id (__sid — the probe's
-      // ≥ min(3, n_frames) vote needs per-stored-clip match counts), same
-      // seed/probe split; a probed clip drops when ≥ 3 of its 4 frames
-      // match one stored clip at the same index within hamming 6. Oracle
-      // replays frame-aligned all-pairs hamming + the vote
-      val hashes = Multimodal.videoDHashWide(
-          Multimodal.encodeSyntheticAviGroups(rd(s, dir, "documents"),
-            "doc_id"),
-          everyK = 1)
-        .localCheckpoint()
-      Dedup.writeVideoHashStore(
-        hashes.filter(pmod(col("media_id"), lit(8)) < 2),
-        "media_id", "graft_vid_store", maxHamming = 6, nBuckets = 32)
-      Dedup.videoDedupAgainst(
-          hashes.filter(pmod(col("media_id"), lit(8)) >= 2),
-          "media_id", "graft_vid_store", maxHamming = 6,
-          minMatchedFrames = 3, updateStore = false)
-        .orderBy("media_id")
-    }),
-    "q_video_dedup" -> ((s, dir) =>
-      // VIDEO clip-level near-dup dedup — aligned-copy detection: per
-      // sampled frame a wide dHash (real container parse + per-frame
-      // decode), clips match when ≥ 3 of 4 frames agree at the same index
-      // within hamming 6. The fixture scrambles frame 0 of non-base
-      // members (exactly 3 matching frames), so the threshold is
-      // exercised, not vacuous; oracle replays per-frame law → hashes →
-      // frame-aligned pair counts
-      Dedup.videoDedupFromFrameHashes(
-          Multimodal.videoDHashWide(
-            Multimodal.encodeSyntheticAviGroups(rd(s, dir, "documents"),
-              "doc_id"),
-            everyK = 1),
-          "media_id", maxHamming = 6, minMatchedFrames = 3)
-        .orderBy("media_id")),
-    "q_video_dedup_scaled" -> ((s, dir) =>
-      // the knob-HONEST video profile: vote threshold scaled to clip
-      // length (ceil(3/4 · min frames) per pair) over a GROUP-VARYING
-      // length fixture (3/4/5-frame groups) — 3-frame group members
-      // survive (2 matched < 3) while 4/5-frame members drop, so the
-      // scaled threshold is exercised in both directions, not vacuous
-      Dedup.videoDedupFromFrameHashesFrac(
-          Multimodal.videoDHashWide(
-            Multimodal.encodeSyntheticAviGroupsVar(rd(s, dir, "documents"),
-              "doc_id"),
-            everyK = 1),
-          "media_id", maxHamming = 6, matchFrac = 0.75)
-        .orderBy("media_id")),
-    "q_audio_dedup" -> ((s, dir) =>
-      // AUDIO near-dup dedup — the last dedup-less modality closed: real
-      // RIFF/WAVE clips (grouped quadratic PCM law), energy-envelope
-      // gradient hash over 121 windows, the SAME modality-agnostic
-      // wide-hash banding engine as images (never all-pairs, mass-
-      // guarded); oracle replays decode→energies→bits→pack→all-pairs
-      Dedup.wideHashDedup(
-          Multimodal.audioEnergyHashWide(
-            Multimodal.encodeSyntheticWavGroups(rd(s, dir, "documents"),
-              "doc_id")),
-          "media_id", maxHamming = 6, fn = "audioDedup")
-        .orderBy("media_id")),
-    "q_running_totals" -> ((s, dir) => {
-      import s.implicits._
-      val ds = rdEvents(s, dir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Streams.Event]
-      // batch form of the stateful flatMapGroupsWithState path: state starts
-      // empty and each group is processed once → one total row per user,
-      // which a plain GROUP BY oracle can check
-      Streams.runningUserTotals(ds).toDF().orderBy("user_id")
-    }),
-    "q_range_join" -> ((s, dir) => {
-      val ord = rd(s, dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-      val ev = rdEvents(s, dir).select(col("user_id"), col("ts"), col("value"))
-      // equality key (custkey = user) + residual range predicate: planned as a
-      // hash join with a filter, not a nested-loop cross product
-      Relational.rangeJoin(ord, ev,
-          col("o_custkey") === col("user_id") &&
-            col("ts") >= col("o_orderdate") &&
-            col("ts") < col("o_orderdate") + expr("INTERVAL 7 DAYS"), "left")
-        .groupBy("o_orderkey").agg(count(col("value")).as("n_ev"))
-        .orderBy("o_orderkey")
-    }),
-
-    // ---- [EXT] multimodal plumbing ----
-    "q_media_meta" -> ((s, dir) =>
-      Multimodal.metadataStats(
-        Multimodal.asMedia(rd(s, dir, "documents"), "doc_id", "text"))
-        .orderBy("kind")),
-    "q_frame_sample" -> ((s, dir) => {
-      // REAL video end-to-end (round 18, retiring the last fake kernel):
-      // synthesize one genuine MPNG-in-AVI clip per document (real RIFF
-      // container, real ImageIO-encoded PNG frames), parse the container,
-      // keep every 2nd frame, and decode ONLY the kept frames. Frame
-      // content follows the closed-form law (synthGray(id + 97f)), so the
-      // SQL oracle verifies sampled frame numbers, decoded dims, and
-      // per-frame pixel sums EXACTLY
-      Multimodal.videoFrames(
-          Multimodal.encodeSyntheticAvi(rd(s, dir, "documents"), "doc_id"),
-          everyK = 2)
-        .toDF().orderBy("media_id", "frame_no")
-    }),
-    "q_media_resize" -> ((s, dir) => {
-      // REAL resize end-to-end (round 17): real PNGs, decoded and
-      // nearest-neighbor-resampled to 6x10 by the real javax.imageio
-      // kernel, re-encoded, decoded AGAIN for features — the oracle
-      // replays the exact NN source-pixel mapping (x·w div 6, y·h div 10)
-      // through the synthetic pixel law, so both codec passes and the
-      // resample arithmetic are verified pixel-exactly
-      Multimodal.decodeFeatures(
-          Multimodal.resizeImages(
-            Multimodal.encodeSyntheticPng(rd(s, dir, "documents"), "doc_id"),
-            targetW = 6, targetH = 10))
-        .toDF().orderBy("media_id")
-    }),
-    "q_audio_decode" -> ((s, dir) => {
-      // REAL audio codec end-to-end (round 17): genuine RIFF/WAVE clips
-      // (javax.sound.sampled encode) decoded by the real audio stack;
-      // clip content is the closed-form PCM law (Multimodal.synthPcm), so
-      // the oracle verifies rate/channels/length/sum/peak EXACTLY
-      Multimodal.decodeAudioFeatures(
-          Multimodal.encodeSyntheticWav(rd(s, dir, "documents"), "doc_id"))
-        .toDF().orderBy("media_id")
-    }),
-    "q_audio_frames" -> ((s, dir) => {
-      // REAL windowed frame extraction (round 17): hop-advanced analysis
-      // windows (frameLen 32, hop 16 — 50% overlap, the speech-feature
-      // shape) over really-decoded WAV clips; per-frame integer sums and
-      // peaks replay exactly in SQL
-      Multimodal.audioFrames(
-          Multimodal.encodeSyntheticWav(rd(s, dir, "documents"), "doc_id"),
-          frameLen = 32, hop = 16)
-        .toDF().orderBy("media_id", "frame_no")
-    }),
-
-    // ---- [EXT] streaming transforms, batch-equivalent forms ----
-    "q_tumbling" -> ((s, dir) => {
-      Streams.tumblingAgg(rdEvents(s, dir), "1 hour")
-        .select(unix_millis(col("win_start")).as("win_ms"),
-          col("event_type"), col("n"), col("sum_value"))
-        .orderBy("win_ms", "event_type")
-    }),
-    "q_sliding" -> ((s, dir) => {
-      Streams.slidingAgg(rdEvents(s, dir), "1 hour", "30 minutes")
-        .select(unix_millis(col("win_start")).as("win_ms"), col("n"))
-        .orderBy("win_ms")
-    }),
-    "q_session" -> ((s, dir) => {
-      Streams.sessionAgg(rdEvents(s, dir), "30 minutes")
-        .select(unix_millis(col("sess_start")).as("sess_ms"),
-          col("user_id"), col("n_events"), col("sum_value"))
-        .orderBy("user_id", "sess_ms")
-    }),
-    "q_interval_join" -> ((s, dir) => {
-      // stream-stream-shaped attribution: each click joined to the same
-      // user's purchases within 1 hour after it; the identical plan runs
-      // watermarked on readStream (StreamsSpec proves stream ≡ batch)
-      Streams.attributionJoin(rdEvents(s, dir), "click", "purchase", "1 hour")
-        .select(col("user_id"), col("from_id"), col("to_id"),
-          unix_millis(col("from_ts")).as("from_ms"),
-          unix_millis(col("to_ts")).as("to_ms"), col("value"))
-        .orderBy("from_id", "to_id")
-    }),
-
-    // ---- [EXT] round-4 additions: join completeness + pipeline passes ----
-    "q_join_full" -> ((s, dir) => {
-      // full-outer completeness: customers with no orders AND orders whose
-      // customer is filtered out both survive with nulls
-      val cust = rd(s, dir, "customer").filter(col("c_custkey") % 3 === 0)
-        .select("c_custkey", "c_name")
-      val ord = rd(s, dir, "orders").filter(col("o_custkey") % 2 === 0)
-        .select(col("o_custkey").as("c_custkey"), col("o_orderkey"))
-      Relational.fullJoin(cust, ord, Seq("c_custkey"))
-        .groupBy("c_custkey")
-        .agg(max(col("c_name")).as("c_name"), count(col("o_orderkey")).as("n_orders"))
-        .orderBy("c_custkey")
-    }),
-    "q_bloom_join" -> ((s, dir) => {
-      // bloom-prefiltered semi join is RESULT-PRESERVING (no false
-      // negatives), so the oracle is the plain semi join — this verifies the
-      // sketch build + BloomFilterMightContain prefilter end-to-end
-      val li = rd(s, dir, "lineitem").select("l_orderkey", "l_linenumber")
-      val hot = rd(s, dir, "orders")
-        .filter(col("o_totalprice") >= 400000).select("o_orderkey")
-      Relational.bloomSemiJoin(li, hot, "l_orderkey", "o_orderkey",
-          expectedItems = 100000L, numBits = 1L << 20)
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-    "q_dataset_diff" -> ((s, dir) => {
-      // snapshot diff for incremental re-curation: two deterministic
-      // "versions" of the corpus (cur drops ids ≡5 mod 11; prev drops ids
-      // ≡3 mod 10 and carries pre-edit text for ids ≡0 mod 7) → one
-      // |Δ|-sized added/removed/changed row set. Each side reduces to
-      // (id, md5) before the full outer join — the shuffle never carries
-      // document bodies
-      val docs = rd(s, dir, "documents").select(col("doc_id"), col("text"))
-      val cur = docs.filter(col("doc_id") % 11 =!= 5)
-      val prev = docs.filter(col("doc_id") % 10 =!= 3)
-        .withColumn("text",
-          when(col("doc_id") % 7 === 0, concat(lit("OLD "), col("text")))
-            .otherwise(col("text")))
-      graft.sources.Sources.datasetDiff(cur, prev, "doc_id", Seq("text"))
-        .orderBy("doc_id")
-    }),
-    "q_diff_curate" -> ((s, dir) => {
-      // the end-to-end incremental re-crawl pass q_dataset_diff exists
-      // for: snapshot diff → ONLY the |Δ|-sized added/changed slice flows
-      // into dedup-against-the-prev-snapshot's fingerprint store; the
-      // unchanged bulk of the corpus is never read past the hash
-      // projection. The store build is timed (the incr-family deployment-
-      // cycle contract). Planted positives: every prev doc re-keyed +1e6
-      // rides the batch and MUST drop (its fingerprint is stored).
-      val docs = rd(s, dir, "documents")
-      val cur = docs.filter(col("doc_id") % 11 =!= 5)
-        .select(col("doc_id"), col("text"))
-      val prev = docs.filter(col("doc_id") % 10 =!= 3)
-        .select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, concat(lit("OLD "), col("text")))
-            .otherwise(col("text")).as("text"))
-      Dedup.writeFingerprintStore(prev, "text", "graft_diff_store",
-        nBuckets = 4)
-      val delta = graft.sources.Sources
-        .datasetDiff(cur, prev, "doc_id", Seq("text"))
-        .filter(col("status") =!= "removed").select("doc_id")
-      val fresh = cur.join(delta, Seq("doc_id"), "left_semi")
-        .unionAll(prev.select((col("doc_id") + 1000000L).as("doc_id"),
-          col("text")))
-      Dedup.exactDedupAgainst(fresh, "text", "graft_diff_store",
-          updateStore = false)
-        .select("doc_id").orderBy("doc_id")
-    }),
-    "q_source_cap" -> ((s, dir) => {
-      // per-domain quota — the "at most N docs per source/domain" crawl
-      // rebalancing pass: deterministic keep-set (longest docs win, doc_id
-      // tiebreak), one window shuffle keyed on the domain
-      Relational.topNPerGroup(
-          rd(s, dir, "documents").select("doc_id", "source", "n_chars"),
-          Seq("source"), Seq(desc("n_chars"), asc("doc_id")), 50)
-        .orderBy("doc_id")
-    }),
-    "q_html_extract" -> ((s, dir) => {
-      // HTML → text extraction (round 17): wrap each doc in a synthetic
-      // page (script/style/comment subtrees, heading, entity samples) and
-      // run the codegen'd strip/decode/collapse chain. The oracle replays
-      // BOTH the synthesis and the extraction in DuckDB — every regex is
-      // RE2-compatible by design, so the chain is engine-for-engine
-      val html = concat(
-        lit("<html><head><title>t</title><style type=\"text/css\">" +
-          "p{margin:0}</style><script>if(a<b){c&&d}</script></head>" +
-          "<body><h1>"),
-        col("source"),
-        lit("</h1>\n<p>"), col("text"),
-        lit("</p><!-- hidden -->\n<div>x &amp; y &lt;tag&gt; " +
-          "&quot;q&quot; &#39;s&#39; a&nbsp;b</div></body></html>"))
-      rd(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.htmlToText(html).as("text_clean"))
-        .withColumn("n_chars", length(col("text_clean")).cast(LongType))
-        .orderBy("doc_id")
-    }),
-    "q_html_blocks" -> ((s, dir) => {
-      // DOM-tier HTML extraction (round 18): block-level structure
-      // preserved — headings/paragraphs/list items/table rows become
-      // newline-separated blocks, table cells tab-separate — where
-      // q_html_extract's strip tier collapses everything to spaces. The
-      // synthetic page exercises every rule: script/style/comment drops,
-      // a heading, two paragraphs, a 3-row table (th + td cells), a list
-      // with a <br> inside an item, and entity decode. The oracle replays
-      // synthesis AND the whole sentinel chain engine-for-engine (all
-      // patterns RE2-compatible by design)
-      val html = concat(
-        lit("<html><head><title>t</title><style>p{margin:0}</style>" +
-          "<script>if(a<b){c&&d}</script></head><body><h1>"),
-        col("source"),
-        lit("</h1><p>intro &amp; summary</p>\n<p>"), col("text"),
-        lit("</p><!-- hidden --><table><tr><th>key</th><th>val</th></tr>" +
-          "<tr><td>id</td><td>"),
-        col("doc_id"),
-        lit("</td></tr><tr><td>source</td><td>"), col("source"),
-        lit("</td></tr></table><ul><li>alpha</li><li>beta<br>gamma</li>" +
-          "</ul></body></html>"))
-      val blocksCol = TextAnalysis.htmlToBlocks(html)
-      rd(s, dir, "documents")
-        .select(col("doc_id"), blocksCol.as("text_blocks"))
-        .withColumn("n_lines",
-          (length(col("text_blocks")) -
-            length(call_function("replace", col("text_blocks"), lit("\n"),
-              lit("")))).cast(LongType) + 1L)
-        .withColumn("n_cells",
-          (length(col("text_blocks")) -
-            length(call_function("replace", col("text_blocks"), lit("\t"),
-              lit("")))).cast(LongType))
-        .orderBy("doc_id")
-    }),
-    "q_html_paragraph_dedup" -> ((s, dir) => {
-      // the COMPOSITION the block tier exists for (round 18): block-level
-      // extraction feeding corpus-global paragraph dedup. Each doc's page
-      // carries a boilerplate paragraph shared by every doc (df = N →
-      // only the lowest doc keeps it), a group paragraph shared by ~1/50
-      // of docs (one survivor per group), and the doc's own text — as
-      // <p> blocks, which htmlToBlocks must turn into the newline-keyed
-      // paragraphs dedupParagraphs operates on (the strip tier would fuse
-      // them into one line and starve the dedup)
-      val html = concat(
-        lit("<div><p>shared global paragraph</p><p>group "),
-        col("doc_id") % 50,
-        lit("</p><p>"), col("text"), lit("</p></div>"))
-      val pages = rd(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.htmlToBlocks(html).as("text"))
-      TextAnalysis.dedupParagraphs(pages, "doc_id", "text", maxDocFreq = 2)
-        .orderBy("doc_id")
-    }),
-    "q_compress_ratio" -> ((s, dir) => {
-      // deflate compression ratio per doc — the repetition/low-entropy
-      // quality signal; oracle = plain-JVM fresh-Deflater recompute
-      // embedded as literals (n_bytes cross-checked by DuckDB's strlen)
-      lastCompressDir = Some(dir)
-      TextAnalysis.compressionRatio(rd(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    "q_cdc_chunks" -> ((s, dir) => {
-      // content-defined chunking (round 17): per-doc chunk structure of
-      // the UTF-8 blob, summarized exactly (count / partitioned length /
-      // distinct hashes / order-sensitive checksum); oracle = plain-JVM
-      // re-chunk from the gear-hash spec, total_len cross-checked against
-      // DuckDB's own strlen
-      lastCdcDir = Some(dir)
-      Dedup.cdcChunks(
-          rd(s, dir, "documents")
-            .select(col("doc_id"), col("text").cast(BinaryType).as("blob")),
-          "doc_id", "blob")
-        .toDF().groupBy("doc_id")
-        .agg(count(lit(1)).cast(LongType).as("n_chunks"),
-          sum("chunk_len").cast(LongType).as("total_len"),
-          countDistinct("chunk_hash").cast(LongType).as("n_distinct"),
-          sum((col("chunk_no") + 1) *
-            pmod(col("chunk_hash"), lit(1L << 31)))
-            .cast(LongType).as("chunk_sig"))
-        .orderBy("doc_id")
-    }),
-    "q_cdc_dedup" -> ((s, dir) => {
-      // the storage-dedup savings report a chunk store runs before
-      // admitting blobs: distinct vs total chunk bytes corpus-wide
-      lastCdcDir = Some(dir)
-      Dedup.cdcDedupStats(Dedup.cdcChunks(
-        rd(s, dir, "documents")
-          .select(col("doc_id"), col("text").cast(BinaryType).as("blob")),
-        "doc_id", "blob"))
-    }),
-    "q_cdc_incr" -> ((s, dir) => {
-      // incremental byte-level admission against the persisted chunk
-      // store: batch 1 (the corpus) is stored; batch 2 is every blob
-      // re-ingested with a 1-byte front edit — the CDC property means
-      // most bytes are already held (shift resistance), so dup_bytes
-      // dominates. Oracle = plain-JVM replay of store + keep-first walk
-      lastCdcDir = Some(dir)
-      val blobs = rd(s, dir, "documents")
-        .select(col("doc_id"), col("text").cast(BinaryType).as("blob"))
-      val store = s"graft_cdc_store_${java.lang.Integer.toHexString(dir.hashCode)}"
-      s.sql(s"DROP TABLE IF EXISTS ${store}_chunks")
-      Dedup.writeChunkStore(Dedup.cdcChunks(blobs, "doc_id", "blob"), store)
-      val batch2 = rd(s, dir, "documents")
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(lit("x"), col("text")).cast(BinaryType).as("blob"))
-      Dedup.cdcDedupAgainst(batch2, "doc_id", "blob", store,
-          updateStore = false)
-        .orderBy("doc_id")
-    }),
-    "q_boilerplate" -> ((s, dir) => {
-      // host-level boilerplate line removal. The corpus is single-line, so
-      // each doc plants a 4-line page (the q_redact pattern): a nav header
-      // and copyright footer shared by ALL of the host's docs (dropped), a
-      // promo line whose variant splits the host's docs just above/below
-      // the 0.5 ratio (one variant dropped, the other kept — the
-      // discriminative case), and the doc's own unique text (kept)
-      TextAnalysis.removeBoilerplateLines(plantWebPages(rd(s, dir, "documents")),
-          "doc_id", "text", "source", maxLineDocRatio = 0.5)
-        .withColumnRenamed("source", "host")
-        .orderBy("doc_id")
-    }),
-    "q_paragraph_dedup" -> ((s, dir) => {
-      // corpus-GLOBAL duplicate-paragraph removal (RefinedWeb/CCNet global
-      // line dedup — keep-first, one survivor corpus-wide), vs
-      // q_boilerplate's HOST-keyed ratio rule. The raw corpus is one
-      // paragraph per doc, so the query plants the structure: a paragraph
-      // shared by EVERY doc (df = N → only the lowest doc keeps it), a
-      // group paragraph shared by ~1/50th of docs (df ≈ N/50 > maxDocFreq
-      // → one survivor per group), a BLANK separator line in every doc
-      // (df = N but blanks are separators, not content — must survive
-      // verbatim in every doc), then the doc's own unique text (kept)
-      val planted = rd(s, dir, "documents").select(col("doc_id"),
-        concat_ws("\n", lit("shared global paragraph"),
-          concat(lit("group "), col("doc_id") % 50), lit(""),
-          col("text")).as("text"))
-      TextAnalysis.dedupParagraphs(planted, "doc_id", "text", maxDocFreq = 2)
-        .orderBy("doc_id")
-    }),
-    "q_paragraph_dedup_intra" -> ((s, dir) => {
-      // WITHIN-doc repeated-paragraph removal (the per-row pre-pass that
-      // runs before q_paragraph_dedup's corpus-global rule). The raw corpus
-      // is one paragraph per doc, so the query plants the structure: a
-      // repeated intro (positions 0 and 2 — second copy dropped), the doc's
-      // own text appearing twice (second copy dropped), TWO blank separator
-      // lines (both must ride through verbatim — blank multiplicity is
-      // preserved), and a group line unique WITHIN the doc (kept: cross-doc
-      // duplication is q_paragraph_dedup's business, not the intra rule's)
-      val planted = rd(s, dir, "documents").select(col("doc_id"),
-        concat_ws("\n", lit("repeated intro"), col("text"),
-          lit("repeated intro"), lit(""),
-          concat(lit("group "), col("doc_id") % 50), lit(""),
-          col("text")).as("text"))
-      TextAnalysis.dedupParagraphsIntra(planted, "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    "q_curation_web" -> ((s, dir) => {
-      // WEB-SHAPED curation: the boilerplate strip feeding the verified
-      // curation chain (gates → fingerprint dedup → near-dedup → sample)
-      // over the CLEANED text. Composition is discriminative end to end:
-      // the kept promo-line variant changes length/stopword inputs to the
-      // gates, so a wrong boilerplate decision flips gate outcomes
-      val cleaned = TextAnalysis.removeBoilerplateLines(
-          plantWebPages(rd(s, dir, "documents")), "doc_id", "text", "source",
-          maxLineDocRatio = 0.5)
-        .withColumnRenamed("clean_text", "text")
-      graft.operators.Curation.curate(cleaned, "doc_id", "text",
-          lang = "en", minQuality = 0.6, nearDupThreshold = 0.5,
-          sampleFraction = 0.5)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-    "q_curation_ppl" -> ((s, dir) => {
-      // curation with the CCNet-style perplexity gate UP FRONT: only
-      // fluent docs (kept under the corpus bigram LM) enter the verified
-      // gate→dedup→sample chain. Discriminative composition: the ppl
-      // threshold sits at the corpus median, so the fluency gate halves
-      // the curation input and every downstream stage sees different
-      // frequencies than q_curation's
-      val docs = rd(s, dir, "documents")
-      val fluent = TextAnalysis.lmPerplexityFilter(docs, "doc_id", "text",
-          maxPpl = LmPerplexityMaxPpl)
-        .filter(col("kept")).select("doc_id")
-      // fan the corpus scan BEFORE the semi-join (r22): curate's own gate
-      // fan-out refuses join-rooted inputs (Fan.isNarrow), so the gate +
-      // survivor checkpoint otherwise run single-task on the unsplittable
-      // scan (probe: 0.58 s serial). The fluent id set broadcasts, so the
-      // fanned width flows through the join into the gate stage.
-      graft.operators.Curation.curate(
-          graft.operators.Fan.out(docs).join(fluent, Seq("doc_id"),
-            "left_semi"),
-          "doc_id", "text", lang = "en", minQuality = 0.6,
-          nearDupThreshold = 0.5, sampleFraction = 0.5)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-    "q_link_extract" -> ((s, dir) => {
-      // anchor-href extraction over synthetic linked pages (round 18):
-      // every href surfaces with its position and lowercased host —
-      // including the relative href, whose empty host downstream edge
-      // building must filter. Pure codegen'd regex projection + explode
-      plantLinkedPages(rd(s, dir, "documents"))
-        .select(col("doc_id"),
-          posexplode(LinkGraph.extractHrefs(col("html")))
-            .as(Seq("link_no", "url")))
-        .select(col("doc_id"), col("link_no").cast(LongType), col("url"),
-          TextAnalysis.urlHost(col("url")).as("dst_host"))
-        .orderBy("doc_id", "link_no")
-    }),
-    "q_host_graph" -> ((s, dir) =>
-      // host-level link edges: hostless hrefs and self-loops dropped,
-      // (src, dst) pair counts map-side combined — the crawl-graph
-      // aggregation a web corpus ranks hosts with
-      LinkGraph.hostEdges(plantLinkedPages(rd(s, dir, "documents")),
-          "src_host", "html")
-        .orderBy("src_host", "dst_host")),
-    "q_host_rank" -> ((s, dir) =>
-      // 3-iteration weighted PageRank in exact integer nanos (d = 17/20):
-      // hubs and the portal accumulate authority from the source hosts,
-      // which stay at the dangling base — the oracle unrolls the SAME
-      // three iterations in SQL (floor division ≡ div on non-negatives),
-      // so every rank matches bit-for-bit
-      LinkGraph.pageRankHosts(
-          LinkGraph.hostEdges(plantLinkedPages(rd(s, dir, "documents")),
-            "src_host", "html"),
-          iterations = 3)
-        .orderBy("host")),
-    "q_host_rank_dangling" -> ((s, dir) =>
-      // the full random-surfer model: hub/portal sinks' rank mass is
-      // redistributed uniformly each iteration (D_t from one hosts-sized
-      // anti-join aggregate, broadcast back) instead of leaking — total
-      // mass conserved up to floor residue, ranks comparable across
-      // graphs; same exact-integer unroll, oracle replays every iteration
-      LinkGraph.pageRankHostsDangling(
-          LinkGraph.hostEdges(plantLinkedPages(rd(s, dir, "documents")),
-            "src_host", "html"),
-          iterations = 3)
-        .orderBy("host")),
-    "q_rank_convergence" -> ((s, dir) =>
-      // the stopping-evidence report: per-iteration dangling inflow and
-      // L1 rank delta, exact integer nanos — callers read the decay curve
-      // to pick `iterations` instead of guessing
-      LinkGraph.pageRankDanglingReport(
-          LinkGraph.hostEdges(plantLinkedPages(rd(s, dir, "documents")),
-            "src_host", "html"),
-          iterations = 3)),
-    "q_anchor_text" -> ((s, dir) =>
-      // anchor-text postings by target host — the retrieval-corpus mining
-      // signal (anchor text ≈ human queries for the target page). Two
-      // positional regex passes zipped, self-loops KEPT (text is content,
-      // not endorsement), hostless/blank rows dropped
-      LinkGraph.anchorTexts(plantLinkedPages(rd(s, dir, "documents")), "html")
-        .orderBy("dst_host", "anchor")),
-    "q_url_extract" -> ((s, dir) => {
-      // per-host crawl stats over extracted + CANONICALIZED urls. The
-      // corpus has no urls, so each doc plants two (the q_redact pattern):
-      // one with mixed-case host, tracking params, and a fragment — which
-      // must all normalize away — and one already-clean http url
-      val planted = rd(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"),
-          lit(" see https://WWW."), col("source"),
-          lit(".Example.com/Page/"), col("doc_id"),
-          lit("?id="), col("doc_id"),
-          lit("&utm_source=feed&fbclid=x"), col("doc_id"),
-          lit("#s"), col("doc_id"),
-          lit(" and http://"), col("source"), lit(".example/d/"),
-          col("doc_id")).as("text"))
-      planted
-        .select(explode(TextAnalysis.extractUrls(col("text"))).as("url"))
-        .select(TextAnalysis.urlHost(col("url")).as("host"),
-          TextAnalysis.canonicalizeUrl(col("url")).as("curl"))
-        .groupBy("host")
-        .agg(count(lit(1)).cast(LongType).as("n_urls"),
-          countDistinct(col("curl")).cast(LongType).as("n_canonical"),
-          min(col("curl")).as("sample_url"))
-        .orderBy("host")
-    }),
-    "q_redact" -> ((s, dir) => {
-      // the fixture corpus carries no PII, so the query PLANTS a synthetic
-      // email/URL trailer per doc (derived from its own fields) and then
-      // redacts it — exercising match+replace+count on every row rather
-      // than vacuously passing on clean text
-      val planted = rd(s, dir, "documents").select(col("doc_id"),
-        concat(col("text"), lit(" contact "), col("source"), lit("-"),
-          col("doc_id"), lit("@example.com or https://"), col("source"),
-          lit(".example/d/"), col("doc_id")).as("text"))
-      val (emails, urls) = TextAnalysis.piiCounts(col("text"))
-      planted.select(col("doc_id"),
-          emails.cast(LongType).as("n_emails"), urls.cast(LongType).as("n_urls"),
-          TextAnalysis.redactPii(col("text")).as("clean_text"))
-        .orderBy("doc_id")
-    }),
-    "q_unigram_lm" -> ((s, dir) =>
-      TextAnalysis.unigramLogProb(rd(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "q_bigram_lm" -> ((s, dir) =>
-      // fluency scoring: mean ln p(next|context) from the corpus's own
-      // bigram table — row-local pair HOF, two Zipf-bounded aggregates off
-      // one exploded pass, per-pair nanos before the per-doc sum
-      TextAnalysis.bigramLogProb(rd(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "q_curation_mm" -> ((s, dir) => {
-      // MULTIMODAL (caption+image) curation — the LAION shape: language +
-      // quality gates and caption fingerprint dedup shrink the pairs
-      // BEFORE any image decode (plan-audited: the decode mapPartitions
-      // sits above the text survivors' semi-join), then wide-dHash image
-      // near-dedup; a pair survives iff BOTH modalities survive. Oracle
-      // composes the verified gate/fingerprint/image-hash CTE fragments
-      val docs = rd(s, dir, "documents")
-      graft.operators.Curation.curateMultimodal(docs, "doc_id", "text",
-          Multimodal.encodeSyntheticPngGroups(docs, "doc_id"), "media_id",
-          lang = "en", minQuality = 0.6, maxHamming = 6)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-    "q_lm_store" -> ((s, dir) => {
-      // the PERSISTED corpus LM (CCNet deployment shape): fit on src0 in
-      // TWO tagged batches (doc_id parity — accretion exercised: a
-      // dropped/doubled batch changes counts and the oracle hash), then
-      // gate the whole corpus against the FIXED store — absolute
-      // threshold, one corpus scan, unseen pairs at the add-one floor
-      val docs = rd(s, dir, "documents")
-      val ref = docs.filter(col("source") === "src0")
-      TextAnalysis.writeLmStore(
-        ref.filter(pmod(col("doc_id"), lit(2)) === 0), "text",
-        "graft_lm_store", nBuckets = 4)
-      TextAnalysis.appendLmCounts(s, "graft_lm_store",
-        ref.filter(pmod(col("doc_id"), lit(2)) === 1), "text", batchTag = 0L)
-      TextAnalysis.lmPerplexityAgainst(docs, "doc_id", "text",
-          "graft_lm_store", maxPpl = LmStoreMaxPpl)
-        .orderBy("doc_id")
-    }),
-    "q_curation_ppl_store" -> ((s, dir) => {
-      // q_curation_ppl's PRODUCTION twin: the fluency gate reads the
-      // persisted src0-fit LM instead of refitting from its own input —
-      // one corpus tokenize pass in the gate (the refit path pays two)
-      // and CCNet's absolute-threshold semantics (the gate no longer
-      // moves with batch composition)
-      val docs = rd(s, dir, "documents")
-      TextAnalysis.writeLmStore(docs.filter(col("source") === "src0"),
-        "text", "graft_lm_cur", nBuckets = 4)
-      val fluent = TextAnalysis.lmPerplexityAgainst(docs, "doc_id", "text",
-          "graft_lm_cur", maxPpl = LmStoreMaxPpl)
-        .filter(col("kept")).select("doc_id")
-      graft.operators.Curation.curate(
-          docs.join(fluent, Seq("doc_id"), "left_semi"),
-          "doc_id", "text", lang = "en", minQuality = 0.6,
-          nearDupThreshold = 0.5, sampleFraction = 0.5)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-    "q_lm_perplexity" -> ((s, dir) =>
-      // the CCNet-style perplexity GATE the LM family feeds: add-one
-      // smoothed bigram LM, per-pair nanos terms, keep ⇔ −Σ ≤ ln(maxPpl)·n
-      // in exact integers (threshold literal shared with the oracle);
-      // short docs (no bigram) score NULL and drop
-      TextAnalysis.lmPerplexityFilter(rd(s, dir, "documents"),
-          "doc_id", "text", maxPpl = LmPerplexityMaxPpl)
-        .orderBy("doc_id")),
-    "q_pack_chunks" -> ((s, dir) =>
-      TextAnalysis.chunkAssignments(rd(s, dir, "documents"),
-          "doc_id", "text", "source", budget = 2048)
-        .orderBy("doc_id")),
-    "q_shard_plan" -> ((s, dir) =>
-      // GLOBAL token-budget shard assignment: the corpus-wide exclusive
-      // prefix sum runs as range-bucketed partials + offset broadcast +
-      // per-bucket windows (Relational.globalPrefixSum) — bit-identical to
-      // the oracle's single global window, which Spark-side would
-      // serialize the corpus through one task
-      TextAnalysis.shardAssignments(rd(s, dir, "documents"),
-          "doc_id", "text", budget = 4096)
-        .orderBy("doc_id")),
-    "q_centroid_drift" -> ((s, dir) => {
-      // embedding-SPACE drift per label: the raw corpus vs a planted "new
-      // crawl" whose every-third label's vectors are reversed (semantic
-      // shift the value-distribution monitors can't see); integer-micros
-      // centroid dot/norm sums, one rounded cosine per label
-      val emb = rd(s, dir, "embeddings")
-      val cur = emb.withColumn("embedding",
-        when(col("label") % 3 === 0, reverse(col("embedding")))
-          .otherwise(col("embedding")))
-      Similarity.centroidDrift(emb, cur, "label", "embedding")
-        .select(col("label").cast(LongType).as("label"),
-          col("in_ref"), col("in_cur"), col("centroid_cos"))
-        .orderBy("label")
-    }),
-    "q_embedding_centroid" -> ((s, dir) =>
-      Similarity.labelCentroids(rd(s, dir, "embeddings"), "label", "embedding")
-        .select(col("label"), col("pos").cast(LongType).as("pos"), col("centroid"))
-        .orderBy("label", "pos")),
-    "q_containment" -> ((s, dir) =>
-      // asymmetric near-dup: |A∩B| / min(|A|,|B|) catches small-doc-inside-
-      // big-doc duplication that symmetric jaccard misses. Candidates via
-      // LOSSLESS prefix filtering (rarest shingles of the smaller side), so
-      // the oracle below is ground truth, not a blocking replica
-      // freq cap from the corpus-size profile: uncapped (lossless, the
-      // ground-truth-oracle contract) at the test SFs, boilerplate-shingle
-      // drop past 10k docs
-      Dedup.ngramContainmentPrefix(rd(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.7, ngram = 3,
-          maxShingleDocFreq = containmentFreqCap(docCountFor(s, dir)))
-        .orderBy("id_a", "id_b")),
-    "q_containment_capped" -> ((s, dir) =>
-      // the PRODUCTION containment profile (round-12 verdict item 4): the
-      // corpus-scaled boilerplate cap engaged at EVERY size, not just past
-      // 10k docs. At the correctness SFs the floor keeps it lossless (the
-      // same ground-truth oracle as q_containment must stay exact); on
-      // replica-heavy corpora it trims the O(f²) candidate fan-out of the
-      // mid-frequency boilerplate band the lossless valve admits
-      Dedup.ngramContainmentPrefix(rd(s, dir, "documents"), "doc_id", "text",
-          threshold = 0.7, ngram = 3,
-          maxShingleDocFreq = containmentFreqCapScaled(docCountFor(s, dir)))
-        .orderBy("id_a", "id_b")),
-    "q_token_budget" -> ((s, dir) =>
-      // domain mixing to a 10k-token budget: rates derived offline from the
-      // domains-sized token aggregate, applied as ONE content-hash filter
-      Sampling.tokenBudgetSample(rd(s, dir, "documents"), "doc_id", "source",
-          budgetRatesFor(s, dir))
-        .select("doc_id", "source").orderBy("doc_id")),
-    "q_token_budget_subword" -> ((s, dir) =>
-      // the SAME budget mixing with the tokenizer as a parameter: rates
-      // derived over BPE-ish subword counts of the punctuation-planted
-      // corpus (production budgets are BPE tokens, not whitespace tokens)
-      // — different totals, different realized rates and kept set, same
-      // one-content-hash-filter apply
-      Sampling.tokenBudgetSample(plantPunctuated(rd(s, dir, "documents")),
-          "doc_id", "source", budgetSubwordRatesFor(s, dir))
-        .select("doc_id", "source").orderBy("doc_id")),
-    "q_bpe_count" -> ((s, dir) => {
-      // REAL BPE token counts per doc (round 18): the distributed GPT-2
-      // encode loop under the corpus-learned 200-merge table, via the
-      // DICTIONARY-JOIN path: each distinct word encodes exactly once
-      // (vocab-bounded — the q_pmi cost law — vs the memo kernel's
-      // measured 14.6x at 100x when the memo hit rate collapsed), then
-      // per-word lengths join back to (doc, word) counts. Oracle =
-      // memo-free sequential recompute by an independently-coded encoder
-      // over the SAME merges table, embedded as per-doc literals —
-      // diverges if the join path ever mis-counts or drops a word
-      graft.operators.Bpe.tokenCountsDict(rd(s, dir, "documents"), "doc_id",
-          "text", bpeModelFor(s, dir))
-        .orderBy("doc_id")
-    }),
-    "q_token_budget_bpe" -> ((s, dir) =>
-      // the budget-mixing family under its REAL production unit: rates
-      // derived over the BPE kernel's counts (merges compress the Zipf
-      // head, so totals/rates/kept set differ from both the whitespace
-      // and the subword-stand-in twins), applied as the same single
-      // content-hash filter
-      Sampling.tokenBudgetSample(rd(s, dir, "documents"), "doc_id", "source",
-          budgetBpeRatesFor(s, dir))
-        .select("doc_id", "source").orderBy("doc_id")),
-    "q_token_budget_waterfill" -> ((s, dir) =>
-      // the budget as an exact TARGET: saturated domains' unclaimed
-      // allocation redistributes over the still-downsampled ones (two-round
-      // cascade on this fixture — see budgetWaterfillRatesFor) before the
-      // same one-content-hash-filter apply
-      Sampling.tokenBudgetSample(rd(s, dir, "documents"), "doc_id", "source",
-          budgetWaterfillRatesFor(s, dir))
-        .select("doc_id", "source").orderBy("doc_id")),
-    "q_temperature_mix" -> ((s, dir) =>
-      // α-temperature domain re-balancing (XLM-R/mT5 q_i ∝ n_i^α): rates
-      // derived offline over the skewed derived domain, applied as the
-      // same one content-hash filter as q_token_budget — the two queries
-      // share the APPLY shape and differ in the rate DERIVATION under test
-      Sampling.tokenBudgetSample(
-          rd(s, dir, "documents").withColumn("__dom", skewedDomain),
-          "doc_id", "__dom", tempRatesFor(s, dir))
-        .select("doc_id", "source").orderBy("doc_id")),
-    "q_split_assign" -> ((s, dir) =>
-      // deterministic train/val/test assignment: content-hash intervals,
-      // stable under corpus growth (a row's split never moves when docs
-      // are added) — one codegen'd projection, no shuffle
-      Sampling.assignSplit(rd(s, dir, "documents"), col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .select("doc_id", "source", "split").orderBy("doc_id")),
-    "q_quality_model" -> ((s, dir) =>
-      // learned quality filter (hashing-trick linear model): weights are
-      // plan literals, score is the mean bucket weight (logit — monotone in
-      // sigmoid, no cross-engine exp hazard), keep decided on rounded bits
-      TextAnalysis.hashedQualityScore(rd(s, dir, "documents"), "doc_id",
-          "text", TextAnalysis.syntheticQualityModel())
-        .orderBy("doc_id")),
-    "q_domain_classify" -> ((s, dir) =>
-      // multi-class domain tagger (hashing-trick linear classifier): one
-      // explode + one K-sum aggregate + argmax projection; same integer-
-      // micros determinism as q_quality_model, tie broken by class order
-      TextAnalysis.hashedClassify(rd(s, dir, "documents"), "doc_id", "text",
-          DomainClassifyModels)
-        .orderBy("doc_id")),
-    "q_semdedup_pairs" -> ((s, dir) =>
-      // SemDeDup: cluster-blocked pairwise cosine — k-means cells bound the
-      // quadratic term; reuses the memoized offline IVF fit, so the oracle
-      // can replicate assignment from the same centroid literals
-      Dedup.semanticNearDupPairs(rd(s, dir, "embeddings"), "vec_id",
-          "embedding", ivfModelFor(s, dir), threshold = 0.35)
-        .orderBy("id_a", "id_b")),
-    "q_semdedup" -> ((s, dir) =>
-      // keep-first semantic dedup over the cluster-blocked pairs
-      Dedup.semanticDedup(rd(s, dir, "embeddings"), "vec_id", "embedding",
-          ivfModelFor(s, dir), threshold = 0.35)
-        .select("vec_id", "label").orderBy("vec_id")),
-    "q_span_overlap" -> ((s, dir) =>
-      // substring-level duplication: longest verbatim shared token run per
-      // pair (≥8 tokens), via positional 8-window postings + per-diagonal
-      // gaps-and-islands — the overlap Jaccard/containment dilute away
-      Dedup.spanOverlapPairs(rd(s, dir, "documents"), "doc_id", "text",
-          minRun = 8)
-        .orderBy("id_a", "id_b")),
-    "q_span_dedup" -> ((s, dir) =>
-      // keep-first substring dedup: drop every doc sharing a ≥8-token
-      // verbatim run with a lower-id'd doc
-      Dedup.spanDedup(rd(s, dir, "documents"), "doc_id", "text", minRun = 8)
-        .select("doc_id", "source").orderBy("doc_id")),
-    "q_span_excise" -> ((s, dir) =>
-      // the ExactSubstr REMEDY: cut each ≥8-token shared run out of the
-      // later doc and keep the reassembled remainder (one row per input
-      // doc, empty text when fully excised) — the oracle replays cut
-      // positions and reassembly order, not just survivor ids
-      Dedup.spanExcise(rd(s, dir, "documents"), "doc_id", "text",
-          minRun = 8)
-        .orderBy("doc_id")),
-    "q_curation_excise" -> ((s, dir) => {
-      // curateFull with the substring stage upgraded to span EXCISION:
-      // boilerplate-sharing docs lose the run, not the document; empty
-      // husks gated out before the final hash sample
-      val docs = rd(s, dir, "documents")
-      graft.operators.Curation.curateFullExcise(docs, "doc_id", "text",
-          docs.filter(col("source") === "src0"), "text",
-          TextAnalysis.syntheticQualityModel(), keepLogit = -0.15)
-        .orderBy("doc_id")
-    }),
-    "q_contamination" -> ((s, dir) => {
-      // benchmark-overlap scores: src0 plays the eval set; every doc scores
-      // |shingles ∩ pooled-src0-shingles| / |shingles| in one broadcast pass
-      val docs = rd(s, dir, "documents")
-      Dedup.contaminationScores(docs, "doc_id", "text",
-          docs.filter(col("source") === "src0"), "text", ngram = 3)
-        .orderBy("doc_id")
-    }),
-    "q_decontaminate" -> ((s, dir) => {
-      // end-to-end decontamination: drop docs ≥0.8 contaminated vs src0
-      // (src0 itself + its cross-source near-copies), keep survivors
-      val docs = rd(s, dir, "documents")
-      Dedup.decontaminate(docs, "doc_id", "text",
-          docs.filter(col("source") === "src0"), "text",
-          maxContamination = 0.8, ngram = 3)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-    "q_decontaminate_exact" -> ((s, dir) => {
-      // EXACT substring decontamination: drop every doc sharing a VERBATIM
-      // ≥8-token run with any src0 (benchmark) doc — the exactness upgrade
-      // over q_decontaminate's pooled-shingle Jaccard score (a verbatim
-      // eval quote inside a long original dilutes below any Jaccard
-      // threshold but is still contamination; a shared 7-token run shares
-      // NO 8-window and passes). Broadcast bench window hashes, one corpus
-      // projection + semi/anti join; the string-exact oracle verifies the
-      // xxhash64 window shortcut
-      val docs = rd(s, dir, "documents")
-      Dedup.exactDecontaminate(docs, "doc_id", "text",
-          docs.filter(col("source") === "src0"), "text", minRun = 8)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-    "q_grouped_median" -> ((s, dir) =>
-      // exact interpolated percentile per group. Determinism: the median of
-      // INTEGER cents interpolates with frac ∈ {0, 0.5} only — exact in
-      // double under either a+f·(b−a) or (1−f)·a+f·b, so Spark and DuckDB
-      // agree bit-for-bit (a p90 over raw doubles would not)
-      rd(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(
-          expr("percentile(cast(round(l_extendedprice * 100) as bigint), 0.5)")
-            .as("median_cents"),
-          expr("percentile(l_quantity, 0.5)").as("median_qty"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")),
-    "q_grouped_median_approx" -> ((s, dir) =>
-      // the grouped-median SCALE path under its per-group GK contract:
-      // exact `percentile` buffers each group's full value multiset in one
-      // aggregation buffer (the 100 TB memory killer this twin retires);
-      // the sketch median's exact within-group rank must bracket n/2
-      // within ±n/accuracy — the oracle pins ok50 TRUE computing the
-      // exact side itself (the q_quantiles_approx pattern, per group)
-      graft.operators.Profiling.groupedMedianApproxChecked(
-        rd(s, dir, "lineitem"), "l_returnflag",
-        expr("cast(round(l_extendedprice * 100) as bigint)"))),
-    "q_curation_full" -> ((s, dir) => {
-      // the FULL composed pass: gates → learned quality filter → benchmark
-      // decontamination → fingerprint dedup → MinHash-LSH near-dedup →
-      // shared-span dedup → hash sample — every round-8 stage chained, the
-      // oracle composed from the same verified CTE fragments
-      val docs = rd(s, dir, "documents")
-      // keepLogit = the synthetic model's median logit over this corpus
-      // family (a trained classifier's calibrated operating point) — keeps
-      // the filter discriminative instead of degenerate
-      graft.operators.Curation.curateFull(docs, "doc_id", "text",
-          docs.filter(col("source") === "src0"), "text",
-          TextAnalysis.syntheticQualityModel(), keepLogit = -0.15)
-        .select("doc_id", "source").orderBy("doc_id")
-    }),
-    "q_curation" -> ((s, dir) =>
-      // the COMPOSED curation pass: language gate → quality gate →
-      // fingerprint dedup → portable MinHash-LSH near-dedup → hash sample.
-      // Each stage is an already-verified operator; this verifies they
-      // CHAIN (the oracle composes the same verified CTE fragments)
-      graft.operators.Curation.curate(rd(s, dir, "documents"),
-          "doc_id", "text", lang = "en", minQuality = 0.6,
-          nearDupThreshold = 0.5, sampleFraction = 0.5)
-        .select("doc_id", "source").orderBy("doc_id")),
-    "q_string_agg" -> ((s, dir) =>
-      // deterministic group concat: collect_list is order-nondeterministic
-      // under parallelism, so sort before joining — the portable form of
-      // string_agg(x ORDER BY x)
-      rd(s, dir, "nation").groupBy("n_regionkey")
-        .agg(array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"),
-          count(lit(1)).as("n_nations"))
-        .orderBy("n_regionkey")),
-    "q_profile_table" -> ((s, dir) =>
-      // one-pass whole-table column profile (null + distinct counts per
-      // column) — the pre-flight sanity gate before a multi-hour job.
-      // Exact mode here (oracle-checkable); the 100 TB default is the
-      // approx_count_distinct path (Profiling scaladoc)
-      graft.operators.Profiling.profileTable(rd(s, dir, "lineitem"), exact = true)),
-    "q_profile_approx" -> ((s, dir) =>
-      // the 100 TB profile path under its CONTRACT: per column, exact
-      // null/row counts plus dist_ok = |HLL estimate − exact| within
-      // slack·rsd·exact + 2 — the oracle computes the exact sides itself
-      // and pins the flag TRUE, so a strayed sketch hash-mismatches
-      // (the q_approx_distinct pattern). On orders, not lineitem: this
-      // verification shape deliberately pays exact+HLL (the Expand), and
-      // the contract is per-sketch, not per-byte — the cheaper table
-      // checks the same thing at a fifth of the bench cost
-      graft.operators.Profiling.profileTableApproxChecked(
-        rd(s, dir, "orders"))),
-    "q_profile_prod" -> ((s, dir) =>
-      // the ACTUAL 100 TB profile plan, bench-gated (round 18, closing the
-      // r17 "production profile cost unobserved" gap): one pass of
-      // map-side HLL partials over lineitem — NO Expand — with the exact
-      // distinct counts hoisted into plan literals from the memoized
-      // offline audit artifact (warmOffline pre-builds it, so the timed
-      // window prices only this plan). dist_ok pins each sketch within
-      // the contract band; the oracle computes exact n_rows/n_nulls and
-      // pins the flags TRUE (the q_profile_approx pattern)
-      graft.operators.Profiling.profileTableApproxAgainst(
-        rd(s, dir, "lineitem"), profileExactDistinctFor(s, dir))),
-    "q_skew_report" -> ((s, dir) =>
-      // group-size distribution scalars for a prospective join key — the
-      // numbers behind a salting/AQE-skew decision. Two cascaded aggs;
-      // the second runs over |keys| rows only
-      graft.operators.Profiling.skewReport(rd(s, dir, "orders"), "o_custkey")),
-    "q_outlier_mad" -> ((s, dir) =>
-      // robust per-group outlier gate: |x − median| > 3·MAD over integer
-      // cents (dyadic-exact medians — the q_grouped_median doctrine)
-      graft.operators.Profiling.outlierMad(rd(s, dir, "lineitem"),
-        "l_returnflag",
-        expr("cast(round(l_extendedprice * 100) as bigint)"), k = 3.0)),
-    "q_store_merge" -> ((s, dir) => {
-      // CDC merge into a bucketed snapshot store: deletes retire base
-      // rows, upserts insert-or-replace — all via ONE co-bucketed
-      // anti-join (no base shuffle; SourcesAndUdafSpec proves the
-      // exchange elision) plus a union. The changeset is derived
-      // deterministically from the snapshot itself: deletes (%13),
-      // updated prices (%7 minus the deletes), inserts under fresh
-      // negative keys (%11 — negative so no replica-offset corpus can
-      // collide at any GenScale factor)
-      val snap = rd(s, dir, "orders").select(
-        col("o_orderkey"), col("o_custkey"),
-        expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"),
-        col("o_orderstatus"))
-      val upd = snap
-        .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 13 =!= 0)
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("price_cents") + 100L).as("price_cents"),
-          lit("U").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      val ins = snap.filter(col("o_orderkey") % 11 === 0)
-        .select((col("o_orderkey") * -1L - 1L).as("o_orderkey"),
-          col("o_custkey"), col("price_cents"), lit("N").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      val del = snap.filter(col("o_orderkey") % 13 === 0)
-        .select(col("o_orderkey"),
-          lit(null).cast("bigint").as("o_custkey"),
-          lit(null).cast("bigint").as("price_cents"),
-          lit(null).cast("string").as("o_orderstatus"))
-        .withColumn("op", lit("delete"))
-      graft.sources.Sources.writeBucketed(snap, "graft_merge_base",
-        "o_orderkey", 8)
-      graft.sources.Sources.mergeIntoStore(s, "graft_merge_base",
-        upd.unionByName(ins).unionByName(del), "o_orderkey")
-      s.table("graft_merge_base").orderBy("o_orderkey")
-    }),
-    "q_corr_matrix" -> ((s, dir) =>
-      // pairwise Pearson over integral projections, ONE aggregate pass
-      // (df.stat.corr would run a job per pair); exact DECIMAL sums, so
-      // the result is independent of partition order — corr()'s streaming
-      // co-moments are not
-      graft.operators.Profiling.corrMatrix(rd(s, dir, "lineitem"), Seq(
-        "disc_pct" -> expr("cast(round(l_discount * 100) as bigint)"),
-        "price_cents" -> expr("cast(round(l_extendedprice * 100) as bigint)"),
-        "qty" -> expr("cast(round(l_quantity) as bigint)")))),
-    "q_quantile_bins" -> ((s, dir) =>
-      // quartile discretization + per-bin stats without a global-sort
-      // ntile window: boundaries from one percentile aggregate, binning
-      // via a broadcast cross join (quarter-grid probs are dyadic-exact).
-      // VERIFICATION-ONLY at scale: exact `percentile` buffers the full
-      // value multiset — q_quantile_bins_approx is the production twin
-      graft.operators.Profiling.quantileBins(rd(s, dir, "lineitem"),
-        expr("cast(round(l_extendedprice * 100) as bigint)"))),
-    "q_quantile_bins_approx" -> ((s, dir) =>
-      // the production-twin contract: the GK sketch boundaries the approx
-      // binning uses must have exact ranks within ±N/accuracy of each
-      // quartile (cumulative bin count through bin i IS boundary i's
-      // rank, so a passing check bounds every bin share); exact
-      // n/min/max/sum ride along so the oracle pins real values too
-      graft.operators.Profiling.quantileBinsApproxChecked(
-        rd(s, dir, "lineitem"),
-        expr("cast(round(l_extendedprice * 100) as bigint)"))),
-    "q_token_entropy" -> ((s, dir) =>
-      // corpus unigram Shannon entropy + type/token ratio in one row —
-      // the crawl-degeneracy gate; integer-NANOS c·ln c terms keep the
-      // sum order-independent (the q_unigram_lm doctrine)
-      TextAnalysis.corpusLexicalStats(rd(s, dir, "documents"), "text")),
-    "q_group_sample" -> ((s, dir) =>
-      // EXACTLY 20 docs per language by smallest md5 — fixed-size
-      // stratified eval sampling. The hash-prefix histogram prefilter
-      // keeps any one stratum from sorting through a single task; the
-      // result equals the oracle's naive full window bit-for-bit
-      Sampling.groupSampleK(rd(s, dir, "documents"), "lang",
-          col("doc_id"), k = 20)
-        .select("doc_id", "lang").orderBy("doc_id")),
-    "q_weighted_sample" -> ((s, dir) =>
-      // Efraimidis–Spirakis weighted k-sample (weight = n_chars) with
-      // md5-derived deterministic uniforms and integer-nanos scores:
-      // reproducible importance sampling as a pure projection + top-k
-      Sampling.weightedSampleK(rd(s, dir, "documents"), col("doc_id"),
-          col("n_chars"), k = 100)
-        .select("doc_id", "score_nanos").orderBy("score_nanos", "doc_id")),
-    "q_psi_drift" -> ((s, dir) => {
-      // PSI of doc length between the kept corpus (src0) and the rest of
-      // the crawl: reference-quartile bins, add-one smoothing, per-bin
-      // integer-nanos terms — the distribution-shift monitor between
-      // every crawl batch and the corpus it joins
-      val docs = rd(s, dir, "documents")
-      graft.operators.Profiling.psiDrift(
-        docs.filter(col("source") === "src0"),
-        docs.filter(col("source") =!= "src0"),
-        col("n_chars"))
-    }),
-    "q_psi_drift_approx" -> ((s, dir) => {
-      // the PSI production twin's contract: reference-side sketch
-      // quartiles (the bins psiDriftApprox cuts on) must satisfy the GK
-      // rank bound against the exact reference column; exact n_ref/n_cur
-      // ride along — exact `percentile` over the reference (the
-      // q_psi_drift audit path) buffers its full multiset, this does not
-      val docs = rd(s, dir, "documents")
-      graft.operators.Profiling.psiDriftApproxChecked(
-        docs.filter(col("source") === "src0"),
-        docs.filter(col("source") =!= "src0"),
-        col("n_chars"))
-    }),
-    "q_funnel" -> ((s, dir) =>
-      // ORDERED funnel: step i converts at the earliest step-i event
-      // strictly after step i−1's conversion — the min-ts shortcut would
-      // count purchase-before-click users. k−1 co-partitioned joins over
-      // shrinking survivor sets, no windows (Analytics scaladoc)
-      graft.operators.Analytics.funnel(rdEvents(s, dir),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"))),
-    "q_funnel_windowed" -> ((s, dir) =>
-      // the WINDOWED funnel real retention analysis runs: step i counts
-      // only when it lands within maxGap of step i−1's conversion
-      // (strictly after, inclusive upper bound) — integer-microsecond
-      // window arithmetic, exact and timezone-free on both engines
-      graft.operators.Analytics.funnel(rdEvents(s, dir),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"),
-        maxGapSeconds = Some(86400L))),
-    "q_retention" -> ((s, dir) =>
-      // weekly retention by first-event-day cohort: one first-event agg +
-      // one co-partitioned join-back carrying (user, cohort_day) only
-      graft.operators.Analytics.retentionCohorts(rdEvents(s, dir),
-        "user_id", "ts", maxWeeks = 4)),
-    "q_resample" -> ((s, dir) =>
-      // gap-filled daily resample per event type: dense key×day spine from
-      // a 2-row bounds agg (zero rows explicit); integer-cent sums are
-      // partition-order-independent where a double sum is not
-      graft.operators.Analytics.resampleDaily(rdEvents(s, dir),
-        "event_type", "ts", expr("cast(round(value * 100) as bigint)"))),
-    "q_rolling_active" -> ((s, dir) =>
-      // trailing-7-day active users, EXACT, via disjoint coverage
-      // intervals: each (user, day) covers up to its user's next active
-      // day, so a plain count per covered day IS the distinct count — no
-      // per-day count(DISTINCT), no w× explode-then-dedup
-      graft.operators.Analytics.rollingActive(rdEvents(s, dir),
-        "user_id", "ts", windowDays = 7)),
-    "q_constraints" -> ((s, dir) => {
-      // Deequ-style pre-flight gate over the TPC-H batch: each check is
-      // ONE column-pruned aggregate (or one anti-join for the FKs); the
-      // report is |checks| single-row frames unioned
-      import graft.operators.Analytics.Check
-      val orders = rd(s, dir, "orders")
-      val li = rd(s, dir, "lineitem")
-      graft.operators.Analytics.constraintReport(Seq(
-        Check.notNull("orders_custkey_notnull", orders, "o_custkey"),
-        Check.unique("orders_key_unique", orders, Seq("o_orderkey")),
-        Check.foreignKey("orders_customer_fk", orders, "o_custkey",
-          rd(s, dir, "customer"), "c_custkey"),
-        Check.foreignKey("lineitem_orders_fk", li, "l_orderkey",
-          orders, "o_orderkey"),
-        Check.acceptedValues("orders_status_enum", orders, "o_orderstatus",
-          Seq("O", "F", "P")),
-        Check.satisfies("lineitem_qty_range", li,
-          col("l_quantity") >= 1 && col("l_quantity") <= 50)))
-    }),
-    "q_ks_drift" -> ((s, dir) => {
-      // two-sample KS over doc length, exact: integer cross-products in
-      // DECIMAL(38,0), CDFs via the two-phase global prefix sum (never a
-      // one-partition window), one final division (Analytics scaladoc)
-      val docs = rd(s, dir, "documents")
-      graft.operators.Analytics.ksDrift(
-        docs.filter(col("source") === "src0"),
-        docs.filter(col("source") =!= "src0"),
-        col("n_chars"))
-    }),
-    "q_transitions" -> ((s, dir) =>
-      // first-order event-transition counts: per-user lag window (ordered
-      // by ts with event_id tiebreak — a total, engine-portable order),
-      // |types|² output rows
-      graft.operators.Analytics.transitionCounts(rdEvents(s, dir),
-        "user_id", "ts", "event_type", "event_id")),
-    "q_event_paths" -> ((s, dir) =>
-      // top event-type trigram paths: two leads over the same per-user
-      // (ts, event_id) window, one hash aggregate over ≤|types|³ paths,
-      // (count DESC, path) total-order top-20
-      graft.operators.Analytics.pathCounts(rdEvents(s, dir),
-        "user_id", "ts", "event_type", "event_id", len = 3, topK = 20)),
-    "q_interval_coverage" -> ((s, dir) =>
-      // union-of-intervals dwell time (10-minute hold per event): exact
-      // integer-micros sweep — two windows + two aggregates, all on the
-      // user-hash partitioning; never the |events|² self-join
-      graft.operators.Analytics.intervalCoverage(rdEvents(s, dir),
-        "user_id", "ts", holdSeconds = 600L)),
-    "q_decayed_sum" -> ((s, dir) =>
-      // 7-day-half-life decayed revenue per user: bucketed 2^−b weights
-      // keep every product an exact integer (decimal sum, one final
-      // power-of-two division) — the decay form that is engine-exact,
-      // unlike pow(λ, Δt) accumulation
-      graft.operators.Analytics.decayedSum(rdEvents(s, dir),
-        "user_id", "ts", expr("cast(round(value * 100) as bigint)"),
-        halfLifeDays = 7)),
-    "q_asof_tolerance" -> ((s, dir) => {
-      // pandas merge_asof parity: FORWARD direction (earliest event at or
-      // after the order date), 3-day tolerance (farther matches → NULL,
-      // order row kept), event_id tie rule — same one-shuffle union+window
-      // plan as q_asof_join, direction only flips the sort
-      val ord = rd(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-      val ev = rdEvents(s, dir).select(col("user_id").as("o_custkey"),
-        col("ts"), col("value"), col("event_id"))
-      Relational.asofJoinDirected(ord, ev, Seq("o_custkey"), "o_orderdate",
-          "ts", Seq("value"), direction = "forward",
-          toleranceSeconds = 259200L, rightTiebreak = Some("event_id"))
-        .select("o_orderkey", "o_custkey", "value")
-        .orderBy("o_orderkey")
-    }),
-    "q_trend_fit" -> ((s, dir) =>
-      // per-type OLS of cents on epoch-day: five exact decimal sufficient
-      // statistics in ONE hash aggregate, closed-form slope/intercept/R²
-      // as final correctly-rounded divisions
-      graft.operators.Profiling.trendFit(rdEvents(s, dir), "event_type",
-        datediff(to_date(col("ts")), lit("1970-01-01")),
-        expr("cast(round(value * 100) as bigint)"))),
-    "q_kappa" -> ((s, dir) =>
-      // chance-corrected agreement between the stored lang label and the
-      // n-gram heuristic's prediction: one contingency aggregate over the
-      // corpus, κ as a single exact-integer division
-      graft.operators.Profiling.agreementKappa(rd(s, dir, "documents"),
-        col("lang"), graft.operators.TextAnalysis.langId(col("text")))),
-    "q_attribution" -> ((s, dir) =>
-      // last-touch revenue attribution: each purchase credits the user's
-      // most recent preceding view/click within 7 days (lexicographic
-      // (ts, event_id) order; integer-microsecond window arithmetic);
-      // no-touch conversions land in the explicit '(none)' channel so
-      // the report sums to total revenue. One per-user window + a
-      // |channels|-row aggregate; cents are order-independent
-      graft.operators.Analytics.attributionLastTouch(rdEvents(s, dir),
-        "user_id", "ts", "event_type",
-        expr("cast(round(value * 100) as bigint)"), "event_id",
-        Seq("view", "click"), "purchase", windowSeconds = 604800L)),
-    "q_auc" -> ((s, dir) =>
-      // tie-corrected Mann-Whitney AUC of doc length against the
-      // is-English label: rank-sums as exact integers via the grouped
-      // two-phase prefix sum (never a SinglePartition window; products in
-      // DECIMAL(38,0)), one final rounded division
-      graft.operators.Profiling.rocAuc(rd(s, dir, "documents"),
-        col("n_chars"), col("lang") === "en")),
-    "q_chi_square" -> ((s, dir) =>
-      // chi-square independence of lang × source: one (a,b) hash-agg over
-      // the corpus, margins aggregated FROM the cell table and broadcast
-      // back; per-cell terms fixed to integer nanos before the sum
-      graft.operators.Profiling.chiSquare(rd(s, dir, "documents"),
-        col("lang"), col("source"))),
-    "q_histogram" -> ((s, dir) =>
-      // equi-width histogram of doc length: 1-row global bounds broadcast
-      // into one bucket-keyed aggregate; exact integer bucket arithmetic
-      // (non-negative operands keep div ≡ floor ≡ the oracle's //)
-      graft.operators.Profiling.histogramEquiWidth(rd(s, dir, "documents"),
-        col("n_chars"), k = 12)),
-    "q_fuzzy_join" -> ((s, dir) =>
-      // blocked Levenshtein record linkage over 40-char text prefixes:
-      // candidates share a (lang, 4-char-prefix) block — one shuffle on
-      // the block key, bucket-local self-join, O(40²) verify per pair;
-      // blocking is part of the semantics (exactly oracle-checkable).
-      // FIXED profile — quadratic past fixture scale by the block-size
-      // law (measured 10.1x at 10x data); the scaled twin below is the
-      // production form
-      graft.operators.TextAnalysis.fuzzyJoin(rd(s, dir, "documents"),
-        "doc_id", col("text"),
-        concat_ws("|", col("lang"), substring(col("text"), 1, 4)),
-        maxDist = 12, keyLen = 40)),
-    "q_fuzzy_join_scaled" -> ((s, dir) => {
-      // the corpus-scaled blocking profile (the simhash_hamming_scaled
-      // pattern): prefix length grows +1 char per 4x corpus, holding
-      // expected block size — and the candidates×verify term — near
-      // constant; resolves to the legacy profile at the test SFs, and the
-      // generated oracle pins the SAME derived length
-      lastFuzzyDir = Some(dir)
-      val len = fuzzyPrefixLen(docCountFor(s, dir))
-      graft.operators.TextAnalysis.fuzzyJoin(rd(s, dir, "documents"),
-        "doc_id", col("text"),
-        concat_ws("|", col("lang"), substring(col("text"), 1, len)),
-        maxDist = 12, keyLen = 40)
-    }),
-    "q_card_store" -> ((s, dir) => {
-      // incremental distinct-vocabulary tracking: per-source token
-      // cardinality estimates from the 3-batch accreted HLL sketch store
-      // (merge cost ∝ groups×batches sketch bytes, history never
-      // rescanned), under the q_profile_approx contract — the verification
-      // shape computes the exact side too and the oracle pins est_ok TRUE
-      val store = cardStoreFor(s, dir)
-      val exact = rd(s, dir, "documents").select(col("source"),
-          explode(filter(split(lower(trim(col("text"))), "\\s+"),
-            t => length(t) > lit(0))).as("__tok"))
-        .groupBy("source")
-        .agg(countDistinct(col("__tok")).cast(LongType).as("exact_distinct"))
-        .select(col("source").as("group_key"), col("exact_distinct"))
-      graft.operators.Profiling.cardinalityEstimatesChecked(s, store, exact,
-        lgK = 12)
-    }),
-    "q_jl_project" -> ((s, dir) =>
-      // Johnson-Lindenstrauss ±1 sign projection 64 → 16 in integer
-      // micros: exact signed integer sums (order-independent), sign matrix
-      // as plan literals — the dim-reduction front end that cuts every
-      // downstream distance scan 4x
-      graft.operators.Similarity.jlProjectMicros(rd(s, dir, "embeddings"),
-        "vec_id", "embedding", inDim = 64, outDim = 16)),
-    "q_pmi" -> ((s, dir) =>
-      // top-30 PMI collocations (min pair count 5): one checkpointed
-      // tokenize pass feeds pair + unigram aggregates; the PMI argument is
-      // one fixed-shape double product ratio of six exact longs, fixed to
-      // integer nanos; final cut is TakeOrdered on integer keys
-      graft.operators.TextAnalysis.topPmiBigrams(rd(s, dir, "documents"),
-        "text", k = 30, minPairCount = 5L)),
-    "q_cms_store" -> ((s, dir) => {
-      // incremental heavy-hitter tracking: exact top-20 token counts (the
-      // candidate side — verification shape) probed against the 3-batch
-      // accreted CMS store; cms_ok = exact ≤ est ≤ exact + ceil(eps·N),
-      // deterministic for fixed data, pinned TRUE by the oracle
-      val store = freqStoreFor(s, dir)
-      val exactTop = rd(s, dir, "documents").select(
-          explode(filter(split(lower(trim(col("text"))), "\\s+"),
-            t => length(t) > lit(0))).as("token"))
-        .groupBy("token")
-        .agg(count(lit(1)).cast(LongType).as("exact_cnt"))
-        .orderBy(col("exact_cnt").desc, col("token").asc)
-        .limit(20)
-      graft.operators.Profiling.frequencyEstimatesChecked(s, store,
-        exactTop, "token", eps = 0.001)
-    }),
-    "q_ndcg" -> ((s, dir) => {
-      // nDCG@10 of the quality ranking against length-derived graded
-      // relevance (quartile thresholds as literals): exact integer DCG/IDCG
-      // dot products over nanos-fixed discounts, ONE division at the end
-      import org.apache.spark.sql.expressions.Window
-      val sc = rd(s, dir, "documents").select(col("source"), col("doc_id"),
-        graft.operators.TextAnalysis.qualityScore(col("text")).as("__qs"),
-        col("n_chars"))
-      val wA = Window.partitionBy("source")
-        .orderBy(col("__qs").desc, col("doc_id").asc)
-      val ranked = sc.select(col("source"), col("doc_id"),
-        row_number().over(wA).as("rnk"),
-        when(col("n_chars") >= 420, 3L).when(col("n_chars") >= 300, 2L)
-          .when(col("n_chars") >= 180, 1L).otherwise(0L).as("rel"))
-      graft.operators.Profiling.ndcgAtK(ranked, "source", "doc_id", "rnk",
-        "rel", k = 10)
-    }),
-    "q_rbo" -> ((s, dir) => {
-      // rank-biased overlap between two per-source top-10 rankings (quality
-      // ranker vs naive length ranker): per-item W(max(ra,rb)) weights in
-      // integer nanos, one (source, doc) equi-join + one hash aggregate —
-      // cost ∝ groups·k, never corpus-sized
-      import org.apache.spark.sql.expressions.Window
-      val sc = rd(s, dir, "documents").select(col("source"), col("doc_id"),
-        graft.operators.TextAnalysis.qualityScore(col("text")).as("__qs"),
-        col("n_chars"))
-      val wA = Window.partitionBy("source")
-        .orderBy(col("__qs").desc, col("doc_id").asc)
-      val wB = Window.partitionBy("source")
-        .orderBy(col("n_chars").desc, col("doc_id").asc)
-      graft.operators.Profiling.rankRbo(
-        sc.select(col("source"), col("doc_id"),
-          row_number().over(wA).as("rnk")),
-        sc.select(col("source"), col("doc_id"),
-          row_number().over(wB).as("rnk")),
-        "source", "doc_id", "rnk", k = 10, p = 0.9)
-    }),
-    "q_chunk_overlap" -> ((s, dir) =>
-      // RAG chunker: 24-token windows advancing by 16 (8-token overlap),
-      // cover-all-tokens contract — pure projection + one Generate, no
-      // shuffle; chunk width bounded so embedding batches see uniform work
-      graft.operators.TextAnalysis.chunkTokenWindows(rd(s, dir, "documents"),
-        "doc_id", "text", chunkTokens = 24, strideTokens = 16)),
-    "q_source_jaccard" -> ((s, dir) =>
-      // pairwise token-SET Jaccard between sources: integer-exact
-      // inclusion-exclusion over one distinct (source, token) aggregate +
-      // one vocab-keyed join — the set complement of q_js_divergence
-      graft.operators.TextAnalysis.groupTokenJaccard(rd(s, dir, "documents"),
-        "source", "text")),
-    "q_js_divergence" -> ((s, dir) =>
-      // pairwise Jensen-Shannon divergence between source unigram
-      // distributions — the mixing diagnostic; ln2-reduction keeps the join
-      // common-vocabulary-sized, per-token terms fixed to integer nanos
-      graft.operators.TextAnalysis.groupJsDivergence(rd(s, dir, "documents"),
-        "source", "text")),
-    "q_jw_linkage" -> ((s, dir) =>
-      // blocked Jaro-Winkler record linkage over the same (lang, 4-char
-      // prefix) blocks as q_fuzzy_join, scored by the native codegen'd
-      // JaroWinklerExpr in integer MICROS — thresholding on the integer
-      // keeps the row set immune to last-ulp double drift vs the oracle.
-      // Verify kernel is O(keyLen·window) vs Levenshtein's O(keyLen²):
-      // the cheap scorer for the same candidate mass at 100 TB
-      graft.operators.TextAnalysis.jaroWinklerLinkage(rd(s, dir, "documents"),
-        "doc_id", col("text"),
-        concat_ws("|", col("lang"), substring(col("text"), 1, 4)),
-        minSimMicros = 850000L, keyLen = 40)),
-    "q_jw_linkage_scaled" -> ((s, dir) => {
-      // the corpus-scaled blocking profile (shared fuzzyPrefixLen law with
-      // q_fuzzy_join_scaled: prefix +1 char per 4x corpus holds expected
-      // block size — and candidates×verify — near constant); resolves to
-      // the legacy 4-char profile at the test SFs, and the generated
-      // oracle pins the SAME derived length
-      lastJwDir = Some(dir)
-      val len = fuzzyPrefixLen(docCountFor(s, dir))
-      graft.operators.TextAnalysis.jaroWinklerLinkage(rd(s, dir, "documents"),
-        "doc_id", col("text"),
-        concat_ws("|", col("lang"), substring(col("text"), 1, len)),
-        minSimMicros = 850000L, keyLen = 40)
-    }),
-    "q_jw_best_match" -> ((s, dir) =>
-      // entity-resolution survivor assignment: each record's single best
-      // Jaro-Winkler match within its block (integer-micros score, ties →
-      // smaller id, row_number window per record) — output stays linear in
-      // input no matter how dense the candidate graph gets
-      graft.operators.TextAnalysis.jaroWinklerBestMatch(rd(s, dir, "documents"),
-        "doc_id", col("text"),
-        concat_ws("|", col("lang"), substring(col("text"), 1, 4)),
-        minSimMicros = 800000L, keyLen = 40)),
-    "q_scd2_history" -> ((s, dir) => {
-      // SCD2 time-travel store: init + two CDC merges into a bucketed
-      // history table (each merge = ONE close-join on the co-bucketed key
-      // + a union; closed versions never rewritten). Batch 1 is the
-      // q_store_merge changeset (%7 upd / %11 ins / %13 del); batch 2
-      // upserts %9 keys (re-inserting any %9∧%13 deletions) with +500
-      // cents from the ORIGINAL price — all derivable in closed form by
-      // the oracle
-      val snap = rd(s, dir, "orders").select(
-        col("o_orderkey"), col("o_custkey"),
-        expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"),
-        col("o_orderstatus"))
-      val upd1 = snap
-        .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 13 =!= 0)
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("price_cents") + 100L).as("price_cents"),
-          lit("U").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      val ins1 = snap.filter(col("o_orderkey") % 11 === 0)
-        .select((col("o_orderkey") * -1L - 1L).as("o_orderkey"),
-          col("o_custkey"), col("price_cents"), lit("N").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      val del1 = snap.filter(col("o_orderkey") % 13 === 0)
-        .select(col("o_orderkey"),
-          lit(null).cast("bigint").as("o_custkey"),
-          lit(null).cast("bigint").as("price_cents"),
-          lit(null).cast("string").as("o_orderstatus"))
-        .withColumn("op", lit("delete"))
-      val ups2 = snap.filter(col("o_orderkey") % 9 === 0)
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("price_cents") + 500L).as("price_cents"),
-          lit("V").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      graft.sources.Sources.writeBucketed(
-        graft.sources.Sources.scd2Init(snap, 0L), "graft_scd2_hist",
-        "o_orderkey", 8)
-      graft.sources.Sources.scd2MergeIntoStore(s, "graft_scd2_hist",
-        upd1.unionByName(ins1).unionByName(del1), "o_orderkey", batch = 1L)
-      graft.sources.Sources.scd2MergeIntoStore(s, "graft_scd2_hist",
-        ups2, "o_orderkey", batch = 2L)
-      s.table("graft_scd2_hist").orderBy("o_orderkey", "valid_from")
-    }),
-    "q_scd2_asof" -> ((s, dir) => {
-      // time travel: the same two-batch history rebuilt as a pure frame
-      // chain, read back AS OF batch 1 — one validity filter; must equal
-      // the oracle's independent closed-form state-at-1
-      val snap = rd(s, dir, "orders").select(
-        col("o_orderkey"), col("o_custkey"),
-        expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"),
-        col("o_orderstatus"))
-      val upd1 = snap
-        .filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 13 =!= 0)
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("price_cents") + 100L).as("price_cents"),
-          lit("U").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      val ins1 = snap.filter(col("o_orderkey") % 11 === 0)
-        .select((col("o_orderkey") * -1L - 1L).as("o_orderkey"),
-          col("o_custkey"), col("price_cents"), lit("N").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      val del1 = snap.filter(col("o_orderkey") % 13 === 0)
-        .select(col("o_orderkey"),
-          lit(null).cast("bigint").as("o_custkey"),
-          lit(null).cast("bigint").as("price_cents"),
-          lit(null).cast("string").as("o_orderstatus"))
-        .withColumn("op", lit("delete"))
-      val ups2 = snap.filter(col("o_orderkey") % 9 === 0)
-        .select(col("o_orderkey"), col("o_custkey"),
-          (col("price_cents") + 500L).as("price_cents"),
-          lit("V").as("o_orderstatus"))
-        .withColumn("op", lit("upsert"))
-      import graft.sources.Sources
-      val hist = Sources.scd2Merge(
-        Sources.scd2Merge(Sources.scd2Init(snap, 0L),
-          upd1.unionByName(ins1).unionByName(del1), "o_orderkey", 1L),
-        ups2, "o_orderkey", 2L)
-      Sources.scd2SnapshotAsOf(hist, 1L).orderBy("o_orderkey")
-    }),
-    "q_corpus_mix" -> ((s, dir) =>
-      // the pretraining-mix table: per (source, lang) docs/tokens and
-      // exact-integer corpus shares — one grouped aggregate + a 1-row
-      // totals broadcast
-      TextAnalysis.corpusMixReport(rd(s, dir, "documents"),
-        Seq("source", "lang"), "text")),
-    "q_series_anomaly" -> ((s, dir) =>
-      // daily-rate anomaly flags over the dense per-type grid (gap days
-      // are explicit zeros, so silence is flaggable); k·MAD gate over
-      // dyadic-exact integer-count medians
-      graft.operators.Analytics.seriesAnomalies(rdEvents(s, dir),
-        "event_type", "ts", k = 2.0))
-  )
-
-  /** shared by q_cosine_topk (functions-based) and q_cosine_expr (native
-    * Catalyst expression) — both produce bit-identical similarities. */
-  private val CosineTopkOracle =
-    """SELECT query_id, neighbor_id, cos FROM (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             round(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))
-               / (sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))), 6) AS cos,
-             row_number() OVER (PARTITION BY q.vec_id
-               ORDER BY round(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[]))
-                 / (sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))), 6) DESC,
-                 c.vec_id) AS rn
-           FROM embeddings c JOIN embeddings q
-             ON q.vec_id <= 3 AND c.vec_id != q.vec_id)
-         WHERE rn <= 5 ORDER BY query_id, cos DESC, neighbor_id"""
-
-  /** full MinHash-LSH dedup pipeline in DuckDB SQL, generated with the SAME
-    * seed-42 affine parameters as Dedup.minhashDedupPortable. 16 hashes,
-    * 4 bands × 4 rows, threshold 0.5, 3-gram shingles. */
-  /** the portable MinHash signature + banding CTE chain (16 hashes / 4
-    * bands, seed-42 affine params), reading (doc_id, text) from `src`.
-    * Yields CTEs up to `banded` (doc_id, b, bk) with `sigs` available —
-    * shared by [[minhashDedupChainSql]] and the incremental-store oracle. */
-  private def minhashSigChainSql(src: String): String = {
-    val params = Dedup.hashParams(16)
-    val valuesList = params.zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}, ${b})" }.mkString(", ")
-    s"""tk AS (
-         SELECT doc_id, string_split_regex(
-           trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\\s+') AS t
-         FROM $src),
-       sh AS (
-         SELECT doc_id, concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-         FROM (SELECT doc_id, t,
-                 unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-               FROM tk)),
-       xs AS (
-         SELECT doc_id,
-           CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % 2147483648 AS x
-         FROM sh),
-       hs AS (
-         SELECT doc_id, hp.i AS i, min((hp.a * x + hp.b) % 2147483647) AS h
-         FROM xs CROSS JOIN (VALUES $valuesList) AS hp(i, a, b)
-         GROUP BY doc_id, hp.i),
-       sigs AS (
-         SELECT doc_id, list(h ORDER BY i) AS sig FROM hs GROUP BY doc_id),
-       banded AS (
-         SELECT doc_id, b,
-           md5(concat_ws(',',
-             CAST(sig[b*4+1] AS VARCHAR), CAST(sig[b*4+2] AS VARCHAR),
-             CAST(sig[b*4+3] AS VARCHAR), CAST(sig[b*4+4] AS VARCHAR))) AS bk
-         FROM sigs CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) bs)"""
-  }
-
-  /** the portable MinHash-LSH dedup CTE chain (est-jaccard ≥ threshold,
-    * drop-higher-id) over [[minhashSigChainSql]] — parameterized so composed
-    * pipelines (q_curation) can run the IDENTICAL verified chain over a
-    * filtered source. Yields CTEs up to `dups` (the distinct id_b set to
-    * drop). */
-  private def minhashDedupChainSql(src: String, threshold: Double): String =
-    s"""${minhashSigChainSql(src)},
-       pairs AS (
-         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-         FROM banded l JOIN banded r
-           ON l.b = r.b AND l.bk = r.bk AND l.doc_id < r.doc_id),
-       dups AS (
-         SELECT DISTINCT id_b FROM (
-           SELECT p.id_a, p.id_b,
-             len(list_filter(range(1, 17), i -> sa.sig[i] = sb.sig[i])) / 16.0 AS e
-           FROM pairs p
-           JOIN sigs sa ON sa.doc_id = p.id_a
-           JOIN sigs sb ON sb.doc_id = p.id_b)
-         WHERE e >= $threshold)"""
-
-  private val MinhashOracle: String =
-    s"""WITH ${minhashDedupChainSql("documents", 0.5)}
-       SELECT doc_id FROM documents
-       WHERE doc_id NOT IN (SELECT id_b FROM dups) ORDER BY doc_id"""
-
-  /** incremental-store dedup oracle: sigs/banding over ALL documents (per-doc
-    * results are independent of the split), candidates restricted to
-    * new-batch × stored (src0) rows — exactly the cross-store join of
-    * [[Dedup.minhashDedupAgainst]] with `portable = true`; survivors = new docs below the
-    * est-jaccard threshold against EVERY stored doc. */
-  private val DedupIncrementalOracle: String =
-    s"""WITH ${minhashSigChainSql("documents")},
-       cpairs AS (
-         SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-         FROM banded n
-         JOIN documents dn ON dn.doc_id = n.doc_id AND dn.source <> 'src0'
-         JOIN banded o ON n.b = o.b AND n.bk = o.bk
-         JOIN documents de ON de.doc_id = o.doc_id AND de.source = 'src0'),
-       dups AS (
-         SELECT DISTINCT new_id FROM cpairs p
-         JOIN sigs sa ON sa.doc_id = p.new_id
-         JOIN sigs sb ON sb.doc_id = p.old_id
-         WHERE len(list_filter(range(1, 17), i -> sa.sig[i] = sb.sig[i])) / 16.0 >= 0.5)
-       SELECT doc_id FROM documents
-       WHERE source <> 'src0' AND doc_id NOT IN (SELECT new_id FROM dups)
-       ORDER BY doc_id"""
-
-  /** the planted-web-page + boilerplate-strip CTE chain, replicating
-    * [[plantWebPages]] + [[TextAnalysis.removeBoilerplateLines]] (ratio 0.5,
-    * minLineDocFreq 2) over `src`. Yields `web(doc_id, source, text)` —
-    * the cleaned corpus — for q_boilerplate and the composed
-    * q_curation_web. */
-  private def boilerplateChainSql(src: String): String =
-    s"""bp AS (
-         SELECT doc_id, source,
-           concat_ws(chr(10), concat('nav ', source, ' home'), text,
-             CASE WHEN doc_id % 40 < 20 THEN 'promo sale'
-                  ELSE 'no promo today' END,
-             concat('copyright ', source)) AS text
-         FROM $src),
-       bl AS (
-         SELECT doc_id, source, i AS pos, xs[i + 1] AS line
-         FROM (SELECT doc_id, source, xs,
-                 unnest(range(0, len(xs))) AS i
-               FROM (SELECT doc_id, source,
-                       string_split(text, chr(10)) AS xs FROM bp))),
-       bnd AS (SELECT source, count(DISTINCT doc_id) AS n
-               FROM bp GROUP BY source),
-       bldf AS (SELECT source, line, count(DISTINCT doc_id) AS df
-                FROM bl GROUP BY source, line),
-       boiler AS (
-         SELECT source, line FROM bldf JOIN bnd USING (source)
-         WHERE df >= 2 AND CAST(df AS DOUBLE) / n > 0.5),
-       bkept AS (
-         SELECT bl.doc_id, bl.pos, bl.line
-         FROM bl LEFT JOIN boiler b
-           ON bl.source = b.source AND bl.line = b.line
-         WHERE b.line IS NULL),
-       bagg AS (
-         SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text
-         FROM bkept GROUP BY doc_id),
-       web AS (
-         SELECT bp.doc_id, bp.source, coalesce(a.clean_text, '') AS text
-         FROM bp LEFT JOIN bagg a ON a.doc_id = bp.doc_id)"""
-
-  /** the language+quality gate CTE ("gate") — the q_quality_score /
-    * q_lang_guess CASE logic over `src`, shared by q_curation,
-    * q_curation_full, and (over the boilerplate-cleaned `web`)
-    * q_curation_web. */
-  private def gateCte(src: String): String =
-    s"""gate AS (
-         SELECT doc_id, text, source FROM (
-           SELECT doc_id, text, source,
-             CAST(length(text) AS DOUBLE) AS n,
-             round(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                 t -> list_contains(['the','a','an','of','to','and','in','is','it','that'], t)))
-               / len(string_split_regex(lower(trim(text)), '\\s+')), 6) AS sr,
-             string_split_regex(lower(trim(text)), '\\s+') AS tt
-           FROM $src)
-         WHERE round((
-             CASE WHEN n >= 100 AND n <= 10000 THEN 1.0
-                  WHEN n >= 20 THEN 0.5 ELSE 0.0 END
-           + CASE WHEN sr > 0.05 THEN 1.0 ELSE 0.0 END
-           + CASE WHEN (n - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / n <= 0.2
-                  THEN 1.0 ELSE 0.0 END) / 3.0, 6) >= 0.6
-           AND (SELECT CASE
-                  WHEN he = 0 AND hs = 0 AND hf = 0 AND hd = 0 THEN 'und'
-                  WHEN he >= hs AND he >= hf AND he >= hd THEN 'en'
-                  WHEN hs >= hf AND hs >= hd THEN 'es'
-                  WHEN hf >= hd THEN 'fr' ELSE 'de' END
-                FROM (SELECT
-                  len(list_filter(tt, x -> list_contains(['the','and','of','is'], x))) AS he,
-                  len(list_filter(tt, x -> list_contains(['el','los','las','es'], x))) AS hs,
-                  len(list_filter(tt, x -> list_contains(['le','les','est','une'], x))) AS hf,
-                  len(list_filter(tt, x -> list_contains(['der','die','das','ist'], x))) AS hd)) = 'en')"""
-
-  /** q_lm_perplexity's threshold, ln-fixed at plan time and shared with
-    * the oracle (the rboWeightsNanos literal-sharing pattern). Chosen so
-    * the fixture corpus SPLITS (both kept outcomes occur at every test
-    * SF) — a threshold past the distribution edge would verify the gate
-    * vacuously. */
-  private val LmPerplexityMaxPpl: Double = 30.0
-
-  /** the store-gated twin's threshold (fit on src0, score everything):
-    * ln 34 ≈ 3.526 sits between the sf0.001 corpus median ln_ppl (3.541)
-    * and the sf0.01 one (3.514), so BOTH kept outcomes occur at every
-    * test SF on both sides of the median — the same split-the-fixture
-    * doctrine as [[LmPerplexityMaxPpl]]. */
-  private val LmStoreMaxPpl: Double = 34.0
-
-  /** add-one bigram scoring of `scoreSrc` against an LM fit on `fitSrc`
-    * (ends with `lsc`: doc_id, n_bigrams, sn) — the persisted-LM (CCNet)
-    * shape: unseen pairs/contexts coalesce to count 0 (the add-one
-    * floor). Shared by q_lm_store and the composed q_curation_ppl_store.
-    * Replays the ACCRETED store exactly: batch-split fit counts sum to
-    * these whole-fit counts, so a dropped or double-applied batch surfaces
-    * as a hash mismatch. */
-  private def lmStoreChainSql(fitSrc: String, scoreSrc: String): String =
-    s"""lftok AS (
-         SELECT doc_id, u['t'] AS t, u['p'] AS p FROM (
-           SELECT doc_id, unnest(list_transform(
-             string_split_regex(lower(trim(text)), '\\s+'),
-             (x, i) -> {'t': x, 'p': i})) AS u
-           FROM $fitSrc)
-         WHERE len(u['t']) > 0),
-       lfpairs AS (
-         SELECT a.doc_id, a.t AS t1, a.t || ' ' || b.t AS pair
-         FROM lftok a JOIN lftok b ON a.doc_id = b.doc_id AND b.p = a.p + 1),
-       lfpc AS (SELECT pair, count(*) AS cnt_ab FROM lfpairs GROUP BY pair),
-       lfuc AS (SELECT t1, count(*) AS cnt_a FROM lfpairs GROUP BY t1),
-       lfvv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM lfuc),
-       lstok AS (
-         SELECT doc_id, u['t'] AS t, u['p'] AS p FROM (
-           SELECT doc_id, unnest(list_transform(
-             string_split_regex(lower(trim(text)), '\\s+'),
-             (x, i) -> {'t': x, 'p': i})) AS u
-           FROM $scoreSrc)
-         WHERE len(u['t']) > 0),
-       lspairs AS (
-         SELECT a.doc_id, a.t AS t1, a.t || ' ' || b.t AS pair
-         FROM lstok a JOIN lstok b ON a.doc_id = b.doc_id AND b.p = a.p + 1),
-       lsc AS (
-         SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           sum(CAST(round(ln((CAST(coalesce(lfpc.cnt_ab, 0) AS DOUBLE) + 1.0)
-               / (CAST(coalesce(lfuc.cnt_a, 0) AS DOUBLE)
-                  + CAST(lfvv.v AS DOUBLE))) * 1e9)
-             AS BIGINT)) AS sn
-         FROM lspairs s LEFT JOIN lfpc USING (pair) LEFT JOIN lfuc USING (t1)
-         CROSS JOIN lfvv
-         GROUP BY s.doc_id)"""
-
-  private def LmStoreOracle: String = {
-    val lnMaxNanos = math.round(math.log(LmStoreMaxPpl) * 1e9)
-    s"""WITH ${lmStoreChainSql(
-        "(SELECT * FROM documents WHERE source = 'src0')", "documents")}
-       SELECT d.doc_id,
-         coalesce(lsc.n_bigrams, 0) AS n_bigrams,
-         round(-CAST(lsc.sn AS DOUBLE) / lsc.n_bigrams / 1e9, 6) AS ln_ppl,
-         coalesce(-lsc.sn <= $lnMaxNanos * lsc.n_bigrams, false) AS kept
-       FROM documents d LEFT JOIN lsc USING (doc_id)
-       ORDER BY d.doc_id"""
-  }
-
-  /** q_curation_ppl_store in DuckDB: the persisted-LM gate (fit on src0,
-    * absolute threshold) feeding the SAME composed curation chain as
-    * [[CurationPplOracle]]. */
-  private def CurationPplStoreOracle: String = {
-    val lnMaxNanos = math.round(math.log(LmStoreMaxPpl) * 1e9)
-    s"""WITH ${lmStoreChainSql(
-        "(SELECT * FROM documents WHERE source = 'src0')", "documents")},
-       fluent AS (
-         SELECT d.* FROM documents d JOIN lsc USING (doc_id)
-         WHERE -lsc.sn <= $lnMaxNanos * lsc.n_bigrams),
-       ${gateCte("fluent")},
-       exact AS (
-         SELECT doc_id, text, source FROM gate WHERE doc_id IN (
-           SELECT min(doc_id) FROM gate
-           GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))),
-       ${minhashDedupChainSql("exact", 0.5)}
-       SELECT doc_id, source FROM exact
-       WHERE doc_id NOT IN (SELECT id_b FROM dups)
-         AND CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 10000 < 5000
-       ORDER BY doc_id"""
-  }
-
-  /** the add-one-smoothed bigram scoring CTEs over `src` (ends with `sc`:
-    * doc_id, n_bigrams, sn) — shared by q_lm_perplexity and the composed
-    * q_curation_ppl so the gate and its composition cannot drift. Same
-    * tok/pairs/pc/uc shapes as q_bigram_lm; V = context-vocabulary size
-    * rides as a 1-row cross join. */
-  private def lmPplChainSql(src: String): String =
-    s"""ptok AS (
-         SELECT doc_id, u['t'] AS t, u['p'] AS p FROM (
-           SELECT doc_id, unnest(list_transform(
-             string_split_regex(lower(trim(text)), '\\s+'),
-             (x, i) -> {'t': x, 'p': i})) AS u
-           FROM $src)
-         WHERE len(u['t']) > 0),
-       ppairs AS (
-         SELECT a.doc_id, a.t AS t1, a.t || ' ' || b.t AS pair
-         FROM ptok a JOIN ptok b ON a.doc_id = b.doc_id AND b.p = a.p + 1),
-       ppc AS (SELECT pair, count(*) AS cnt_ab FROM ppairs GROUP BY pair),
-       puc AS (SELECT t1, count(*) AS cnt_a FROM ppairs GROUP BY t1),
-       pvv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM puc),
-       sc AS (
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           sum(CAST(round(ln((CAST(cnt_ab AS DOUBLE) + 1.0)
-               / (CAST(cnt_a AS DOUBLE) + CAST(v AS DOUBLE))) * 1e9)
-             AS BIGINT)) AS sn
-         FROM ppairs JOIN ppc USING (pair) JOIN puc USING (t1)
-         CROSS JOIN pvv
-         GROUP BY doc_id)"""
-
-  private def LmPerplexityOracle: String = {
-    val lnMaxNanos = math.round(math.log(LmPerplexityMaxPpl) * 1e9)
-    s"""WITH ${lmPplChainSql("documents")}
-       SELECT d.doc_id,
-         coalesce(sc.n_bigrams, 0) AS n_bigrams,
-         round(-CAST(sc.sn AS DOUBLE) / sc.n_bigrams / 1e9, 6) AS ln_ppl,
-         coalesce(-sc.sn <= $lnMaxNanos * sc.n_bigrams, false) AS kept
-       FROM documents d LEFT JOIN sc USING (doc_id)
-       ORDER BY d.doc_id"""
-  }
-
-  /** the q_image_* oracle chain: replay of encodeSyntheticPngGroups'
-    * grouped multiplicative pixel law through the 9×8 NN sampling (source
-    * pixel (2x, 2y) of the 18×16 raster — the same integer mapping the
-    * Scala kernel applies) into gradient bits and the packed 64-bit
-    * dHash. Bit 63 is the BIGINT sign bit: DuckDB refuses 1 << 63, so it
-    * lands as the Long.MinValue literal (same two's-complement value the
-    * JVM shift produces). */
-  private val ImageDHashChainSql: String =
-    """im AS (
-         SELECT doc_id AS media_id,
-           CAST(doc_id % 4 AS BIGINT) AS mm,
-           2 * (((doc_id - doc_id % 4) * 2654435761) % 127) + 1 AS kk,
-           ((doc_id - doc_id % 4) * 40503) % 251 AS cc,
-           ((doc_id - doc_id % 4) * 69069) % 256 AS k3
-         FROM documents),
-       ig AS (
-         SELECT media_id, x, y,
-           ((2*x + 36*y + 1) * (2*x + 36*y + 1) * kk
-            + (2*x + 36*y + 1) * cc + (2*y) * (2*y) * k3
-            + CASE WHEN x = mm AND y = mm THEN 128 ELSE 0 END) % 256 AS v
-         FROM im, range(0, 9) rx(x), range(0, 8) ry(y)),
-       ib AS (
-         SELECT a.media_id, a.y * 8 + a.x AS bit
-         FROM ig a JOIN ig c ON a.media_id = c.media_id AND c.y = a.y
-           AND c.x = a.x + 1
-         WHERE a.x < 8 AND a.v < c.v),
-       ihash AS (
-         SELECT im.media_id,
-           coalesce(bit_or(CASE WHEN ib.bit = 63
-               THEN CAST(-9223372036854775808 AS BIGINT)
-               ELSE CAST(1 AS BIGINT) << ib.bit END), CAST(0 AS BIGINT))
-             AS dhash
-         FROM im LEFT JOIN ib USING (media_id) GROUP BY im.media_id)"""
-
-  private val ImageDHashOracle: String =
-    s"""WITH $ImageDHashChainSql
-       SELECT media_id, CAST(dhash AS BIGINT) AS dhash
-       FROM ihash ORDER BY media_id"""
-
-  /** q_image_dedup's oracle verifies the BANDED search against ALL-pairs
-    * hamming (affordable at the oracle's test-sized corpus): pigeonhole
-    * completeness means the Spark banding must land on exactly this
-    * survivor set. */
-  private val ImageDedupOracle: String =
-    s"""WITH $ImageDHashChainSql,
-       ip AS (
-         SELECT b.media_id AS id_b
-         FROM ihash a JOIN ihash b ON a.media_id < b.media_id
-         WHERE bit_count(xor(a.dhash, b.dhash)) <= 6)
-       SELECT media_id FROM ihash
-       WHERE media_id NOT IN (SELECT id_b FROM ip)
-       ORDER BY media_id"""
-
-  /** q_image_dedup_wide's oracle: the 16×8 grid's NN source is
-    * ((x·18) // 16, 2y), bits pack into the (lo: 0–59, hi: 60–119)
-    * two-long layout (every shift < 60 — no sign-bit workaround needed),
-    * and the survivor rule replays as all-pairs two-long hamming. */
-  /** the WIDE (16×8 grid, 120-bit) hash chain, ending at
-    * `iwh (media_id, lo, hi)` — shared by q_image_dedup_wide and
-    * q_image_store. */
-  private val ImageWideHashChainSql: String =
-    """im AS (
-         SELECT doc_id AS media_id,
-           CAST(doc_id % 4 AS BIGINT) AS mm,
-           2 * (((doc_id - doc_id % 4) * 2654435761) % 127) + 1 AS kk,
-           ((doc_id - doc_id % 4) * 40503) % 251 AS cc,
-           ((doc_id - doc_id % 4) * 69069) % 256 AS k3
-         FROM documents),
-       iw AS (
-         SELECT media_id, x, y,
-           (((x*18)//16 + 36*y + 1) * ((x*18)//16 + 36*y + 1) * kk
-            + ((x*18)//16 + 36*y + 1) * cc + (2*y) * (2*y) * k3
-            + CASE WHEN (x*18)//16 = 2*mm AND y = mm THEN 128 ELSE 0 END)
-             % 256 AS v
-         FROM im, range(0, 16) rx(x), range(0, 8) ry(y)),
-       iwb AS (
-         SELECT a.media_id, a.y * 15 + a.x AS bit
-         FROM iw a JOIN iw c ON a.media_id = c.media_id AND c.y = a.y
-           AND c.x = a.x + 1
-         WHERE a.x < 15 AND a.v < c.v),
-       iwh AS (
-         SELECT im.media_id,
-           coalesce(bit_or(CASE WHEN bit < 60
-               THEN CAST(1 AS BIGINT) << bit END), CAST(0 AS BIGINT)) AS lo,
-           coalesce(bit_or(CASE WHEN bit >= 60
-               THEN CAST(1 AS BIGINT) << (bit - 60) END), CAST(0 AS BIGINT))
-             AS hi
-         FROM im LEFT JOIN iwb USING (media_id) GROUP BY im.media_id)"""
-
-  private val ImageDedupWideOracle: String =
-    s"""WITH $ImageWideHashChainSql,
-       iwp AS (
-         SELECT b.media_id AS id_b
-         FROM iwh a JOIN iwh b ON a.media_id < b.media_id
-         WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 6)
-       SELECT media_id FROM iwh
-       WHERE media_id NOT IN (SELECT id_b FROM iwp)
-       ORDER BY media_id"""
-
-  /** q_image_store's oracle: the probe slice against the seed slice as
-    * all-pairs two-long hamming — banding completeness (pigeonhole at the
-    * store's persisted band layout) makes the Spark probe ≡ this. */
-  private val ImageStoreOracle: String =
-    s"""WITH $ImageWideHashChainSql,
-       seedh AS (SELECT * FROM iwh WHERE media_id % 8 < 2),
-       newh AS (SELECT * FROM iwh WHERE media_id % 8 >= 2),
-       dropd AS (
-         SELECT DISTINCT n.media_id
-         FROM newh n JOIN seedh s
-           ON bit_count(xor(n.lo, s.lo)) + bit_count(xor(n.hi, s.hi)) <= 6)
-       SELECT media_id FROM newh
-       WHERE media_id NOT IN (SELECT media_id FROM dropd)
-       ORDER BY media_id"""
-
-  /** the audio energy-hash chain (grouped PCM law → 16-sample window
-    * energies → gradient bits → two-long pack), ending at
-    * `ah (media_id, lo, hi)` — shared by q_audio_dedup and q_audio_store. */
-  private val AudioWideHashChainSql: String =
-    """am AS (
-         SELECT doc_id AS media_id, CAST(doc_id % 4 AS BIGINT) AS mm,
-           2 * (((doc_id - doc_id % 4) * 2654435761) % 127) + 1 AS kk,
-           ((doc_id - doc_id % 4) * 40503) % 251 AS cc
-         FROM documents),
-       ae AS (
-         SELECT media_id, i // 16 AS w,
-           sum(abs(CASE WHEN i = mm * 16 THEN 2000
-               ELSE ((i+1)*(i+1)*kk + (i+1)*cc) % 4001 - 2000 END)) AS e
-         FROM am, range(0, 1936) r(i)
-         GROUP BY media_id, w),
-       ab AS (
-         SELECT a.media_id, a.w AS bit
-         FROM ae a JOIN ae b ON b.media_id = a.media_id AND b.w = a.w + 1
-         WHERE a.w < 120 AND a.e < b.e),
-       ah AS (
-         SELECT am.media_id,
-           coalesce(bit_or(CASE WHEN bit < 60
-               THEN CAST(1 AS BIGINT) << bit END), CAST(0 AS BIGINT)) AS lo,
-           coalesce(bit_or(CASE WHEN bit >= 60
-               THEN CAST(1 AS BIGINT) << (bit - 60) END), CAST(0 AS BIGINT))
-             AS hi
-         FROM am LEFT JOIN ab USING (media_id) GROUP BY am.media_id)"""
-
-  /** q_audio_dedup's oracle: the grouped PCM law through 16-sample window
-    * energies into gradient bits, two-long pack, all-pairs hamming — the
-    * audio mirror of [[ImageDedupWideOracle]]. */
-  private val AudioDedupOracle: String =
-    s"""WITH $AudioWideHashChainSql,
-       ap AS (
-         SELECT b.media_id AS id_b
-         FROM ah a JOIN ah b ON a.media_id < b.media_id
-         WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 6)
-       SELECT media_id FROM ah
-       WHERE media_id NOT IN (SELECT id_b FROM ap)
-       ORDER BY media_id"""
-
-  /** q_audio_store's oracle: the probe slice against the seed slice as
-    * all-pairs two-long hamming over the audio chain — banding completeness
-    * makes the Spark probe ≡ this (the [[ImageStoreOracle]] argument at the
-    * audio modality). */
-  private val AudioStoreOracle: String =
-    s"""WITH $AudioWideHashChainSql,
-       seedh AS (SELECT * FROM ah WHERE media_id % 8 < 2),
-       newh AS (SELECT * FROM ah WHERE media_id % 8 >= 2),
-       dropd AS (
-         SELECT DISTINCT n.media_id
-         FROM newh n JOIN seedh s
-           ON bit_count(xor(n.lo, s.lo)) + bit_count(xor(n.hi, s.hi)) <= 6)
-       SELECT media_id FROM newh
-       WHERE media_id NOT IN (SELECT media_id FROM dropd)
-       ORDER BY media_id"""
-
-  /** q_video_dedup's oracle: per-frame grouped pixel law (frame-0
-    * scramble for non-base members, per-frame phase c + 11f) through the
-    * wide-hash grid into frame-aligned pair matching — dup ⇔ ≥ 3 of 4
-    * frames within hamming 6. */
-  /** the per-frame video hash chain (grouped pixel law with frame-0
-    * scramble + per-frame phase, 16×8 wide-dHash grid, two-long pack),
-    * ending at `vh (media_id, f, lo, hi)` — shared by q_video_dedup and
-    * q_video_store. */
-  private val VideoWideHashChainSql: String =
-    """vm AS (
-         SELECT doc_id AS media_id, CAST(doc_id % 4 AS BIGINT) AS mm,
-           2 * (((doc_id - doc_id % 4) * 2654435761) % 127) + 1 AS kk,
-           ((doc_id - doc_id % 4) * 40503) % 251 AS cc,
-           ((doc_id - doc_id % 4) * 69069) % 256 AS k3
-         FROM documents),
-       vfp AS (
-         SELECT media_id, mm, k3, f,
-           CASE WHEN f = 0 AND mm > 0 THEN kk + 2*mm ELSE kk END AS kf,
-           cc + 11*f AS cf
-         FROM vm, range(0, 4) rf(f)),
-       vw AS (
-         SELECT media_id, f, x, y,
-           (((x*18)//16 + 36*y + 1) * ((x*18)//16 + 36*y + 1) * kf
-            + ((x*18)//16 + 36*y + 1) * cf + (2*y)*(2*y)*k3
-            + CASE WHEN (x*18)//16 = 2*mm AND y = mm THEN 128 ELSE 0 END)
-             % 256 AS v
-         FROM vfp, range(0, 16) rx(x), range(0, 8) ry(y)),
-       vb AS (
-         SELECT a.media_id, a.f, a.y * 15 + a.x AS bit
-         FROM vw a JOIN vw c ON a.media_id = c.media_id AND c.f = a.f
-           AND c.y = a.y AND c.x = a.x + 1
-         WHERE a.x < 15 AND a.v < c.v),
-       vh AS (
-         SELECT q.media_id, q.f,
-           coalesce(bit_or(CASE WHEN bit < 60
-               THEN CAST(1 AS BIGINT) << bit END), CAST(0 AS BIGINT)) AS lo,
-           coalesce(bit_or(CASE WHEN bit >= 60
-               THEN CAST(1 AS BIGINT) << (bit - 60) END), CAST(0 AS BIGINT))
-             AS hi
-         FROM (SELECT DISTINCT media_id, f FROM vfp) q
-         LEFT JOIN vb ON vb.media_id = q.media_id AND vb.f = q.f
-         GROUP BY q.media_id, q.f)"""
-
-  /** q_video_store's oracle: probe clips against seed clips as
-    * frame-aligned all-pairs hamming with the ≥ least(3, n_frames) vote —
-    * every fixture clip has 4 sampled frames, so the clamp resolves to 3
-    * here (the short-clip arm is exercised by OperatorsSpec + the
-    * streaming replay test, not the oracle). */
-  private val VideoStoreOracle: String =
-    s"""WITH $VideoWideHashChainSql,
-       seedh AS (SELECT * FROM vh WHERE media_id % 8 < 2),
-       newh AS (SELECT * FROM vh WHERE media_id % 8 >= 2),
-       vsp AS (
-         SELECT n.media_id, s.media_id AS sid, count(*) AS mf
-         FROM newh n JOIN seedh s ON n.f = s.f
-         WHERE bit_count(xor(n.lo, s.lo)) + bit_count(xor(n.hi, s.hi)) <= 6
-         GROUP BY 1, 2),
-       dropd AS (SELECT DISTINCT media_id FROM vsp WHERE mf >= 3)
-       SELECT media_id FROM (SELECT DISTINCT media_id FROM newh)
-       WHERE media_id NOT IN (SELECT media_id FROM dropd)
-       ORDER BY media_id"""
-
-  /** q_video_dedup_scaled's oracle: the grouped pixel law with
-    * GROUP-VARYING frame count nf = 3 + (group index) % 3, frame-aligned
-    * pair matching, and the fraction vote — dup ⇔ matched ≥
-    * ceil(0.75 · min(nf_a, nf_b)). 0.75 is dyadic and nf ≤ 5, so the
-    * product is IEEE-exact in both engines. */
-  private val VideoDedupScaledOracle: String =
-    """WITH vsm AS (
-         SELECT doc_id AS media_id, CAST(doc_id % 4 AS BIGINT) AS mm,
-           2 * (((doc_id - doc_id % 4) * 2654435761) % 127) + 1 AS kk,
-           ((doc_id - doc_id % 4) * 40503) % 251 AS cc,
-           ((doc_id - doc_id % 4) * 69069) % 256 AS k3,
-           3 + ((doc_id - doc_id % 4) // 4) % 3 AS nf
-         FROM documents),
-       vsfp AS (
-         SELECT media_id, mm, k3, f,
-           CASE WHEN f = 0 AND mm > 0 THEN kk + 2*mm ELSE kk END AS kf,
-           cc + 11*f AS cf
-         FROM vsm, range(0, 5) rf(f) WHERE f < nf),
-       vsw AS (
-         SELECT media_id, f, x, y,
-           (((x*18)//16 + 36*y + 1) * ((x*18)//16 + 36*y + 1) * kf
-            + ((x*18)//16 + 36*y + 1) * cf + (2*y)*(2*y)*k3
-            + CASE WHEN (x*18)//16 = 2*mm AND y = mm THEN 128 ELSE 0 END)
-             % 256 AS v
-         FROM vsfp, range(0, 16) rx(x), range(0, 8) ry(y)),
-       vsb AS (
-         SELECT a.media_id, a.f, a.y * 15 + a.x AS bit
-         FROM vsw a JOIN vsw c ON a.media_id = c.media_id AND c.f = a.f
-           AND c.y = a.y AND c.x = a.x + 1
-         WHERE a.x < 15 AND a.v < c.v),
-       vsh AS (
-         SELECT q.media_id, q.f,
-           coalesce(bit_or(CASE WHEN bit < 60
-               THEN CAST(1 AS BIGINT) << bit END), CAST(0 AS BIGINT)) AS lo,
-           coalesce(bit_or(CASE WHEN bit >= 60
-               THEN CAST(1 AS BIGINT) << (bit - 60) END), CAST(0 AS BIGINT))
-             AS hi
-         FROM (SELECT DISTINCT media_id, f FROM vsfp) q
-         LEFT JOIN vsb ON vsb.media_id = q.media_id AND vsb.f = q.f
-         GROUP BY q.media_id, q.f),
-       vsp AS (
-         SELECT a.media_id AS id_a, b.media_id AS id_b, count(*) AS mf
-         FROM vsh a JOIN vsh b ON a.media_id < b.media_id AND a.f = b.f
-         WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 6
-         GROUP BY 1, 2),
-       vsd AS (
-         SELECT DISTINCT p.id_b
-         FROM vsp p JOIN vsm a ON a.media_id = p.id_a
-           JOIN vsm b ON b.media_id = p.id_b
-         WHERE p.mf >= ceil(0.75 * least(a.nf, b.nf)))
-       SELECT media_id FROM (SELECT DISTINCT media_id FROM vsh)
-       WHERE media_id NOT IN (SELECT id_b FROM vsd)
-       ORDER BY media_id"""
-
-  private val VideoDedupOracle: String =
-    s"""WITH $VideoWideHashChainSql,
-       vp AS (
-         SELECT a.media_id AS id_a, b.media_id AS id_b, count(*) AS mf
-         FROM vh a JOIN vh b ON a.media_id < b.media_id AND a.f = b.f
-         WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 6
-         GROUP BY 1, 2),
-       vd AS (SELECT DISTINCT id_b FROM vp WHERE mf >= 3)
-       SELECT media_id FROM (SELECT DISTINCT media_id FROM vh)
-       WHERE media_id NOT IN (SELECT id_b FROM vd)
-       ORDER BY media_id"""
-
-  /** q_curation_ppl in DuckDB: the perplexity gate ([[lmPplChainSql]],
-    * same integer threshold literal) feeding the SAME composed curation
-    * chain as [[CurationOracle]] — the fluent survivors are the chain's
-    * input corpus. */
-  private def CurationPplOracle: String = {
-    val lnMaxNanos = math.round(math.log(LmPerplexityMaxPpl) * 1e9)
-    s"""WITH ${lmPplChainSql("documents")},
-       fluent AS (
-         SELECT d.* FROM documents d JOIN sc USING (doc_id)
-         WHERE -sc.sn <= $lnMaxNanos * sc.n_bigrams),
-       ${gateCte("fluent")},
-       exact AS (
-         SELECT doc_id, text, source FROM gate WHERE doc_id IN (
-           SELECT min(doc_id) FROM gate
-           GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))),
-       ${minhashDedupChainSql("exact", 0.5)}
-       SELECT doc_id, source FROM exact
-       WHERE doc_id NOT IN (SELECT id_b FROM dups)
-         AND CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 10000 < 5000
-       ORDER BY doc_id"""
-  }
-
-  /** q_curation in DuckDB: the COMPOSED curation pass — quality + language
-    * gates (the q_quality_score / q_lang_guess CASE logic), fingerprint
-    * dedup (min doc_id per md5 of normalized text), the portable
-    * MinHash-LSH near-dedup chain over the SURVIVORS, then the md5
-    * hash-sample filter. Every stage is the already-verified oracle
-    * fragment; the composition verifies that the operators chain. */
-  private val CurationOracle: String =
-    s"""WITH ${gateCte("documents")},
-       exact AS (
-         SELECT doc_id, text, source FROM gate WHERE doc_id IN (
-           SELECT min(doc_id) FROM gate
-           GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))),
-       ${minhashDedupChainSql("exact", 0.5)}
-       SELECT doc_id, source FROM exact
-       WHERE doc_id NOT IN (SELECT id_b FROM dups)
-         AND CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 10000 < 5000
-       ORDER BY doc_id"""
-
-  /** q_curation_web in DuckDB: the boilerplate strip feeding the SAME
-    * composed curation chain as [[CurationOracle]], with the gates /
-    * dedups / sample running over the CLEANED text (`web` from
-    * [[boilerplateChainSql]] instead of raw `documents`). */
-  private val CurationWebOracle: String =
-    s"""WITH ${boilerplateChainSql("documents")},
-       ${gateCte("web")},
-       exact AS (
-         SELECT doc_id, text, source FROM gate WHERE doc_id IN (
-           SELECT min(doc_id) FROM gate
-           GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))),
-       ${minhashDedupChainSql("exact", 0.5)}
-       SELECT doc_id, source FROM exact
-       WHERE doc_id NOT IN (SELECT id_b FROM dups)
-         AND CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 10000 < 5000
-       ORDER BY doc_id"""
-
-  /** q_curation_full in DuckDB: the full composed pass — gate → learned
-    * quality filter (the q_quality_model scorer over gate survivors) →
-    * benchmark decontamination (pooled src0 shingles from the FULL corpus,
-    * the q_contamination logic) → fingerprint dedup → portable MinHash-LSH
-    * near-dedup → shared-span (8-token window) dedup → hash sample. Every
-    * fragment is an already-verified oracle chain; the composition verifies
-    * the stages CHAIN in the order the Spark pipeline runs them. */
-  /** the shared full-curation prefix (gate → learned filter →
-    * decontamination → fingerprint dedup → MinHash near-dedup), ending at
-    * `near (doc_id, text, source)` — q_curation_full appends the span
-    * doc-DROP tail, q_curation_excise the span EXCISION tail. */
-  private val CurationFullChainSql: String = {
-    val qvals = TextAnalysis.syntheticQualityModel().zipWithIndex
-      .map { case (w, b) => s"($b, $w)" }.mkString(", ")
-    s"""WITH ${gateCte("documents")},
-       qw(b, wm) AS (VALUES $qvals),
-       qsc AS (
-         SELECT qbx.doc_id, count(*) AS nt, CAST(sum(qw.wm) AS BIGINT) AS sw
-         FROM (SELECT doc_id,
-                 CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT)
-                   % 2147483648 % 256 AS b
-               FROM (SELECT doc_id, unnest(string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\\s+')) AS t
-                     FROM gate) qtk) qbx
-         JOIN qw ON qw.b = qbx.b
-         GROUP BY qbx.doc_id),
-       mq AS (
-         SELECT g.doc_id, g.text, g.source FROM gate g
-         JOIN qsc ON qsc.doc_id = g.doc_id
-         WHERE CAST(round(CAST(qsc.sw AS DOUBLE) / qsc.nt) AS BIGINT) / 1e6
-                 >= -0.15),
-       cbs AS (
-         SELECT DISTINCT concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-         FROM (SELECT t, unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-               FROM (SELECT string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\\s+') AS t
-                     FROM documents WHERE source = 'src0') cbt) cbu),
-       cds AS (
-         SELECT DISTINCT doc_id, s FROM (
-           SELECT doc_id, concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-           FROM (SELECT doc_id, t,
-                   unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-                 FROM (SELECT doc_id, string_split_regex(
-                         trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                         '\\s+') AS t
-                       FROM mq) ctk) csh0) csh1),
-       csc AS (
-         SELECT doc_id, count(*) AS ns,
-           CAST(sum(CASE WHEN s IN (SELECT s FROM cbs) THEN 1 ELSE 0 END)
-             AS BIGINT) AS nh
-         FROM cds GROUP BY doc_id),
-       dec AS (
-         SELECT m.doc_id, m.text, m.source FROM mq m
-         WHERE m.doc_id NOT IN (
-           SELECT doc_id FROM csc
-           WHERE round(CAST(nh AS DOUBLE) / ns, 6) >= 0.8)),
-       exact AS (
-         SELECT doc_id, text, source FROM dec WHERE doc_id IN (
-           SELECT min(doc_id) FROM dec
-           GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))),
-       ${minhashDedupChainSql("exact", 0.5)},
-       near AS (
-         SELECT doc_id, text, source FROM exact
-         WHERE doc_id NOT IN (SELECT id_b FROM dups)),
-       ssh AS (
-         SELECT doc_id, i AS pos,
-           concat_ws(' ', t[i+1], t[i+2], t[i+3], t[i+4],
-                          t[i+5], t[i+6], t[i+7], t[i+8]) AS s
-         FROM (SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS i
-               FROM (SELECT doc_id, string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\\s+') AS t
-                     FROM near) stk
-               WHERE len(t) >= 8) ssg)"""
-  }
-
-  private val CurationFullOracle: String = CurationFullChainSql + """,
-       sfl AS (
-         SELECT DISTINCT b.doc_id AS id_b
-         FROM ssh a JOIN ssh b ON a.s = b.s AND a.doc_id < b.doc_id)
-       SELECT doc_id, source FROM near
-       WHERE doc_id NOT IN (SELECT id_b FROM sfl)
-         AND CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 10000 < 5000
-       ORDER BY doc_id"""
-
-  /** q_curation_excise in DuckDB: the same composed prefix, with the span
-    * stage upgraded from doc-drop to EXCISION — matched-window coverage in
-    * the later doc, ordered reassembly, empty-husk gate, then the same
-    * hash sample. */
-  private val CurationExciseOracle: String = CurationFullChainSql + """,
-       sm AS (
-         SELECT b.doc_id AS id_b, b.pos AS pb
-         FROM ssh a JOIN ssh b ON a.s = b.s AND a.doc_id < b.doc_id),
-       scov AS (
-         SELECT DISTINCT id_b AS doc_id, pb + j AS pos
-         FROM sm, range(0, 8) rj(j)),
-       ntk AS (
-         SELECT doc_id, i AS pos, t[i+1] AS tok
-         FROM (SELECT doc_id, t, unnest(range(0, len(t))) AS i
-               FROM (SELECT doc_id, string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\s+') AS t
-                     FROM near) ntk0) ntk1),
-       keptn AS (
-         SELECT n.doc_id, n.pos, n.tok
-         FROM ntk n LEFT JOIN scov c ON c.doc_id = n.doc_id AND c.pos = n.pos
-         WHERE c.doc_id IS NULL),
-       aggn AS (
-         SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-         FROM keptn GROUP BY doc_id)
-       SELECT n.doc_id, coalesce(aggn.text, '') AS text
-       FROM near n LEFT JOIN aggn USING (doc_id)
-       WHERE length(coalesce(aggn.text, '')) > 0
-         AND CAST(concat('0x', substr(md5(CAST(n.doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-               % 10000 < 5000
-       ORDER BY n.doc_id"""
-
-  /** q_curation_mm in DuckDB: the gate + caption-fingerprint-dedup
-    * fragments of [[CurationOracle]], the wide image-hash chain
-    * ([[ImageWideHashChainSql]]) restricted to the text survivors, keep-min
-    * image near-dedup within them — a pair survives iff BOTH modalities
-    * survive. A def (not val): it references ImageWideHashChainSql, which
-    * is declared later in the object. */
-  private def CurationMmOracle: String =
-    s"""WITH ${gateCte("documents")},
-       exact AS (
-         SELECT doc_id, text, source FROM gate WHERE doc_id IN (
-           SELECT min(doc_id) FROM gate
-           GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))),
-       $ImageWideHashChainSql,
-       mmh AS (
-         SELECT iwh.media_id, iwh.lo, iwh.hi
-         FROM iwh JOIN exact ON iwh.media_id = exact.doc_id),
-       mmp AS (
-         SELECT b.media_id AS id_b
-         FROM mmh a JOIN mmh b ON a.media_id < b.media_id
-         WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 6)
-       SELECT doc_id, source FROM exact
-       WHERE doc_id NOT IN (SELECT id_b FROM mmp)
-       ORDER BY doc_id"""
-
-  /** transitive (connected-components) MinHash-LSH dedup in DuckDB SQL —
-    * same seed-42 portable pipeline as MinhashOracle up to the thresholded
-    * candidate pairs, then components via a recursive CTE (min reachable id
-    * per node) instead of the greedy drop-id_b policy. */
-  /** the md5-portable MinHash-LSH → similarity edges → recursive
-    * connected-components CTE chain (documents → `labels(id, label)`),
-    * shared by q_cluster_dedup (keep-min survivor) and q_cluster_keep_best
-    * (keep-longest survivor) — only the final survivor-policy SELECT
-    * differs. */
-  private val ClusterLabelsChainSql: String = {
-    val params = Dedup.hashParams(16)
-    val valuesList = params.zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}, ${b})" }.mkString(", ")
-    s"""WITH RECURSIVE tk AS (
-         SELECT doc_id, string_split_regex(
-           trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\\s+') AS t
-         FROM documents),
-       sh AS (
-         SELECT doc_id, concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-         FROM (SELECT doc_id, t,
-                 unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-               FROM tk)),
-       xs AS (
-         SELECT doc_id,
-           CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % 2147483648 AS x
-         FROM sh),
-       hs AS (
-         SELECT doc_id, hp.i AS i, min((hp.a * x + hp.b) % 2147483647) AS h
-         FROM xs CROSS JOIN (VALUES $valuesList) AS hp(i, a, b)
-         GROUP BY doc_id, hp.i),
-       sigs AS (
-         SELECT doc_id, list(h ORDER BY i) AS sig FROM hs GROUP BY doc_id),
-       banded AS (
-         SELECT doc_id, b,
-           md5(concat_ws(',',
-             CAST(sig[b*4+1] AS VARCHAR), CAST(sig[b*4+2] AS VARCHAR),
-             CAST(sig[b*4+3] AS VARCHAR), CAST(sig[b*4+4] AS VARCHAR))) AS bk
-         FROM sigs CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b) bs),
-       pairs AS (
-         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-         FROM banded l JOIN banded r
-           ON l.b = r.b AND l.bk = r.bk AND l.doc_id < r.doc_id),
-       sim AS (
-         SELECT p.id_a, p.id_b FROM pairs p
-         JOIN sigs sa ON sa.doc_id = p.id_a
-         JOIN sigs sb ON sb.doc_id = p.id_b
-         WHERE len(list_filter(range(1, 17), i -> sa.sig[i] = sb.sig[i])) / 16.0 >= 0.5),
-       edges AS (
-         SELECT id_a AS src, id_b AS dst FROM sim
-         UNION SELECT id_b, id_a FROM sim),
-       reach(id, r) AS (
-         SELECT src, src FROM edges
-         UNION
-         SELECT e.src, rr.r FROM edges e JOIN reach rr ON e.dst = rr.id),
-       labels AS (SELECT id, min(r) AS label FROM reach GROUP BY id)"""
-  }
-
-  /** int8 ANN oracle, shared verbatim by q_ann_int8 and its store twin:
-    * re-derive the per-vector scale (max|x|/127 on double-widened floats —
-    * exact both engines), round-half-away cells, integer dot (exact in
-    * double well below 2^53), rank by qdot·scale with id ties, display by
-    * vec_id. */
-  private val AnnInt8Oracle: String =
-    """WITH qs AS (
-         SELECT embedding AS qe,
-           greatest(list_max(list_transform(embedding,
-             x -> abs(CAST(x AS DOUBLE)))) / 127.0, 1e-30) AS qscale
-         FROM embeddings WHERE vec_id = 1),
-       qq AS (
-         SELECT list_transform(qe,
-           x -> CAST(round(CAST(x AS DOUBLE) / qscale) AS BIGINT)) AS qv
-         FROM qs),
-       v0 AS (
-         SELECT vec_id, embedding,
-           greatest(list_max(list_transform(embedding,
-             x -> abs(CAST(x AS DOUBLE)))) / 127.0, 1e-30) AS scale
-         FROM embeddings WHERE vec_id <> 1),
-       v1 AS (
-         SELECT vec_id, scale, list_transform(embedding,
-           x -> CAST(round(CAST(x AS DOUBLE) / scale) AS BIGINT)) AS qvec
-         FROM v0),
-       d AS (
-         SELECT vec_id, scale,
-           CAST(list_dot_product(qvec, (SELECT qv FROM qq)) AS BIGINT) AS qdot
-         FROM v1),
-       top AS (
-         SELECT vec_id, qdot FROM d
-         ORDER BY qdot * scale DESC, vec_id LIMIT 10)
-       SELECT vec_id, qdot FROM top ORDER BY vec_id"""
-
-  private val ClusterDedupOracle: String =
-    s"""$ClusterLabelsChainSql
-       SELECT doc_id FROM documents
-       WHERE doc_id NOT IN (SELECT id FROM labels WHERE label < id)
-       ORDER BY doc_id"""
-
-  /** keep-best survivor policy over the same components: each component
-    * keeps its member with max n_chars (ties toward the smaller id) —
-    * row_number over (n_chars DESC, id) replicates Spark's
-    * max(struct(score, −id, id)) aggregate exactly. */
-  private val ClusterKeepBestOracle: String =
-    s"""$ClusterLabelsChainSql,
-       scored AS (
-         SELECT l.id, l.label, d.n_chars
-         FROM labels l JOIN documents d ON d.doc_id = l.id),
-       best AS (
-         SELECT id FROM (
-           SELECT id, row_number() OVER (
-             PARTITION BY label ORDER BY n_chars DESC, id) AS rn
-           FROM scored)
-         WHERE rn = 1)
-       SELECT doc_id FROM documents
-       WHERE doc_id NOT IN (
-         SELECT id FROM scored WHERE id NOT IN (SELECT id FROM best))
-       ORDER BY doc_id"""
-
-  /** cluster-size histogram over the same components: per-label member
-    * counts → size histogram, plus the singleton row (docs in no pair) —
-    * pair-derived components are ≥ 2 members so the rows never collide. */
-  private val ClusterSizesOracle: String =
-    s"""$ClusterLabelsChainSql,
-       sizes AS (SELECT label, count(*) AS cluster_size FROM labels GROUP BY label),
-       hist AS (SELECT cluster_size, count(*) AS n_clusters
-                FROM sizes GROUP BY cluster_size),
-       singles AS (
-         SELECT 1 AS cluster_size, count(*) AS n_clusters FROM documents
-         WHERE doc_id NOT IN (SELECT id FROM labels))
-       SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
-              CAST(n_clusters AS BIGINT) AS n_clusters
-       FROM (SELECT * FROM hist
-             UNION ALL SELECT * FROM singles WHERE n_clusters > 0)
-       ORDER BY cluster_size"""
-
-  /** q_golden_record's oracle: the shared component chain, membership with
-    * singleton fallback (coalesce to own id — component labels are min ids,
-    * so cluster_id stays the min member id everywhere), then per-field
-    * survivorship as row_number over (n_chars DESC, id) — replicating the
-    * max-struct aggregate exactly (documents' fields are never null, so the
-    * non-null rank flag is constant on this fixture; null-skipping is
-    * ScalaTest-pinned). */
-  private val GoldenRecordOracle: String =
-    s"""$ClusterLabelsChainSql,
-       mem AS (
-         SELECT d.doc_id AS id, coalesce(l.label, d.doc_id) AS cl,
-                d.n_chars, d.lang, d.source
-         FROM documents d LEFT JOIN labels l ON l.id = d.doc_id),
-       r AS (
-         SELECT cl, lang, source,
-           row_number() OVER (PARTITION BY cl ORDER BY n_chars DESC, id)
-             AS rn
-         FROM mem),
-       cnt AS (
-         SELECT cl, CAST(count(*) AS BIGINT) AS n_members
-         FROM mem GROUP BY cl)
-       SELECT CAST(r.cl AS BIGINT) AS cluster_id, cnt.n_members,
-              r.lang, r.source
-       FROM r JOIN cnt ON cnt.cl = r.cl WHERE r.rn = 1
-       ORDER BY cluster_id"""
-
-  /** q_split_leakage's oracle: the shared candidate chain's `sim` pair set
-    * (threshold 0.5) crossed with the q_split_assign hash-interval
-    * assignment; split pair normalized lexicographically. The chain's
-    * unused component CTEs cost nothing — CTEs are lazy. */
-  private val SplitLeakageOracle: String =
-    s"""$ClusterLabelsChainSql,
-       sa AS (
-         SELECT doc_id, CASE WHEN b < 8000 THEN 'train'
-                             WHEN b < 9000 THEN 'val'
-                             WHEN b < 10000 THEN 'test'
-                             ELSE 'holdout' END AS sp
-         FROM (SELECT doc_id,
-                 CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) % 10000 AS b
-               FROM documents))
-       SELECT least(a.sp, b2.sp) AS split_a,
-              greatest(a.sp, b2.sp) AS split_b,
-              CAST(count(*) AS BIGINT) AS n_pairs
-       FROM sim
-       JOIN sa a ON a.doc_id = sim.id_a
-       JOIN sa b2 ON b2.doc_id = sim.id_b
-       WHERE a.sp <> b2.sp
-       GROUP BY 1, 2 ORDER BY 1, 2"""
-
-  /** the md5-portable 60-bit SimHash signature CTE chain (documents →
-    * (doc_id, sig)) — shared by q_simhash_oracle (hamming-0 dedup) and
-    * q_simhash_hamming (banded hamming ≤ 3 search). Distinct tokens, token
-    * hash = first 15 md5 hex chars (= the kernel's hash60Md5), per-bit
-    * majority vote over 60 positions. */
-  private def simhashSigChainSql(src: String): String =
-    s"""tk AS (
-         SELECT doc_id, list_distinct(string_split_regex(
-           trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\\s+')) AS t
-         FROM $src),
-       tx AS (
-         SELECT doc_id,
-           CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS x
-         FROM (SELECT doc_id, unnest(t) AS tok FROM tk)),
-       vb AS (
-         SELECT doc_id, i,
-           sum(CASE WHEN ((x >> i) & 1) = 1 THEN 1 ELSE -1 END) AS v
-         FROM tx CROSS JOIN (SELECT unnest(range(0, 60)) AS i) bits
-         GROUP BY doc_id, i),
-       sg AS (
-         SELECT doc_id,
-           CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS sig
-         FROM vb GROUP BY doc_id)"""
-
-  /** q_simhash_hamming_scaled in DuckDB: the WIDE two-long signature chain
-    * for any nBits ≤ 120 — same tokenizer CTE as [[simhashSigChainSql]],
-    * token hashes from BOTH md5 halves (hex chars 1-15 and 17-31, matching
-    * the kernel's single-digest lo/hi split), votes over nBits positions,
-    * the two-long (lo, hi) assembly, and 4 banded bucket keys whose
-    * lo/hi-straddling slices are generated with the SAME constants as
-    * [[graft.operators.Dedup.wideBandBits]]. */
-  private def simhashWideOracleSql(nBits: Int): String = {
-    require(nBits >= 1 && nBits <= 120, s"wide oracle supports <=120 bits, got $nBits")
-    val bands = 4
-    val base = nBits / bands
-    val rem = nBits % bands
-    val widths = (0 until bands).map(b => base + (if (b < rem) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val bandCases = (0 until bands).map { b =>
-      val off = offsets(b); val w = widths(b)
-      val loTake = math.max(0, math.min(60 - off, w))
-      val hiTake = w - loTake
-      val loPart =
-        if (loTake > 0) s"((lo >> $off) & ${(1L << loTake) - 1})" else "0"
-      val hiPart =
-        if (hiTake > 0)
-          s"(((hi >> ${math.max(0, off - 60)}) & ${(1L << hiTake) - 1}) << $loTake)"
-        else "0"
-      s"WHEN $b THEN $loPart | $hiPart"
-    }.mkString(" ")
-    s"""WITH tk AS (
-         SELECT doc_id, list_distinct(string_split_regex(
-           trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\\s+')) AS t
-         FROM documents),
-       tx AS (
-         SELECT doc_id,
-           CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS xlo,
-           CAST(concat('0x', substr(md5(tok), 17, 15)) AS BIGINT) AS xhi
-         FROM (SELECT doc_id, unnest(t) AS tok FROM tk)),
-       vb AS (
-         SELECT doc_id, i,
-           sum(CASE WHEN ((CASE WHEN i < 60 THEN (xlo >> i)
-                           ELSE (xhi >> (i - 60)) END) & 1) = 1
-               THEN 1 ELSE -1 END) AS v
-         FROM tx CROSS JOIN (SELECT unnest(range(0, $nBits)) AS i) bits
-         GROUP BY doc_id, i),
-       sg AS (
-         SELECT doc_id,
-           CAST(sum(CASE WHEN v > 0 AND i < 60
-             THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS lo,
-           CAST(sum(CASE WHEN v > 0 AND i >= 60
-             THEN (CAST(1 AS BIGINT) << (i - 60)) ELSE 0 END) AS BIGINT) AS hi
-         FROM vb GROUP BY doc_id),
-       banded AS (
-         SELECT doc_id, lo, hi, b, CASE b $bandCases END AS bb
-         FROM sg CROSS JOIN (SELECT unnest(range(0, $bands)) AS b) bs),
-       pairs AS (
-         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-           CAST(bit_count(xor(l.lo, r.lo)) + bit_count(xor(l.hi, r.hi))
-             AS BIGINT) AS hamming
-         FROM banded l JOIN banded r
-           ON l.b = r.b AND l.bb = r.bb AND l.doc_id < r.doc_id
-         WHERE bit_count(xor(l.lo, r.lo)) + bit_count(xor(l.hi, r.hi)) <= 3)
-       SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b"""
-  }
-
-  /** LSH-blocked n-gram similarity pipeline in DuckDB SQL, generated with
-    * the SAME seed-42 affine parameters as Dedup.ngramJaccardLsh with
-    * `portable = true`:
-    * 3-gram md5 min-hash (16 hashes), 8 bands
-    * × 2 rows, bucket-local candidate pairs, then the exact pair score
-    * (`scoreExpr` over distinct shingle lists `a.t` / `b.t`, aliased
-    * `scoreName`) ≥ threshold on candidates only. */
-  private def ngramLshOracle(scoreExpr: String, scoreName: String,
-                             threshold: Double): String = {
-    val params = Dedup.hashParams(16)
-    val valuesList = params.zipWithIndex
-      .map { case ((a, b), i) => s"($i, ${a}, ${b})" }.mkString(", ")
-    s"""WITH tk AS (
-         SELECT doc_id, string_split_regex(
-           trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\\s+') AS t
-         FROM documents),
-       sh AS (
-         SELECT doc_id, concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-         FROM (SELECT doc_id, t,
-                 unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-               FROM tk)),
-       xs AS (
-         SELECT doc_id,
-           CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % 2147483648 AS x
-         FROM sh),
-       hs AS (
-         SELECT doc_id, hp.i AS i, min((hp.a * x + hp.b) % 2147483647) AS h
-         FROM xs CROSS JOIN (VALUES $valuesList) AS hp(i, a, b)
-         GROUP BY doc_id, hp.i),
-       sigs AS (
-         SELECT doc_id, list(h ORDER BY i) AS sig FROM hs GROUP BY doc_id),
-       banded AS (
-         SELECT doc_id, b,
-           md5(concat_ws(',',
-             CAST(sig[b*2+1] AS VARCHAR), CAST(sig[b*2+2] AS VARCHAR))) AS bk
-         FROM sigs CROSS JOIN (SELECT unnest(range(0, 8)) AS b) bs),
-       pairs AS (
-         SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-         FROM banded l JOIN banded r
-           ON l.b = r.b AND l.bk = r.bk AND l.doc_id < r.doc_id),
-       dt AS (
-         SELECT doc_id, list_distinct(list(s)) AS t FROM sh GROUP BY doc_id)
-       SELECT id_a, id_b, $scoreName FROM (
-         SELECT p.id_a, p.id_b,
-           $scoreExpr AS $scoreName
-         FROM pairs p
-         JOIN dt a ON a.doc_id = p.id_a
-         JOIN dt b ON b.doc_id = p.id_b)
-       WHERE $scoreName >= $threshold ORDER BY id_a, id_b"""
-  }
-
-  private val NgramJaccardLshOracle: String = ngramLshOracle(
-    """round(len(list_filter(a.t, x -> list_contains(b.t, x)))
-             / (len(a.t) + len(b.t) - len(list_filter(a.t, x -> list_contains(b.t, x)))), 6)""",
-    "jaccard", 0.5)
-
-  /** CONTAMINATION chain, parameterized by corpus CTE/table and name
-    * prefix `p` (so composed pipelines can instantiate it beside other
-    * chains without CTE-name collisions): distinct 3-gram shingles per
-    * corpus doc (same tokenize/shingle shape as the containment oracle),
-    * pooled src0 shingles from the FULL documents table as the benchmark
-    * set, per-doc hit counts in `${p}sc`. DuckDB sum() returns HUGEINT —
-    * cast to BIGINT for the schema/hash compare. */
-  private def contaminationChainSql(corpusSrc: String, p: String): String =
-    s"""${p}bs AS (
-         SELECT DISTINCT concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-         FROM (SELECT t, unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-               FROM (SELECT string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\\s+') AS t
-                     FROM documents WHERE source = 'src0') ${p}bt) ${p}bu),
-       ${p}ds AS (
-         SELECT DISTINCT doc_id, s FROM (
-           SELECT doc_id, concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-           FROM (SELECT doc_id, t,
-                   unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-                 FROM (SELECT doc_id, string_split_regex(
-                         trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                         '\\s+') AS t
-                       FROM $corpusSrc) ${p}tk) ${p}sh0) ${p}sh1),
-       ${p}sc AS (
-         SELECT doc_id, count(*) AS n_shingles,
-           CAST(sum(CASE WHEN s IN (SELECT s FROM ${p}bs) THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_hits
-         FROM ${p}ds GROUP BY doc_id)"""
-
-  private val ContaminationOracle: String =
-    s"""WITH ${contaminationChainSql("documents", "")}
-       SELECT doc_id, n_shingles, n_hits,
-         round(CAST(n_hits AS DOUBLE) / n_shingles, 6) AS contamination
-       FROM sc ORDER BY doc_id"""
-
-  /** GROUND-TRUTH containment oracle: ALL pairs sharing ≥1 shingle (the
-    * only pairs with containment > 0), overlap counted by a pair-grouped
-    * aggregate over distinct postings (|A∩B| = count of shared shingles —
-    * no per-pair list_intersect, which is 30× slower at sf0.1). Because the
-    * Spark side's prefix filter is lossless, this checks the blocking's
-    * COMPLETENESS, not merely replicates it — a recall bug on either side
-    * hash-mismatches. */
-  private val NgramContainmentPrefixOracle: String =
-    """WITH tk AS (
-         SELECT doc_id, string_split_regex(
-           trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), '\s+') AS t
-         FROM documents),
-       sh AS (
-         SELECT doc_id, concat_ws(' ', t[i+1], t[i+2], t[i+3]) AS s
-         FROM (SELECT doc_id, t,
-                 unnest(range(0, greatest(len(t) - 3, 0) + 1)) AS i
-               FROM tk)),
-       ds AS (SELECT DISTINCT doc_id, s FROM sh),
-       sz AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY doc_id),
-       ov AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS ov
-         FROM ds a JOIN ds b ON a.s = b.s AND a.doc_id < b.doc_id
-         GROUP BY 1, 2)
-       SELECT id_a, id_b,
-         round(CAST(ov AS DOUBLE) / least(x.sz, y.sz), 6) AS containment
-       FROM ov JOIN sz x ON x.doc_id = id_a JOIN sz y ON y.doc_id = id_b
-       WHERE round(CAST(ov AS DOUBLE) / least(x.sz, y.sz), 6) >= 0.7
-       ORDER BY id_a, id_b"""
-
-  /** the hashing-trick QUALITY-MODEL chain, parameterized by source CTE/
-    * table: same md5 31-bit bucket hash as the portable-minhash base, same
-    * weight literals (integer micros → exact order-independent sums).
-    * Yields `qsc(doc_id, n_tokens, s)`; consumers apply the rounded-micros
-    * logit expression [[qualityLogitSql]]. */
-  private def qualityChainSql(src: String): String = {
-    val vals = TextAnalysis.syntheticQualityModel().zipWithIndex
-      .map { case (w, b) => s"($b, $w)" }.mkString(", ")
-    s"""qw(b, wm) AS (VALUES $vals),
-       qsc AS (
-         SELECT qbx.doc_id, count(*) AS n_tokens, CAST(sum(qw.wm) AS BIGINT) AS s
-         FROM (SELECT doc_id,
-                 CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT)
-                   % 2147483648 % 256 AS b
-               FROM (SELECT doc_id, unnest(string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\\s+')) AS t
-                     FROM $src) qtk) qbx
-         JOIN qw ON qw.b = qbx.b
-         GROUP BY qbx.doc_id)"""
-  }
-
-  /** the scale-0 rounded-micros logit over qsc columns — one expression,
-    * shared so the standalone and composed oracles can never diverge. */
-  private val qualityLogitSql: String =
-    "CAST(round(CAST(s AS DOUBLE) / n_tokens) AS BIGINT) / 1e6"
-
-  /** q_quality_model in DuckDB: the identical hashing-trick scorer, logit
-    * and keep decided from the same rounded bits as the Spark side. */
-  private val QualityModelOracle: String =
-    s"""WITH ${qualityChainSql("documents")}
-       SELECT doc_id, n_tokens,
-         $qualityLogitSql AS logit,
-         $qualityLogitSql >= 0.0 AS keep
-       FROM qsc ORDER BY doc_id"""
-
-  /** q_dedup_incr_exact AND q_dedup_incr_bloom: the planted incremental
-    * exact dedup — src0 fingerprints are the store, the new batch is every
-    * other source plus every src0 doc re-keyed (+1e6) as a guaranteed
-    * duplicate. One definition, two queries (the bloom prefilter is
-    * result-identical by no-false-negatives). */
-  private val DedupIncrExactOracle: String =
-    """WITH newb AS (
-         SELECT doc_id, text FROM documents WHERE source <> 'src0'
-         UNION ALL
-         SELECT doc_id + 1000000, text FROM documents WHERE source = 'src0')
-       SELECT doc_id FROM newb
-       WHERE md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-         NOT IN (
-           SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-           FROM documents WHERE source = 'src0')
-       ORDER BY doc_id"""
-
-  /** three deterministic synthetic domain models (distinct seeds) — the
-    * multi-class twin of [[TextAnalysis.syntheticQualityModel]]; the Spark
-    * query and the DuckDB oracle embed the SAME literals. */
-  private val DomainClassifyModels: Seq[(String, Seq[Long])] = Seq(
-    "news" -> TextAnalysis.syntheticQualityModel(256, 101L),
-    "code" -> TextAnalysis.syntheticQualityModel(256, 102L),
-    "chat" -> TextAnalysis.syntheticQualityModel(256, 103L))
-
-  /** q_domain_classify in DuckDB: per-(doc, class) mean hashed-bucket logit
-    * from the same weight literals, argmax with the same tie policy
-    * (highest logit, then first class in declaration order). */
-  private val DomainClassifyOracle: String = {
-    val vals = DomainClassifyModels.zipWithIndex.flatMap { case ((lbl, ws), k) =>
-      ws.zipWithIndex.map { case (w, b) => s"($k, '$lbl', $b, $w)" }
-    }.mkString(", ")
-    s"""WITH cw(k, lbl, b, wm) AS (VALUES $vals),
-       tb AS (
-         SELECT doc_id,
-           CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT)
-             % 2147483648 % 256 AS b
-         FROM (SELECT doc_id, unnest(string_split_regex(
-                 trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                 '\\s+')) AS t
-               FROM documents) x),
-       sc AS (
-         SELECT tb.doc_id, cw.k, cw.lbl, count(*) AS n,
-           CAST(sum(cw.wm) AS BIGINT) AS s
-         FROM tb JOIN cw ON cw.b = tb.b
-         GROUP BY 1, 2, 3),
-       best AS (
-         SELECT doc_id, CAST(n AS BIGINT) AS n_tokens, lbl AS label,
-           CAST(round(CAST(s AS DOUBLE) / n) AS BIGINT) / 1e6 AS logit,
-           row_number() OVER (PARTITION BY doc_id
-             ORDER BY CAST(round(CAST(s AS DOUBLE) / n) AS BIGINT) DESC,
-               k ASC) AS rn
-         FROM sc)
-       SELECT doc_id, n_tokens, label, logit
-       FROM best WHERE rn = 1 ORDER BY doc_id"""
-  }
-
-  /** shared CTE chain for the span-overlap oracles: positional 8-token
-    * windows (NO distinct — positions are the signal), window-equality
-    * self-join, per-(pair, diagonal) gaps-and-islands via row_number. A
-    * shared run of L ≥ 8 tokens is L−7 consecutive windows on one diagonal,
-    * so max(island)+7 is the longest verbatim shared run — ground truth for
-    * the Spark side's freq≥2-pruned join (the pruning is lossless, so this
-    * checks completeness, not merely the blocking). */
-  /** positional 8-token-window CTE (NO distinct — positions are the
-    * signal), parameterized by source and CTE name so the standalone and
-    * composed span oracles share one window definition. */
-  private def spanWindowsSql(src: String, cte: String): String =
-    s"""$cte AS (
-         SELECT doc_id, i AS pos,
-           concat_ws(' ', t[i+1], t[i+2], t[i+3], t[i+4],
-                          t[i+5], t[i+6], t[i+7], t[i+8]) AS s
-         FROM (SELECT doc_id, t, unnest(range(0, len(t) - 7)) AS i
-               FROM (SELECT doc_id, string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\\s+') AS t
-                     FROM $src) ${cte}tk
-               WHERE len(t) >= 8) ${cte}g)"""
-
-  private val SpanOverlapCte: String =
-    s"""WITH ${spanWindowsSql("documents", "sh")},
-       m AS (
-         SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.pos AS pa,
-           a.pos - b.pos AS d
-         FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id),
-       runs AS (
-         SELECT id_a, id_b, count(*) AS c
-         FROM (SELECT id_a, id_b, d, pa,
-                 pa - row_number() OVER (
-                   PARTITION BY id_a, id_b, d ORDER BY pa) AS grp
-               FROM m)
-         GROUP BY id_a, id_b, d, grp)"""
-
-  private val SpanOverlapOracle: String = SpanOverlapCte + """
-       SELECT id_a, id_b, CAST(max(c) + 7 AS BIGINT) AS max_run,
-         CAST(sum(c) AS BIGINT) AS n_windows
-       FROM runs GROUP BY id_a, id_b ORDER BY id_a, id_b"""
-
-  private val SpanDedupOracle: String = SpanOverlapCte + """
-       SELECT doc_id, source FROM documents
-       WHERE doc_id NOT IN (SELECT DISTINCT id_b FROM m)
-       ORDER BY doc_id"""
-
-  /** q_span_excise's oracle: the same detection chain, then the REMEDY —
-    * coverage = union of [pb, pb+8) over each matched window's position in
-    * the LATER doc, ordered reassembly of the uncovered normalized tokens,
-    * one row per input doc (empty text when fully excised). Verifies cut
-    * positions AND reassembly order, not just survivor ids. */
-  private val SpanExciseOracle: String = SpanOverlapCte + """,
-       cov AS (
-         SELECT DISTINCT id_b AS doc_id, pa - d + j AS pos
-         FROM m, range(0, 8) rj(j)),
-       dtk AS (
-         SELECT doc_id, i AS pos, t[i+1] AS tok
-         FROM (SELECT doc_id, t, unnest(range(0, len(t))) AS i
-               FROM (SELECT doc_id, string_split_regex(
-                       trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-                       '\s+') AS t
-                     FROM documents) dtk0) dtk1),
-       keptx AS (
-         SELECT n.doc_id, n.pos, n.tok
-         FROM dtk n LEFT JOIN cov c ON c.doc_id = n.doc_id AND c.pos = n.pos
-         WHERE c.doc_id IS NULL),
-       aggx AS (
-         SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-         FROM keptx GROUP BY doc_id)
-       SELECT d.doc_id, coalesce(aggx.text, '') AS text
-       FROM documents d LEFT JOIN aggx USING (doc_id)
-       ORDER BY doc_id"""
-
-  /** q_decontaminate_exact's STRING-exact ground truth: corpus and
-    * benchmark (src0) 8-token windows from the same shared window CTE,
-    * a doc is dropped iff any of its windows appears among the benchmark
-    * windows — verifying both the Spark side's xxhash64 window shortcut
-    * (a collision would flag a clean doc → hash mismatch) and the
-    * existence-only decision rule. */
-  private val ExactDecontaminateOracle: String =
-    s"""WITH ${spanWindowsSql("documents", "cw")},
-       ${spanWindowsSql(
-        "(SELECT doc_id, text FROM documents WHERE source = 'src0')", "bw")}
-       SELECT doc_id, source FROM documents
-       WHERE doc_id NOT IN (
-         SELECT DISTINCT c.doc_id FROM cw c JOIN bw b ON c.s = b.s)
-       ORDER BY doc_id"""
-
-  /** recall@10 of lshTopK(nBits=16, maxFlips=3) vs brute force in DuckDB:
-    * the seed-42 hyperplane weights are embedded as exact double literals
-    * (Double.toString round-trips, so DuckDB parses the identical bits), the
-    * per-plane dot products use list_dot_product (same left-to-right double
-    * accumulation as Spark's zip_with+aggregate — the bit-equality q_cosine's
-    * oracle already relies on), hamming ≤ 3 reproduces the multi-probe set,
-    * and the rounded-cosine rerank matches lshTopK's ordering exactly. */
-  /** q_lsh_recall LSH parameters — nBits ≈ log₂(fixture corpus), the
-    * small-corpus setting the lshTopK scaladoc prescribes (the 16-bit
-    * q_lsh_ann setting targets the 100× corpus). Oracle SQL below is
-    * generated from the same constants. */
-  private val LshRecallBits = 8
-  private val LshRecallFlips = 3
-
-  /** planted near-neighbor perturbations for q_lsh_recall_planted: 10 rows
-    * of seeded deterministic gaussians (java.util.Random(20260812) — the
-    * polar-method spec pins the exact bit sequence across JVMs), each
-    * normalized to unit length then scaled to ε = tan(acos(target)) for
-    * targets stepping 0.999 → 0.93. The fixture embeddings are unit-norm
-    * (|q| ≈ 1.0 at every sf), so a perturbation ~⊥ q of length ε yields
-    * cos(q, q+w) ≈ target — all ≫ the corpus's natural max (~0.51), which
-    * makes the exact brute-force top-10 the planted set by construction.
-    * Ids start at 100001, disjoint from every fixture corpus (max 1999).
-    * The same doubles are embedded as exact literals in the DuckDB oracle
-    * (Double.toString round-trips), and BOTH engines derive the planted
-    * vectors from the same data row with one IEEE addition per element. */
-  private val PlantedPerturbations: Seq[(Long, Seq[Double])] = {
-    val rng = new java.util.Random(20260812L)
-    (0 until 10).map { i =>
-      val g = Array.fill(64)(rng.nextGaussian())
-      val norm = math.sqrt(g.map(x => x * x).sum)
-      val eps = math.tan(math.acos(0.999 - i * (0.069 / 9.0)))
-      (100001L + i, g.map(_ * eps / norm).toSeq)
-    }
-  }
-
-  /** seed-42 hyperplane weights as a DuckDB VALUES list — Double.toString
-    * round-trips exactly, so DuckDB parses the identical bits the Spark-side
-    * kernel uses. hyperplanes(dim, n, seed) draws gaussians sequentially, so
-    * an n-bit list is a prefix-consistent extension of any shorter one. */
-  private def hyperplaneValues(nBits: Int): String =
-    Similarity.hyperplanes(64, nBits, 42L).zipWithIndex.flatMap {
-      case (plane, b) => plane.zipWithIndex.map { case (w, j) => s"($b, $j, $w)" }
-    }.mkString(", ")
-
-  private val LshRecallOracle: String = {
-    val valuesList = hyperplaneValues(LshRecallBits)
-    s"""WITH planes(b, j, w) AS (VALUES $valuesList),
-       pl AS (SELECT b, list(w ORDER BY j) AS pw FROM planes GROUP BY b),
-       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       q AS (SELECT v AS qv FROM e WHERE vec_id = 1),
-       c AS (SELECT vec_id, v FROM e WHERE vec_id != 1),
-       sigs AS (
-         SELECT c.vec_id,
-           CAST(sum(CASE WHEN list_dot_product(c.v, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS sig
-         FROM c CROSS JOIN pl GROUP BY c.vec_id),
-       qs AS (
-         SELECT CAST(sum(CASE WHEN list_dot_product(q.qv, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS qsig
-         FROM q CROSS JOIN pl),
-       cos AS (
-         SELECT c.vec_id,
-           round(list_dot_product(c.v, q.qv)
-             / (sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos
-         FROM c CROSS JOIN q),
-       lsh AS (
-         SELECT s.vec_id FROM sigs s CROSS JOIN qs
-         JOIN cos ON cos.vec_id = s.vec_id
-         WHERE len(list_filter(range(0, $LshRecallBits),
-                 i -> ((s.sig >> i) & 1) != ((qs.qsig >> i) & 1))) <= $LshRecallFlips
-         ORDER BY cos.cos DESC, s.vec_id LIMIT 10),
-       bf AS (SELECT vec_id FROM cos ORDER BY cos DESC, vec_id LIMIT 10),
-       m AS (SELECT count(*) AS nm FROM lsh JOIN bf USING (vec_id))
-       SELECT CAST(nm AS BIGINT) AS n_matched, round(nm / 10.0, 6) AS recall_at_10 FROM m"""
-  }
-
-  /** q_lsh_ann in DuckDB: the full 16-bit multi-probe ANN — signatures from
-    * the same seed-42 planes (exact double literals, left-to-right
-    * list_dot_product accumulation), the probe set as hamming ≤ 3 against
-    * the query signature, rounded-cosine rerank, top-10. Upgrades the ANN
-    * production query from rows-only to a full oracle (only the
-    * data-DEPENDENT sketches — HLL, IVF's sampled fit, xxhash64 — remain
-    * inherently rows-only). */
-  private val LshAnnOracle: String = {
-    s"""WITH planes(b, j, w) AS (VALUES ${hyperplaneValues(16)}),
-       pl AS (SELECT b, list(w ORDER BY j) AS pw FROM planes GROUP BY b),
-       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       q AS (SELECT v AS qv FROM e WHERE vec_id = 1),
-       c AS (SELECT vec_id, v FROM e WHERE vec_id != 1),
-       sigs AS (
-         SELECT c.vec_id,
-           CAST(sum(CASE WHEN list_dot_product(c.v, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS sig
-         FROM c CROSS JOIN pl GROUP BY c.vec_id),
-       qs AS (
-         SELECT CAST(sum(CASE WHEN list_dot_product(q.qv, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS qsig
-         FROM q CROSS JOIN pl),
-       cos AS (
-         SELECT c.vec_id,
-           round(list_dot_product(c.v, q.qv)
-             / (sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos
-         FROM c CROSS JOIN q)
-       SELECT s.vec_id, cos.cos AS cos FROM sigs s CROSS JOIN qs
-       JOIN cos ON cos.vec_id = s.vec_id
-       WHERE len(list_filter(range(0, 16),
-               i -> ((s.sig >> i) & 1) != ((qs.qsig >> i) & 1))) <= 3
-       ORDER BY cos.cos DESC, s.vec_id LIMIT 10"""
-  }
-
-  /** q_lsh_recall_planted in DuckDB: the [[LshRecallOracle]] chain at the
-    * PRODUCTION parameters (16 bits, ≤3 flips) over the corpus augmented
-    * with the 10 planted neighbors. The perturbation doubles are exact
-    * literals; DuckDB rebuilds each planted vector as qv[j] + w[j] (lists
-    * are 1-indexed, hence pj + 1) — the identical IEEE addition the Spark
-    * side performs driver-side — so signatures, probe set, rerank, and the
-    * recall fraction are all bit-pinned. */
-  private val LshRecallPlantedOracle: String = {
-    val pertValues = PlantedPerturbations.flatMap { case (id, w) =>
-      w.zipWithIndex.map { case (x, j) => s"($id, $j, $x)" }
-    }.mkString(", ")
-    s"""WITH planes(b, j, w) AS (VALUES ${hyperplaneValues(16)}),
-       pl AS (SELECT b, list(w ORDER BY j) AS pw FROM planes GROUP BY b),
-       pert(pid, pj, pw2) AS (VALUES $pertValues),
-       e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       q AS (SELECT v AS qv FROM e0 WHERE vec_id = 1),
-       planted AS (
-         SELECT pid AS vec_id, list(qv[pj + 1] + pw2 ORDER BY pj) AS v
-         FROM pert CROSS JOIN q GROUP BY pid),
-       c AS (SELECT vec_id, v FROM e0 WHERE vec_id != 1
-             UNION ALL SELECT vec_id, v FROM planted),
-       sigs AS (
-         SELECT c.vec_id,
-           CAST(sum(CASE WHEN list_dot_product(c.v, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS sig
-         FROM c CROSS JOIN pl GROUP BY c.vec_id),
-       qs AS (
-         SELECT CAST(sum(CASE WHEN list_dot_product(q.qv, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS qsig
-         FROM q CROSS JOIN pl),
-       cos AS (
-         SELECT c.vec_id,
-           round(list_dot_product(c.v, q.qv)
-             / (sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos
-         FROM c CROSS JOIN q),
-       lsh AS (
-         SELECT s.vec_id FROM sigs s CROSS JOIN qs
-         JOIN cos ON cos.vec_id = s.vec_id
-         WHERE len(list_filter(range(0, 16),
-                 i -> ((s.sig >> i) & 1) != ((qs.qsig >> i) & 1))) <= 3
-         ORDER BY cos.cos DESC, s.vec_id LIMIT 10),
-       bf AS (SELECT vec_id FROM cos ORDER BY cos DESC, vec_id LIMIT 10),
-       m AS (SELECT count(*) AS nm FROM lsh JOIN bf USING (vec_id))
-       SELECT CAST(nm AS BIGINT) AS n_matched,
-         round(nm / 10.0, 6) AS recall_at_10 FROM m"""
-  }
-
-  /** q_ivf_ann / q_ivf_recall in DuckDB: the full IVF probe path from the
-    * FITTED centroids. The sampled Lloyd's fit is deterministic driver math
-    * (vec_id-ordered sample, fixed seed), so the centroids are reproducible
-    * doubles embedded as exact literals (Double.toString round-trips) —
-    * the same technique q_lsh_recall uses for plane weights. DuckDB then
-    * replicates: argmin assignment ranked by `|c|² − 2·v·c` with ties to
-    * the lower cluster id (bit-identical — |c|² is the same literal both
-    * engines see, and list_dot_product matches Spark's left-to-right
-    * zip_with+aggregate accumulation), the nprobe probe ranking (same
-    * formula against the query vector), and the rounded-cosine rerank.
-    * Generated lazily from the model memoized by the query run — Verify
-    * evaluates oracleSql AFTER the query loop, one sf dir per process. */
-  private def ivfChainSql(model: Similarity.IvfModel, nprobe: Int): String = {
-    val cents = model.centers.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (w, j) => s"($i, $j, $w)" }
-    }.mkString(", ")
-    val norms = model.centers.zipWithIndex.map { case (c, i) =>
-      s"($i, ${Similarity.sqNorm(c)})"
-    }.mkString(", ")
-    s"""cents(ci, cj, cw) AS (VALUES $cents),
-       cl AS (SELECT ci, list(cw ORDER BY cj) AS cv FROM cents GROUP BY ci),
-       cn(ci, n2) AS (VALUES $norms),
-       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       q AS (SELECT v AS qv FROM e WHERE vec_id = 1),
-       c AS (SELECT vec_id, v FROM e WHERE vec_id != 1),
-       assign AS (
-         SELECT vec_id, ci FROM (
-           SELECT c.vec_id, cl.ci,
-             row_number() OVER (PARTITION BY c.vec_id
-               ORDER BY cn.n2 - 2.0 * list_dot_product(c.v, cl.cv), cl.ci) AS rn
-           FROM c CROSS JOIN cl JOIN cn ON cn.ci = cl.ci)
-         WHERE rn = 1),
-       probes AS (
-         SELECT cl.ci FROM cl JOIN cn ON cn.ci = cl.ci CROSS JOIN q
-         ORDER BY cn.n2 - 2.0 * list_dot_product(q.qv, cl.cv), cl.ci
-         LIMIT $nprobe),
-       cos AS (
-         SELECT c.vec_id,
-           round(list_dot_product(c.v, q.qv)
-             / (sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos
-         FROM c CROSS JOIN q),
-       ivf AS (
-         SELECT a.vec_id, cos.cos AS cos FROM assign a
-         JOIN cos ON cos.vec_id = a.vec_id
-         WHERE a.ci IN (SELECT ci FROM probes)
-         ORDER BY cos.cos DESC, a.vec_id LIMIT 10)"""
-  }
-
-  /** q_semdedup_pairs / q_semdedup in DuckDB: the full SemDeDup path from
-    * the same fitted centroid literals as the IVF oracles — argmin
-    * assignment (bit-identical ranking, ties to lower cluster id), within-
-    * cluster pairs, raw-cosine threshold, rounded emission. Cluster blocking
-    * is part of the SEMANTICS here (pairs in different cells are out of
-    * scope by design), so the oracle replicates the assignment exactly
-    * rather than approximating it. */
-  private def semDedupChainSql(model: Similarity.IvfModel,
-                               threshold: Double): String = {
-    val cents = model.centers.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (w, j) => s"($i, $j, $w)" }
-    }.mkString(", ")
-    val norms = model.centers.zipWithIndex.map { case (c, i) =>
-      s"($i, ${Similarity.sqNorm(c)})"
-    }.mkString(", ")
-    s"""cents(ci, cj, cw) AS (VALUES $cents),
-       cl AS (SELECT ci, list(cw ORDER BY cj) AS cv FROM cents GROUP BY ci),
-       cn(ci, n2) AS (VALUES $norms),
-       e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-             FROM embeddings),
-       assign AS (
-         SELECT vec_id, ci FROM (
-           SELECT e.vec_id, cl.ci,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY cn.n2 - 2.0 * list_dot_product(e.v, cl.cv), cl.ci) AS rn
-           FROM e CROSS JOIN cl JOIN cn ON cn.ci = cl.ci)
-         WHERE rn = 1),
-       sd AS (
-         SELECT id_a, id_b, round(raw, 6) AS cos FROM (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             list_dot_product(x.v, y.v)
-               / (sqrt(list_dot_product(x.v, x.v))
-                  * sqrt(list_dot_product(y.v, y.v))) AS raw
-           FROM assign a JOIN assign b
-             ON a.ci = b.ci AND a.vec_id < b.vec_id
-           JOIN e x ON x.vec_id = a.vec_id
-           JOIN e y ON y.vec_id = b.vec_id)
-         WHERE raw >= $threshold)"""
-  }
-
-  private def semDedupPairsOracle(model: Similarity.IvfModel): String =
-    s"""WITH ${semDedupChainSql(model, 0.35)}
-       SELECT id_a, id_b, cos FROM sd ORDER BY id_a, id_b"""
-
-  private def semDedupOracle(model: Similarity.IvfModel): String =
-    s"""WITH ${semDedupChainSql(model, 0.35)}
-       SELECT vec_id, label FROM embeddings
-       WHERE vec_id NOT IN (SELECT DISTINCT id_b FROM sd)
-       ORDER BY vec_id"""
-
-  /** PQ oracle chain: codebook + per-(subspace,code) sqNorm literals from
-    * the fitted model; DuckDB then replicates encode (argmin ranked by
-    * n2 − 2·dot, ties to the lower code — the ivfChainSql formula), the
-    * per-query LUT (nanos round matches the driver's HALF_UP — SQL round
-    * is half-away-from-zero in both engines), and the exact-integer ADC
-    * sum bit-for-bit. */
-  /** q_fuzzy_join (+ the scaled twin) in DuckDB: identical (lang, L-char
-    * prefix) blocking and 40-char-key Levenshtein verify; the scaled form
-    * is generated with the SAME docCount-derived L the query resolved. */
-  private def fuzzyJoinOracleSql(prefixLen: Int): String =
-    s"""WITH d AS (
-         SELECT doc_id, substr(text, 1, 40) AS k,
-           lang || '|' || substr(text, 1, $prefixLen) AS blk
-         FROM documents)
-       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         CAST(levenshtein(a.k, b.k) AS BIGINT) AS dist
-       FROM d a JOIN d b ON a.blk = b.blk AND a.doc_id < b.doc_id
-       WHERE levenshtein(a.k, b.k) <= 12
-       ORDER BY id_a, id_b"""
-
-  private def jwLinkageOracleSql(prefixLen: Int): String =
-    s"""WITH d AS (
-         SELECT doc_id, substr(text, 1, 40) AS k,
-           lang || '|' || substr(text, 1, $prefixLen) AS blk
-         FROM documents)
-       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         CAST(round(jaro_winkler_similarity(a.k, b.k) * 1e6) AS BIGINT)
-           AS sim_micros
-       FROM d a JOIN d b ON a.blk = b.blk AND a.doc_id < b.doc_id
-       WHERE CAST(round(jaro_winkler_similarity(a.k, b.k) * 1e6) AS BIGINT)
-         >= 850000
-       ORDER BY id_a, id_b"""
-
-  /** generated JL oracle: the ±1 sign literals come from the SAME
-    * Similarity.jlSigns the operator embeds (1-based i for DuckDB's
-    * list_transform index). */
-  private def jlOracleSql(inDim: Int, outDim: Int, seed: Long): String = {
-    val sgn = graft.operators.Similarity.jlSigns(inDim, outDim, seed)
-      .zipWithIndex.flatMap { case (row, j) =>
-        row.zipWithIndex.map { case (s, i) => s"($j, ${i + 1}, $s)" }
-      }.mkString(", ")
-    s"""WITH x AS (
-         SELECT vec_id, u['v'] AS v, u['i'] AS i FROM (
-           SELECT vec_id, unnest(list_transform(embedding,
-             (e, ix) -> {'v': e, 'i': ix})) AS u
-           FROM embeddings)),
-       sgn(j, i, s) AS (VALUES $sgn)
-       SELECT x.vec_id, CAST(sgn.j AS BIGINT) AS j,
-         CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1e6) AS BIGINT) * s)
-           AS BIGINT) AS y_micros
-       FROM x JOIN sgn ON sgn.i = x.i
-       GROUP BY x.vec_id, sgn.j
-       ORDER BY vec_id, j"""
-  }
-
-  /** generated RBO oracle: the k weight nanos and the normalizer come from
-    * the SAME Profiling.rboWeightsNanos/rboScale the operator uses, so both
-    * engines sum identical integers (the pqChainSql literal pattern). */
-  private def rboOracleSql(k: Int, p: Double): String = {
-    val wts = graft.operators.Profiling.rboWeightsNanos(k, p).zipWithIndex
-      .map { case (w, i) => s"(${i + 1}, $w)" }.mkString(", ")
-    val scale = graft.operators.Profiling.rboScale(k, p)
-    s"""WITH qx AS (
-         SELECT doc_id, source, n_chars, text,
-           CAST(length(text) AS DOUBLE) AS n,
-           round(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-               t -> list_contains(['the','a','an','of','to','and','in','is','it','that'], t)))
-             / len(string_split_regex(lower(trim(text)), '\\s+')), 6) AS sr
-         FROM documents),
-       sc AS (
-         SELECT doc_id, source, n_chars, round((
-             CASE WHEN n >= 100 AND n <= 10000 THEN 1.0
-                  WHEN n >= 20 THEN 0.5 ELSE 0.0 END
-           + CASE WHEN sr > 0.05 THEN 1.0 ELSE 0.0 END
-           + CASE WHEN (n - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / n <= 0.2
-                  THEN 1.0 ELSE 0.0 END) / 3.0, 6) AS quality
-         FROM qx),
-       ra AS (SELECT source, doc_id, row_number() OVER (
-                PARTITION BY source ORDER BY quality DESC, doc_id) AS r
-              FROM sc),
-       rb AS (SELECT source, doc_id, row_number() OVER (
-                PARTITION BY source ORDER BY n_chars DESC, doc_id) AS r
-              FROM sc),
-       wts(m, wn) AS (VALUES $wts),
-       j AS (SELECT ra.source, greatest(ra.r, rb.r) AS mx
-             FROM ra JOIN rb ON ra.source = rb.source
-               AND ra.doc_id = rb.doc_id
-             WHERE ra.r <= $k AND rb.r <= $k),
-       agg AS (SELECT source, CAST(count(*) AS BIGINT) AS n_overlap,
-                 sum(wn) AS sn
-               FROM j JOIN wts ON wts.m = j.mx GROUP BY source),
-       gs AS (SELECT DISTINCT source FROM sc)
-       SELECT gs.source, coalesce(n_overlap, 0) AS n_overlap,
-         round(coalesce(sn, 0) / 1e9 * CAST($scale AS DOUBLE), 6) AS rbo
-       FROM gs LEFT JOIN agg USING (source) ORDER BY source"""
-  }
-
-  /** generated nDCG oracle: position discounts from the SAME
-    * Profiling.ndcgDiscountsNanos the operator uses (the rboOracleSql
-    * pattern); grades + quality ranking replicated from verified
-    * fragments. */
-  private def ndcgOracleSql(k: Int): String = {
-    val disc = graft.operators.Profiling.ndcgDiscountsNanos(k).zipWithIndex
-      .map { case (d, i) => s"(${i + 1}, $d)" }.mkString(", ")
-    s"""WITH qx AS (
-         SELECT doc_id, source, n_chars, text,
-           CAST(length(text) AS DOUBLE) AS n,
-           round(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-               t -> list_contains(['the','a','an','of','to','and','in','is','it','that'], t)))
-             / len(string_split_regex(lower(trim(text)), '\\s+')), 6) AS sr
-         FROM documents),
-       sc AS (
-         SELECT doc_id, source, n_chars, round((
-             CASE WHEN n >= 100 AND n <= 10000 THEN 1.0
-                  WHEN n >= 20 THEN 0.5 ELSE 0.0 END
-           + CASE WHEN sr > 0.05 THEN 1.0 ELSE 0.0 END
-           + CASE WHEN (n - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / n <= 0.2
-                  THEN 1.0 ELSE 0.0 END) / 3.0, 6) AS quality
-         FROM qx),
-       ra AS (SELECT source, doc_id, n_chars, row_number() OVER (
-                PARTITION BY source ORDER BY quality DESC, doc_id) AS r
-              FROM sc),
-       g AS (SELECT source, r,
-               CASE WHEN n_chars >= 420 THEN 3
-                    WHEN n_chars >= 300 THEN 2
-                    WHEN n_chars >= 180 THEN 1 ELSE 0 END AS rel
-             FROM ra),
-       gg AS (SELECT source, r,
-                (CAST(1 AS BIGINT) << rel) - 1 AS gain,
-                row_number() OVER (PARTITION BY source
-                  ORDER BY rel DESC, r) AS ir
-              FROM g),
-       disc(m, dn) AS (VALUES $disc),
-       t AS (SELECT gg.source,
-               coalesce(CASE WHEN gg.r <= $k THEN gg.gain * d1.dn END, 0)
-                 AS dcg_t,
-               coalesce(CASE WHEN gg.ir <= $k THEN gg.gain * d2.dn END, 0)
-                 AS idcg_t
-             FROM gg LEFT JOIN disc d1 ON d1.m = gg.r
-             LEFT JOIN disc d2 ON d2.m = gg.ir),
-       agg AS (SELECT source, sum(dcg_t) AS dcg, sum(idcg_t) AS idcg
-               FROM t GROUP BY source)
-       SELECT source, CASE WHEN idcg = 0 THEN NULL
-         ELSE round(CAST(dcg AS DOUBLE) / CAST(idcg AS DOUBLE), 6) END
-         AS ndcg
-       FROM agg ORDER BY source"""
-  }
-
-  private def pqChainSql(model: Similarity.PqModel): String = {
-    val sub = model.subDim
-    val cbv = model.codebooks.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.flatMap { case (c, ci) =>
-        c.zipWithIndex.map { case (w, d) => s"($j, $ci, $d, $w)" }
-      }
-    }.mkString(", ")
-    val norms = model.codebooks.zipWithIndex.flatMap { case (book, j) =>
-      book.zipWithIndex.map { case (c, ci) =>
-        s"($j, $ci, ${Similarity.sqNorm(c)})"
-      }
-    }.mkString(", ")
-    s"""cbv(j, c, d, w) AS (VALUES $cbv),
-       cb AS (SELECT j, c, list(w ORDER BY d) AS w FROM cbv GROUP BY j, c),
-       cn(j, c, n2) AS (VALUES $norms),
-       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       q AS (SELECT v AS qv FROM e WHERE vec_id = 1),
-       corp AS (SELECT vec_id, v FROM e WHERE vec_id != 1),
-       js AS (SELECT unnest(range(0, ${model.m})) AS j),
-       qsub AS (
-         SELECT j, list_slice(qv, j * $sub + 1, j * $sub + $sub) AS qs
-         FROM q CROSS JOIN js),
-       lut AS (
-         SELECT cb.j, cb.c,
-           CAST(round((cn.n2 - 2.0 * list_dot_product(qs.qs, cb.w)) * 1e9)
-             AS BIGINT) AS nn
-         FROM cb JOIN cn ON cn.j = cb.j AND cn.c = cb.c
-         JOIN qsub qs ON qs.j = cb.j),
-       qn AS (
-         SELECT CAST(sum(CAST(round(list_dot_product(qs, qs) * 1e9)
-             AS BIGINT)) AS BIGINT) AS qn2
-         FROM qsub),
-       subv AS (
-         SELECT vec_id, j, list_slice(v, j * $sub + 1, j * $sub + $sub) AS sv
-         FROM corp CROSS JOIN js),
-       assign AS (
-         SELECT vec_id, j, c FROM (
-           SELECT s.vec_id, s.j, cb.c,
-             row_number() OVER (PARTITION BY s.vec_id, s.j
-               ORDER BY cn.n2 - 2.0 * list_dot_product(s.sv, cb.w), cb.c)
-               AS rn
-           FROM subv s JOIN cb ON cb.j = s.j
-           JOIN cn ON cn.j = cb.j AND cn.c = cb.c)
-         WHERE rn = 1),
-       adc AS (
-         SELECT a.vec_id, CAST(sum(l.nn) AS BIGINT) + max(qn.qn2) AS nanos
-         FROM assign a JOIN lut l ON l.j = a.j AND l.c = a.c CROSS JOIN qn
-         GROUP BY a.vec_id),
-       pq AS (
-         SELECT vec_id, round(CAST(nanos AS DOUBLE) / 1e9, 6) AS dist_sq
-         FROM adc ORDER BY nanos, vec_id LIMIT 10)"""
-  }
-
-  private def pqAnnOracle(model: Similarity.PqModel): String =
-    s"""WITH ${pqChainSql(model)}
-       SELECT vec_id, dist_sq FROM pq ORDER BY dist_sq, vec_id"""
-
-  private def pqRerankOracle(model: Similarity.PqModel): String =
-    s"""WITH ${pqChainSql(model)},
-       cand AS (SELECT vec_id FROM adc ORDER BY nanos, vec_id LIMIT 50),
-       rr AS (
-         SELECT c2.vec_id,
-           list_dot_product(v, v) - 2.0 * list_dot_product(v, qv)
-             + list_dot_product(qv, qv) AS raw
-         FROM corp c2 JOIN cand USING (vec_id) CROSS JOIN q)
-       SELECT vec_id, round(raw, 6) AS dist_sq
-       FROM rr ORDER BY raw, vec_id LIMIT 10"""
-
-  /** q_ivfpq_ann in DuckDB: the PQ ADC chain restricted to the IVF-probed
-    * cells — ivf centroid literals rank cells (same n2 − 2·dot form and
-    * lower-id ties as ivfChainSql) and assign each corpus row; the
-    * composite emits ADC over rows whose cell is probed. */
-  private def ivfPqAnnOracle(ivf: Similarity.IvfModel,
-                             pq: Similarity.PqModel): String = {
-    val icents = ivf.centers.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (w, j) => s"($i, $j, $w)" }
-    }.mkString(", ")
-    val inorms = ivf.centers.zipWithIndex.map { case (c, i) =>
-      s"($i, ${Similarity.sqNorm(c)})"
-    }.mkString(", ")
-    s"""WITH ${pqChainSql(pq)},
-       icents(ici, icj, icw) AS (VALUES $icents),
-       icl AS (SELECT ici, list(icw ORDER BY icj) AS icv
-               FROM icents GROUP BY ici),
-       icn(ici, in2) AS (VALUES $inorms),
-       iassign AS (
-         SELECT vec_id, ici FROM (
-           SELECT corp.vec_id, icl.ici,
-             row_number() OVER (PARTITION BY corp.vec_id
-               ORDER BY icn.in2 - 2.0 * list_dot_product(corp.v, icl.icv),
-                 icl.ici) AS rn
-           FROM corp CROSS JOIN icl JOIN icn ON icn.ici = icl.ici)
-         WHERE rn = 1),
-       iprobes AS (
-         SELECT icl.ici FROM icl JOIN icn ON icn.ici = icl.ici CROSS JOIN q
-         ORDER BY icn.in2 - 2.0 * list_dot_product(q.qv, icl.icv), icl.ici
-         LIMIT 4),
-       adcp AS (
-         SELECT adc.vec_id, adc.nanos FROM adc
-         JOIN iassign ON iassign.vec_id = adc.vec_id
-         WHERE iassign.ici IN (SELECT ici FROM iprobes)),
-       ipq AS (
-         SELECT vec_id, round(CAST(nanos AS DOUBLE) / 1e9, 6) AS dist_sq
-         FROM adcp ORDER BY nanos, vec_id LIMIT 10)
-       SELECT vec_id, dist_sq FROM ipq ORDER BY dist_sq, vec_id"""
-  }
-
-  private def pqRecallOracle(model: Similarity.PqModel): String =
-    s"""WITH ${pqChainSql(model)},
-       bf AS (
-         SELECT vec_id FROM corp CROSS JOIN q
-         ORDER BY list_dot_product(v, v) - 2.0 * list_dot_product(v, qv),
-           vec_id
-         LIMIT 10),
-       m AS (SELECT count(*) AS nm FROM pq JOIN bf USING (vec_id))
-       SELECT CAST(nm AS BIGINT) AS n_matched,
-         round(nm / 10.0, 6) AS recall_at_10 FROM m"""
-
-  private def ivfAnnOracle(model: Similarity.IvfModel): String =
-    s"""WITH ${ivfChainSql(model, 4)}
-       SELECT vec_id, cos FROM ivf ORDER BY cos DESC, vec_id"""
-
-  private def ivfRecallOracle(model: Similarity.IvfModel): String =
-    s"""WITH ${ivfChainSql(model, 4)},
-       bf AS (SELECT vec_id FROM cos ORDER BY cos DESC, vec_id LIMIT 10),
-       m AS (SELECT count(*) AS nm FROM ivf JOIN bf USING (vec_id))
-       SELECT CAST(nm AS BIGINT) AS n_matched,
-         round(nm / 10.0, 6) AS recall_at_10 FROM m"""
-
-  /** q_kmeans_refine in DuckDB: replay ONE full-corpus Lloyd iteration from
-    * the fitted-centroid literals — argmin assignment over ALL embeddings
-    * (same bit-identical ranking as [[ivfChainSql]], which excludes the
-    * query row and so isn't reused here), per-(cluster, dim) sums of
-    * offset-shifted integer micros, floor-division mean (`//` floors in
-    * DuckDB, Spark `div`/BigInteger truncates — equal on the non-negative
-    * offset domain), empty clusters carried from the init literals. */
-  private def kmeansRefineOracle(model: Similarity.IvfModel): String = {
-    val cents = model.centers.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (w, j) => s"($i, $j, $w)" }
-    }.mkString(", ")
-    val norms = model.centers.zipWithIndex.map { case (c, i) =>
-      s"($i, ${Similarity.sqNorm(c)})"
-    }.mkString(", ")
-    s"""WITH cents(ci, cj, cw) AS (VALUES $cents),
-       cl AS (SELECT ci, list(cw ORDER BY cj) AS cv FROM cents GROUP BY ci),
-       cn(ci, n2) AS (VALUES $norms),
-       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       assign AS (
-         SELECT vec_id, ci FROM (
-           SELECT e.vec_id, cl.ci,
-             row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY cn.n2 - 2.0 * list_dot_product(e.v, cl.cv), cl.ci) AS rn
-           FROM e CROSS JOIN cl JOIN cn ON cn.ci = cl.ci)
-         WHERE rn = 1),
-       ex AS (
-         SELECT a.ci, generate_subscripts(e.v, 1) - 1 AS p, unnest(e.v) AS x
-         FROM assign a JOIN e ON e.vec_id = a.vec_id),
-       means AS (
-         SELECT ci, p,
-           CAST(sum(CAST(round(x * 1000000) AS BIGINT) + 4000000)
-                  // count(*) - 4000000 AS BIGINT) / 1000000.0 AS coord
-         FROM ex GROUP BY ci, p)
-       SELECT CAST(c.ci AS BIGINT) AS cluster, CAST(c.cj AS BIGINT) AS pos,
-         coalesce(m2.coord, c.cw) AS coord
-       FROM cents c LEFT JOIN means m2 ON m2.ci = c.ci AND m2.p = c.cj
-       ORDER BY cluster, pos"""
-  }
-
-  /** q_embedding_neardup / q_embedding_neardup_scaled in DuckDB: the full
-    * banded-LSH near-dup for any (bandBits, bands) — one pooled
-    * `bandBits·bands`-bit signature from the seed-42 planes, bands sliced
-    * by shift/mask, bucket-local distinct pairs, exact-cosine verify. The
-    * threshold filters on the RAW cosine exactly like the Spark operator
-    * (identical IEEE accumulation both sides); the emitted score is
-    * rounded to 6 for engine-stable hashing. bandBits·bands ≤ 62 keeps the
-    * DuckDB `1 << b` sum clear of BIGINT sign-bit overflow. */
-  private def embeddingNearDupLshOracleSql(bandBits: Int, bands: Int): String = {
-    require(bandBits * bands <= 62,
-      s"oracle signature ${bandBits * bands} bits overflows DuckDB BIGINT shifts")
-    val mask = (1L << bandBits) - 1
-    s"""WITH planes(b, j, w) AS (VALUES ${hyperplaneValues(bandBits * bands)}),
-       pl AS (SELECT b, list(w ORDER BY j) AS pw FROM planes GROUP BY b),
-       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       sigs AS (
-         SELECT e.vec_id,
-           CAST(sum(CASE WHEN list_dot_product(e.v, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS fs
-         FROM e CROSS JOIN pl GROUP BY e.vec_id),
-       banded AS (
-         SELECT vec_id, bb AS band, (fs >> (bb * $bandBits)) & $mask AS sig
-         FROM sigs CROSS JOIN (SELECT unnest(range(0, $bands)) AS bb) bs),
-       pairs AS (
-         SELECT DISTINCT l.vec_id AS id_a, r.vec_id AS id_b
-         FROM banded l JOIN banded r
-           ON l.band = r.band AND l.sig = r.sig AND l.vec_id < r.vec_id),
-       scored AS (
-         SELECT p.id_a, p.id_b,
-           list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS raw
-         FROM pairs p
-         JOIN e a ON a.vec_id = p.id_a
-         JOIN e b ON b.vec_id = p.id_b)
-       SELECT id_a, id_b, round(raw, 6) AS cos FROM scored
-       WHERE raw >= 0.35 ORDER BY id_a, id_b"""
-  }
-
-  private val EmbeddingNearDupLshOracle: String =
-    embeddingNearDupLshOracleSql(bandBits = 12, bands = 5)
-
-  /** q_dedup_incr_embedding in DuckDB: the banded-hyperplane store probe —
-    * same plane literals, bands, and exact-cosine verify as
-    * [[EmbeddingNearDupLshOracle]], with candidates restricted to
-    * new-batch × stored vectors (the cross-store join of
-    * [[Dedup.embeddingNearDupAgainst]]). */
-  private val DedupIncrEmbeddingOracle: String = {
-    s"""WITH planes(b, j, w) AS (VALUES ${hyperplaneValues(60)}),
-       pl AS (SELECT b, list(w ORDER BY j) AS pw FROM planes GROUP BY b),
-       e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       ex AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 0),
-       nw AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 1
-              UNION ALL SELECT vec_id + 1000000, v FROM ex),
-       sx AS (
-         SELECT ex.vec_id,
-           CAST(sum(CASE WHEN list_dot_product(ex.v, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS fs
-         FROM ex CROSS JOIN pl GROUP BY ex.vec_id),
-       sn AS (
-         SELECT nw.vec_id,
-           CAST(sum(CASE WHEN list_dot_product(nw.v, pl.pw) >= 0
-                    THEN (CAST(1 AS BIGINT) << pl.b) ELSE 0 END) AS BIGINT) AS fs
-         FROM nw CROSS JOIN pl GROUP BY nw.vec_id),
-       bx AS (SELECT vec_id, bb AS band, (fs >> (bb * 12)) & 4095 AS sig
-              FROM sx CROSS JOIN (SELECT unnest(range(0, 5)) AS bb) bs),
-       bn AS (SELECT vec_id, bb AS band, (fs >> (bb * 12)) & 4095 AS sig
-              FROM sn CROSS JOIN (SELECT unnest(range(0, 5)) AS bb) bs),
-       cand AS (
-         SELECT DISTINCT n.vec_id AS nid, x.vec_id AS sid
-         FROM bn n JOIN bx x ON n.band = x.band AND n.sig = x.sig),
-       dups AS (
-         SELECT DISTINCT nid FROM cand
-         JOIN nw a ON a.vec_id = cand.nid
-         JOIN ex b ON b.vec_id = cand.sid
-         WHERE list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-              * sqrt(list_dot_product(b.v, b.v))) >= 0.35)
-       SELECT vec_id FROM nw
-       WHERE vec_id NOT IN (SELECT nid FROM dups)
-       ORDER BY vec_id"""
-  }
-
-  /** q_minhash_dedup / q_simhash_dedup / q_approx_distinct oracles from the
-    * Spark-INDEPENDENT pipeline recompute ([[graft.verify.IndependentOracles]]
-    * — public-spec xxHash64, plain-Scala tokenize/shingle/band/vote/HLL++,
-    * zero calls into graft.operators or Spark expressions): expected
-    * survivor ids / the expected estimate become literals in plain DuckDB
-    * SQL, exactly like the fitted-centroid q_ivf_* oracles. Spark is used
-    * only to READ the corpus. The HLL entry is omitted (pre-round-10
-    * rows-only behavior) if the estimate leaves the raw regime — see
-    * [[graft.verify.IndependentOracles.hllRawEstimate]]. */
-  @volatile private var lastMmrDir: Option[String] = None
-
-  /** the sf dir the most recent q_compress_ratio ran against — oracleSql
-    * embeds the plain-JVM deflate recompute for that corpus as literals
-    * (the sketchOracles pattern). */
-  @volatile private var lastCompressDir: Option[String] = None
-
-  /** same memo for the q_cdc_* pair. */
-  @volatile private var lastCdcDir: Option[String] = None
-
-  /** q_cdc_chunks / q_cdc_dedup generated oracles: the plain-JVM re-chunk
-    * ([[graft.verify.IndependentOracles.cdcSummaries]]) embedded as
-    * literals; per-doc total_len deliberately taken from DuckDB's own
-    * strlen (chunk lengths must PARTITION the blob, so the engine's sum
-    * must land on the byte count DuckDB sees). */
-  private[graft] def cdcOracle(dir: String): Map[String, String] = {
-    import graft.verify.IndependentOracles
-    val s = SparkSession.active
-    val corpus = rd(s, dir, "documents").select("doc_id", "text")
-    val cap = DF.maxDriverRows
-    val probeCap = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    val probed = corpus.limit(probeCap).count()
-    if (probed > cap)
-      throw new DriverMaterializationException("cdcOracle", probed, cap,
-        "the rows-only check (the CDC oracle is a test-SF recompute by design)")
-    val docs = corpus.collect().toSeq.map(r => (r.getLong(0), r.getString(1)))
-    val (rows, totals) = IndependentOracles.cdcSummaries(
-      docs, minLen = 32, maxLen = 256, maskBits = 5)
-    val values = rows.map { case (id, n, _, nd, sig) =>
-      s"($id, $n, $nd, $sig)"
-    }
-    val incr = IndependentOracles.cdcIncrReport(
-      docs, docs.map { case (id, t) => (id + 1000000L, "x" + t) },
-      minLen = 32, maxLen = 256, maskBits = 5)
-    val incrValues = incr.map { case (id, n, tot, nb, db) =>
-      s"($id, $n, $tot, $nb, $db)"
-    }
-    Map(
-      "q_cdc_incr" ->
-        s"""WITH exp(doc_id, n_chunks, total_bytes, new_bytes, dup_bytes) AS (
-             VALUES ${incrValues.mkString(", ")})
-           SELECT CAST(doc_id AS BIGINT) AS doc_id,
-             CAST(n_chunks AS BIGINT) AS n_chunks,
-             CAST(total_bytes AS BIGINT) AS total_bytes,
-             CAST(new_bytes AS BIGINT) AS new_bytes,
-             CAST(dup_bytes AS BIGINT) AS dup_bytes
-           FROM exp ORDER BY doc_id""",
-      "q_cdc_chunks" ->
-        s"""WITH exp(doc_id, n_chunks, n_distinct, chunk_sig) AS (
-             VALUES ${values.mkString(", ")})
-           SELECT CAST(e.doc_id AS BIGINT) AS doc_id,
-             CAST(e.n_chunks AS BIGINT) AS n_chunks,
-             CAST(strlen(d.text) AS BIGINT) AS total_len,
-             CAST(e.n_distinct AS BIGINT) AS n_distinct,
-             CAST(e.chunk_sig AS BIGINT) AS chunk_sig
-           FROM exp e JOIN documents d ON d.doc_id = e.doc_id
-           ORDER BY doc_id""",
-      "q_cdc_dedup" ->
-        s"""SELECT CAST(${totals._1} AS BIGINT) AS total_chunks,
-             CAST(${totals._2} AS BIGINT) AS distinct_chunks,
-             CAST(${totals._3} AS BIGINT) AS total_bytes,
-             CAST(${totals._4} AS BIGINT) AS distinct_bytes""")
-  }
-
-  /** q_compress_ratio's generated oracle: deflated sizes + ratios from the
-    * single-threaded fresh-Deflater recompute
-    * ([[graft.verify.IndependentOracles.deflatedSizes]]) embedded as a
-    * VALUES literal; n_bytes deliberately left to DuckDB's own strlen so
-    * the raw-byte side is cross-engine, not an echo. */
-  private[graft] def compressOracle(dir: String): Map[String, String] = {
-    import graft.verify.IndependentOracles
-    val s = SparkSession.active
-    val corpus = rd(s, dir, "documents").select("doc_id", "text")
-    val cap = DF.maxDriverRows
-    val probeCap = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    val probed = corpus.limit(probeCap).count()
-    if (probed > cap)
-      throw new DriverMaterializationException("compressOracle", probed, cap,
-        "the rows-only check (the deflate oracle is a test-SF recompute by design)")
-    val docs = corpus.collect().toSeq.map(r => (r.getLong(0), r.getString(1)))
-    val rows = IndependentOracles.deflatedSizes(docs, level = 6)
-      .map { case (id, out) =>
-        val raw = docs.find(_._1 == id).get._2.getBytes("UTF-8").length
-        val ratio = if (raw == 0) 1.0
-          else math.floor(out.toDouble / raw * 1e6 + 0.5) / 1e6
-        s"($id, $out, $ratio)"
-      }
-    Map("q_compress_ratio" ->
-      s"""WITH exp(doc_id, n_deflated, compress_ratio) AS (
-           VALUES ${rows.mkString(", ")})
-         SELECT CAST(e.doc_id AS BIGINT) AS doc_id,
-           CAST(strlen(d.text) AS BIGINT) AS n_bytes,
-           CAST(e.n_deflated AS BIGINT) AS n_deflated,
-           CAST(e.compress_ratio AS DOUBLE) AS compress_ratio
-         FROM exp e JOIN documents d ON d.doc_id = e.doc_id
-         ORDER BY doc_id""")
-  }
-
-  /** the DuckDB replay of [[graft.operators.TextAnalysis.htmlToBlocks]]'s
-    * sentinel chain around an input SQL expression — shared by the
-    * q_html_blocks and q_html_paragraph_dedup oracles so the chain and its
-    * replays can never drift apart one-sidedly without a loud mismatch. */
-  private def htmlBlocksChainSql(input: String): String = {
-    def rr(x: String, pat: String, rep: String) =
-      s"regexp_replace($x, '$pat', $rep, 'g')"
-    def lrep(x: String, from: String, to: String) =
-      s"replace($x, '$from', $to)"
-    var x = input
-    x = rr(x, """[\x11\x12]""", "' '")
-    x = rr(x, """(?is)<script[^>]*>.*?</script\s*>""", "' '")
-    x = rr(x, """(?is)<style[^>]*>.*?</style\s*>""", "' '")
-    x = rr(x, """(?s)<!--.*?-->""", "' '")
-    x = rr(x, """(?is)</(td|th)\s*>""", "chr(17)")
-    x = rr(x, """(?is)<br\s*/?\s*>|""" +
-      """</?(p|div|h[1-6]|li|tr|ul|ol|table|blockquote)(\s[^>]*)?>""",
-      "chr(18)")
-    x = rr(x, """(?s)<[^>]*>""", "' '")
-    x = lrep(x, "&nbsp;", "' '")
-    x = lrep(x, "&lt;", "'<'")
-    x = lrep(x, "&gt;", "'>'")
-    x = lrep(x, "&quot;", "'\"'")
-    x = lrep(x, "&#39;", "chr(39)")
-    x = lrep(x, "&amp;", "'&'")
-    x = rr(x, """\s+""", "' '")
-    x = rr(x, """ ?\x11 ?""", "chr(9)")
-    x = rr(x, """( ?\x12 ?)+""", "chr(10)")
-    x = rr(x, """\t+\n""", "chr(10)")
-    x = rr(x, """^\s+""", "''")
-    rr(x, """\s+$""", "''")
-  }
-
-  /** the linked-pages synthesis + href/host regexes shared by the three
-    * q_link_* / q_host_* oracles — one definition so the plant and its
-    * replays cannot drift apart one-sidedly. */
-  private val LinkPagesSql: String =
-    """pages AS (
-         SELECT doc_id, source || '.example' AS src_host,
-           '<html><body><p>' || text || '</p><a href="https://hub' ||
-           (doc_id % 5) || '.example/p/' || doc_id ||
-           '">h</a> <a href="/relative/skip">r</a><a href="https://' ||
-           CASE WHEN doc_id % 2 = 0 THEN 'portal.example'
-                ELSE source || '.example' END ||
-           '/x">p</a></body></html>' AS html
-         FROM documents)"""
-  private val HrefPatternSql = """(?is)<a\s[^>]*?href\s*=\s*"([^"]*)""""
-  private val HostPatternSql = """^https?://([^/:?#]+)"""
-  private val AnchorPairSql =
-    """(?is)<a\s[^>]*?href\s*=\s*"([^"]*)"[^>]*>(.*?)</a\s*>"""
-
-  /** q_host_rank's oracle: the SAME fixed-iteration integer-nanos PageRank
-    * unrolled in SQL — `//` (DuckDB floor division) ≡ Spark `div` on the
-    * non-negative ranks, N computed by the oracle itself, no generated
-    * literals. */
-  private def hostRankOracleSql(iterations: Int): String = {
-    val steps = (1 to iterations).map { k =>
-      val prev = if (k == 1) "r0" else s"it${k - 1}"
-      s"""it$k AS (
-           SELECT nd.host,
-             (3000000000 // (20 * p.n)) +
-               (17 * coalesce(s.sm, CAST(0 AS BIGINT))) // 20 AS rank_nanos
-           FROM nodes nd CROSS JOIN params p
-           LEFT JOIN (
-             SELECT e.dst_host AS host,
-               sum((r.rank_nanos * e.n_links) // o.outn) AS sm
-             FROM e JOIN out_t o USING (src_host)
-                    JOIN $prev r ON r.host = e.src_host
-             GROUP BY 1) s ON s.host = nd.host)"""
-    }.mkString(", ")
-    s"""WITH $LinkPagesSql,
-       links AS (
-         SELECT src_host,
-           unnest(regexp_extract_all(html, '$HrefPatternSql', 1)) AS url
-         FROM pages),
-       e0 AS (
-         SELECT src_host,
-           lower(regexp_extract(url, '$HostPatternSql', 1)) AS dst_host
-         FROM links),
-       e AS (
-         SELECT src_host, dst_host, count(*) AS n_links
-         FROM e0 WHERE dst_host <> '' AND dst_host <> src_host
-         GROUP BY 1, 2),
-       out_t AS (SELECT src_host, sum(n_links) AS outn FROM e GROUP BY 1),
-       nodes AS (SELECT DISTINCT host FROM (
-         SELECT src_host AS host FROM e
-         UNION ALL SELECT dst_host FROM e)),
-       params AS (SELECT count(*) AS n FROM nodes),
-       r0 AS (SELECT host, 1000000000 // p.n AS rank_nanos
-              FROM nodes CROSS JOIN params p),
-       $steps
-       SELECT host, CAST(rank_nanos AS BIGINT) AS rank_nanos
-       FROM it$iterations ORDER BY host"""
-  }
-
-  /** the dangling-variant CTE chain shared by q_host_rank_dangling and
-    * q_rank_convergence: each iteration k gets a dg$k scalar (the previous
-    * ranks' mass on hosts with no out-edge) redistributed uniformly —
-    * `(17·dm) // (20·n)` per node, the same integer floor the Spark plan
-    * takes — so ranks AND the per-iteration report replay bit-for-bit. */
-  private def hostRankDanglingCtes(iterations: Int): String = {
-    val steps = (1 to iterations).map { k =>
-      val prev = if (k == 1) "r0" else s"it${k - 1}"
-      s"""dg$k AS (
-           SELECT CAST(coalesce(sum(rank_nanos), 0) AS BIGINT) AS dm
-           FROM $prev r
-           WHERE r.host NOT IN (SELECT src_host FROM out_t)),
-         it$k AS (
-           SELECT nd.host,
-             (3000000000 // (20 * p.n)) +
-               (17 * coalesce(s.sm, CAST(0 AS BIGINT))) // 20 +
-               (17 * d.dm) // (20 * p.n) AS rank_nanos
-           FROM nodes nd CROSS JOIN params p CROSS JOIN dg$k d
-           LEFT JOIN (
-             SELECT e.dst_host AS host,
-               sum((r.rank_nanos * e.n_links) // o.outn) AS sm
-             FROM e JOIN out_t o USING (src_host)
-                    JOIN $prev r ON r.host = e.src_host
-             GROUP BY 1) s ON s.host = nd.host)"""
-    }.mkString(", ")
-    s"""WITH $LinkPagesSql,
-       links AS (
-         SELECT src_host,
-           unnest(regexp_extract_all(html, '$HrefPatternSql', 1)) AS url
-         FROM pages),
-       e0 AS (
-         SELECT src_host,
-           lower(regexp_extract(url, '$HostPatternSql', 1)) AS dst_host
-         FROM links),
-       e AS (
-         SELECT src_host, dst_host, count(*) AS n_links
-         FROM e0 WHERE dst_host <> '' AND dst_host <> src_host
-         GROUP BY 1, 2),
-       out_t AS (SELECT src_host, sum(n_links) AS outn FROM e GROUP BY 1),
-       nodes AS (SELECT DISTINCT host FROM (
-         SELECT src_host AS host FROM e
-         UNION ALL SELECT dst_host FROM e)),
-       params AS (SELECT count(*) AS n FROM nodes),
-       r0 AS (SELECT host, 1000000000 // p.n AS rank_nanos
-              FROM nodes CROSS JOIN params p),
-       $steps"""
-  }
-
-  private def hostRankDanglingOracleSql(iterations: Int): String =
-    s"""${hostRankDanglingCtes(iterations)}
-       SELECT host, CAST(rank_nanos AS BIGINT) AS rank_nanos
-       FROM it$iterations ORDER BY host"""
-
-  private def rankConvergenceOracleSql(iterations: Int): String = {
-    val rows = (1 to iterations).map { k =>
-      val prev = if (k == 1) "r0" else s"it${k - 1}"
-      s"""SELECT CAST($k AS BIGINT) AS iteration,
-           (SELECT dm FROM dg$k) AS dangling_in_nanos,
-           CAST((SELECT sum(abs(a.rank_nanos - b.rank_nanos))
-                 FROM it$k a JOIN $prev b USING (host)) AS BIGINT)
-             AS l1_delta_nanos"""
-    }.mkString(" UNION ALL ")
-    s"""${hostRankDanglingCtes(iterations)}
-       SELECT * FROM ($rows) ORDER BY iteration"""
-  }
-
-  /** q_bpe_count's generated oracle: per-doc BPE token counts from the
-    * independently-coded sequential encoder
-    * ([[graft.verify.IndependentOracles.bpeCounts]]) over the SAME
-    * memoized merges table (merges are data, like fitted centroids),
-    * embedded as VALUES literals — the cdcOracle pattern, cap-guarded. */
-  private[graft] def bpeOracle(dir: String): Map[String, String] = {
-    import graft.verify.IndependentOracles
-    val s = SparkSession.active
-    val corpus = rd(s, dir, "documents").select("doc_id", "text")
-    val cap = DF.maxDriverRows
-    val probeCap = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    val probed = corpus.limit(probeCap).count()
-    if (probed > cap)
-      throw new DriverMaterializationException("bpeOracle", probed, cap,
-        "the rows-only check (the BPE oracle is a test-SF recompute by design)")
-    val docs = corpus.collect().toSeq.map(r => (r.getLong(0), r.getString(1)))
-    val counts = IndependentOracles.bpeCounts(docs, bpeModels(dir).merges)
-    val values = counts.map { case (id, n) => s"($id, $n)" }
-    Map("q_bpe_count" ->
-      s"""WITH exp(doc_id, n_bpe) AS (VALUES ${values.mkString(", ")})
-         SELECT CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(n_bpe AS BIGINT) AS n_bpe
-         FROM exp ORDER BY doc_id""")
-  }
-
-  /** q_profile_table's oracle: one UNION ALL branch per profiled column —
-    * the per-column recompute of [[graft.operators.Profiling.profileTable]]
-    * (null count via FILTER, exact distinct count, shared row count). */
-  private def profileOracleSql(table: String, cols: Seq[String]): String = {
-    val branches = cols.map(c =>
-      s"""SELECT '$c' AS column_name, CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(count(*) FILTER (WHERE $c IS NULL) AS BIGINT) AS n_nulls,
-         CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct FROM $table""")
-    s"SELECT * FROM (${branches.mkString(" UNION ALL ")}) ORDER BY column_name"
-  }
-
-  /** q_profile_approx's oracle: the same exact branches, but the distinct
-    * slot is the CONTRACT flag — the oracle pins dist_ok = TRUE while the
-    * Spark side computes |HLL − exact| against the bound; a Spark upgrade
-    * whose sketch strays flips the boolean and hash-mismatches loudly. */
-  private def profileApproxOracleSql(table: String, cols: Seq[String]): String = {
-    val branches = cols.map(c =>
-      s"""SELECT '$c' AS column_name, CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(count(*) FILTER (WHERE $c IS NULL) AS BIGINT) AS n_nulls,
-         TRUE AS dist_ok FROM $table""")
-    s"SELECT * FROM (${branches.mkString(" UNION ALL ")}) ORDER BY column_name"
-  }
-
-  /** q_mmr_select's oracle, the [[sketchOracles]] pattern: the selection
-    * order is recomputed by the Spark-independent plain-Scala greedy
-    * ([[graft.verify.IndependentOracles.mmrOrder]] — same cosine loop as
-    * the native kernel, same 6-dp HALF_UP rounding, id ties) over the
-    * collected embeddings, and becomes a VALUES literal. Spark is used
-    * only to READ the corpus; the maxDriverRows guard keeps the collect a
-    * test-SF-only affordance. */
-  private[graft] def mmrOracle(dir: String): Map[String, String] = {
-    import graft.verify.IndependentOracles
-    val s = SparkSession.active
-    val emb = rd(s, dir, "embeddings").select("vec_id", "embedding")
-    val cap = DF.maxDriverRows
-    val probeCap = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    val probed = emb.limit(probeCap).count()
-    if (probed > cap)
-      throw new DriverMaterializationException("mmrOracle", probed, cap,
-        "the rows-only check (MMR oracles are a test-SF recompute by design)")
-    val all = emb.collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
-      .toSeq
-    val query = all.find(_._1 == 1L)
-      .getOrElse(sys.error("mmrOracle: no vec_id 1 in embeddings"))._2
-    def valuesSql(order: Seq[Long]): String = {
-      val values = order.zipWithIndex
-        .map { case (id, i) => s"($id, ${i + 1})" }.mkString(", ")
-      s"""SELECT CAST(vec_id AS BIGINT) AS vec_id, CAST(pos AS BIGINT) AS pos
-          FROM (VALUES $values) AS t(vec_id, pos) ORDER BY pos"""
-    }
-    val pool = all.filterNot(_._1 == 1L)
-    Map(
-      "q_mmr_select" -> valuesSql(
-        IndependentOracles.mmrOrder(pool, query, k = 10, lambda = 0.7)),
-      "q_mmr_batched" -> valuesSql(
-        IndependentOracles.mmrOrderBatched(pool, query, k = 10,
-          lambda = 0.7, m = 3)),
-      "q_mmr_pooled" -> valuesSql {
-        val shortlist =
-          IndependentOracles.cosineTopK(pool, query, n = 200).toSet
-        IndependentOracles.mmrOrderBatched(
-          pool.filter(p => shortlist(p._1)), query, k = 10,
-          lambda = 0.7, m = 3)
-      })
-  }
-
-  private[graft] def sketchOracles(dir: String): Map[String, String] = {
-    import graft.verify.IndependentOracles
-    val s = SparkSession.active
-    // Verify-only tooling still deserves the DF.maxDriverRows guard: the
-    // independent recompute collects the whole documents table, which is
-    // fine at the driver's test SFs but an OOM if Verify is ever pointed at
-    // a production sf — fail loudly instead. Bounded probe (limit cap+1),
-    // never a full count, the clusterDedupFromPairs regime-probe pattern.
-    val corpus = rd(s, dir, "documents").select("doc_id", "text")
-    val cap = DF.maxDriverRows
-    val probeCap = math.min(cap + 1, Int.MaxValue.toLong).toInt
-    val probed = corpus.limit(probeCap).count()
-    if (probed > cap)
-      throw new DriverMaterializationException("sketchOracles", probed, cap,
-        "the rows-only check (sketch oracles are a test-SF recompute by design)")
-    val docs: Seq[(Long, Array[String])] =
-      corpus.collect().toSeq
-        .map(r => (r.getLong(0), IndependentOracles.tokenize(r.getString(1))))
-    def notIn(dropped: Set[Long]): String =
-      if (dropped.isEmpty) "SELECT doc_id FROM documents ORDER BY doc_id"
-      else "SELECT doc_id FROM documents WHERE doc_id NOT IN (" +
-        dropped.toSeq.sorted.mkString(", ") + ") ORDER BY doc_id"
-    val keys = rd(s, dir, "lineitem").filter(col("l_orderkey").isNotNull)
-      .select("l_orderkey").distinct().collect().map(_.getLong(0))
-    Map(
-      "q_minhash_dedup" -> notIn(IndependentOracles.minhashDroppedIds(
-        docs, threshold = MinhashDedupThreshold,
-        numHashes = MinhashDedupHashes, bands = MinhashDedupBands)),
-      "q_simhash_dedup" -> notIn(IndependentOracles.simhashDroppedIds(docs))
-    ) ++ IndependentOracles.hllRawEstimate(keys).map(v =>
-      "q_approx_distinct" -> s"SELECT CAST($v AS BIGINT) AS n_approx")
-  }
-
-  /** DuckDB oracle SQL per query (same result, same column names, same
-    * ORDER BY). Queries absent here are not SQL-expressible in DuckDB
-    * (seeded xxhash64 / hyperplane / HLL sketches) → driver records the
-    * weaker rows-only check. */
-  def oracleSql: Map[String, String] = Map(
-    "q_minhash_oracle" -> MinhashOracle,
-    "q_dedup_incremental" -> DedupIncrementalOracle,
-    // the bloom prefilter has no false negatives, so prefilter + exact
-    // anti-join ≡ exact anti-join: ONE shared oracle for both queries
-    "q_dedup_incr_bloom" -> DedupIncrExactOracle,
-    "q_dedup_incr_simhash" ->
-      s"""WITH p AS (
-           SELECT doc_id, text, source FROM documents
-           UNION ALL
-           SELECT doc_id + 1000000,
-             array_to_string(list_reverse(string_split(text, ' ')), ' '),
-             source
-           FROM documents WHERE source = 'src0'),
-         ${simhashSigChainSql("p")},
-         stored AS (
-           SELECT DISTINCT sg.sig FROM sg
-           JOIN p e ON e.doc_id = sg.doc_id
-           WHERE e.source = 'src0' AND e.doc_id < 1000000)
-         SELECT p.doc_id FROM p
-         JOIN sg n ON n.doc_id = p.doc_id
-         WHERE (p.source <> 'src0' OR p.doc_id >= 1000000)
-           AND n.sig NOT IN (SELECT sig FROM stored)
-         ORDER BY p.doc_id""",
-    "q_dedup_incr_exact" -> DedupIncrExactOracle,
-    "q_curation" -> CurationOracle,
-    "q_curation_ppl" -> CurationPplOracle,
-    "q_lm_store" -> LmStoreOracle,
-    "q_curation_ppl_store" -> CurationPplStoreOracle,
-    "q_curation_mm" -> CurationMmOracle,
-    "q_curation_full" -> CurationFullOracle,
-    "q_cluster_dedup" -> ClusterDedupOracle,
-    "q_cluster_keep_best" -> ClusterKeepBestOracle,
-    "q_cluster_sizes" -> ClusterSizesOracle,
-    "q_golden_record" -> GoldenRecordOracle,
-    "q_split_leakage" -> SplitLeakageOracle,
-    "q_simhash_oracle" ->
-      s"""WITH ${simhashSigChainSql("documents")},
-         keep AS (SELECT min(doc_id) AS doc_id FROM sg GROUP BY sig)
-         SELECT doc_id FROM documents
-         WHERE doc_id IN (SELECT doc_id FROM keep) ORDER BY doc_id""",
-    // banded hamming ≤ 3 search over the same 60-bit portable signatures:
-    // 4 disjoint 15-bit bands (pigeonhole recall), bucket-local band
-    // self-join, bit_count verify — DuckDB's xor()/bit_count replicate the
-    // Spark kernel exactly (DuckDB's ^ is power, hence xor())
-    "q_simhash_hamming" ->
-      s"""WITH ${simhashSigChainSql("documents")},
-         banded AS (
-           SELECT doc_id, sig, b, (sig >> (b * 15)) & 32767 AS bb
-           FROM sg CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bs),
-         pairs AS (
-           SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-             CAST(bit_count(xor(l.sig, r.sig)) AS BIGINT) AS hamming
-           FROM banded l JOIN banded r
-             ON l.b = r.b AND l.bb = r.bb AND l.doc_id < r.doc_id
-           WHERE bit_count(xor(l.sig, r.sig)) <= 3)
-         SELECT id_a, id_b, hamming FROM pairs ORDER BY id_a, id_b""",
-    // blocked on (label, vec_id // 10000000): the id-allocation shard joins
-    // the label in the block key, mirroring the Spark side exactly
-    "q_embedding_neardup_oracle" ->
-      """WITH e AS (
-           SELECT vec_id, label, vec_id // 10000000 AS shard,
-             CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         p AS (
-           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS c
-           FROM e a JOIN e b ON a.label = b.label AND a.shard = b.shard
-             AND a.vec_id < b.vec_id)
-         SELECT id_a, id_b, round(c, 6) AS cos FROM p
-         WHERE c >= 0.35 ORDER BY id_a, id_b""",
-    "q_mask_count" ->
-      "SELECT count(*) AS cnt FROM lineitem WHERE l_quantity * l_extendedprice >= 50000",
-    "q_mask_slice" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-         WHERE l_quantity >= 45 ORDER BY l_orderkey, l_linenumber""",
-    "q_slice_range" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-         FROM customer ORDER BY c_custkey LIMIT 10 OFFSET 100""",
-    "q_map_rows" ->
-      """SELECT l_orderkey, l_linenumber,
-           CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT) AS rev_cents
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    // q_map_df's lambda is plain arithmetic exactly so the distributed
-    // lambda MACHINERY (row-id carry, executor-side fn, checkpoint) is
-    // what the oracle checks — the math itself must be replicable in SQL.
-    // (qty/10).toLong truncates toward zero == floor for qty >= 0;
-    // math.round(half-up) == DuckDB round(half-away) on these inputs
-    // (disc*100 lands within 1e-12 of an integer, never near .5).
-    "q_map_df" ->
-      """SELECT l_orderkey, l_linenumber,
-           CAST(floor(l_quantity / 10) AS BIGINT) AS qty_band,
-           CAST(round(l_discount * 100) AS BIGINT) AS disc_cents
-         FROM lineitem ORDER BY l_orderkey, l_linenumber""",
-    "q_add_column" ->
-      """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment,
-           CAST(floor(c_acctbal / 100) AS BIGINT) AS bal_band
-         FROM customer ORDER BY c_custkey""",
-    "q_replace_column" ->
-      """SELECT c_custkey, upper(c_name) AS c_name, c_nationkey, c_acctbal,
-           c_mktsegment FROM customer ORDER BY c_custkey""",
-    "q_map_columns" ->
-      """SELECT CAST(c_custkey * 2 AS BIGINT) AS c_custkey,
-           CAST(c_nationkey * 2 AS BIGINT) AS c_nationkey
-         FROM customer ORDER BY c_custkey""",
-    "q_freq_table" ->
-      """SELECT l_returnflag, count(*) AS cnt FROM lineitem
-         GROUP BY l_returnflag ORDER BY cnt DESC, l_returnflag""",
-    "q_quantiles" ->
-      """SELECT round(min(l_extendedprice), 6) AS vmin,
-           round(quantile_cont(l_extendedprice, 0.25), 6) AS q25,
-           round(quantile_cont(l_extendedprice, 0.50), 6) AS q50,
-           round(quantile_cont(l_extendedprice, 0.75), 6) AS q75,
-           round(max(l_extendedprice), 6) AS vmax
-         FROM lineitem""",
-    // the approx-quantile scale path: DuckDB cannot replicate the GK
-    // sketch (merge-order dependent), so the oracle pins the deterministic
-    // projection — exact n/min/max — and the rank-error-bound booleans the
-    // Spark side computes EXACTLY against the raw column (true iff the
-    // sketch honors its ±1/accuracy contract)
-    // shared-bucket drift histogram: identical clamp + integer division on
-    // both sides, FULL OUTER on the bucket with zero fills
-    "q_drift_report" ->
-      """WITH a AS (
-           SELECT ((least(4095, greatest(0, CAST(n_chars AS BIGINT))) - 0) * 16) // 4096
-             AS bucket
-           FROM documents),
-         b AS (
-           SELECT ((least(4095, greatest(0,
-             CAST(n_chars AS BIGINT)
-               + CASE WHEN doc_id % 3 = 0 THEN 200 ELSE 0 END)) - 0) * 16) // 4096
-             AS bucket
-           FROM documents),
-         ha AS (SELECT bucket, count(*) AS n_a FROM a GROUP BY bucket),
-         hb AS (SELECT bucket, count(*) AS n_b FROM b GROUP BY bucket)
-         SELECT CAST(coalesce(ha.bucket, hb.bucket) AS BIGINT) AS bucket,
-           CAST(coalesce(n_a, 0) AS BIGINT) AS n_a,
-           CAST(coalesce(n_b, 0) AS BIGINT) AS n_b
-         FROM ha FULL OUTER JOIN hb ON ha.bucket = hb.bucket
-         ORDER BY bucket""",
-    "q_quantiles_approx" ->
-      """SELECT CAST(count(l_extendedprice) AS BIGINT) AS n,
-           round(min(l_extendedprice), 6) AS vmin,
-           round(max(l_extendedprice), 6) AS vmax,
-           true AS ok25, true AS ok50, true AS ok75
-         FROM lineitem""",
-    "q_bit_summary" ->
-      """SELECT CAST(sum(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS ones,
-           count(*) AS total FROM lineitem""",
-    "q_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-         ORDER BY l_returnflag, l_linestatus""",
-    "q_count_distinct" ->
-      "SELECT count(DISTINCT l_partkey) AS n_parts FROM lineitem",
-    "q_json_extract" ->
-      """SELECT event_type, count(*) AS n,
-           CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-           count(DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_k
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_join_broadcast" ->
-      """SELECT n_name, count(*) AS n_cust,
-           CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS bal_cents
-         FROM customer JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-    "q_join_agg" ->
-      """SELECT o_orderstatus, count(*) AS n,
-           CAST(sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)) AS BIGINT) AS rev_tenk
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "q_join_left" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders
-         FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-         GROUP BY c_custkey ORDER BY c_custkey""",
-    "q_join_semi" ->
-      """SELECT c_custkey FROM customer
-         WHERE c_custkey IN (SELECT o_custkey FROM orders) ORDER BY c_custkey""",
-    "q_join_anti" ->
-      """SELECT c_custkey FROM customer c
-         WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-         ORDER BY c_custkey""",
-    "q_group_agg" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-           CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS base_cents,
-           sum(l_quantity) / count(*) AS avg_qty, count(*) AS count_order
-         FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n FROM lineitem
-         GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n FROM lineitem
-         GROUP BY CUBE(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-         ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q_pivot" ->
-      """SELECT l_returnflag,
-           sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END) AS "F",
-           sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END) AS "O"
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_topk" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-         ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 10""",
-    "q_top_per_group" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice FROM (
-           SELECT o_orderpriority, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_orderpriority
-               ORDER BY o_totalprice DESC, o_orderkey) AS rn
-           FROM orders) WHERE rn <= 3
-         ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey""",
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run_cents
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-    "q_lag_lead" ->
-      """SELECT o_custkey, o_orderkey,
-           lag(o_totalprice) OVER w AS o_totalprice_lag,
-           lead(o_totalprice) OVER w AS o_totalprice_lead
-         FROM orders
-         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-         ORDER BY o_custkey, o_orderkey""",
-    "q_moving_avg" ->
-      """SELECT user_id, event_id, epoch_ms(ts) AS ts_ms,
-           CAST(round(avg(CAST(round(value * 100) AS BIGINT)) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)) AS BIGINT) AS mavg_cents
-         FROM events ORDER BY user_id, ts_ms, event_id""",
-    "q_range_frame" ->
-      """SELECT user_id, event_id, ts_ms,
-           CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY ts_ms
-             RANGE BETWEEN 3600000 PRECEDING AND CURRENT ROW) AS BIGINT) AS hr_cents
-         FROM (SELECT user_id, event_id, epoch_ms(ts) AS ts_ms,
-                 CAST(round(value * 100) AS BIGINT) AS cents FROM events)
-         ORDER BY user_id, ts_ms, event_id""",
-    "q_union" ->
-      """SELECT l_partkey AS k FROM lineitem UNION
-         SELECT p_partkey FROM part ORDER BY k""",
-    "q_intersect" ->
-      """SELECT c_custkey AS k FROM customer INTERSECT
-         SELECT o_custkey FROM orders ORDER BY k""",
-    "q_except" ->
-      """SELECT c_custkey AS k FROM customer EXCEPT
-         SELECT o_custkey FROM orders ORDER BY k""",
-    "q_asof_join" ->
-      """SELECT o.o_orderkey, o.o_custkey, e.value
-         FROM orders o ASOF LEFT JOIN events e
-           ON o.o_custkey = e.user_id AND e.ts <= o.o_orderdate
-         ORDER BY o.o_orderkey""",
-    "q_running_totals" ->
-      """SELECT user_id, count(*) AS n_events,
-           sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS total_value
-         FROM events GROUP BY user_id ORDER BY user_id""",
-    "q_range_join" ->
-      """SELECT o_orderkey, count(e.value) AS n_ev
-         FROM orders o LEFT JOIN events e
-           ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-          AND e.ts < o.o_orderdate + INTERVAL 7 DAY
-         GROUP BY o_orderkey ORDER BY o_orderkey""",
-    "q_dedup_exact" ->
-      """SELECT doc_id FROM documents
-         WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)
-         ORDER BY doc_id""",
-    "q_dedup_fingerprint" ->
-      """SELECT doc_id FROM documents WHERE doc_id IN (
-           SELECT min(doc_id) FROM documents
-           GROUP BY md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))))
-         ORDER BY doc_id""",
-    "q_token_count" ->
-      """SELECT doc_id,
-           CAST(len(string_split_regex(lower(trim(text)), '\s+')) AS BIGINT) AS n_tokens
-         FROM documents ORDER BY doc_id""",
-    "q_subword_count" ->
-      """SELECT doc_id,
-           CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]')) AS BIGINT)
-             AS n_subwords
-         FROM documents ORDER BY doc_id""",
-    "q_date_filter" ->
-      """SELECT l_returnflag, count(*) AS n, sum(l_quantity) AS sum_qty
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-05-24 00:00:00'
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_stopword_ratio" ->
-      """SELECT doc_id,
-           round(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               t -> list_contains(['the','a','an','of','to','and','in','is','it','that'], t)))
-             / len(string_split_regex(lower(trim(text)), '\s+')), 6) AS stop_ratio
-         FROM documents ORDER BY doc_id""",
-    "q_quality_model" -> QualityModelOracle,
-    "q_split_assign" ->
-      """SELECT doc_id, source,
-           CASE WHEN b < 8000 THEN 'train'
-                WHEN b < 9000 THEN 'val'
-                WHEN b < 10000 THEN 'test'
-                ELSE 'holdout' END AS split
-         FROM (SELECT doc_id, source,
-                 CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                   % 10000 AS b
-               FROM documents)
-         ORDER BY doc_id""",
-    "q_domain_classify" -> DomainClassifyOracle,
-    "q_quality_score" ->
-      """WITH q AS (
-           SELECT doc_id, text, CAST(length(text) AS DOUBLE) AS n,
-             round(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                 t -> list_contains(['the','a','an','of','to','and','in','is','it','that'], t)))
-               / len(string_split_regex(lower(trim(text)), '\s+')), 6) AS sr
-           FROM documents)
-         SELECT doc_id, round((
-             CASE WHEN n >= 100 AND n <= 10000 THEN 1.0
-                  WHEN n >= 20 THEN 0.5 ELSE 0.0 END
-           + CASE WHEN sr > 0.05 THEN 1.0 ELSE 0.0 END
-           + CASE WHEN (n - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) / n <= 0.2
-                  THEN 1.0 ELSE 0.0 END) / 3.0, 6) AS quality
-         FROM q ORDER BY doc_id""",
-    "q_lang_guess" ->
-      """WITH tk AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
-         c AS (
-           SELECT doc_id,
-             len(list_filter(t, x -> list_contains(['the','and','of','is'], x))) AS he,
-             len(list_filter(t, x -> list_contains(['el','los','las','es'], x))) AS hs,
-             len(list_filter(t, x -> list_contains(['le','les','est','une'], x))) AS hf,
-             len(list_filter(t, x -> list_contains(['der','die','das','ist'], x))) AS hd
-           FROM tk)
-         SELECT doc_id,
-           CASE WHEN he = 0 AND hs = 0 AND hf = 0 AND hd = 0 THEN 'und'
-                WHEN he >= hs AND he >= hf AND he >= hd THEN 'en'
-                WHEN hs >= hf AND hs >= hd THEN 'es'
-                WHEN hf >= hd THEN 'fr' ELSE 'de' END AS lang_pred
-         FROM c ORDER BY doc_id""",
-    "q_top_tokens" ->
-      """SELECT token, count(*) AS cnt FROM (
-           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
-           FROM documents)
-         WHERE len(token) > 0
-         GROUP BY token ORDER BY cnt DESC, token LIMIT 20""",
-    // exact heavy hitters: the sketch+confirm pipeline's RESULT is exactly
-    // the true {token : freq ≥ ceil(support·N)} set, so the oracle is the
-    // plain threshold aggregate (same whitespace tokenization as
-    // q_top_tokens)
-    // inverted-index conjunctive search: postings re-derived from the raw
-    // corpus with the proven tokenizer chain; docs containing BOTH terms
-    // ranked by total tf (integer), id ties
-    "q_search_index" ->
-      """WITH post AS (
-           SELECT doc_id, t AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(string_split_regex(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY doc_id, t),
-         m AS (
-           SELECT doc_id, count(*) AS matched, sum(tf) AS total_tf
-           FROM post WHERE term IN ('scan', 'join') GROUP BY doc_id)
-         SELECT doc_id, CAST(total_tf AS BIGINT) AS total_tf
-         FROM m WHERE matched = 2
-         ORDER BY total_tf DESC, doc_id LIMIT 20""",
-    "q_search_any" ->
-      """WITH post AS (
-           SELECT doc_id, t AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(string_split_regex(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY doc_id, t)
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS matched,
-                CAST(sum(tf) AS BIGINT) AS total_tf
-         FROM post WHERE term IN ('scan', 'dup') GROUP BY doc_id
-         ORDER BY matched DESC, total_tf DESC, doc_id LIMIT 20""",
-    // integer-idf weighted rank: weight_t = N // df_t (floor division both
-    // engines), score = sum(tf_t * weight_t) — exact integers end to end
-    "q_search_weighted" ->
-      """WITH post AS (
-           SELECT doc_id, t AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(string_split_regex(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY doc_id, t),
-         n AS (SELECT count(*) AS nd FROM documents),
-         w AS (SELECT term, count(*) AS df FROM post GROUP BY term),
-         m AS (
-           SELECT p.doc_id,
-             sum(p.tf * ((SELECT nd FROM n) // w.df)) AS score
-           FROM post p JOIN w USING (term)
-           WHERE p.term IN ('scan', 'dup') GROUP BY p.doc_id)
-         SELECT doc_id, CAST(score AS BIGINT) AS score
-         FROM m ORDER BY score DESC, doc_id LIMIT 20""",
-    // BM25: every constant subexpression written SYMBOLICALLY (1.2*(1-0.75),
-    // never 0.3) and in the same operand order as the Spark expression, so
-    // both engines fold identical doubles; contributions round to integer
-    // nanos before the per-doc sum (exact, order-independent)
-    "q_bm25" ->
-      """WITH post AS (
-           SELECT doc_id, t AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(string_split_regex(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY doc_id, t),
-         dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-                FROM post GROUP BY doc_id),
-         n AS (SELECT count(*) AS nd,
-                 (SELECT CAST(sum(tf) AS DOUBLE) FROM post) / count(*)
-                   AS avgdl
-               FROM documents),
-         w AS (SELECT term, count(*) AS df FROM post GROUP BY term),
-         contrib AS (
-           SELECT p.doc_id,
-             CAST(round(ln(1.0 + (nd - df + 0.5) / (df + 0.5))
-               * (p.tf * (1.2 + 1))
-               / (p.tf + 1.2 * (1 - 0.75) + 1.2 * 0.75 * d.dl / avgdl)
-               * 1e9) AS BIGINT) AS nanos
-           FROM post p JOIN w USING (term) JOIN dl d USING (doc_id)
-           CROSS JOIN n
-           WHERE p.term IN ('scan', 'dup')),
-         m AS (SELECT doc_id, CAST(sum(nanos) AS BIGINT) AS nanos
-               FROM contrib GROUP BY doc_id)
-         SELECT doc_id, CAST(nanos AS DOUBLE) / 1e9 AS score
-         FROM m ORDER BY nanos DESC, doc_id LIMIT 20""",
-    // run boundary = null-safe type change; rn = 1 marks the key's first
-    // row (lag-is-null can't tell "no predecessor" from a null type)
-    "q_dedup_consecutive" ->
-      """SELECT event_id, user_id, event_type FROM (
-           SELECT event_id, user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS prev,
-             row_number() OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS rn
-           FROM events)
-         WHERE rn = 1 OR prev IS DISTINCT FROM event_type
-         ORDER BY event_id""",
-    // per-column null-safe change counts over the common-id join of the
-    // q_dataset_diff versions + three planted edit patterns
-    "q_diff_columns" ->
-      """WITH cur AS (
-           SELECT doc_id, text, lang, n_chars FROM documents
-           WHERE doc_id % 11 <> 5),
-         prev AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN 'OLD ' || text ELSE text END
-               AS text,
-             CASE WHEN doc_id % 5 = 0 THEN 'xx' ELSE lang END AS lang,
-             CASE WHEN doc_id % 13 = 0 THEN n_chars + 1 ELSE n_chars END
-               AS n_chars
-           FROM documents WHERE doc_id % 10 <> 3),
-         j AS (
-           SELECT c.text AS ct, p.text AS pt, c.lang AS cl, p.lang AS pl,
-             c.n_chars AS cn, p.n_chars AS pn
-           FROM cur c JOIN prev p USING (doc_id)),
-         w AS (
-           SELECT
-             CAST(sum(CASE WHEN ct IS DISTINCT FROM pt THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_text,
-             CAST(sum(CASE WHEN cl IS DISTINCT FROM pl THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_lang,
-             CAST(sum(CASE WHEN cn IS DISTINCT FROM pn THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_nchars,
-             CAST(count(*) AS BIGINT) AS n_common
-           FROM j)
-         SELECT 'lang' AS col_name, n_lang AS n_changed, n_common FROM w
-         UNION ALL SELECT 'n_chars', n_nchars, n_common FROM w
-         UNION ALL SELECT 'text', n_text, n_common FROM w
-         ORDER BY col_name""",
-    // rank→reference-quantile mapping, all integer: k = (rn·n_ref + n − 1)
-    // // n (operands non-negative ⇒ `//` ≡ Spark `div`), lookup by
-    // generate_series expansion
-    "q_calibrate" ->
-      """WITH c AS (
-           SELECT doc_id, source, CAST(n_chars AS BIGINT) AS v
-           FROM documents),
-         rv AS (SELECT CAST(n_chars AS BIGINT) AS rv, count(*) AS cnt
-                FROM documents GROUP BY 1),
-         rc AS (SELECT rv, cnt,
-             coalesce(sum(cnt) OVER (ORDER BY rv
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS p
-           FROM rv),
-         nr AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_ref FROM rv),
-         lk AS (SELECT rv, unnest(generate_series(CAST(p + 1 AS BIGINT),
-                  CAST(p + cnt AS BIGINT))) AS k
-                FROM rc),
-         cu AS (SELECT doc_id, source, v,
-             row_number() OVER (PARTITION BY source ORDER BY v, doc_id)
-               AS rn,
-             count(*) OVER (PARTITION BY source) AS n
-           FROM c)
-         SELECT cu.doc_id, cu.source, CAST(cu.v AS BIGINT) AS value,
-           CAST(lk.rv AS BIGINT) AS calibrated
-         FROM cu CROSS JOIN nr
-         JOIN lk ON lk.k = (cu.rn * nr.n_ref + cu.n - 1) // cu.n
-         ORDER BY cu.doc_id""",
-    // per-(doc, n, gram) counts from the shared range/slice shingle shape;
-    // top gram via (cnt DESC, gram ASC) row_number, dup mass via
-    // conditional sum; fractions of the NORMALIZED char count
-    "q_gopher_rep" ->
-      """WITH tk AS (
-           SELECT doc_id,
-             trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS nt
-           FROM documents),
-         tt AS (SELECT doc_id, nt, string_split_regex(nt, '\s+') AS t
-                FROM tk),
-         b AS (SELECT doc_id, CAST(length(nt) AS BIGINT) AS n_chars,
-                 CAST(len(t) AS BIGINT) AS n_words
-               FROM tt),
-         g AS (
-           SELECT doc_id, 2 AS n, concat_ws(' ', t[i+1], t[i+2]) AS gr
-           FROM (SELECT doc_id, t,
-                   unnest(range(0, greatest(len(t) - 1, 0))) AS i
-                 FROM tt)
-           UNION ALL
-           SELECT doc_id, 3, concat_ws(' ', t[i+1], t[i+2], t[i+3])
-           FROM (SELECT doc_id, t,
-                   unnest(range(0, greatest(len(t) - 2, 0))) AS i
-                 FROM tt)
-           UNION ALL
-           SELECT doc_id, 4, concat_ws(' ', t[i+1], t[i+2], t[i+3], t[i+4])
-           FROM (SELECT doc_id, t,
-                   unnest(range(0, greatest(len(t) - 3, 0))) AS i
-                 FROM tt)),
-         c AS (SELECT doc_id, n, gr, count(*) AS cnt
-               FROM g GROUP BY 1, 2, 3),
-         p AS (
-           SELECT doc_id, n,
-             max(CASE WHEN rn = 1 THEN cnt * length(gr) END) AS topc,
-             sum(CASE WHEN cnt >= 2 THEN cnt * length(gr) ELSE 0 END) AS dupc
-           FROM (SELECT doc_id, n, gr, cnt,
-                   row_number() OVER (PARTITION BY doc_id, n
-                     ORDER BY cnt DESC, gr) AS rn
-                 FROM c)
-           GROUP BY doc_id, n),
-         s AS (
-           SELECT doc_id,
-             max(CASE WHEN n = 2 THEN topc END) AS t2,
-             max(CASE WHEN n = 3 THEN topc END) AS t3,
-             max(CASE WHEN n = 3 THEN dupc END) AS d3,
-             max(CASE WHEN n = 4 THEN dupc END) AS d4
-           FROM p GROUP BY doc_id)
-         SELECT b.doc_id, b.n_words, b.n_chars,
-           round(CAST(coalesce(t2, 0) AS DOUBLE) / greatest(b.n_chars, 1), 6)
-             AS top2_char_frac,
-           round(CAST(coalesce(t3, 0) AS DOUBLE) / greatest(b.n_chars, 1), 6)
-             AS top3_char_frac,
-           round(CAST(coalesce(d3, 0) AS DOUBLE) / greatest(b.n_chars, 1), 6)
-             AS dup3_char_frac,
-           round(CAST(coalesce(d4, 0) AS DOUBLE) / greatest(b.n_chars, 1), 6)
-             AS dup4_char_frac
-         FROM b LEFT JOIN s USING (doc_id) ORDER BY b.doc_id""",
-    // the BM25 chain with the labeled-positive exclusion BEFORE the top-k
-    // cut — q_bm25's oracle plus one NOT IN
-    "q_hard_negatives" ->
-      """WITH post AS (
-           SELECT doc_id, t AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(string_split_regex(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY doc_id, t),
-         dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-                FROM post GROUP BY doc_id),
-         n AS (SELECT count(*) AS nd,
-                 (SELECT CAST(sum(tf) AS DOUBLE) FROM post) / count(*)
-                   AS avgdl
-               FROM documents),
-         w AS (SELECT term, count(*) AS df FROM post GROUP BY term),
-         contrib AS (
-           SELECT p.doc_id,
-             CAST(round(ln(1.0 + (nd - df + 0.5) / (df + 0.5))
-               * (p.tf * (1.2 + 1))
-               / (p.tf + 1.2 * (1 - 0.75) + 1.2 * 0.75 * d.dl / avgdl)
-               * 1e9) AS BIGINT) AS nanos
-           FROM post p JOIN w USING (term) JOIN dl d USING (doc_id)
-           CROSS JOIN n
-           WHERE p.term IN ('scan', 'dup')),
-         m AS (SELECT doc_id, CAST(sum(nanos) AS BIGINT) AS nanos
-               FROM contrib GROUP BY doc_id)
-         SELECT doc_id, CAST(nanos AS DOUBLE) / 1e9 AS score
-         FROM m
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM documents WHERE source = 'src0')
-         ORDER BY nanos DESC, doc_id LIMIT 20""",
-    // type-1 quantile cuts: the ceil(p*n)-th order statistic per group —
-    // selection, not interpolation, so any p is integer-exact; ties on v
-    // are harmless (the selected VALUE at a rank is tie-order-invariant)
-    "q_winsorized" ->
-      """WITH b AS (
-           SELECT l_returnflag AS g,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem),
-         r AS (
-           SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn,
-             count(*) OVER (PARTITION BY g) AS n
-           FROM b),
-         cuts AS (
-           SELECT g,
-             max(CASE WHEN rn = greatest(1, CAST(ceil(0.01 * n) AS BIGINT))
-                 THEN v END) AS lo,
-             max(CASE WHEN rn = CAST(ceil(0.99 * n) AS BIGINT)
-                 THEN v END) AS hi
-           FROM r GROUP BY g)
-         SELECT b.g AS l_returnflag, CAST(count(*) AS BIGINT) AS n,
-           CAST(max(lo) AS BIGINT) AS lo_cut,
-           CAST(max(hi) AS BIGINT) AS hi_cut,
-           CAST(sum(least(greatest(v, lo), hi)) AS BIGINT) AS win_sum,
-           round(CAST(sum(least(greatest(v, lo), hi)) AS DOUBLE) / count(*), 6)
-             AS win_mean
-         FROM b JOIN cuts USING (g)
-         GROUP BY b.g ORDER BY l_returnflag""",
-    // the winsorized scale-path contract: per-group exact n + the p01/p99
-    // sketch-cut GK flags pinned true (ranks counted by the engine itself)
-    "q_winsorized_approx" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-           true AS lo_ok, true AS hi_ok
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // RRF fusion of the two leg rankings (same BM25 CTE chain; cosine vs
-    // the corpus's vector 0, round-6 like CosineTopkOracle); integer ranks
-    // -> 1.0/(60+rank) doubles are engine-identical
-    "q_hybrid_search" ->
-      """WITH post AS (
-           SELECT doc_id, t AS term, count(*) AS tf FROM (
-             SELECT doc_id, unnest(string_split_regex(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               '\s+')) AS t
-             FROM documents)
-           WHERE len(t) > 0 GROUP BY doc_id, t),
-         dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl
-                FROM post GROUP BY doc_id),
-         n AS (SELECT count(*) AS nd,
-                 (SELECT CAST(sum(tf) AS DOUBLE) FROM post) / count(*)
-                   AS avgdl
-               FROM documents),
-         w AS (SELECT term, count(*) AS df FROM post GROUP BY term),
-         contrib AS (
-           SELECT p.doc_id,
-             CAST(round(ln(1.0 + (nd - df + 0.5) / (df + 0.5))
-               * (p.tf * (1.2 + 1))
-               / (p.tf + 1.2 * (1 - 0.75) + 1.2 * 0.75 * d.dl / avgdl)
-               * 1e9) AS BIGINT) AS nanos
-           FROM post p JOIN w USING (term) JOIN dl d USING (doc_id)
-           CROSS JOIN n
-           WHERE p.term IN ('scan', 'dup')),
-         m AS (SELECT doc_id, CAST(sum(nanos) AS BIGINT) AS nanos
-               FROM contrib GROUP BY doc_id),
-         tr AS (
-           SELECT doc_id, rt FROM (
-             SELECT doc_id, row_number() OVER (ORDER BY nanos DESC, doc_id)
-               AS rt FROM m)
-           WHERE rt <= 100),
-         vr AS (
-           SELECT doc_id, rv FROM (
-             SELECT c.vec_id AS doc_id, row_number() OVER (ORDER BY
-               round(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                   CAST(q.embedding AS DOUBLE[]))
-                 / (sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                     CAST(c.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                     CAST(q.embedding AS DOUBLE[])))), 6) DESC,
-               c.vec_id) AS rv
-             FROM embeddings c JOIN embeddings q
-               ON q.vec_id = 0 AND c.vec_id != 0)
-           WHERE rv <= 100)
-         SELECT coalesce(tr.doc_id, vr.doc_id) AS doc_id,
-           coalesce(1.0 / (60 + rt), 0.0) + coalesce(1.0 / (60 + rv), 0.0)
-             AS rrf
-         FROM tr FULL OUTER JOIN vr ON tr.doc_id = vr.doc_id
-         ORDER BY rrf DESC, doc_id LIMIT 20""",
-    // exact phrase: per (doc, term) sorted position lists (DuckDB lambda
-    // index is 1-based → pos = i − 1 matches Spark's 0-based posexplode);
-    // occurrences = |pos(t0) ∩ (pos(t1) − 1)|
-    "q_search_phrase" ->
-      """WITH post AS (
-           SELECT doc_id, u['t'] AS term, u['p'] AS pos FROM (
-             SELECT doc_id, unnest(list_transform(string_split_regex(
-               trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')),
-               '\s+'), (x, i) -> {'t': x, 'p': i - 1})) AS u
-             FROM documents)
-           WHERE len(u['t']) > 0),
-         pos AS (
-           SELECT doc_id, term, list_sort(list(pos)) AS ps
-           FROM post GROUP BY doc_id, term),
-         a0 AS (SELECT doc_id, ps AS p0 FROM pos WHERE term = 'stream'),
-         a1 AS (SELECT doc_id, ps AS p1 FROM pos WHERE term = 'column'),
-         m AS (
-           SELECT a0.doc_id,
-             len(list_intersect(p0, list_transform(p1, x -> x - 1)))
-               AS phrase_count
-           FROM a0 JOIN a1 USING (doc_id))
-         SELECT doc_id, CAST(phrase_count AS BIGINT) AS phrase_count
-         FROM m WHERE phrase_count > 0
-         ORDER BY phrase_count DESC, doc_id LIMIT 20""",
-    "q_heavy_hitters" ->
-      """WITH t AS (
-           SELECT token FROM (
-             SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-               AS token
-             FROM documents)
-           WHERE len(token) > 0),
-         n AS (SELECT count(*) AS total FROM t)
-         SELECT token AS item, count(*) AS cnt
-         FROM t GROUP BY token
-         HAVING count(*) >= ceil(0.005 * (SELECT total FROM n))
-         ORDER BY item""",
-    "q_ngram_jaccard" -> NgramJaccardLshOracle,
-    "q_salted_join" ->
-      """SELECT c_mktsegment, count(*) AS n,
-           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0
-             AS sum_price
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q_topk_agg" ->
-      """SELECT l_returnflag, price, lid FROM (
-           SELECT l_returnflag, CAST(l_extendedprice AS DOUBLE) AS price,
-             CAST(l_orderkey * 100 + l_linenumber AS BIGINT) AS lid,
-             row_number() OVER (PARTITION BY l_returnflag
-               ORDER BY CAST(l_extendedprice AS DOUBLE) DESC,
-                        l_orderkey * 100 + l_linenumber) AS rn
-           FROM lineitem)
-         WHERE rn <= 5 ORDER BY l_returnflag, price DESC, lid""",
-    "q_hash_sample" ->
-      """SELECT doc_id, lang FROM documents
-         WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                 % 10000
-               < CASE WHEN lang = 'en' THEN 5000 ELSE 2000 END
-         ORDER BY doc_id""",
-    "q_repetition" ->
-      """WITH tk AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
-         g AS (
-           SELECT doc_id, list(concat_ws(' ', t[i+1], t[i+2])) AS gs
-           FROM (SELECT doc_id, t,
-                   unnest(range(0, greatest(len(t) - 2, 0) + 1)) AS i
-                 FROM tk)
-           GROUP BY doc_id)
-         SELECT doc_id,
-           round(1.0 - CAST(len(list_distinct(gs)) AS DOUBLE) / len(gs), 6)
-             AS rep_ratio
-         FROM g ORDER BY doc_id""",
-    "q_tfidf" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-           FROM documents),
-         tf AS (
-           SELECT doc_id, term, count(*) AS tf FROM tok
-           WHERE len(term) > 0 GROUP BY doc_id, term),
-         dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         n AS (SELECT count(DISTINCT doc_id) AS n FROM tf),
-         scored AS (
-           SELECT doc_id, tf.term AS term,
-             round(tf * ln(CAST(n.n AS DOUBLE) / df), 6) AS tfidf
-           FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n),
-         ranked AS (
-           SELECT doc_id, term, tfidf,
-             row_number() OVER (PARTITION BY doc_id
-               ORDER BY tfidf DESC, term) AS rn
-           FROM scored)
-         SELECT doc_id, term, tfidf FROM ranked WHERE rn <= 5
-         ORDER BY doc_id, tfidf DESC, term""",
-    "q_cosine_topk" -> CosineTopkOracle,
-    "q_cosine_expr" -> CosineTopkOracle,
-    // int8 ANN: re-derive the per-vector scale (max|x|/127, double-widened
-    // floats — exact both engines), round-half-away quantization (DuckDB
-    // round == Spark/BigDecimal HALF_UP on the same doubles), integer dot
-    // (exact in double well below 2^53, cast back), rank by qdot·scale
-    // with id ties, display by vec_id. The store twin shares the SQL
-    // verbatim: identical results by construction.
-    "q_ann_int8" -> AnnInt8Oracle,
-    "q_ann_int8_store" -> AnnInt8Oracle,
-    "q_lsh_recall" -> LshRecallOracle,
-    "q_lsh_recall_planted" -> LshRecallPlantedOracle,
-    "q_lsh_ann" -> LshAnnOracle,
-    // identical SQL by construction: the store twin differs only in the
-    // Spark-side plan (pre-signed bucketed read vs per-query re-signing)
-    "q_lsh_store_ann" -> LshAnnOracle,
-    "q_embedding_neardup" -> EmbeddingNearDupLshOracle,
-    "q_dedup_incr_embedding" -> DedupIncrEmbeddingOracle,
-    // full engine-for-engine replay: DuckDB re-synthesizes the page AND
-    // re-runs the strip/decode/collapse chain (RE2-compatible patterns by
-    // construction; 'g' = replace-all, Spark's default)
-    "q_html_extract" ->
-      """WITH h AS (
-           SELECT doc_id,
-             '<html><head><title>t</title><style type="text/css">p{margin:0}</style><script>if(a<b){c&&d}</script></head><body><h1>'
-             || source || '</h1>' || chr(10) || '<p>' || text ||
-             '</p><!-- hidden -->' || chr(10) ||
-             '<div>x &amp; y &lt;tag&gt; &quot;q&quot; &#39;s&#39; a&nbsp;b</div></body></html>'
-             AS html
-           FROM documents),
-         x AS (
-           SELECT doc_id, trim(regexp_replace(
-             replace(replace(replace(replace(replace(replace(
-               regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-                 html,
-                 '(?is)<script[^>]*>.*?</script\s*>', ' ', 'g'),
-                 '(?is)<style[^>]*>.*?</style\s*>', ' ', 'g'),
-                 '(?s)<!--.*?-->', ' ', 'g'),
-                 '(?s)<[^>]*>', ' ', 'g'),
-               '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
-               '&quot;', '"'), '&#39;', chr(39)), '&amp;', '&'),
-             '\s+', ' ', 'g')) AS text_clean
-           FROM h)
-         SELECT doc_id, text_clean,
-           CAST(length(text_clean) AS BIGINT) AS n_chars
-         FROM x ORDER BY doc_id""",
-    // block-tier replay: DuckDB re-synthesizes the structured page and
-    // re-runs the whole sentinel chain (cells→\x11, blocks→\x12, strip,
-    // decode, collapse, sentinel resolution — htmlBlocksChainSql is the
-    // single shared replay of TextAnalysis.htmlToBlocks)
-    "q_html_blocks" -> {
-      val synth = "'<html><head><title>t</title><style>p{margin:0}</style>" +
-        "<script>if(a<b){c&&d}</script></head><body><h1>' || source || " +
-        "'</h1><p>intro &amp; summary</p>' || chr(10) || '<p>' || text || " +
-        "'</p><!-- hidden --><table><tr><th>key</th><th>val</th></tr>" +
-        "<tr><td>id</td><td>' || doc_id || '</td></tr><tr><td>source</td>" +
-        "<td>' || source || '</td></tr></table><ul><li>alpha</li>" +
-        "<li>beta<br>gamma</li></ul></body></html>'"
-      s"""WITH h AS (SELECT doc_id, $synth AS html FROM documents),
-         x AS (SELECT doc_id, ${htmlBlocksChainSql("html")} AS text_blocks
-           FROM h)
-         SELECT doc_id, text_blocks,
-           CAST(length(text_blocks)
-             - length(replace(text_blocks, chr(10), '')) + 1 AS BIGINT)
-             AS n_lines,
-           CAST(length(text_blocks)
-             - length(replace(text_blocks, chr(9), '')) AS BIGINT)
-             AS n_cells
-         FROM x ORDER BY doc_id"""
-    },
-    // composition oracle: the block chain feeding the q_paragraph_dedup
-    // keep-first replay (df > 2 drops to one survivor corpus-wide; blanks
-    // would ride through, though this plant produces none)
-    "q_html_paragraph_dedup" -> {
-      val synth = "'<div><p>shared global paragraph</p><p>group ' || " +
-        "(doc_id % 50) || '</p><p>' || text || '</p></div>'"
-      s"""WITH h AS (SELECT doc_id, $synth AS html FROM documents),
-         p AS (SELECT doc_id, ${htmlBlocksChainSql("html")} AS text FROM h),
-         post AS (
-           SELECT doc_id, u['pos'] AS pos, u['para'] AS para FROM (
-             SELECT doc_id,
-               unnest(list_transform(string_split(text, chr(10)),
-                 (x, i) -> {'pos': i - 1, 'para': x})) AS u
-             FROM p)),
-         ranked AS (
-           SELECT doc_id, pos, para,
-             row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) AS rn
-           FROM post),
-         dfreq AS (SELECT para, count(DISTINCT doc_id) AS df
-           FROM post GROUP BY para),
-         kept AS (
-           SELECT r.doc_id, r.pos, r.para
-           FROM ranked r JOIN dfreq USING (para)
-           WHERE trim(r.para) = '' OR dfreq.df <= 2 OR r.rn = 1),
-         agg AS (
-           SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS clean_text
-           FROM kept GROUP BY doc_id)
-         SELECT p.doc_id, coalesce(agg.clean_text, '') AS clean_text
-         FROM p LEFT JOIN agg USING (doc_id) ORDER BY doc_id"""
-    },
-    // closed-form replay of the synthetic-PNG pixel law
-    // (Multimodal.synthDims/synthGray): the engine renders REAL PNGs from
-    // this law and decodes them with the real javax.imageio codec — the
-    // oracle recomputes what a correct decode must see, pixel by pixel
-    "q_image_dhash" -> ImageDHashOracle,
-    "q_image_dedup" -> ImageDedupOracle,
-    "q_image_dedup_wide" -> ImageDedupWideOracle,
-    "q_image_store" -> ImageStoreOracle,
-    "q_audio_dedup" -> AudioDedupOracle,
-    "q_audio_store" -> AudioStoreOracle,
-    "q_video_dedup" -> VideoDedupOracle,
-    "q_video_dedup_scaled" -> VideoDedupScaledOracle,
-    "q_video_store" -> VideoStoreOracle,
-    "q_media_decode" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-             CAST(8 + doc_id % 9 AS INT) AS width,
-             CAST(8 + (doc_id // 9) % 9 AS INT) AS height
-           FROM documents),
-         px AS (
-           SELECT media_id, width, height,
-             unnest(range(0, width * height)) AS i
-           FROM m),
-         g AS (
-           SELECT media_id, width, height,
-             sum((i % width + 31 * (i // width) + media_id) % 256) AS ps
-           FROM px GROUP BY media_id, width, height)
-         SELECT media_id, width, height,
-           round(CAST(ps AS DOUBLE) / (width * height), 6) AS mean_intensity,
-           CAST(ps AS BIGINT) AS pixel_sum
-         FROM g ORDER BY media_id""",
-    // the resize oracle replays decode∘NN-resample∘decode through the same
-    // pixel law: target (x, y) reads source (x·w div 6, y·h div 10) — the
-    // exact integer mapping Multimodal.resizeImages applies — so both
-    // real-codec passes AND the resample arithmetic must agree pixel-wise
-    "q_media_resize" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-             CAST(8 + doc_id % 9 AS INT) AS w,
-             CAST(8 + (doc_id // 9) % 9 AS INT) AS h
-           FROM documents),
-         px AS (
-           SELECT media_id, w, h, unnest(range(0, 60)) AS i
-           FROM m),
-         g AS (
-           SELECT media_id,
-             sum((((i % 6) * w // 6)
-                  + 31 * ((i // 6) * h // 10) + media_id) % 256) AS ps
-           FROM px GROUP BY media_id)
-         SELECT media_id, CAST(6 AS INT) AS width, CAST(10 AS INT) AS height,
-           round(CAST(ps AS DOUBLE) / 60, 6) AS mean_intensity,
-           CAST(ps AS BIGINT) AS pixel_sum
-         FROM g ORDER BY media_id""",
-    // closed-form replay of the synthetic PCM law (Multimodal.synthPcm):
-    // n = 64 + id mod 193 samples, sample i = (17i + 31·id) mod 4001 −
-    // 2000. mean_sample replays the Scala side's floor(x·1e6 + 0.5) rule
-    // LITERALLY (not round(): means are signed here, and SQL round() is
-    // half-away-from-zero on negatives where the house rule is
-    // half-toward-+∞ — identical double op sequence instead)
-    "q_audio_decode" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-             CAST(64 + doc_id % 193 AS BIGINT) AS n
-           FROM documents),
-         px AS (
-           SELECT media_id, n, unnest(range(0, n)) AS i
-           FROM m),
-         g AS (
-           SELECT media_id, n,
-             sum((17 * i + 31 * media_id) % 4001 - 2000) AS ss,
-             max(abs((17 * i + 31 * media_id) % 4001 - 2000)) AS pk
-           FROM px GROUP BY media_id, n)
-         SELECT media_id, CAST(8000 AS INT) AS sample_rate,
-           CAST(1 AS INT) AS channels, n AS n_samples,
-           CAST(ss AS BIGINT) AS sample_sum, CAST(pk AS INT) AS peak,
-           floor(CAST(ss AS DOUBLE) / n * 1000000.0 + 0.5) / 1000000.0
-             AS mean_sample
-         FROM g ORDER BY media_id""",
-    // the frame oracle replays the hop/window law over the same PCM law:
-    // frame f covers samples [16f, 16f + 32), emitted while it fits
-    // ((n - 32) // 16 + 1 frames; every fixture clip has n >= 64)
-    "q_audio_frames" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-             CAST(64 + doc_id % 193 AS BIGINT) AS n
-           FROM documents),
-         f AS (
-           SELECT media_id, unnest(range(0, (n - 32) // 16 + 1)) AS f
-           FROM m),
-         s AS (
-           SELECT media_id, f, unnest(range(f * 16, f * 16 + 32)) AS i
-           FROM f),
-         g AS (
-           SELECT media_id, f,
-             sum((17 * i + 31 * media_id) % 4001 - 2000) AS ss,
-             max(abs((17 * i + 31 * media_id) % 4001 - 2000)) AS pk
-           FROM s GROUP BY media_id, f)
-         SELECT media_id, CAST(f AS INT) AS frame_no,
-           CAST(f * 16 AS BIGINT) AS start_sample,
-           CAST(ss AS BIGINT) AS sample_sum, CAST(pk AS INT) AS peak
-         FROM g ORDER BY media_id, frame_no""",
-    "q_media_meta" ->
-      """SELECT 'image' AS kind, count(*) AS n,
-           CAST(sum(strlen(text)) AS BIGINT) AS total_bytes,
-           round(CAST(sum(strlen(text)) AS DOUBLE) / count(*), 4) AS avg_bytes
-         FROM documents""",
-    // the video oracle replays container-parse ∘ every-2nd-sample ∘
-    // PNG-decode through the frame law: clip id has 2 + id mod 4 frames at
-    // the synthDims(id) dimensions, frame f pixel (x, y) =
-    // (x + 31y + id + 97f) mod 256 — PNG frames are lossless, so decoded
-    // pixel sums must match the law exactly (no tolerance)
-    "q_frame_sample" ->
-      """WITH m AS (
-           SELECT doc_id AS media_id,
-             CAST(8 + doc_id % 9 AS INT) AS w,
-             CAST(8 + (doc_id // 9) % 9 AS INT) AS h,
-             CAST(2 + doc_id % 4 AS BIGINT) AS nf
-           FROM documents),
-         f AS (
-           SELECT media_id, w, h, unnest(range(0, nf)) AS f
-           FROM m),
-         px AS (
-           SELECT media_id, w, h, f, unnest(range(0, w * h)) AS i
-           FROM f WHERE f % 2 = 0),
-         g AS (
-           SELECT media_id, w, h, f,
-             sum((i % w + 31 * (i // w) + media_id + 97 * f) % 256) AS ps
-           FROM px GROUP BY media_id, w, h, f)
-         SELECT media_id, CAST(f AS INT) AS frame_no, w AS width,
-           h AS height, CAST(ps AS BIGINT) AS pixel_sum
-         FROM g ORDER BY media_id, frame_no""",
-    "q_interval_join" ->
-      """SELECT l.user_id, l.event_id AS from_id, r.event_id AS to_id,
-           epoch_ms(l.ts) AS from_ms, epoch_ms(r.ts) AS to_ms, r.value
-         FROM events l JOIN events r
-           ON r.user_id = l.user_id
-           AND l.event_type = 'click' AND r.event_type = 'purchase'
-           AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 1 HOUR
-         ORDER BY from_id, to_id""",
-    "q_tumbling" ->
-      """SELECT epoch_ms(time_bucket(INTERVAL 1 HOUR, ts)) AS win_ms, event_type,
-           count(*) AS n,
-           sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS sum_value
-         FROM events GROUP BY win_ms, event_type ORDER BY win_ms, event_type""",
-    "q_sliding" ->
-      """SELECT epoch_ms(w) AS win_ms, count(*) AS n FROM (
-           SELECT time_bucket(INTERVAL 30 MINUTE, ts) - k * INTERVAL 30 MINUTE AS w, ts
-           FROM events CROSS JOIN (SELECT unnest([0, 1]) AS k) ks)
-         WHERE ts >= w AND ts < w + INTERVAL 1 HOUR
-         GROUP BY win_ms ORDER BY win_ms""",
-    "q_session" ->
-      """WITH x AS (
-           SELECT user_id, ts, event_id, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS brk
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         y AS (
-           SELECT user_id, ts, value,
-             sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS UNBOUNDED PRECEDING) AS sess
-           FROM x)
-         SELECT epoch_ms(min(ts)) AS sess_ms, user_id,
-           count(*) AS n_events,
-           sum(CAST(round(value * 100) AS BIGINT)) / 100.0 AS sum_value
-         FROM y GROUP BY user_id, sess ORDER BY user_id, sess_ms""",
-
-    // ---- round-4 additions ----
-    "q_join_full" ->
-      """SELECT coalesce(c.c_custkey, o.o_custkey) AS c_custkey,
-           max(c_name) AS c_name, count(o_orderkey) AS n_orders
-         FROM (SELECT c_custkey, c_name FROM customer WHERE c_custkey % 3 = 0) c
-         FULL OUTER JOIN
-           (SELECT o_custkey, o_orderkey FROM orders WHERE o_custkey % 2 = 0) o
-           ON c.c_custkey = o.o_custkey
-         GROUP BY coalesce(c.c_custkey, o.o_custkey)
-         ORDER BY c_custkey""",
-    // the bloom prefilter is result-preserving (no false negatives) → the
-    // oracle is the PLAIN semi join the bloom path must reproduce exactly
-    "q_bloom_join" ->
-      """SELECT l_orderkey, l_linenumber FROM lineitem
-         WHERE l_orderkey IN
-           (SELECT o_orderkey FROM orders WHERE o_totalprice >= 400000)
-         ORDER BY l_orderkey, l_linenumber""",
-    // same md5-of-text equality as the Spark side (single compare column →
-    // no separator in play); membership via FULL OUTER on the id
-    "q_dataset_diff" ->
-      """WITH cur AS (
-           SELECT doc_id, md5(text) AS h FROM documents
-           WHERE doc_id % 11 <> 5),
-         prev AS (
-           SELECT doc_id,
-             md5(CASE WHEN doc_id % 7 = 0 THEN 'OLD ' || text
-                 ELSE text END) AS h
-           FROM documents WHERE doc_id % 10 <> 3)
-         SELECT coalesce(cur.doc_id, prev.doc_id) AS doc_id,
-           CASE WHEN prev.h IS NULL THEN 'added'
-                WHEN cur.h IS NULL THEN 'removed'
-                WHEN cur.h <> prev.h THEN 'changed' END AS status
-         FROM cur FULL OUTER JOIN prev ON cur.doc_id = prev.doc_id
-         WHERE prev.h IS NULL OR cur.h IS NULL OR cur.h <> prev.h
-         ORDER BY doc_id""",
-    // diff (added/changed only) → batch with planted re-keyed prev docs →
-    // normalized-fingerprint NOT IN the prev snapshot (the store contents)
-    "q_diff_curate" ->
-      """WITH cur AS (
-           SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 5),
-         prev AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN 'OLD ' || text ELSE text END
-               AS text
-           FROM documents WHERE doc_id % 10 <> 3),
-         delta AS (
-           SELECT cur.doc_id, cur.text
-           FROM cur LEFT JOIN prev ON cur.doc_id = prev.doc_id
-           WHERE prev.doc_id IS NULL OR cur.text <> prev.text),
-         batch AS (
-           SELECT doc_id, text FROM delta
-           UNION ALL
-           SELECT doc_id + 1000000, text FROM prev)
-         SELECT doc_id FROM batch
-         WHERE md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-           NOT IN (
-             SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')))
-             FROM prev)
-         ORDER BY doc_id""",
-    "q_source_cap" ->
-      """SELECT doc_id, source, n_chars FROM (
-           SELECT doc_id, source, n_chars,
-             row_number() OVER (PARTITION BY source
-               ORDER BY n_chars DESC, doc_id) AS rn
-           FROM documents) WHERE rn <= 50
-         ORDER BY doc_id""",
-    "q_boilerplate" ->
-      s"""WITH ${boilerplateChainSql("documents")}
-         SELECT doc_id, source AS host, text AS clean_text FROM web
-         ORDER BY doc_id""",
-    // full replication of dedupParagraphs: postings with 0-based positions
-    // (index lambda), corpus doc-freq per paragraph, keep-first via
-    // row_number ordered (doc_id, pos) — identical to Spark's
-    // min(struct(doc, pos)) — blank separator lines excluded from the
-    // doc-freq rule (kept verbatim, mirroring the Spark-side exclusion),
-    // and ordered string_agg reassembly with '' for fully-emptied docs
-    "q_paragraph_dedup" ->
-      """WITH p AS (
-           SELECT doc_id, concat('shared global paragraph', chr(10),
-             'group ', doc_id % 50, chr(10), chr(10), text) AS text
-           FROM documents),
-         post AS (
-           SELECT doc_id, u['pos'] AS pos, u['para'] AS para FROM (
-             SELECT doc_id,
-               unnest(list_transform(string_split(text, chr(10)),
-                 (x, i) -> {'pos': i - 1, 'para': x})) AS u
-             FROM p)),
-         ranked AS (
-           SELECT doc_id, pos, para,
-             row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) AS rn
-           FROM post),
-         dfreq AS (SELECT para, count(DISTINCT doc_id) AS df FROM post GROUP BY para),
-         kept AS (
-           SELECT r.doc_id, r.pos, r.para
-           FROM ranked r JOIN dfreq USING (para)
-           WHERE trim(r.para) = '' OR dfreq.df <= 2 OR r.rn = 1),
-         agg AS (
-           SELECT doc_id, string_agg(para, chr(10) ORDER BY pos) AS clean_text
-           FROM kept GROUP BY doc_id)
-         SELECT p.doc_id, coalesce(agg.clean_text, '') AS clean_text
-         FROM p LEFT JOIN agg USING (doc_id) ORDER BY doc_id""",
-    // full replication of dedupParagraphsIntra: keep a paragraph iff it is
-    // blank (separator — survives verbatim, every copy) or this index is
-    // its FIRST occurrence in its own doc (list_position = 1-based first
-    // match, DuckDB lambda index i is 1-based; Spark's array_position ==
-    // i+1 over a 0-based index is the same predicate)
-    "q_paragraph_dedup_intra" ->
-      """WITH p AS (
-           SELECT doc_id, concat_ws(chr(10), 'repeated intro', text,
-             'repeated intro', '', concat('group ', doc_id % 50), '', text)
-             AS text
-           FROM documents),
-         f AS (
-           SELECT doc_id, list_filter(string_split(text, chr(10)),
-             (x, i) -> trim(x) = ''
-               OR list_position(string_split(text, chr(10)), x) = i) AS kept
-           FROM p)
-         SELECT doc_id, array_to_string(kept, chr(10)) AS clean_text
-         FROM f ORDER BY doc_id""",
-    "q_curation_web" -> CurationWebOracle,
-    // anchor extraction replay: identical plant, identical RE2 patterns;
-    // link_no from the 1-based lambda index (Spark's posexplode is 0-based)
-    "q_link_extract" ->
-      s"""WITH $LinkPagesSql,
-         post AS (
-           SELECT doc_id, u['no'] AS link_no, u['url'] AS url FROM (
-             SELECT doc_id, unnest(list_transform(
-               regexp_extract_all(html, '$HrefPatternSql', 1),
-               (x, i) -> {'no': i - 1, 'url': x})) AS u
-             FROM pages))
-         SELECT doc_id, CAST(link_no AS BIGINT) AS link_no, url,
-           lower(regexp_extract(url, '$HostPatternSql', 1)) AS dst_host
-         FROM post ORDER BY doc_id, link_no""",
-    "q_host_graph" ->
-      s"""WITH $LinkPagesSql,
-         links AS (
-           SELECT src_host,
-             unnest(regexp_extract_all(html, '$HrefPatternSql', 1)) AS url
-           FROM pages),
-         e0 AS (
-           SELECT src_host,
-             lower(regexp_extract(url, '$HostPatternSql', 1)) AS dst_host
-           FROM links)
-         SELECT src_host, dst_host, CAST(count(*) AS BIGINT) AS n_links
-         FROM e0 WHERE dst_host <> '' AND dst_host <> src_host
-         GROUP BY 1, 2 ORDER BY src_host, dst_host""",
-    "q_host_rank" -> hostRankOracleSql(3),
-    "q_host_rank_dangling" -> hostRankDanglingOracleSql(3),
-    "q_rank_convergence" -> rankConvergenceOracleSql(3),
-    // anchor-text replay: the same two-group pattern, lists zipped
-    // positionally (numeric struct indexes — DuckDB list_zip structs are
-    // unnamed), self-loops kept by construction
-    "q_anchor_text" ->
-      s"""WITH $LinkPagesSql,
-         a AS (
-           SELECT unnest(list_zip(
-             regexp_extract_all(html, '$AnchorPairSql', 1),
-             regexp_extract_all(html, '$AnchorPairSql', 2))) AS z
-           FROM pages),
-         t AS (
-           SELECT lower(regexp_extract(z[1], '$HostPatternSql', 1))
-                    AS dst_host,
-                  trim(lower(z[2])) AS anchor
-           FROM a)
-         SELECT dst_host, anchor, CAST(count(*) AS BIGINT) AS n
-         FROM t WHERE dst_host <> '' AND anchor <> ''
-         GROUP BY 1, 2 ORDER BY dst_host, anchor""",
-    "q_url_extract" ->
-      """WITH p AS (
-           SELECT doc_id,
-             concat(text, ' see https://WWW.', source, '.Example.com/Page/',
-               doc_id, '?id=', doc_id, '&utm_source=feed&fbclid=x', doc_id,
-               '#s', doc_id, ' and http://', source, '.example/d/', doc_id)
-               AS text
-           FROM documents),
-         u AS (
-           SELECT unnest(regexp_extract_all(text, 'https?://[^\s]+')) AS url
-           FROM p),
-         c AS (
-           SELECT
-             lower(regexp_extract(url, '^https?://([^/:?#]+)', 1)) AS host,
-             concat(
-               lower(regexp_extract(t3, '^(https?://[^/?#]+)', 1)),
-               regexp_extract(t3, '^https?://[^/?#]+(.*)$', 1)) AS curl
-           FROM (
-             SELECT url,
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(url, '#.*$', '', 'g'),
-                     '&(?:utm_[A-Za-z]+|fbclid|gclid)=[^&]*', '', 'g'),
-                   '\?(?:utm_[A-Za-z]+|fbclid|gclid)=[^&]*&', '?', 'g'),
-                 '\?(?:utm_[A-Za-z]+|fbclid|gclid)=[^&]*$', '', 'g') AS t3
-             FROM u))
-         SELECT host, CAST(count(*) AS BIGINT) AS n_urls,
-           CAST(count(DISTINCT curl) AS BIGINT) AS n_canonical,
-           min(curl) AS sample_url
-         FROM c GROUP BY host ORDER BY host""",
-    "q_redact" ->
-      """WITH p AS (
-           SELECT doc_id,
-             concat(text, ' contact ', source, '-', doc_id,
-               '@example.com or https://', source, '.example/d/', doc_id) AS text
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(text,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-             AS n_emails,
-           CAST(len(regexp_extract_all(text, 'https?://[^\s]+')) AS BIGINT)
-             AS n_urls,
-           regexp_replace(
-             regexp_replace(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-             'https?://[^\s]+', '[URL]', 'g') AS clean_text
-         FROM p ORDER BY doc_id""",
-    "q_unigram_lm" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-           FROM documents),
-         tk AS (SELECT doc_id, term FROM tok WHERE len(term) > 0),
-         vocab AS (SELECT term, count(*) AS cnt FROM tk GROUP BY term),
-         tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM vocab)
-         SELECT doc_id,
-           round(CAST(sum(CAST(round(ln(cnt / CAST(total AS DOUBLE)) * 1e9)
-               AS BIGINT)) AS DOUBLE) / count(*) / 1e9, 6)
-             AS avg_logp
-         FROM tk JOIN vocab USING (term) CROSS JOIN tot
-         GROUP BY doc_id ORDER BY doc_id""",
-    // bigram fluency: adjacency via original split positions (p+1 — the
-    // split can't produce interior empties, so filtered positions stay
-    // adjacent); context counts from the SAME pair table (per-context
-    // probabilities sum to 1); per-pair ln in integer nanos, like unigram
-    "q_lm_perplexity" -> LmPerplexityOracle,
-    "q_bigram_lm" ->
-      """WITH tok AS (
-           SELECT doc_id, u['t'] AS t, u['p'] AS p FROM (
-             SELECT doc_id, unnest(list_transform(
-               string_split_regex(lower(trim(text)), '\s+'),
-               (x, i) -> {'t': x, 'p': i})) AS u
-             FROM documents)
-           WHERE len(u['t']) > 0),
-         pairs AS (
-           SELECT a.doc_id, a.t AS t1, a.t || ' ' || b.t AS pair
-           FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.p = a.p + 1),
-         pc AS (SELECT pair, count(*) AS cnt_ab FROM pairs GROUP BY pair),
-         uc AS (SELECT t1, count(*) AS cnt_a FROM pairs GROUP BY t1)
-         SELECT doc_id,
-           round(CAST(sum(CAST(round(ln(CAST(cnt_ab AS DOUBLE) / cnt_a)
-               * 1e9) AS BIGINT)) AS DOUBLE) / count(*) / 1e9, 6)
-             AS avg_logp
-         FROM pairs JOIN pc USING (pair) JOIN uc USING (t1)
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_pack_chunks" ->
-      """WITH t AS (
-           SELECT doc_id, source,
-             CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]'))
-               AS BIGINT) AS n_tokens
-           FROM documents),
-         o AS (
-           SELECT doc_id, source, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS start_offset
-           FROM t)
-         SELECT doc_id, source, n_tokens, start_offset,
-           CAST(floor(start_offset / 2048.0) AS BIGINT) AS chunk_id
-         FROM o ORDER BY doc_id""",
-    // the oracle IS the naive global window — DuckDB single-node sorts it
-    // fine; the Spark side must reproduce it exactly from bucketed partials
-    "q_shard_plan" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]'))
-               AS BIGINT) AS n_tokens
-           FROM documents),
-         o AS (
-           SELECT doc_id, n_tokens,
-             CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-               AS start_offset
-           FROM t)
-         SELECT doc_id, n_tokens, start_offset,
-           CAST(floor(start_offset / 4096.0) AS BIGINT) AS shard_id
-         FROM o ORDER BY doc_id""",
-    // mean is rounded to INTEGER micros (scale-0 rounding is boundary-safe
-    // across engines; scale-6 rounding of the fraction is not — a mean of
-    // exactly x.xxxxxx5 diverged at sf0.1), then divided exactly by 1e6
-    // both sides run the q_embedding_centroid mean (integer micros, floor
-    // rounding), then integer dot/norm sums and ONE rounded division —
-    // list_reverse plants the every-third-label semantic shift
-    "q_centroid_drift" ->
-      """WITH er AS (
-           SELECT label, unnest(embedding) AS v,
-             generate_subscripts(embedding, 1) - 1 AS pos
-           FROM embeddings),
-         cr AS (
-           SELECT label, pos,
-             CAST(round(CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000)
-                 AS BIGINT)) AS DOUBLE) / count(*)) AS BIGINT) AS m
-           FROM er GROUP BY label, pos),
-         ec AS (
-           SELECT label, unnest(e2) AS v,
-             generate_subscripts(e2, 1) - 1 AS pos
-           FROM (SELECT label,
-                   CASE WHEN label % 3 = 0 THEN list_reverse(embedding)
-                        ELSE embedding END AS e2
-                 FROM embeddings)),
-         cc AS (
-           SELECT label, pos,
-             CAST(round(CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000)
-                 AS BIGINT)) AS DOUBLE) / count(*)) AS BIGINT) AS m
-           FROM ec GROUP BY label, pos),
-         j AS (
-           SELECT cr.label, sum(cr.m * cc.m) AS dot,
-             sum(cr.m * cr.m) AS nr, sum(cc.m * cc.m) AS nc
-           FROM cr JOIN cc ON cc.label = cr.label AND cc.pos = cr.pos
-           GROUP BY cr.label)
-         SELECT CAST(label AS BIGINT) AS label,
-           TRUE AS in_ref, TRUE AS in_cur,
-           CASE WHEN nr > 0 AND nc > 0 THEN
-             round(CAST(dot AS DOUBLE)
-               / (sqrt(CAST(nr AS DOUBLE)) * sqrt(CAST(nc AS DOUBLE))), 6)
-           END AS centroid_cos
-         FROM j ORDER BY label""",
-    "q_embedding_centroid" ->
-      """WITH e AS (
-           SELECT label, unnest(embedding) AS v,
-             generate_subscripts(embedding, 1) - 1 AS pos
-           FROM embeddings)
-         SELECT label, CAST(pos AS BIGINT) AS pos,
-           CAST(round(CAST(sum(CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT))
-               AS DOUBLE) / count(*)) AS BIGINT) / 1000000.0 AS centroid
-         FROM e GROUP BY label, pos ORDER BY label, pos""",
-    "q_containment" -> NgramContainmentPrefixOracle,
-    // same GROUND-TRUTH oracle: at the correctness SFs the scaled cap's
-    // floor (32) sits above the max observed shingle doc-freq, so the
-    // capped query must reproduce the exact all-pairs answer — a cap that
-    // drops a true pair at these SFs hash-mismatches here
-    "q_containment_capped" -> NgramContainmentPrefixOracle,
-    "q_span_overlap" -> SpanOverlapOracle,
-    "q_span_dedup" -> SpanDedupOracle,
-    "q_span_excise" -> SpanExciseOracle,
-    "q_curation_excise" -> CurationExciseOracle,
-    "q_decontaminate_exact" -> ExactDecontaminateOracle,
-    "q_contamination" -> ContaminationOracle,
-    "q_decontaminate" ->
-      s"""WITH ${contaminationChainSql("documents", "")}
-       SELECT d.doc_id, d.source FROM documents d
-       WHERE d.doc_id NOT IN (
-         SELECT doc_id FROM sc
-         WHERE round(CAST(n_hits AS DOUBLE) / n_shingles, 6) >= 0.8)
-       ORDER BY d.doc_id""",
-    "q_grouped_median" ->
-      """SELECT l_returnflag,
-           quantile_cont(CAST(round(l_extendedprice * 100) AS BIGINT), 0.5)
-             AS median_cents,
-           quantile_cont(l_quantity, 0.5) AS median_qty,
-           count(*) AS n
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // the per-group GK contract: flag true whenever the sketch median's
-    // exact rank brackets n/2 within ±n/accuracy — the oracle computes
-    // the exact side (count) itself and pins the boolean
-    "q_grouped_median_approx" ->
-      """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n, true AS ok50
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_string_agg" ->
-      """SELECT n_regionkey,
-           string_agg(n_name, ',' ORDER BY n_name) AS nations,
-           count(*) AS n_nations
-         FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""",
-    "q_profile_table" -> profileOracleSql("lineitem", Seq(
-      "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-      "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-      "l_linestatus", "l_shipdate")),
-    "q_profile_approx" -> profileApproxOracleSql("orders", Seq(
-      "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-      "o_orderdate", "o_orderpriority")),
-    // the PRODUCTION profile plan's gate row: same contract shape as
-    // q_profile_approx (exact n_rows/n_nulls per column, dist_ok pinned
-    // TRUE), but the Spark side is the pure one-pass HLL plan with the
-    // exact side hoisted into offline-artifact literals
-    "q_profile_prod" -> profileApproxOracleSql("lineitem", Seq(
-      "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-      "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-      "l_linestatus", "l_shipdate")),
-    "q_skew_report" ->
-      """WITH c AS (
-           SELECT o_custkey, count(*) AS cnt FROM orders GROUP BY o_custkey)
-         SELECT CAST(count(*) AS BIGINT) AS n_keys,
-           CAST(sum(cnt) AS BIGINT) AS n_rows,
-           CAST(max(cnt) AS BIGINT) AS max_cnt,
-           quantile_cont(cnt, 0.5) AS p50_cnt,
-           round(sum(cnt) / count(*), 6) AS avg_cnt,
-           round(max(cnt) * count(*) / sum(cnt), 6) AS skew_ratio
-         FROM c""",
-    // robust outlier gate over integer cents: group median interpolates to
-    // halves, |x − med| to halves, the MAD to quarters — dyadic-exact in
-    // both engines, so the 3·MAD comparison never straddles an ulp
-    "q_outlier_mad" ->
-      """WITH b AS (
-           SELECT l_returnflag,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem),
-         m AS (
-           SELECT l_returnflag, quantile_cont(v, 0.5) AS med
-           FROM b GROUP BY l_returnflag),
-         d AS (
-           SELECT b.l_returnflag, b.v, m.med, abs(b.v - m.med) AS absdev
-           FROM b JOIN m USING (l_returnflag)),
-         md AS (
-           SELECT l_returnflag, quantile_cont(absdev, 0.5) AS mad
-           FROM d GROUP BY l_returnflag)
-         SELECT d.l_returnflag, CAST(count(*) AS BIGINT) AS n,
-           max(d.med) AS median_v, max(md.mad) AS mad_v,
-           CAST(count(*) FILTER (WHERE d.absdev > 3 * md.mad) AS BIGINT)
-             AS n_outliers
-         FROM d JOIN md USING (l_returnflag)
-         GROUP BY d.l_returnflag ORDER BY d.l_returnflag""",
-    // CDC merge: retire every delta key from the base snapshot (anti-join
-    // == NOT IN below — delta keys are non-null by construction), then
-    // append the upsert payloads; the changeset is the same deterministic
-    // %13/%7/%11 derivation as the Spark side
-    "q_store_merge" ->
-      """WITH snap AS (
-           SELECT o_orderkey, o_custkey,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents,
-             o_orderstatus
-           FROM orders),
-         upd AS (
-           SELECT o_orderkey, o_custkey, price_cents + 100 AS price_cents,
-             'U' AS o_orderstatus
-           FROM snap WHERE o_orderkey % 7 = 0 AND o_orderkey % 13 <> 0),
-         ins AS (
-           SELECT -o_orderkey - 1 AS o_orderkey, o_custkey, price_cents,
-             'N' AS o_orderstatus
-           FROM snap WHERE o_orderkey % 11 = 0),
-         delta_keys AS (
-           SELECT o_orderkey FROM snap WHERE o_orderkey % 13 = 0
-           UNION ALL SELECT o_orderkey FROM upd
-           UNION ALL SELECT o_orderkey FROM ins)
-         SELECT * FROM (
-           SELECT * FROM snap
-           WHERE o_orderkey NOT IN (SELECT o_orderkey FROM delta_keys)
-           UNION ALL SELECT * FROM upd
-           UNION ALL SELECT * FROM ins)
-         ORDER BY o_orderkey""",
-    // exact-integer-sum Pearson (HUGEINT here, DECIMAL(38,0) in Spark —
-    // both exact), one final cast to double per factor; degenerate
-    // denominators → NULL on both engines
-    "q_corr_matrix" ->
-      """WITH b AS (
-           SELECT CAST(round(l_discount * 100) AS BIGINT) AS disc_pct,
-             CAST(round(l_extendedprice * 100) AS BIGINT) AS price_cents,
-             CAST(round(l_quantity) AS BIGINT) AS qty
-           FROM lineitem),
-         s AS (
-           SELECT CAST(count(*) AS HUGEINT) AS n,
-             sum(disc_pct) AS sd, sum(price_cents) AS sp, sum(qty) AS sq,
-             sum(disc_pct * disc_pct) AS sdd,
-             sum(price_cents * price_cents) AS spp,
-             sum(qty * qty) AS sqq,
-             sum(disc_pct * price_cents) AS sdp,
-             sum(disc_pct * qty) AS sdq,
-             sum(price_cents * qty) AS spq
-           FROM b)
-         SELECT * FROM (
-           SELECT 'disc_pct' AS col_a, 'price_cents' AS col_b,
-             CASE WHEN n*sdd - sd*sd > 0 AND n*spp - sp*sp > 0 THEN
-               round(CAST(n*sdp - sd*sp AS DOUBLE)
-                 / sqrt(CAST(n*sdd - sd*sd AS DOUBLE))
-                 / sqrt(CAST(n*spp - sp*sp AS DOUBLE)), 6) END AS corr
-           FROM s
-           UNION ALL
-           SELECT 'disc_pct', 'qty',
-             CASE WHEN n*sdd - sd*sd > 0 AND n*sqq - sq*sq > 0 THEN
-               round(CAST(n*sdq - sd*sq AS DOUBLE)
-                 / sqrt(CAST(n*sdd - sd*sd AS DOUBLE))
-                 / sqrt(CAST(n*sqq - sq*sq AS DOUBLE)), 6) END
-           FROM s
-           UNION ALL
-           SELECT 'price_cents', 'qty',
-             CASE WHEN n*spp - sp*sp > 0 AND n*sqq - sq*sq > 0 THEN
-               round(CAST(n*spq - sp*sq AS DOUBLE)
-                 / sqrt(CAST(n*spp - sp*sp AS DOUBLE))
-                 / sqrt(CAST(n*sqq - sq*sq AS DOUBLE)), 6) END
-           FROM s)
-         ORDER BY col_a, col_b""",
-    // boundary ties go UP (v >= boundary) on both engines; quarter-grid
-    // quantile_cont over integers is dyadic-exact
-    "q_quantile_bins" ->
-      """WITH b AS (
-           SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-           FROM lineitem),
-         q AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75]) AS bl FROM b),
-         binned AS (
-           SELECT v, CAST(len(list_filter(bl, x -> v >= x)) AS BIGINT) AS bin
-           FROM b CROSS JOIN q)
-         SELECT bin, CAST(count(*) AS BIGINT) AS n,
-           CAST(min(v) AS BIGINT) AS min_v, CAST(max(v) AS BIGINT) AS max_v,
-           CAST(sum(v) AS BIGINT) AS sum_v
-         FROM binned GROUP BY bin ORDER BY bin""",
-    // the production twin's GK boundary contract + exact global stats
-    // (the q_quantiles_approx pattern over the cents projection)
-    "q_quantile_bins_approx" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-           CAST(min(v) AS BIGINT) AS min_v, CAST(max(v) AS BIGINT) AS max_v,
-           CAST(sum(v) AS BIGINT) AS sum_v,
-           true AS ok25, true AS ok50, true AS ok75
-         FROM (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-               FROM lineitem)""",
-    // H = ln N − (Σ c·ln c)/N over the unigram table, in bits via the ln 2
-    // double literal (shared with corpusLexicalStats — no cross-engine
-    // log2); per-type terms fixed to integer nanos before summing
-    "q_token_entropy" ->
-      """WITH tok AS (
-           SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-           FROM documents),
-         tk AS (SELECT term FROM tok WHERE len(term) > 0),
-         vocab AS (SELECT term, count(*) AS cnt FROM tk GROUP BY term)
-         SELECT CAST(count(*) AS BIGINT) AS n_types,
-           CAST(sum(cnt) AS BIGINT) AS n_tokens,
-           round((ln(CAST(sum(cnt) AS DOUBLE))
-             - CAST(sum(CAST(round(cnt * ln(cnt) * 1e9) AS BIGINT)) AS DOUBLE)
-               / 1e9 / sum(cnt)) / 0.6931471805599453, 6) AS entropy_bits,
-           round(CAST(count(*) AS DOUBLE) / sum(cnt), 6) AS ttr
-         FROM vocab""",
-    // the naive form of the prefix-filtered top-k-by-hash: identical
-    // result by the superset theorem in Sampling.groupSampleK's scaladoc
-    "q_group_sample" ->
-      """SELECT doc_id, lang FROM (
-           SELECT doc_id, lang, row_number() OVER (
-             PARTITION BY lang
-             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-           FROM documents)
-         WHERE rn <= 20 ORDER BY doc_id""",
-    // A-ES: u from the first 52 md5 bits over 2^53 (exact dyadic, never
-    // 0 or 1), score fixed to integer nanos before the global top-k
-    "q_weighted_sample" ->
-      """SELECT doc_id, score_nanos FROM (
-           SELECT doc_id,
-             CAST(round(-ln((CAST(concat('0x',
-                 substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT)
-                 + 1.0) / 9007199254740992.0)
-               / n_chars * 1e9) AS BIGINT) AS score_nanos
-           FROM documents WHERE n_chars > 0)
-         ORDER BY score_nanos, doc_id LIMIT 100""",
-    // PSI over reference-quartile bins with add-one smoothing; every
-    // share divides exact integers and each bin term is fixed to nanos
-    // before the 4-term sum (Profiling.psiDrift scaladoc)
-    "q_psi_drift" ->
-      """WITH r AS (
-           SELECT CAST(n_chars AS BIGINT) AS v FROM documents
-           WHERE source = 'src0'),
-         c AS (
-           SELECT CAST(n_chars AS BIGINT) AS v FROM documents
-           WHERE source <> 'src0'),
-         q AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75]) AS bl FROM r),
-         rb AS (
-           SELECT CAST(len(list_filter(bl, x -> v >= x)) AS BIGINT) AS bin,
-             count(*) AS nr
-           FROM r CROSS JOIN q GROUP BY 1),
-         cb AS (
-           SELECT CAST(len(list_filter(bl, x -> v >= x)) AS BIGINT) AS bin,
-             count(*) AS nc
-           FROM c CROSS JOIN q GROUP BY 1),
-         spine AS (SELECT unnest(range(0, 4)) AS bin),
-         j AS (
-           SELECT s.bin, coalesce(nr, 0) AS nr, coalesce(nc, 0) AS nc
-           FROM spine s LEFT JOIN rb USING (bin) LEFT JOIN cb USING (bin)),
-         t AS (SELECT sum(nr) AS tr, sum(nc) AS tc FROM j)
-         SELECT CAST(count(*) AS BIGINT) AS n_bins,
-           CAST(sum(nr) AS BIGINT) AS n_ref,
-           CAST(sum(nc) AS BIGINT) AS n_cur,
-           round(CAST(sum(CAST(round(
-               ((nr + 1.0) / (tr + 4.0) - (nc + 1.0) / (tc + 4.0))
-               * ln(((nr + 1.0) / (tr + 4.0)) / ((nc + 1.0) / (tc + 4.0)))
-               * 1e9) AS BIGINT)) AS DOUBLE) / 1e9, 6) AS psi
-         FROM j CROSS JOIN t""",
-    // the PSI production twin's contract: exact side counts + the
-    // reference-side GK boundary flags pinned true
-    "q_psi_drift_approx" ->
-      """SELECT
-           (SELECT CAST(count(*) AS BIGINT) FROM documents
-            WHERE source = 'src0') AS n_ref,
-           (SELECT CAST(count(*) AS BIGINT) FROM documents
-            WHERE source <> 'src0') AS n_cur,
-           true AS ok25, true AS ok50, true AS ok75""",
-    // ordered funnel: each step's conversion is the earliest step event
-    // STRICTLY AFTER the previous step's conversion time (Analytics.funnel)
-    "q_funnel" ->
-      """WITH s1 AS (
-           SELECT user_id, min(ts) AS c FROM events
-           WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (
-           SELECT e.user_id, min(e.ts) AS c FROM events e
-           JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.c
-           WHERE e.event_type = 'click' GROUP BY e.user_id),
-         s3 AS (
-           SELECT e.user_id, min(e.ts) AS c FROM events e
-           JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.c
-           WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-         SELECT * FROM (
-           SELECT CAST(1 AS BIGINT) AS step_idx, 'view' AS step,
-             CAST(count(*) AS BIGINT) AS n_users FROM s1
-           UNION ALL SELECT 2, 'click', count(*) FROM s2
-           UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-         ORDER BY step_idx""",
-    // the windowed form: step i's event must also land within 24h of the
-    // previous conversion — integer-microsecond (epoch_us) arithmetic
-    // mirrors Spark's unix_micros comparison exactly
-    "q_funnel_windowed" ->
-      """WITH s1 AS (
-           SELECT user_id, min(ts) AS c FROM events
-           WHERE event_type = 'view' GROUP BY user_id),
-         s2 AS (
-           SELECT e.user_id, min(e.ts) AS c FROM events e
-           JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.c
-             AND epoch_us(e.ts) <= epoch_us(s1.c) + 86400000000
-           WHERE e.event_type = 'click' GROUP BY e.user_id),
-         s3 AS (
-           SELECT e.user_id, min(e.ts) AS c FROM events e
-           JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.c
-             AND epoch_us(e.ts) <= epoch_us(s2.c) + 86400000000
-           WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-         SELECT * FROM (
-           SELECT CAST(1 AS BIGINT) AS step_idx, 'view' AS step,
-             CAST(count(*) AS BIGINT) AS n_users FROM s1
-           UNION ALL SELECT 2, 'click', count(*) FROM s2
-           UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-         ORDER BY step_idx""",
-    // cohort day = epoch day of a user's first event; offset 0 row is the
-    // cohort size; integer day arithmetic is timezone-free on both engines
-    "q_retention" ->
-      """WITH b AS (
-           SELECT user_id AS u,
-             CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS BIGINT) AS d
-           FROM events),
-         c AS (SELECT u, min(d) AS cohort_day FROM b GROUP BY u)
-         SELECT cohort_day,
-           CAST((b.d - cohort_day) // 7 AS BIGINT) AS week_offset,
-           CAST(count(DISTINCT b.u) AS BIGINT) AS n_active
-         FROM b JOIN c USING (u)
-         WHERE (b.d - cohort_day) // 7 <= 4
-         GROUP BY cohort_day, week_offset
-         ORDER BY cohort_day, week_offset""",
-    // dense key×day spine from the corpus bounds; empty bins explicit
-    // zeros; integer-cent sums (a double sum is partition-order-dependent)
-    "q_resample" ->
-      """WITH b AS (
-           SELECT event_type AS k,
-             CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS BIGINT) AS d,
-             CAST(round(value * 100) AS BIGINT) AS v
-           FROM events),
-         a AS (
-           SELECT k, d, CAST(count(*) AS BIGINT) AS n_events,
-             CAST(sum(v) AS BIGINT) AS sum_cents
-           FROM b GROUP BY k, d),
-         bounds AS (SELECT min(d) AS lo, max(d) AS hi FROM b),
-         days AS (SELECT unnest(range(lo, hi + 1)) AS d FROM bounds),
-         keys AS (SELECT DISTINCT k FROM b),
-         spine AS (SELECT k, d FROM keys CROSS JOIN days)
-         SELECT spine.k AS event_type, CAST(spine.d AS BIGINT) AS epoch_day,
-           CAST(coalesce(n_events, 0) AS BIGINT) AS n_events,
-           CAST(coalesce(sum_cents, 0) AS BIGINT) AS sum_cents
-         FROM spine LEFT JOIN a USING (k, d)
-         ORDER BY event_type, epoch_day""",
-    // disjoint coverage intervals: lead() caps each (user, day)'s covered
-    // range at the next active day, so count(*) per covered day is the
-    // exact trailing-window distinct (validated against the naive
-    // count(DISTINCT) range-join form)
-    "q_rolling_active" ->
-      """WITH ud AS (
-           SELECT DISTINCT user_id AS u,
-             CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS BIGINT) AS d
-           FROM events),
-         mx AS (SELECT max(d) AS maxd FROM ud),
-         iv AS (SELECT u, d,
-             lead(d) OVER (PARTITION BY u ORDER BY d) AS nd
-           FROM ud)
-         SELECT CAST(day AS BIGINT) AS day,
-           CAST(count(*) AS BIGINT) AS n_active
-         FROM iv, mx, LATERAL (
-           SELECT unnest(generate_series(iv.d,
-             least(iv.d + 6, coalesce(iv.nd - 1, mx.maxd), mx.maxd)))
-             AS day) g
-         GROUP BY day ORDER BY day""",
-    // one branch per constraint; FK branches count orphans in both the
-    // n_rows and violations slots (the anti-join IS the scanned frame)
-    "q_constraints" ->
-      """SELECT * FROM (
-           SELECT 'orders_custkey_notnull' AS check_name,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(*) FILTER (WHERE o_custkey IS NULL) AS BIGINT)
-               AS violations,
-             count(*) FILTER (WHERE o_custkey IS NULL) = 0 AS pass
-           FROM orders
-           UNION ALL
-           SELECT 'orders_key_unique', CAST(count(*) AS BIGINT),
-             CAST(coalesce(sum(cnt - 1), 0) AS BIGINT),
-             coalesce(sum(cnt - 1), 0) = 0
-           FROM (SELECT count(*) AS cnt FROM orders GROUP BY o_orderkey)
-           UNION ALL
-           SELECT 'orders_customer_fk', CAST(count(*) AS BIGINT),
-             CAST(count(*) AS BIGINT), count(*) = 0
-           FROM orders o WHERE o.o_custkey IS NOT NULL AND NOT EXISTS
-             (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-           UNION ALL
-           SELECT 'lineitem_orders_fk', CAST(count(*) AS BIGINT),
-             CAST(count(*) AS BIGINT), count(*) = 0
-           FROM lineitem l WHERE l.l_orderkey IS NOT NULL AND NOT EXISTS
-             (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-           UNION ALL
-           SELECT 'orders_status_enum', CAST(count(*) AS BIGINT),
-             CAST(count(*) FILTER (WHERE o_orderstatus IS NOT NULL
-               AND o_orderstatus NOT IN ('O', 'F', 'P')) AS BIGINT),
-             count(*) FILTER (WHERE o_orderstatus IS NOT NULL
-               AND o_orderstatus NOT IN ('O', 'F', 'P')) = 0
-           FROM orders
-           UNION ALL
-           SELECT 'lineitem_qty_range', CAST(count(*) AS BIGINT),
-             CAST(count(*) FILTER (WHERE NOT (l_quantity BETWEEN 1 AND 50))
-               AS BIGINT),
-             count(*) FILTER (WHERE NOT (l_quantity BETWEEN 1 AND 50)) = 0
-           FROM lineitem)
-         ORDER BY check_name""",
-    // exact two-sample KS: inclusive CDFs over distinct values, integer
-    // HUGEINT cross-products (DECIMAL(38,0) in Spark), one division chain
-    // CAST→÷tr→÷tc at the end (Analytics.ksDrift scaladoc)
-    "q_ks_drift" ->
-      """WITH r AS (
-           SELECT CAST(n_chars AS BIGINT) AS v FROM documents
-           WHERE source = 'src0'),
-         c AS (
-           SELECT CAST(n_chars AS BIGINT) AS v FROM documents
-           WHERE source <> 'src0'),
-         g AS (
-           SELECT v, sum(nr) AS n_ref, sum(nc) AS n_cur FROM (
-             SELECT v, 1 AS nr, 0 AS nc FROM r
-             UNION ALL SELECT v, 0, 1 FROM c)
-           GROUP BY v),
-         w AS (
-           SELECT v, sum(n_ref) OVER (ORDER BY v) AS cr,
-             sum(n_cur) OVER (ORDER BY v) AS cc
-           FROM g),
-         t AS (SELECT sum(n_ref) AS tr, sum(n_cur) AS tc FROM g)
-         SELECT CAST(max(tr) AS BIGINT) AS n_ref,
-           CAST(max(tc) AS BIGINT) AS n_cur,
-           round(CAST(max(abs(CAST(cr AS HUGEINT) * tc
-               - CAST(cc AS HUGEINT) * tr)) AS DOUBLE)
-             / CAST(max(tr) AS DOUBLE) / CAST(max(tc) AS DOUBLE), 6)
-             AS d_stat
-         FROM w CROSS JOIN t""",
-    // per-user lag with the (ts, event_id) total order — simultaneous
-    // events get the same engine-portable predecessor
-    "q_transitions" ->
-      """SELECT prev_type, next_type,
-           CAST(count(*) AS BIGINT) AS n_transitions
-         FROM (
-           SELECT lag(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-             event_type AS next_type
-           FROM events)
-         WHERE prev_type IS NOT NULL
-         GROUP BY prev_type, next_type
-         ORDER BY prev_type, next_type""",
-    // trigram paths: two leads over the same (ts, event_id) window; a
-    // non-null FINAL lead implies the earlier one is non-null too
-    "q_event_paths" ->
-      """SELECT concat(event_type, '>', e2, '>', e3) AS path,
-           CAST(count(*) AS BIGINT) AS n_occurrences
-         FROM (
-           SELECT event_type,
-             lead(event_type, 1) OVER w AS e2,
-             lead(event_type, 2) OVER w AS e3
-           FROM events
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-         WHERE e3 IS NOT NULL
-         GROUP BY 1 ORDER BY n_occurrences DESC, path LIMIT 20""",
-    // union-of-intervals sweep in integer epoch-micros: island = running
-    // sum of starts-after-running-max-end flags; per-island aggregates are
-    // permutation-invariant so tied (s, e) rows can't diverge engines
-    "q_interval_coverage" ->
-      """WITH iv AS (
-           SELECT user_id AS k, epoch_us(ts) AS s,
-             epoch_us(ts) + 600000000 AS e
-           FROM events),
-         w AS (
-           SELECT k, s, e, max(e) OVER (PARTITION BY k ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-           FROM iv),
-         isl AS (
-           SELECT k, s, e, sum(CASE WHEN pm IS NULL OR s > pm THEN 1
-               ELSE 0 END) OVER (PARTITION BY k ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-           FROM w),
-         g AS (SELECT k, island, count(*) AS nn, max(e) - min(s) AS cov
-               FROM isl GROUP BY k, island)
-         SELECT k AS user_id, CAST(sum(nn) AS BIGINT) AS n_intervals,
-           CAST(count(*) AS BIGINT) AS n_islands,
-           CAST(sum(cov) AS BIGINT) AS covered_micros
-         FROM g GROUP BY k ORDER BY user_id""",
-    // bucketed half-life decay: every rescaled weight 2^(20−b) is an exact
-    // integer, the sum is HUGEINT-exact, one correctly-rounded double
-    // conversion + one power-of-two division at the end
-    "q_decayed_sum" ->
-      """WITH e AS (
-           SELECT user_id AS k,
-             datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS d,
-             CAST(round(value * 100) AS BIGINT) AS c
-           FROM events),
-         mx AS (SELECT max(d) AS maxd FROM e),
-         b AS (SELECT k, c, (maxd - d) // 7 AS b FROM e, mx)
-         SELECT k AS user_id, CAST(count(*) AS BIGINT) AS n_events,
-           round(CAST(sum(CAST(c AS HUGEINT)
-               * (CAST(1 AS BIGINT) << CAST(20 - b AS INTEGER)))
-             AS DOUBLE) / 1048576.0, 6) AS decayed_cents
-         FROM b WHERE b <= 20 GROUP BY k ORDER BY user_id""",
-    // forward as-of with tolerance: earliest event >= order date within 3
-    // days, ties by (ts, event_id) — a correlated min-scan per order row
-    // (fine at oracle scale; the Spark side is the one-shuffle window)
-    "q_asof_tolerance" ->
-      """SELECT o.o_orderkey, o.o_custkey,
-           (SELECT e.value FROM events e
-            WHERE e.user_id = o.o_custkey
-              AND e.ts >= CAST(o.o_orderdate AS TIMESTAMP)
-              AND epoch_us(e.ts) - epoch_us(CAST(o.o_orderdate AS TIMESTAMP))
-                    <= 259200000000
-            ORDER BY e.ts, e.event_id LIMIT 1) AS value
-         FROM orders o ORDER BY o.o_orderkey""",
-    // OLS closed forms over HUGEINT sufficient statistics; every division
-    // mirrors the Spark expression shape exactly (same IEEE op order)
-    "q_trend_fit" ->
-      """WITH e AS (
-           SELECT event_type AS k,
-             CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS HUGEINT) AS x,
-             CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT) AS y
-           FROM events),
-         a AS (
-           SELECT k, CAST(count(*) AS BIGINT) AS n,
-             sum(x) AS sx, sum(y) AS sy, sum(x * x) AS sxx,
-             sum(x * y) AS sxy, sum(y * y) AS syy
-           FROM e GROUP BY k)
-         SELECT k AS event_type, n,
-           CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                ELSE round(CAST(n * sxy - sx * sy AS DOUBLE)
-                  / CAST(n * sxx - sx * sx AS DOUBLE), 6) END AS slope,
-           CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                ELSE round((CAST(sy AS DOUBLE)
-                  - (CAST(n * sxy - sx * sy AS DOUBLE)
-                     / CAST(n * sxx - sx * sx AS DOUBLE))
-                    * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6)
-           END AS intercept,
-           CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN NULL
-                ELSE round(CAST(n * sxy - sx * sy AS DOUBLE)
-                  * CAST(n * sxy - sx * sy AS DOUBLE)
-                  / (CAST(n * sxx - sx * sx AS DOUBLE)
-                     * CAST(n * syy - sy * sy AS DOUBLE)), 6)
-           END AS r2
-         FROM a ORDER BY event_type""",
-    // Cohen's kappa of stored lang vs the q_lang_guess heuristic chain:
-    // κ reduces to ONE division of exact integers —
-    // (agree·n − Σ ra·cb) / (n² − Σ ra·cb), HUGEINT until the final
-    // correctly-rounded double conversion
-    "q_kappa" ->
-      """WITH tk AS (
-           SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-           FROM documents),
-         cc AS (
-           SELECT doc_id,
-             len(list_filter(t, x -> list_contains(['the','and','of','is'], x))) AS he,
-             len(list_filter(t, x -> list_contains(['el','los','las','es'], x))) AS hs,
-             len(list_filter(t, x -> list_contains(['le','les','est','une'], x))) AS hf,
-             len(list_filter(t, x -> list_contains(['der','die','das','ist'], x))) AS hd
-           FROM tk),
-         pred AS (
-           SELECT doc_id,
-             CASE WHEN he = 0 AND hs = 0 AND hf = 0 AND hd = 0 THEN 'und'
-                  WHEN he >= hs AND he >= hf AND he >= hd THEN 'en'
-                  WHEN hs >= hf AND hs >= hd THEN 'es'
-                  WHEN hf >= hd THEN 'fr' ELSE 'de' END AS b
-           FROM cc),
-         cells AS (
-           SELECT d.lang AS a, pred.b AS b, count(*) AS o
-           FROM documents d JOIN pred USING (doc_id) GROUP BY 1, 2),
-         rt AS (SELECT a, sum(o) AS ra FROM cells GROUP BY a),
-         ct AS (SELECT b, sum(o) AS cb FROM cells GROUP BY b),
-         tot AS (
-           SELECT CAST(sum(o) AS BIGINT) AS n,
-             CAST(sum(CASE WHEN a IS NOT DISTINCT FROM b THEN o ELSE 0 END)
-               AS BIGINT) AS agree
-           FROM cells),
-         pe AS (
-           SELECT coalesce(sum(CAST(ra AS HUGEINT) * cb), 0) AS pen
-           FROM rt JOIN ct ON rt.a IS NOT DISTINCT FROM ct.b)
-         SELECT n, agree AS n_agree,
-           round(CAST(agree AS DOUBLE) / n, 6) AS po,
-           round(CAST(pen AS DOUBLE) / (CAST(n AS DOUBLE) * n), 6) AS pe,
-           CASE WHEN CAST(n AS HUGEINT) * n = pen THEN NULL
-                ELSE round(CAST(CAST(agree AS HUGEINT) * n - pen AS DOUBLE)
-                  / CAST(CAST(n AS HUGEINT) * n - pen AS DOUBLE), 6)
-           END AS kappa
-         FROM tot, pe""",
-    // last-touch attribution: the two IGNORE NULLS last_value frames are
-    // null-aligned (both fed by the same touch rows); window bound in
-    // integer microseconds exactly like Spark's unix_micros comparison
-    "q_attribution" ->
-      """WITH w AS (
-           SELECT user_id, ts, event_type, value,
-             last_value(CASE WHEN event_type IN ('view', 'click')
-                 THEN event_type END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS lt_type,
-             last_value(CASE WHEN event_type IN ('view', 'click')
-                 THEN epoch_us(ts) END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               AS lt_us
-           FROM events)
-         SELECT coalesce(CASE WHEN epoch_us(ts) - lt_us <= 604800000000
-               THEN lt_type END, '(none)') AS channel,
-           CAST(count(*) AS BIGINT) AS n_conversions,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-             AS revenue_cents
-         FROM w WHERE event_type = 'purchase'
-         GROUP BY channel ORDER BY channel""",
-    // tie-corrected AUC: 2·S⁺ = Σ p·(2·pb+c+1) over score groups is an
-    // exact integer (HUGEINT here, DECIMAL(38,0) in Spark); one final
-    // double division of identical integer operands
-    "q_auc" ->
-      """WITH g AS (
-           SELECT n_chars AS sc, CAST(count(*) AS BIGINT) AS c,
-             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-               AS p
-           FROM documents GROUP BY sc),
-         w AS (
-           SELECT *, CAST(coalesce(sum(c) OVER (ORDER BY sc
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS BIGINT) AS pb
-           FROM g),
-         t AS (SELECT sum(p * (2 * pb + c + 1)) AS s2, sum(p) AS np,
-                 sum(c - p) AS nn
-               FROM w)
-         SELECT round(CAST(s2 - np * (np + 1) AS DOUBLE)
-             / CAST(2 * np * nn AS DOUBLE), 6) AS auc,
-           CAST(np AS BIGINT) AS n_pos, CAST(nn AS BIGINT) AS n_neg
-         FROM t""",
-    // chi-square of lang × source: e = HUGEINT margins product → one
-    // double division; per-cell nanos terms sum order-independently
-    "q_chi_square" ->
-      """WITH cells AS (
-           SELECT lang AS a, source AS b, CAST(count(*) AS BIGINT) AS o
-           FROM documents GROUP BY a, b),
-         rt AS (SELECT a, CAST(sum(o) AS BIGINT) AS ra FROM cells GROUP BY a),
-         ct AS (SELECT b, CAST(sum(o) AS BIGINT) AS cb FROM cells GROUP BY b),
-         tt AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-                  CAST(count(DISTINCT a) AS BIGINT) AS nr,
-                  CAST(count(DISTINCT b) AS BIGINT) AS nc
-                FROM cells),
-         terms AS (
-           SELECT CAST(round((o - e) * (o - e) / e * 1e9) AS BIGINT) AS tn,
-             nr, nc, n
-           FROM (
-             SELECT o, CAST(CAST(ra AS HUGEINT) * cb AS DOUBLE) / n AS e,
-               nr, nc, n
-             FROM cells JOIN rt USING (a) JOIN ct USING (b) CROSS JOIN tt))
-         SELECT round(CAST(sum(tn) AS DOUBLE) / 1e9, 6) AS chi2,
-           CAST((max(nr) - 1) * (max(nc) - 1) AS BIGINT) AS dof,
-           CAST(max(n) AS BIGINT) AS n
-         FROM terms""",
-    // equi-width histogram: integer bucket arithmetic, non-negative
-    // operands keep // ≡ Spark's div; empty buckets absent on both sides
-    "q_histogram" ->
-      """WITH b AS (SELECT CAST(n_chars AS BIGINT) AS v FROM documents),
-         bounds AS (SELECT min(v) AS lo, max(v) AS hi FROM b)
-         SELECT CAST(((v - lo) * 12) // (hi - lo + 1) AS BIGINT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(min(v) AS BIGINT) AS min_v,
-           CAST(max(v) AS BIGINT) AS max_v
-         FROM b CROSS JOIN bounds GROUP BY bucket ORDER BY bucket""",
-    // blocked Levenshtein linkage: identical blocking + verify; both
-    // engines' levenshtein is the classic unit-cost edit distance
-    "q_fuzzy_join" -> fuzzyJoinOracleSql(4),
-    "q_rbo" -> rboOracleSql(10, 0.9),
-    "q_ndcg" -> ndcgOracleSql(10),
-    "q_jl_project" -> jlOracleSql(64, 16, 42L),
-    // same positional pair fragment as q_bigram_lm; PMI argument mirrors
-    // the Spark side's exact double-product shape factor for factor
-    "q_pmi" ->
-      """WITH tok AS (
-           SELECT doc_id, u['t'] AS t, u['p'] AS p FROM (
-             SELECT doc_id, unnest(list_transform(
-               string_split_regex(lower(trim(text)), '\s+'),
-               (x, i) -> {'t': x, 'p': i})) AS u
-             FROM documents)
-           WHERE len(u['t']) > 0),
-         pairs AS (
-           SELECT a.t AS t1, b.t AS t2
-           FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.p = a.p + 1),
-         pc AS (SELECT t1, t2, CAST(count(*) AS BIGINT) AS cnt_ab
-                FROM pairs GROUP BY t1, t2 HAVING count(*) >= 5),
-         uc AS (SELECT t, CAST(count(*) AS BIGINT) AS cnt
-                FROM tok GROUP BY t),
-         tot AS (SELECT (SELECT sum(cnt) FROM uc) AS n,
-                        (SELECT count(*) FROM pairs) AS m)
-         SELECT t1, t2, cnt_ab,
-           CAST(round(ln(
-             (CAST(cnt_ab AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-             / (CAST(m AS DOUBLE) * CAST(ca.cnt AS DOUBLE)
-                * CAST(cb.cnt AS DOUBLE))) * 1e9) AS BIGINT) AS pmi_nanos
-         FROM pc JOIN uc ca ON ca.t = pc.t1 JOIN uc cb ON cb.t = pc.t2
-         CROSS JOIN tot
-         ORDER BY pmi_nanos DESC, t1, t2 LIMIT 30""",
-    // exact top-20 recomputed (count DESC, token ASC ties); cms_ok pinned
-    // TRUE — CMS never undercounts and the eps·N overcount band holds
-    // deterministically for fixed data (q_profile_approx doctrine)
-    "q_cms_store" ->
-      """WITH tok AS (
-           SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             t -> len(t) > 0)) AS token
-           FROM documents),
-         cnt AS (SELECT token, CAST(count(*) AS BIGINT) AS exact_cnt
-                 FROM tok GROUP BY token)
-         SELECT token, exact_cnt, TRUE AS cms_ok FROM (
-           SELECT token, exact_cnt FROM cnt
-           ORDER BY exact_cnt DESC, token LIMIT 20)
-         ORDER BY token""",
-    // exact sides recomputed over the full corpus (the 3 mod-slices are
-    // disjoint and covering); n_batches = slices that actually hold the
-    // source; est_ok pinned TRUE (4σ·rse(lgK=12) band, q_profile_approx
-    // doctrine)
-    "q_card_store" ->
-      """WITH tok AS (
-           SELECT source, doc_id,
-             unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               t -> len(t) > 0)) AS term
-           FROM documents)
-         SELECT source AS group_key,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(DISTINCT doc_id % 3) AS BIGINT) AS n_batches,
-           CAST(count(DISTINCT term) AS BIGINT) AS exact_distinct,
-           TRUE AS est_ok
-         FROM tok GROUP BY source ORDER BY group_key""",
-    // closed-form chunk count 1 + ceil(max(n-24,0)/16) via integer-exact
-    // (x+15)//16; list_slice is 1-based with INCLUSIVE end
-    "q_chunk_overlap" ->
-      """WITH d AS (
-           SELECT doc_id,
-             list_filter(string_split_regex(trim(text), '\s+'),
-               t -> len(t) > 0) AS toks
-           FROM documents),
-         n AS (
-           SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS nt,
-             1 + (greatest(CAST(len(toks) AS BIGINT) - 24, 0) + 15) // 16
-               AS nchunks
-           FROM d),
-         c AS (
-           SELECT doc_id, toks, nt,
-             unnest(generate_series(0, nchunks - 1)) AS i
-           FROM n)
-         SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-           CAST(i * 16 AS BIGINT) AS start_token,
-           least(nt - i * 16, 24) AS n_chunk_tokens,
-           array_to_string(list_slice(toks, i * 16 + 1,
-             i * 16 + least(nt - i * 16, 24)), ' ') AS chunk_text
-         FROM c
-         ORDER BY doc_id, chunk_idx""",
-    "q_source_jaccard" ->
-      """WITH sets AS (
-           SELECT DISTINCT g, term FROM (
-             SELECT source AS g,
-               unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                 t -> len(t) > 0)) AS term
-             FROM documents)),
-         sz AS (SELECT g, CAST(count(*) AS BIGINT) AS s FROM sets GROUP BY g),
-         com AS (
-           SELECT a.g AS ga, b.g AS gb, CAST(count(*) AS BIGINT) AS i
-           FROM sets a JOIN sets b ON a.term = b.term AND a.g < b.g
-           GROUP BY a.g, b.g),
-         pairs AS (SELECT a.g AS ga, a.s AS sa, b.g AS gb, b.s AS sb
-                   FROM sz a JOIN sz b ON a.g < b.g)
-         SELECT pairs.ga AS group_a, pairs.gb AS group_b,
-           coalesce(i, 0) AS n_common,
-           sa + sb - coalesce(i, 0) AS n_union,
-           round(CAST(coalesce(i, 0) AS DOUBLE)
-             / (sa + sb - coalesce(i, 0)), 6) AS jaccard
-         FROM pairs LEFT JOIN com ON pairs.ga = com.ga AND pairs.gb = com.gb
-         ORDER BY group_a, group_b""",
-    // same ln2-reduction and literal ln2 divisor as the Spark side; the ln
-    // argument's cross products are DOUBLE·DOUBLE (each factor cast before
-    // the multiply — the identical IEEE expression shape as the Spark plan,
-    // immune to BIGINT wrap at any corpus size), per-token terms fixed to
-    // integer nanos before the sum (q_token_entropy doctrine)
-    "q_js_divergence" ->
-      """WITH tok AS (
-           SELECT source AS g,
-             unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               t -> len(t) > 0)) AS term
-           FROM documents),
-         dist AS (SELECT g, term, count(*) AS c FROM tok GROUP BY g, term),
-         tot AS (SELECT g, sum(c) AS t FROM dist GROUP BY g),
-         j AS (
-           SELECT a.g AS ga, b.g AS gb,
-             CAST(round((
-               CAST(a.c AS DOUBLE) / ta.t
-                 * ln((CAST(a.c AS DOUBLE) * CAST(tb.t AS DOUBLE))
-                     / (CAST(a.c AS DOUBLE) * CAST(tb.t AS DOUBLE)
-                        + CAST(b.c AS DOUBLE) * CAST(ta.t AS DOUBLE)))
-               + CAST(b.c AS DOUBLE) / tb.t
-                 * ln((CAST(b.c AS DOUBLE) * CAST(ta.t AS DOUBLE))
-                     / (CAST(a.c AS DOUBLE) * CAST(tb.t AS DOUBLE)
-                        + CAST(b.c AS DOUBLE) * CAST(ta.t AS DOUBLE)))
-             ) * 1e9) AS BIGINT) AS tn
-           FROM dist a JOIN dist b ON a.term = b.term AND a.g < b.g
-           JOIN tot ta ON ta.g = a.g JOIN tot tb ON tb.g = b.g),
-         agg AS (SELECT ga, gb, CAST(count(*) AS BIGINT) AS n_common,
-                   sum(tn) AS sn
-                 FROM j GROUP BY ga, gb),
-         pairs AS (SELECT a.g AS ga, b.g AS gb
-                   FROM tot a JOIN tot b ON a.g < b.g)
-         SELECT pairs.ga AS group_a, pairs.gb AS group_b,
-           coalesce(n_common, 0) AS n_common,
-           round(1.0 + coalesce(sn, 0) / 1e9 / 2.0 / 0.6931471805599453, 6)
-             AS jsd_bits
-         FROM pairs LEFT JOIN agg ON pairs.ga = agg.ga AND pairs.gb = agg.gb
-         ORDER BY group_a, group_b""",
-    // DuckDB's jaro_winkler_similarity IS the pinned semantics of
-    // JaroWinklerExpr (boost only above 0.7, prefix cap 4, empty → 0);
-    // both sides round to integer micros BEFORE the threshold compare
-    "q_jw_linkage" -> jwLinkageOracleSql(4),
-    "q_jw_best_match" ->
-      """WITH d AS (
-           SELECT doc_id, substr(text, 1, 40) AS k,
-             lang || '|' || substr(text, 1, 4) AS blk
-           FROM documents),
-         scored AS (
-           SELECT a.doc_id AS id, b.doc_id AS match_id,
-             CAST(round(jaro_winkler_similarity(a.k, b.k) * 1e6) AS BIGINT)
-               AS sim_micros
-           FROM d a JOIN d b ON a.blk = b.blk AND a.doc_id <> b.doc_id)
-         SELECT id, match_id, sim_micros FROM (
-           SELECT id, match_id, sim_micros, row_number() OVER (
-             PARTITION BY id ORDER BY sim_micros DESC, match_id ASC) AS rn
-           FROM scored WHERE sim_micros >= 800000)
-         WHERE rn = 1 ORDER BY id""",
-    // closed-form SCD2 history after init(0) + the %7/%11/%13 batch-1 +
-    // %9-upsert batch-2 changesets: v0 closes at 1 if touched by batch 1
-    // (delete wins the %7∧%13 overlap either way), else at 2 if %9; the
-    // batch-1 'U' version closes at 2 if %9; negative insert keys are
-    // never touched again
-    "q_scd2_history" ->
-      """WITH snap AS (
-           SELECT o_orderkey AS k, o_custkey AS c,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS p,
-             o_orderstatus AS s
-           FROM orders),
-         v0 AS (
-           SELECT k, c, p, s, 0 AS vf,
-             CASE WHEN k % 13 = 0 OR k % 7 = 0 THEN 1
-                  WHEN k % 9 = 0 THEN 2 END AS vt
-           FROM snap),
-         v1u AS (
-           SELECT k, c, p + 100 AS p, 'U' AS s, 1 AS vf,
-             CASE WHEN k % 9 = 0 THEN 2 END AS vt
-           FROM snap WHERE k % 7 = 0 AND k % 13 <> 0),
-         v1i AS (
-           SELECT -k - 1 AS k, c, p, 'N' AS s, 1 AS vf,
-             CAST(NULL AS INTEGER) AS vt
-           FROM snap WHERE k % 11 = 0),
-         v2 AS (
-           SELECT k, c, p + 500 AS p, 'V' AS s, 2 AS vf,
-             CAST(NULL AS INTEGER) AS vt
-           FROM snap WHERE k % 9 = 0)
-         SELECT k AS o_orderkey, c AS o_custkey, p AS price_cents,
-           s AS o_orderstatus, CAST(vf AS BIGINT) AS valid_from,
-           CAST(vt AS BIGINT) AS valid_to
-         FROM (SELECT * FROM v0 UNION ALL SELECT * FROM v1u
-               UNION ALL SELECT * FROM v1i UNION ALL SELECT * FROM v2)
-         ORDER BY o_orderkey, valid_from""",
-    // state AS OF batch 1 in closed form: untouched originals + the
-    // batch-1 updates and inserts (batch-2 versions not yet live, %13
-    // deletions gone)
-    "q_scd2_asof" ->
-      """WITH snap AS (
-           SELECT o_orderkey AS k, o_custkey AS c,
-             CAST(round(o_totalprice * 100) AS BIGINT) AS p,
-             o_orderstatus AS s
-           FROM orders)
-         SELECT k AS o_orderkey, c AS o_custkey, p AS price_cents,
-           s AS o_orderstatus
-         FROM (
-           SELECT k, c, p, s FROM snap WHERE k % 13 <> 0 AND k % 7 <> 0
-           UNION ALL
-           SELECT k, c, p + 100, 'U' FROM snap
-           WHERE k % 7 = 0 AND k % 13 <> 0
-           UNION ALL
-           SELECT -k - 1, c, p, 'N' FROM snap WHERE k % 11 = 0)
-         ORDER BY o_orderkey""",
-    // per (source, lang) docs/tokens + exact-integer corpus shares; the
-    // same len>0-filtered whitespace tokens as q_token_entropy
-    "q_corpus_mix" ->
-      """WITH b AS (
-           SELECT source, lang,
-             CAST(len(list_filter(
-               string_split_regex(lower(trim(text)), '\s+'),
-               t -> len(t) > 0)) AS BIGINT) AS nt
-           FROM documents),
-         g AS (
-           SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(nt) AS BIGINT) AS n_tokens
-           FROM b GROUP BY source, lang),
-         t AS (SELECT sum(n_docs) AS td, sum(n_tokens) AS tt FROM g)
-         SELECT source, lang, n_docs, n_tokens,
-           round(CAST(n_docs AS DOUBLE) / td, 6) AS share_docs,
-           round(CAST(n_tokens AS DOUBLE) / tt, 6) AS share_tokens
-         FROM g CROSS JOIN t ORDER BY source, lang""",
-    // dense grid (gap days explicit zeros), per-type median/MAD over
-    // integer daily counts (dyadic-exact halves/quarters), 2·MAD gate
-    "q_series_anomaly" ->
-      """WITH b AS (
-           SELECT event_type AS k2,
-             CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS BIGINT) AS d
-           FROM events),
-         a AS (SELECT k2, d, CAST(count(*) AS BIGINT) AS n
-               FROM b GROUP BY k2, d),
-         bounds AS (SELECT min(d) AS lo, max(d) AS hi FROM b),
-         days AS (SELECT unnest(range(lo, hi + 1)) AS d FROM bounds),
-         keys AS (SELECT DISTINCT k2 FROM b),
-         grid AS (
-           SELECT k2, d, CAST(coalesce(n, 0) AS BIGINT) AS n
-           FROM keys CROSS JOIN days LEFT JOIN a USING (k2, d)),
-         med AS (SELECT k2, quantile_cont(n, 0.5) AS med
-                 FROM grid GROUP BY k2),
-         dev AS (
-           SELECT grid.k2, d, n, med, abs(n - med) AS absdev
-           FROM grid JOIN med USING (k2)),
-         mad AS (SELECT k2, quantile_cont(absdev, 0.5) AS mad
-                 FROM dev GROUP BY k2)
-         SELECT dev.k2 AS event_type, CAST(d AS BIGINT) AS epoch_day,
-           n AS n_events, med, mad, absdev > 2.0 * mad AS is_anomaly
-         FROM dev JOIN mad USING (k2)
-         ORDER BY event_type, epoch_day"""
-  ) ++ lastIvfDir.flatMap(ivfModels.get).map { m =>
-    // generated from the fitted model the query loop memoized (one sf dir
-    // per Verify process); absent only when no IVF query ran this process
-    Map("q_ivf_ann" -> ivfAnnOracle(m),
-      // identical SQL by construction: the store twin differs only in the
-      // Spark-side plan (partition pruning vs per-row assignment)
-      "q_ivf_store_ann" -> ivfAnnOracle(m),
-      "q_ivf_recall" -> ivfRecallOracle(m),
-      "q_kmeans_refine" -> kmeansRefineOracle(m),
-      "q_semdedup_pairs" -> semDedupPairsOracle(m),
-      "q_semdedup" -> semDedupOracle(m))
-  }.getOrElse(Map.empty) ++ lastPqDir.flatMap(pqModels.get).map { m =>
-    // generated from the fitted PQ codebooks the query loop memoized (the
-    // ivfModels mechanism); the store twin shares the on-the-fly oracle
-    // by construction — encoding happened at write time under the same
-    // fingerprint-checked model
-    Map("q_pq_ann" -> pqAnnOracle(m),
-      "q_pq_store_ann" -> pqAnnOracle(m),
-      "q_pq_rerank" -> pqRerankOracle(m),
-      "q_pq_recall" -> pqRecallOracle(m)) ++
-      lastIvfDir.flatMap(ivfModels.get).map { im =>
-        Map("q_ivfpq_ann" -> ivfPqAnnOracle(im, m))
-      }.getOrElse(Map.empty)
-  }.getOrElse(Map.empty) ++ lastFuzzyDir.flatMap(docCounts.get).map { n =>
-    // the scaled-blocking twin: generated with the SAME corpus-derived
-    // prefix length the query resolved (the simhash_hamming_scaled
-    // profile-pinning pattern)
-    Map("q_fuzzy_join_scaled" -> fuzzyJoinOracleSql(fuzzyPrefixLen(n)))
-  }.getOrElse(Map.empty) ++ lastJwDir.flatMap(docCounts.get).map { n =>
-    // Jaro-Winkler scaled-blocking twin: same fuzzyPrefixLen law, same
-    // generated-oracle pinning
-    Map("q_jw_linkage_scaled" -> jwLinkageOracleSql(fuzzyPrefixLen(n)))
-  }.getOrElse(Map.empty) ++ lastBudgetDir.flatMap(budgetRatesMemo.get).map { r =>
-    // same lazy-literal mechanism: the thresholds the query derived offline
-    val cases = r.toSeq.sortBy(_._1).map { case (d, f) =>
-      s"WHEN '$d' THEN ${math.round(f * Sampling.Buckets)}"
-    }.mkString(" ")
-    Map("q_token_budget" ->
-      s"""SELECT doc_id, source FROM documents
-         WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                 % 10000 < CASE source $cases ELSE 0 END
-         ORDER BY doc_id""")
-  }.getOrElse(Map.empty) ++ lastBudgetDir.flatMap(budgetSubwordRatesMemo.get).map { r =>
-    // the subword-rate twin: same CASE mechanism, thresholds from the
-    // subwordCount-derived rates
-    val cases = r.toSeq.sortBy(_._1).map { case (d, f) =>
-      s"WHEN '$d' THEN ${math.round(f * Sampling.Buckets)}"
-    }.mkString(" ")
-    Map("q_token_budget_subword" ->
-      s"""SELECT doc_id, source FROM documents
-         WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                 % 10000 < CASE source $cases ELSE 0 END
-         ORDER BY doc_id""")
-  }.getOrElse(Map.empty) ++ lastBudgetDir.flatMap(budgetWaterfillRatesMemo.get).map { r =>
-    // the waterfill twin: identical CASE mechanism, thresholds carry the
-    // redistributed (iteratively waterfilled) rates
-    val cases = r.toSeq.sortBy(_._1).map { case (d, f) =>
-      s"WHEN '$d' THEN ${math.round(f * Sampling.Buckets)}"
-    }.mkString(" ")
-    Map("q_token_budget_waterfill" ->
-      s"""SELECT doc_id, source FROM documents
-         WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                 % 10000 < CASE source $cases ELSE 0 END
-         ORDER BY doc_id""")
-  }.getOrElse(Map.empty) ++ lastBudgetDir.flatMap(budgetBpeRatesMemo.get).map { r =>
-    // the REAL-BPE twin: identical CASE mechanism, thresholds from the
-    // rates the distributed BPE kernel's totals produced (the kernel's
-    // counts themselves are pinned per doc by q_bpe_count's independent
-    // recompute — this row pins the budget math over them)
-    val cases = r.toSeq.sortBy(_._1).map { case (d, f) =>
-      s"WHEN '$d' THEN ${math.round(f * Sampling.Buckets)}"
-    }.mkString(" ")
-    Map("q_token_budget_bpe" ->
-      s"""SELECT doc_id, source FROM documents
-         WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                 % 10000 < CASE source $cases ELSE 0 END
-         ORDER BY doc_id""")
-  }.getOrElse(Map.empty) ++
-    lastBpeDir.filter(bpeModels.contains).map(bpeOracle).getOrElse(Map.empty) ++
-    lastEmbScaledDir.flatMap(embCounts.get).map { n =>
-    // generated with the SAME corpus-derived bandBits the query resolved —
-    // the profile itself is what this oracle pins
-    Map("q_embedding_neardup_scaled" ->
-      embeddingNearDupLshOracleSql(embeddingBandBits(n), bands = 4))
-  }.getOrElse(Map.empty) ++ lastSimhashScaledDir.flatMap(docCounts.get).map { n =>
-    // the simhash twin of the profile-pinning pattern: the oracle's
-    // signature width — and its straddling band slices — derive from the
-    // SAME corpus count the query resolved
-    Map("q_simhash_hamming_scaled" ->
-      simhashWideOracleSql(4 * simhashBandBits(n)))
-  }.getOrElse(Map.empty) ++ lastTempDir.flatMap(tempRatesMemo.get).map { r =>
-    // α-temperature thresholds over the doc_id-derived skewed domain — the
-    // CASE mirrors skewedDomain's 8:4:2:2 split exactly
-    def thr(d: String) = math.round(r.getOrElse(d, 0.0) * Sampling.Buckets)
-    Map("q_temperature_mix" ->
-      s"""SELECT doc_id, source FROM documents
-         WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                 % 10000 <
-           CASE WHEN doc_id % 16 < 8 THEN ${thr("head")}
-                WHEN doc_id % 16 < 12 THEN ${thr("mid")}
-                WHEN doc_id % 16 < 14 THEN ${thr("tail1")}
-                ELSE ${thr("tail2")} END
-         ORDER BY doc_id""")
-  }.getOrElse(Map.empty) ++ lastZorderDir.flatMap(zorderMemo.get).map { case (dc, dd) =>
-    // re-derive quantize cells from the same (lo, hi, shift) literals and
-    // unroll the bit interleave — (qc bit i) → position 2i+1, (qd bit i) →
-    // position 2i, exactly Layout.zorder2's shift/mask/or chain
-    val interleave = (0 until ZorderBits).map { i =>
-      s"(((qc >> $i) & 1) << ${2 * i + 1}) | (((qd >> $i) & 1) << ${2 * i})"
-    }.mkString(" | ")
-    // DimBounds.shift is signed: positive → downshift, negative → MSB-
-    // aligning upshift (narrow spans)
-    def sh(s: Int) = if (s >= 0) s">> $s" else s"<< ${-s}"
-    Map("q_zorder" ->
-      s"""WITH d AS (
-           SELECT o_orderkey, CAST(o_custkey AS BIGINT) AS ck,
-             CAST(datediff('day', DATE '1970-01-01',
-               CAST(o_orderdate AS DATE)) AS BIGINT) AS dy
-           FROM orders),
-         q AS (
-           SELECT o_orderkey,
-             (greatest(0, least(${dc.hi - dc.lo}, ck - (${dc.lo}))) ${sh(dc.shift)}) AS qc,
-             (greatest(0, least(${dd.hi - dd.lo}, dy - (${dd.lo}))) ${sh(dd.shift)}) AS qd
-           FROM d)
-         SELECT o_orderkey, qc, qd, ($interleave) AS zval
-         FROM q ORDER BY o_orderkey""")
-  }.getOrElse(Map.empty) ++ lastSketchDir.map { dir =>
-    // generated from the Spark-independent sketch recompute; degrade to the
-    // rows-only check (entry absent) rather than fail the whole oracle dump
-    // if the recompute cannot run (e.g. session already stopped)
-    try sketchOracles(dir)
-    catch {
-      case e: Exception =>
-        System.err.println(s"[oracleSql] sketch oracle recompute failed: $e")
-        Map.empty[String, String]
-    }
-  }.getOrElse(Map.empty) ++ lastMmrDir.map { dir =>
-    try mmrOracle(dir)
-    catch {
-      case e: Exception =>
-        System.err.println(s"[oracleSql] MMR oracle recompute failed: $e")
-        Map.empty[String, String]
-    }
-  }.getOrElse(Map.empty) ++ lastCompressDir.map { dir =>
-    try compressOracle(dir)
-    catch {
-      case e: Exception =>
-        System.err.println(s"[oracleSql] deflate oracle recompute failed: $e")
-        Map.empty[String, String]
-    }
-  }.getOrElse(Map.empty) ++ lastCdcDir.map { dir =>
-    try cdcOracle(dir)
-    catch {
-      case e: Exception =>
-        System.err.println(s"[oracleSql] CDC oracle recompute failed: $e")
-        Map.empty[String, String]
-    }
-  }.getOrElse(Map.empty)
+  /** pre-build every memoized offline artifact for `dir`
+    * ([[graft.queries.Offline.warmOffline]]). */
+  def warmOffline(s: SparkSession, dir: String): Unit = Offline.warmOffline(s, dir)
+
+  private lazy val registry: Map[String, QuerySpec] = QuerySpec.registry(
+    "parity" -> ParityQueries.specs,
+    "relational" -> RelationalQueries.specs,
+    "dedup" -> DedupQueries.specs,
+    "similarity" -> SimilarityQueries.specs,
+    "text" -> TextQueries.specs,
+    "search" -> SearchQueries.specs,
+    "media" -> MediaQueries.specs,
+    "streaming" -> StreamingQueries.specs,
+    "sampling" -> SamplingQueries.specs,
+    "curation" -> CurationQueries.specs)
+
+  /** the sketch queries' oracle recompute ([[DedupQueries.sketchOracles]]) */
+  private[graft] def sketchOracles(dir: String): Map[String, String] =
+    DedupQueries.sketchOracles(dir)
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.run }
+
+  /** DuckDB oracle SQL for `names` over `dir` (same result, same column
+    * names, same ORDER BY). A name absent from the result has no oracle
+    * for this dir and gets the weaker rows-only check. */
+  def oracleSql(s: SparkSession, dir: String, names: Set[String]): Map[String, String] =
+    names.toSeq.flatMap(n => registry(n).oracle(s, dir).map(n -> _)).toMap
 }

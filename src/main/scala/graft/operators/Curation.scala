@@ -161,9 +161,9 @@ object Curation {
   }
 
   /** the front scan, before its checkpoint: `df`'s rows that pass the
-    * language and quality gates, plus the learned-quality filter
-    * (`model` = weights, keep logit) and decontamination (`bench` =
-    * benchmark frame, its text column, max contamination) when given, with
+    * [[gate]] — the language and quality gates, plus the learned-quality
+    * filter (`model` = weights, keep logit) and decontamination (`bench` =
+    * benchmark frame, its text column, max contamination) when given — with
     * the dedup columns appended: `__fp` (the fingerprint), `__sig` (the
     * portable MinHash signature) when `signatures`, and `__ws` (the
     * distinct `spanRun`-token window hashes) when `spanRun` is given. It
@@ -175,7 +175,41 @@ object Curation {
                            signatures: Boolean = false,
                            spanRun: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
-    val text = col(textCol)
+    val toks = col("__toks")
+    // the dedup kernels run for gate survivors only, and before the
+    // guard's exchange: on the fanned (or the input's own) partitions
+    val dedupCols =
+      Seq("__fp" -> TextAnalysis.fingerprintOfNormalized(col("__norm"))) ++
+        Seq("__sig" -> Dedup.tokensSig(toks, 3, Dedup.PortableHashes,
+          portable = true)).filter(_ => signatures) ++
+        spanRun.map(k => "__ws" -> GraftSqlBridge.column(graft.functions
+          .SpanWindowHashesExpr(GraftSqlBridge.expression(toks), k)))
+    val passes = col("__keep")
+    val tokenized = Fan.out(df, col(idCol))
+      .select(col("*"), TextAnalysis.normalized(col(textCol)).as("__norm"))
+      .select(col("*"), TextAnalysis.tokens(col("__norm")).as("__toks"))
+    val scored = gate(tokenized, col(textCol), lang, minQuality, model, bench)
+      .select(col("*") +: dedupCols.map { case (name, c) =>
+        when(passes, c).as(name) }: _*)
+    uniqueIds(scored, idCol).filter(passes)
+      .drop(Seq("__norm", "__toks") ++ GateCols: _*)
+  }
+
+  /** the columns [[gate]] appends */
+  private[graft] val GateCols = Seq("__th", "__hq", "__sh", "__keep")
+
+  /** the gate of every curation pass: `df` plus the gate kernels — `__th`
+    * (the language-marker and stopword hits), `__hq` (the learned-quality
+    * kernel, when `model` is given) and `__sh` (the contamination kernel,
+    * when `bench` is given), each evaluated once per row in one
+    * [[Dedup.evalOnce]] Generate (see the object scaladoc) — and the
+    * decision `__keep`. The last two kernels read `__toks`, the tokens of
+    * the normalized text, which `df` must carry when either is given.
+    * Row-local, so [[graft.streaming.Streams.curatedIngest]] streams it. */
+  private[graft] def gate(df: DataFrame, text: Column, lang: String,
+                          minQuality: Double,
+                          model: Option[(Seq[Long], Double)] = None,
+                          bench: Option[(DataFrame, String, Double)] = None): DataFrame = {
     val toks = col("__toks")
     val hits = col("__th")
     val kernels =
@@ -192,24 +226,7 @@ object Curation {
         model.map { case (_, logit) => TextAnalysis.logitKeep(col("__hq"), logit) } ++
         bench.map { case (_, _, max) =>
           Dedup.belowContamination(col("__sh.n_shingles"), col("__sh.n_hits"), max) }
-    // the dedup kernels run for gate survivors only, and before the
-    // guard's exchange: on the fanned (or the input's own) partitions
-    val dedupCols =
-      Seq("__fp" -> TextAnalysis.fingerprintOfNormalized(col("__norm"))) ++
-        Seq("__sig" -> Dedup.tokensSig(toks, 3, Dedup.PortableHashes,
-          portable = true)).filter(_ => signatures) ++
-        spanRun.map(k => "__ws" -> GraftSqlBridge.column(graft.functions
-          .SpanWindowHashesExpr(GraftSqlBridge.expression(toks), k)))
-    val passes = col("__keep")
-    val tokenized = Fan.out(df, col(idCol))
-      .select(col("*"), TextAnalysis.normalized(text).as("__norm"))
-      .select(col("*"), TextAnalysis.tokens(col("__norm")).as("__toks"))
-    val scored = Dedup.evalOnce(tokenized, kernels: _*)
-      .withColumn("__keep", keep.reduce(_ && _))
-      .select(col("*") +: dedupCols.map { case (name, c) =>
-        when(passes, c).as(name) }: _*)
-    uniqueIds(scored, idCol).filter(passes)
-      .drop("__norm", "__toks", "__th", "__hq", "__sh", "__keep")
+    Dedup.evalOnce(df, kernels: _*).withColumn("__keep", keep.reduce(_ && _))
   }
 
   /** `df` unchanged, or a named failure at the first NULL or repeated

@@ -1744,9 +1744,10 @@ object Dedup {
 
   /** wide-signature SimHash near-dup pairs straight from a text column —
     * signature width is the caller's corpus-derived profile knob (see
-    * SparkEntry.simhashBandBits: width 4·bandWidth, legacy-degenerate 60
-    * bits at the fixture SFs). `portable = true` is the md5 base the DuckDB
-    * oracle replicates; default is the two-seed xxhash64 production base. */
+    * graft.queries.Offline.simhashBandBits: width 4·bandWidth,
+    * legacy-degenerate 60 bits at the fixture SFs). `portable = true` is
+    * the md5 base the DuckDB oracle replicates; default is the two-seed
+    * xxhash64 production base. */
   def simhashHammingPairsWide(df: DataFrame, idCol: String, textCol: String,
                               nBits: Int, maxHamming: Int = 3,
                               portable: Boolean = false): DataFrame =
@@ -1769,7 +1770,7 @@ object Dedup {
   /** the wide-signature twin of [[simhashDedupHamming]] — greedy min-id
     * drop over [[simhashHammingPairsWide]] pairs, the corpus-scaled dedup
     * form (callers derive `nBits` from the corpus, e.g. 4·bandWidth with
-    * SparkEntry.simhashBandBits). */
+    * graft.queries.Offline.simhashBandBits). */
   def simhashDedupHammingWide(df: DataFrame, idCol: String, textCol: String,
                               nBits: Int, maxHamming: Int = 3,
                               portable: Boolean = false): DataFrame = {

@@ -364,7 +364,7 @@ object Similarity {
   }
 
   // deterministic random hyperplanes (seeded driver-side, shipped as
-  // literals). private[graft]: SparkEntry embeds the same plane weights as
+  // literals). private[graft]: the query registry embeds the same plane weights as
   // literal doubles in the generated DuckDB oracle SQL for q_lsh_recall
   // (Double.toString round-trips exactly, so both engines see identical bits).
   private[graft] def hyperplanes(dim: Int, nBits: Int, seed: Long): Seq[Seq[Double]] = {

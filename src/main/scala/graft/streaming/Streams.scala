@@ -312,22 +312,16 @@ object Streams {
                     keepLogit: Double = 0.0,
                     lang: String = "en", minQuality: Double = 0.6,
                     delay: String = "10 minutes"): DataFrame = {
-    import graft.operators.TextAnalysis
-    val gated = docs.filter(
-      TextAnalysis.langId(col(textCol)) === lang &&
-        TextAnalysis.qualityScore(col(textCol)) >= minQuality)
-    // the model score as a pure per-row expression (no aggregate) —
-    // streamable because it never leaves the row. r22: the interpreted HOF
-    // aggregate() form (CodegenFallback md5 per token per row) is replaced
-    // by the SAME codegen'd kernel the batch scorer now runs
-    // ([[graft.operators.TextAnalysis.hashedQualityKeep]] →
-    // HashedQualityExpr), so the batch/stream logit-parity pin in
-    // StreamsSpec is equality of one shared kernel, not of two
-    // formulations. NULL text scores NULL and filter-drops, like the old
-    // size(__toks) > 0 gate (split never yields an empty array).
-    val kept = gated.filter(
-      TextAnalysis.hashedQualityKeep(col(textCol), modelWeightsMicros,
-        keepLogit))
+    import graft.operators.{Curation, TextAnalysis}
+    // the batch curation gate, each kernel once per row: row-local, so it
+    // streams. The model score is the codegen'd HashedQualityExpr the batch
+    // scorer runs, so StreamsSpec's batch/stream logit-parity pin is
+    // equality of one shared kernel. NULL text fails the language gate.
+    val toks = TextAnalysis.tokens(TextAnalysis.normalized(col(textCol)))
+    val kept = Curation.gate(docs.withColumn("__toks", toks), col(textCol),
+        lang, minQuality, Some((modelWeightsMicros, keepLogit)))
+      .filter(col("__keep"))
+      .drop("__toks" +: Curation.GateCols: _*)
     streamingSimhashDedup(kept, textCol, tsCol, delay)
   }
 

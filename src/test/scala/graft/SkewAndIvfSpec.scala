@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Relational, Similarity}
+import graft.queries.Offline
 
 /** Skew-salted join equivalence and IVF ANN recall. */
 class SkewAndIvfSpec extends AnyFunSuite {
@@ -426,35 +427,35 @@ class SkewAndIvfSpec extends AnyFunSuite {
   test("corpus-size parameter profile: legacy constants at test SFs, log2 growth past them") {
     // the oracle-stability contract: every driver test SF (500 / 5000 docs)
     // must resolve to the constants the static oracle SQL encodes
-    assert(SparkEntry.jaccardLshParams(500) == (16, 8))
-    assert(SparkEntry.jaccardLshParams(5000) == (16, 8))
-    assert(SparkEntry.jaccardLshParams(8192) == (16, 8))
+    assert(Offline.jaccardLshParams(500) == (16, 8))
+    assert(Offline.jaccardLshParams(5000) == (16, 8))
+    assert(Offline.jaccardLshParams(8192) == (16, 8))
     // +1 row-per-band per 8x corpus past 8k docs
-    assert(SparkEntry.jaccardLshParams(50000) == (24, 8))
-    assert(SparkEntry.jaccardLshParams(150000) == (32, 8))
-    assert(SparkEntry.containmentFreqCap(500) == Long.MaxValue)
-    assert(SparkEntry.containmentFreqCap(10000) == Long.MaxValue)
+    assert(Offline.jaccardLshParams(50000) == (24, 8))
+    assert(Offline.jaccardLshParams(150000) == (32, 8))
+    assert(Offline.containmentFreqCap(500) == Long.MaxValue)
+    assert(Offline.containmentFreqCap(10000) == Long.MaxValue)
     // 8·log2(n) past 10k docs
-    assert(SparkEntry.containmentFreqCap(50000) == 124L)
-    assert(SparkEntry.containmentFreqCap(150000) == 137L)
+    assert(Offline.containmentFreqCap(50000) == 124L)
+    assert(Offline.containmentFreqCap(150000) == 137L)
     // the PRODUCTION capped profile: floor 32 covers the correctness SFs
     // (max observed shingle doc-freq 7 / 25 — the ground-truth oracle
     // stays exact), 3·log2(n) past the floor
-    assert(SparkEntry.containmentFreqCapScaled(500) == 32L)
-    assert(SparkEntry.containmentFreqCapScaled(5000) == 36L)
-    assert(SparkEntry.containmentFreqCapScaled(150000) == 51L)
+    assert(Offline.containmentFreqCapScaled(500) == 32L)
+    assert(Offline.containmentFreqCapScaled(5000) == 36L)
+    assert(Offline.containmentFreqCapScaled(150000) == 51L)
     // banded-hyperplane bandBits: fixture floor 12 at the test SFs (500 /
     // 2000 embeddings), ceil(log2 n)+3 past them, 60-bit pack cap 15
-    assert(SparkEntry.embeddingBandBits(500) == 12)
-    assert(SparkEntry.embeddingBandBits(2000) == 14)
-    assert(SparkEntry.embeddingBandBits(20000) == 15)
-    assert(SparkEntry.embeddingBandBits(100L * 1000 * 1000) == 15)
+    assert(Offline.embeddingBandBits(500) == 12)
+    assert(Offline.embeddingBandBits(2000) == 14)
+    assert(Offline.embeddingBandBits(20000) == 15)
+    assert(Offline.embeddingBandBits(100L * 1000 * 1000) == 15)
     // wide-simhash per-band width: legacy 15 (60-bit signature) at the
     // fixture floor, ceil(log2 n)+3 past it, 30 (120-bit) at the cap
-    assert(SparkEntry.simhashBandBits(500) == 15)
-    assert(SparkEntry.simhashBandBits(5000) == 16)
-    assert(SparkEntry.simhashBandBits(150000) == 21)
-    assert(SparkEntry.simhashBandBits(1L << 40) == 30)
+    assert(Offline.simhashBandBits(500) == 15)
+    assert(Offline.simhashBandBits(5000) == 16)
+    assert(Offline.simhashBandBits(150000) == 21)
+    assert(Offline.simhashBandBits(1L << 40) == 30)
   }
 
   test("oversized blocks fail loudly, in-plan, before any pairwise work") {

@@ -370,6 +370,67 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
+  test("curatedIngest runs each gate kernel once per row, same rows as the filter chain") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.TextAnalysis
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val model = TextAnalysis.syntheticQualityModel()
+    def good(word: String) =
+      (s"the $word and the other $word is in the house of $word " * 3).trim
+    // the curatedIngest fixture above, plus a NULL text, a Spanish doc and
+    // a short English one
+    val rows = Seq(
+      (1L, good("cat"), ts("2024-01-01 10:00:00")),
+      (2L, good("cat").toUpperCase, ts("2024-01-01 10:00:30")),
+      (3L, good("engine"), ts("2024-01-01 10:01:00")),
+      (4L, "zzz qqq", ts("2024-01-01 10:01:30")),
+      (5L, null, ts("2024-01-01 10:02:00")),
+      (6L, ("el gato y el perro de la casa son de los hijos " * 3).trim,
+        ts("2024-01-01 10:02:30")),
+      (7L, "the cat", ts("2024-01-01 10:03:00")))
+    // no empty trailing micro-batch: the last execution is the one batch
+    // that carries the rows, so its plan still holds the gate
+    val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+    def run(name: String, ingest: DataFrame => DataFrame): (Seq[(Long, String)], String) = {
+      val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
+      spark.conf.set(NoDataBatches, "false")
+      val q = ingest(mem.toDF().toDF("doc_id", "text", "ts"))
+        .writeStream.outputMode("append").format("memory")
+        .queryName(name).start()
+      try {
+        mem.addData(rows: _*); q.processAllAvailable()
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+        (spark.table(name).select("doc_id", "text").as[(Long, String)]
+          .collect().sortBy(_._1).toSeq,
+          org.apache.spark.sql.execution.debug.codegenString(plan))
+      } finally {
+        q.stop(); spark.sql(s"DROP TABLE IF EXISTS $name")
+        spark.conf.unset(NoDataBatches)
+      }
+    }
+    val (got, code) = run("ingest_gate",
+      Streams.curatedIngest(_, "text", "ts", model, keepLogit = -1.0))
+    // the public-function filter chain the gate replaced
+    val (chain, _) = run("ingest_chain", d => Streams.streamingSimhashDedup(
+      d.filter(TextAnalysis.langId(col("text")) === "en" &&
+          TextAnalysis.qualityScore(col("text")) >= 0.6)
+        .filter(TextAnalysis.hashedQualityKeep(col("text"), model, -1.0)),
+      "text", "ts"))
+    assert(got == chain)
+    assert(got.map(_._1).filter(_ <= 5L) == Seq(1L, 3L), s"got $got")
+    // the filter chain ran TokenSetHitsExpr 9 times and HashedQualityExpr
+    // twice per row
+    for (kernel <- Seq("TokenSetHitsExpr", "HashedQualityExpr")) {
+      val calls = code.split(java.util.regex.Pattern.quote(
+        s"graft.functions.$kernel.compute("), -1).length - 1
+      assert(calls == 1, s"$kernel.compute appears $calls times in " +
+        s"curatedIngest's generated code:\n$code")
+    }
+  }
+
   test("out-of-order 3-batch replay of events.parquet converges to the batch answers") {
     // the one verification mode the DuckDB harness can't see: the STREAMING
     // path (watermark + append finalization) must produce exactly the batch

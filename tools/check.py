@@ -15,7 +15,16 @@ SHARE of its run total against the baseline share (absolute seconds swing
 table, and FAILS (exit 1) on any query whose share grew >2x while above
 the 0.75 s planning floor (below it a scheduler hiccup doubles the number
 — the documented q_window_running case). Queries absent from the baseline
-are listed as NEW and never fail the gate."""
+are listed as NEW and never fail the gate.
+
+Third mode — compare two Verify dumps (e.g. before and after a refactor):
+
+    check.py --same DUMP_A DUMP_B
+
+reports every query whose oracle_sql.json SQL text differs (or is present
+in one dump only) and every query whose result rows differ (read through
+DuckDB read_parquet, compared in stored order, schema included); exits 1
+on any difference."""
 import sys, glob, json, os, re, signal
 
 # die quietly when piped into head instead of spewing BrokenPipeError
@@ -123,6 +132,57 @@ def share_gate(bench_path: str, baseline_path: str) -> int:
           f"share (floor {FLOOR_SEC}s; {len(new)} new, unjudged)")
     return 0
 
+
+def same_dumps(dump_a: str, dump_b: str) -> int:
+    import duckdb, math
+    con = duckdb.connect()
+    diffs = []
+    oa = json.load(open(f"{dump_a}/oracle_sql.json"))
+    ob = json.load(open(f"{dump_b}/oracle_sql.json"))
+    for name in sorted(set(oa) | set(ob)):
+        if name not in oa or name not in ob:
+            diffs.append(f"{name}: oracle only in "
+                         f"{dump_a if name in oa else dump_b}")
+        elif oa[name] != ob[name]:
+            diffs.append(f"{name}: oracle SQL text differs")
+
+    def results(d):
+        return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+
+    def rows(path):
+        rel = con.sql(f"SELECT * FROM read_parquet('{path}/*.parquet')")
+        # NaN never equals itself: compare it as a marker
+        norm = lambda v: "NaN" if isinstance(v, float) and math.isnan(v) else v
+        return (list(zip(rel.columns, map(str, rel.types))),
+                [tuple(map(norm, r)) for r in rel.fetchall()])
+
+    ra, rb = results(dump_a), results(dump_b)
+    for name in sorted(ra | rb):
+        if name not in ra or name not in rb:
+            diffs.append(f"{name}: result only in "
+                         f"{dump_a if name in ra else dump_b}")
+            continue
+        (sa, xa), (sb, xb) = rows(f"{dump_a}/{name}"), rows(f"{dump_b}/{name}")
+        if sa != sb:
+            diffs.append(f"{name}: schema differs: {sa} vs {sb}")
+        elif xa != xb:
+            i = next((i for i, (p, q) in enumerate(zip(xa, xb)) if p != q),
+                     min(len(xa), len(xb)))
+            diffs.append(f"{name}: rows differ ({len(xa)} vs {len(xb)} rows, "
+                         f"first at row {i})")
+    for d in diffs:
+        print(d)
+    print(f"\n== {len(set(oa) | set(ob))} oracle texts, {len(ra | rb)} result "
+          f"sets compared: {len(diffs)} difference"
+          f"{'' if len(diffs) == 1 else 's'}")
+    return 1 if diffs else 0
+
+
+if len(sys.argv) > 1 and sys.argv[1] == "--same":
+    if len(sys.argv) != 4:
+        print("usage: check.py --same DUMP_A DUMP_B")
+        sys.exit(2)
+    sys.exit(same_dumps(sys.argv[2], sys.argv[3]))
 
 if len(sys.argv) > 1 and sys.argv[1] == "--bench":
     if len(sys.argv) < 3:
