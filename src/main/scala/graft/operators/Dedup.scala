@@ -794,43 +794,21 @@ object Dedup {
     * automatic either way. */
   val DriverUnionFindMaxPairs: Long = 2L * 1000 * 1000
 
-  /** driver-side union-find over a collected pair list → ids whose component
-    * label is not the minimum (the drop set). */
-  private def unionFindDupIds(pairRows: Array[(Long, Long)]): Seq[Long] = {
+  /** driver-side union-find over a collected pair list → (node, component
+    * root) for every node. Union by min, so each root is its component's
+    * minimum id: the label [[clusterLabels]] converges to. */
+  private def unionFind(pairRows: Array[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      while (parent.getOrElse(r, r) != r) r = parent(r)
       var c = x // path compression
       while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
     pairRows.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // union by min: root is always the component minimum
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
-      parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
-    }
-    val nodes = pairRows.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-    nodes.iterator.filter(n => find(n) != n).toSeq
-  }
-
-  /** like [[unionFindDupIds]] but returns the full (id, component-root)
-    * labeling — the driver-path twin of [[clusterLabels]]'s output, for
-    * policies that need the component itself (e.g. keep-best). */
-  private def unionFindLabels(pairRows: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    pairRows.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
     val nodes: Set[Long] = pairRows.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
     nodes.iterator.map(n => (n, find(n))).toSeq
@@ -843,42 +821,15 @@ object Dedup {
     * neighbor — e.g. pairs (1,3),(2,3): greedy keeps {1,2}, clustering
     * collapses the whole component to {1}.
     *
-    * Hybrid execution: when the pair set fits the driver budget
-    * ([[DriverUnionFindMaxPairs]]) the components are solved with a local
-    * union-find (two jobs total); otherwise the distributed min-label
-    * propagation ([[clusterLabels]]) runs. Identical results either way
+    * Hybrid execution ([[componentLabels]]): a driver union-find under the
+    * pair budget ([[DriverUnionFindMaxPairs]]), the distributed min-label
+    * propagation ([[clusterLabels]]) above it. Identical results either way
     * (`maxDriverPairs = 0` forces the distributed path — used in tests). */
   def clusterDedupFromPairs(df: DataFrame, idCol: String, pairs: DataFrame,
-                            maxDriverPairs: Long = DriverUnionFindMaxPairs): DataFrame = {
-    val longIds = pairs.schema.fields.take(2).forall(_.dataType == LongType)
-    // regime probe bounded by the budget: limit(budget+1).count() stops
-    // scanning once budget+1 rows exist, so a 100 TB-scale candidate set
-    // never pays a full count just to learn "too big for the driver" (the
-    // answer is exact within the only range that matters, 0..budget+1)
-    val probeCap = math.min(maxDriverPairs + 1, Int.MaxValue.toLong).toInt
-    val probed = if (longIds) pairs.limit(probeCap).count() else -1L
-    val useDriver = longIds && probed <= maxDriverPairs
-    // observability for the regime switch: at 100 TB you want the log to say
-    // which path fired and how close the pair count came to the budget
-    log.info(s"clusterDedupFromPairs: ${
-      if (probed > maxDriverPairs) s"> $maxDriverPairs" else s"$probed"
-    } candidate pairs (driver budget $maxDriverPairs) -> ${
-      if (useDriver) "driver union-find" else "distributed min-label propagation"}")
-    val dupIds =
-      if (useDriver) {
-        val collected = pairs
-          .select(col(pairs.columns(0)).cast(LongType), col(pairs.columns(1)).cast(LongType))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-        val drop = unionFindDupIds(collected)
-        val spark = df.sparkSession
-        import spark.implicits._
-        broadcast(drop.toDF(idCol))
-      } else {
-        clusterLabels(pairs).filter(col("label") =!= col("id"))
-          .select(col("id").as(idCol))
-      }
-    df.join(dupIds, Seq(idCol), "left_anti")
-  }
+                            maxDriverPairs: Long = DriverUnionFindMaxPairs): DataFrame =
+    df.join(componentLabels(pairs, maxDriverPairs, "clusterDedupFromPairs")
+        .filter(col("label") =!= col("id")).select(col("id").as(idCol)),
+      Seq(idCol), "left_anti")
 
   /** keep-BEST-per-component variant of [[clusterDedupFromPairs]]: instead
     * of each component's minimum id, the survivor is the component member
@@ -936,30 +887,34 @@ object Dedup {
     clusterDedupFromPairs(df, idCol, minhashPairs(df, idCol, textCol,
       threshold, numHashes, bands, portable = portable))
 
-  /** the (id, component-label) frame for a pair set, under the same hybrid
-    * regime as [[clusterDedupFromPairs]]: driver union-find below the pair
-    * budget (two jobs: bounded probe + collect), distributed min-label
-    * propagation above it. Identical labelings either way up to label
-    * choice — both use the component MINIMUM id as the label. Shared by
-    * the keep-best policy and the size histogram. */
+  /** the (id, component-label) frame for a pair set — the label is the
+    * component MINIMUM id — under one hybrid regime: driver union-find below
+    * the pair budget (two jobs: bounded probe + collect), distributed
+    * min-label propagation above it. The pair is the frame's first two
+    * columns, whatever their names, in both regimes, so the answer never
+    * depends on the pair count. */
   private def componentLabels(pairs: DataFrame, maxDriverPairs: Long,
                               caller: String): DataFrame = {
-    val longIds = pairs.schema.fields.take(2).forall(_.dataType == LongType)
+    val p = pairs.select(col(pairs.columns(0)).as("id_a"),
+      col(pairs.columns(1)).as("id_b"))
+    val longIds = p.schema.fields.forall(_.dataType == LongType)
+    // regime probe bounded by the budget: limit(budget+1).count() stops
+    // scanning once budget+1 rows exist, so a 100 TB-scale candidate set
+    // never pays a full count just to learn "too big for the driver" (the
+    // answer is exact within the only range that matters, 0..budget+1)
     val probeCap = math.min(maxDriverPairs + 1, Int.MaxValue.toLong).toInt
-    val probed = if (longIds) pairs.limit(probeCap).count() else -1L
+    val probed = if (longIds) p.limit(probeCap).count() else -1L
     val useDriver = longIds && probed <= maxDriverPairs
     log.info(s"$caller: ${
       if (probed > maxDriverPairs) s"> $maxDriverPairs" else s"$probed"
     } candidate pairs (driver budget $maxDriverPairs) -> ${
       if (useDriver) "driver union-find" else "distributed min-label propagation"}")
     if (useDriver) {
-      val collected = pairs
-        .select(col(pairs.columns(0)).cast(LongType), col(pairs.columns(1)).cast(LongType))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
       val spark = pairs.sparkSession
       import spark.implicits._
-      broadcast(unionFindLabels(collected).toDF("id", "label"))
-    } else clusterLabels(pairs)
+      broadcast(unionFind(p.collect().map(r => (r.getLong(0), r.getLong(1))))
+        .toDF("id", "label"))
+    } else clusterLabels(p)
   }
 
   /** cluster-SIZE histogram of the near-dup graph: (cluster_size,
@@ -1150,66 +1105,142 @@ object Dedup {
     exactDedup(sig, col("simhash"), idCol).join(df, Seq(idCol))
   }
 
-  /** candidate pairs within hamming distance ≤ maxHamming over an existing
-    * signature frame (idCol, sigCol) — the Manku-style banded search: the
-    * signature's low `nBits` bits are split into `maxHamming + 1` disjoint
-    * bands (pigeonhole: two signatures differing in ≤ maxHamming bits must
-    * agree EXACTLY on at least one band), candidates are the bucket-local
-    * band self-join on (band, band bits), and verification is one
-    * `bit_count(a ^ b)` per candidate.
-    *
-    * Scale shape: banded rows carry the 8-byte signature itself, so
-    * verification is a per-row expression on the join output — no join back
-    * to the corpus; the self-join shuffles on (band, band bits) only and
-    * both sides are the same subplan, so exchange reuse computes the banding
-    * once (same shape as MinHash [[bandSelfJoinPairs]]). Band width =
-    * nBits/(maxHamming+1) sets bucket selectivity — at 60 bits and
-    * maxHamming 3 each band has 2^15 buckets; a larger corpus wants a wider
-    * signature (e.g. 128-bit as two longs), not a lower maxHamming. */
   /** low-`width` ones mask. A full-width band (maxHamming=0 over a 64-bit
     * signature) needs an explicit all-ones mask — the JVM shift is mod 64,
     * so `(1L << 64) - 1` would be 0 and every row would share bucket 0,
     * silently degrading the bucket-local self-join to an O(n^2) cross join
-    * (results stay correct via the bit_count verify, but the linear-
+    * (results stay correct via the hamming verify, but the linear-
     * candidate guarantee is lost). */
   private[graft] def bandMask(width: Int): Long =
     if (width >= 64) -1L else (1L << width) - 1
 
-  def simhashHammingPairsFromSigs(sigs: DataFrame, idCol: String, sigCol: String,
-                                  nBits: Int, maxHamming: Int): DataFrame = {
+  /** the two-long (wide) signature columns: bits 0-59 in `sim_lo`, bits
+    * 60..nBits−1 in `sim_hi` */
+  private val WideSig = Seq("sim_lo", "sim_hi")
+
+  /** The Manku band layout of a hamming ≤ `maxHamming` search over a
+    * signature held in one long (`sigCols = Seq(sig)`, ≤ 64 bits) or in two
+    * ([[WideSig]], ≤ 120 bits). The low `nBits` bits split into
+    * `maxHamming + 1` disjoint bands — pigeonhole: two signatures differing
+    * in ≤ maxHamming bits agree EXACTLY on at least one band, whichever
+    * bits differ — with widths differing by at most 1 so selectivity stays
+    * balanced. Band width sets bucket selectivity: at 60 bits and
+    * maxHamming 3 each band has 2^15 buckets, and a larger corpus wants a
+    * wider signature (two longs), not a lower maxHamming. A two-long band
+    * is capped at 30 bits, which keeps every bucket key non-negative in a
+    * DuckDB BIGINT and packable under [[packedBandKey]]. */
+  private[graft] final case class HammingLayout(sigCols: Seq[String], nBits: Int,
+                                                maxHamming: Int) {
+    private val maxBits = if (sigCols.length == 2) 120 else 64
     require(maxHamming >= 0 && maxHamming < nBits,
       s"maxHamming ($maxHamming) must be in [0, nBits=$nBits)")
-    val bands = maxHamming + 1
-    // uneven splits are fine for the pigeonhole guarantee — widths differ by
-    // at most 1 so selectivity stays balanced
-    val base = nBits / bands
-    val rem = nBits % bands
-    val widths = (0 until bands).map(b => base + (if (b < rem) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val bandCols = (0 until bands).map { b =>
-      // unsigned shift: a 64-bit signature with bit 63 set must not smear
-      // sign bits into the top band's bucket key
-      shiftrightunsigned(col(sigCol), offsets(b)).bitwiseAND(lit(bandMask(widths(b))))
+    require(nBits <= maxBits,
+      s"a ${sigCols.length}-long signature supports ≤ $maxBits bits, got $nBits")
+    private val bands = maxHamming + 1
+    private val widths =
+      (0 until bands).map(b => nBits / bands + (if (b < nBits % bands) 1 else 0))
+    require(maxBits == 64 || widths.max <= 30,
+      s"band width ${widths.max} > 30 bits: bucket keys would not be " +
+        "DuckDB-BIGINT-shift-safe; raise maxHamming or narrow the signature")
+    private val offsets = widths.scanLeft(0)(_ + _)
+
+    /** band `b`'s bucket key. The unsigned shift keeps a set bit 63 from
+      * smearing sign bits into the top band's key. */
+    private def bandBits(b: Int): Column = sigCols.map(col) match {
+      case Seq(lo, hi) => wideBandBits(lo, hi, offsets(b), widths(b))
+      case Seq(sig) =>
+        shiftrightunsigned(sig, offsets(b)).bitwiseAND(lit(bandMask(widths(b))))
     }
-    val banded = sigs.select(col(idCol), col(sigCol),
-      posexplode(array(bandCols: _*)).as(Seq("band", "band_bits")))
-    // a pair colliding in several bands appears once per band → distinct at
-    // the end; `hamming` is functional on the pair so it dedups with it
-    banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") &&
-          col("l.band_bits") === col("r.band_bits") &&
-          col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        bit_count(col(s"l.$sigCol").bitwiseXOR(col(s"r.$sigCol")))
-          .cast(LongType).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+
+    /** (idCol, carry…, signature…, band, band_bits): one row per band */
+    def banded(sigs: DataFrame, idCol: String, carry: Seq[String] = Nil): DataFrame =
+      sigs.select((idCol +: carry ++: sigCols).map(col) :+
+        posexplode(array(widths.indices.map(bandBits): _*)).as(Seq("band", "band_bits")): _*)
+
+    /** hamming distance between the signatures of the rows aliased `l`, `r` */
+    def distance(l: String, r: String): Column =
+      hamming(sigCols.map(c => col(s"$l.$c")), sigCols.map(c => col(s"$r.$c")))
   }
+
+  /** the one hamming-distance column: popcount of the XOR, summed over the
+    * signature's longs */
+  private def hamming(a: Seq[Column], b: Seq[Column]): Column =
+    a.zip(b).map { case (x, y) => bit_count(x.bitwiseXOR(y)) }.reduce(_ + _)
+      .cast(LongType)
+
+  /** The one banded self-join of the hamming family: pairs (id_a < id_b)
+    * sharing a band bucket — and every `carry` column (frame alignment) —
+    * verified at hamming ≤ maxHamming, one row per colliding band, so callers
+    * `distinct` what they keep. Banded rows carry the signature, so the
+    * verify is a per-row expression on the join output (no join back to the
+    * corpus), and both join sides are one subplan that exchange reuse bands
+    * once.
+    *
+    * `guard = Some((fn, maxCandidateMass, advice))` first runs the eager,
+    * EXACT candidate-mass guard — the containment lossless-profile
+    * precedent, measured: the 64-bit dHash banding at hamming ≤ 6 has 9-bit
+    * buckets and went quadratic-DNF at 100x data. Σ over the self-join's own
+    * keys of c² bounds its output; one bucket-histogram aggregate over
+    * n·bands key rows, linear and tiny next to the join, fails by name with
+    * profile advice instead of spilling for minutes before dying. */
+  private[graft] def hammingPairs(sigs: DataFrame, idCol: String,
+                                  layout: HammingLayout, carry: Seq[String] = Nil,
+                                  guard: Option[(String, Long, String)] = None): DataFrame = {
+    val banded = layout.banded(sigs, idCol, carry)
+    val keys = carry :+ "band" :+ "band_bits"
+    guard.foreach { case (fn, maxCandidateMass, advice) =>
+      val mass: java.math.BigDecimal = Option(
+        banded.groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).cast(DecimalType(38, 0)).as("__c"))
+          .agg(sum(col("__c") * col("__c"))).head().getDecimal(0))
+        .getOrElse(java.math.BigDecimal.ZERO)
+      require(mass.compareTo(new java.math.BigDecimal(maxCandidateMass)) <= 0,
+        s"$fn: banded candidate mass $mass exceeds " +
+          s"maxCandidateMass=$maxCandidateMass — the bucket self-join would " +
+          s"go quadratic. $advice; or raise maxCandidateMass explicitly " +
+          "for an audit run")
+    }
+    banded.as("l").join(banded.as("r"),
+        keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
+          col(s"l.$idCol") < col(s"r.$idCol"))
+      .select(Seq(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b")) ++
+        carry.map(c => col(s"l.$c").as(c)) :+
+        layout.distance("l", "r").as("hamming"): _*)
+      .filter(col("hamming") <= layout.maxHamming)
+  }
+
+  /** the one keep-min drop: `df` without every id that is some pair's id_b
+    * (a higher id within reach of a lower one — the MinHash-chain
+    * convention, `WHERE id NOT IN (SELECT id_b FROM dups)`); `pin`
+    * materializes the drop set once */
+  private def keepMin(df: DataFrame, idCol: String, pairs: DataFrame,
+                      pin: Boolean = false): DataFrame = {
+    val dups = pairs.select(col("id_b").as(idCol)).distinct()
+    df.join(if (pin) dups.localCheckpoint() else dups, Seq(idCol), "left_anti")
+  }
+
+  /** keep-min survivors of a checkpointed signature frame under the
+    * guarded banded search — the body of the image and wide-hash dedups */
+  private def hammingDedup(sigs: DataFrame, idCol: String, layout: HammingLayout,
+                           fn: String, maxCandidateMass: Long,
+                           advice: String): DataFrame =
+    keepMin(sigs, idCol, hammingPairs(sigs, idCol, layout,
+      guard = Some((fn, maxCandidateMass, advice))).distinct()).select(idCol)
+
+  /** candidate pairs (id_a, id_b, hamming) within hamming distance ≤
+    * maxHamming over an existing one-long signature frame (idCol, sigCol):
+    * the Manku banded search of [[HammingLayout]] over the low `nBits`
+    * bits, candidates from the bucket-local band self-join, one hamming
+    * verify per candidate ([[hammingPairs]]). */
+  def simhashHammingPairsFromSigs(sigs: DataFrame, idCol: String, sigCol: String,
+                                  nBits: Int, maxHamming: Int): DataFrame =
+    hammingPairs(sigs, idCol, HammingLayout(Seq(sigCol), nBits, maxHamming))
+      .distinct()
 
   /** SimHash near-dup pairs at hamming distance ≤ maxHamming straight from a
     * text column — signature kernel + banded search. `portable = true` uses
     * the 60-bit md5 hash base so the whole pipeline (tokenize → vote →
-    * banding → bucket-local candidates → bit_count verify) is replicable by
+    * banding → bucket-local candidates → hamming verify) is replicable by
     * a DuckDB SQL oracle; the default is the 64-bit xxhash64 production
     * base. */
   def simhashHammingPairs(df: DataFrame, idCol: String, textCol: String,
@@ -1220,12 +1251,11 @@ object Dedup {
 
   /** IMAGE near-dup dedup over 64-bit perceptual-hash signatures
     * ([[graft.operators.Multimodal.imageDHash]] dHashes) — the one dedup
-    * modality that was missing an image-side instance: Manku banded
-    * hamming search ([[simhashHammingPairsFromSigs]], the text SimHash
-    * machinery reused verbatim — a dHash IS a 64-bit locality signature)
-    * finds pairs within `maxHamming`, then survivors keep the smallest id
-    * per near-dup relation (drop every id_b — the MinHash-chain keep-min
-    * convention, `WHERE id NOT IN (SELECT id_b FROM dups)`).
+    * modality that was missing an image-side instance: the Manku banded
+    * hamming search of text SimHash reused verbatim (a dHash IS a 64-bit
+    * locality signature) finds pairs within `maxHamming` under the
+    * candidate-mass guard, then survivors keep the smallest id per near-dup
+    * relation ([[keepMin]]).
     *
     * NULL hashes (undecodable blobs) are excluded from matching and from
     * the survivor set — count them upstream via the hash frame. Signatures
@@ -1236,67 +1266,22 @@ object Dedup {
   def imageDedupFromHashes(hashes: DataFrame, idCol: String,
                            hashCol: String,
                            maxHamming: Int = 6,
-                           maxCandidateMass: Long = 200000000L): DataFrame = {
-    val sigs = hashes.filter(col(hashCol).isNotNull).localCheckpoint()
-    imageCandidateMassGuard("imageDedupFromHashes",
-      simhashBandedForGuard(sigs, idCol, hashCol, 64, maxHamming),
+                           maxCandidateMass: Long = 200000000L): DataFrame =
+    hammingDedup(hashes.filter(col(hashCol).isNotNull).localCheckpoint(), idCol,
+      HammingLayout(Seq(hashCol), 64, maxHamming), "imageDedupFromHashes",
       maxCandidateMass,
       "switch to the WIDE profile (Multimodal.imageDHashWide + " +
         "imageDedupFromHashesWide — 120-bit signatures keep the band " +
         "buckets ~17 bits at the same hamming budget)")
-    val dups = simhashHammingPairsFromSigs(sigs, idCol, hashCol,
-        nBits = 64, maxHamming = maxHamming)
-      .select(col("id_b").as(idCol)).distinct()
-    sigs.join(dups, Seq(idCol), "left_anti").select(idCol)
-  }
-
-  /** the banded (band, band_bits) keys alone, for the mass guard — same
-    * band construction as [[simhashHammingPairsFromSigs]]. */
-  private def simhashBandedForGuard(sigs: DataFrame, idCol: String,
-                                    sigCol: String, nBits: Int,
-                                    maxHamming: Int): DataFrame = {
-    val bands = maxHamming + 1
-    val base = nBits / bands
-    val rem = nBits % bands
-    val widths = (0 until bands).map(b => base + (if (b < rem) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val bandCols = (0 until bands).map { b =>
-      shiftrightunsigned(col(sigCol), offsets(b))
-        .bitwiseAND(lit(bandMask(widths(b))))
-    }
-    sigs.select(posexplode(array(bandCols: _*)).as(Seq("band", "band_bits")))
-  }
-
-  /** fail-fast EXACT candidate-mass guard (the containment lossless-profile
-    * precedent, measured: the 64-bit dHash banding at hamming ≤ 6 has
-    * 9-bit band buckets and went quadratic-DNF at 100x data): Σ over band
-    * buckets of c² bounds the banded self-join's output; abort with
-    * profile advice instead of spilling for minutes before dying. One
-    * bucket-histogram aggregate over n·bands key rows — linear, tiny next
-    * to the join it guards. */
-  private def imageCandidateMassGuard(fn: String, bandedKeys: DataFrame,
-                                      maxCandidateMass: Long,
-                                      advice: String): Unit = {
-    val mass: java.math.BigDecimal = Option(
-      bandedKeys.groupBy("band", "band_bits")
-        .agg(count(lit(1)).cast(DecimalType(38, 0)).as("__c"))
-        .agg(sum(col("__c") * col("__c"))).head().getDecimal(0))
-      .getOrElse(java.math.BigDecimal.ZERO)
-    require(mass.compareTo(new java.math.BigDecimal(maxCandidateMass)) <= 0,
-      s"$fn: banded candidate mass $mass exceeds " +
-        s"maxCandidateMass=$maxCandidateMass — the bucket self-join would " +
-        s"go quadratic. $advice; or raise maxCandidateMass explicitly " +
-        "for an audit run")
-  }
 
   /** [[imageDedupFromHashes]] over WIDE (120-bit) dHashes
     * ([[graft.operators.Multimodal.imageDHashWide]]) — the corpus-scaled
     * image-dedup profile: same keep-min survivor rule, but banding runs
-    * through [[simhashHammingPairsWideFromSigs]] (7 ~17-bit bands at
-    * hamming ≤ 6 → ≈131k buckets vs the 64-bit profile's 512 — the
-    * measured 100x-data quadratic fixed by signature WIDTH, not by
-    * dropping the hamming budget). Input columns: (idCol, dh_lo, dh_hi);
-    * NULL-hash rows (undecodable) are excluded as in the 64-bit form. */
+    * over the two-long layout (7 ~17-bit bands at hamming ≤ 6 → ≈131k
+    * buckets vs the 64-bit profile's 512 — the measured 100x-data
+    * quadratic fixed by signature WIDTH, not by dropping the hamming
+    * budget). Input columns: (idCol, dh_lo, dh_hi); NULL-hash rows
+    * (undecodable) are excluded as in the 64-bit form. */
   def imageDedupFromHashesWide(hashes: DataFrame, idCol: String,
                                maxHamming: Int = 6,
                                maxCandidateMass: Long = 200000000L): DataFrame =
@@ -1316,20 +1301,10 @@ object Dedup {
                     maxCandidateMass: Long = 200000000L,
                     fn: String = "wideHashDedup",
                     adviceOnBlowup: String =
-                      "pre-block on metadata before hashing"): DataFrame = {
-    val sigs = hashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol), col("dh_lo").as("sim_lo"),
-        col("dh_hi").as("sim_hi"))
-      .localCheckpoint()
-    imageCandidateMassGuard(fn,
-      wideBandedFrame(sigs, idCol, 120, maxHamming)
-        .select("band", "band_bits"),
-      maxCandidateMass, adviceOnBlowup)
-    val dups = simhashHammingPairsWideFromSigs(sigs, idCol,
-        nBits = 120, maxHamming = maxHamming)
-      .select(col("id_b").as(idCol)).distinct()
-    sigs.join(dups, Seq(idCol), "left_anti").select(idCol)
-  }
+                      "pre-block on metadata before hashing"): DataFrame =
+    hammingDedup(wideSigs(hashes, idCol).localCheckpoint(), idCol,
+      HammingLayout(WideSig, 120, maxHamming), fn, maxCandidateMass,
+      adviceOnBlowup)
 
   /** VIDEO clip-level near-dup dedup over per-frame wide dHashes
     * ([[graft.operators.Multimodal.videoDHashWide]]) — the aligned-copy
@@ -1356,35 +1331,9 @@ object Dedup {
                                 maxCandidateMass: Long = 800000000L): DataFrame = {
     require(minMatchedFrames >= 1,
       s"videoDedupFromFrameHashes: minMatchedFrames $minMatchedFrames")
-    val sigs = frameHashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol), col("frame_no"), col("dh_lo").as("sim_lo"),
-        col("dh_hi").as("sim_hi"))
-      .localCheckpoint()
-    val banded = wideBandedFrame(sigs, idCol, 120, maxHamming,
-      carryCols = Seq("frame_no"))
-    imageCandidateMassGuard("videoDedupFromFrameHashes",
-      banded.select(concat_ws("#", col("frame_no"), col("band"))
-        .as("band"), col("band_bits")),
-      maxCandidateMass,
-      "pre-block on clip metadata (duration/dims/source) before hashing")
-    val matched = banded.as("l").join(banded.as("r"),
-        col("l.frame_no") === col("r.frame_no") &&
-          col("l.band") === col("r.band") &&
-          col("l.band_bits") === col("r.band_bits") &&
-          col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        col("l.frame_no").as("frame_no"),
-        (bit_count(col("l.sim_lo").bitwiseXOR(col("r.sim_lo"))) +
-          bit_count(col("l.sim_hi").bitwiseXOR(col("r.sim_hi"))))
-          .cast(LongType).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "frame_no").distinct()
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("__mf"))
-    val dups = matched.filter(col("__mf") >= minMatchedFrames)
-      .select(col("id_b").as(idCol)).distinct()
-    sigs.select(col(idCol)).distinct()
-      .join(dups, Seq(idCol), "left_anti")
+    videoDedup(frameHashes, idCol, maxHamming, maxCandidateMass,
+      "videoDedupFromFrameHashes")((_, matched) =>
+      matched.filter(col("__mf") >= minMatchedFrames))
   }
 
   /** [[videoDedupFromFrameHashes]] with the vote threshold SCALED to clip
@@ -1403,43 +1352,35 @@ object Dedup {
                                     maxCandidateMass: Long = 800000000L): DataFrame = {
     require(matchFrac > 0.0 && matchFrac <= 1.0,
       s"videoDedupFromFrameHashesFrac: matchFrac $matchFrac not in (0, 1]")
-    val sigs = frameHashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol), col("frame_no"), col("dh_lo").as("sim_lo"),
-        col("dh_hi").as("sim_hi"))
-      .localCheckpoint()
-    val banded = wideBandedFrame(sigs, idCol, 120, maxHamming,
-      carryCols = Seq("frame_no"))
-    imageCandidateMassGuard("videoDedupFromFrameHashesFrac",
-      banded.select(concat_ws("#", col("frame_no"), col("band"))
-        .as("band"), col("band_bits")),
-      maxCandidateMass,
-      "pre-block on clip metadata (duration/dims/source) before hashing")
-    val nf = sigs.select(col(idCol), col("frame_no")).distinct()
-      .groupBy(col(idCol)).agg(count(lit(1)).as("__nf"))
-    val matched = banded.as("l").join(banded.as("r"),
-        col("l.frame_no") === col("r.frame_no") &&
-          col("l.band") === col("r.band") &&
-          col("l.band_bits") === col("r.band_bits") &&
-          col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        col("l.frame_no").as("frame_no"),
-        (bit_count(col("l.sim_lo").bitwiseXOR(col("r.sim_lo"))) +
-          bit_count(col("l.sim_hi").bitwiseXOR(col("r.sim_hi"))))
-          .cast(LongType).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    videoDedup(frameHashes, idCol, maxHamming, maxCandidateMass,
+      "videoDedupFromFrameHashesFrac") { (sigs, matched) =>
+      val nf = sigs.select(col(idCol), col("frame_no")).distinct()
+        .groupBy(col(idCol)).agg(count(lit(1)).as("__nf"))
+      matched
+        .join(nf.select(col(idCol).as("id_a"), col("__nf").as("__nfa")),
+          Seq("id_a"))
+        .join(nf.select(col(idCol).as("id_b"), col("__nf").as("__nfb")),
+          Seq("id_b"))
+        .filter(col("__mf") >=
+          ceil(lit(matchFrac) * least(col("__nfa"), col("__nfb"))))
+    }
+  }
+
+  /** the one body of the two video dedups: the checkpointed per-frame wide
+    * signatures, the frame-aligned guarded banded search, the count of
+    * DISTINCT matched frames per pair (`__mf` on (id_a, id_b)), and keep-min
+    * survivors over the pairs `vote(sigs, matched)` keeps */
+  private def videoDedup(frameHashes: DataFrame, idCol: String, maxHamming: Int,
+                         maxCandidateMass: Long, fn: String)(
+                          vote: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val sigs = wideSigs(frameHashes, idCol, Seq(col("frame_no"))).localCheckpoint()
+    val matched = hammingPairs(sigs, idCol, HammingLayout(WideSig, 120, maxHamming),
+        Seq("frame_no"), Some((fn, maxCandidateMass,
+          "pre-block on clip metadata (duration/dims/source) before hashing")))
       .select("id_a", "id_b", "frame_no").distinct()
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("__mf"))
-    val dups = matched
-      .join(nf.select(col(idCol).as("id_a"), col("__nf").as("__nfa")),
-        Seq("id_a"))
-      .join(nf.select(col(idCol).as("id_b"), col("__nf").as("__nfb")),
-        Seq("id_b"))
-      .filter(col("__mf") >=
-        ceil(lit(matchFrac) * least(col("__nfa"), col("__nfb"))))
-      .select(col("id_b").as(idCol)).distinct()
-    sigs.select(col(idCol)).distinct()
-      .join(dups, Seq(idCol), "left_anti")
+    keepMin(sigs.select(col(idCol)).distinct(), idCol, vote(sigs, matched))
   }
 
   /** the store family's single JOIN KEY: (band, band_bits) packed into one
@@ -1477,31 +1418,28 @@ object Dedup {
     val key =
       if (video) videoPackedKey(col("frame_no"), col("band"), col("band_bits"))
       else packedBandKey(col("band"), col("band_bits"))
-    wideBandedFrame(sigs, idCol, 120, maxHamming, carry)
-      .select((idCol +: carry :+ "sim_lo" :+ "sim_hi").map(col) :+
-        key.as("__bk"): _*)
+    HammingLayout(WideSig, 120, maxHamming).banded(sigs, idCol, carry)
+      .select((idCol +: carry ++: WideSig).map(col) :+ key.as("__bk"): _*)
   }
 
-  /** [[wideKeyed]] rows within `maxHamming` of a stored hash under the same
-    * key — a single-key equi-join on the store's own bucket column, so the
-    * store side reads its buckets in place and only the new batch
-    * exchanges (BucketingSpec pins the 1-exchange plan) */
-  private def wideMatches(keyed: DataFrame, store: String,
-                          maxHamming: Int): DataFrame =
-    keyed.join(keyed.sparkSession.table(s"${store}_bands")
-        .withColumnRenamed("sim_lo", "__s_lo")
-        .withColumnRenamed("sim_hi", "__s_hi"), Seq("__bk"))
-      .filter((bit_count(col("sim_lo").bitwiseXOR(col("__s_lo"))) +
-        bit_count(col("sim_hi").bitwiseXOR(col("__s_hi"))))
-        .cast(LongType) <= maxHamming)
+  /** the batch's [[wideKeyed]] rows within `maxHamming` of a stored hash
+    * under the same key — a single-key equi-join on the store's own bucket
+    * column, so the store side reads its buckets in place and only the new
+    * batch exchanges (BucketingSpec pins the 1-exchange plan) */
+  private def wideMatches(sigs: DataFrame, idCol: String, store: String,
+                          maxHamming: Int, video: Boolean): DataFrame =
+    wideKeyed(sigs, idCol, maxHamming, video).as("n")
+      .join(sigs.sparkSession.table(s"${store}_bands").as("s"), Seq("__bk"))
+      .filter(HammingLayout(WideSig, 120, maxHamming).distance("n", "s") <= maxHamming)
 
   /** any signature expressed as (idCol, dh_lo, dh_hi) — the same
     * generalization as [[wideHashDedup]] over the batch path — as the wide
-    * store's (idCol, sim_lo, sim_hi) batch; NULL hashes (undecodable) are
-    * excluded from probing and from the store. */
-  private def wideSigs(hashes: DataFrame, idCol: String): DataFrame =
-    hashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol), col("dh_lo").as("sim_lo"), col("dh_hi").as("sim_hi"))
+    * store's (idCol, carry…, sim_lo, sim_hi) batch; NULL hashes
+    * (undecodable) are excluded from matching and from the store. */
+  private def wideSigs(hashes: DataFrame, idCol: String,
+                       carry: Seq[Column] = Nil): DataFrame =
+    hashes.filter(col("dh_lo").isNotNull).select(col(idCol) +: carry :+
+      col("dh_lo").as("sim_lo") :+ col("dh_hi").as("sim_hi"): _*)
 
   /** create/replace an incremental WIDE-HASH near-dup store
     * ([[wideHashStore]]). */
@@ -1540,8 +1478,7 @@ object Dedup {
     val spec = wideHashStore(store, idCol, kind, maxHamming)
     spec.check(spark)
     val sigs = wideSigs(newHashes, idCol).localCheckpoint()
-    val dupIds = wideMatches(wideKeyed(sigs, idCol, maxHamming, video = false),
-        store, maxHamming)
+    val dupIds = wideMatches(sigs, idCol, store, maxHamming, video = false)
       .select(col(idCol)).distinct()
     spec.keep(sigs.join(dupIds, Seq(idCol), "left_anti"), updateStore)
       .select(col(idCol))
@@ -1589,14 +1526,12 @@ object Dedup {
     * excluded. Build and probe share the frame_no < 2^20 guard: an aliased
     * (frame, band) packed key would silently match wrong frame alignments. */
   private def videoSigs(frameHashes: DataFrame, idCol: String): DataFrame =
-    frameHashes.filter(col("dh_lo").isNotNull)
-      .select(col(idCol),
-        when(col("frame_no") < (1L << 20), col("frame_no"))
-          .otherwise(raise_error(concat(lit("video store: frame_no "),
-            col("frame_no").cast(StringType),
-            lit(" >= 2^20 breaks the packed band key"))))
-          .as("frame_no"),
-        col("dh_lo").as("sim_lo"), col("dh_hi").as("sim_hi"))
+    wideSigs(frameHashes, idCol, Seq(
+      when(col("frame_no") < (1L << 20), col("frame_no"))
+        .otherwise(raise_error(concat(lit("video store: frame_no "),
+          col("frame_no").cast(StringType),
+          lit(" >= 2^20 breaks the packed band key"))))
+        .as("frame_no")))
 
   /** create/replace the incremental VIDEO frame-hash near-dup store
     * ([[videoStore]]). */
@@ -1647,8 +1582,7 @@ object Dedup {
       .groupBy(col(idCol)).agg(count(lit(1)).as("__nf"))
     // frame-alignment rides the packed key, so this is the same
     // single-bucket-key equi-join as the scalar store
-    val dupIds = wideMatches(wideKeyed(sigs, idCol, maxHamming, video = true),
-        store, maxHamming)
+    val dupIds = wideMatches(sigs, idCol, store, maxHamming, video = true)
       // a band match is evidence once per (new clip, stored clip, frame);
       // count DISTINCT matched frames per pair, then vote with the
       // short-clip clamp (see the docstring — replay idempotence)
@@ -1693,54 +1627,19 @@ object Dedup {
     if (hiTake > 0) loPart.bitwiseOR(shiftleft(hiPart, loTake)) else loPart
   }
 
-  /** Manku banded hamming ≤ maxHamming search over WIDE two-long signatures
-    * — [[simhashHammingPairsFromSigs]] generalized past 64 bits. The
-    * pigeonhole guarantee is unchanged (maxHamming + 1 disjoint bands), but
-    * band width — and with it bucket selectivity 2^width — now grows with
-    * the signature: the scaladoc rule "a larger corpus wants a wider
-    * signature, not a lower maxHamming" made executable. At 150k docs the
-    * 15-bit legacy bands hold ~4.6 docs per bucket on a uniform corpus and
-    * far more under replica clustering (measured 15.1× at 30× data);
-    * 21-bit bands put expected occupancy back under 0.1. */
-  /** the exploded (idCol, sim_lo, sim_hi, band, band_bits) frame for a
-    * wide two-long signature — shared by the pair search, the image-hash
-    * store build/probe, and the candidate-mass guard. */
-  private[graft] def wideBandedFrame(sigs: DataFrame, idCol: String,
-                                     nBits: Int, maxHamming: Int,
-                                     carryCols: Seq[String] = Nil): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < nBits,
-      s"maxHamming ($maxHamming) must be in [0, nBits=$nBits)")
-    require(nBits <= 120, s"wide signature supports ≤ 120 bits, got $nBits")
-    val bands = maxHamming + 1
-    val base = nBits / bands
-    val rem = nBits % bands
-    val widths = (0 until bands).map(b => base + (if (b < rem) 1 else 0))
-    require(widths.max <= 30,
-      s"band width ${widths.max} > 30 bits: bucket keys would not be " +
-        "DuckDB-BIGINT-shift-safe; raise maxHamming or narrow the signature")
-    val offsets = widths.scanLeft(0)(_ + _)
-    val bandCols = (0 until bands).map { b =>
-      wideBandBits(col("sim_lo"), col("sim_hi"), offsets(b), widths(b))
-    }
-    sigs.select(col(idCol) +: carryCols.map(col) :+ col("sim_lo") :+
-      col("sim_hi") :+
-      posexplode(array(bandCols: _*)).as(Seq("band", "band_bits")): _*)
-  }
-
+  /** Manku banded hamming ≤ maxHamming pairs over WIDE two-long signatures
+    * (idCol, sim_lo, sim_hi) — [[simhashHammingPairsFromSigs]] generalized
+    * past 64 bits. The pigeonhole guarantee is unchanged (maxHamming + 1
+    * disjoint bands), but band width — and with it bucket selectivity
+    * 2^width — now grows with the signature: the rule "a larger corpus
+    * wants a wider signature, not a lower maxHamming" made executable. At
+    * 150k docs the 15-bit legacy bands hold ~4.6 docs per bucket on a
+    * uniform corpus and far more under replica clustering (measured 15.1×
+    * at 30× data); 21-bit bands put expected occupancy back under 0.1. */
   def simhashHammingPairsWideFromSigs(sigs: DataFrame, idCol: String,
-                                      nBits: Int, maxHamming: Int): DataFrame = {
-    val banded = wideBandedFrame(sigs, idCol, nBits, maxHamming)
-    val ham = bit_count(col("l.sim_lo").bitwiseXOR(col("r.sim_lo"))) +
-      bit_count(col("l.sim_hi").bitwiseXOR(col("r.sim_hi")))
-    banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") &&
-          col("l.band_bits") === col("r.band_bits") &&
-          col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        ham.cast(LongType).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+                                      nBits: Int, maxHamming: Int): DataFrame =
+    hammingPairs(sigs, idCol, HammingLayout(WideSig, nBits, maxHamming))
       .distinct()
-  }
 
   /** wide-signature SimHash near-dup pairs straight from a text column —
     * signature width is the caller's corpus-derived profile knob (see
@@ -1761,11 +1660,9 @@ object Dedup {
     * [[clusterDedupFromPairs]] for the transitive variant). */
   def simhashDedupHamming(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3,
-                          portable: Boolean = false): DataFrame = {
-    val dupIds = simhashHammingPairs(df, idCol, textCol, maxHamming, portable)
-      .select(col("id_b").as(idCol)).distinct().localCheckpoint()
-    df.join(dupIds, Seq(idCol), "left_anti")
-  }
+                          portable: Boolean = false): DataFrame =
+    keepMin(df, idCol, simhashHammingPairs(df, idCol, textCol, maxHamming,
+      portable), pin = true)
 
   /** the wide-signature twin of [[simhashDedupHamming]] — greedy min-id
     * drop over [[simhashHammingPairsWide]] pairs, the corpus-scaled dedup
@@ -1773,12 +1670,9 @@ object Dedup {
     * graft.queries.Offline.simhashBandBits). */
   def simhashDedupHammingWide(df: DataFrame, idCol: String, textCol: String,
                               nBits: Int, maxHamming: Int = 3,
-                              portable: Boolean = false): DataFrame = {
-    val dupIds =
-      simhashHammingPairsWide(df, idCol, textCol, nBits, maxHamming, portable)
-        .select(col("id_b").as(idCol)).distinct().localCheckpoint()
-    df.join(dupIds, Seq(idCol), "left_anti")
-  }
+                              portable: Boolean = false): DataFrame =
+    keepMin(df, idCol, simhashHammingPairsWide(df, idCol, textCol, nBits,
+      maxHamming, portable), pin = true)
 
   /** exact token-set Jaccard similarity between two token arrays. */
   def jaccard(a: Column, b: Column): Column =
@@ -1806,58 +1700,24 @@ object Dedup {
     val joined = prepared.as("l").join(prepared.as("r"),
       bk.map(k => col(s"l.$k") === col(s"r.$k"))
         .reduce(_ && _) && col(s"l.$idCol") < col(s"r.$idCol"))
-    // Cheap size-ratio prefilter before the expensive intersect: jaccard ≥ t
-    // implies min(|a|,|b|) ≥ t·max(|a|,|b|) (inter ≤ min, union ≥ max), so
-    // this prunes pairs without changing the result set.
-    val sa = size(col("l.__toks")).cast(DoubleType)
-    val sb = size(col("r.__toks")).cast(DoubleType)
-    val prefiltered = joined.filter(
-      least(sa, sb) >= greatest(sa, sb) * threshold)
-    // inputs are distinct arrays → |a∪b| = |a|+|b|−|a∩b|: one array_intersect
-    // per pair instead of intersect + union (union allocates a second array).
-    val inter = size(array_intersect(col("l.__toks"), col("r.__toks"))).cast(DoubleType)
-    prefiltered.select(
-        col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"),
-        round(inter / (sa + sb - inter), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardAtLeast(joined, Seq(col(s"l.$idCol").as("id_a"),
+      col(s"r.$idCol").as("id_b")), col("l.__toks"), col("r.__toks"), threshold)
   }
 
-  /** exact token-set Jaccard verification over a supplied candidate pair set
-    * (id_a, id_b): joins each side to its distinct token (or n-gram shingle)
-    * array and keeps pairs with jaccard ≥ threshold. Cost is linear in the
-    * candidate count — pair generation (LSH banding, attribute blocks) decides
-    * scale, this step only verifies. */
-  def verifyJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                         pairs: DataFrame, threshold: Double,
-                         ngram: Int = 1): DataFrame = {
-    val toks =
-      if (ngram == 1) array_distinct(TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))))
-      else shingles(col(textCol), ngram)
-    // the candidate pair set is referenced three times below (two vertex
-    // projections + the join base) and usually carries the whole
-    // LSH/banding subtree — materialize it ONCE (it is tiny: candidate
-    // pairs only) so the candidate generation isn't re-executed per
-    // reference
-    val p = pairs.select("id_a", "id_b").localCheckpoint()
-    // only docs that appear in a candidate pair need their shingle set:
-    // semi-join first so the tokenize+shingle projection runs over the
-    // (small) candidate vertex set, not the whole corpus — and materialize
-    // it, since both join sides reference it
-    val candIds = p.select(col("id_a").as(idCol))
-      .union(p.select(col("id_b").as(idCol))).distinct()
-    val sides = df.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol), toks.as("__toks")).localCheckpoint()
-    val joined = p
-      .join(sides.select(col(idCol).as("id_a"), col("__toks").as("__ta")), "id_a")
-      .join(sides.select(col(idCol).as("id_b"), col("__toks").as("__tb")), "id_b")
-    val sa = size(col("__ta")).cast(DoubleType)
-    val sb = size(col("__tb")).cast(DoubleType)
-    // size-ratio prefilter (result-preserving: jaccard ≥ t ⇒ min ≥ t·max)
-    val prefiltered = joined.filter(least(sa, sb) >= greatest(sa, sb) * threshold)
-    val inter = size(array_intersect(col("__ta"), col("__tb"))).cast(DoubleType)
-    prefiltered
-      .select(col("id_a"), col("id_b"),
-        round(inter / (sa + sb - inter), 6).as("jaccard"))
+  /** the one Jaccard verify: `ids` plus round(|a∩b| / |a∪b|, 6) as
+    * `jaccard` for the `joined` rows at ≥ threshold, over DISTINCT arrays
+    * `a`, `b`. A cheap size-ratio prefilter runs before the expensive
+    * intersect: jaccard ≥ t implies min(|a|,|b|) ≥ t·max(|a|,|b|) (inter ≤
+    * min, union ≥ max), so it prunes pairs without changing the result set.
+    * Distinct inputs give |a∪b| = |a|+|b|−|a∩b|: one array_intersect per
+    * pair instead of intersect + union (union allocates a second array). */
+  private def jaccardAtLeast(joined: DataFrame, ids: Seq[Column], a: Column,
+                             b: Column, threshold: Double): DataFrame = {
+    val sa = size(a).cast(DoubleType)
+    val sb = size(b).cast(DoubleType)
+    val inter = size(array_intersect(a, b)).cast(DoubleType)
+    joined.filter(least(sa, sb) >= greatest(sa, sb) * threshold)
+      .select(ids :+ round(inter / (sa + sb - inter), 6).as("jaccard"): _*)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -1868,11 +1728,10 @@ object Dedup {
     * one upfront materialization keeps the whole pipeline (signatures off
     * the arrays via the fused kernel, banding self-join, verify joins) in
     * TWO scheduler jobs — the candidates-only alternative (signatures from
-    * text, [[verifyJaccardPairs]] re-shingling just the candidate vertex
-    * set) needs four sequential materializations and measured ~2× slower.
-    * At 100 TB, where a corpus-wide shingle write is the bigger cost, use
-    * the standalone [[verifyJaccardPairs]]/[[verifyContainmentPairs]]
-    * composition instead — same results, candidate-bounded IO. */
+    * text, a semi-join re-shingling just the candidate vertex set) needed
+    * four sequential materializations and measured ~2× slower. At 100 TB,
+    * where a corpus-wide shingle write is the bigger cost, that
+    * candidate-bounded alternative is the trade to revisit. */
   private def shingleArrays(df: DataFrame, idCol: String, textCol: String,
                             ngram: Int): DataFrame =
     Fan.out(df.select(col(idCol), col(textCol)))
@@ -1894,62 +1753,33 @@ object Dedup {
         md5Portable = portable)).as("sig"))
   }
 
-  /** exact jaccard ≥ threshold over candidate pairs, joining each side to its
-    * PRE-MATERIALIZED distinct shingle array (idCol, __sh) — no re-tokenize. */
-  /** spread a candidate-pair verify across the session's cores (r22, guide
+  /** candidate pairs (id_a, id_b) joined to each side's PRE-MATERIALIZED
+    * distinct shingle array (idCol, __sh) as `__ta`/`__tb` — no re-tokenize;
+    * the one pair-sides join of the Jaccard and containment verifies.
+    *
+    * The pairs are spread across the session's cores first (r22, guide
     * §2.5/§2.2): the paired shingle ARRAYS are few megabytes, so AQE's
     * byte-based partition coalescing squeezes the verify join's output to
     * 1-2 tasks — but each row costs an array_intersect over hundreds of
     * longs, so the stage is CPU-dense far beyond its bytes (measured:
     * q_containment_capped's verify ran 2 tasks, 2.3 s task time, 1.2 s
-    * straggler). An explicit hash repartition on the pair key pins the
-    * stage's width to defaultParallelism — scale-adaptive, not a local
-    * constant, and the same mismatch exists at any scale because advisory
-    * sizes are bytes while this cost is CPU. Applied to the PAIRS table
-    * (16 bytes/row) before the array joins, so the shuffle moves ids only
+    * straggler). An explicit repartition of the PAIRS table (16 bytes/row)
+    * before the array joins pins the stage's width to defaultParallelism —
+    * scale-adaptive, not a local constant — so the shuffle moves ids only
     * and the broadcast-hash array lookups + intersect all run at the
-    * fanned width — the §8 "decide on light rows, move heavy bytes once"
-    * shape. ROUND-ROBIN, not hash-by-pair: the candidate distinct() above
+    * fanned width, the §8 "decide on light rows, move heavy bytes once"
+    * shape. ROUND-ROBIN, not hash-by-pair: the candidate distinct()
     * already hash-partitions by (id_a, id_b) at shuffle.partitions, so a
     * same-key repartition is elided by EnsureRequirements at plan time and
     * the verify silently inherits the distinct's AQE-coalesced width (the
     * measured 2-task stage) — round-robin with an explicit count can never
     * be satisfied-away or coalesced. Downstream is a row-local projection
     * + filter, so partitioning is semantics-free. */
-  private def fanPairs(pairs: DataFrame): DataFrame =
-    pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism)
-
-  private def verifyJaccardOnShingleArrays(sh: DataFrame, idCol: String,
-                                           pairs: DataFrame,
-                                           threshold: Double): DataFrame = {
-    val joined = fanPairs(pairs.select("id_a", "id_b"))
+  private def pairSides(sh: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    pairs.select("id_a", "id_b")
+      .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
       .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__ta")), "id_a")
       .join(sh.select(col(idCol).as("id_b"), col("__sh").as("__tb")), "id_b")
-    val sa = size(col("__ta")).cast(DoubleType)
-    val sb = size(col("__tb")).cast(DoubleType)
-    // size-ratio prefilter (result-preserving: jaccard ≥ t ⇒ min ≥ t·max)
-    val prefiltered = joined.filter(least(sa, sb) >= greatest(sa, sb) * threshold)
-    val inter = size(array_intersect(col("__ta"), col("__tb"))).cast(DoubleType)
-    prefiltered
-      .select(col("id_a"), col("id_b"),
-        round(inter / (sa + sb - inter), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** containment = |A∩B| / min(|A|,|B|) over pre-materialized shingle
-    * arrays; NO size-ratio prefilter (size mismatch is the signal). */
-  private def verifyContainmentOnShingleArrays(sh: DataFrame, idCol: String,
-                                               pairs: DataFrame,
-                                               threshold: Double): DataFrame = {
-    val joined = fanPairs(pairs.select("id_a", "id_b"))
-      .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__ta")), "id_a")
-      .join(sh.select(col(idCol).as("id_b"), col("__sh").as("__tb")), "id_b")
-    val inter = size(array_intersect(col("__ta"), col("__tb"))).cast(DoubleType)
-    joined.select(col("id_a"), col("id_b"),
-        round(inter / least(size(col("__ta")), size(col("__tb"))).cast(DoubleType), 6)
-          .as("containment"))
-      .filter(col("containment") >= threshold)
-  }
 
   /** n-gram Jaccard near-dup pairs with LSH candidate blocking — the
     * scale-safe replacement for attribute blocking: candidates come from
@@ -1968,35 +1798,9 @@ object Dedup {
                       portable: Boolean = false): DataFrame = {
     val sh = shingleArrays(df, idCol, textCol, ngram)
     val sigs = sigsFromShingleArrays(sh, idCol, numHashes, portable)
-    verifyJaccardOnShingleArrays(sh, idCol,
-      bandPairs(sigs, idCol, numHashes, bands, portable), threshold)
-  }
-
-  /** exact containment ≥ threshold over supplied candidate pairs — the
-    * asymmetric analog of [[verifyJaccardPairs]]: |A∩B| / min(|A|,|B|) over
-    * distinct n-gram shingle sets, tokenizing only the candidate vertex set.
-    * NO size-ratio prefilter (wild size mismatch is exactly the signal). */
-  def verifyContainmentPairs(df: DataFrame, idCol: String, textCol: String,
-                             pairs: DataFrame, threshold: Double,
-                             ngram: Int = 3): DataFrame = {
-    val toks =
-      if (ngram == 1) array_distinct(TextAnalysis.tokens(TextAnalysis.normalized(col(textCol))))
-      else shingles(col(textCol), ngram)
-    // same materialization discipline as verifyJaccardPairs: the pair set
-    // and the candidate shingle sides are each referenced twice+
-    val p = pairs.select("id_a", "id_b").localCheckpoint()
-    val candIds = p.select(col("id_a").as(idCol))
-      .union(p.select(col("id_b").as(idCol))).distinct()
-    val sides = df.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol), toks.as("__toks")).localCheckpoint()
-    val joined = p
-      .join(sides.select(col(idCol).as("id_a"), col("__toks").as("__ta")), "id_a")
-      .join(sides.select(col(idCol).as("id_b"), col("__toks").as("__tb")), "id_b")
-    val inter = size(array_intersect(col("__ta"), col("__tb"))).cast(DoubleType)
-    joined.select(col("id_a"), col("id_b"),
-        round(inter / least(size(col("__ta")), size(col("__tb"))).cast(DoubleType), 6)
-          .as("containment"))
-      .filter(col("containment") >= threshold)
+    jaccardAtLeast(pairSides(sh, idCol, bandPairs(sigs, idCol, numHashes,
+      bands, portable)), Seq(col("id_a"), col("id_b")), col("__ta"),
+      col("__tb"), threshold)
   }
 
   /** Asymmetric CONTAINMENT near-dup pairs: containment(A,B) =
@@ -2177,7 +1981,13 @@ object Dedup {
       .select(least(col("__pid"), col("__fid")).as("id_a"),
         greatest(col("__pid"), col("__fid")).as("id_b"))
       .distinct()
-    verifyContainmentOnShingleArrays(sh, idCol, cands, threshold)
+    // exact containment over the pre-materialized arrays; NO size-ratio
+    // prefilter (size mismatch is the signal)
+    val inter = size(array_intersect(col("__ta"), col("__tb"))).cast(DoubleType)
+    pairSides(sh, idCol, cands).select(col("id_a"), col("id_b"),
+        round(inter / least(size(col("__ta")), size(col("__tb"))).cast(DoubleType), 6)
+          .as("containment"))
+      .filter(col("containment") >= threshold)
   }
 
   /** Verbatim SHARED-SPAN pairs: documents sharing an exact run of at least

@@ -890,7 +890,9 @@ object TextAnalysis {
     // aggregate shuffle: the score never needs to leave its row. Same
     // bucket math, same rounding, same output frame — docs with no tokens
     // score NULL and are dropped, exactly the explode form's absence
-    df.select(col(idCol),
+    // (`evalOnce`: a filter on a projected kernel is pushed below the
+    // projection and would run the kernel a second time per row)
+    Dedup.evalOnce(df.select(col(idCol), col(textCol)),
         hashedQualityNS(col(textCol), weightsMicros).as("__ns"))
       .filter(col("__ns").isNotNull)
       .select(col(idCol), col("__ns").getItem(0).as("n_tokens"),
@@ -946,7 +948,7 @@ object TextAnalysis {
         GraftSqlBridge.expression(tokens(normalized(col(textCol)))),
         classWeights.map(_._2.toArray).toArray))
     }
-    val scored = df.select(col(idCol), ns.as("__ns"))
+    val scored = Dedup.evalOnce(df.select(col(idCol), col(textCol)), ns.as("__ns"))
       .filter(col("__ns").isNotNull)
       .select(col(idCol) +: col("__ns").getItem(0).as("n_tokens") +:
         classWeights.indices.map(k =>

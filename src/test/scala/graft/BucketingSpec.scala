@@ -337,7 +337,8 @@ class BucketingSpec extends AnyFunSuite {
       // (band, band_bits) join on a band_bits-only bucket spec measured
       // TWO exchanges - both sides re-keyed - which is why the key is
       // packed.)
-      val joined = Dedup.wideBandedFrame(probeSigs, "media_id", 120, 6)
+      val joined = Dedup.HammingLayout(Seq("sim_lo", "sim_hi"), 120, 6)
+          .banded(probeSigs, "media_id")
         .select(col("media_id").as("new_id"),
           (col("band").cast("long") * (1L << 30) + col("band_bits"))
             .as("__bk"))
@@ -360,8 +361,8 @@ class BucketingSpec extends AnyFunSuite {
             (300L to 319L).toDF("doc_id"), "doc_id"))
         .select(col("media_id"), col("frame_no"),
           col("dh_lo").as("sim_lo"), col("dh_hi").as("sim_hi"))
-      val vjoined = Dedup.wideBandedFrame(vprobe, "media_id", 120, 6,
-          carryCols = Seq("frame_no"))
+      val vjoined = Dedup.HammingLayout(Seq("sim_lo", "sim_hi"), 120, 6)
+          .banded(vprobe, "media_id", carry = Seq("frame_no"))
         .select(col("media_id").as("new_id"),
           ((col("frame_no").cast("long") * 8L + col("band")) * (1L << 30)
             + col("band_bits")).as("__bk"))

@@ -92,6 +92,22 @@ class OperatorsSpec extends AnyFunSuite {
     assert(!pairs.contains((1L, 4L))) // d=4 > maxHamming: no band agrees anyway
     assert(!pairs.contains((1L, 5L))) // candidate via bands 1-3, killed by verify
     assert(!pairs.contains((2L, 3L))) // 2 vs 3 differ in bits {0,14,29,59}: d=4
+    // the full-width band (maxHamming 0 over 64 bits): one 64-bit band, so
+    // the banded pairs are exactly the brute-force equal signatures — a
+    // bit-63 flip (sign bit) included among the must-not-pair near misses
+    val rnd = new scala.util.Random(7)
+    val vals = Seq.fill(20)(rnd.nextLong())
+    val full64 = vals.indices.map(i => i.toLong -> vals(i)) ++
+      (0 until 5).map(i => (100L + i) -> vals(i)) ++
+      (0 until 5).map(i => (200L + i) -> (vals(i) ^ Long.MinValue)) ++
+      (0 until 5).map(i => (300L + i) -> (vals(i) ^ 1L))
+    val brute0 = (for ((a, x) <- full64; (b, y) <- full64 if a < b && x == y)
+      yield (a, b)).toSet
+    val banded0 = Dedup.simhashHammingPairsFromSigs(
+        full64.toDF("doc_id", "simhash"), "doc_id", "simhash",
+        nBits = 64, maxHamming = 0)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(brute0.size == 5 && banded0 == brute0, s"banded $banded0")
   }
 
   test("bandMask: full-width band keeps all 64 bits (JVM shift-mod-64 trap)") {
@@ -211,6 +227,40 @@ class OperatorsSpec extends AnyFunSuite {
     val expectedDropped = brute.map(_._2)
     assert(kept == sigs.keySet -- expectedDropped,
       s"greedy wide dedup kept $kept")
+    // 120 bits in 7 bands (maxHamming 6): widths 18,17,…,17 — bands straddle
+    // the lo/hi boundary and reach the hi long's top bit 119
+    def ham(x: (Long, Long), y: (Long, Long)) =
+      java.lang.Long.bitCount(x._1 ^ y._1) + java.lang.Long.bitCount(x._2 ^ y._2)
+    val sigs120 = Dedup.simhashSigsWide(corpus, "doc_id", "text",
+        nBits = 120, portable = true)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val ids = sigs120.keys.toSeq.sorted
+    val brute120 = (for (a <- ids; b <- ids if a < b && ham(sigs120(a), sigs120(b)) <= 6)
+      yield (a, b)).toSet
+    val banded120 = Dedup.simhashHammingPairsWide(corpus, "doc_id", "text",
+        nBits = 120, maxHamming = 6, portable = true)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(brute120.nonEmpty && banded120 == brute120,
+      s"banded ${banded120.size} pairs != brute-force ${brute120.size}")
+    assert(sigs120.values.exists(_._2 >>> 50 != 0L), "120-bit signatures must use bits past 110")
+    // frame-aligned search (the video layout): clip c's frame f carries the
+    // signature of doc (c + 5f) mod n, so a clip pair matches at some frames
+    // and not at others; the banded (id_a, id_b, frame_no) set must equal
+    // the brute-force pairs within 6 bits at the SAME frame index
+    val frames = for (c <- ids.indices; f <- 0 until 3)
+      yield (c.toLong, f, sigs120(ids((c + 5 * f) % ids.size)))
+    val bruteF = (for {
+      (a, fa, x) <- frames; (b, fb, y) <- frames
+      if fa == fb && a < b && ham(x, y) <= 6
+    } yield (a, b, fa)).toSet
+    val bandedF = Dedup.hammingPairs(
+        frames.map { case (c, f, (lo, hi)) => (c, f, lo, hi) }
+          .toDF("clip", "frame_no", "sim_lo", "sim_hi"),
+        "clip", Dedup.HammingLayout(Seq("sim_lo", "sim_hi"), 120, 6),
+        carry = Seq("frame_no"))
+      .select("id_a", "id_b", "frame_no").as[(Long, Long, Int)].collect().toSet
+    assert(bruteF.map(_._3).size == 3 && bandedF == bruteF,
+      s"frame-aligned banded $bandedF != brute-force $bruteF")
   }
 
   test("wide simhash kernel participates in whole-stage codegen") {
@@ -224,6 +274,48 @@ class OperatorsSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project"), plan)
     assert(plan.contains("graft_simhash_wide"), plan)
+  }
+
+  test("hashedQualityScore and hashedClassify evaluate their kernel once per row") {
+    // both filter on the kernel result and then project its fields; a
+    // filter pushed below the projection runs the kernel a second time
+    val dir = java.nio.file.Files.createTempDirectory("graft_k1").toString + "/t"
+    docs.write.mode("overwrite").parquet(dir)
+    val in = spark.read.parquet(dir)
+    val model = TextAnalysis.syntheticQualityModel(64)
+    val classes = Seq("a" -> TextAnalysis.syntheticQualityModel(64, 1L),
+      "b" -> TextAnalysis.syntheticQualityModel(64, 2L))
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try for ((kernel, df) <- Seq(
+        "HashedQualityExpr" -> TextAnalysis.hashedQualityScore(in, "doc_id", "text", model),
+        "HashedClassifyExpr" -> TextAnalysis.hashedClassify(in, "doc_id", "text", classes))) {
+      val code = org.apache.spark.sql.execution.debug.codegenString(
+        df.queryExecution.executedPlan)
+      val calls = code.split(java.util.regex.Pattern.quote(
+        s"graft.functions.$kernel.compute("), -1).length - 1
+      assert(calls == 1, s"$kernel.compute appears $calls times:\n$code")
+      assert(df.count() == 5)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("one hamming-distance function and one union-find in the operators") {
+    // the same source scan StoreTableSpec runs for setProps
+    val root = new java.io.File("src/main/scala/graft/operators")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val files = root.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      .map(f => f.getName -> scala.io.Source.fromFile(f, "UTF-8").getLines().toVector)
+      .toMap
+    // each hit's enclosing def: the nearest `def` line above it
+    val owners = for {
+      (name, src) <- files.toSeq
+      (line, n) <- src.zipWithIndex if line.contains("bit_count(")
+    } yield name -> src.take(n + 1).reverse.find(_.contains(" def ")).getOrElse("")
+    assert(owners.length == 1 && owners.head._1 == "Dedup.scala" &&
+      owners.head._2.contains("def hamming("),
+      s"bit_count( outside the one hamming-distance function: $owners")
+    val finds = files("Dedup.scala").count(_.contains("def find("))
+    assert(finds == 1, s"Dedup.scala defines $finds union-find `find`s")
   }
 
   test("ngramJaccardPairs requires blocking and finds the dup pairs") {
@@ -301,6 +393,24 @@ class OperatorsSpec extends AnyFunSuite {
         maxDriverPairs = 0)
       .select("id").as[Long].collect().toSet
     assert(viaDriver == viaDistributed)
+  }
+
+  test("component labels read a renamed pair frame by position in both regimes") {
+    // a Long pair frame named (a, b): the driver union-find read its columns
+    // by position, the distributed propagation by name — so the same frame
+    // worked under the pair budget and failed above it
+    val pairs = Seq((1L, 3L), (2L, 3L), (4L, 5L)).toDF("a", "b")
+    val frame = (1L to 6L).map(i => (i, s"d$i")).toDF("id", "t")
+    for (budget <- Seq(Dedup.DriverUnionFindMaxPairs, 0L)) {
+      val kept = Dedup.clusterDedupFromPairs(frame, "id", pairs,
+          maxDriverPairs = budget)
+        .select("id").as[Long].collect().toSet
+      assert(kept == Set(1L, 4L, 6L), s"budget $budget kept $kept")
+      val best = Dedup.clusterDedupFromPairsKeepBest(frame, "id", -col("id"),
+          pairs, maxDriverPairs = budget)
+        .select("id").as[Long].collect().toSet
+      assert(best == kept, s"budget $budget keep-best kept $best")
+    }
   }
 
   test("ngramJaccardLsh: LSH-blocked candidates verified with exact jaccard") {
@@ -1142,6 +1252,47 @@ class OperatorsSpec extends AnyFunSuite {
         maxHamming = 6, minMatchedFrames = 3)
       .collect().map(_.getLong(0)).toSet
     assert(withJunk == Set(0L, 4L, 8L, 12L), withJunk.toString)
+  }
+
+  test("candidate-mass guards of the wide and video dedups fail by name with their exact mass") {
+    import graft.operators.{Dedup, Multimodal}
+    val docs = (0L until 16L).toDF("doc_id")
+    // Σ c² over the self-join's own keys, recomputed on the driver: the
+    // 120-bit layout at maxHamming 6 is 7 bands of widths 18,17,…,17 over
+    // the value lo | hi << 60, keyed with the frame for video
+    def mass(rows: Seq[(Int, Long, Long)]): BigInt = {
+      val widths = 18 +: Seq.fill(6)(17)
+      val offsets = widths.scanLeft(0)(_ + _)
+      rows.flatMap { case (frame, lo, hi) =>
+        val v = BigInt(lo) | (BigInt(hi) << 60)
+        widths.indices.map(b =>
+          (frame, b, (v >> offsets(b)) & ((BigInt(1) << widths(b)) - 1)))
+      }.groupBy(identity).values.map(g => BigInt(g.size).pow(2)).sum
+    }
+    def failure(fn: String)(run: => Unit): BigInt = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains(s"$fn: banded candidate mass"), e.getMessage)
+      BigInt("candidate mass (\\d+) exceeds".r
+        .findFirstMatchIn(e.getMessage).get.group(1))
+    }
+    val audio = Multimodal.audioEnergyHashWide(
+      Multimodal.encodeSyntheticWavGroups(docs, "doc_id")).localCheckpoint()
+    val audioMass = mass(audio.collect().toSeq.filter(!_.isNullAt(1))
+      .map(r => (0, r.getLong(1), r.getLong(2))))
+    assert(audioMass > 1)
+    assert(failure("wideHashDedup")(Dedup.wideHashDedup(audio, "media_id",
+      maxHamming = 6, maxCandidateMass = 1L)) == audioMass)
+    val video = Multimodal.videoDHashWide(
+      Multimodal.encodeSyntheticAviGroups(docs, "doc_id"), everyK = 1)
+      .localCheckpoint()
+    val videoMass = mass(video.collect().toSeq.filter(!_.isNullAt(2))
+      .map(r => (r.getInt(1), r.getLong(2), r.getLong(3))))
+    assert(videoMass > 1)
+    assert(failure("videoDedupFromFrameHashes")(Dedup.videoDedupFromFrameHashes(
+      video, "media_id", maxCandidateMass = 1L)) == videoMass)
+    assert(failure("videoDedupFromFrameHashesFrac")(
+      Dedup.videoDedupFromFrameHashesFrac(video, "media_id",
+        maxCandidateMass = 1L)) == videoMass)
   }
 
   test("image hash store: probe ≡ brute force, appended survivors block replays, params validated") {
